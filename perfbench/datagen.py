@@ -16,6 +16,7 @@ directory:
 Each layer is reused while its marker (seed, replica count, generator
 version, base signature) matches; a reuse still checks the parquet
 footers, so a damaged input set is rebuilt instead of served.
+``check`` is that reuse check alone: it generates nothing.
 """
 
 from __future__ import annotations
@@ -257,12 +258,32 @@ def _publish(tmp: Path, final: Path, marker: dict) -> None:
     tmp.rename(final)
 
 
+def _spec(work: Path, seed: int, mult: int) -> tuple[Path, dict, dict[str, int]]:
+    """Directory, marker and footer row counts of the input set for
+    ``seed`` and ``mult`` (``mult == 1``: the base tables)."""
+    if mult == 1:
+        return (work / "base_sf0.1", {"version": GENERATOR_VERSION, "base_seed": BASE_SEED},
+                BASE_ROWS)
+    want = {"version": GENERATOR_VERSION, "seed": seed, "mult": mult,
+            "base_sig": _signature(work / "base_sf0.1")}
+    return work / f"x{mult}", want, {t: mult * BASE_ROWS[t] for t in REPL}
+
+
+def check(work: Path, seed: int, mult: int) -> Path:
+    """The directory of the input set for ``seed`` and ``mult``, after
+    the reuse check (marker and parquet footers). Raises if the set is
+    missing or damaged: this generates nothing."""
+    d, want, expect = _spec(work, seed, mult)
+    if not _marker_ok(d, want, expect):
+        raise RuntimeError(f"input set {d} is missing or does not match its marker")
+    return d
+
+
 def ensure_base(work: Path) -> tuple[Path, float]:
     """Write the base sf0.1 tables once per work directory. Returns the
     directory and the seconds spent generating (0 when reused)."""
-    d = work / "base_sf0.1"
-    want = {"version": GENERATOR_VERSION, "base_seed": BASE_SEED}
-    if _marker_ok(d, want, BASE_ROWS):
+    d, want, expect = _spec(work, BASE_SEED, 1)
+    if _marker_ok(d, want, expect):
         return d, 0.0
     t0 = time.perf_counter()
     tmp = work / "base_sf0.1.tmp"
@@ -279,10 +300,7 @@ def ensure_scaled(work: Path, base_dir: Path, seed: int, mult: int) -> tuple[Pat
     other seed's set, so one set is kept). Checks from the footers that
     every replicated table holds exactly ``mult`` times its base rows.
     Returns the directory and the seconds spent (0 when reused)."""
-    d = work / f"x{mult}"
-    expect = {t: mult * BASE_ROWS[t] for t in REPL}
-    want = {"version": GENERATOR_VERSION, "seed": seed, "mult": mult,
-            "base_sig": _signature(base_dir)}
+    d, want, expect = _spec(work, seed, mult)
     if _marker_ok(d, want, expect):
         return d, 0.0
     t0 = time.perf_counter()

@@ -3,9 +3,10 @@
 Reads one uncompressed, non-rolling event log (``spark.eventLog.compress
 =false``, ``spark.eventLog.rolling.enabled=false``: plain JSON lines)
 and attributes every job to the execution that carried its tag
-(``SparkSession.addTag``) or job group. Nothing here touches the JVM:
-the log is the only input, so the ledger can be recomputed from a kept
-log after the run.
+(``SparkContext.addJobTag``, which reaches the plain jobs a plan build
+runs too, or ``SparkSession.addTag``) or job group. Nothing here
+touches the JVM: the log is the only input, so the ledger can be
+recomputed from a kept log after the run.
 
 ``parse(path, stamps)`` takes the driver-side wall stamps of each
 tagged execution (epoch milliseconds, the clock the log uses too):
@@ -14,19 +15,25 @@ tagged execution (epoch milliseconds, the clock the log uses too):
 
 ``start`` is taken before the registry call, ``built`` after it, and
 ``end`` when the result is in hand. It returns one record per tag with
-the layer terms below. The four timeline terms partition the wall:
+the layer terms below. The timeline terms partition the wall:
 
-    build_ms + plan_ms + jobs_ms + tail_ms == wall_ms
+    build_ms + plan_ms + stage_span_ms + dispatch_ms + tail_ms == wall_ms
 
-``plan_ms`` runs from the built plan to the first job's submission
-(analysis, optimisation, codegen), ``jobs_ms`` from that submission to
-the last job's end, and ``tail_ms`` from there to the return (the
-result fetch, or the commit of a write). Because they partition the
-wall, they add up to it by construction; what can go wrong is the
-attribution, so ``outside_ms`` is the time the log puts a tagged job
-outside the driver's window for that execution (before the plan was
-built or after the result returned). It is zero up to clock
-granularity when tags and clocks are right.
+``build_ms`` is the registry call, and any job it runs (a parquet
+schema inference) lies inside it. ``plan_ms`` runs from the built plan
+to the first later job's submission (analysis, optimisation, codegen).
+``jobs_ms`` runs from that submission to the last job's end;
+``stage_span_ms`` is the part of it some stage of those jobs was
+running, and ``dispatch_ms`` the rest (job and stage scheduling
+between stages). ``tail_ms`` runs from the last job's end to the
+return (the result fetch, or the commit of a write). Because they
+partition the wall, they add up to it by construction; what can go
+wrong is the attribution. ``outside_ms`` checks it: the time tagged
+jobs ran outside the driver's window for the execution, plus the time
+jobs that carried none of the given tags ran inside it (a lost tag).
+It is zero up to clock granularity when tags and clocks are right.
+The counts and executor sums cover every job of the execution, the
+build's included.
 """
 
 from __future__ import annotations
@@ -89,6 +96,10 @@ def _tag_of(props: dict, tags: set[str]) -> str | None:
     return None
 
 
+def _outside_ms(lo: float, hi: float, start: float, end: float) -> float:
+    return max(0.0, min(hi, start) - lo) + max(0.0, hi - max(lo, end))
+
+
 def _union_ms(spans: list[tuple[float, float]]) -> float:
     total, cur_lo, cur_hi = 0.0, None, None
     for lo, hi in sorted(spans):
@@ -110,6 +121,7 @@ def parse(path: str, stamps: dict[str, dict[str, float]]) -> dict[str, dict[str,
     tags = set(stamps)
     job_tag: dict[int, str] = {}
     job_span: dict[int, list[float]] = {}
+    untagged_span: dict[int, list[float]] = {}
     stage_job: dict[int, int] = {}
     stage_span: dict[tuple[int, int], tuple[float, float]] = {}
     exec_tag: dict[int, str] = {}
@@ -125,9 +137,10 @@ def parse(path: str, stamps: dict[str, dict[str, float]]) -> dict[str, dict[str,
             if kind == "SparkListenerJobStart":
                 props = ev.get("Properties") or {}
                 tag = _tag_of(props, tags)
-                if tag is None:
-                    continue
                 jid = ev["Job ID"]
+                if tag is None:
+                    untagged_span[jid] = [ev["Submission Time"], ev["Submission Time"]]
+                    continue
                 job_tag[jid] = tag
                 job_span[jid] = [ev["Submission Time"], ev["Submission Time"]]
                 for sid in ev.get("Stage IDs", []):
@@ -135,8 +148,9 @@ def parse(path: str, stamps: dict[str, dict[str, float]]) -> dict[str, dict[str,
                 if "spark.sql.execution.id" in props:
                     exec_tag[int(props["spark.sql.execution.id"])] = tag
             elif kind == "SparkListenerJobEnd":
-                if ev["Job ID"] in job_span:
-                    job_span[ev["Job ID"]][1] = ev["Completion Time"]
+                span = job_span.get(ev["Job ID"]) or untagged_span.get(ev["Job ID"])
+                if span is not None:
+                    span[1] = ev["Completion Time"]
             elif kind == "SparkListenerStageCompleted":
                 info = ev["Stage Info"]
                 if info["Stage ID"] in stage_job and "Submission Time" in info:
@@ -170,9 +184,12 @@ def parse(path: str, stamps: dict[str, dict[str, float]]) -> dict[str, dict[str,
         jobs = [j for j, t in job_tag.items() if t == tag]
         if not jobs:
             raise ValueError(f"no job in the event log carried tag {tag!r}")
-        first = min(job_span[j][0] for j in jobs)
-        last = max(job_span[j][1] for j in jobs)
-        spans = [s for (sid, _a), s in stage_span.items() if stage_job[sid] in jobs]
+        # the jobs after the build; the log stamps whole milliseconds
+        run = [j for j in jobs if job_span[j][0] >= st["built"] - 1.0] or jobs
+        first = min(job_span[j][0] for j in run)
+        last = max(job_span[j][1] for j in run)
+        spans = [s for (sid, _a), s in stage_span.items() if stage_job[sid] in run]
+        n_stages = sum(stage_job[sid] in jobs for sid, _a in stage_span)
         sums = task_sums[tag]
         py_rows = py_sent = py_run = files = 0.0
         for acc_id, value in acc_sums[tag].items():
@@ -190,6 +207,9 @@ def parse(path: str, stamps: dict[str, dict[str, float]]) -> dict[str, dict[str,
         plan = first - st["built"]
         tail = st["end"] - last
         stage_ms = _union_ms(spans)
+        outside = sum(_outside_ms(*job_span[j], st["start"], st["end"]) for j in jobs)
+        lost = sum(max(0.0, min(hi, st["end"]) - max(lo, st["start"]))
+                   for lo, hi in untagged_span.values())
         out[tag] = {
             "wall_ms": wall,
             "build_ms": build,
@@ -197,10 +217,10 @@ def parse(path: str, stamps: dict[str, dict[str, float]]) -> dict[str, dict[str,
             "jobs_ms": last - first,
             "tail_ms": tail,
             "stage_span_ms": stage_ms,
-            "dispatch_ms": wall - build - stage_ms - tail,
-            "outside_ms": max(0.0, -plan) + max(0.0, -tail),
+            "dispatch_ms": last - first - stage_ms,
+            "outside_ms": outside + lost,
             "jobs": float(len(jobs)),
-            "stages": float(len(spans)),
+            "stages": float(n_stages),
             "tasks": float(n_tasks[tag]),
             "run_ms": sums["run_ms"],
             "cpu_ms": sums["cpu_ns"] / 1e6,

@@ -19,18 +19,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-# keys documented to disagree with their oracle on key-shifted replicas
-# (scripts/scale_rehearsal.py), and key families that write into the
-# repo's .scratch while their plan is built; neither is gated
-REPLICA_UNSAFE = ("llm_dedup_", "sql_recursive_cte", "geo_point_in_polygon_table")
-PLAN_SIDE_EFFECTS = ("snk_", "src_", "stm_")
 FLOAT_DIGITS = 10
-
-
-def gated(key: str, replicated: bool) -> bool:
-    if replicated and key.startswith(REPLICA_UNSAFE):
-        return False
-    return not key.startswith(PLAN_SIDE_EFFECTS)
 
 
 def _family(s: pd.Series) -> tuple[str, pd.Series]:

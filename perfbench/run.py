@@ -14,8 +14,11 @@ and ``bench._bench_spark``. Workloads (README.md says why each):
   scanned from parquet with no cache; aggregates are fetched and the
   row-level publish stages land in parquet sinks.
 
-Every input is generated from ``--seed`` under ``perfbench/.work``.
-Results are checked against their DuckDB oracles after the timed loop.
+Every input is generated from ``--seed`` under ``perfbench/.work``,
+before the set-up clock starts. A run then sets up several times
+(session start, the inputs' reuse check, cache fill) and reports the
+median as ``setup_s``. Results are checked against their DuckDB
+oracles after the timed loop.
 With ``--trace 1`` Spark's event log is on and each execution's wall is
 split into layers (``eventlog.py``). The last stdout line is the result
 JSON; the line before it describes the run.
@@ -50,11 +53,23 @@ BATCH_MIX = {
 }
 REPLICAS = {"interactive": 1, "batch-etl": 2}
 MIN_ROUNDS = 2
-# nominal length of a measured round on a 4-core host: --seconds buys
-# seconds // ROUND_S whole rounds. A fixed count keeps a fast host from
-# running more rounds, each warmer than the last, than a slow one
-ROUND_S = 6.0
+# set-ups per run: the first starts the JVM, each later one (after the
+# measured loop) stops the session and starts a new one in the same JVM;
+# setup_s is the median. An interactive set-up refills the table cache
+SETUPS = {"interactive": 3, "batch-etl": 5}
+# nominal length of a measured round (every key once, with its DuckDB
+# pairs) on a 4-core host, either workload: --seconds buys the nearest
+# whole number of rounds. A fixed count keeps a fast host from running
+# more rounds, each warmer than the last, than a slow one
+ROUND_S = 8.5
+# DuckDB runs of a key per pairing: its runs of a small query vary by
+# tens of percent, and the ratio's denominator should not
+DUCK_REPS = 3
 ZERO_WORK_RUNS = 15
+# a traced run fails when the log puts more than this share of an
+# execution's wall in jobs outside its window or in jobs that lost
+# their tag (eventlog.py, outside_ms)
+OUTSIDE_MAX_PCT = 10.0
 # bench.py's harness provider: fact tables cached hash-partitioned on
 # the key their dominant bench consumer exchanges on, 8 partitions
 CACHE_KEY = {"lineitem": "l_orderkey", "orders": "o_custkey",
@@ -119,20 +134,6 @@ def _tree_hwm_mb(root: int) -> float:
                 if line.startswith("VmHWM:"):
                     total += int(line.split()[1]) / 1024.0
         except OSError:
-            pass
-    return total
-
-
-def _tree_cpu_s(root: int) -> float:
-    """CPU seconds (user + system, reaped children included) of ``root``
-    and its live descendants. Time the host steals is not in it."""
-    tick = os.sysconf("SC_CLK_TCK")
-    total = 0.0
-    for pid in [root] + _descendants(root):
-        try:
-            fields = Path(f"/proc/{pid}/stat").read_text().rsplit(")", 1)[1].split()
-            total += sum(int(f) for f in fields[11:15]) / tick
-        except (OSError, IndexError, ValueError):
             pass
     return total
 
@@ -204,8 +205,19 @@ class Harness:
                 tables.set_table_provider(self._provider)
         return self.cached[name]
 
+    def prepare(self) -> float:
+        """Generate the inputs, or reuse them when the seed and the base
+        match. Returns the seconds spent, which are not set-up time: the
+        generator is the benchmark's code, and whether it has to run
+        depends on the runs made before in the same checkout."""
+        t0 = time.perf_counter()
+        self.data_dir = _ensure_inputs(self.seed, self.replicas)["data"]
+        return time.perf_counter() - t0
+
     def setup(self) -> dict[str, float]:
-        """Session start, input generation or reuse, cache fill."""
+        """Session start, the inputs' reuse check, cache fill."""
+        from datagen import check
+
         t0 = time.perf_counter()
         if self.interactive:
             import bench
@@ -223,8 +235,7 @@ class Harness:
 
             self.spark = get_spark("perfbench")
         t1 = time.perf_counter()
-        gen = _ensure_inputs(self.seed, self.replicas)
-        self.data_dir = gen["data"]
+        check(Path(self.data_dir).parent, self.seed, self.replicas)
         t2 = time.perf_counter()
         if self.interactive:
             from atd_dockless_processing_spark import tables
@@ -236,11 +247,8 @@ class Harness:
             for name in tables.TABLES:
                 self._provider(self.spark, self.data_dir, name)
         t3 = time.perf_counter()
-        # inputs.gen_s is the generate-or-reuse step; generated_s is
-        # the generation alone, zero when the inputs were reused
         return {"setup_s": t3 - t0, "session.start_s": t1 - t0,
-                "inputs.gen_s": t2 - t1, "inputs.generated_s": gen["gen_s"],
-                "tables.cache_fill_s": t3 - t2}
+                "inputs.check_s": t2 - t1, "tables.cache_fill_s": t3 - t2}
 
     def teardown(self) -> None:
         from atd_dockless_processing_spark import tables
@@ -257,7 +265,8 @@ class Harness:
         result being the fetched frame or the sink directory."""
         from atd_dockless_processing_spark import QUERIES
 
-        self.spark.addTag(tag)
+        sc = self.spark.sparkContext
+        sc.addJobTag(tag)
         try:
             start = time.time()
             df = QUERIES[key](self.spark, self.data_dir)
@@ -275,7 +284,7 @@ class Harness:
                 rows = len(result)
             end = time.time()
         finally:
-            self.spark.removeTag(tag)
+            sc.removeJobTag(tag)
         return {"start": start * 1e3, "built": built * 1e3, "end": end * 1e3}, rows, result
 
     def zero_work_ms(self) -> float:
@@ -329,7 +338,8 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
     h = Harness(workload, seed)
     keys = list(h.mix)
     rng = random.Random(seed)
-    setup = h.setup()
+    gen_s = h.prepare()
+    setups = [h.setup()]
     phases = {"setup": time.perf_counter()}
 
     import gate
@@ -358,8 +368,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
     stamps: dict[str, dict[str, float]] = {}
     tag_key: dict[str, str] = {}
     attempted = failed = 0
-    n_rounds = max(MIN_ROUNDS, int(seconds // ROUND_S))
-    cpu0, duck_cpu = _tree_cpu_s(os.getpid()), 0.0
+    n_rounds = max(MIN_ROUNDS, round(seconds / ROUND_S))
     for _round in range(n_rounds):
         order = keys[:]
         rng.shuffle(order)
@@ -378,18 +387,24 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
             if rows is not None:
                 out_rows[key] = rows
             # the same query on DuckDB, paired in the same host window
-            c0 = time.process_time()
-            duck[key].append(duck_ms(key))
-            duck_cpu += time.process_time() - c0
+            duck[key] += [duck_ms(key) for _ in range(DUCK_REPS)]
     phases["loop"] = time.perf_counter()
-    cpu_per_pass = (_tree_cpu_s(os.getpid()) - cpu0 - duck_cpu) / n_rounds
     peak_rss = _tree_hwm_mb(os.getpid())
     zero_work = h.zero_work_ms() if trace else 0.0
+    app_id = h.spark.sparkContext.applicationId
+
+    # the later set-ups, after the loop so that they cannot disturb it
+    for _ in range(SETUPS[workload] - 1):
+        h.teardown()
+        setups.append(h.setup())
+    setup = {k: statistics.median(s[k] for s in setups) for k in setups[0]}
+    setup["inputs.gen_s"] = gen_s
+    phases["setups"] = time.perf_counter()
 
     # correctness gate and input sizes, outside the clock
     mismatches = {}
     for key in keys:
-        if key not in last or not gate.gated(key, replicated=h.replicas > 1):
+        if key not in last:
             continue
         try:
             result = last[key]
@@ -406,15 +421,15 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
     in_rows = {key: h.input_rows(key) for key in keys}
     layouts = _layout_state(h.spark, h.data_dir)
     phases["gate"] = time.perf_counter()
-    app_id = h.spark.sparkContext.applicationId
     h.teardown()
 
-    absolute = _absolute(lat, n_rounds, in_rows, out_rows, peak_rss, cpu_per_pass)
+    absolute = _absolute(lat, n_rounds, in_rows, out_rows, peak_rss)
     info = {
         "workload": workload, "seed": seed, "cpus": _cpus(), "rounds": n_rounds,
         "versions": _versions(), "layouts": layouts,
         "executions": attempted, "error_rate": failed / max(attempted, 1),
         "oracle_mismatches": mismatches, "setup": setup,
+        "setups": [{k: round(v, 3) for k, v in s.items()} for s in setups],
         "phase_s": {k: round(phases[k] - phases[p], 3) for p, k in zip(phases, list(phases)[1:])},
         "absolute": {k: v for k, (v, _u) in absolute.items()},
         "warm_ms": warm_ms,
@@ -434,18 +449,20 @@ def run(workload: str, seed: int, seconds: float, trace: bool) -> dict:
 
 def _end_to_end(setup_s: float, lat: dict[str, list[float]],
                 duck: dict[str, list[float]]) -> dict:
-    """Set-up time, and all Spark executions' time over all the paired
-    DuckDB executions' time. Each pair ran in the same host window, so
-    the ratio cancels the host's speed, which on a shared machine moves
-    every absolute time by tens of percent from one run to the next."""
-    spark_ms = sum(x for v in lat.values() for x in v)
-    duck_ms = sum(x for v in duck.values() for x in v)
+    """Set-up time, and the Spark time of a pass over the DuckDB time of
+    the same pass, each key's time being its median over the rounds.
+    Each Spark execution and its DuckDB pair ran in the same host
+    window, so the ratio cancels the host's speed, which on a shared
+    machine moves every absolute time by tens of percent from one run to
+    the next; the medians drop a round that a stall slowed down."""
+    spark_ms = sum(statistics.median(v) for v in lat.values())
+    duck_ms = sum(statistics.median(duck[k]) for k in lat)
     return {"setup_s": (setup_s, "s"), "pass_vs_duckdb": (spark_ms / duck_ms, "x")}
 
 
 def _absolute(lat: dict[str, list[float]], rounds: int, in_rows: dict[str, int],
-              out_rows: dict[str, int], peak_rss_mb: float, cpu_s_per_pass: float) -> dict:
-    """Absolute walls, throughput, CPU and memory. A pass is one round:
+              out_rows: dict[str, int], peak_rss_mb: float) -> dict:
+    """Absolute walls, throughput and memory. A pass is one round:
     one execution of every key; the percentiles are over executions."""
     every = [x for v in lat.values() for x in v]
     pass_s = sum(every) / rounds / 1e3
@@ -456,19 +473,25 @@ def _absolute(lat: dict[str, list[float]], rounds: int, in_rows: dict[str, int],
         "wall.queries_per_s": (len(every) / (sum(every) / 1e3), "1/s"),
         "wall.input_rows_per_s": (sum(in_rows[k] for k in lat) / pass_s, "rows/s"),
         "wall.output_rows_per_s": (sum(out_rows.get(k, 0) for k in lat) / pass_s, "rows/s"),
-        "cpu.s_per_pass": (cpu_s_per_pass, "s"),
         "memory.peak_rss_mb": (peak_rss_mb, "MB"),
     }
 
 
 def _layers(app_id, stamps, tag_key, mix, out_rows) -> dict:
-    """Per-query medians of the event-log ledger, or ``layers_error``."""
+    """Per-query medians of the event-log ledger, or ``layers_error``
+    when the log cannot be parsed or misattributes an execution."""
     import eventlog
 
     try:
         records = eventlog.parse(str(WORK / "eventlog" / app_id), stamps)
     except Exception as exc:
         return {"layers_error": f"{type(exc).__name__}: {exc}"}
+    return _ledger(records, tag_key, mix, out_rows)
+
+
+def _ledger(records, tag_key, mix, out_rows) -> dict:
+    """Per-key medians of the per-execution records, or ``layers_error``
+    when an execution has more than ``OUTSIDE_MAX_PCT`` outside it."""
     by_key: dict[str, list[dict]] = defaultdict(list)
     for tag, rec in records.items():
         by_key[tag_key[tag]].append(rec)
@@ -479,6 +502,11 @@ def _layers(app_id, stamps, tag_key, mix, out_rows) -> dict:
         row["sink"] = float(mix[key] == "sink")
         row["fetch_rows"] = float(out_rows.get(key, 0)) if mix[key] == "fetch" else 0.0
         per_key[key] = row
+    worst = max(per_key, key=lambda k: per_key[k]["outside_max_pct"])
+    if per_key[worst]["outside_max_pct"] > OUTSIDE_MAX_PCT:
+        return {"layers_error": f"misattributed jobs: {per_key[worst]['outside_max_pct']:.1f}% "
+                                f"of a {worst} execution's wall is outside it "
+                                f"(limit {OUTSIDE_MAX_PCT:.0f}%)"}
     return per_key
 
 
@@ -491,6 +519,7 @@ def _layer_metrics(layers: dict, setup: dict, zero_work: float) -> dict:
     return {
         "session.start_s": (setup["session.start_s"], "s"),
         "inputs.gen_s": (setup["inputs.gen_s"], "s"),
+        "inputs.check_s": (setup["inputs.check_s"], "s"),
         "tables.cache_fill_s": (setup["tables.cache_fill_s"], "s"),
         "operators.build_ms": (total("build_ms"), "ms"),
         "spark.plan_ms": (total("plan_ms"), "ms"),

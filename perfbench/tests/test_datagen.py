@@ -63,9 +63,16 @@ def test_ensure_writes_checks_and_reuses(tmp_path):
         assert datagen.footer_rows(data / f"{name}.parquet") == 2 * datagen.BASE_ROWS[name]
     assert datagen.ensure_scaled(tmp_path, base_dir, seed=5, mult=2) == (data, 0.0)
 
-    # a damaged set is rebuilt, not served
+    assert datagen.check(tmp_path, seed=5, mult=2) == data
+    assert datagen.check(tmp_path, seed=0, mult=1) == base_dir
+    with pytest.raises(RuntimeError):
+        datagen.check(tmp_path, seed=6, mult=2)
+
+    # a damaged set fails the check and is rebuilt, not served
     victim = sorted((data / "orders.parquet").glob("*.parquet"))[0]
     victim.unlink()
+    with pytest.raises(RuntimeError):
+        datagen.check(tmp_path, seed=5, mult=2)
     assert datagen.ensure_scaled(tmp_path, base_dir, seed=5, mult=2)[1] > 0
 
     # another seed replaces the set

@@ -1,4 +1,4 @@
-"""The correctness gate's result signature and key exclusions."""
+"""The correctness gate's result signature."""
 
 import datetime as dt
 
@@ -45,10 +45,3 @@ def test_partitioned_sink_reads_back_its_date_column(tmp_path):
     assert gate.check(con, "SELECT * FROM frame", gate.read_sink(con, str(tmp_path))) is None
     assert "row hashes" in gate.check(con, "SELECT d, n + 1 AS n FROM frame",
                                       gate.read_sink(con, str(tmp_path)))
-
-
-def test_excluded_keys():
-    assert not gate.gated("llm_dedup_exact", replicated=True)
-    assert gate.gated("llm_dedup_exact", replicated=False)
-    assert not gate.gated("snk_parquet", replicated=False)
-    assert gate.gated("etl_publish_funnel", replicated=True)

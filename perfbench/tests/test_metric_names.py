@@ -26,7 +26,8 @@ def test_end_to_end_names_and_units():
     metrics = run._end_to_end(2.5, lat, duck)
     assert {k: u for k, (_v, u) in metrics.items()} == _declared("end_to_end")
     assert all(v > 0 for v, _u in metrics.values())
-    assert metrics["pass_vs_duckdb"][0] == (33.0 + 61.0) / (3.0 + 6.0)
+    # each key's median over its rounds, summed over the pass
+    assert metrics["pass_vs_duckdb"][0] == (11.0 + 30.5) / (1.0 + 3.0)
 
 
 def test_per_layer_names_and_units():
@@ -34,9 +35,10 @@ def test_per_layer_names_and_units():
         "fetched": dict.fromkeys(LAYER_FIELDS, 1.0) | {"sink": 0.0},
         "written": dict.fromkeys(LAYER_FIELDS, 2.0) | {"sink": 1.0},
     }
-    setup = {"session.start_s": 1.0, "inputs.gen_s": 0.5, "tables.cache_fill_s": 0.0}
+    setup = {"session.start_s": 1.0, "inputs.gen_s": 0.5, "inputs.check_s": 0.1,
+             "tables.cache_fill_s": 0.0}
     metrics = run._layer_metrics(layers, setup, 45.0) | run._absolute(
-        {"a": [10.0], "b": [30.0]}, 1, {"a": 100, "b": 50}, {"a": 3}, 900.0, 7.0)
+        {"a": [10.0], "b": [30.0]}, 1, {"a": 100, "b": 50}, {"a": 3}, 900.0)
     metrics["trace.pass_vs_duckdb"] = (4.0, "x")
     assert {k: u for k, (_v, u) in metrics.items()} == _declared("per_layer")
     assert metrics["wall.pass_s"][0] == 0.04
