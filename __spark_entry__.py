@@ -40,111 +40,16 @@ def entry(spark: SparkSession) -> DataFrame:
 # OLDEST-EVIDENCE-FIRST so the leftover sweep budget re-validates the
 # stalest green rows, not the same recently-swept ones.
 #
-# The EFFECTIVE order (_KEY_ORDER below) is recomputed at IMPORT TIME
-# from the CORRECTNESS_r*.json files present on disk
-# (atd_dockless_processing_spark/retier.py) — so an evidence file that
-# lands after the tree is stamped re-tiers itself on the driver's next
-# import instead of going stale until a human reruns the retier script
-# (VERDICT r8 "What's wrong" #1). This static list is only the
-# STABILITY BASELINE: it breaks ties inside each evidence tier, and
-# ``python scripts/retier_key_order.py --write`` refreshes it each
-# round purely for readability (this splice is from r01∪…∪r08).
-# tests/test_bench_contract.py guards BOTH ordering properties, and
-# tests/test_round_boundary.py simulates a post-commit evidence drop.
-_KEY_ORDER_BASE = [
-    "evt_funnel", "llm_tfidf_topk", "agg_corr_cov", "geo_od_matrix",
-    "evt_new_vs_returning", "llm_rouge_overlap", "agg_gini",
-    "dq_pk_uniqueness", "txt_repetition_filter", "agg_listagg",
-    "fn_collation_group", "sql_exec_immediate", "sql_identifier_clause",
-    "sql_pipe_syntax", "udtf_arrow_lateral", "udtf_table_argument",
-    "etl_declarative_pipeline", "stm_rocksdb_changelog", "geo_hex_bin",
-    "geo_point_in_polygon", "txt_boilerplate_strip",
-    "llm_contamination_ngram", "evt_cohort_retention", "sql_recursive_cte",
-    "snk_parquet", "fn_date_derive", "fn_json_extract", "win_lag_lead",
-    "fn_try_arith", "fn_date_derive_tz", "fn_map_ops",
-    "evt_attribution_last_touch", "agg_minmax_by", "llm_bm25_topk",
-    "stm_foreachbatch_sink", "src_partition_prune", "llm_knn_join",
-    "src_orc_roundtrip", "src_incremental_extract", "stm_join_stream_static",
-    "src_csv_roundtrip", "llm_vector_quantize", "stm_session_window",
-    "snk_partitioned", "stm_sliding_watermark", "stm_tumbling_availablenow",
-    "fn_luhn_check", "set_union_by_name", "src_csv_multiline",
-    "agg_grouping_flags", "dq_table_checksum", "fn_aes_roundtrip",
-    "sql_group_by_all", "sql_correlated_subquery", "join_interval_overlap",
-    "snk_bucketed_join", "snk_jdbc_derby", "stm_late_data_drop",
-    "fn_geojson_route", "stm_watermark_dedup", "llm_ann_hyperplane",
-    "llm_ann_ivf", "stm_stateful_running", "stm_join_stream_stream",
-    "llm_dedup_simhash", "geo_bbox_join", "llm_dedup_near_minhash",
-    "llm_dedup_url_canon", "stm_stateful_session", "llm_kmeans_step",
-    "llm_dedup_embedding", "fn_url_parse", "geo_point_in_polygon_table",
-    "mm_decode_wav", "dq_profile_table", "agg_hll_deterministic",
-    "src_binary_files", "mm_frame_sample", "dq_psi_drift",
-    "agg_cms_heavy_hitters", "mm_decode_stub", "agg_approx_distinct",
-    "agg_stats", "agg_pivot", "agg_percentiles", "fn_explode",
-    "fn_levenshtein", "join_semi", "win_fill_forward", "fn_from_json_struct",
-    "txt_lang_id", "fn_variant_json", "agg_collect_sorted",
-    "join_bloom_prefilter", "join_left_outer", "join_full_outer",
-    "join_skew_salted", "join_broadcast_dim", "agg_distinct_count",
-    "join_null_safe", "dq_constraint_report", "agg_global",
-    "join_theta_range", "agg_filtered", "agg_histogram", "agg_rollup",
-    "agg_grouping_sets", "agg_cube", "join_asof", "agg_groupby_q1",
-    "prj_select_rename", "win_running_sum", "win_moving_avg",
-    "win_rank_dense", "prj_derived_expr", "src_parquet_scan",
-    "win_first_last", "win_ntile_pct", "win_percent_rank",
-    "win_ratio_to_report", "prj_case_when", "snk_zorder_layout",
-    "agg_bloom_membership", "agg_quantile_sketch", "llm_semdedup",
-    "etl_publish_funnel", "evt_state_intervals", "stm_cdc_stream_apply",
-    "txt_dedup_paragraphs", "join_scd2_temporal", "mm_image_embed_sim",
-    "dq_skew_report", "stm_join_stream_left", "dq_fk_orphans",
-    "llm_curriculum_order", "mm_audio_silence_trim", "snk_manifest_publish",
-    "dq_freshness", "evt_path_topk", "geo_hex_ring_smooth",
-    "llm_train_val_split", "mm_video_scene_cut", "snk_cdc_apply",
-    "win_rolling_median", "agg_mode", "evt_attribution_linear",
-    "evt_cusum_changepoint", "evt_ewma", "fn_ip_cidr",
-    "gph_bfs_reachability", "llm_doc_sample_per_source", "mm_audio_features",
-    "mm_image_histogram", "src_xml_roundtrip", "txt_readability",
-    "snk_compact_small_files", "stm_sketch_hll_merge", "evt_outlier_mad",
-    "gph_pagerank_scaled", "llm_shard_assign", "src_json_corrupt",
-    "agg_kmv_theta_sketch", "dq_benford_digits", "evt_rebalance_detect",
-    "evt_ts_interpolate", "gph_degree_distribution",
-    "stm_rate_source_window", "src_python_datasource", "udtf_python_custom",
-    "stm_state_store_read", "udf_arrow_native", "sql_scripting",
-    "llm_temperature_mixture", "geo_trip_quality_flags",
-    "gph_jaccard_neighbors", "gph_triangle_count", "llm_importance_resample",
-    "mm_image_resize", "txt_ngram_topk", "join_cross_small", "join_anti",
-    "join_inner", "evt_tumbling_hour", "llm_dedup_clusters",
-    "llm_dedup_keep_list", "llm_dedup_ngram", "join_multiway_5",
-    "win_distinct_count", "evt_interarrival_hist", "fn_base64_roundtrip",
-    "agg_weighted_avg", "win_range_frame", "win_cume_dist",
-    "fn_regexp_extract", "txt_pii_mask", "fn_split_tokens",
-    "llm_token_stats", "srt_multi_nulls", "fn_date_arith",
-    "fn_date_interval", "fn_epoch_ts", "prj_unpivot", "snk_scd2",
-    "srt_limit_offset", "udtf_posexplode", "fn_string_core",
-    "txt_chunk_docs", "sql_tpch_q6", "txt_fingerprint", "txt_token_bpe",
-    "fn_array_ops", "fn_math_core", "fn_cast_coercion", "fn_surrogate_key",
-    "llm_text_classify", "flt_null_coalesce", "llm_stratified_sample",
-    "fn_struct_nested", "llm_vector_norm_filter", "udf_pandas_vectorized",
-    "txt_quality_score", "flt_range", "win_topk_per_group", "flt_in_set",
-    "stm_tws_timers", "stm_tws_list_state", "stm_python_stream_source",
-    "llm_bpe_merge_step", "stm_tws_map_state", "stm_transform_with_state",
-    "flt_like_regex", "evt_rfm_segments", "txt_entropy_filter",
-    "geo_trip_length", "evt_dau_wau_rolling", "dq_dp_noise_counts",
-    "llm_dataset_mixture", "src_schema_merge", "evt_sessionize_lag",
-    "llm_centroid_per_label", "fn_bitwise", "evt_time_spine",
-    "set_union_all", "evt_anomaly_zscore", "llm_corpus_funnel",
-    "set_intersect", "geo_grid_bin", "set_except", "evt_gap_islands",
-    "llm_pack_sequences", "set_except_all", "set_intersect_all",
-    "sql_lateral_topn", "evt_time_weighted_avg", "evt_session_window_native",
-    "llm_term_topk", "evt_sliding_window", "llm_dedup_exact",
-    "src_text_log_parse", "llm_cosine_topk", "set_union_distinct",
-    "src_json_roundtrip", "llm_unigram_logprob", "udf_scalar_python",
-    "evt_markov_transitions", "geo_nearest_hub", "srt_topk_global",
-    "evt_session_batch", "snk_upsert_merge", "udaf_grouped_map",
-    "sql_lateral_column_alias", "stm_dedup_within_watermark",
-    "agg_bitmap_distinct", "agg_regression", "snk_python_datasource_write",
-    "sql_create_function", "sql_session_variable", "stm_tws_value_ttl",
-]
-
-_KEY_ORDER = retier_from_repo(_KEY_ORDER_BASE, QUERIES, ORACLES, Path(_REPO))
+# The order is recomputed at IMPORT TIME from the CORRECTNESS_r*.json
+# files present on disk (atd_dockless_processing_spark/retier.py), so
+# an evidence file that lands after the tree is stamped re-tiers
+# itself on the driver's next import (VERDICT r8 "What's wrong" #1).
+# Registry order breaks ties inside each evidence tier (a static
+# literal and its refresh script did so through commit 37ae0cc,
+# scripts/retier_key_order.py). tests/test_bench_contract.py guards
+# BOTH ordering properties, and tests/test_round_boundary.py
+# simulates a post-commit evidence drop.
+_KEY_ORDER = retier_from_repo(list(QUERIES), QUERIES, ORACLES, Path(_REPO))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -515,9 +515,8 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile's TypedImperativeAggregate materializes an
     O(group-distinct) value→count map no 100 TB group should pay.
     Because the sketch deliberately breaks exact-oracle parity, it is
-    an EXPLICIT opt-in — env ``SPARK_GRAFT_PCTL_SKETCH=1`` — not a
-    data-dependent surprise; a 100 TB deployment sets the flag (or
-    calls ``_percentiles_plan(df, exact=False)`` directly). Boundary
+    never dispatched from this key: a 100 TB deployment calls
+    ``_percentiles_plan(df, exact=False)`` directly. Boundary
     agreement (sketch within 0.5% of exact on the largest local
     corpus) is asserted in tests.
 
@@ -533,12 +532,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ``percentile()`` single-array form therefore STAYS the
     registered exact plan; the helper remains as the measured
     alternative for bounded value domains (OPTIMIZATION_r14.md)."""
-    import os
-
-    return _percentiles_plan(
-        load(spark, sf_dir, "orders"),
-        exact=os.environ.get("SPARK_GRAFT_PCTL_SKETCH") != "1",
-    )
+    return _percentiles_plan(load(spark, sf_dir, "orders"), exact=True)
 
 
 @query(

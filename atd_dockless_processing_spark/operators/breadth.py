@@ -85,8 +85,9 @@ def agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     string's lexicographic order for non-negative fixed-width ints,
     so the ARGMAX — the only value that crosses engines — is
     identical, while the engine skips 15M java.util.Formatter calls
-    per column (×100 A/B, scripts/ab_minmax.py: format_string 4.79 s,
-    lpad-concat 2.70 s, struct 1.69 s — results equal)."""
+    per column (×100 A/B, BASELINE.md; scripts/ab_minmax.py at commit
+    37ae0cc: format_string 4.79 s, lpad-concat 2.70 s, struct 1.69 s
+    — results equal)."""
     o = load(spark, sf_dir, "orders").select(
         "o_orderpriority",
         "o_orderstatus",

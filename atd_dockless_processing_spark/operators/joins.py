@@ -320,8 +320,8 @@ def join_multiway_5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DEFAULT path once built; the residual is the irreducible
     custkey exchange + DuckDB's in-process hash-build advantage.
     Join-order alternatives were separately A/B'd and REJECTED
-    (orders⋈customer-first 3× worse — scripts/ab_multiway.py,
-    BASELINE round-6)."""
+    (orders⋈customer-first 3× worse — BASELINE round-6;
+    scripts/ab_multiway.py at commit 37ae0cc)."""
     return multiway5_plan(spark, sf_dir)
 
 
@@ -389,6 +389,9 @@ class _BucketedLayout:
         )
 
     def src_sig(self, sf_dir: str) -> str:
+        """Freshness signature of the layout's sources: a regenerated
+        corpus invalidates the layout, and an unstatable source (nonce
+        signature) never matches, so the probe falls back to ad hoc."""
         from ..tables import source_signature
 
         return ";".join(
@@ -613,23 +616,6 @@ def _q5_bucket_tables(sf_dir: str, buckets: int) -> tuple[str, str, str]:
     return names[0], names[1], base
 
 
-def _q5_src_sig(sf_dir: str) -> str:
-    """Freshness signature of the layout's SOURCES. A regenerated
-    corpus must invalidate the layout, or the registered key would
-    silently serve stale rows against a fresh oracle (r8 review
-    finding #1; the stage_scratch marker discipline).
-
-    Delegates to the shared ``tables.source_signature`` (per-file
-    enumeration for directory-shaped tables, r8 ADVICE #1; nonce on
-    OSError so a missing/provider-served source never matches —
-    ``_q5_layout_available`` then falls back to the ad-hoc plan
-    instead of raising out of the probe, and
-    ``ensure_q5_bucketed_layout`` DECLINES to build rather than
-    rebuilding a never-verifiable layout on every call, r9 review
-    finding #3)."""
-    return _Q5_LAYOUT.src_sig(sf_dir)
-
-
 def ensure_q5_bucketed_layout(
     spark: SparkSession, sf_dir: str, buckets: int = _Q5_BUCKETS
 ) -> tuple[str, str]:
@@ -773,13 +759,6 @@ _CK_LAYOUT = _BucketedLayout(
 def _ck_bucket_tables(sf_dir: str, buckets: int) -> tuple[str, str, str]:
     names, base = _CK_LAYOUT.names(sf_dir, buckets)
     return names[0], names[1], base
-
-
-def _ck_src_sig(sf_dir: str) -> str:
-    """Freshness signature of the layout's sources (shared
-    ``tables.source_signature`` — per-file for directory-shaped
-    tables, nonce on OSError so an unstatable source never matches)."""
-    return _CK_LAYOUT.src_sig(sf_dir)
 
 
 def ensure_custkey_bucketed_layout(

@@ -810,10 +810,10 @@ def evt_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregates the ≤125 segments in-batch. This replaces the
     three CHAINED single-partition JVM ntile sorts (serial Exchange
     SinglePartition + WindowExec each, ~0.6 s of the 1.42 s ×100
-    total) with one narrow Arrow pass: ×100 A/B (ab_rfm_forms.py)
+    total) with one narrow Arrow pass: ×100 A/B (BASELINE.md)
     chained 1.42 s / branch-join-with-checkpoint 1.00 s / gather
     0.89–1.00 s vs DuckDB 0.294 s; 0.89 s equals the measured
-    scan+agg-only floor (rfm_agg_only, ab_bbox_rfm.py), i.e. the
+    scan+agg-only floor (rfm_agg_only, BASELINE.md), i.e. the
     ntile term is now ~0 and the residual is the purchase-scan +
     per-user-agg constant shared by every form. coalesce(1) instead
     of repartition(1) REJECTED by measurement (1.52 s — it collapses

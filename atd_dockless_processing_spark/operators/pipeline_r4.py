@@ -27,15 +27,13 @@ rest of the calendar derivation surface in ``functions/scalars.py``.)
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.json_fast import with_json_field
 from ..registry import query
-from ..tables import load, stage_scratch
+from ..tables import load, parquet_nrows, stage_scratch
 
 # ---------------------------------------------------------------------------
 # fn_geojson_route — nested FeatureCollection parsing
@@ -198,6 +196,10 @@ def fn_geojson_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 # agg_corr_cov — distributed correlation via exact power sums
 # ---------------------------------------------------------------------------
 
+# Σlo < rows·2^32 must fit the decimal(18,0) cast: 1e18 / 2^32 ≈ 2.3e8,
+# the long-unit form's binding rows/group bound (agg_corr_cov docstring).
+_CORR_COV_UNITS_MAX_ROWS = 230_000_000
+
 
 @query(
     "agg_corr_cov",
@@ -277,18 +279,22 @@ def agg_corr_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal(17,0) → rows/group < ~3.9e8; Σuy ≤ rows·1.05e9 vs
     decimal(18,0) → rows/group < ~9.5e8; Σux vs decimal(15,0) →
     rows/group < ~2e9. Binding bound: the Σlo decimal(18,0) cast at
-    **rows/group < ~2.3e8** — 11× above ×100 (the suy/sux casts were
-    widened to 18,0/15,0 in r15 per ADVICE so the long sums, not
-    these casts, bind; the hi casts cannot widen past 17,0 without
-    pushing the reconstruction over precision 38). PAST the bound
-    this form is wrong-by-construction: Spark 4.1 ANSI throws on the
-    long-sum wrap (and with ANSI off it would silently corrupt), so
-    deployments at the stated 100 TB design point (~1e11 rows/flag)
-    must flip ``SPARK_GRAFT_CORR_COV_WIDE=1``, which swaps in the
-    decimal power-sum twin — identical output (equality-pinned), no
-    row bound, ~4.7× slower per ×100 A/B. The local default stays
-    the long-unit form (driver bench comparable; sf0.1/×100 are 11×+
-    under the bound).
+    **rows/group < ~2.3e8** — 11× above ×100. The sux/suy casts were
+    widened to 15,0/18,0 in r15 so that they sit past this Σlo bound;
+    they still bind before their own long-sum wraps (suy's cast at
+    ~9.5e8 rows vs its long sum at ~8.8e9). The hi casts cannot widen
+    past 17,0 without pushing the reconstruction over precision 38.
+    PAST the bound this form is wrong-by-construction: Spark 4.1 ANSI
+    throws on the wrap (with ANSI off it would silently corrupt).
+
+    Dispatch: the lineitem parquet footer count (metadata only, no
+    Spark job) picks the form. At or above
+    ``_CORR_COV_UNITS_MAX_ROWS`` total rows — an upper bound on every
+    group's rows — or when the footers cannot be read (e.g. an
+    object-store path), the plan is ``_corr_cov_decimal_twin``:
+    the decimal power-sum form, identical output (equality-pinned), no
+    row bound, ~4.7× slower per ×100 A/B. Below it, the long-unit
+    form (the driver and bench corpora are 11×+ under the bound).
 
     Isolated-process ×100 A/B (fresh process per form, 5 hot runs, 2
     epochs): units 0.890/0.810 s vs decimal 3.873/4.163 s vs DuckDB
@@ -296,7 +302,8 @@ def agg_corr_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.61×). The decimal power-sum form stays as
     ``_corr_cov_decimal_twin``, equality-pinned (driver corpus +
     synthesized edge corpus)."""
-    if os.environ.get("SPARK_GRAFT_CORR_COV_WIDE") == "1":
+    nrows = parquet_nrows(sf_dir, "lineitem")
+    if nrows is None or nrows >= _CORR_COV_UNITS_MAX_ROWS:
         return _corr_cov_decimal_twin(spark, sf_dir)
     li = load(spark, sf_dir, "lineitem")
     ux = F.floor(F.col("l_quantity") * 10000 + F.lit(0.5)).cast("long")
@@ -345,9 +352,10 @@ def agg_corr_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corr_cov_decimal_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r14 decimal power-sum form, kept as the cross-form
-    equality witness for the registered long-unit plan (isolated ×100
-    epochs: decimal 3.873/4.163 s vs units 0.890/0.810 s). Both forms
+    """The pre-r14 decimal power-sum form: ``agg_corr_cov``'s plan at
+    or past ``_CORR_COV_UNITS_MAX_ROWS`` and the cross-form equality
+    witness for the long-unit plan (isolated ×100 epochs: decimal
+    3.873/4.163 s vs units 0.890/0.810 s). Both forms
     feed the same exact sum VALUES — Σux/1e4 as decimal — into the
     shared ``_corr_tail``, so every output bit matches."""
     li = load(spark, sf_dir, "lineitem")

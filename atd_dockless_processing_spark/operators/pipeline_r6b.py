@@ -1352,19 +1352,13 @@ def evt_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests (sf0.1 + sf0.01); ×100 A/B in BASELINE round-7 de-weak. For
     unbounded value domains (continuous doubles) the histogram
     degenerates to row cardinality and the 3-pass ``_mad_plan`` is
-    the right form — that fallback is an EXPLICIT opt-in (env
-    ``SPARK_GRAFT_MAD_3PASS=1``; r8 ADVICE fix — no silent wired
-    switch exists, and since the two forms are pinned bit-identical
-    the flag is a pure performance posture, never a parity one).
-    There is no cheap automatic gate: distinct-cardinality of the
-    value column is not in parquet footers, and a discovery job would
-    cost more than the histogram it guards."""
-    import os
-
-    ev = load(spark, sf_dir, "events")
-    if os.environ.get("SPARK_GRAFT_MAD_3PASS") == "1":
-        return _mad_plan(ev, exact=True)
-    return _mad_hist_plan(ev)
+    the right form — a deployment calls ``_mad_plan(ev, exact=True)``
+    directly; since the two forms are pinned bit-identical the choice
+    is a pure performance posture, never a parity one. There is no
+    cheap automatic gate: distinct-cardinality of the value column is
+    not in parquet footers, and a discovery job would cost more than
+    the histogram it guards."""
+    return _mad_hist_plan(load(spark, sf_dir, "events"))
 
 
 def _mad_plan(ev: DataFrame, exact: bool) -> DataFrame:

@@ -199,7 +199,8 @@ def llm_rouge_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor drops ~4×, total ~1.7× faster, ~1.0–1.1× vs the oracle.
     (A/B'd alternatives that LOST: building grams after the window
     from lead(text) — 84 s, the double gram build dominates;
-    scripts/ab_rouge_forms.py carries all four forms.)
+    OPTIMIZATION_r14.md; scripts/ab_rouge_forms.py at commit 37ae0cc
+    carries all four forms.)
 
     r15 registered gram build — token split HOISTED out of the
     lambda: higher-order functions are interpreted (no whole-stage
@@ -212,7 +213,8 @@ def llm_rouge_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CollapseProject keeps it: tok is referenced 4×, split is
     non-cheap) makes every lambda access a bound-reference array
     lookup. Gram-build-only isolated probe at ×100
-    (scripts/ab_gram_hoist.py, noop sink): inline 29.2 s vs hoisted
+    (OPTIMIZATION_r15.md; scripts/ab_gram_hoist.py at commit 37ae0cc,
+    noop sink): inline 29.2 s vs hoisted
     2.49 s vs DuckDB 2.28 s — 11.7× on the build term. Same strings
     by construction (identical expression applied to the same split;
     hash-identity verified over the full ×100 corpus), and the

@@ -9,19 +9,15 @@ The ordering contract (VERDICT r3 item 2 / r4 item 7 / r5 item 1):
 2. the ever-green tail rotates OLDEST-EVIDENCE-FIRST (round number of
    each key's latest green row, ascending; stable by prior order).
 
-Through round 8 this list was a static splice refreshed once per round
-by ``scripts/retier_key_order.py --write`` — which meant the rotation
-sentinel test went red at EVERY round boundary, because the driver
-writes ``CORRECTNESS_r{N}.json`` after the tree is stamped (VERDICT r8
-"What's wrong" #1, same mechanism in r7). The fix is structural: the
-static list is now only a stability baseline (``_KEY_ORDER_BASE``), and
-the effective order is recomputed HERE from the evidence files present
-at import. A post-commit evidence drop re-tiers itself on next import;
-no human step can be late.
-
-``scripts/retier_key_order.py --write`` remains as a cosmetic refresh
-of the baseline (keeps the literal in ``__spark_entry__.py`` readable
-and the git diff meaningful); it is no longer load-bearing.
+Through round 8 the order was a static list refreshed once per round
+by a script (``scripts/retier_key_order.py``, deleted after commit
+37ae0cc) — which meant the rotation sentinel test went red at EVERY
+round boundary, because the driver writes ``CORRECTNESS_r{N}.json``
+after the tree is stamped (VERDICT r8 "What's wrong" #1, same
+mechanism in r7). The fix is structural: the effective order is
+recomputed HERE from the evidence files present at import, and the
+registry order only breaks ties. A post-commit evidence drop re-tiers
+itself on next import; no human step can be late.
 """
 
 from __future__ import annotations
@@ -29,87 +25,14 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-# Keys a standing VERDICT done-condition named ("Done = green
-# CORRECTNESS row") must never slip out of the sweep budget; designated
-# carry keys are ones whose semantics are redundantly pinned by
-# independent-python invariant tests and well-evidenced oracle families.
-SWEEP_FIRST = {
-    "evt_state_intervals", "etl_publish_funnel",  # VERDICT r5 items 5/6
-    "agg_quantile_sketch", "llm_semdedup",
-    "agg_bloom_membership", "snk_zorder_layout",
-}
-CARRY_OK = {"agg_weighted_avg", "fn_base64_roundtrip", "evt_interarrival_hist"}
-
 # Keys whose REGISTERED implementation changed in round N: driver
 # evidence from rounds < N was earned by the OLD plan, so it is not
 # current green evidence — the key re-tiers to the needy band until a
-# round-≥N CORRECTNESS row lands (then this entry is dead weight and
-# can be dropped at the next cosmetic refresh). Honest alternative to
-# editing driver-owned CORRECTNESS files (VERDICT r9 items 2/6: the
-# tumbling µs-layout dispatch and the correlated-subquery window
-# promotion both rewired their registered plan in r10).
-EVIDENCE_INVALIDATED: dict[str, int] = {
-    "sql_correlated_subquery": 10,
-    # r11: sum_filled -> FP-exact sum_filled_e4 (schema + value change,
-    # r10 ADVICE #2)
-    "win_fill_forward": 11,
-    # r11 weak-burn rewrites (VERDICT r10 item 2): pairs-first
-    # collect, single-parse from_json/variant, marker-prefilter
-    # lang_id — registered plans changed, evidence re-earned
-    "agg_collect_sorted": 11,
-    "fn_from_json_struct": 11,
-    "fn_variant_json": 11,
-    "txt_lang_id": 11,
-    # r11: map->dense-array bitmap + xxhash64 positions (34x -> 4.7x
-    # at x100; the map element_at linear scan was the scale bug)
-    "join_bloom_prefilter": 11,
-    # r12 (VERDICT r11 item 2): bucketed-custkey layout dispatch added
-    # to all three, and join_cross_small's spine now pre-aggregates to
-    # (c_nationkey, o_orderstatus) before the dim joins — registered
-    # plans changed, evidence re-earned
-    # r13 (VERDICT r12 item 2; supersedes these keys' r12 entries):
-    # bucketed layouts now DDL-re-attach in fresh sessions, so the
-    # driver-real sweep executes the BUCKETED physical plans for the
-    # four layout-dispatched join keys for the first time; join_inner
-    # and join_multiway_5 additionally changed their aggregate
-    # expressions to exact integer-unit sums (cents / e4 — r12 ADVICE
-    # #1) in both engines. Evidence re-earned on the new plans.
-    "join_inner": 13,
-    "join_anti": 13,
-    "join_cross_small": 13,
-    "join_multiway_5": 13,
-    # r13: µs-staged layout pre-built at the driver sf_dir (the scan
-    # dispatches to it in driver-real sessions for the first time) +
-    # exact-cents sum_value in both engines
-    "evt_tumbling_hour": 13,
-    # r13 (VERDICT r12 item 4): registered band shape flipped to the
-    # production 8x2 (sublinear-in-docs, measured through x100) for
-    # the whole shared-candidate-plan family; 16x1 twin test-pinned
-    "llm_dedup_ngram": 13,
-    "llm_dedup_clusters": 13,
-    "llm_dedup_keep_list": 13,
-    # r15 (VERDICT r14 item 5): of the ten r14 registered-plan
-    # rewrites, the driver's r14 rotation independently hash-verified
-    # only evt_dau_wau_rolling and txt_repetition_filter; the other
-    # eight re-tier to the needy band so every r14 plan change earns
-    # a driver CORRECTNESS row on the NEW plan.
-    "llm_tfidf_topk": 14,
-    "evt_funnel": 14,
-    "evt_new_vs_returning": 14,
-    "agg_gini": 14,
-    "dq_pk_uniqueness": 14,
-    "geo_od_matrix": 14,
-    # r15 split-hoist rewrites: registered gram builds changed again
-    # (llm_rouge_overlap was already unverified from r14; the
-    # txt_repetition_filter r14 row was earned by the pre-hoist plan)
-    "llm_rouge_overlap": 15,
-    "txt_repetition_filter": 15,
-    # r15: the long-unit form's sux/suy sum casts widened
-    # (14,0)/(17,0) -> (15,0)/(18,0) per r14 ADVICE — same values by
-    # construction, but the registered plan changed again, so its r14
-    # evidence (none) stays invalid through r15.
-    "agg_corr_cov": 15,
-}
+# round-≥N CORRECTNESS row lands (then the entry is dead weight and is
+# dropped). Honest alternative to editing driver-owned CORRECTNESS
+# files. Empty: every entry through r15 has since earned a green row
+# on its new plan.
+EVIDENCE_INVALIDATED: dict[str, int] = {}
 
 
 def latest_evidence(repo: Path) -> dict[str, tuple[int, dict]]:
@@ -117,7 +40,7 @@ def latest_evidence(repo: Path) -> dict[str, tuple[int, dict]]:
 
     Files are read in round order so a later file's row wins; a
     malformed file is skipped rather than breaking the driver import
-    (the static baseline order still applies to any key it covered).
+    (the tie-break base order still applies to any key it covered).
     """
     latest: dict[str, tuple[int, dict]] = {}
     paths = []
@@ -170,16 +93,8 @@ def retier(
         k for k in queries
         if k in evidence and is_green(k, evidence[k][1], oracles, evidence[k][0])
     ]
-    # needy: verdict-mandated first, designated carries last; within a
-    # band, brand-new keys (no prior rank) first, then prior order
-    needy.sort(
-        key=lambda k: (
-            (0 if k in SWEEP_FIRST else 2 if k in CARRY_OK else 1),
-            k in prior,
-            prior.get(k, 0),
-            k,
-        )
-    )
+    # needy: brand-new keys (no prior rank) first, then prior order
+    needy.sort(key=lambda k: (k in prior, prior.get(k, 0), k))
     # green: oldest evidence round first, stable by prior order
     green.sort(key=lambda k: (evidence[k][0], prior.get(k, 10**9), k))
     return needy + green

@@ -721,6 +721,56 @@ def test_corr_cov_units_form_matches_decimal_twin(spark, sf_dir, tmp_path):
     assert len(rows) == len(reg_syn) == 4  # 3 stock flags + Z
 
 
+def test_corr_cov_dispatches_decimal_twin_past_row_bound(spark, sf_dir, monkeypatch):
+    """agg_corr_cov picks its form from the lineitem footer count: the
+    long-unit form below ``_CORR_COV_UNITS_MAX_ROWS``, the decimal twin
+    at or past it and when the count is unknown. Forcing the bound to
+    0 dispatches the twin, whose values equal the long-unit result on
+    sf0.01. The default dispatch is the long-unit form, so the pin
+    above compares two different plans."""
+    from atd_dockless_processing_spark.operators import pipeline_r4
+
+    sf01 = str(Path(sf_dir).with_name("sf0.01"))
+
+    def is_units(df) -> bool:
+        return "4294967296" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    units = QUERIES["agg_corr_cov"](spark, sf01)
+    assert is_units(units)
+    monkeypatch.setattr(pipeline_r4, "_CORR_COV_UNITS_MAX_ROWS", 0)
+    wide = QUERIES["agg_corr_cov"](spark, sf01)
+    assert not is_units(wide)
+    got = sorted(map(tuple, wide.collect()))
+    assert got == sorted(map(tuple, units.collect())) and len(got) == 3
+    monkeypatch.undo()
+    monkeypatch.setattr(pipeline_r4, "parquet_nrows", lambda sf, name: None)
+    assert not is_units(QUERIES["agg_corr_cov"](spark, sf01))
+
+
+def test_ab_runner_checks_corr_cov_twin(sf_dir):
+    """scripts/ab.py smoke: each form in its own process, one JSON line
+    per form, and --check reports the registered agg_corr_cov and its
+    decimal twin value-identical."""
+    import json
+    import subprocess
+
+    repo = Path(__file__).resolve().parent.parent
+    r = subprocess.run(
+        [sys.executable, "scripts/ab.py", "--sf", sf_dir, "--runs", "1",
+         "--check", "agg_corr_cov",
+         "atd_dockless_processing_spark.operators.pipeline_r4:_corr_cov_decimal_twin"],
+        capture_output=True, text=True, cwd=str(repo), timeout=600,
+    )
+    assert r.returncode == 0, (r.stdout[-2000:], r.stderr[-2000:])
+    recs = [json.loads(line) for line in r.stdout.splitlines() if line.startswith("{")]
+    assert [rec.get("form") for rec in recs[:2]] == [
+        "agg_corr_cov",
+        "atd_dockless_processing_spark.operators.pipeline_r4:_corr_cov_decimal_twin",
+    ]
+    assert all(rec["rows"] == 3 and rec["median_s"] > 0 for rec in recs[:2])
+    assert recs[2]["identical"] is True
+
+
 def test_repetition_sorted_form_matches_quadratic_twin(spark, sf_dir, tmp_path):
     """txt_repetition_filter r14 rewrite pin: the registered form
     derives max 2-gram multiplicity and distinct count from ONE
