@@ -14,9 +14,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..registry import query
-from ..tables import load
+from ..tables import load, stage_scratch
+from .json_fast import with_json_field
 
 
 @query(
@@ -561,4 +563,674 @@ def fn_date_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.lit(1998) - F.year("o_orderdate")) * 12
             + (F.lit(6) - F.month("o_orderdate"))
         ).cast("int").alias("months_to_cutoff"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# URL parsing
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "fn_url_parse",
+    oracle="""
+    WITH u AS (
+      SELECT 'https://srv' || CAST(o_orderkey % 7 AS VARCHAR)
+             || '.example.com/' || lower(o_orderstatus)
+             || '/item?id=' || CAST(o_orderkey AS VARCHAR)
+             || '&pri=' || substr(o_orderpriority, 1, 1) AS url,
+             o_orderkey
+      FROM orders
+    )
+    SELECT regexp_extract(url, '^https://([^/]+)/', 1) AS host,
+           regexp_extract(url, '^https://[^/]+/([^/?]+)', 1) AS path_seg,
+           CAST(COUNT(*) AS BIGINT) AS n_urls,
+           CAST(COUNT(DISTINCT regexp_extract(url, 'pri=(.)', 1)) AS BIGINT)
+             AS n_priorities,
+           CAST(SUM(CAST(regexp_extract(url, 'id=([0-9]+)', 1) AS BIGINT)
+               - o_orderkey) AS BIGINT) AS id_check
+    FROM u
+    GROUP BY 1, 2
+    """,
+)
+def fn_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL synthesis + structured re-parse: build canonical URLs from
+    order fields, then recover host / first path segment / query
+    params with regexp_extract — the web-corpus URL normalization
+    step (host bucketing, path dedup, param stripping) of a crawl
+    pipeline. `id_check` must be 0 for every group: the query-param
+    round-trip is exact.
+
+    Pure codegen projection + one agg shuffle. Spark's parse_url()
+    would be the production call; regex is used so the DuckDB oracle
+    runs the byte-identical parse."""
+    o = load(spark, sf_dir, "orders")
+    url = F.concat(
+        F.lit("https://srv"),
+        (F.col("o_orderkey") % 7).cast("string"),
+        F.lit(".example.com/"),
+        F.lower("o_orderstatus"),
+        F.lit("/item?id="),
+        F.col("o_orderkey").cast("string"),
+        F.lit("&pri="),
+        F.substring("o_orderpriority", 1, 1),
+    )
+    u = o.select(url.alias("url"), "o_orderkey")
+    return (
+        u.select(
+            F.regexp_extract("url", "^https://([^/]+)/", 1).alias("host"),
+            F.regexp_extract("url", "^https://[^/]+/([^/?]+)", 1).alias("path_seg"),
+            F.regexp_extract("url", "pri=(.)", 1).alias("pri"),
+            (
+                F.regexp_extract("url", "id=([0-9]+)", 1).cast("long")
+                - F.col("o_orderkey")
+            ).alias("id_diff"),
+        )
+        .groupBy("host", "path_seg")
+        .agg(
+            F.count(F.lit(1)).alias("n_urls"),
+            F.countDistinct("pri").alias("n_priorities"),
+            F.sum("id_diff").alias("id_check"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# fn_geojson_route — nested FeatureCollection parsing
+# ---------------------------------------------------------------------------
+
+# The MDS trips `route` payload: a GeoJSON FeatureCollection whose
+# features are Points with per-feature properties. Parsed with an
+# explicit nested schema so Catalyst prunes unreferenced fields out
+# of the JSON parser itself (JacksonParser only materializes the
+# requested paths).
+_ROUTE_SCHEMA = T.StructType(
+    [
+        T.StructField("type", T.StringType()),
+        T.StructField(
+            "features",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("type", T.StringType()),
+                        T.StructField(
+                            "properties",
+                            T.StructType(
+                                [
+                                    T.StructField("seq", T.IntegerType()),
+                                    T.StructField("t_us", T.LongType()),
+                                ]
+                            ),
+                        ),
+                        T.StructField(
+                            "geometry",
+                            T.StructType(
+                                [
+                                    T.StructField("type", T.StringType()),
+                                    T.StructField(
+                                        "coordinates", T.ArrayType(T.DoubleType())
+                                    ),
+                                ]
+                            ),
+                        ),
+                    ]
+                )
+            ),
+        ),
+    ]
+)
+
+
+def _stage_routes(spark: SparkSession, sf_dir: str) -> str:
+    """Stage a (trip_id, route_json) parquet: one GeoJSON
+    FeatureCollection string per user, points = that user's events in
+    (ts, event_id) order, x = value, y = props.k — the same synthetic
+    coordinate space as the geo operators (testdata has no lat/lon).
+
+    Materializing to parquet (freshness-markered via stage_scratch)
+    guarantees the query genuinely PARSES strings at runtime — an
+    in-plan to_json∘from_json pair would be simplified away by
+    Catalyst's OptimizeJsonExprs rule and prove nothing.
+    """
+
+    def build(indir: str) -> None:
+        ev = with_json_field(
+            load(spark, sf_dir, "events"), "y", "props", "k", "double"
+        ).select(
+            F.col("user_id").alias("trip_id"),
+            F.struct(
+                F.col("ts"), F.col("event_id"), F.col("value").alias("x"), F.col("y")
+            ).alias("pt"),
+        )
+        # one shuffle: collect each trip's points, sort in-memory (struct
+        # ordering = (ts, event_id) lexicographic), then emit the nested
+        # FeatureCollection via to_json — all JVM-side expressions.
+        (
+            ev.groupBy("trip_id")
+            .agg(F.array_sort(F.collect_list("pt")).alias("pts"))
+            .select(
+                "trip_id",
+                F.to_json(
+                    F.struct(
+                        F.lit("FeatureCollection").alias("type"),
+                        F.transform(
+                            "pts",
+                            lambda p, i: F.struct(
+                                F.lit("Feature").alias("type"),
+                                F.struct(
+                                    i.cast("int").alias("seq"),
+                                    F.unix_micros(p["ts"]).alias("t_us"),
+                                ).alias("properties"),
+                                F.struct(
+                                    F.lit("Point").alias("type"),
+                                    F.array(p["x"], p["y"]).alias("coordinates"),
+                                ).alias("geometry"),
+                            ),
+                        ).alias("features"),
+                    )
+                ).alias("route_json"),
+            )
+            .write.mode("overwrite")
+            .parquet(indir)
+        )
+
+    return stage_scratch("fn_geojson_route", sf_dir, "events", build)
+
+
+@query(
+    "fn_geojson_route",
+    oracle="""
+    SELECT user_id AS trip_id,
+           CAST(COUNT(*) AS BIGINT) AS n_points,
+           FIRST(value ORDER BY ts, event_id) AS first_x,
+           ROUND(SUM(value), 4) AS sum_x,
+           MAX(CAST(json_extract_string(props, '$.k') AS DOUBLE)) AS max_y
+    FROM events
+    GROUP BY user_id
+    """,
+)
+def fn_geojson_route(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nested-GeoJSON route parsing: the reference ingests MDS trip
+    payloads whose ``route`` field is a GeoJSON FeatureCollection
+    (array of Point features with per-feature properties) and flattens
+    it for publication ([P high], SURVEY §3.1 step 1; round-3 verdict
+    missing-list item 2). Staged input: one FeatureCollection string
+    per trip built from events (see :func:`_stage_routes`); the query
+    then does the real ingest work — ``from_json`` with an explicit
+    nested schema, ``posexplode`` of the feature array, coordinate
+    extraction — and reduces per trip. Zero Python UDFs: JacksonParser
+    runs JVM-side and Catalyst prunes unread JSON paths.
+
+    The oracle recomputes the same aggregates DIRECTLY from the events
+    base table (different algorithm, no JSON), so the check proves the
+    build→write→parse→flatten path is lossless end-to-end. first_x
+    pins per-point ORDER (feature 0 must be the (ts, event_id)-first
+    event); doubles round-trip exactly through Jackson's shortest-repr
+    serialization, so only the summation-order-sensitive sum_x needs
+    the round-4 gate.
+
+    At 100 TB this is the scale-correct shape for route ingest: the
+    staged table is partitioned on trip_id, parsing is map-side, and
+    the per-trip reduce is a combinable single-exchange agg."""
+    routes = spark.read.parquet(_stage_routes(spark, sf_dir))
+    pts = routes.select(
+        "trip_id",
+        F.posexplode(
+            F.from_json("route_json", _ROUTE_SCHEMA)["features"]
+        ).alias("pos", "feat"),
+    ).select(
+        "trip_id",
+        "pos",
+        F.col("feat")["geometry"]["coordinates"][0].alias("x"),
+        F.col("feat")["geometry"]["coordinates"][1].alias("y"),
+    )
+    return pts.groupBy("trip_id").agg(
+        F.count(F.lit(1)).alias("n_points"),
+        F.max(F.when(F.col("pos") == 0, F.col("x"))).alias("first_x"),
+        F.round(F.sum("x"), 4).alias("sum_x"),
+        F.max("y").alias("max_y"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# fn_variant_json — Spark 4 VARIANT semi-structured type
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "fn_variant_json",
+    oracle="""
+    SELECT CAST(CAST(json_extract_string(props, '$.k') AS INTEGER) % 10
+                AS INTEGER) AS k_bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(SUM(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS BIGINT)
+             AS sum_k,
+           CAST(COUNT(*) FILTER (WHERE json_extract(props, '$.missing') IS NULL)
+                AS BIGINT) AS n_missing
+    FROM events
+    GROUP BY 1
+    """,
+)
+def fn_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured ingestion through Spark 4's VARIANT type:
+    ``parse_json`` decodes the props JSON ONCE into the binary
+    variant encoding, then typed paths come out with ``variant_get``
+    (and ``try_variant_get`` for absent paths, which yields NULL
+    instead of erroring) — the modern engine answer to repeated
+    ``get_json_object`` string re-parsing: at 100 TB the parse
+    happens once per row at ingest and every later extraction is a
+    cheap binary traversal, with shredding/pushdown landing in the
+    parquet variant spec. The oracle does the same typed extraction
+    via DuckDB's JSON functions, proving the variant path
+    value-identical to a classic JSON-string pipeline.
+
+    Plan (r11 single-parse fix): inlining `parse_json(props)` in both
+    variant_get expressions encodes every document TWICE (no-CSE
+    hazard — the optimized plan showed `parseJson ×2`). The variant
+    value is staged in its own projection tier, and CollapseProject
+    declines to re-inline it (a static_invoke is not a cheap
+    expression), so the parse runs once and both path extractions
+    traverse the staged binary. ×100 A/B: 1.775 s → 1.695 s (2.42× →
+    2.31× vs DuckDB 0.733 s, same session) — the parse was never the
+    dominant cost (the variant binary encode is fast); the remaining
+    gap is the declared surface, stamped CLOSED-AS-DEFINITIONAL-
+    SURFACE in SCALE.md."""
+    ev = load(spark, sf_dir, "events")
+    staged = ev.select(F.parse_json("props").alias("v"))
+    return staged.select(
+        F.try_variant_get(F.col("v"), "$.k", "int").alias("k"),
+        F.try_variant_get(F.col("v"), "$.missing", "int").alias("m"),
+    ).groupBy((F.col("k") % 10).alias("k_bucket")).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("k").alias("sum_k"),
+        F.sum(F.when(F.col("m").isNull(), 1).otherwise(0)).alias("n_missing"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# fn_ip_cidr — IPv4 derivation, octet split, RFC-1918/CIDR classification
+# ---------------------------------------------------------------------------
+
+_IP_SQL = """
+      SELECT (user_id * 2654435761) % 4294967296 AS ip
+      FROM events
+"""
+
+
+@query(
+    "fn_ip_cidr",
+    oracle=f"""
+    WITH ips AS ({_IP_SQL}),
+    o AS (
+      SELECT ip,
+             ip // 16777216 AS o1,
+             (ip // 65536) % 256 AS o2,
+             (ip // 256) % 256 AS o3,
+             ip % 256 AS o4
+      FROM ips
+    ), c AS (
+      SELECT ip,
+             CAST(o1 AS VARCHAR) || '.' || CAST(o2 AS VARCHAR) || '.'
+               || CAST(o3 AS VARCHAR) || '.' || CAST(o4 AS VARCHAR) AS ip_str,
+             CASE WHEN o1 = 10 THEN 'rfc1918-10/8'
+                  WHEN o1 = 172 AND o2 BETWEEN 16 AND 31 THEN 'rfc1918-172.16/12'
+                  WHEN o1 = 192 AND o2 = 168 THEN 'rfc1918-192.168/16'
+                  WHEN o1 = 127 THEN 'loopback/8'
+                  ELSE 'public' END AS net_class
+      FROM o
+    )
+    SELECT net_class,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           CAST(COUNT(DISTINCT ip) AS BIGINT) AS n_ips,
+           MIN(ip_str) AS min_ip,
+           MAX(ip_str) AS max_ip
+    FROM c GROUP BY net_class
+    """,
+)
+def fn_ip_cidr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IPv4 parse + CIDR classification — the network-enrichment
+    scalar family ([P med]: provider feeds carry client IPs; the
+    first pipeline pass splits octets and buckets RFC-1918/loopback
+    vs public before any geo/abuse joins). The IP is derived from
+    user_id by a Knuth multiplicative hash mod 2^32 (closed form
+    shared with the oracle) so the classification logic — integer
+    octet splits, dotted-quad assembly, prefix CASE — is exercised
+    on real spread without external fixtures.
+
+    Exactness: pure integer div/mod on positives (hazard rule 10)
+    and VARCHAR min/max under binary collation on both engines.
+    Plan shape: codegen scalars + ONE combinable agg; the distinct-ip
+    count is Spark's standard 2-phase distinct expansion riding the
+    same exchange. At 100 TB this is a map-heavy scan with a
+    few-row output — nothing to optimize."""
+    ip = F.col("ip")
+    o = load(spark, sf_dir, "events").select(
+        ((F.col("user_id") * 2654435761) % 4294967296).alias("ip")
+    )
+    c = o.select(
+        "ip",
+        F.concat_ws(
+            ".",
+            (ip / 16777216).cast("long"),
+            ((ip / 65536).cast("long") % 256),
+            ((ip / 256).cast("long") % 256),
+            ip % 256,
+        ).alias("ip_str"),
+        F.when(F.expr("ip div 16777216") == 10, "rfc1918-10/8")
+        .when(
+            (F.expr("ip div 16777216") == 172)
+            & F.expr("(ip div 65536) % 256").between(16, 31),
+            "rfc1918-172.16/12",
+        )
+        .when(
+            (F.expr("ip div 16777216") == 192)
+            & (F.expr("(ip div 65536) % 256") == 168),
+            "rfc1918-192.168/16",
+        )
+        .when(F.expr("ip div 16777216") == 127, "loopback/8")
+        .otherwise("public")
+        .alias("net_class"),
+    )
+    return c.groupBy("net_class").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.countDistinct("ip").alias("n_ips"),
+        F.min("ip_str").alias("min_ip"),
+        F.max("ip_str").alias("max_ip"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# fn_base64_roundtrip — base64 transport encode/decode
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "fn_base64_roundtrip",
+    oracle="""
+    WITH b AS (
+      SELECT lang, text, to_base64(encode(text)) AS b64 FROM documents
+    )
+    SELECT lang,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(length(b64)) AS BIGINT) AS sum_b64_len,
+           CAST(SUM(CASE WHEN decode(from_base64(b64)) = text
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_roundtrip_ok,
+           MIN(substr(b64, 1, 8)) AS min_prefix
+    FROM b GROUP BY lang
+    """,
+)
+def fn_base64_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Base64 transport round-trip — the wire-encoding scalar family
+    member ([P med]: provider APIs ship payloads base64-wrapped;
+    binary columns cross JSON boundaries the same way). Per lang:
+    docs, RFC-4648 encoded length (no line wrapping on either
+    engine), round-trip-exact count (decode(encode(x)) == x must
+    hold for EVERY row), and the binary-collation min of the first 8
+    encoded chars (pins the actual alphabet, not just lengths).
+
+    Plan shape: pure codegen scalars + ONE combinable agg —
+    scan-bound at 100 TB. The encoded length also cross-checks the
+    closed form 4*ceil(n/3) against the engine's real output via
+    the oracle's independent implementation.
+
+    Engine note (measured here): Spark's `base64` is the RFC-2045
+    MIME encoder — it wraps at 76 chars with CRLF — while DuckDB's
+    to_base64 is unwrapped RFC 4648. The declared semantics is the
+    TRANSPORT-NORMALIZED (unwrapped) form, so the engine strips the
+    soft line breaks; `unbase64` accepts both."""
+    b = load(spark, sf_dir, "documents").select(
+        "lang",
+        "text",
+        # CRLF strip A/B at x100 (BASELINE.md): replace() 0.54 s <
+        # regexp_replace 0.78 s < translate 1.22 s — single-pass
+        # literal replace wins; the pairs only ever occur together.
+        F.expr(r"replace(base64(cast(text as binary)), '\r\n', '')").alias("b64"),
+    )
+    return b.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.length("b64")).alias("sum_b64_len"),
+        F.sum(
+            F.when(F.unbase64("b64").cast("string") == F.col("text"), 1).otherwise(0)
+        ).alias("n_roundtrip_ok"),
+        F.min(F.substring("b64", 1, 8)).alias("min_prefix"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# fn_collation_group — UTF8_LCASE collation-aware grouping (Spark 4.0)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "fn_collation_group",
+    oracle="""
+    SELECT lower(CASE WHEN doc_id % 2 = 0 THEN upper(lang) ELSE lang END)
+             AS lang_ci,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_chars) AS BIGINT) AS total_chars
+    FROM documents
+    GROUP BY 1
+    """,
+)
+def fn_collation_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """COLLATION-AWARE grouping (Spark 4.0 collations): group keys
+    compared under UTF8_LCASE so case variants of a language tag
+    land in one group — the engine-level answer to the
+    `GROUP BY lower(x)` rewrite (which is exactly how the DuckDB
+    oracle expresses it; DuckDB's NOCASE collation exists but the
+    lower() form is the portable spelling). A deterministic CASE
+    derivation (upper() on even doc_ids) manufactures the mixed-case
+    input from the all-lowercase corpus so the collation has real
+    work to do.
+
+    Two cross-engine hazards pinned: (1) the group REPRESENTATIVE
+    under a collation is first-seen (partitioning-dependent), so the
+    projected key is lower(k) — identical for every member by
+    construction — never the raw representative; (2) the collated
+    STRING TYPE must not leak into the result schema (it would
+    diff against the oracle's plain VARCHAR), hence the final CAST
+    back to binary-collation STRING. Collation comparison runs in
+    the JVM's collation-aware hash (ICU UTF8_LCASE) — same exchange
+    count as any single-key hash aggregate."""
+    d = load(spark, sf_dir, "documents").select(
+        F.when(F.col("doc_id") % 2 == 0, F.upper("lang"))
+        .otherwise(F.col("lang"))
+        .alias("k"),
+        "n_chars",
+    )
+    grouped = d.groupBy(F.expr("k COLLATE UTF8_LCASE").alias("k")).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").alias("total_chars"),
+    )
+    return grouped.select(
+        F.expr("CAST(lower(k) AS STRING COLLATE UTF8_BINARY)").alias("lang_ci"),
+        "n_docs",
+        "total_chars",
+    )
+
+
+# ---------------------------------------------------------------------------
+# fn_aes_roundtrip — column-level AES encryption (PII at rest)
+# ---------------------------------------------------------------------------
+
+_AES_KEY = "0123456789abcdef"  # 16-byte AES-128 demo key (fixed: determinism)
+
+
+@query(
+    "fn_aes_roundtrip",
+    oracle="""
+    SELECT c_mktsegment,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(COUNT(*) AS BIGINT) AS n_rt_exact,
+           CAST(COUNT(DISTINCT c_name) AS BIGINT) AS n_distinct_cipher,
+           CAST(SUM(LENGTH(c_name)) AS BIGINT) AS sum_name_len,
+           MIN(c_name) AS min_name,
+           MAX(c_name) AS max_name
+    FROM customer
+    GROUP BY c_mktsegment
+    """,
+)
+def fn_aes_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Column-level AES encryption round-trip over customer PII
+    (``aes_encrypt``/``aes_decrypt``, AES-128 ECB — the DETERMINISTIC
+    mode, chosen so ciphertexts are stable across runs and the
+    distinct-count check below is meaningful; production randomized
+    encryption uses GCM, same plan shape). Every aggregate is
+    computed from the DECRYPTED column, so the oracle (plaintext
+    arithmetic in DuckDB, which has no AES) hash-checks the full
+    encrypt→decrypt identity per row:
+
+    - ``n_rt_exact`` counts rows whose round-trip equals the
+      original — the oracle says COUNT(*), so ONE broken row flips
+      the hash;
+    - ``n_distinct_cipher`` counts distinct CIPHERTEXTS — equal to
+      distinct plaintexts iff deterministic encryption is injective
+      on this corpus (padding/key-reuse bugs collide or split it);
+    - min/max/length aggregates pin exact decrypted content.
+
+    Plan: one scan, per-row JVM crypto expressions (codegen'd Spark
+    built-ins, no Python), one distinct-expand + final agg exchange —
+    the agg_distinct_count family."""
+    key = F.lit(_AES_KEY)
+    c = load(spark, sf_dir, "customer").select("c_mktsegment", "c_name")
+    enc = c.select(
+        "c_mktsegment",
+        "c_name",
+        F.aes_encrypt(F.col("c_name").cast("binary"), key, F.lit("ECB")).alias(
+            "cipher"
+        ),
+    )
+    dec = enc.select(
+        "c_mktsegment",
+        "c_name",
+        "cipher",
+        F.aes_decrypt(F.col("cipher"), key, F.lit("ECB")).cast("string").alias("rt"),
+    )
+    return dec.groupBy("c_mktsegment").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count_if(F.col("rt") == F.col("c_name")).alias("n_rt_exact"),
+        F.countDistinct("cipher").alias("n_distinct_cipher"),
+        F.sum(F.length("rt")).alias("sum_name_len"),
+        F.min("rt").alias("min_name"),
+        F.max("rt").alias("max_name"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# fn_luhn_check — Luhn validation (Spark 3.5 built-in vs SQL reimplementation)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "fn_luhn_check",
+    oracle="""
+    WITH t AS (
+      SELECT o_orderstatus,
+             lpad(CAST(o_orderkey AS VARCHAR), 16, '0') AS card
+      FROM orders
+    ), d AS (
+      SELECT o_orderstatus,
+             list_sum(list_transform(
+               list_reverse(list_transform(string_split(card, ''), c -> CAST(c AS INT))),
+               (x, i) -> CASE WHEN i % 2 = 0
+                              THEN (2 * x // 10) + ((2 * x) % 10)
+                              ELSE x END)) % 10 = 0 AS ok
+      FROM t
+    )
+    SELECT o_orderstatus,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(COUNT(*) FILTER (WHERE ok) AS BIGINT) AS n_valid
+    FROM d
+    GROUP BY o_orderstatus
+    """,
+)
+def fn_luhn_check(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Luhn checksum validation (``luhn_check``, Spark 3.5 — the
+    card-number/IMEI data-quality gate) over 16-digit strings
+    synthesized deterministically from o_orderkey. Spark runs the
+    BUILT-IN; the oracle REIMPLEMENTS the algorithm from its
+    definition in DuckDB SQL (reverse digits, double every second,
+    casting-out-nines, sum % 10) — so the key pins the built-in
+    against an independent first-principles implementation, per
+    status group. Plan: per-row JVM check inside the scan stage, one
+    combinable agg exchange."""
+    o = load(spark, sf_dir, "orders").select(
+        "o_orderstatus",
+        F.lpad(F.col("o_orderkey").cast("string"), 16, "0").alias("card"),
+    )
+    return (
+        o.select("o_orderstatus", F.expr("luhn_check(card)").alias("ok"))
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count_if(F.col("ok")).alias("n_valid"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# bitwise expression surface
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "fn_bitwise",
+    oracle="""
+    SELECT event_type,
+           CAST(SUM(bit_count(event_id)) AS BIGINT) AS sum_popcount,
+           CAST(SUM(event_id & 255) AS BIGINT) AS sum_low_byte,
+           CAST(SUM(xor(event_id, 90) & 1023) AS BIGINT) AS sum_xor_mask,
+           CAST(SUM((event_id & 15) << 2) AS BIGINT) AS sum_shifted,
+           CAST(SUM(event_id | 4096) AS BIGINT) AS sum_or_flag
+    FROM events
+    GROUP BY event_type
+    """,
+)
+def fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bitwise expression surface (AND/OR/XOR/shift/popcount) over
+    event ids — the bit-flag decode path of compact encodings. All
+    JVM-side integer ops inside one codegen stage; one combinable agg
+    shuffle."""
+    ev = load(spark, sf_dir, "events")
+    return ev.groupBy("event_type").agg(
+        F.sum(F.bit_count("event_id")).alias("sum_popcount"),
+        F.sum(F.expr("event_id & 255")).alias("sum_low_byte"),
+        F.sum(F.expr("(event_id ^ 90) & 1023")).alias("sum_xor_mask"),
+        F.sum(F.expr("shiftleft(event_id & 15, 2)")).alias("sum_shifted"),
+        F.sum(F.expr("event_id | 4096")).alias("sum_or_flag"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# error-safe arithmetic (TRY_ semantics)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "fn_try_arith",
+    oracle="""
+    SELECT event_type,
+           CAST(COUNT(*) FILTER (value / NULLIF(event_id % 3, 0) IS NULL)
+                AS BIGINT) AS n_null_div,
+           ROUND(SUM(value / NULLIF(event_id % 3, 0)), 4) AS sum_safe_div,
+           CAST(SUM(event_id + user_id) AS BIGINT) AS sum_try_add,
+           CAST(COUNT(TRY_CAST(event_type AS DOUBLE)) AS BIGINT) AS n_castable
+    FROM events
+    GROUP BY event_type
+    """,
+)
+def fn_try_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Error-safe arithmetic: try_divide (NULL on zero divisor, not an
+    exception — ANSI-mode-safe), try_add (NULL on bigint overflow;
+    equals plain + here, asserting the no-overflow path), try_cast
+    (NULL on malformed input). The malformed-row-tolerant ingest
+    posture ([P high]: provider feeds contain malformed records that
+    must not kill the job)."""
+    ev = load(spark, sf_dir, "events")
+    safe_div = F.try_divide(F.col("value"), F.expr("event_id % 3"))
+    return ev.groupBy("event_type").agg(
+        F.count_if(safe_div.isNull()).alias("n_null_div"),
+        F.round(F.sum(safe_div), 4).alias("sum_safe_div"),
+        F.sum(F.try_add(F.col("event_id"), F.col("user_id"))).alias("sum_try_add"),
+        F.count(F.expr("try_cast(event_type AS DOUBLE)")).alias("n_castable"),
     )

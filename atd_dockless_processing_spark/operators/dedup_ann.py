@@ -1,7 +1,10 @@
 """Near-duplicate detection + approximate-nearest-neighbor search —
 the training-data-pipeline extensions beyond MinHash (which lives in
 ``llm.py``): SimHash, character-n-gram Jaccard, embedding-cosine
-near-dup, and IVF-bucketed ANN.
+near-dup, IVF-bucketed and random-hyperplane ANN, and the keys built
+on near-dup pairs (connected-component clusters, keep list, URL
+canonicalization, cluster-blocked semantic dedup). The array-vector
+helpers ``_dot``/``_norm``/``_as_double`` are defined here once.
 
 Scale design (the 100 TB story for each):
 - SimHash: per-doc 32-bit signature is a pure map (one pass, no
@@ -20,6 +23,8 @@ Scale design (the 100 TB story for each):
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -247,7 +252,7 @@ def llm_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     r9: the hybrid candidate plan is extracted as
     ``ngram_candidate_pairs`` and SHARED with the downstream cluster
     resolution keys (``llm_dedup_clusters``/``llm_dedup_keep_list``
-    via ``pipeline_ext._ngram_pairs``), which previously ran the
+    via ``_ngram_pairs``), which previously ran the
     brute-force self-join at every block size."""
     d, pairs = ngram_candidate_pairs(spark, sf_dir, _NGRAM_T)
     return ngram_verified_pairs(d, pairs, _NGRAM_T).select(
@@ -432,6 +437,16 @@ _EMB_DIM = 64  # fixed by the data model (FIXTURES.md; oracle uses range(1,65))
 
 
 def _dot(a, b):
+    """Dot product via zip_with + aggregate HOFs — measured the best
+    JVM-side strategy (BASELINE.md round-5 A/B at x1 and x100):
+    an unrolled 64-term scalar chain generates one huge codegen
+    method the JIT refuses to compile (2x SLOWER than the HOF at
+    x100), and an Arrow-vectorized numpy pandas_udf wins only at
+    x100 scale (0.41 s vs 0.61 s) while losing 2x at bench scale.
+    Brute-force scoring is the declared BASELINE op anyway — at
+    100 TB similarity search runs the IVF/LSH keys (llm_ann_ivf,
+    llm_ann_hyperplane), where this dot evaluates only the pruned
+    candidate set."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
 
 
@@ -1073,5 +1088,679 @@ def llm_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
             F.round(F.avg("d2"), 4).alias("avg_sq_dist"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Dedup-cluster resolution: connected components over near-dup pairs
+# ---------------------------------------------------------------------------
+
+_CLUSTER_T = 0.70  # lower than the pair op's 0.8: clusters, not merges
+
+_PAIR_SQL = f"""
+    WITH RECURSIVE d AS (
+      SELECT doc_id, lang,
+             list_distinct(list_transform(
+               generate_series(1, greatest(length(text) - {_NGRAM_N - 1}, 1)),
+               i -> substr(text, CAST(i AS INTEGER), {_NGRAM_N}))) AS grams
+      FROM documents
+    ),
+    pairs AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM d a JOIN d b ON a.lang = b.lang AND a.doc_id < b.doc_id
+      WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+            / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
+            >= {_CLUSTER_T}
+    )
+"""
+
+
+def _ngram_pairs(
+    spark: SparkSession, sf_dir: str, threshold: float,
+    rows_per_band: int | None = None,
+) -> DataFrame:
+    """Char-3-gram Jaccard >= threshold near-dup pairs, lang-blocked.
+
+    r9: candidates now come from the SHARED hybrid plan
+    (``dedup_ann.ngram_candidate_pairs`` — small blocks brute-force,
+    large blocks MinHash banding with canonical-band emission; the
+    registered band shape is the production 8x2 since r13, see the
+    shared plan's docstring).
+    Through r8 this ran the brute-force slim self-join at EVERY block
+    size, which is quadratic per lang block — fine on the sweep
+    corpora, a scale-killer at 100k-doc blocks (the r9 low-density
+    rehearsal measures both forms; equality pinned in
+    tests/test_engine_units.py). Gram arrays re-attach by an unhinted
+    doc_id join — auto-broadcast at test SF, shuffle at scale."""
+
+    d, pairs = ngram_candidate_pairs(
+        spark, sf_dir, threshold,
+        rows_per_band=_NGRAM_MH_R if rows_per_band is None else rows_per_band,
+    )
+    return ngram_verified_pairs(d, pairs, threshold).select("doc_a", "doc_b")
+
+
+def min_label_components(pairs: DataFrame) -> DataFrame:
+    """Connected components over an undirected (doc_a, doc_b) pair
+    frame via iterative min-label propagation; returns (node, label)
+    with label = min doc_id in the component. ``localCheckpoint`` per
+    superstep cuts lineage; the only driver-side work is one bounded
+    convergence count per iteration (the canonical iterative-graph
+    shape — at 100 TB swap in large-star/small-star, SoCC'14, same
+    join+agg primitive, O(log n) supersteps)."""
+    edges = pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t")).unionByName(
+        pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("t"))
+    )
+    edges = edges.localCheckpoint(eager=True)  # pairs computed once, not per superstep
+    labels = (
+        edges.select(F.col("s").alias("node")).distinct().withColumn("label", F.col("node"))
+    ).localCheckpoint(eager=True)
+    for _ in range(32):  # >= diameter of any plausible dup cluster
+        msgs = edges.join(labels, edges["s"] == labels["node"]).select(
+            F.col("t").alias("node"), "label"
+        )
+        new_labels = (
+            labels.unionByName(msgs)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=True)  # cut lineage per superstep
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "node")
+            .where(F.col("n.label") != F.col("o.label"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            break
+    return labels
+
+
+@query(
+    "llm_dedup_clusters",
+    oracle=_PAIR_SQL
+    + """,
+    edges AS (
+      SELECT doc_a AS s, doc_b AS t FROM pairs
+      UNION ALL
+      SELECT doc_b, doc_a FROM pairs
+    ),
+    reach(n, r) AS (
+      SELECT s, s FROM edges
+      UNION
+      SELECT e.t, reach.r FROM reach JOIN edges e ON e.s = reach.n
+    ),
+    comp AS (SELECT n AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY n)
+    SELECT cluster_id,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           array_to_string(list_sort(list(doc_id)), ',') AS member_ids
+    FROM comp GROUP BY cluster_id
+    """,
+)
+def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Dedup-cluster resolution: connected components over the
+    near-dup pair graph (char-3-gram Jaccard >= 0.7, lang-blocked) via
+    iterative min-label propagation; cluster id = min doc_id in the
+    component. This is the step after any pairwise near-dup op — a
+    training-data pipeline keeps one doc per CLUSTER, not per pair
+    (A~B, B~C must collapse A,B,C together even when A!~C).
+
+    Oracle is DuckDB's recursive-CTE transitive closure — a genuinely
+    different algorithm computing the same fixpoint."""
+    pairs = _ngram_pairs(spark, sf_dir, _CLUSTER_T)
+    labels = min_label_components(pairs)
+    # member_ids serialized with array_join (mirrored by the oracle's
+    # array_to_string): pandas-based comparison harnesses cannot hash
+    # array cells (numpy arrays are unhashable)
+    return labels.groupBy("label").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.array_join(F.sort_array(F.collect_list("node")), ",").alias("member_ids"),
+    ).select(F.col("label").alias("cluster_id"), "n_docs", "member_ids")
+
+
+# ---------------------------------------------------------------------------
+# Random-hyperplane LSH ANN (sign-of-dot-product signatures)
+# ---------------------------------------------------------------------------
+
+_N_PLANES = 16
+_HAM_T = 4  # candidate gate: signature hamming distance <= 4 of 16
+_N_QUERIES = 5
+
+
+def _rademacher(i: int, j: int) -> float:
+    """Deterministic ±1 hyperplane entry from md5 — no RNG anywhere,
+    so Spark and the oracle share the exact same planes as literals."""
+    h = hashlib.md5(f"hp_{i}_{j}".encode()).hexdigest()
+    return 1.0 if int(h[0], 16) % 2 == 0 else -1.0
+
+
+_PLANES = [[_rademacher(i, j) for j in range(_EMB_DIM)] for i in range(_N_PLANES)]
+
+
+def _sig_expr():
+    """16-bit signature column: bit i = (v . plane_i >= 0)."""
+    sig = F.lit(0).cast("long")
+    for i, plane in enumerate(_PLANES):
+        lit_arr = F.array(*[F.lit(v) for v in plane])
+        sig = sig + F.when(_dot(F.col("ve"), lit_arr) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
+    return sig
+
+
+def _sig_sql() -> str:
+    terms = []
+    for i, plane in enumerate(_PLANES):
+        arr = "[" + ", ".join(str(v) for v in plane) + "]"
+        terms.append(
+            f"(CASE WHEN list_dot_product(ve, {arr}) >= 0 THEN {1 << i} ELSE 0 END)"
+        )
+    return "(" + " + ".join(terms) + ")"
+
+
+@query(
+    "llm_ann_hyperplane",
+    oracle=f"""
+    WITH v AS (
+      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
+      FROM embeddings
+    ),
+    s AS (SELECT vec_id, ve, {_sig_sql()} AS sig FROM v),
+    q AS (
+      SELECT vec_id AS query_id, ve AS qv, sig AS qsig
+      FROM s WHERE vec_id < {_N_QUERIES}
+    ),
+    cand AS (
+      SELECT query_id, s.vec_id AS neighbor_id,
+             ROUND(list_dot_product(s.ve, qv)
+                   / (sqrt(list_dot_product(s.ve, s.ve)) * sqrt(list_dot_product(qv, qv))),
+                   4) AS cos_sim
+      FROM s JOIN q
+        ON s.vec_id <> q.query_id
+       AND bit_count(xor(s.sig, q.qsig)) <= {_HAM_T}
+    ),
+    ranked AS (
+      SELECT query_id, neighbor_id, cos_sim,
+             ROW_NUMBER() OVER (PARTITION BY query_id
+                                ORDER BY cos_sim DESC, neighbor_id) AS rnk
+      FROM cand
+    )
+    SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, cos_sim
+    FROM ranked WHERE rnk <= 3
+    """,
+)
+def llm_ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN via random-hyperplane LSH (Charikar'02): 16-bit
+    sign-of-dot-product signature per vector (±1 hyperplanes derived
+    from md5 — deterministic, shared with the oracle as literals),
+    candidates gated on signature hamming <= 4, exact-cosine rerank
+    top-3 per query. Complements llm_ann_ivf (coarse-quantizer cells)
+    with the other classic ANN family (binary sketches). Approximate
+    by design — the oracle replicates the same approximation, so
+    results hash-match exactly. Signatures are a pure map (no
+    shuffle) and the candidate join is banded on the signature, so
+    probe cost follows bucket sizes, not corpus size.
+
+    ADAPTIVE (round-6 legacy sweep; same switch as llm_cosine_topk):
+    the 16 signature dots are HOF folds — 32M lambda-driven dots at
+    ×100 measured 15.3× DuckDB's native list_dot_product — so at or
+    above the Arrow threshold a mapInArrow path computes signatures
+    via ONE BLAS dgemm guarded by a rigorous forward-error
+    certificate (r7; see the in-body comment): any row whose |dot|
+    falls inside the provable BLAS-vs-fold divergence bound reruns
+    the bit-exact sequential fold, so the sign gate remains EXACTLY
+    the HOF gate while the bulk runs at matmul speed (the r6 form ran
+    the exact fold for EVERY row — 64 vectorized passes, 3.12× at
+    ×100). Gated candidates rerank with the exact fold; only
+    batch-local top-3 per query cross back."""
+    from .llm import _COSINE_ARROW_MIN_ROWS, _embeddings_nrows
+
+    if _embeddings_nrows(sf_dir) >= _COSINE_ARROW_MIN_ROWS:
+        return _ann_hyperplane_arrow(spark, sf_dir)
+    v = load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("ve")
+    )
+    s = v.select("vec_id", "ve", _sig_expr().alias("sig"))
+    q = s.where(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("ve").alias("qv"),
+        F.col("sig").alias("qsig"),
+    )
+    cand = s.join(
+        F.broadcast(q),
+        (F.col("vec_id") != F.col("query_id"))
+        & (F.expr(f"bit_count(sig ^ qsig) <= {_HAM_T}")),
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(
+            _dot(F.col("ve"), F.col("qv")) / (_norm(F.col("ve")) * _norm(F.col("qv"))), 4
+        ).alias("cos_sim"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
+    return (
+        cand.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= 3)
+        .select("query_id", "neighbor_id", F.col("rnk").cast("long").alias("rnk"), "cos_sim")
+    )
+
+
+def _fold_dot(mat, vec):
+    """Sequential-fold dot products of every row of ``mat`` (n, dim)
+    with ``vec`` — the same per-element products and the same
+    addition ORDER as the JVM HOF fold aggregate(zip_with(a,b,x*y),
+    0.0, s+v), so results are bit-identical doubles (a BLAS matmul
+    reorders the sums)."""
+    import numpy as np
+
+    acc = np.zeros(mat.shape[0], dtype=np.float64)
+    for d in range(mat.shape[1]):
+        acc += mat[:, d] * vec[d]
+    return acc
+
+
+def _ann_hyperplane_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Arrow-batch numpy path of ``llm_ann_hyperplane`` (large
+    corpora). Signatures, norms, and rerank dots all use the exact
+    sequential fold (see _fold_dot) so the sign gate and the rounded
+    cosines are bit-identical to the HOF path; the hamming gate is a
+    16-bit popcount table lookup."""
+    import numpy as np
+    import pyarrow as pa
+
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    planes = np.asarray(_PLANES, dtype=np.float64)  # (16, dim)
+    weights = (1 << np.arange(_N_PLANES, dtype=np.int64))
+    pop = np.asarray([bin(x).count("1") for x in range(1 << _N_PLANES)], dtype=np.int64)
+
+    q_rows = sorted(
+        emb.where(F.col("vec_id") < _N_QUERIES).collect(), key=lambda r: r[0]
+    )
+    qids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
+    qmat = np.asarray([r[1] for r in q_rows], dtype=np.float64)  # (m, dim)
+    qsig = np.asarray(
+        [
+            int(sum(w for w, p in zip(weights, planes) if _fold_dot(qv[None, :], p)[0] >= 0))
+            for qv in qmat
+        ],
+        dtype=np.int64,
+    )
+    qnrm = np.sqrt([_fold_dot((qv * qv)[None, :], np.ones(len(qv)))[0] for qv in qmat])
+
+    out_schema = "query_id bigint, neighbor_id bigint, cos_sim double"
+
+    def score(batches):
+        for b in batches:
+            n = b.num_rows
+            if n == 0:
+                continue
+            col = b.column(b.schema.get_field_index("embedding"))
+            if isinstance(col, pa.ChunkedArray):
+                col = col.combine_chunks()
+            mat = np.asarray(col.flatten(), dtype=np.float64).reshape(n, -1)
+            ids = np.asarray(
+                b.column(b.schema.get_field_index("vec_id")), dtype=np.int64
+            )
+            # signature dots via ONE BLAS dgemm plus a RIGOROUS
+            # error-bound gate (r7, replaces the 64-pass exact d-loop
+            # at 3.12×): for ANY summation order the computed dot
+            # satisfies |comp - true| <= gamma * sum|a_i b_i| with
+            # gamma = dim*u/(1-dim*u), u = 2^-53 (Higham 3.5) — both
+            # the BLAS product and the HOF fold individually. So when
+            # |blas| > 2*gamma*(|mat|@|planes|) the TRUE dot (hence
+            # the fold) provably shares its sign; only rows failing
+            # that certificate — none in the synthetic corpus, a
+            # measure-zero sliver in general — rerun the bit-exact
+            # sequential fold. The sign gate stays EXACTLY the HOF
+            # gate, now at dgemm speed.
+            pt = planes.T  # (dim, 16)
+            dim = mat.shape[1]
+            sacc = mat @ pt  # (n, 16) BLAS
+            u = 2.0 ** -53
+            gamma = dim * u / (1 - dim * u)
+            absb = np.abs(mat) @ np.abs(pt)
+            unsafe = np.flatnonzero(
+                (np.abs(sacc) <= 2 * gamma * absb).any(axis=1)
+            )
+            for r in unsafe:
+                sacc[r] = _fold_dot(
+                    np.ascontiguousarray(planes), mat[r]
+                )
+            sig = ((sacc >= 0) * weights).sum(axis=1)
+            # norms feed only the 4dp-ROUNDED cosine (no gate):
+            # einsum's reordered sum differs from the fold by ~1 ulp,
+            # tie at the rounding boundary is measure-zero — the
+            # llm_cosine_topk precedent, pinned by the cross-path test
+            nrm = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+            oq, on, oc = [], [], []
+            for j in range(len(qids)):
+                ham = pop[np.bitwise_xor(sig, qsig[j])]
+                cand = np.flatnonzero((ham <= _HAM_T) & (ids != qids[j]))
+                if cand.size == 0:
+                    continue
+                dots = _fold_dot(mat[cand], qmat[j])
+                cos = np.round(dots / (nrm[cand] * qnrm[j]), 4)
+                order = np.lexsort((ids[cand], -cos))[:3]
+                sel = cand[order]
+                oq.extend([qids[j]] * len(sel))
+                on.extend(ids[sel].tolist())
+                oc.extend(cos[order].tolist())
+            if oq:
+                yield pa.record_batch(
+                    [
+                        pa.array(oq, type=pa.int64()),
+                        pa.array(on, type=pa.int64()),
+                        pa.array(oc, type=pa.float64()),
+                    ],
+                    names=["query_id", "neighbor_id", "cos_sim"],
+                )
+
+    cand = emb.mapInArrow(score, out_schema)
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
+    return (
+        cand.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= 3)
+        .select("query_id", "neighbor_id", F.col("rnk").cast("long").alias("rnk"), "cos_sim")
+    )
+
+
+# ---------------------------------------------------------------------------
+# llm_dedup_keep_list — cluster-representative selection
+# ---------------------------------------------------------------------------
+
+
+def _keep_list_oracle() -> str:
+    return (
+        _PAIR_SQL
+        + """,
+    edges AS (
+      SELECT doc_a AS s, doc_b AS t FROM pairs
+      UNION ALL
+      SELECT doc_b, doc_a FROM pairs
+    ),
+    reach(n, r) AS (
+      SELECT s, s FROM edges
+      UNION
+      SELECT e.t, reach.r FROM reach JOIN edges e ON e.s = reach.n
+    ),
+    comp AS (SELECT n AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY n),
+    dropped AS (SELECT doc_id FROM comp WHERE doc_id <> cluster_id)
+    SELECT documents.lang,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(COUNT(*) FILTER (WHERE dropped.doc_id IS NULL) AS BIGINT)
+             AS n_kept,
+           CAST(SUM(CASE WHEN dropped.doc_id IS NULL THEN n_chars ELSE 0 END)
+                AS BIGINT) AS kept_chars
+    FROM documents LEFT JOIN dropped USING (doc_id)
+    GROUP BY documents.lang
+    """
+    )
+
+
+@query("llm_dedup_keep_list", oracle=_keep_list_oracle())
+def llm_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fuzzy-dedup KEEP LIST — the step that actually shrinks a
+    training corpus: resolve near-dup pairs (char-3-gram Jaccard >=
+    0.7, lang-blocked) into connected components, keep ONE canonical
+    doc per cluster (the min doc_id — the component label itself, so
+    no extra argmin pass) plus every singleton, and report per-lang
+    survivor counts and kept characters.
+
+    Plan shape: the pair plan is llm_dedup_ngram's slim self-join;
+    components via min_label_components (bounded label propagation);
+    the keep decision is a LEFT ANTI-shaped join of the corpus
+    against the dropped set (clustered docs whose id != label) —
+    corpus passes once. The oracle resolves the same fixpoint with a
+    recursive CTE. At 100 TB the dropped set is the small side
+    (dup fraction of the corpus) and broadcasts."""
+    pairs = _ngram_pairs(spark, sf_dir, _CLUSTER_T)
+    labels = min_label_components(pairs)
+    dropped = labels.where(F.col("node") != F.col("label")).select(
+        F.col("node").alias("doc_id"), F.lit(True).alias("is_dropped")
+    )
+    docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
+    marked = docs.join(dropped, "doc_id", "left")
+    kept = F.col("is_dropped").isNull()
+    return marked.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.count_if(kept).alias("n_kept"),
+        F.sum(F.when(kept, F.col("n_chars")).otherwise(F.lit(0))).alias("kept_chars"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# llm_dedup_url_canon — URL-canonicalization dedup
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "llm_dedup_url_canon",
+    oracle="""
+    WITH u AS (
+      SELECT doc_id,
+             (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://WWW.Src' ELSE 'https://www.src' END)
+             || CAST(doc_id % 5 AS VARCHAR)
+             || (CASE WHEN doc_id % 2 = 0 THEN '.Example.COM' ELSE '.example.com' END)
+             || '/p/' || CAST(doc_id % 500 AS VARCHAR)
+             || (CASE WHEN doc_id % 3 = 0 THEN '/' ELSE '' END)
+             || (CASE WHEN doc_id % 4 = 0 THEN '?utm_source=x&utm_campaign=y' ELSE '' END)
+             || (CASE WHEN doc_id % 7 = 0 THEN '#frag' ELSE '' END) AS url
+      FROM documents
+    ), canon AS (
+      SELECT doc_id,
+             regexp_replace(
+               regexp_replace(
+                 regexp_replace(
+                   lower(regexp_extract(url, '^([^/]+//[^/?#]+)', 1))
+                     || regexp_extract(url, '^[^/]+//[^/?#]+(.*)$', 1),
+                   '#.*$', '', 'g'),
+                 'utm_[^&#]*&?', '', 'g'),
+               '[?&/]+$', '', 'g') AS curl
+      FROM u
+    )
+    SELECT regexp_extract(curl, '^https://([^/]+)', 1) AS host,
+           CAST(SUM(n_dups) AS BIGINT) AS n_urls,
+           CAST(COUNT(*) AS BIGINT) AS n_canonical,
+           CAST(SUM(survivor_id) AS BIGINT) AS survivor_id_sum
+    FROM (
+      SELECT curl, COUNT(*) AS n_dups, MIN(doc_id) AS survivor_id
+      FROM canon
+      GROUP BY curl
+    )
+    GROUP BY 1
+    """,
+)
+def llm_dedup_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """URL-canonicalization dedup — the crawl-pipeline step before
+    any content dedup: the same page arrives as HTTP/HTTPS, cased
+    hosts, trailing slashes, utm_* tracking params and fragments;
+    canonicalize (lowercase scheme+authority, drop fragment, strip
+    utm_* params, trim trailing separators) and keep the min-doc_id
+    representative per canonical URL. Synthetic messy URLs are built
+    deterministically from doc_id (the corpus has no URL column), so
+    each canonical group collapses case/slash/param/fragment variants.
+
+    All codegen regexp (Java regex and DuckDB RE2 agree on this
+    subset, 'g'-flagged in the oracle to match Spark's replace-all);
+    dedup is a two-level aggregate — groupBy(curl) keeps the min-doc_id
+    representative (map-side combinable, same shape as llm_dedup_exact),
+    then per-host rollup. ``survivor_id_sum`` pins WHICH doc survives
+    each group, not merely how many (a count alone is derivable from
+    n_canonical and would add no oracle power)."""
+    d = load(spark, sf_dir, "documents")
+    url = F.concat(
+        F.when(F.col("doc_id") % 2 == 0, F.lit("HTTPS://WWW.Src")).otherwise(
+            F.lit("https://www.src")
+        ),
+        (F.col("doc_id") % 5).cast("string"),
+        F.when(F.col("doc_id") % 2 == 0, F.lit(".Example.COM")).otherwise(
+            F.lit(".example.com")
+        ),
+        F.lit("/p/"),
+        (F.col("doc_id") % 500).cast("string"),
+        F.when(F.col("doc_id") % 3 == 0, F.lit("/")).otherwise(F.lit("")),
+        F.when(F.col("doc_id") % 4 == 0, F.lit("?utm_source=x&utm_campaign=y")).otherwise(
+            F.lit("")
+        ),
+        F.when(F.col("doc_id") % 7 == 0, F.lit("#frag")).otherwise(F.lit("")),
+    )
+    curl = F.regexp_replace(
+        F.regexp_replace(
+            F.regexp_replace(
+                F.concat(
+                    F.lower(F.regexp_extract(url, r"^([^/]+//[^/?#]+)", 1)),
+                    F.regexp_extract(url, r"^[^/]+//[^/?#]+(.*)$", 1),
+                ),
+                r"#.*$",
+                "",
+            ),
+            r"utm_[^&#]*&?",
+            "",
+        ),
+        r"[?&/]+$",
+        "",
+    )
+    canon = d.select("doc_id", curl.alias("curl"))
+    groups = canon.groupBy("curl").agg(
+        F.count(F.lit(1)).alias("n_dups"),
+        F.min("doc_id").alias("survivor_id"),
+    )
+    return groups.groupBy(
+        F.regexp_extract("curl", r"^https://([^/]+)", 1).alias("host")
+    ).agg(
+        F.sum("n_dups").alias("n_urls"),
+        F.count(F.lit(1)).alias("n_canonical"),
+        F.sum("survivor_id").alias("survivor_id_sum"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# llm_semdedup — cluster-blocked semantic (embedding) dedup
+# ---------------------------------------------------------------------------
+
+_SEM_T = 0.3  # cosine threshold; synthetic embeddings are near-random
+# unit vectors (within-cluster cos: p50 0.001, p99 0.295, max 0.475 at
+# sf0.01), so 0.3 marks the "suspiciously similar" tail — 176/500
+# vectors removed at sf0.01, comfortably non-vacuous at every SF
+
+
+@query(
+    "llm_semdedup",
+    oracle=f"""
+    WITH v AS (
+      SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS ve
+      FROM embeddings
+    ), c0 AS (
+      SELECT label AS cid, array_agg(cv ORDER BY i) AS cvec FROM (
+        SELECT label, i, AVG(ve[i]) AS cv FROM v, range(1, 65) t(i) GROUP BY label, i
+      ) GROUP BY label
+    ), asg AS (
+      SELECT vec_id, ve, cid FROM (
+        SELECT v.vec_id, v.ve, c0.cid,
+               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY
+                 list_dot_product(ve, ve) + list_dot_product(cvec, cvec)
+                   - 2 * list_dot_product(ve, cvec), cid) AS rn
+        FROM v CROSS JOIN c0
+      ) WHERE rn = 1
+    ), removed AS (
+      SELECT DISTINCT b.vec_id, b.cid
+      FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
+      WHERE list_dot_product(a.ve, b.ve)
+            / (sqrt(list_dot_product(a.ve, a.ve)) * sqrt(list_dot_product(b.ve, b.ve)))
+            >= {_SEM_T}
+    )
+    SELECT CAST(asg.cid AS INTEGER) AS cluster_id,
+           CAST(COUNT(*) AS BIGINT) AS n_vecs,
+           CAST(COUNT(removed.vec_id) AS BIGINT) AS n_removed,
+           CAST(COUNT(*) - COUNT(removed.vec_id) AS BIGINT) AS n_kept
+    FROM asg LEFT JOIN removed
+      ON asg.vec_id = removed.vec_id AND asg.cid = removed.cid
+    GROUP BY 1
+    """,
+)
+def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup-style semantic dedup (Abbas et al. 2023, public
+    method): cluster the embeddings, then WITHIN each cluster drop
+    every vector that has a lower-id neighbor above a cosine
+    threshold — the representative-keeping rule made deterministic
+    (keep-min-id, the same convention as llm_dedup_exact). Cluster
+    assignment is the deterministic per-label-centroid argmin step
+    shared with llm_kmeans_step.
+
+    The whole point at 100 TB: candidate pairs are generated per
+    CLUSTER (a self-join on cid), never corpus-wide — with k sized
+    ~n/1000 the within-cluster quadratic is bounded, which is exactly
+    how the published method scales, and the blocking key is an
+    equi-join column so Spark shuffles each cluster to one place
+    (skew-safe: cluster sizes are centroid-balanced). Plan shape
+    (audited): the argmin assignment is MAP-SIDE — all k centroids
+    ride one broadcast row and the nearest cid is an ``array_min``
+    over a per-row (d2, cid) struct array, the ``geo_nearest_hub``
+    pattern — so the corpus is never shuffled for assignment (the
+    obvious crossJoin + row_number window would shuffle n·k rows);
+    the removed-count groupBy rides the self-join's cid partitioning
+    (no extra exchange). Reports per-cluster corpus/removed/kept
+    counts; cosine/d2 values come from identical IEEE expression
+    trees on both engines so the threshold compare cannot diverge."""
+    v = load(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", _as_double("embedding").alias("ve")
+    )
+    c0 = (
+        v.groupBy(F.col("label").alias("cid"))
+        .agg(*[F.avg(F.col("ve")[i]).alias(f"c{i}") for i in range(_EMB_DIM)])
+        .select("cid", F.array(*[F.col(f"c{i}") for i in range(_EMB_DIM)]).alias("cvec"))
+    )
+    # all k centroids as ONE broadcast row; argmin by (d2, cid) struct
+    # ordering == the oracle's ROW_NUMBER(ORDER BY d2, cid)
+    cents = c0.agg(F.collect_list(F.struct("cid", "cvec")).alias("cents"))
+
+    def d2_of(c):
+        return (
+            _dot(F.col("ve"), F.col("ve"))
+            + _dot(c["cvec"], c["cvec"])
+            - 2 * _dot(F.col("ve"), c["cvec"])
+        )
+
+    nearest = F.array_min(
+        F.transform(
+            "cents", lambda c: F.struct(d2_of(c).alias("d2"), c["cid"].alias("cid"))
+        )
+    )["cid"]
+    asg = v.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "ve", nearest.alias("cid")
+    )
+    a = asg.alias("a")
+    b = asg.alias("b")
+    cos = _dot(F.col("a.ve"), F.col("b.ve")) / (
+        F.sqrt(_dot(F.col("a.ve"), F.col("a.ve")))
+        * F.sqrt(_dot(F.col("b.ve"), F.col("b.ve")))
+    )
+    # count REMOVED vectors per cluster directly from the pair stream:
+    # count_distinct(b.vec_id) per cid rides the join's cid
+    # partitioning — no standalone distinct exchange, no re-join
+    # against the corpus (b is removed iff ANY lower-id a matches)
+    flagged = (
+        a.join(
+            b,
+            (F.col("a.cid") == F.col("b.cid"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .where(cos >= _SEM_T)
+        .groupBy(F.col("a.cid").alias("cid"))
+        .agg(F.count_distinct(F.col("b.vec_id")).alias("n_removed"))
+    )
+    return (
+        asg.groupBy(F.col("cid").cast("int").alias("cluster_id"))
+        .agg(F.count(F.lit(1)).alias("n_vecs"))
+        .join(
+            flagged.select(F.col("cid").cast("int").alias("cluster_id"), "n_removed"),
+            "cluster_id",
+            "left",
+        )
+        .select(
+            "cluster_id",
+            "n_vecs",
+            F.coalesce("n_removed", F.lit(0)).alias("n_removed"),
+            (F.col("n_vecs") - F.coalesce("n_removed", F.lit(0))).alias("n_kept"),
         )
     )

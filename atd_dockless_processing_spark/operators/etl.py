@@ -1,22 +1,24 @@
-"""Round-9 operators — SURVEY.md §2.29.
+"""End-to-end ETL pipeline operators (etl_*).
 
-Spark 4.1 surface breadth (VERDICT r8 item 6): the declarative
-pipelines authoring API (``pyspark.pipelines``), executed locally.
+``etl_publish_funnel`` composes the reference's MDS trip-ingest
+lifecycle (ingest → validate → dedup → local-time derive → grid bin →
+k-anonymity suppress → publish) as one keyed Spark plan.
+``etl_declarative_pipeline`` authors a pipeline with Spark 4.1
+Declarative Pipelines (``pyspark.pipelines``).
 
-The upstream runner for Spark Declarative Pipelines is the
-``spark-pipelines`` CLI, which drives a Spark Connect session — and
-grpcio is not installed in this container (probe recorded in SURVEY
-§7.6). The AUTHORING surface, however, is engine-agnostic by design:
+The upstream runner for Declarative Pipelines is the
+``spark-pipelines`` CLI, which drives a Spark Connect session and so
+needs grpcio. The authoring surface is engine-agnostic:
 ``@dp.materialized_view`` / ``@dp.temporary_view`` / ``@dp.table``
-register frozen ``Output`` + ``Flow`` dataclasses into whatever
+register ``Output`` + ``Flow`` dataclasses into whatever
 ``GraphElementRegistry`` is active via
-``graph_element_registration_context`` (a public ABC). So the operator
-here is the real Spark 4.1 authoring API wired to a local registry and
-a dependency-resolving executor — the same dataflow-graph semantics
-(unordered definitions, reference-by-name, materialization per output
-kind), minus the Connect transport. A user's pipeline definition file
-runs unmodified; swapping the executor back to the CLI when grpcio
-exists is a config change, not a code change.
+``graph_element_registration_context`` (a public ABC). So this module
+wires the real authoring API to a local registry and a
+dependency-resolving executor (``run_pipeline_locally``) with the same
+dataflow-graph semantics: unordered definitions, reference by name,
+materialization per output kind. A pipeline definition file runs
+unmodified; switching back to the CLI runner is a configuration
+change, not a code change.
 """
 
 from __future__ import annotations
@@ -29,8 +31,115 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.json_fast import with_json_field
 from ..registry import query
 from ..tables import load, scratch_dir
+
+
+# ---------------------------------------------------------------------------
+# etl_publish_funnel — the dockless publication lifecycle as ONE plan
+# ---------------------------------------------------------------------------
+
+_FUNNEL_K = 5  # k-anonymity floor, same as geo_od_matrix
+
+
+@query(
+    "etl_publish_funnel",
+    oracle=f"""
+    WITH validated AS (
+      SELECT *
+      FROM events
+      WHERE ts IS NOT NULL AND value >= 0 AND value < 10000
+        AND json_extract_string(props, '$.k') IS NOT NULL
+    ), deduped AS (
+      SELECT * FROM (
+        SELECT *,
+               ROW_NUMBER() OVER (
+                 PARTITION BY user_id, event_type, date_trunc('minute', ts)
+                 ORDER BY ts, event_id) AS rn
+        FROM validated
+      ) WHERE rn = 1
+    ), derived AS (
+      SELECT timezone('America/Chicago',
+                      timezone('UTC', CAST(ts AS TIMESTAMP))) AS lts,
+             CONCAT(CAST(CAST(FLOOR(value / 50) AS BIGINT) AS VARCHAR), '_',
+                    CAST(CAST(FLOOR(CAST(json_extract_string(props, '$.k') AS INTEGER) / 25.0) AS BIGINT) AS VARCHAR)) AS cell_id,
+             value
+      FROM deduped
+    )
+    SELECT CAST(lts AS DATE) AS local_date, cell_id,
+           CAST(COUNT(*) AS BIGINT) AS n_trips,
+           ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4)
+             AS sum_value
+    FROM derived
+    GROUP BY 1, 2
+    HAVING COUNT(*) >= {_FUNNEL_K}
+    """,
+)
+def etl_publish_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's full publication lifecycle as ONE Spark plan
+    ([P high], SURVEY §3.1: the cron pipeline is ingest → validate →
+    dedupe re-delivered records → derive local-time calendar fields →
+    bin to coarse geography → suppress sparse cells → publish):
+
+      1. validate  — range/null screens (``flt_range`` shape; also
+         enforces props.$.k non-null, the ADVICE r5 precondition);
+      2. dedup     — provider re-delivery dedup: first record per
+         (device, type, minute) by ROW_NUMBER (``llm_dedup_exact``
+         keep-first shape on a composite business key);
+      3. tz-derive — America/Chicago local date
+         (``fn_date_derive_tz`` semantics);
+      4. grid-bin  — the ``geo_grid_bin`` floor-cell formula;
+      5. suppress  — k-anonymity HAVING floor (``geo_od_matrix``);
+      6. publish   — (local_date, cell, n, exact DECIMAL value sum).
+
+    Proves the stages compose without a driver round-trip: the whole
+    funnel is validate-filter (scan-pushed) → ONE window exchange on
+    the dedup key → map-side derive → ONE combinable agg exchange,
+    i.e. 2 shuffles total at any scale. The dedup window partitions
+    by (device, type, minute) — high-cardinality, skew-free; the agg
+    key (day, cell) is low-cardinality with map-side partial agg."""
+    ev = load(spark, sf_dir, "events")
+    # project the JSON field once (validate null-screen + cell derive
+    # both use it; Catalyst only de-duplicates cheap expressions)
+    ev = with_json_field(ev, "k", "props", "k", "string").select(
+        "event_id", "ts", "user_id", "event_type", "value", "k"
+    )
+    k = F.col("k")
+    validated = ev.where(
+        F.col("ts").isNotNull()
+        & (F.col("value") >= 0)
+        & (F.col("value") < 10000)
+        & k.isNotNull()
+    )
+    dw = Window.partitionBy(
+        "user_id", "event_type", F.date_trunc("minute", "ts")
+    ).orderBy("ts", "event_id")
+    deduped = validated.withColumn("rn", F.row_number().over(dw)).where(
+        F.col("rn") == 1
+    )
+    lts = F.from_utc_timestamp("ts", "America/Chicago")
+    cell = F.concat_ws(
+        "_",
+        F.floor(F.col("value") / 50).cast("string"),
+        F.floor(k.cast("int") / 25.0).cast("string"),
+    )
+    return (
+        deduped.select(
+            lts.cast("date").alias("local_date"),
+            cell.alias("cell_id"),
+            "value",
+        )
+        .groupBy("local_date", "cell_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_trips"),
+            F.round(
+                F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4
+            ).alias("sum_value"),
+        )
+        .where(F.col("n_trips") >= _FUNNEL_K)
+    )
+
 
 # Pipeline graphs register session views under the USER'S dataset
 # names; concurrent executions in one session would clobber each

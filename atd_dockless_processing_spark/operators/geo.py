@@ -11,12 +11,12 @@ shuffle of the point table before aggregation).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.json_fast import with_json_field
 from ..registry import query
-from ..tables import load
+from ..tables import load, stage_scratch
 
 
 @query(
@@ -413,4 +413,675 @@ def geo_hex_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_points"),
             F.round(F.sum("x"), 4).alias("sum_value"),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# geo_nearest_hub — broadcast argmin snap
+# ---------------------------------------------------------------------------
+
+# Hubs in the same (value, props.k) coordinate space as the other geo
+# operators (testdata has no lat/lon — SURVEY §2.9: same algebra,
+# different units). Fixed small dim, like _ZONES in geo.py.
+_HUBS = [
+    # (hub_id, x, y)
+    (0, 50.0, 12.0),
+    (1, 150.0, 40.0),
+    (2, 280.0, 75.0),
+    (3, 60.0, 88.0),
+    (4, 420.0, 30.0),
+]
+
+
+@query(
+    "geo_nearest_hub",
+    oracle=f"""
+    WITH pts AS (
+      SELECT event_id,
+             value AS x,
+             CAST(json_extract_string(props, '$.k') AS INTEGER) AS y,
+             value
+      FROM events
+    ), hubs(hub_id, hx, hy) AS (
+      VALUES {", ".join(f"({h}, {x}, {y})" for h, x, y in _HUBS)}
+    ), ranked AS (
+      SELECT pts.value, hubs.hub_id,
+             ROW_NUMBER() OVER (
+               PARTITION BY pts.event_id
+               ORDER BY (pts.x - hx) * (pts.x - hx)
+                      + (pts.y - hy) * (pts.y - hy), hub_id
+             ) AS rn
+      FROM pts CROSS JOIN hubs
+    )
+    SELECT hub_id,
+           CAST(COUNT(*) AS BIGINT) AS n_points,
+           ROUND(SUM(value), 4) AS sum_value
+    FROM ranked WHERE rn = 1
+    GROUP BY hub_id
+    """,
+)
+def geo_nearest_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nearest-hub assignment: snap each event point to the closest of
+    a small fixed hub set (squared euclidean, hub_id tie-break) and
+    aggregate per hub — the dockless-mobility "assign trip endpoint to
+    nearest station / district centroid" shape ([P high], SURVEY
+    §3.1 privacy binning), and the k=1 special case of a kNN join.
+
+    Plan shape: the hub set is baked into a per-row array of
+    (dist, hub_id) structs and reduced with ``array_min`` — struct
+    ordering gives the deterministic (dist, hub_id) argmin entirely
+    MAP-SIDE (zero joins, zero extra shuffles; the only exchange is
+    the final per-hub agg). The oracle computes the same assignment
+    via a genuinely different algorithm (cross join + row_number).
+    Distances are exact IEEE doubles in both engines — same products,
+    same sums — so the compare is exact, no rounding gate needed. At
+    100 TB this scales as pure map work; with thousands of hubs you
+    would swap in the IVF/LSH pre-prune (llm_ann_ivf) before the
+    exact argmin.
+    """
+    ev = with_json_field(
+        load(spark, sf_dir, "events"), "y", "props", "k", "int"
+    ).select(F.col("value").alias("x"), "y", "value")
+    cands = F.array(
+        *[
+            F.struct(
+                (
+                    (F.col("x") - F.lit(hx)) * (F.col("x") - F.lit(hx))
+                    + (F.col("y") - F.lit(hy)) * (F.col("y") - F.lit(hy))
+                ).alias("dist"),
+                F.lit(hid).alias("hub_id"),
+            )
+            for hid, hx, hy in _HUBS
+        ]
+    )
+    snapped = ev.select(
+        F.array_min(cands).getField("hub_id").alias("hub_id"), "value"
+    )
+    return snapped.groupBy("hub_id").agg(
+        F.count(F.lit(1)).alias("n_points"),
+        F.round(F.sum("value"), 4).alias("sum_value"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# geo_trip_length — per-user path length over consecutive points
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "geo_trip_length",
+    oracle="""
+    WITH pts AS (
+      SELECT user_id, ts, event_id,
+             value AS x,
+             CAST(json_extract_string(props, '$.k') AS INTEGER) AS y
+      FROM events
+    ), legs AS (
+      SELECT user_id,
+             sqrt(power(x - LAG(x) OVER w, 2) + power(y - LAG(y) OVER w, 2))
+               AS leg
+      FROM pts
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    )
+    SELECT user_id,
+           CAST(COUNT(leg) AS BIGINT) AS n_legs,
+           ROUND(SUM(leg), 4) AS total_dist,
+           ROUND(MAX(leg), 4) AS max_leg
+    FROM legs
+    WHERE leg IS NOT NULL
+    GROUP BY user_id
+    """,
+)
+def geo_trip_length(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user path length: euclidean distance between consecutive
+    event points ((value, props.k) space, (ts, event_id)-ordered),
+    summed per user with leg count and longest leg — the reference's
+    core trip-telemetry shape (route length from breadcrumb points,
+    [P high] SURVEY §3.1) on the declared numeric coordinate plane.
+
+    Plan shape: one window exchange on user_id (two lags ride the
+    same sort), distances map-side, then a combinable agg on the same
+    key — AQE elides the second exchange. sqrt/power on identical
+    doubles agree cross-engine; sums rounded to 4."""
+    ev = with_json_field(
+        load(spark, sf_dir, "events"), "y", "props", "k", "int"
+    ).select("user_id", "ts", "event_id", F.col("value").alias("x"), "y")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    leg = F.sqrt(
+        F.pow(F.col("x") - F.lag("x").over(w), 2)
+        + F.pow(F.col("y") - F.lag("y").over(w), 2)
+    )
+    legs = ev.select("user_id", leg.alias("leg")).where(F.col("leg").isNotNull())
+    return legs.groupBy("user_id").agg(
+        F.count("leg").alias("n_legs"),
+        F.round(F.sum("leg"), 4).alias("total_dist"),
+        F.round(F.max("leg"), 4).alias("max_leg"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# geo_point_in_polygon_table — PIP against a staged polygon table
+# ---------------------------------------------------------------------------
+
+# 8-vertex star offsets (unit lattice, scaled per polygon): alternating
+# radius-3 / radius-~2.2 vertices => NON-convex for every polygon. No
+# consecutive pair shares a y, so no horizontal-edge inf/nan terms.
+_PIPT_OFF = [(3, 0), (1, 2), (0, 3), (-1, 2), (-3, 0), (-1, -2), (0, -3), (1, -2)]
+_PIPT_N_POLY = 60
+_PIPT_CELL = 0.02  # grid-index cell size (degrees)
+
+# SQL fragments shared verbatim between the Spark staging expressions
+# and the DuckDB oracle so every vertex double is bit-identical.
+_PIPT_CX = "-97.93e0 + ({i} % 10) * 0.04e0"
+_PIPT_CY = "30.12e0 + ({i} // 10) * 0.06e0"
+_PIPT_S = "0.004e0 + ({i} % 4) * 0.002e0"
+
+
+def _stage_polygons(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the polygon dimension TABLE: 60 deterministic non-convex
+    star polygons tiling the synthetic coordinate space, one row per
+    polygon with its vertex array — the council-district/census-tract
+    file the reference loads, in staged-parquet form. Vertices are
+    computed with Spark SQL expressions textually mirroring the
+    oracle's so both engines derive bit-identical doubles."""
+
+    def build(indir: str) -> None:
+        i = F.col("id").cast("int")
+        cx = F.expr(_PIPT_CX.format(i="CAST(id AS INT)"))
+        cy = F.expr(_PIPT_CY.format(i="CAST(id AS INT)").replace("//", "DIV"))
+        s = F.expr(_PIPT_S.format(i="CAST(id AS INT)"))
+        verts = F.array(
+            *[
+                F.struct(
+                    (F.col("cx") + F.lit(float(dx)) * F.col("s")).alias("x"),
+                    (F.col("cy") + F.lit(float(dy)) * F.col("s")).alias("y"),
+                )
+                for dx, dy in _PIPT_OFF
+            ]
+        )
+        (
+            spark.range(_PIPT_N_POLY)
+            .select(
+                i.alias("zone_id"),
+                cx.alias("cx"),
+                cy.alias("cy"),
+                s.alias("s"),
+            )
+            .select("zone_id", "cx", "cy", "s", verts.alias("verts"))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(indir)
+        )
+
+    # marker on events: the polygon set is fixed, but staging follows
+    # the shared freshness protocol keyed on the point source
+    return stage_scratch("geo_pip_table", sf_dir, "events", build)
+
+
+def _pipt_inside(verts: Column, px: Column, py: Column) -> Column:
+    """Exact PNPOLY crossing-parity test of (px, py) against the
+    8-vertex polygon ``verts`` — one F.aggregate over the edge list,
+    pure codegen HOF (no explode, no Python)."""
+    nv = len(_PIPT_OFF)
+
+    def crossings(acc: Column, k: Column) -> Column:
+        v1 = F.element_at(verts, k + 1)
+        v2 = F.element_at(verts, ((k + 1) % nv) + 1)
+        crosses = ((v1["y"] > py) != (v2["y"] > py)) & (
+            px < (v2["x"] - v1["x"]) * (py - v1["y"]) / (v2["y"] - v1["y"]) + v1["x"]
+        )
+        return acc + F.when(crosses, 1).otherwise(0)
+
+    total = F.aggregate(F.sequence(F.lit(0), F.lit(nv - 1)), F.lit(0), crossings)
+    return total % 2 == 1
+
+
+@query(
+    "geo_point_in_polygon_table",
+    oracle=f"""
+    WITH pts AS (
+      SELECT event_id,
+             (-97.95e0) + (abs(value) % 40.0e0) / 100.0e0 AS px,
+             30.10e0 + (user_id % 40) / 100.0e0 AS py,
+             value
+      FROM events
+    ), off(k, dx, dy) AS (
+      VALUES {", ".join(f"({k}, {dx}, {dy})" for k, (dx, dy) in enumerate(_PIPT_OFF))}
+    ), polys AS (
+      SELECT i AS zone_id,
+             {_PIPT_CX.format(i="i")} AS cx,
+             {_PIPT_CY.format(i="i")} AS cy,
+             {_PIPT_S.format(i="i")} AS s
+      FROM range({_PIPT_N_POLY}) t(i)
+    ), verts AS (
+      SELECT zone_id, k, cx + dx * s AS vx, cy + dy * s AS vy
+      FROM polys CROSS JOIN off
+    ), edges AS (
+      SELECT a.zone_id, a.vx AS x1, a.vy AS y1, b.vx AS x2, b.vy AS y2
+      FROM verts a JOIN verts b
+        ON a.zone_id = b.zone_id AND b.k = (a.k + 1) % {len(_PIPT_OFF)}
+    ), hits AS (
+      SELECT p.event_id, e.zone_id, p.value,
+             SUM(CASE WHEN (y1 > py) <> (y2 > py)
+                       AND px < (x2 - x1) * (py - y1) / (y2 - y1) + x1
+                  THEN 1 ELSE 0 END) AS crossings
+      FROM pts p CROSS JOIN edges e
+      GROUP BY p.event_id, e.zone_id, p.value
+    )
+    SELECT zone_id,
+           CAST(COUNT(*) AS BIGINT) AS n_points,
+           ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4)
+             AS sum_value
+    FROM hits
+    WHERE crossings % 2 = 1
+    GROUP BY zone_id
+    """,
+)
+def geo_point_in_polygon_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Point-in-polygon against a polygon TABLE at real cardinality:
+    60 staged non-convex star polygons (council-district/census-tract
+    shape, [P high] — the reference's production spatial assignment
+    loads polygon files, it does not inline literals), points from
+    events via the same deterministic synthesis as
+    ``geo_point_in_polygon``.
+
+    Scale plan — the many-polygon shape the literal-compiled twin
+    cannot express:
+    1. CANDIDATE GENERATION by grid-cell index: each polygon's bbox
+       expands to its covering 0.02° cells (≤16 cells/polygon, 960
+       slim rows total); each point maps to exactly ONE cell. The
+       equi-join on (cell_x, cell_y) broadcasts the tiny cell index —
+       NO CartesianProduct, and the 100 TB point table is never
+       shuffled (plan-asserted in test_engine_units.py).
+    2. EXACT VERIFY: PNPOLY crossing parity over the candidate's
+       vertex array via one F.aggregate HOF — pure codegen, no
+       explode, no Python. Bit-identical to the oracle's edge-table
+       formulation because every arithmetic step is the same IEEE
+       expression on both engines.
+    3. One combinable agg shuffle on zone_id; exact DECIMAL(18,4)
+       value summation (order-free, the round-4 house pattern).
+
+    At 1000 executors this is: broadcast 960-row index, map-side
+    cell hash + 16-edge parity check per candidate, one partial agg —
+    the canonical spatial-join-by-grid-blocking design (same family
+    as geo_bbox_join / join_interval_overlap bucket blocking)."""
+    polys = spark.read.parquet(_stage_polygons(spark, sf_dir))
+    g = float(_PIPT_CELL)
+    rad = 3.0  # max |offset| in lattice units
+
+    # polygon -> covering grid cells (bbox cover; slim (cell, zone) rows)
+    cells = polys.select(
+        "zone_id",
+        "verts",
+        F.explode(
+            F.sequence(
+                F.floor((F.col("cx") - rad * F.col("s")) / g).cast("int"),
+                F.floor((F.col("cx") + rad * F.col("s")) / g).cast("int"),
+            )
+        ).alias("cell_x"),
+        F.col("cy"),
+        F.col("s"),
+    ).select(
+        "zone_id",
+        "verts",
+        "cell_x",
+        F.explode(
+            F.sequence(
+                F.floor((F.col("cy") - rad * F.col("s")) / g).cast("int"),
+                F.floor((F.col("cy") + rad * F.col("s")) / g).cast("int"),
+            )
+        ).alias("cell_y"),
+    )
+
+    ev = load(spark, sf_dir, "events")
+    px = F.lit(-97.95) + (F.abs(F.col("value")) % F.lit(40.0)) / F.lit(100.0)
+    py = F.lit(30.10) + (F.col("user_id") % 40) / F.lit(100.0)
+    pts = ev.select(
+        px.alias("px"),
+        py.alias("py"),
+        F.col("value"),
+        F.floor(px / g).cast("int").alias("cell_x"),
+        F.floor(py / g).cast("int").alias("cell_y"),
+    )
+
+    cand = pts.join(F.broadcast(cells), ["cell_x", "cell_y"])
+    inside = cand.where(_pipt_inside(F.col("verts"), F.col("px"), F.col("py")))
+    return inside.groupBy("zone_id").agg(
+        F.count(F.lit(1)).alias("n_points"),
+        F.round(
+            F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4
+        ).alias("sum_value"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# geo_od_matrix — origin-destination flow matrix with k-anonymity suppression
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "geo_od_matrix",
+    oracle="""
+    WITH trips AS (
+      SELECT CONCAT(CAST(CAST(FLOOR(value / 50) AS BIGINT) AS VARCHAR), '_',
+                    COALESCE(CAST(CAST(FLOOR(CAST(json_extract_string(props, '$.k') AS INTEGER) / 25.0) AS BIGINT) AS VARCHAR), 'x')) AS o_cell,
+             CONCAT(CAST(CAST(FLOOR((value + (user_id % 7) * 30.0e0) / 50) AS BIGINT) AS VARCHAR), '_',
+                    COALESCE(CAST(CAST(FLOOR((CAST(json_extract_string(props, '$.k') AS INTEGER) + event_id % 5) / 25.0) AS BIGINT) AS VARCHAR), 'x')) AS d_cell,
+             value
+      FROM events
+    )
+    SELECT o_cell, d_cell,
+           CAST(COUNT(*) AS BIGINT) AS n_trips,
+           ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4)
+             AS sum_value
+    FROM trips
+    GROUP BY o_cell, d_cell
+    HAVING COUNT(*) >= 5
+    """,
+)
+def geo_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Origin-destination flow matrix with k-anonymity suppression —
+    the reference's PUBLISHED data product shape ([P high]: public
+    dockless-mobility datasets are exactly OD trip counts between
+    coarse geography cells, with sparse pairs suppressed below a
+    k-anonymity floor so no individual trip is identifiable).
+    Origin/destination cells are derived deterministically from event
+    fields with the same floor-grid formula as ``geo_grid_bin``;
+    pairs with fewer than 5 trips are suppressed (HAVING).
+
+    Scale shape: pure codegen cell derivation (zero pre-agg shuffle),
+    ONE combinable agg exchange on the cell key, suppression as a
+    post-agg filter — at 100 TB this is the same map + partial-agg +
+    final-agg profile as geo_grid_bin with a composite key. Exact
+    DECIMAL(18,4) value sums (order-free, the round-4 house
+    pattern).
+
+    r14 optimization round (guide §2.3 shuffle keys/metadata, not
+    payloads): the pre-r14 form built the two CELL STRINGS per input
+    row and grouped on them — every row paid 2 concat_ws + 4
+    long→string casts before the partial agg, and the exchange
+    carried two strings. This form groups on the four underlying
+    LONG components (floor(value/50), floor(k/25), ...) and formats
+    the strings ONCE PER SURVIVING GROUP after the HAVING filter.
+    The component→string mapping is injective (integer formatting
+    never collides; a missing-k NULL renders as 'x', which no
+    numeric component can produce; a NULL first component drops its
+    separator, yielding a string with no '_' that only that shape
+    can make), so the grouping partition is identical and the
+    result bit-identical — pinned against the string-key twin in
+    tests, incl. a synthesized null-k corpus for the 'x' path the
+    stock corpus never exercises. Isolated-process ×100 A/B (fresh
+    process per form, 5 hot runs, 2 epochs): packed 0.844/1.078 s
+    vs string-key 3.397/3.169 s (~3× faster)."""
+    return _od_matrix(spark, sf_dir, int_components=True)
+
+
+def _od_matrix_stringkey_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The pre-r14 form: per-row cell-string build, groupBy on the
+    two strings. Kept as the cross-form equality witness for the
+    registered integer-component form (isolated ×100 epochs:
+    string-key 3.397/3.169 s vs packed 0.844/1.078 s)."""
+    return _od_matrix(spark, sf_dir, int_components=False)
+
+
+def _od_matrix(
+    spark: SparkSession, sf_dir: str, int_components: bool
+) -> DataFrame:
+    # project the JSON field ONCE: o_cell and d_cell both use k, and
+    # Catalyst only de-duplicates cheap expressions — inlining the
+    # raw extraction would parse every props document twice
+    ev = with_json_field(
+        load(spark, sf_dir, "events"), "k", "props", "k", "int"
+    ).select("event_id", "user_id", "value", "k")
+    k = F.col("k")
+    o1 = F.floor(F.col("value") / 50)
+    o2 = F.floor(k / 25.0)
+    d1 = F.floor((F.col("value") + (F.col("user_id") % 7) * F.lit(30.0)) / 50)
+    d2 = F.floor((k + F.col("event_id") % 5) / 25.0)
+
+    # COALESCE the k-derived cell components (both engines): DuckDB
+    # CONCAT keeps the '_' separator on a NULL operand while Spark
+    # concat_ws drops it, so a NULL props.$.k would hash-diverge.
+    def cell(a, b):
+        return F.concat_ws(
+            "_", a.cast("string"), F.coalesce(b.cast("string"), F.lit("x"))
+        )
+
+    aggs = [
+        F.count(F.lit(1)).alias("n_trips"),
+        F.round(
+            F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4
+        ).alias("sum_value"),
+    ]
+    if not int_components:
+        return (
+            ev.select(
+                cell(o1, o2).alias("o_cell"), cell(d1, d2).alias("d_cell"), "value"
+            )
+            .groupBy("o_cell", "d_cell")
+            .agg(*aggs)
+            .where(F.col("n_trips") >= 5)
+        )
+    return (
+        ev.select(
+            o1.alias("o1"), o2.alias("o2"), d1.alias("d1"), d2.alias("d2"), "value"
+        )
+        .groupBy("o1", "o2", "d1", "d2")
+        .agg(*aggs)
+        .where(F.col("n_trips") >= 5)
+        .select(
+            cell(F.col("o1"), F.col("o2")).alias("o_cell"),
+            cell(F.col("d1"), F.col("d2")).alias("d_cell"),
+            "n_trips",
+            "sum_value",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# geo_hex_ring_smooth — 7-cell hex-neighborhood density smoothing
+# ---------------------------------------------------------------------------
+
+_HEX_CELLS_SQL = f"""
+      SELECT CAST(hq AS INTEGER) AS hex_q, CAST(hr AS INTEGER) AS hex_r,
+             CAST(COUNT(*) AS BIGINT) AS n_points
+      FROM (
+        SELECT CASE WHEN dq > dr AND dq > ds THEN -rr - rs ELSE rq END AS hq,
+               CASE WHEN dr > dq AND dr >= ds AND NOT (dq > dr AND dq > ds)
+                    THEN -rq - rs ELSE rr END AS hr
+        FROM (
+          SELECT rq, rr, rs,
+                 abs(rq - q) AS dq, abs(rr - r) AS dr, abs(rs - s) AS ds
+          FROM (
+            SELECT q, r, -q - r AS s,
+                   CASE WHEN q >= 0 THEN floor(q + 0.5)
+                        ELSE -floor(0.5 - q) END AS rq,
+                   CASE WHEN r >= 0 THEN floor(r + 0.5)
+                        ELSE -floor(0.5 - r) END AS rr,
+                   CASE WHEN -q - r >= 0 THEN floor(-q - r + 0.5)
+                        ELSE -floor(0.5 - (-q - r)) END AS rs
+            FROM (
+              SELECT (sqrt(3.0) / 3.0 * x - 1.0 / 3.0 * y) / {_HEX_SIZE} AS q,
+                     (2.0 / 3.0 * y) / {_HEX_SIZE} AS r
+              FROM (
+                SELECT value AS x,
+                       CAST(json_extract_string(props, '$.k') AS INTEGER) AS y
+                FROM events
+              )
+            )
+          )
+        )
+      )
+      GROUP BY 1, 2
+"""
+
+
+@query(
+    "geo_hex_ring_smooth",
+    oracle=f"""
+    WITH cells AS ({_HEX_CELLS_SQL}),
+    contrib AS (
+      SELECT c.hex_q + o.dq AS tq, c.hex_r + o.dr AS tr, c.n_points
+      FROM cells c
+      CROSS JOIN (VALUES (0, 0), (1, 0), (-1, 0), (0, 1), (0, -1),
+                         (1, -1), (-1, 1)) o(dq, dr)
+    ), ring AS (
+      SELECT tq, tr,
+             CAST(SUM(n_points) AS BIGINT) AS hood_n,
+             CAST(COUNT(*) AS BIGINT) AS n_hood_cells
+      FROM contrib GROUP BY tq, tr
+    )
+    SELECT c.hex_q, c.hex_r, c.n_points, r.hood_n, r.n_hood_cells,
+           CAST((1000 * r.hood_n) // r.n_hood_cells AS BIGINT)
+             AS density_milli
+    FROM cells c JOIN ring r ON r.tq = c.hex_q AND r.tr = c.hex_r
+    """,
+)
+def geo_hex_ring_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hex-neighborhood (k-ring, k=1) density smoothing — the ring
+    aggregation H3 users run right after binning ([P med]: the
+    reference's public hex maps smooth single-cell noise before
+    display; k-anonymity screens use the same 7-cell neighborhood).
+    Each cell's smoothed density = mean points over itself + its 6
+    axial neighbors, restricted to neighborhoods' EXISTING cells
+    (integer milli-density via 1000·sum div cells — order-free
+    exact).
+
+    Plan shape: the per-cell summary is ONE combinable aggregation
+    over events (the geo_hex_bin plan — its unused sum column is
+    pruned by Catalyst); the ×7 offset explode and ring re-group act
+    on the tiny CELL SUMMARY, never raw points. The ring step is
+    expressed as a SINGLE re-group over the offset contributions —
+    each contribution carries an is-center flag, so the target's own
+    n_points and its cell-existence filter fall out of the same
+    aggregate and the naive join-back of cells (which re-evaluates
+    the whole events subtree — a DataFrame self-join has no DAG
+    reuse without caching; the ×100 rehearsal measured the 2-pass
+    join form at 2× scan cost) is not needed. At 100 TB: one events
+    exchange + one summary-sized exchange, no join."""
+    cells = geo_hex_bin(spark, sf_dir).select("hex_q", "hex_r", "n_points")
+    offsets = F.array(
+        *[
+            F.struct(F.lit(dq).alias("dq"), F.lit(dr).alias("dr"))
+            for dq, dr in [(0, 0), (1, 0), (-1, 0), (0, 1), (0, -1), (1, -1), (-1, 1)]
+        ]
+    )
+    contrib = cells.select(
+        F.explode(offsets).alias("o"), "hex_q", "hex_r", "n_points"
+    ).select(
+        (F.col("hex_q") + F.col("o.dq")).alias("tq"),
+        (F.col("hex_r") + F.col("o.dr")).alias("tr"),
+        "n_points",
+        ((F.col("o.dq") == 0) & (F.col("o.dr") == 0)).alias("is_center"),
+    )
+    ring = contrib.groupBy("tq", "tr").agg(
+        F.sum("n_points").alias("hood_n"),
+        F.count(F.lit(1)).alias("n_hood_cells"),
+        F.sum(F.when(F.col("is_center"), F.col("n_points"))).alias("n_points_c"),
+    )
+    return (
+        ring.where(F.col("n_points_c").isNotNull())
+        .select(
+            F.col("tq").alias("hex_q"),
+            F.col("tr").alias("hex_r"),
+            F.col("n_points_c").alias("n_points"),
+            "hood_n",
+            "n_hood_cells",
+            F.expr("(1000 * hood_n) div n_hood_cells").alias("density_milli"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# geo_trip_quality_flags — per-user breadcrumb-leg validation screen
+# ---------------------------------------------------------------------------
+
+_TELEPORT_DIST = 200.0  # units; ~p99 of the leg distribution
+_GAP_BREAK_US = 172_800_000_000  # 48 h in µs — route-continuity break
+_SPEED_MAX = 0.02  # units/second; fast tail of dist/dt
+
+
+@query(
+    "geo_trip_quality_flags",
+    oracle=f"""
+    WITH pts AS (
+      SELECT user_id, ts, event_id, value AS x,
+             CAST(json_extract_string(props, '$.k') AS INTEGER) AS y
+      FROM events
+    ), legs AS (
+      SELECT user_id,
+             sqrt(power(x - LAG(x) OVER w, 2)
+                  + power(y - LAG(y) OVER w, 2)) AS dist,
+             epoch_us(CAST(ts AS TIMESTAMP))
+               - LAG(epoch_us(CAST(ts AS TIMESTAMP))) OVER w AS dt_us
+      FROM pts
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    )
+    SELECT user_id,
+           CAST(COUNT(dist) AS BIGINT) AS n_legs,
+           CAST(SUM(CASE WHEN dist > {_TELEPORT_DIST}e0
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_teleport,
+           CAST(SUM(CASE WHEN dt_us > {_GAP_BREAK_US}
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_gap_breaks,
+           CAST(SUM(CASE WHEN dt_us > 0 AND
+                              dist / (CAST(dt_us AS DOUBLE) / 1000000e0)
+                                > {_SPEED_MAX}e0
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_speeding
+    FROM legs
+    WHERE dist IS NOT NULL
+    GROUP BY user_id
+    """,
+)
+def geo_trip_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user breadcrumb-leg VALIDATION screen — the reference's
+    trip-sanity step ([P high]: provider trip feeds carry GPS jumps,
+    stale timestamps, and physically impossible speeds that must be
+    flagged before publication): per consecutive leg on the declared
+    (value, props.k) coordinate plane, flag teleports (dist >
+    threshold), route-continuity breaks (Δt > 48 h), and speeding
+    (dist/Δt above the max) — counted per user.
+
+    Cross-engine exactness: dist is the geo_trip_length sqrt/pow
+    tree (identical doubles); Δt is an exact BIGINT in µs
+    (unix_micros / epoch_us — never a double subtraction, hazard
+    #10's epoch rule); the speed compare divides identical doubles
+    by identical positive doubles (single correctly-rounded ops) and
+    is GUARDED by dt_us > 0 on BOTH engines — an unguarded zero-Δt
+    leg would be NULL-comparison false on Spark but inf > max = true
+    on DuckDB (hazard #3). Plan: one user_id window exchange (both
+    lags share the sort), flags map-side, combinable agg on the same
+    key — geo_trip_length's exact plan family, so its measured
+    1.10× ×100 row prices this shape too."""
+    ev = with_json_field(
+        load(spark, sf_dir, "events"), "y", "props", "k", "int"
+    ).select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.col("value").alias("x"),
+        "y",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("t_us"),
+    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    dist = F.sqrt(
+        F.pow(F.col("x") - F.lag("x").over(w), 2)
+        + F.pow(F.col("y") - F.lag("y").over(w), 2)
+    )
+    dt_us = F.col("t_us") - F.lag("t_us").over(w)
+    legs = ev.select(
+        "user_id", dist.alias("dist"), dt_us.alias("dt_us")
+    ).where(F.col("dist").isNotNull())
+    speed_bad = (F.col("dt_us") > 0) & (
+        F.col("dist") / (F.col("dt_us").cast("double") / F.lit(1000000.0))
+        > F.lit(_SPEED_MAX)
+    )
+    return legs.groupBy("user_id").agg(
+        F.count("dist").alias("n_legs"),
+        F.sum(
+            F.when(F.col("dist") > F.lit(_TELEPORT_DIST), 1).otherwise(0)
+        ).alias("n_teleport"),
+        F.sum(
+            F.when(F.col("dt_us") > F.lit(_GAP_BREAK_US), 1).otherwise(0)
+        ).alias("n_gap_breaks"),
+        F.sum(F.when(speed_bad, 1).otherwise(0)).alias("n_speeding"),
     )

@@ -1021,3 +1021,353 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cust.join(ords, cust.k_a.eqNullSafe(ords.k_b)).select(
         F.col("k_a").alias("k"), "n_cust", "n_ord"
     )
+
+
+# ---------------------------------------------------------------------------
+# join_interval_overlap — bucket-blocked range join
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "join_interval_overlap",
+    oracle="""
+    WITH a AS (
+      SELECT o_orderkey AS a_id, CAST(o_orderdate AS DATE) AS a_s,
+             CAST(o_orderdate AS DATE) + 7 AS a_e
+      FROM orders WHERE o_orderkey % 97 = 0
+    ), b AS (
+      SELECT o_orderkey AS b_id, CAST(o_orderdate AS DATE) AS b_s,
+             CAST(o_orderdate AS DATE) + 10 AS b_e
+      FROM orders WHERE o_orderkey % 101 = 0
+    )
+    SELECT a_id, b_id,
+           CAST(date_diff('day', GREATEST(a_s, b_s), LEAST(a_e, b_e)) + 1
+                AS INTEGER) AS overlap_days
+    FROM a JOIN b ON a_s <= b_e AND b_s <= a_e
+    """,
+)
+def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interval-overlap join: order subset A (7-day windows) x subset
+    B (10-day windows), emit overlapping (a, b) pairs with the
+    overlap length — the promotion-window / maintenance-window /
+    session-overlap analytics shape, and the published bin-bucketing
+    range-join rewrite.
+
+    Scale plan: each interval EXPLODES to the 7-day buckets it
+    touches (<=2 for A, <=3 for B — bounded, data-independent), the
+    candidate join is an EQUI-join on bucket id, duplicates from
+    multi-bucket co-occurrence collapse with one distinct, and the
+    exact overlap predicate verifies. Correctness: any overlapping
+    pair shares at least one calendar day, and that day's bucket is
+    touched by both — recall 1.0 by construction. Cost is
+    sum-over-buckets of |A_b| x |B_b| instead of |A| x |B|: the same
+    locality argument as the ball-cover gate, on the time axis. The
+    oracle runs the genuine O(|A||B|) theta join."""
+    o = load(spark, sf_dir, "orders")
+    od = F.col("o_orderdate").cast("date")
+    a = o.where(F.col("o_orderkey") % 97 == 0).select(
+        F.col("o_orderkey").alias("a_id"),
+        od.alias("a_s"),
+        F.date_add(od, 7).alias("a_e"),
+    )
+    b = o.where(F.col("o_orderkey") % 101 == 0).select(
+        F.col("o_orderkey").alias("b_id"),
+        od.alias("b_s"),
+        F.date_add(od, 10).alias("b_e"),
+    )
+
+    def bucketed(df, s, e):
+        return df.withColumn(
+            "bucket",
+            F.explode(
+                F.sequence(
+                    F.floor(F.unix_date(F.col(s)) / 7),
+                    F.floor(F.unix_date(F.col(e)) / 7),
+                )
+            ),
+        )
+
+    cand = (
+        bucketed(a, "a_s", "a_e")
+        .join(bucketed(b, "b_s", "b_e"), "bucket")
+        # CANONICAL-BUCKET emission (the r5 minhash lesson applied to
+        # the time axis): every overlapping pair shares a day whose
+        # bucket lies in [max(first buckets), min(last buckets)], so
+        # the pair is tested ONLY in bucket max(fa, fb) — exactly-once
+        # by construction, no pair-dedup exchange. The prior
+        # .distinct() shuffled the full candidate pair stream (~400M
+        # rows at ×100) and cost 105 s vs 6.7 s for DuckDB's IEJoin.
+        .where(
+            F.col("bucket")
+            == F.greatest(
+                F.floor(F.unix_date(F.col("a_s")) / 7),
+                F.floor(F.unix_date(F.col("b_s")) / 7),
+            )
+        )
+        .drop("bucket")
+    )
+    return cand.where(
+        (F.col("a_s") <= F.col("b_e")) & (F.col("b_s") <= F.col("a_e"))
+    ).select(
+        "a_id",
+        "b_id",
+        (
+            F.datediff(
+                F.least("a_e", "b_e"), F.greatest("a_s", "b_s")
+            )
+            + 1
+        ).alias("overlap_days"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# join_bloom_prefilter — semi-join reduction via the Bloom sketch
+# ---------------------------------------------------------------------------
+
+_JBF_M = 262144  # bits (2^18), shared with agg_bloom_membership
+_JBF_K = 4
+# r11: positions come from xxhash64(key, seed) — the bloom is
+# semantically TRANSPARENT (the exact join removes false positives and
+# the oracle never computes it), so the hash needs no cross-engine
+# portability, and xxhash64 on the native long is ~1.7× cheaper per
+# probe than the md5+conv+substr string pipeline (×100 A/B below).
+# agg_bloom_membership keeps md5 positions — there the ORACLE
+# recomputes the same positions in SQL, so portability is load-bearing.
+# The key is cast to BIGINT before hashing: xxhash64 is sensitive to
+# the physical integer WIDTH (xxhash64(5::INT) != xxhash64(5::BIGINT)),
+# and a build/probe width divergence would be a silent FALSE NEGATIVE —
+# unrecoverable, unlike false positives which the exact join removes
+# (r11 second-review finding #1; the removed md5 form normalized via
+# CAST AS STRING).
+_JBF_POS_SPARK = f"pmod(xxhash64(cast({{key}} as bigint), {{i}}), {_JBF_M})"
+
+
+@query(
+    "join_bloom_prefilter",
+    oracle="""
+    SELECT o.o_orderpriority,
+           CAST(COUNT(*) AS BIGINT) AS n_orders,
+           ROUND(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 4)
+             AS sum_price
+    FROM orders o
+    WHERE o.o_custkey IN (
+      SELECT c_custkey FROM customer WHERE c_nationkey = 3
+    )
+    GROUP BY o.o_orderpriority
+    """,
+)
+def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-join REDUCTION via the Bloom sketch — the sketch family
+    composed INTO a join plan, which is how it earns its keep at
+    100 TB ([P med]: runtime bloom filters / semi-join reducers are
+    the standard technique for cutting a fact-table shuffle before an
+    exact join; Spark's own `spark.sql.optimizer.runtimeFilter.
+    bloomFilter` does this opaquely — here the reduction is explicit,
+    engine-neutral, and verifiable). Build: the dim keys (customers
+    of one nation) set K=4 xxhash64 bit positions; positions fold
+    into <=4096 64-bit WORDS via bit_or, and the whole <=32 KB bitmap
+    collapses into ONE broadcast row as a DENSE word-indexed long
+    array (r11: a word->mask MAP probed 4x/row was an O(words) linear
+    scan per element_at — 14.3 s at x100; dense get() is O(1)).
+    Probe: every order tests its 4 (word, mask) pairs with get() +
+    bitwise AND — pure codegen, NO shuffle, no explode. Survivors
+    (all true matches + ~0.2% false positives) then pass the exact
+    broadcast semi join, so the bloom stage is semantically
+    TRANSPARENT — the oracle is the PLAIN semi-join aggregate with
+    no bloom at all, and any dropped true key or leaked false
+    positive flips the hash.
+
+    Plan shape: dim side = 2 tiny aggs (positions -> words -> one
+    1-row dense long array); fact side = scan -> broadcast-array
+    get() membership test -> broadcast semi join -> ONE combinable
+    agg exchange. At 100 TB
+    with a SHUFFLE join on the other side of the reduction, the
+    bloom test deletes ~(1 - selectivity) of the fact shuffle bytes
+    — the entire point; here both joins broadcast, so the test run
+    shows transparency + pruning (asserted in tests), not wall-time.
+    Exact DECIMAL sums (house rule)."""
+    dim, prefiltered = _bloom_stage(spark, sf_dir)
+    exact = prefiltered.join(
+        F.broadcast(dim),
+        prefiltered.o_custkey == dim.c_custkey,
+        "left_semi",
+    )
+    return exact.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.round(
+            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double"), 4
+        ).alias("sum_price"),
+    )
+
+
+def _bloom_stage(spark: SparkSession, sf_dir: str):
+    """Build the bloom bitmap and return (dim, prefiltered-orders) —
+    the stage BEFORE the exact semi join. Split out so the pruning
+    test can count actual bloom survivors (true matches + false
+    positives) instead of the post-exact-join rows, which would be
+    blind to a vacuous always-true probe (r11 second-review finding
+    #2)."""
+    cust = load(spark, sf_dir, "customer")
+    dim = cust.where(F.col("c_nationkey") == 3).select("c_custkey")
+    # bloom build: K positions per key -> word/mask -> bit_or words
+    pos = dim.select(
+        F.explode(
+            F.array(
+                *[
+                    F.expr(_JBF_POS_SPARK.format(key="c_custkey", i=i))
+                    for i in range(_JBF_K)
+                ]
+            )
+        ).alias("pos")
+    )
+    words = pos.select(
+        F.expr("pos div 64").alias("word"),
+        F.expr("shiftleft(cast(1 as bigint), cast(pos % 64 as int))").alias(
+            "mask"
+        ),
+    ).groupBy("word").agg(F.bit_or("mask").alias("wordmask"))
+    # one array of (word, mask) ENTRIES per agg buffer row — explicit
+    # pairing via map_from_entries instead of positional alignment of
+    # two collect_list buffers (r6 ADVICE: the two-buffer form leans
+    # on an undocumented same-order implementation detail) — then
+    # DENSIFIED into a word-indexed long array. This is the r11 scale
+    # fix: Spark's element_at on a MapData is a LINEAR SCAN of the
+    # keys, so probing a ~4096-entry map 4×/row cost O(rows·K·words) —
+    # measured 14.3 s at ×100; the dense array's O(1) get() reads the
+    # word directly (14.3 → 3.24 s; xxhash64 positions take it to
+    # 1.95 s). The densification itself pays the map scan only once
+    # per word (4096², inside the 1-row aggregate) — negligible.
+    bitmap = words.agg(
+        F.map_from_entries(
+            F.collect_list(F.struct("word", "wordmask"))
+        ).alias("bm")
+    ).select(
+        F.expr(
+            f"transform(sequence(0, {_JBF_M // 64 - 1}),"
+            " w -> coalesce(element_at(bm, cast(w as bigint)),"
+            " cast(0 as bigint)))"
+        ).alias("bma")
+    )
+    o = load(spark, sf_dir, "orders")
+    probed = o.crossJoin(F.broadcast(bitmap))
+    # membership test as a forall over the position ARRAY: each of the
+    # K hash positions is computed ONCE as an array element and the
+    # lambda variable binds its VALUE, so deriving word + mask costs no
+    # re-evaluation — 4 hashes/row, not 8 (r6 ADVICE; a staged
+    # projection would NOT survive here: the filter predicate is
+    # deterministic, so PushDownPredicates would substitute the alias
+    # back to the full hash subtree on both references)
+    poss = ", ".join(
+        _JBF_POS_SPARK.format(key="o_custkey", i=i) for i in range(_JBF_K)
+    )
+    test = F.expr(
+        f"forall(array({poss}), p ->"
+        " (get(bma, cast(p div 64 as int))"
+        " & shiftleft(cast(1 as bigint), cast(p % 64 as int))) != 0)"
+    )
+    prefiltered = probed.where(test).drop("bma")
+    return dim, prefiltered
+
+
+# ---------------------------------------------------------------------------
+# join_scd2_temporal — facts joined to the dim version effective AS OF
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "join_scd2_temporal",
+    oracle="""
+    WITH versions AS (
+      SELECT o_custkey AS custkey, o_orderkey AS version_id,
+             CAST(o_orderdate AS DATE) AS eff_from
+      FROM orders WHERE o_custkey < 30 AND o_orderkey % 3 = 0
+    ), dim AS (
+      SELECT custkey, version_id, eff_from,
+             COALESCE(LEAD(eff_from) OVER (PARTITION BY custkey
+                                           ORDER BY eff_from, version_id),
+                      DATE '9999-12-31') AS eff_to
+      FROM versions
+    ), facts AS (
+      SELECT o_custkey AS custkey, o_orderkey AS fact_id,
+             CAST(o_orderdate AS DATE) AS fact_date, o_totalprice
+      FROM orders WHERE o_custkey < 30
+    ), j AS (
+      SELECT f.custkey, f.fact_id, f.o_totalprice, d.version_id
+      FROM facts f LEFT JOIN dim d
+        ON f.custkey = d.custkey
+       AND f.fact_date >= d.eff_from AND f.fact_date < d.eff_to
+    )
+    SELECT custkey,
+           CAST(COUNT(*) AS BIGINT) AS n_facts,
+           CAST(SUM(CASE WHEN version_id IS NOT NULL THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_matched,
+           CAST(COUNT(DISTINCT version_id) AS BIGINT) AS n_versions_hit,
+           ROUND(CAST(SUM(CASE WHEN version_id IS NOT NULL
+                               THEN CAST(o_totalprice AS DECIMAL(18,4))
+                               ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE), 4)
+             AS sum_matched_price
+    FROM j GROUP BY custkey
+    """,
+)
+def join_scd2_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SCD2 TEMPORAL dimension join — the warehouse as-of pattern
+    ([P high]: every fact-to-slowly-changing-dim join asks "which
+    version of the dimension was effective when this fact
+    happened?"; the reference's device registry and zone definitions
+    both change over time, and joining today's dim to last year's
+    trips is the classic silent corruption). Dim = SCD2 effectivity
+    ranges built with the snk_scd2 lead() machinery from a SUBSET of
+    versioning events (every 3rd order); facts = all of those
+    customers' orders, LEFT joined to the version whose
+    [eff_from, eff_to) half-open range covers the fact date — facts
+    before the first version stay unmatched (counted), and
+    zero-width ranges (same-day versions) match nothing by the
+    half-open declaration.
+
+    Plan shape: the dim build is one window exchange on the business
+    key; the temporal join is an EQUI join on custkey with the range
+    as a residual predicate (never a cross/theta join), so it
+    shuffles exactly like the plain key join and each fact probes
+    only its key's few versions. At 100 TB the dim side is
+    dim-sized — broadcast — and the fact side streams."""
+    orders = load(spark, sf_dir, "orders").where(F.col("o_custkey") < 30)
+    versions = orders.where(F.col("o_orderkey") % 3 == 0).select(
+        F.col("o_custkey").alias("custkey"),
+        F.col("o_orderkey").alias("version_id"),
+        F.col("o_orderdate").cast("date").alias("eff_from"),
+    )
+    w = Window.partitionBy("custkey").orderBy("eff_from", "version_id")
+    dim = versions.withColumn(
+        "eff_to",
+        F.coalesce(F.lead("eff_from").over(w), F.lit("9999-12-31").cast("date")),
+    )
+    facts = orders.select(
+        F.col("o_custkey").alias("f_custkey"),
+        F.col("o_orderkey").alias("fact_id"),
+        F.col("o_orderdate").cast("date").alias("fact_date"),
+        "o_totalprice",
+    )
+    j = facts.join(
+        F.broadcast(dim),
+        (F.col("f_custkey") == F.col("custkey"))
+        & (F.col("fact_date") >= F.col("eff_from"))
+        & (F.col("fact_date") < F.col("eff_to")),
+        "left",
+    )
+    dec = "decimal(18,4)"
+    return j.groupBy(F.col("f_custkey").alias("custkey")).agg(
+        F.count(F.lit(1)).alias("n_facts"),
+        F.sum(F.when(F.col("version_id").isNotNull(), 1).otherwise(0)).alias(
+            "n_matched"
+        ),
+        F.count_distinct("version_id").alias("n_versions_hit"),
+        F.round(
+            F.sum(
+                F.when(
+                    F.col("version_id").isNotNull(),
+                    F.col("o_totalprice").cast(dec),
+                ).otherwise(F.lit(0).cast(dec))
+            ).cast("double"),
+            4,
+        ).alias("sum_matched_price"),
+    )

@@ -33,8 +33,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
@@ -354,3 +353,776 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id long, frame_idx int, n_frames int, width int, height int, "
         "sum_px long, mean_px double",
     )
+
+
+# ---------------------------------------------------------------------------
+# mm_decode_wav — real PCM WAV decode through Arrow mapInPandas
+# ---------------------------------------------------------------------------
+
+_WAV_SCHEMA = (
+    "clip_id long, sample_rate long, n_samples long, "
+    "duration_ms double, rms double, peak long"
+)
+
+
+def _wav_params(clip_id: int) -> tuple[int, int]:
+    """Deterministic per-clip (n_samples, sample_rate) — closed form
+    shared with the oracle SQL."""
+    return 400 + (clip_id % 7) * 160, 8000 * (1 + clip_id % 3)
+
+
+def _wav_amps(clip_id: int, n: int):
+    """Deterministic int16 sample stream for one clip (closed form
+    shared with the oracle SQL): amp(k) in [-10000, 10000]."""
+    import numpy as np
+
+    k = np.arange(n, dtype=np.int64)
+    return ((clip_id * 7919 + k * 104729) % 20001 - 10000).astype("<i2")
+
+
+def _stage_wavs(spark: SparkSession, sf_dir: str) -> str:
+    """Stage one REAL RIFF/WAVE PCM file per clip (clip list = the
+    distinct user_id % 200 buckets present in events): 44-byte
+    canonical header via struct.pack + little-endian int16 mono
+    samples. The encode runs DISTRIBUTED through mapInPandas — the
+    same code path that would write millions of clips at 100 TB —
+    and parquet carries (clip_id, wav binary) only: every downstream
+    value must come out of the DECODE."""
+
+    def build(indir: str) -> None:
+        import struct
+
+        import pandas as pd
+
+        def encode(batches):
+            for pdf in batches:
+                out = []
+                for cid in pdf["clip_id"]:
+                    cid = int(cid)
+                    n, rate = _wav_params(cid)
+                    data = _wav_amps(cid, n).tobytes()
+                    hdr = (
+                        b"RIFF"
+                        + struct.pack("<I", 36 + len(data))
+                        + b"WAVE"
+                        + b"fmt "
+                        + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
+                        + b"data"
+                        + struct.pack("<I", len(data))
+                    )
+                    out.append((cid, hdr + data))
+                yield pd.DataFrame(out, columns=["clip_id", "wav"])
+
+        clips = (
+            load(spark, sf_dir, "events")
+            .select((F.col("user_id") % 200).alias("clip_id"))
+            .distinct()
+        )
+        (
+            clips.mapInPandas(encode, "clip_id long, wav binary")
+            .write.mode("overwrite")
+            .parquet(indir)
+        )
+
+    return stage_scratch("mm_wav", sf_dir, "events", build)
+
+
+@query(
+    "mm_decode_wav",
+    oracle="""
+    WITH clips AS (
+      SELECT DISTINCT user_id % 200 AS clip_id FROM events
+    ), params AS (
+      SELECT clip_id,
+             400 + (clip_id % 7) * 160 AS n_samples,
+             8000 * (1 + clip_id % 3) AS sample_rate
+      FROM clips
+    ), samples AS (
+      SELECT p.clip_id, p.n_samples, p.sample_rate,
+             ((p.clip_id * 7919 + t.k * 104729) % 20001) - 10000 AS amp
+      FROM params p CROSS JOIN range(1360) t(k)
+      WHERE t.k < p.n_samples
+
+    )
+    SELECT clip_id,
+           CAST(sample_rate AS BIGINT) AS sample_rate,
+           CAST(n_samples AS BIGINT) AS n_samples,
+           CAST(n_samples AS DOUBLE) / sample_rate * 1000.0 AS duration_ms,
+           SQRT(CAST(SUM(amp * amp) AS DOUBLE) / n_samples) AS rms,
+           CAST(MAX(ABS(amp)) AS BIGINT) AS peak
+    FROM samples
+    GROUP BY clip_id, sample_rate, n_samples
+    """,
+)
+def mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL audio decode, hash-checked (round-4 verdict item 5): the
+    staged table carries only (clip_id, wav BINARY); this query parses
+    the RIFF/WAVE header with struct.unpack (validating magics and
+    PCM format), decodes the little-endian int16 samples with
+    numpy.frombuffer, and emits per-clip sample_rate / n_samples /
+    duration / RMS / peak — ALL derived from the bytes. The oracle
+    recomputes the same figures from the pre-encode closed form (the
+    fn_geojson_route staging pattern), so a single wrong byte offset
+    in the parser flips the hash.
+
+    Exactness: sum-of-squares accumulates in int64 (exact, max ~1.4e11
+    < 2^53), so rms = sqrt(ss/n) and duration = n/rate*1000 are the
+    same correctly-rounded IEEE expressions on both engines — no
+    ROUND needed, the doubles match bit-for-bit.
+
+    Scale shape: binary payloads stay columnar through Arrow; decode
+    is a stateless mapInPandas over whatever partitioning the clips
+    arrive in (no shuffle at all — the per-clip output needs no
+    aggregation because a clip is one row). This is the real-codec
+    template: swap the body for soundfile/librosa and the Spark-side
+    plumbing (schema, batching, binary transport) is unchanged —
+    exactly what mm_decode_stub documents for JPEG/PNG, now proven
+    end-to-end on a codec the container CAN handle."""
+
+    def decode(batches):
+        import struct
+
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            rows = []
+            for cid, buf in zip(pdf["clip_id"], pdf["wav"]):
+                buf = bytes(buf)
+                if buf[0:4] != b"RIFF" or buf[8:12] != b"WAVE":
+                    raise ValueError(f"clip {cid}: not a RIFF/WAVE file")
+                if buf[12:16] != b"fmt ":
+                    raise ValueError(f"clip {cid}: missing fmt chunk")
+                fmt_size, audio_fmt, channels, rate, _byte_rate, _align, bits = (
+                    struct.unpack("<IHHIIHH", buf[16:36])
+                )
+                if (fmt_size, audio_fmt, channels, bits) != (16, 1, 1, 16):
+                    raise ValueError(f"clip {cid}: not 16-bit mono PCM")
+                if buf[36:40] != b"data":
+                    raise ValueError(f"clip {cid}: missing data chunk")
+                (data_size,) = struct.unpack("<I", buf[40:44])
+                amps = np.frombuffer(buf[44 : 44 + data_size], dtype="<i2")
+                n = len(amps)
+                a64 = amps.astype(np.int64)
+                ss = int(np.sum(a64 * a64))
+                rows.append(
+                    (
+                        int(cid),
+                        int(rate),
+                        n,
+                        n / rate * 1000.0,
+                        (ss / n) ** 0.5,
+                        int(np.max(np.abs(a64))),
+                    )
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "clip_id",
+                    "sample_rate",
+                    "n_samples",
+                    "duration_ms",
+                    "rms",
+                    "peak",
+                ],
+            )
+
+    wavs = spark.read.parquet(_stage_wavs(spark, sf_dir))
+    return wavs.mapInPandas(decode, _WAV_SCHEMA)
+
+
+_THUMB = 8  # fixed 8x8 thumbnail
+
+
+@query(
+    "mm_image_resize",
+    oracle=f"""
+    WITH g AS (
+      SELECT doc_id, text, n_chars AS L,
+             (n_chars % 64) + 1 AS w,
+             (n_chars % 48) + 1 AS h,
+             ((3 * ((n_chars % 64) + 1) + 3) // 4) * 4 AS stride
+      FROM documents
+    ), pos AS (
+      SELECT g.doc_id, r.k AS r, c.k AS c,
+             (((r.k * g.h) // {_THUMB}) * g.stride
+              + ((c.k * g.w) // {_THUMB}) * 3) % g.L AS p
+      FROM g CROSS JOIN range({_THUMB}) r(k) CROSS JOIN range({_THUMB}) c(k)
+    ), chars AS (
+      SELECT doc_id, CAST(i - 1 AS BIGINT) AS p,
+             ascii(substr(text, CAST(i AS INTEGER), 1)) AS b
+      FROM (SELECT doc_id, text, UNNEST(generate_series(1, L)) AS i FROM g)
+    )
+    SELECT g.doc_id,
+           CAST(g.w AS INTEGER) AS src_w,
+           CAST(g.h AS INTEGER) AS src_h,
+           CAST(SUM(ch.b) AS BIGINT) AS thumb_sum,
+           CAST(MAX(CASE WHEN pos.r = 0 AND pos.c = 0 THEN ch.b END)
+                AS INTEGER) AS px_first,
+           CAST(MAX(CASE WHEN pos.r = {_THUMB} - 1 AND pos.c = {_THUMB} - 1
+                         THEN ch.b END) AS INTEGER) AS px_last
+    FROM g
+    JOIN pos ON pos.doc_id = g.doc_id
+    JOIN chars ch ON ch.doc_id = pos.doc_id AND ch.p = pos.p
+    GROUP BY g.doc_id, g.w, g.h
+    """,
+)
+def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nearest-neighbor thumbnail (8x8) over REAL decoded BMP pixel
+    arrays — the resize half of the multimodal feature-extraction
+    story (decode is ``mm_decode_stub``): header parsed with
+    struct.unpack from the actual payload bytes, source pixel for
+    thumbnail cell (r, c) at buffer row r*h//8, column c*w//8 (blue
+    channel byte at row*stride + col*3 — BUFFER coordinates; BMP's
+    bottom-up storage only flips orientation, which a checksum
+    doesn't see), all 64 samples gathered with one numpy fancy-index.
+    Emits src dims, exact thumb byte sum, and the two corner pixels —
+    a wrong stride, offset, or floor-vs-round sampling rule flips
+    the hash.
+
+    The oracle re-derives every sampled byte from the closed form
+    (pixel q is ascii(text[q mod L]) — the mm_decode_stub pattern)
+    over a 64-cell lateral grid, so Spark's byte-level decode is
+    checked against a formulation that never touches the binary.
+
+    Scale shape: stateless Arrow ``mapInPandas``, zero shuffle,
+    binary columnar end-to-end; resize output is O(thumbnail) per
+    row regardless of source image size — exactly how a real
+    PIL/ffmpeg resize stage plugs in (swap the numpy body, keep the
+    plumbing). Integer-exact everywhere."""
+    payload = _bmp_payload(load(spark, sf_dir, "documents"))
+
+    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for did, buf in zip(pdf["doc_id"], pdf["payload"]):
+                buf = bytes(buf)
+                if buf[:2] != b"BM":
+                    raise NotImplementedError("non-BMP needs a codec library")
+                offset = struct.unpack_from("<I", buf, 10)[0]
+                _hs, w, h, _pl, bpp = struct.unpack_from("<IiiHH", buf, 14)
+                h = abs(h)
+                stride = ((bpp // 8) * w + 3) & ~3
+                px = np.frombuffer(buf, np.uint8, count=stride * h, offset=offset)
+                rs = (np.arange(_THUMB) * h) // _THUMB
+                cs = (np.arange(_THUMB) * w) // _THUMB
+                thumb = px[rs[:, None] * stride + cs[None, :] * 3]
+                rows.append(
+                    (
+                        int(did),
+                        int(w),
+                        int(h),
+                        int(thumb.astype(np.int64).sum()),
+                        int(thumb[0, 0]),
+                        int(thumb[-1, -1]),
+                    )
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id",
+                    "src_w",
+                    "src_h",
+                    "thumb_sum",
+                    "px_first",
+                    "px_last",
+                ],
+            )
+
+    return payload.mapInPandas(
+        resize,
+        "doc_id long, src_w int, src_h int, thumb_sum long, "
+        "px_first int, px_last int",
+    )
+
+
+# ---------------------------------------------------------------------------
+# mm_audio_features — windowed RMS / zero-crossing / peak over decoded PCM
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_audio_features",
+    oracle="""
+    WITH clips AS (
+      SELECT DISTINCT user_id % 200 AS clip_id FROM events
+    ), params AS (
+      SELECT clip_id,
+             400 + (clip_id % 7) * 160 AS n,
+             8000 * (1 + clip_id % 3) AS rate
+      FROM clips
+    ), s AS (
+      SELECT p.clip_id, p.n, t.k,
+             ((p.clip_id * 7919 + t.k * 104729) % 20001) - 10000 AS amp,
+             ((p.clip_id * 7919 + (t.k - 1) * 104729) % 20001) - 10000
+               AS amp_prev,
+             (4 * t.k) // p.n AS w
+      FROM params p CROSS JOIN range(1360) t(k)
+      WHERE t.k < p.n
+    )
+    SELECT clip_id,
+           CAST(w AS BIGINT) AS win,
+           CAST(n // 4 AS BIGINT) AS seg_len,
+           CAST(SUM(amp * amp) AS BIGINT) AS ss,
+           CAST(SUM(CASE WHEN k > 0 AND (4 * (k - 1)) // n = w
+                          AND amp_prev * amp < 0
+                     THEN 1 ELSE 0 END) AS BIGINT) AS zc,
+           CAST(MAX(ABS(amp)) AS BIGINT) AS peak,
+           SQRT(CAST(SUM(amp * amp) AS BIGINT) / (n // 4)) AS rms
+    FROM s GROUP BY clip_id, w, n
+    """,
+)
+def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Windowed audio FEATURE EXTRACTION over real decoded PCM — the
+    analysis step after mm_decode_wav's parse ([P med]: energy /
+    zero-crossing profiles are the first features of any audio
+    curation pipeline — silence trimming, speech/music screens).
+    Each staged RIFF/WAVE clip (real bytes, struct.unpack header
+    validation) is split into 4 equal windows (sample counts are
+    divisible by 4 by construction) and per window the decode emits
+    sum-of-squares, ZERO CROSSINGS (adjacent within-window pairs
+    with opposite signs — integer product test, no FP), and peak;
+    RMS = sqrt(ss/len) is left to the SQL layer as the single shared
+    IEEE tree (hazard rule 6).
+
+    The oracle re-derives every sample from the pre-encode closed
+    form and windows by (4k) div n — one wrong byte offset, stride,
+    or window boundary in the decoder flips the hash.
+
+    Scale shape: stateless Arrow mapInPandas decode (zero shuffle —
+    a clip's 4 windows come out of one decode call); binary stays
+    columnar. The real-codec seam is identical to mm_decode_wav:
+    swap the loop body for librosa and the plumbing stands."""
+    import struct
+
+    import numpy as np
+
+    wavs = spark.read.parquet(_stage_wavs(spark, sf_dir))
+
+    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for cid, buf in zip(pdf["clip_id"], pdf["wav"]):
+                buf = bytes(buf)
+                if buf[0:4] != b"RIFF" or buf[8:12] != b"WAVE":
+                    raise ValueError(f"clip {cid}: not a RIFF/WAVE file")
+                (data_size,) = struct.unpack("<I", buf[40:44])
+                amps = np.frombuffer(
+                    buf[44 : 44 + data_size], dtype="<i2"
+                ).astype(np.int64)
+                n = len(amps)
+                q = n // 4
+                for w in range(4):
+                    seg = amps[w * q : (w + 1) * q]
+                    rows.append(
+                        (
+                            int(cid),
+                            w,
+                            q,
+                            int((seg * seg).sum()),
+                            int(((seg[1:] * seg[:-1]) < 0).sum()),
+                            int(np.abs(seg).max()),
+                        )
+                    )
+            yield pd.DataFrame(
+                rows, columns=["clip_id", "win", "seg_len", "ss", "zc", "peak"]
+            )
+
+    out = wavs.mapInPandas(
+        feats,
+        "clip_id long, win long, seg_len long, ss long, zc long, peak long",
+    )
+    return out.withColumn(
+        "rms", F.sqrt(F.col("ss") / F.col("seg_len"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# mm_image_histogram — luminance histogram over decoded BMP pixels
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_image_histogram",
+    oracle="""
+    WITH g AS (
+      SELECT doc_id, text, n_chars AS L,
+             (n_chars % 64) + 1 AS w,
+             (n_chars % 48) + 1 AS h,
+             ((3 * ((n_chars % 64) + 1) + 3) // 4) * 4 AS stride
+      FROM documents
+    ), px AS (
+      SELECT g.doc_id,
+             ascii(substr(g.text,
+                          CAST((r.k * g.stride + c.k) % g.L AS INTEGER) + 1,
+                          1)) AS b
+      FROM g CROSS JOIN range(48) r(k) CROSS JOIN range(192) c(k)
+      WHERE r.k < g.h AND c.k < 3 * g.w
+    )
+    SELECT doc_id,
+           CAST(b // 32 AS INTEGER) AS bin,
+           CAST(COUNT(*) AS BIGINT) AS n_px
+    FROM px GROUP BY doc_id, b // 32
+    """,
+)
+def mm_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-image 8-bin intensity HISTOGRAM over real decoded BMP
+    pixel arrays — the statistics step after decode/resize ([P med]:
+    histograms drive exposure screens, near-black frame filters, and
+    perceptual dedup prefilters). The decode parses the actual
+    headers, trims the stride padding, and bincounts the pixel bytes
+    into 8 intensity bins (b div 32); only non-empty bins are
+    emitted, matching the oracle's group-by-present semantics.
+
+    The oracle reconstructs every TRIMMED pixel byte from the encode
+    closed form (byte at buffer position p cycles the ASCII text:
+    ascii(text[p mod L]); the §2.21 ASCII precondition test makes
+    the char/byte identification sound) over a bounded 48×192
+    lateral grid — a decoder that miscounts stride or forgets to
+    trim padding flips the hash.
+
+    Scale shape: stateless Arrow mapInPandas, zero shuffle, O(bins)
+    output per image — histogram extraction at 100 TB is scan-bound
+    and embarrassingly parallel."""
+    import struct
+
+    import numpy as np
+
+    payload = _bmp_payload(load(spark, sf_dir, "documents"))
+
+    def hist(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for did, buf in zip(pdf["doc_id"], pdf["payload"]):
+                buf = bytes(buf)
+                if buf[:2] != b"BM":
+                    raise ValueError(f"doc {did}: not a BMP")
+                offset = struct.unpack_from("<I", buf, 10)[0]
+                _sz, w, h, _pl, bpp = struct.unpack_from("<IiiHH", buf, 14)
+                stride = ((bpp // 8) * w + 3) & ~3
+                px = np.frombuffer(
+                    buf, dtype=np.uint8, count=stride * abs(h), offset=offset
+                )
+                trimmed = px.reshape(abs(h), stride)[:, : (bpp // 8) * w]
+                counts = np.bincount(trimmed.ravel() >> 5, minlength=8)
+                for b in range(8):
+                    if counts[b]:
+                        rows.append((int(did), b, int(counts[b])))
+            yield pd.DataFrame(rows, columns=["doc_id", "bin", "n_px"])
+
+    return payload.mapInPandas(hist, "doc_id long, bin int, n_px long")
+
+
+# ---------------------------------------------------------------------------
+# mm_video_scene_cut — frame-difference scene-cut detection
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_video_scene_cut",
+    oracle="""
+    WITH vids AS (
+      SELECT doc_id FROM documents WHERE doc_id % 5 = 0
+    ), dims AS (
+      SELECT doc_id, 8 + doc_id % 24 AS n, 8 + (doc_id % 3) * 4 AS w, 8 AS h
+      FROM vids
+    ), fr AS (
+      SELECT d.doc_id, d.n, d.w, d.h, f.k AS f
+      FROM dims d CROSS JOIN range(32) f(k)
+      WHERE f.k >= 1 AND f.k < d.n
+    ), dif AS (
+      SELECT fr.doc_id, fr.n, fr.f, fr.w, fr.h,
+             7 * (fr.w * fr.h)
+             + 242 * SUM(CASE WHEN (fr.doc_id * 31 + (fr.f - 1) * 7
+                                    + p.i * 13) % 256 >= 249
+                              THEN 1 ELSE 0 END) AS d
+      FROM fr CROSS JOIN range(128) p(i)
+      WHERE p.i < fr.w * fr.h
+      GROUP BY fr.doc_id, fr.n, fr.f, fr.w, fr.h
+    )
+    SELECT doc_id,
+           CAST(MAX(n) AS INT) AS n_frames,
+           CAST(SUM(CASE WHEN d > 15 * w * h THEN 1 ELSE 0 END) AS INT)
+             AS n_cuts,
+           CAST(SUM(d) AS BIGINT) AS total_diff,
+           CAST(MAX(d) AS BIGINT) AS max_diff,
+           CAST(COALESCE(MIN(CASE WHEN d > 15 * w * h THEN f END), -1) AS INT)
+             AS first_cut
+    FROM dif GROUP BY doc_id
+    """,
+)
+def mm_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scene-cut detection over REAL decoded video frames — the
+    temporal multimodal feature beside frame sampling ([P med]: cut
+    density / shot length is a standard video-curation signal, and
+    frame-difference thresholding is its codec-free core). The
+    staged RVID container carries only (doc_id, video BINARY); this
+    decodes every gray8 frame, computes each adjacent-frame sum of
+    absolute pixel differences with one vectorized np.diff, and
+    declares a cut where the difference exceeds 15·w·h (per-pixel
+    mean > 15 — scale-free across the three staged widths). Output
+    per video: frames, cuts, total/max difference, first cut index.
+
+    The oracle re-derives every figure from the pre-encode closed
+    form px(f,i) = (doc_id·31 + f·7 + i·13) % 256: the +7 step wraps
+    exactly where px(f−1,i) ≥ 249, so |diff| is 7·(wh−k) + 249·k
+    with k the wrap count — a wrong frame offset, stride, or
+    boundary flips the hash. All integers, no FP anywhere.
+
+    Plan shape: stateless Arrow mapInPandas over the staged table —
+    zero shuffle, O(videos) output; at 100 TB it is scan-bound and
+    embarrassingly parallel, the decode-adjacent shape every video
+    pipeline starts with."""
+    staged = spark.read.parquet(_stage_videos(spark, sf_dir))
+
+    def cuts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for did, blob in zip(pdf["doc_id"], pdf["video"]):
+                b = bytes(blob)
+                if b[:4] != _FRAME_MAGIC:
+                    raise ValueError(f"bad container magic for doc {did}")
+                n, w, h = struct.unpack_from("<III", b, 4)
+                px = (
+                    np.frombuffer(b, np.uint8, n * w * h, 16)
+                    .reshape(n, w * h)
+                    .astype(np.int16)
+                )
+                d = np.abs(np.diff(px, axis=0)).sum(axis=1, dtype=np.int64)
+                cut = d > 15 * w * h
+                rows.append(
+                    (
+                        int(did),
+                        int(n),
+                        int(cut.sum()),
+                        int(d.sum()),
+                        int(d.max()),
+                        int(np.argmax(cut)) + 1 if cut.any() else -1,
+                    )
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id",
+                    "n_frames",
+                    "n_cuts",
+                    "total_diff",
+                    "max_diff",
+                    "first_cut",
+                ],
+            )
+
+    return staged.mapInPandas(
+        cuts,
+        schema=(
+            "doc_id long, n_frames int, n_cuts int, "
+            "total_diff long, max_diff long, first_cut int"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# mm_audio_silence_trim — silence-trim bounds over real decoded PCM
+# ---------------------------------------------------------------------------
+
+_SILENCE_T = 9000
+
+
+@query(
+    "mm_audio_silence_trim",
+    oracle=f"""
+    WITH clips AS (
+      SELECT DISTINCT user_id % 200 AS clip_id FROM events
+    ), dims AS (
+      SELECT clip_id, 400 + (clip_id % 7) * 160 AS n FROM clips
+    ), s AS (
+      SELECT d.clip_id, d.n, p.k,
+             (d.clip_id * 7919 + p.k * 104729) % 20001 - 10000 AS amp
+      FROM dims d CROSS JOIN range(1360) p(k)
+      WHERE p.k < d.n
+    ), loud AS (
+      SELECT clip_id, n,
+             MIN(CASE WHEN abs(amp) >= {_SILENCE_T} THEN k END) AS first_loud,
+             MAX(CASE WHEN abs(amp) >= {_SILENCE_T} THEN k END) AS last_loud,
+             SUM(CASE WHEN abs(amp) >= {_SILENCE_T} THEN 1 ELSE 0 END) AS n_loud
+      FROM s GROUP BY clip_id, n
+    )
+    SELECT clip_id,
+           CAST(n AS INT) AS n_samples,
+           CAST(COALESCE(first_loud, -1) AS INT) AS first_loud,
+           CAST(COALESCE(last_loud, -1) AS INT) AS last_loud,
+           CAST(n_loud AS BIGINT) AS n_loud,
+           CAST(CASE WHEN first_loud IS NULL THEN 0
+                     ELSE last_loud - first_loud + 1 END AS INT) AS trimmed_len
+    FROM loud
+    """,
+)
+def mm_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Silence trimming over REAL decoded PCM — the third audio
+    operator (decode → features → TRIM; [P med]: leading/trailing
+    silence removal is the first edit every speech-corpus pipeline
+    applies, and its byte-exact bounds decide what downstream
+    features see). Per clip: the first/last sample whose |amplitude|
+    ≥ 9000, the above-threshold sample count, and the trimmed
+    length. The staged table carries (clip_id, wav BINARY) only —
+    bounds come from struct-unpacking the actual RIFF header and
+    one vectorized np.nonzero over the int16 samples; the oracle
+    re-derives every bound from the pre-encode closed form
+    amp(k) = (clip_id·7919 + k·104729) % 20001 − 10000, so a wrong
+    header offset, endianness, or off-by-one bound flips the hash.
+
+    Plan shape: stateless Arrow mapInPandas, zero shuffle,
+    O(clips) output — scan-bound and embarrassingly parallel at
+    100 TB, identical to the decode/feature siblings."""
+    staged = spark.read.parquet(_stage_wavs(spark, sf_dir))
+
+    def trim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for cid, blob in zip(pdf["clip_id"], pdf["wav"]):
+                b = bytes(blob)
+                if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+                    raise ValueError(f"bad wav container for clip {cid}")
+                (data_len,) = struct.unpack_from("<I", b, 40)
+                amps = np.frombuffer(b, "<i2", data_len // 2, 44)
+                loud = np.nonzero(np.abs(amps.astype(np.int32)) >= _SILENCE_T)[0]
+                if len(loud):
+                    first, last = int(loud[0]), int(loud[-1])
+                    tlen = last - first + 1
+                else:
+                    first = last = -1
+                    tlen = 0
+                rows.append(
+                    (int(cid), len(amps), first, last, int(len(loud)), tlen)
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "clip_id",
+                    "n_samples",
+                    "first_loud",
+                    "last_loud",
+                    "n_loud",
+                    "trimmed_len",
+                ],
+            )
+
+    return staged.mapInPandas(
+        trim,
+        schema=(
+            "clip_id long, n_samples int, first_loud int, last_loud int, "
+            "n_loud long, trimmed_len int"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# mm_image_embed_sim — pooled pixel embedding + exact top-k similarity
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_image_embed_sim",
+    oracle="""
+    WITH g AS (
+      SELECT doc_id, text, n_chars AS L,
+             (n_chars % 64) + 1 AS w,
+             (n_chars % 48) + 1 AS h,
+             ((3 * ((n_chars % 64) + 1) + 3) // 4) * 4 AS stride
+      FROM documents
+    ), px AS (
+      SELECT g.doc_id,
+             CAST((8 * r.k) // g.h AS INTEGER) AS band,
+             ascii(substr(g.text,
+                          CAST((r.k * g.stride + c.k) % g.L AS INTEGER) + 1,
+                          1)) AS b
+      FROM g CROSS JOIN range(48) r(k) CROSS JOIN range(192) c(k)
+      WHERE r.k < g.h AND c.k < 3 * g.w
+    ), emb AS (
+      SELECT doc_id, band, CAST(SUM(b) AS BIGINT) AS s
+      FROM px GROUP BY doc_id, band
+    ), probe AS (
+      SELECT band, s FROM emb
+      WHERE doc_id = (SELECT MIN(doc_id) FROM documents)
+    ), dots AS (
+      SELECT e.doc_id, CAST(SUM(e.s * p.s) AS BIGINT) AS dot
+      FROM emb e JOIN probe p ON e.band = p.band
+      WHERE e.doc_id <> (SELECT MIN(doc_id) FROM documents)
+      GROUP BY e.doc_id
+    ), ranked AS (
+      SELECT doc_id, dot,
+             ROW_NUMBER() OVER (ORDER BY dot DESC, doc_id) AS rk
+      FROM dots
+    )
+    SELECT doc_id, dot, CAST(rk AS BIGINT) AS rk
+    FROM ranked WHERE rk <= 5
+    """,
+)
+def mm_image_embed_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image-embedding similarity over REAL decoded pixels — the
+    bridge from the multimodal decode family into the embedding/ANN
+    family ([P med]: perceptual image dedup and near-dup search pool
+    decoded pixels into a small vector, then rank by similarity;
+    this is that pipeline end-to-end with a deterministic pooled
+    embedding). Embedding = 8 horizontal-band pixel sums over the
+    stride-trimmed BMP buffer (band = (8·row) div h — balanced for
+    any height); similarity = EXACT integer dot product against the
+    min-doc_id probe image; top-5 with the declared (dot DESC,
+    doc_id) tie-break. No floats anywhere — the ranking is
+    bit-identical across engines, partitionings, and retries (a
+    cosine variant differs only by two norms; the integer core is
+    the point).
+
+    The decode is the real thing: struct-unpack headers, trim stride
+    padding, one numpy reshape+sum per band — the oracle re-derives
+    every band sum from the encode closed form over the bounded
+    48×192 grid, so a wrong stride, band boundary, or padding slip
+    flips the hash. Plan shape: stateless Arrow mapInPandas emits
+    (doc, band, sum) rows (zero shuffle), the 8-row probe
+    broadcasts, one combinable dot-product agg + TakeOrdered top-5.
+    At 100 TB this is the exact-rerank stage of llm_ann_* —
+    candidates come from the LSH/IVF keys, this scores them."""
+    import struct as _struct
+    from collections.abc import Iterator as _It
+
+    import numpy as _np
+    import pandas as _pd
+
+
+    payload = _bmp_payload(load(spark, sf_dir, "documents"))
+
+    def embed(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for did, blob in zip(pdf["doc_id"], pdf["payload"]):
+                b = bytes(blob)
+                off = _struct.unpack_from("<I", b, 10)[0]
+                w, h = _struct.unpack_from("<ii", b, 18)
+                stride = ((3 * w + 3) // 4) * 4
+                buf = _np.frombuffer(b, _np.uint8, stride * h, off).reshape(
+                    h, stride
+                )[:, : 3 * w].astype(_np.int64)
+                band = (8 * _np.arange(h)) // h
+                for bi in range(8):
+                    rows.append((int(did), bi, int(buf[band == bi].sum())))
+            yield _pd.DataFrame(rows, columns=["doc_id", "band", "s"])
+
+    emb = payload.mapInPandas(embed, schema="doc_id long, band int, s long")
+    probe_id = load(spark, sf_dir, "documents").agg(
+        F.min("doc_id").alias("pid")
+    )
+    probe = (
+        emb.join(F.broadcast(probe_id), emb.doc_id == F.col("pid"))
+        .select(F.col("band").alias("p_band"), F.col("s").alias("p_s"))
+    )
+    dots = (
+        emb.join(F.broadcast(probe_id.select("pid")), emb.doc_id == F.col("pid"), "left_anti")
+        .join(F.broadcast(probe), F.col("band") == F.col("p_band"))
+        .groupBy("doc_id")
+        .agg(F.sum(F.col("s") * F.col("p_s")).alias("dot"))
+    )
+    top = dots.withColumn(
+        "rk",
+        F.row_number().over(Window.orderBy(F.col("dot").desc(), F.col("doc_id"))),
+    ).where(F.col("rk") <= 5)
+    return top.select("doc_id", "dot", F.col("rk").cast("long").alias("rk"))

@@ -158,46 +158,43 @@ def flt_like_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# prj_unpivot — wide-to-long reshape
+# ---------------------------------------------------------------------------
+
+
 @query(
-    "dq_constraint_report",
+    "prj_unpivot",
     oracle="""
-    SELECT
-      CAST(COUNT(*) AS BIGINT) AS n_rows,
-      CAST(COUNT(*) FILTER (l_quantity <= 0 OR l_quantity > 50) AS BIGINT)
-        AS bad_quantity,
-      CAST(COUNT(*) FILTER (l_discount < 0 OR l_discount > 0.1) AS BIGINT)
-        AS bad_discount,
-      CAST(COUNT(*) FILTER (l_shipdate IS NULL) AS BIGINT) AS null_shipdate,
-      CAST(COUNT(*) FILTER (l_extendedprice <= 0) AS BIGINT) AS bad_price,
-      CAST((SELECT COUNT(*) FROM lineitem l
-            WHERE NOT EXISTS (SELECT 1 FROM orders o
-                              WHERE o.o_orderkey = l.l_orderkey)) AS BIGINT)
-        AS orphan_lineitems
-    FROM lineitem
+    WITH w AS (
+      SELECT l_returnflag,
+             ROUND(SUM(l_quantity), 4) AS sum_qty,
+             ROUND(SUM(l_extendedprice), 4) AS sum_price,
+             ROUND(SUM(l_discount), 4) AS sum_disc
+      FROM lineitem GROUP BY l_returnflag
+    )
+    SELECT l_returnflag, 'sum_qty' AS metric, sum_qty AS val FROM w
+    UNION ALL
+    SELECT l_returnflag, 'sum_price', sum_price FROM w
+    UNION ALL
+    SELECT l_returnflag, 'sum_disc', sum_disc FROM w
     """,
 )
-def dq_constraint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass data-quality report: range violations, null checks,
-    and referential-integrity orphans — the reference's row-at-a-time
-    validation filters ([P high]) generalized into a single scan of
-    conditional aggregates plus one anti-join. This is the
-    assert-before-publish gate of an ETL pipeline: at 100 TB the
-    conditional counts ride ONE scan (no per-rule passes), and the
-    RI check is a broadcast/shuffle anti-join, not a lookup loop."""
+def prj_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Wide→long unpivot (melt) of a per-flag aggregate into
+    (key, metric, value) rows — the inverse of agg_pivot, used to
+    normalize wide report tables back into EAV form. Spark's native
+    ``DataFrame.unpivot`` expands rows map-side (an Expand node, no
+    shuffle); the oracle is the equivalent UNION ALL."""
     li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    orphans = li.join(
-        orders, li.l_orderkey == orders.o_orderkey, "left_anti"
-    ).agg(F.count(F.lit(1)).alias("orphan_lineitems"))
-    report = li.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            F.when((F.col("l_quantity") <= 0) | (F.col("l_quantity") > 50), 1).otherwise(0)
-        ).alias("bad_quantity"),
-        F.sum(
-            F.when((F.col("l_discount") < 0) | (F.col("l_discount") > 0.1), 1).otherwise(0)
-        ).alias("bad_discount"),
-        F.sum(F.when(F.col("l_shipdate").isNull(), 1).otherwise(0)).alias("null_shipdate"),
-        F.sum(F.when(F.col("l_extendedprice") <= 0, 1).otherwise(0)).alias("bad_price"),
+    wide = li.groupBy("l_returnflag").agg(
+        F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
+        F.round(F.sum("l_extendedprice"), 4).alias("sum_price"),
+        F.round(F.sum("l_discount"), 4).alias("sum_disc"),
     )
-    return report.crossJoin(orphans)
+    return wide.unpivot(
+        ids=["l_returnflag"],
+        values=["sum_qty", "sum_price", "sum_disc"],
+        variableColumnName="metric",
+        valueColumnName="val",
+    )

@@ -153,3 +153,63 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("custkey")
     )
     return early.intersectAll(late)
+
+
+# ---------------------------------------------------------------------------
+# set_union_by_name — schema-evolution union (unionByName, missing cols)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "set_union_by_name",
+    oracle="""
+    WITH u AS (
+      SELECT o_orderkey, o_orderstatus,
+             CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents
+      FROM orders WHERE o_orderkey % 2 = 0
+      UNION ALL BY NAME
+      SELECT CAST(YEAR(o_orderdate) AS INTEGER) AS order_year,
+             o_orderkey, o_orderstatus
+      FROM orders WHERE o_orderkey % 2 = 1
+    )
+    SELECT o_orderstatus,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(COUNT(cents) AS BIGINT) AS n_with_cents,
+           CAST(COUNT(order_year) AS BIGINT) AS n_with_year,
+           CAST(SUM(cents) AS BIGINT) AS sum_cents,
+           CAST(SUM(order_year) AS BIGINT) AS sum_year
+    FROM u
+    GROUP BY o_orderstatus
+    """,
+)
+def set_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Schema-evolution union — ``unionByName(allowMissingColumns=
+    True)`` (DuckDB: ``UNION ALL BY NAME``): the two branches project
+    DIFFERENT column sets in DIFFERENT orders (old extract has cents
+    but no year, new extract has year but no cents, key columns
+    swapped), and the union must align by NAME and NULL-fill each
+    side's missing column — the positional UNION ALL (set_union_all)
+    would mis-zip the swapped columns or reject the width mismatch.
+    The disjoint pmod split makes every source row appear exactly
+    once; COUNT(col) vs COUNT(*) pins the NULL-fill pattern per
+    branch, the SUMs pin value survival. Plan: two scans of the same
+    parquet (each with its parity filter pushed) + one combinable agg
+    exchange."""
+    o = load(spark, sf_dir, "orders")
+    cents = F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
+    old_extract = o.where(F.col("o_orderkey") % 2 == 0).select(
+        "o_orderkey", "o_orderstatus", cents
+    )
+    new_extract = o.where(F.col("o_orderkey") % 2 == 1).select(
+        F.year("o_orderdate").cast("int").alias("order_year"),
+        "o_orderkey",
+        "o_orderstatus",
+    )
+    u = old_extract.unionByName(new_extract, allowMissingColumns=True)
+    return u.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count("cents").alias("n_with_cents"),
+        F.count("order_year").alias("n_with_year"),
+        F.sum("cents").alias("sum_cents"),
+        F.sum("order_year").cast("long").alias("sum_year"),
+    )

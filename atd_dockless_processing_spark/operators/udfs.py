@@ -16,8 +16,9 @@ always Arrow-batched where the API allows:
 
 from __future__ import annotations
 
-import pandas as pd
+import uuid as _uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -308,3 +309,153 @@ def udf_arrow_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("mix").alias("sum_mix"),
     )
+
+
+# ---------------------------------------------------------------------------
+# udtf_arrow_lateral — Arrow-optimized Python UDTF under LATERAL (4.1)
+# ---------------------------------------------------------------------------
+
+try:  # pyspark >= 3.5 (useArrow kwarg: 4.0+)
+    from pyspark.sql.functions import udtf as _udtf
+
+    @_udtf(returnType="token string", useArrow=True)
+    class _PartTokenUDTF:
+        """Yield each whitespace token of a part name. Arrow-optimized:
+        eval() rows batch through the Arrow channel instead of pickle
+        (`useArrow=True` — the explicit per-function opt-in, not the
+        session-wide conf)."""
+
+        def eval(self, name: str):
+            for t in name.split(" "):
+                yield (t,)
+
+    _HAVE_ARROW_UDTF = True
+except (ImportError, TypeError):  # pragma: no cover - pyspark < 4.0
+    _HAVE_ARROW_UDTF = False
+
+
+@query(
+    "udtf_arrow_lateral",
+    oracle="""
+    SELECT u.token, CAST(COUNT(*) AS BIGINT) AS n
+    FROM part, unnest(string_split(p_name, ' ')) AS u(token)
+    GROUP BY 1
+    ORDER BY n DESC, token
+    LIMIT 20
+    """,
+)
+def udtf_arrow_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ARROW-OPTIMIZED Python UDTF (`@udtf(useArrow=True)`, Spark
+    4.0/4.1) applied with a LATERAL correlation, feeding a top-k
+    token-frequency aggregate — the Arrow rung of the UDTF ladder
+    (udtf_posexplode = built-in JVM, udtf_python_custom = pickled
+    generator, this key = Arrow-batched generator). Output rows
+    leave the Python worker as Arrow record batches, so per-row cost
+    is amortized to the batch like a pandas UDF's.
+
+    Scale posture: same as udtf_python_custom — the generator is the
+    SURFACE; the production twin of this exact transform is
+    explode(split(p_name, ' ')) (pure JVM, same two-exchange
+    top-k plan). Ordered (n DESC, token) with LIMIT 20 keeps the
+    result deterministic under ties; uuid-scoped function and view
+    names keep re-runs from colliding."""
+    if not _HAVE_ARROW_UDTF:  # pragma: no cover
+        raise NotImplementedError(
+            "@udtf(useArrow=True) requires pyspark >= 4.0"
+        )
+    tag = _uuid.uuid4().hex[:8]
+    fname, vname = f"part_tokens_{tag}", f"part_{tag}"
+    spark.udtf.register(fname, _PartTokenUDTF)
+    load(spark, sf_dir, "part").select("p_name").createOrReplaceTempView(vname)
+    out = spark.sql(f"""
+        SELECT t.token, CAST(COUNT(*) AS BIGINT) AS n
+        FROM {vname} p, LATERAL {fname}(p.p_name) t
+        GROUP BY t.token
+        ORDER BY n DESC, token
+        LIMIT 20
+    """)
+    spark.catalog.dropTempView(vname)
+    return out
+
+
+# ---------------------------------------------------------------------------
+# udtf_table_argument — polymorphic table function: TABLE(...) PARTITION BY
+# ---------------------------------------------------------------------------
+
+if _HAVE_ARROW_UDTF:
+
+    @_udtf(returnType="lang string, n_docs bigint, n_up bigint, max_chars bigint")
+    class _LangRunStatsUDTF:
+        """Per-partition streaming reduction over an ORDERED TABLE
+        argument: rows of one lang arrive in doc_id order through
+        eval(); terminate() emits one summary row. State is O(1) per
+        partition — the streamed-aggregation contract the TABLE
+        argument surface exists for."""
+
+        def __init__(self) -> None:
+            self._lang = None
+            self._n = 0
+            self._n_up = 0
+            self._max = None
+            self._prev = None
+
+        def eval(self, row):
+            self._lang = row["lang"]
+            c = row["n_chars"]
+            self._n += 1
+            if self._prev is not None and c > self._prev:
+                self._n_up += 1
+            self._max = c if self._max is None else max(self._max, c)
+            self._prev = c
+
+        def terminate(self):
+            if self._lang is not None:
+                yield self._lang, self._n, self._n_up, self._max
+
+
+@query(
+    "udtf_table_argument",
+    oracle="""
+    SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(COUNT(*) FILTER (WHERE n_chars > prev) AS BIGINT) AS n_up,
+           CAST(MAX(n_chars) AS BIGINT) AS max_chars
+    FROM (SELECT lang, n_chars,
+                 lag(n_chars) OVER (PARTITION BY lang ORDER BY doc_id) AS prev
+          FROM documents)
+    GROUP BY lang
+    """,
+)
+def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """POLYMORPHIC TABLE FUNCTION — a Python UDTF invoked with a
+    TABLE(...) argument plus `PARTITION BY lang ORDER BY doc_id`
+    (Spark 3.5+/4.x): the engine repartitions and per-partition-sorts
+    the input, then STREAMS each language's rows through eval() in
+    doc_id order; terminate() emits one summary row per partition
+    (count, ascending-step count — an order-SENSITIVE stat that
+    would silently corrupt if the ORDER BY contract broke — and max).
+    This is the table-in/table-out UDF surface (SQL:2016 PTF);
+    DuckDB's equivalent spelling is the lag() window + group-by the
+    oracle uses.
+
+    Scale posture: the plan is exchange-equivalent to a window over
+    (lang, doc_id) — one hash exchange + in-partition sort — with the
+    reduction in Python instead of JVM window state; O(1) state per
+    partition, rows never buffered. The production twin of THIS stat
+    is the lag()+count_if window form (win_lag_lead family); the key
+    pins the PTF contract, and cross-form equality is pinned in
+    tests."""
+    if not _HAVE_ARROW_UDTF:  # pragma: no cover
+        raise NotImplementedError("TABLE-argument @udtf requires pyspark >= 3.5")
+    tag = _uuid.uuid4().hex[:8]
+    fname, vname = f"lang_run_stats_{tag}", f"docs_ptf_{tag}"
+    spark.udtf.register(fname, _LangRunStatsUDTF)
+    load(spark, sf_dir, "documents").select(
+        "lang", "doc_id", "n_chars"
+    ).createOrReplaceTempView(vname)
+    out = spark.sql(f"""
+        SELECT * FROM {fname}(
+          TABLE({vname}) PARTITION BY lang ORDER BY doc_id
+        )
+    """)
+    spark.catalog.dropTempView(vname)
+    return out

@@ -9,12 +9,15 @@ the inference pass (a full extra read at 100 TB).
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
-from ..tables import load, scratch_dir
+from ..tables import load, scratch_dir, stage_scratch
 
 
 @query(
@@ -153,7 +156,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write a lineitem subset to ORC, re-read with explicit schema,
     aggregate. ORC is Spark's second first-class columnar format
     (predicate pushdown + column pruning, like parquet) — format
-    breadth for ingest interop."""
+    coverage for ingest interop."""
     li = load(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 25)
     subset = li.select("l_orderkey", "l_linestatus", "l_quantity", "l_extendedprice")
     path = scratch_dir("src_orc_roundtrip", sf_dir.strip("/").replace("/", "_"))
@@ -311,157 +314,521 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# stm_python_stream_source — PySpark 4 Python STREAMING DataSource demo
+# src_schema_merge — schema-evolution source
 # ---------------------------------------------------------------------------
-
-# module-level so the @query oracle f-string below stays valid even
-# on a pyspark<4 fallback import (r8 review finding #2)
-_CS_BATCHES, _CS_PER = 5, 1000
-
-try:  # pyspark >= 4.0
-    from pyspark.sql.datasource import SimpleDataSourceStreamReader
-
-    class SyntheticCounterStream(DataSource):
-        """Custom STREAMING source via the PySpark 4 Python DataSource
-        API — the streaming half of the V2 surface whose batch half is
-        ``SyntheticFeedDataSource``: a deterministic finite feed of
-        ``_CS_BATCHES`` offset-tracked micro-batches (the sandbox-
-        honest stand-in for a kafka/provider tail). Demonstrates the
-        simple-stream-reader contract: ``initialOffset``/``read(start)
-        -> (rows, nextOffset)``/``readBetweenOffsets`` replay (exactly
-        the offset-log recovery path a restart takes). Rows must be
-        picklable ITERATORS over materialized lists — a generator
-        return dies pickling in planPartitions, a bare list dies on
-        next() in latestOffset (both probed r8); iter(list) satisfies
-        both sides of the wrapper."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "synthetic_counter_stream"
-
-        def schema(self) -> str:
-            return "v BIGINT, b INT"
-
-        def simpleStreamReader(self, schema):  # noqa: ANN001 - pyspark API
-            return _CounterStreamReader()
-
-    class _CounterStreamReader(SimpleDataSourceStreamReader):
-        def initialOffset(self):
-            return {"b": 0}
-
-        def read(self, start):
-            b = int(start["b"])
-            if b >= _CS_BATCHES:
-                return iter([]), {"b": b}
-            return (
-                iter([(b * _CS_PER + i, b) for i in range(_CS_PER)]),
-                {"b": b + 1},
-            )
-
-        def readBetweenOffsets(self, start, end):
-            out = []
-            for b in range(int(start["b"]), int(end["b"])):
-                out.extend((b * _CS_PER + i, b) for i in range(_CS_PER))
-            return iter(out)
-
-    _HAVE_PY_STREAM_SOURCE = True
-except ImportError:  # pragma: no cover - pyspark < 4 fallback
-    _HAVE_PY_STREAM_SOURCE = False
 
 
 @query(
-    "stm_python_stream_source",
-    oracle=f"""
-    SELECT CAST(v // {_CS_PER} AS INT) AS b,
+    "src_schema_merge",
+    oracle="""
+    WITH unioned AS (
+      SELECT o_orderkey, o_totalprice, NULL AS o_orderpriority
+      FROM orders WHERE o_orderkey % 2 = 0
+      UNION ALL
+      SELECT o_orderkey, o_totalprice, o_orderpriority
+      FROM orders WHERE o_orderkey % 2 = 1
+    )
+    SELECT COALESCE(o_orderpriority, '(pre-evolution)') AS o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(v) AS BIGINT) AS sum_v
-    FROM generate_series(0, {_CS_BATCHES * _CS_PER - 1}) t(v)
+           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 4)
+             AS sum_price
+    FROM unioned
     GROUP BY 1
     """,
 )
-def stm_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drain the custom Python STREAMING source end-to-end: 5
-    offset-tracked micro-batches of 1000 deterministic rows into a
-    memory sink (append mode — stateless pass-through per batch),
-    then aggregate per batch id against the closed-form oracle.
+def src_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Schema-evolution read: one dataset directory whose files were
+    written under two schema versions (v1 lacks ``o_orderpriority``;
+    v2 added it), read back in a single scan with
+    ``mergeSchema=true`` — missing columns surface as NULLs. This is
+    the 100 TB data-lake reality (columns get added over months of
+    ingest; readers must not require a rewrite), and this round's
+    events.ts encoding flip is the same failure class.
 
-    The Python micro-batch stream does NOT support
-    Trigger.AvailableNow (probed r8: Spark logs the fallback and
-    processes a SINGLE batch), so the drain runs a processingTime=0
-    trigger and polls the sink until all 5x1000 rows landed
-    (deadline-guarded), then stops — the documented pattern for
-    finite custom streams. Offsets advance through the source's own
-    read(start); a restart would replay via readBetweenOffsets, the
-    same code path the oracle-side replay check exercises.
+    Staged once per sf_dir via the shared freshness-markered
+    stage_scratch helper. Parquet footer schemas differ per file, so
+    the scan demonstrably reconciles them — not a single-schema
+    read."""
 
-    Scale posture: SURFACE demo of the streaming V2 contract
-    (driver-side prefetch + offset log); production volume streams
-    stay on the JVM file/rate/kafka sources (stm_* family)."""
-    import time
-    import uuid as _uuid
-
-    if not _HAVE_PY_STREAM_SOURCE:  # pragma: no cover
-        raise NotImplementedError(
-            "Python streaming DataSource API requires pyspark >= 4.0"
+    def build(indir: str) -> None:
+        os.makedirs(indir)
+        orders = load(spark, sf_dir, "orders")
+        v1 = orders.where(F.col("o_orderkey") % 2 == 0).select(
+            "o_orderkey", "o_totalprice"
         )
-    # The STREAMING source planner runs in a dedicated Python worker
-    # that does NOT receive addPyFile includes (probed r8:
-    # ModuleNotFoundError unpickling the source class under a plain
-    # /tmp driver — the batch source's plan worker does get them), so
-    # the package zip rides sc.environment['PYTHONPATH'] instead —
-    # pyspark keys worker factories by (exec, envVars), the same
-    # route that unblocked the transformWithState driver worker.
-    from .. import session as _session
+        v2 = orders.where(F.col("o_orderkey") % 2 == 1).select(
+            "o_orderkey", "o_totalprice", "o_orderpriority"
+        )
+        for i, part in enumerate([v1, v2]):
+            tmp = f"{indir}.tmp{i}"
+            part.coalesce(1).write.mode("overwrite").parquet(tmp)
+            src = next(
+                p for p in os.listdir(tmp) if p.startswith("part-") and p.endswith(".parquet")
+            )
+            shutil.move(os.path.join(tmp, src), os.path.join(indir, f"v{i}.parquet"))
+            shutil.rmtree(tmp, ignore_errors=True)
 
-    _session._ship_package(spark)
-    env = spark.sparkContext.environment
-    cur = env.get("PYTHONPATH", "")
-    if _session._PKG_ZIP and _session._PKG_ZIP not in cur.split(":"):
-        env["PYTHONPATH"] = _session._PKG_ZIP + (":" + cur if cur else "")
-    try:
-        spark.dataSource.register(SyntheticCounterStream)
-    except Exception as exc:
-        # re-registration of the same short name is the benign case; a
-        # REAL registration failure will resurface as q.exception() in
-        # the drain loop below, so record it here instead of masking
-        # (r8 ADVICE #3)
-        import warnings
-
-        warnings.warn(f"python stream source registration: {exc!r}")
-    name = f"stm_pyss_{_uuid.uuid4().hex[:8]}"
-    q = (
-        spark.readStream.format("synthetic_counter_stream")
-        .load()
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
+    indir = stage_scratch("src_schema_merge", sf_dir, "orders", build)
+    merged = spark.read.option("mergeSchema", "true").parquet(indir)
+    # exact DECIMAL(18,4) aggregation, same rationale as snk_upsert_merge:
+    # the '(pre-evolution)' group sums half of all orders (~1e10 at
+    # sf0.1), where double summation-order differences between engines
+    # can cross the round-4 margin; the decimal sum is order-independent.
+    return merged.groupBy(
+        F.coalesce("o_orderpriority", F.lit("(pre-evolution)")).alias("o_orderpriority")
+    ).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.round(
+            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double"), 4
+        ).alias("sum_price"),
     )
-    want = _CS_BATCHES * _CS_PER
-    deadline = time.monotonic() + 120
-    try:
-        while spark.table(name).count() < want:
-            # a dead query never fills the sink: surface its real
-            # failure NOW instead of burning the deadline into a
-            # misleading TimeoutError (r8 ADVICE #3)
-            err = q.exception()
-            if err is not None:
-                raise err
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"python stream drain incomplete: "
-                    f"{spark.table(name).count()}/{want} rows"
-                )
-            time.sleep(0.2)
-    finally:
-        q.stop()
-        q.awaitTermination()
+
+
+# ---------------------------------------------------------------------------
+# src_partition_prune — read-side partition pruning
+# ---------------------------------------------------------------------------
+
+
+def _stage_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
+    """Stage events date-partitioned (``event_date=YYYY-MM-DD/`` dirs,
+    freshness-markered via stage_scratch) — the 100 TB lake layout
+    where time-ranged queries touch only their partitions' files."""
+
+    def build(indir: str) -> None:
+        ev = load(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
+        ev.write.mode("overwrite").partitionBy("event_date").parquet(indir)
+
+    return stage_scratch("src_partition_prune", sf_dir, "events", build)
+
+
+@query(
+    "src_partition_prune",
+    oracle="""
+    WITH bounds AS (
+      SELECT MIN(CAST(ts AS DATE)) AS d0 FROM events
+    )
+    SELECT event_type,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           ROUND(SUM(value), 4) AS sum_value
+    FROM events, bounds
+    WHERE CAST(ts AS DATE) IN (d0 + 3, d0 + 10)
+    GROUP BY event_type
+    """,
+)
+def src_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Partition-pruned scan: events staged date-PARTITIONED (one
+    directory per day), queried for two specific days with literal
+    partition filters — the executed plan reads 2 of ~30 partition
+    directories (``PartitionFilters: [event_date IN (...)]``, zero
+    data files from other days touched). This is THE dominant 100 TB
+    scan pattern: a year-partitioned lake serves a 2-day query at
+    1/180th of the scan cost, before any row-level pushdown.
+
+    The two literal dates derive from the partition catalog (here: a
+    min() over the staged partition VALUES — metadata-only, the
+    listing the production catalog serves); the oracle recomputes
+    from the unpartitioned base table with the same day arithmetic,
+    so the check proves repartitioned staging + pruned read is
+    lossless."""
+    indir = _stage_partitioned_events(spark, sf_dir)
+    part = spark.read.parquet(indir)
+    # metadata-only: min over the ~30 distinct partition values (the
+    # scan for this aggregate reads no data columns)
+    d0 = part.select(F.min("event_date").alias("d0")).collect()[0]["d0"]
+    days = [str(d0 + __import__("datetime").timedelta(days=k)) for k in (3, 10)]
     return (
-        spark.table(name)
-        .groupBy("b")
+        part.where(F.col("event_date").isin(days))
+        .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum("v").alias("sum_v"),
+            F.round(F.sum("value"), 4).alias("sum_value"),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# src_incremental_extract — high-watermark incremental ingest
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "src_incremental_extract",
+    oracle="""
+    SELECT CAST(ts AS DATE) AS day,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(SUM(event_id) AS BIGINT) AS sum_event_id
+    FROM events
+    GROUP BY 1
+    """,
+)
+def src_incremental_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """High-watermark incremental ingest: the reference's scheduled
+    provider pulls fetch "rows newer than the last run's watermark"
+    ([P high], SURVEY §3.1 step 0 — paginated time-windowed API
+    pulls; missing-list item 3's sandbox-testable core). Simulated as
+    two pulls over the same source:
+
+    - pull 1 takes everything up to a mid-range cut (min date + 15d)
+      and records wm = max(ts) it saw — the persisted watermark;
+    - pull 2 takes strictly ts > wm.
+
+    The union must reproduce the source EXACTLY-ONCE across the
+    boundary: rows at ts == wm are all in pull 1 (wm is pull 1's own
+    max), and no row falls in (wm, cut] by wm's definition — the
+    classic off-by-one that silently drops or duplicates boundary
+    rows in naive >=-based extracts. The oracle aggregates the source
+    directly, so any loss or duplication breaks count and id-sum.
+
+    Both the cut and the watermark flow RELATIONALLY (1-row aggs
+    broadcast via crossJoin — no driver collect), so at 100 TB the
+    watermark computation is a metadata-cheap agg and the pulls are
+    pushed-down range scans on the ingest-time column."""
+    ev = load(spark, sf_dir, "events")
+    cut = ev.agg(
+        F.date_add(F.min(F.to_date("ts")), 15).cast("timestamp").alias("cut")
+    )
+    p1 = (
+        ev.crossJoin(F.broadcast(cut))
+        .where(F.col("ts") <= F.col("cut"))
+        .select("event_id", "ts")
+    )
+    wm = p1.agg(F.max("ts").alias("wm"))
+    p2 = (
+        ev.crossJoin(F.broadcast(wm))
+        .where(F.col("ts") > F.col("wm"))
+        .select("event_id", "ts")
+    )
+    return (
+        p1.unionAll(p2)
+        .groupBy(F.to_date("ts").alias("day"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("event_id").alias("sum_event_id"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# src_binary_files — binaryFile datasource ingest (multimodal intake path)
+# ---------------------------------------------------------------------------
+
+
+def _stage_blob_files(spark: SparkSession, sf_dir: str) -> str:
+    """Stage one opaque .bin blob per selected document (doc_id % 7),
+    content = the document's utf-8 text bytes. The writes run
+    DISTRIBUTED through mapInPandas (each task writes its own files
+    then reports a count — the shape of a binary-export stage); the
+    staged directory carries NOTHING but the blobs, so everything the
+    query emits must come from the datasource read itself."""
+
+    def build(indir: str) -> None:
+        import os
+
+        import pandas as pd
+
+        os.makedirs(indir, exist_ok=True)
+
+        def write_files(batches):
+            for pdf in batches:
+                for did, text in zip(pdf["doc_id"], pdf["text"]):
+                    p = os.path.join(indir, f"doc_{int(did)}.bin")
+                    tmp = f"{p}.tmp"
+                    with open(tmp, "wb") as fh:
+                        fh.write(str(text).encode("utf-8"))
+                    os.replace(tmp, p)
+                yield pd.DataFrame({"n": [len(pdf)]})
+
+        docs = (
+            load(spark, sf_dir, "documents")
+            .where((F.col("doc_id") % 7 == 0) & F.col("text").isNotNull())
+            .select("doc_id", "text")
+        )
+        # count() materializes the side-effect writes (task-level
+        # retries rewrite the same content; os.replace is atomic)
+        docs.mapInPandas(write_files, "n long").count()
+
+    return stage_scratch("src_binfiles", sf_dir, "documents", build)
+
+
+@query(
+    "src_binary_files",
+    oracle="""
+    SELECT doc_id,
+           CAST(strlen(text) AS BIGINT) AS n_bytes,
+           md5(text) AS content_md5
+    FROM documents
+    WHERE doc_id % 7 = 0 AND text IS NOT NULL
+    """,
+)
+def src_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`binaryFile` datasource ingest — the intake path a multimodal
+    corpus actually uses (one blob per image/audio/doc object): read a
+    directory of opaque .bin files as (path, length, content BINARY)
+    rows, derive the record key from the file name and fingerprint the
+    payload with md5. The oracle recomputes byte length (strlen =
+    octet count) and md5 from the pre-staging text on the driver
+    table, so a truncated write, a stray extra file, or a wrong
+    glob all flip the hash.
+
+    Scale shape: binaryFile is a real FileFormat — file listing is
+    distributed, `pathGlobFilter` prunes at the listing (never reads
+    non-matching objects), each file is one row in a split sized by
+    maxPartitionBytes bin-packing MANY small blobs per task (the
+    small-files story), and content stays columnar binary through the
+    scan. The projection here never touches `modificationTime`, so
+    schema pruning drops it. This is the front door that feeds
+    mm_decode_stub/mm_decode_wav-style Arrow decode stages."""
+    indir = _stage_blob_files(spark, sf_dir)
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.bin")
+        .load(indir)
+    )
+    return files.select(
+        F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1)
+        .cast("long")
+        .alias("doc_id"),
+        F.col("length").alias("n_bytes"),
+        F.md5("content").alias("content_md5"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# src_json_corrupt — PERMISSIVE malformed-record intake
+# ---------------------------------------------------------------------------
+
+
+def _stage_corrupt_jsonl(spark: SparkSession, sf_dir: str) -> str:
+    """Stage a JSONL extract of documents where every doc_id % 37 == 0
+    line is DELIBERATELY malformed (an unterminated object) — the
+    provider-feed reality every intake pipeline faces. Built
+    distributed via the text sink; the staged dir carries only the
+    raw lines."""
+    from ..tables import stage_scratch
+
+    def build(indir: str) -> None:
+        d = load(spark, sf_dir, "documents")
+        line = F.when(
+            F.col("doc_id") % 37 == 0,
+            F.concat(F.lit('{"doc_id": '), F.col("doc_id").cast("string")),
+        ).otherwise(
+            F.concat(
+                F.lit('{"doc_id": '),
+                F.col("doc_id").cast("string"),
+                F.lit(', "len": '),
+                F.col("n_chars").cast("string"),
+                F.lit(', "lang": "'),
+                F.col("lang"),
+                F.lit('"}'),
+            )
+        )
+        d.select(line.alias("value")).write.mode("overwrite").text(indir)
+
+    return stage_scratch("src_json_corrupt", sf_dir, "documents", build)
+
+
+@query(
+    "src_json_corrupt",
+    oracle="""
+    SELECT CASE WHEN doc_id % 37 = 0 THEN 'corrupt' ELSE 'parsed' END
+             AS status,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(COALESCE(SUM(CASE WHEN doc_id % 37 <> 0 THEN n_chars END), 0)
+                AS BIGINT) AS sum_len,
+           CAST(COUNT(DISTINCT CASE WHEN doc_id % 37 <> 0 THEN lang END)
+                AS BIGINT) AS n_langs
+    FROM documents
+    GROUP BY 1
+    """,
+)
+def src_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PERMISSIVE malformed-record intake — the JSON datasource's
+    quarantine path ([P high]: provider feeds ship broken lines, and
+    the reference's ingest posture — land everything, quarantine the
+    unparseable — is exactly Spark's PERMISSIVE mode with
+    ``columnNameOfCorruptRecord``). The staged JSONL has a
+    deterministically malformed line per doc_id % 37 == 0; the query
+    reads with an EXPLICIT schema (never schema inference at 100 TB —
+    inference is a full extra pass) + `_bad` corrupt-record column,
+    then reports the parsed/corrupt split with per-status stats. The
+    oracle recomputes the split from the PRE-STAGING table, so a
+    parser that silently drops (DROPMALFORMED) or nulls the wrong
+    rows flips row counts and sums.
+
+    Scale shape: the JSON parse happens inside the scan stage
+    (per-file tasks, no shuffle), one combinable 2-cell aggregate
+    after. Malformed lines cost no exception unwind — PERMISSIVE
+    fills `_bad` and moves on."""
+    indir = _stage_corrupt_jsonl(spark, sf_dir)
+    # .cache() is LOAD-BEARING, not an optimization: Spark refuses
+    # any query whose pruned column set references ONLY the corrupt-
+    # record column (QUERY_ONLY_CORRUPT_RECORD_COLUMN — e.g. a
+    # count() prunes len/lang away and trips it); caching the parsed
+    # frame is the behavior Spark's own error message prescribes.
+    parsed = (
+        spark.read.schema("doc_id long, len long, lang string, _bad string")
+        .option("columnNameOfCorruptRecord", "_bad")
+        .json(indir)
+        .cache()
+    )
+    return (
+        parsed.select(
+            F.when(F.col("_bad").isNotNull(), "corrupt")
+            .otherwise("parsed")
+            .alias("status"),
+            "len",
+            F.when(F.col("_bad").isNull(), F.col("lang")).alias("ok_lang"),
+        )
+        .groupBy("status")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.coalesce(F.sum("len"), F.lit(0)).alias("sum_len"),
+            F.countDistinct("ok_lang").alias("n_langs"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# src_xml_roundtrip — Spark 4 native XML datasource
+# ---------------------------------------------------------------------------
+
+_XML_SCHEMA = T.StructType(
+    [
+        T.StructField("o_orderkey", T.LongType()),
+        T.StructField("o_orderpriority", T.StringType()),
+        T.StructField("o_totalprice", T.DoubleType()),
+    ]
+)
+
+
+@query(
+    "src_xml_roundtrip",
+    oracle="""
+    SELECT o_orderpriority,
+           CAST(COUNT(*) AS BIGINT) AS n_orders,
+           CAST(SUM(o_orderkey) AS BIGINT) AS sum_key,
+           ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 4)
+             AS sum_price
+    FROM orders GROUP BY o_orderpriority
+    """,
+)
+def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """XML write → explicit-schema read → aggregate, on Spark 4's
+    NATIVE XML datasource (no spark-xml jar — the format graduated
+    into core) — the last ingest format beside CSV/JSON/ORC/parquet/
+    text/binary ([P med]: municipal/GTFS-era feeds still ship XML).
+    The oracle is the same aggregate straight from orders: the
+    round-trip must be LOSSLESS, including double round-tripping
+    through decimal text (Spark writes shortest-repr doubles and
+    re-parses them exactly). Sum-of-price uses the house
+    DECIMAL(18,4) exact-summation pattern (snk_parquet precedent);
+    key/count sums are integer.
+
+    Scale shape: XML parse cost is per-row and stays in the JVM
+    (StaxXmlParser inside the scan stage); one combinable agg after.
+    At 100 TB you'd land XML once into parquet (this exact query
+    shape) and never re-scan the XML."""
+    subset = load(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority", "o_totalprice"
+    )
+    path = scratch_dir("src_xml_roundtrip", sf_dir.strip("/").replace("/", "_"))
+    (
+        subset.write.mode("overwrite")
+        .format("xml")
+        .option("rootTag", "orders")
+        .option("rowTag", "order")
+        .save(path)
+    )
+    back = (
+        spark.read.schema(_XML_SCHEMA)
+        .format("xml")
+        .option("rowTag", "order")
+        .load(path)
+    )
+    return back.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum("o_orderkey").alias("sum_key"),
+        F.round(
+            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double"), 4
+        ).alias("sum_price"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# src_csv_multiline — RFC 4180 CSV with embedded newlines/quotes/delimiters
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "src_csv_multiline",
+    oracle="""
+    WITH d AS (
+      SELECT lang,
+             'line1' || chr(10) || lang || ',comma "quoted" ' ||
+               CAST(doc_id AS VARCHAR) AS tricky
+      FROM documents
+    )
+    SELECT lang,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(SUM(LENGTH(tricky)) AS BIGINT) AS sum_len,
+           CAST(SUM(CASE WHEN tricky LIKE '%' || chr(10) || '%' THEN 1 ELSE 0 END) AS BIGINT) AS n_multiline
+    FROM d
+    GROUP BY lang
+    """,
+)
+def src_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RFC 4180 CSV hard mode: fields containing EMBEDDED NEWLINES,
+    the delimiter, and double quotes, written with
+    quote-doubling (``escape='"'`` — Spark's DEFAULT escape is
+    backslash, which no RFC 4180 reader understands; the option is
+    the key's point) and re-read with ``multiLine=True`` (without it
+    the reader splits records at the embedded newlines and row
+    counts explode). The tricky field is built deterministically
+    from (lang, doc_id), and the oracle recomputes the expected
+    aggregate from the SOURCE table — any mis-parse (split rows,
+    swallowed quotes, truncated fields) changes n_rows/sum_len/
+    n_multiline. A unit test additionally feeds the staged files to
+    an independent RFC 4180 reader (DuckDB read_csv) and requires
+    the identical parse.
+
+    Scale note: multiLine=True makes a CSV file NON-SPLITTABLE (a
+    record boundary cannot be found mid-file) — one task per file,
+    so the staging writes many files; at 100 TB the guidance is the
+    same (many medium files, or parquet as soon as possible)."""
+    from ..tables import stage_scratch
+
+    def build(indir: str) -> None:
+        src = load(spark, sf_dir, "documents").select(
+            "lang",
+            F.concat(
+                F.lit("line1\n"),
+                F.col("lang"),
+                F.lit(',comma "quoted" '),
+                F.col("doc_id").cast("string"),
+            ).alias("tricky"),
+        )
+        (
+            src.repartition(4)
+            .write.mode("overwrite")
+            .option("header", True)
+            .option("quote", '"')
+            .option("escape", '"')
+            .csv(indir)
+        )
+
+    indir = stage_scratch("src_csv_multiline", sf_dir, "documents", build)
+    back = (
+        spark.read.schema("lang string, tricky string")
+        .option("header", True)
+        .option("multiLine", True)
+        .option("quote", '"')
+        .option("escape", '"')
+        .csv(indir)
+    )
+    return back.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.length("tricky")).alias("sum_len"),
+        F.sum(
+            F.when(F.col("tricky").contains("\n"), F.lit(1)).otherwise(F.lit(0))
+        ).alias("n_multiline"),
     )

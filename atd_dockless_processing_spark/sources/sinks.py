@@ -8,6 +8,8 @@ the idempotent-upsert semantics without a mutable store.
 
 from __future__ import annotations
 
+import uuid as _uuid
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -472,4 +474,547 @@ def snk_jdbc_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double"), 4
             ).alias("sum_price"),
         )
+    )
+
+
+# ---------------------------------------------------------------------------
+# snk_zorder_layout — Z-order clustered layout for 2-D data skipping
+# ---------------------------------------------------------------------------
+
+_ZO_BITS = 7  # 7 bits per dimension -> 14-bit z-values
+# query window (a selective 2-D box: each dimension alone is ~20% of
+# its range, the combined box ~4% of rows — the shape where Z-order
+# beats single-column sort layouts)
+_ZO_X = (40, 65)
+_ZO_Y = (30, 55)
+
+# xi is a shared textual fragment; yi's JSON accessor differs per
+# engine (get_json_object vs json_extract_string) so each engine
+# derives the INTEGER yi column first and the interleave fragment
+# below is shared over the derived column names
+_ZO_XI = "CAST(LEAST(FLOOR(value / 80e0), 127) AS BIGINT)"
+_ZO_YI_SPARK = "CAST(LEAST(CAST(get_json_object(props, '$.k') AS INT), 127) AS BIGINT)"
+_ZO_YI_DUCK = "CAST(LEAST(CAST(json_extract_string(props, '$.k') AS INTEGER), 127) AS BIGINT)"
+
+
+def _zo_interleave_sql(xi: str, yi: str) -> str:
+    """Bit-interleave SQL shared textually by both engines: z =
+    Σ_b  x_b<<(2b+1) | y_b<<(2b) — pure integer shifts/masks."""
+    terms = []
+    for b in range(_ZO_BITS):
+        terms.append(f"((({xi} >> {b}) & 1) << {2 * b + 1})")
+        terms.append(f"((({yi} >> {b}) & 1) << {2 * b})")
+    return " + ".join(terms)
+
+
+@query(
+    "snk_zorder_layout",
+    oracle=f"""
+    WITH derived AS (
+      SELECT value, {_ZO_XI} AS xi, {_ZO_YI_DUCK} AS yi FROM events
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+           ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_value,
+           CAST(MIN({_zo_interleave_sql("xi", "yi")}) AS BIGINT) AS min_z,
+           CAST(MAX({_zo_interleave_sql("xi", "yi")}) AS BIGINT) AS max_z
+    FROM derived
+    WHERE xi BETWEEN {_ZO_X[0]} AND {_ZO_X[1]}
+      AND yi BETWEEN {_ZO_Y[0]} AND {_ZO_Y[1]}
+    """,
+)
+def snk_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Z-ORDER clustered table layout — the data-skipping OPTIMIZE
+    step lakehouse formats run, expressed in pure Spark: derive a
+    14-bit Morton code interleaving two query dimensions (value-bin
+    xi, props.$.k yi), `repartitionByRange` + `sortWithinPartitions`
+    on z, and write parquet — so every FILE and ROW GROUP covers a
+    small z-range, and therefore a small (xi, yi) RECTANGLE. A 2-D
+    box predicate then prunes most files via parquet min/max stats
+    on the stored xi/yi columns, where a single-column sort layout
+    only prunes one dimension. The query half reads the staged
+    layout back with the box filter (pushed to the scan) and
+    aggregates; the oracle recomputes from the RAW table — layout
+    must never change semantics.
+
+    Locality is ASSERTED in tests (per-file xi/yi spans via parquet
+    footers, vs the unclustered source). At 100 TB this is the
+    maintenance job that turns a full-scan geo/time query into a
+    bounded-file read; z derivation is pure integer shifts (identical
+    on both engines), the range partitioner is the only exchange,
+    and the sort is within partitions (no global sort)."""
+    xi = F.expr(_ZO_XI)
+    yi = F.expr(_ZO_YI_SPARK)
+    z = F.expr(_zo_interleave_sql("xi", "yi"))
+
+    def build(indir: str) -> None:
+        (
+            load(spark, sf_dir, "events")
+            .select("event_id", "value", xi.alias("xi"), yi.alias("yi"))
+            .withColumn("z", z)
+            .repartitionByRange(8, "z")
+            .sortWithinPartitions("z")
+            .write.mode("overwrite")
+            .parquet(indir)
+        )
+
+    from ..tables import stage_scratch
+
+    staged = stage_scratch("snk_zorder", sf_dir, "events", build)
+    t = spark.read.parquet(staged).where(
+        F.col("xi").between(*_ZO_X) & F.col("yi").between(*_ZO_Y)
+    )
+    return t.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4).alias(
+            "sum_value"
+        ),
+        F.min("z").alias("min_z"),
+        F.max("z").alias("max_z"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# snk_compact_small_files — small-file compaction maintenance job
+# ---------------------------------------------------------------------------
+
+_COMPACT_TARGET_BYTES = 4 * 1024 * 1024  # 4 MB target files at test scale
+
+
+def _stage_compacted(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """Stage the small-file problem (events fragmented into 64 tiny
+    parquet files — the per-micro-batch/per-provider-pull accretion
+    pattern) and its compaction (size-targeted rewrite: total bytes /
+    target rounded up -> coalesced file count). Returns (small_dir,
+    compacted_dir)."""
+    import math
+    import os
+
+    from ..tables import stage_scratch
+
+    def build_small(indir: str) -> None:
+        (
+            load(spark, sf_dir, "events")
+            .repartition(64)
+            .write.mode("overwrite")
+            .parquet(indir)
+        )
+
+    small = stage_scratch("snk_compact_small", sf_dir, "events", build_small)
+
+    def build_compact(indir: str) -> None:
+        total = sum(
+            e.stat().st_size
+            for e in os.scandir(small)
+            if e.name.endswith(".parquet")
+        )
+        n_files = max(1, math.ceil(total / _COMPACT_TARGET_BYTES))
+        # coalesce, not repartition: compaction must not pay a
+        # shuffle — it only glues existing partitions together
+        (
+            spark.read.parquet(small)
+            .coalesce(n_files)
+            .write.mode("overwrite")
+            .parquet(indir)
+        )
+
+    compacted = stage_scratch("snk_compact_out", sf_dir, "events", build_compact)
+    return small, compacted
+
+
+@query(
+    "snk_compact_small_files",
+    oracle="""
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_ids,
+           ROUND(CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4)
+             AS sum_value,
+           CAST(MIN(event_id) AS BIGINT) AS min_id,
+           CAST(MAX(event_id) AS BIGINT) AS max_id
+    FROM events
+    """,
+)
+def snk_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Small-file COMPACTION — the other lakehouse maintenance job
+    beside `snk_zorder_layout` ([P high]: micro-batch streams and
+    per-provider pulls accrete thousands of KB-sized files; the
+    resulting per-file task and footer overhead is the classic
+    100 TB scan killer, and OPTIMIZE/compaction is the standing
+    cure). The staging fragments events into 64 tiny files, then
+    rewrites size-targeted output (total bytes / 4 MB target,
+    rounded up) with `coalesce` — compaction glues existing
+    partitions and must NOT pay a shuffle (`repartition` would).
+    The query half reads the COMPACTED table and emits content
+    integrity figures; the oracle computes the same from the raw
+    table, so a compaction that drops, duplicates, or corrupts any
+    row flips the hash (layout changes, content must not). The
+    file-count collapse itself is asserted in tests via the staged
+    directories.
+
+    At 100 TB this runs per partition/day with a manifest of
+    under-sized files; coalesce keeps it a pure read+write with no
+    exchange, and the target size aligns file length with
+    maxPartitionBytes so post-compaction scans get full-sized
+    splits."""
+    _small, compacted = _stage_compacted(spark, sf_dir)
+    t = spark.read.parquet(compacted)
+    return t.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.countDistinct("event_id").alias("n_ids"),
+        F.round(
+            F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4
+        ).alias("sum_value"),
+        F.min("event_id").alias("min_id"),
+        F.max("event_id").alias("max_id"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# snk_cdc_apply — change-data-capture log folded into a published snapshot
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "snk_cdc_apply",
+    oracle="""
+    WITH log AS (
+      SELECT o_orderkey AS k, 1 AS seq, 'I' AS op,
+             o_orderstatus AS status, o_totalprice AS price
+      FROM orders
+      UNION ALL
+      SELECT o_orderkey, 2, 'U', 'U', o_totalprice + 100.0
+      FROM orders WHERE o_orderkey % 3 = 0
+      UNION ALL
+      SELECT o_orderkey, 3, 'D', NULL, NULL
+      FROM orders WHERE o_orderkey % 5 = 0
+    ), last AS (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY seq DESC) AS rn
+      FROM log
+    ), snap AS (
+      SELECT k, status, price FROM last WHERE rn = 1 AND op <> 'D'
+    )
+    SELECT status,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           ROUND(CAST(SUM(CAST(price AS DECIMAL(18,4))) AS DOUBLE), 4)
+             AS sum_price
+    FROM snap GROUP BY status
+    """,
+)
+def snk_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CDC log application — the change-feed half of upsert ([P
+    high]: provider pulls arrive as insert/update/delete events; the
+    published dataset is the FOLD of that log, exactly what a
+    Delta/Iceberg MERGE or a Debezium consumer materializes). A
+    deterministic I/U/D log is derived from orders (every key
+    INSERTs at seq 1; keys %3 UPDATE at seq 2; keys %5 DELETE at
+    seq 3), folded last-writer-wins per key via row_number over seq,
+    deletes dropped, and the applied snapshot WRITTEN to parquet —
+    the verified figures are read back from the files, so a wrong
+    fold order, surviving delete, or lost update flips the hash.
+
+    Plan shape: one window exchange on key folds the log; the write
+    is an append-free overwrite (idempotent re-runs). At 100 TB the
+    identical query runs per partition-of-keys; the window is the
+    engine-neutral MERGE kernel, and the log:snapshot ratio — not
+    table size — governs cost. DECIMAL sum at the boundary (hazard
+    rules 1/2)."""
+    orders = load(spark, sf_dir, "orders")
+    ins = orders.select(
+        F.col("o_orderkey").alias("k"),
+        F.lit(1).alias("seq"),
+        F.lit("I").alias("op"),
+        F.col("o_orderstatus").alias("status"),
+        F.col("o_totalprice").alias("price"),
+    )
+    upd = (
+        orders.where(F.col("o_orderkey") % 3 == 0)
+        .select(
+            F.col("o_orderkey").alias("k"),
+            F.lit(2).alias("seq"),
+            F.lit("U").alias("op"),
+            F.lit("U").alias("status"),
+            (F.col("o_totalprice") + 100.0).alias("price"),
+        )
+    )
+    dele = (
+        orders.where(F.col("o_orderkey") % 5 == 0)
+        .select(
+            F.col("o_orderkey").alias("k"),
+            F.lit(3).alias("seq"),
+            F.lit("D").alias("op"),
+            F.lit(None).cast("string").alias("status"),
+            F.lit(None).cast("double").alias("price"),
+        )
+    )
+    w = Window.partitionBy("k").orderBy(F.col("seq").desc())
+    snap = (
+        ins.unionByName(upd)
+        .unionByName(dele)
+        .withColumn("rn", F.row_number().over(w))
+        .where((F.col("rn") == 1) & (F.col("op") != "D"))
+        .select("k", "status", "price")
+    )
+    path = scratch_dir("snk_cdc_apply", sf_dir.strip("/").replace("/", "_"))
+    snap.write.mode("overwrite").parquet(path)
+    return (
+        spark.read.parquet(path)
+        .groupBy("status")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.round(
+                F.sum(F.col("price").cast("decimal(18,4)")).cast("double"), 4
+            ).alias("sum_price"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# snk_manifest_publish — manifest-verified partitioned publication
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "snk_manifest_publish",
+    oracle="""
+    WITH pub AS (
+      SELECT month(CAST(o_orderdate AS TIMESTAMP)) AS m,
+             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+      FROM orders
+    )
+    SELECT CAST(COUNT(DISTINCT m) AS BIGINT) AS n_files,
+           CAST(COUNT(DISTINCT m) AS BIGINT) AS n_months,
+           CAST(COUNT(*) AS BIGINT) AS total_rows,
+           CAST(SUM(cents) AS BIGINT) AS total_cents,
+           CAST(0 AS BIGINT) AS n_mismatch
+    FROM pub
+    """,
+)
+def snk_manifest_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Manifest-verified publication — the atomic-swap publish
+    contract ([P high]: the reference publishes public datasets on a
+    schedule; production lakehouse publishes pair the data files
+    with a MANIFEST of per-file row counts/checksums so consumers
+    can verify completeness and readers can swap atomically). The
+    month-partitioned snapshot (one file per month: repartition by
+    the partition column means each month lands in exactly one
+    task) is written, a manifest derived from the FILES THEMSELVES
+    (input_file_name + per-file totals) is written beside it, and
+    the verification re-aggregates the data per month AGAINST the
+    manifest — n_mismatch counts months whose manifest row/cents
+    totals disagree with the files, so a dropped file, double write,
+    or stale manifest flips the hash (and the totals themselves are
+    cross-checked against the source closed-form by the oracle).
+
+    Plan shape: one repartition exchange for the 1-file-per-month
+    layout (the publish-layout cost, same as snk_partitioned), one
+    file-granular agg for the manifest, one month agg + broadcast
+    join for verification. Integer cents via the shared
+    floor(x*100+0.5) lift (hazard: bare CAST rounds vs truncates).
+
+    r12 decomposition (BASELINE.md round-12 section; was the 2.66x
+    INCLUSIVE row): at x100 the phases split write 3.86 s (3.07x —
+    scan+project+repartition 1.99 s noop-measured, parquet writer
+    proper ~1.87 s ≈ 125 ns/row), manifest 0.71 s, verify 0.52 s
+    (dispatch-floor absolutes). Writer-knob ledger all measured, none
+    beats default snappy (zstd 4.45 s, lz4 4.40 s, uncompressed
+    4.69 s, dictionary-off 4.09 s, dict-off+8MB-pages 4.25 s);
+    maxRecordsPerFile is moot — n_files=12 is hash-checked, so the
+    repartition stands. CLOSED-AS-CONSTANT-FACTOR with the constant
+    named: the InternalRow→Parquet per-row writer path vs DuckDB's
+    vectorized native writer; executor-parallel at 100 TB."""
+    data_dir = scratch_dir(
+        "snk_manifest_pub", sf_dir.strip("/").replace("/", "_"), "data"
+    )
+    man_dir = scratch_dir(
+        "snk_manifest_pub", sf_dir.strip("/").replace("/", "_"), "manifest"
+    )
+    pub = load(spark, sf_dir, "orders").select(
+        F.month(F.col("o_orderdate").cast("timestamp")).alias("m"),
+        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
+    )
+    (
+        pub.repartition(12, "m")
+        .write.mode("overwrite")
+        .partitionBy("m")
+        .parquet(data_dir)
+    )
+    back = spark.read.parquet(data_dir)
+    manifest = (
+        back.groupBy(F.input_file_name().alias("file"), "m")
+        .agg(F.count(F.lit(1)).alias("m_rows"), F.sum("cents").alias("m_cents"))
+    )
+    manifest.write.mode("overwrite").parquet(man_dir)
+    man = spark.read.parquet(man_dir)
+    man_by_month = man.groupBy("m").agg(
+        F.count(F.lit(1)).alias("n_files"),
+        F.sum("m_rows").alias("man_rows"),
+        F.sum("m_cents").alias("man_cents"),
+    )
+    data_by_month = back.groupBy("m").agg(
+        F.count(F.lit(1)).alias("d_rows"), F.sum("cents").alias("d_cents")
+    )
+    v = data_by_month.join(F.broadcast(man_by_month), "m")
+    return v.agg(
+        F.sum("n_files").alias("n_files"),
+        F.count(F.lit(1)).alias("n_months"),
+        F.sum("d_rows").alias("total_rows"),
+        F.sum("d_cents").alias("total_cents"),
+        F.sum(
+            F.when(
+                (F.col("d_rows") != F.col("man_rows"))
+                | (F.col("d_cents") != F.col("man_cents")),
+                1,
+            ).otherwise(0)
+        ).alias("n_mismatch"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# snk_python_datasource_write — PySpark 4 Python DataSource WRITER
+# ---------------------------------------------------------------------------
+
+try:  # pyspark >= 4.0
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceWriter,
+        WriterCommitMessage,
+    )
+
+    class _JsonlCommit(WriterCommitMessage):
+        """Per-task commit message: the file this task produced and
+        its row count (must be picklable driver<-worker)."""
+
+        def __init__(self, filename: str, n_rows: int) -> None:
+            self.filename = filename
+            self.n_rows = n_rows
+
+    class JsonlSinkDataSource(DataSource):
+        """Custom BATCH SINK via the PySpark 4 Python DataSource API —
+        the writer half of the V2 surface whose reader half is
+        ``SyntheticFeedDataSource`` (src_python_datasource) and whose
+        streaming-reader half is ``SyntheticCounterStream``
+        (stm_python_stream_source). Each task writes its partition as
+        one JSON-lines file and returns a commit message; the DRIVER
+        commit publishes a manifest naming exactly the committed
+        files — the two-phase all-or-nothing contract (a failed task's
+        orphan file is never manifested)."""
+
+        @classmethod
+        def name(cls) -> str:
+            return "jsonl_sink"
+
+        def writer(self, schema, overwrite):  # noqa: ANN001 - pyspark API
+            return _JsonlSinkWriter(self.options["path"])
+
+    class _JsonlSinkWriter(DataSourceWriter):
+        def __init__(self, path: str) -> None:
+            self.path = path
+
+        def write(self, iterator):  # noqa: ANN001 - per-task, on workers
+            import json
+            import os
+            import uuid
+
+            fname = f"part-{uuid.uuid4().hex}.jsonl"
+            full = os.path.join(self.path, fname)
+            n = 0
+            with open(full, "w") as fh:
+                for row in iterator:
+                    fh.write(json.dumps(row.asDict()) + "\n")
+                    n += 1
+            return _JsonlCommit(fname, n)
+
+        def commit(self, messages):  # noqa: ANN001 - on the driver
+            import json
+            import os
+
+            manifest = {
+                "files": sorted(m.filename for m in messages if m is not None),
+                "rows": sum(m.n_rows for m in messages if m is not None),
+            }
+            with open(os.path.join(self.path, "_MANIFEST.json"), "w") as fh:
+                json.dump(manifest, fh)
+
+        def abort(self, messages):  # noqa: ANN001
+            pass  # no manifest -> nothing published; files are scratch
+
+    _HAVE_PY_DS_WRITER = True
+except ImportError:  # pragma: no cover - pyspark < 4
+    _HAVE_PY_DS_WRITER = False
+
+# Most-recent invocation's uuid-scoped sink dir (introspection hook
+# for tests; each run gets a fresh dir — see the key's docstring).
+_LAST_PYDS_DIR: str | None = None
+
+
+@query(
+    "snk_python_datasource_write",
+    oracle="""
+    SELECT o_orderpriority,
+           CAST(COUNT(*) AS BIGINT) AS n_orders,
+           CAST(SUM(o_orderkey) AS BIGINT) AS sum_key
+    FROM orders
+    WHERE o_orderkey % 100 = 0
+    GROUP BY o_orderpriority
+    """,
+)
+def snk_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WRITE through a CUSTOM Python DataSource (PySpark 4 V2 writer
+    API), then read the MANIFESTED files back and aggregate — closing
+    the V2 triangle (batch read / stream read / batch WRITE). Pins
+    the two-phase commit contract: per-task ``write(iterator)`` →
+    picklable commit message, driver-side ``commit(messages)``
+    publishing a manifest of exactly the committed files; the
+    readback consumes ONLY manifested files, so an aborted task's
+    orphan output can never leak into the result (the exactly-once
+    discipline snk_manifest_publish pins for parquet, here for a
+    user-defined sink).
+
+    Scale posture: SURFACE demo of the writer contract — each row
+    crosses the Python worker and lands as text JSON; the production
+    twin of this write is the JVM parquet sink (snk_parquet). Local
+    FS paths work because local[*] workers share the driver's disk;
+    a cluster deployment points the same writer at an object store.
+    Integer-only measures (count / key sum, DuckDB HUGEINT hazard).
+
+    The output dir is uuid-scoped per invocation (stm_rocksdb_
+    changelog's run_{uuid} discipline, r9 review finding #2): a fixed
+    shared path would let a concurrent run's cleanup delete files
+    this run's lazily-evaluated readback still references — and NO
+    in-key pruning of older run dirs either, for the same reason
+    (.scratch is disposable by contract; the dirs are a few KB)."""
+    if not _HAVE_PY_DS_WRITER:  # pragma: no cover
+        raise NotImplementedError(
+            "Python DataSource writer API requires pyspark >= 4.0"
+        )
+    import json
+    import os
+
+    from ..tables import scratch_dir
+
+    global _LAST_PYDS_DIR
+    out_dir = scratch_dir("pyds_sink", f"run_{_uuid.uuid4().hex[:12]}")
+    os.makedirs(out_dir, exist_ok=True)
+    _LAST_PYDS_DIR = out_dir
+    # re-registration of a session-scoped name is a silent overwrite in
+    # this API (probed: no error on duplicate register), so a raise here
+    # is a REAL failure that must surface — not be swallowed as
+    # "already registered" (r9 ADVICE #3)
+    spark.dataSource.register(JsonlSinkDataSource)
+    src = (
+        load(spark, sf_dir, "orders")
+        .where(F.col("o_orderkey") % 100 == 0)
+        .select("o_orderkey", "o_orderpriority")
+    )
+    src.write.format("jsonl_sink").option("path", out_dir).mode(
+        "append"
+    ).save()
+    with open(os.path.join(out_dir, "_MANIFEST.json")) as fh:
+        manifest = json.load(fh)
+    files = [os.path.join(out_dir, f) for f in manifest["files"]]
+    back = spark.read.schema("o_orderkey long, o_orderpriority string").json(
+        files
+    )
+    return back.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum("o_orderkey").alias("sum_key"),
     )

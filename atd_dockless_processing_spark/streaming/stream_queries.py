@@ -25,12 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.pipeline_r5 import (
-    _HLL_EST,
-    _HLL_RHO,
-    _HLL_TERM_DUCK,
-    _HLL_TERM_SPARK,
-)
+from ..operators.aggregates import _HLL_EST, _HLL_RHO, _HLL_TERM_DUCK, _HLL_TERM_SPARK
 from ..registry import query
 from ..tables import events_ts_to_timestamp, load, scratch_dir
 
@@ -415,7 +410,7 @@ def stm_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # NB: the oracle's "> 1800" gap rule must stay in lockstep with Spark's
 # merge-at-exactly-gap session semantics; the same rule appears in the
-# sessionization oracles in events.py, stream_queries.py and pipeline_r3.py —
+# sessionization oracles in events.py and stream_queries.py —
 # change all or none (oracle SQL is newline-collapsed, so no -- comments).
 @query(
     "stm_stateful_session",
@@ -656,7 +651,7 @@ def stm_sliding_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # NB: the oracle's "> 1800" gap rule must stay in lockstep with Spark's
 # merge-at-exactly-gap session semantics; the same rule appears in the
-# sessionization oracles in events.py, stream_queries.py and pipeline_r3.py —
+# sessionization oracles in events.py and stream_queries.py —
 # change all or none (oracle SQL is newline-collapsed, so no -- comments).
 @query(
     "stm_session_window",
@@ -786,27 +781,40 @@ def stm_join_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# stm_sketch_hll_merge — mergeable HLL registers maintained as stream state
-# ---------------------------------------------------------------------------
+# Column-projected copies of events staged as a few parquet files each,
+# so ``maxFilesPerTrigger=1`` forces a multi-batch drain and stream
+# state must carry across micro-batches: stage name -> (columns, files).
+# Each key has its own stage name because the schemas differ.
+_EVENT_COL_STAGES = {
+    "stm_hll_users": (("user_id",), 4),
+    "stm_tws_events": (("user_id", "value"), 2),
+    "stm_tws_types": (("user_id", "event_type"), 2),
+    "stm_tws_ids": (("user_id", "event_id"), 2),
+    "stm_tws_ts": (("user_id", "ts"), 2),
+}
 
 
-def _stage_events_user_files(spark: SparkSession, sf_dir: str) -> str:
-    """Stage events.user_id as FOUR parquet files so
-    ``maxFilesPerTrigger=1`` forces a 4-micro-batch drain — the
-    register state must merge across batches, not inside one."""
+def _stage_event_cols(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Stage the ``_EVENT_COL_STAGES[name]`` projection of events."""
     from ..tables import stage_scratch
+
+    cols, n_files = _EVENT_COL_STAGES[name]
 
     def build(indir: str) -> None:
         (
             load(spark, sf_dir, "events")
-            .select("user_id")
-            .repartition(4)
+            .select(*cols)
+            .repartition(n_files)
             .write.mode("overwrite")
             .parquet(indir)
         )
 
-    return stage_scratch("stm_hll_users", sf_dir, "events", build)
+    return stage_scratch(name, sf_dir, "events", build)
+
+
+# ---------------------------------------------------------------------------
+# stm_sketch_hll_merge — mergeable HLL registers maintained as stream state
+# ---------------------------------------------------------------------------
 
 
 @query(
@@ -863,7 +871,7 @@ def stm_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     <=256-row stateful aggregate; state is bounded by m=256 forever.
     At 100 TB/day the same query runs unchanged with a real
     checkpoint and a kafka source."""
-    indir = _stage_events_user_files(spark, sf_dir)
+    indir = _stage_event_cols(spark, sf_dir, "stm_hll_users")
     raw = (
         spark.readStream.schema("user_id long")
         .option("maxFilesPerTrigger", 1)
@@ -1130,24 +1138,6 @@ def _ensure_protobuf_runtime() -> str | None:
     return str(zpath)
 
 
-def _stage_events_two_files(spark: SparkSession, sf_dir: str) -> str:
-    """events (user_id, value) as TWO parquet files so
-    ``maxFilesPerTrigger=1`` forces a 2-micro-batch drain — the
-    ValueState must carry batch 1's running totals into batch 2."""
-    from ..tables import stage_scratch
-
-    def build(indir: str) -> None:
-        (
-            load(spark, sf_dir, "events")
-            .select("user_id", "value")
-            .repartition(2)
-            .write.mode("overwrite")
-            .parquet(indir)
-        )
-
-    return stage_scratch("stm_tws_events", sf_dir, "events", build)
-
-
 def _tws_runtime_env(spark: SparkSession) -> None:
     """Route the staged protobuf runtime to the TWS driver worker (one
     definition for the whole TWS family — r9 review finding #7; the
@@ -1308,7 +1298,7 @@ def stm_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    indir = _stage_events_two_files(spark, sf_dir)
+    indir = _stage_event_cols(spark, sf_dir, "stm_tws_events")
     raw = (
         spark.readStream.schema("user_id long, value double")
         .option("maxFilesPerTrigger", 1)
@@ -1389,7 +1379,7 @@ def tws_bucketed_totals_form(
         def close(self) -> None:
             pass
 
-    indir = _stage_events_two_files(spark, sf_dir)
+    indir = _stage_event_cols(spark, sf_dir, "stm_tws_events")
     raw = (
         spark.readStream.schema("user_id long, value double")
         .option("maxFilesPerTrigger", 1)
@@ -1416,24 +1406,6 @@ def tws_bucketed_totals_form(
             F.round(F.col("m.sum_value"), 4).alias("sum_value"),
         )
     )
-
-
-def _stage_events_type_files(spark: SparkSession, sf_dir: str) -> str:
-    """events (user_id, event_type) as TWO parquet files for the
-    MapState drain (own stage name — schema differs from the
-    ValueState key's stage)."""
-    from ..tables import stage_scratch
-
-    def build(indir: str) -> None:
-        (
-            load(spark, sf_dir, "events")
-            .select("user_id", "event_type")
-            .repartition(2)
-            .write.mode("overwrite")
-            .parquet(indir)
-        )
-
-    return stage_scratch("stm_tws_types", sf_dir, "events", build)
 
 
 @query(
@@ -1498,7 +1470,7 @@ def stm_tws_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    indir = _stage_events_type_files(spark, sf_dir)
+    indir = _stage_event_cols(spark, sf_dir, "stm_tws_types")
     raw = (
         spark.readStream.schema("user_id long, event_type string")
         .option("maxFilesPerTrigger", 1)
@@ -1587,7 +1559,7 @@ def stm_tws_list_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    indir = _stage_events_id_files(spark, sf_dir)
+    indir = _stage_event_cols(spark, sf_dir, "stm_tws_ids")
     raw = (
         spark.readStream.schema("user_id long, event_id long")
         .option("maxFilesPerTrigger", 1)
@@ -1609,40 +1581,6 @@ def stm_tws_list_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("seen_total") == F.col("max_seen"))
         .select("user_id", "event_id")
     )
-
-
-def _stage_events_id_files(spark: SparkSession, sf_dir: str) -> str:
-    """events (user_id, event_id) as TWO parquet files for the
-    ListState drain."""
-    from ..tables import stage_scratch
-
-    def build(indir: str) -> None:
-        (
-            load(spark, sf_dir, "events")
-            .select("user_id", "event_id")
-            .repartition(2)
-            .write.mode("overwrite")
-            .parquet(indir)
-        )
-
-    return stage_scratch("stm_tws_ids", sf_dir, "events", build)
-
-
-def _stage_events_ts_files(spark: SparkSession, sf_dir: str) -> str:
-    """events (user_id, ts) as TWO parquet files for the event-time
-    timer drain (the watermark column rides along)."""
-    from ..tables import stage_scratch
-
-    def build(indir: str) -> None:
-        (
-            load(spark, sf_dir, "events")
-            .select("user_id", "ts")
-            .repartition(2)
-            .write.mode("overwrite")
-            .parquet(indir)
-        )
-
-    return stage_scratch("stm_tws_ts", sf_dir, "events", build)
 
 
 @query(
@@ -1703,7 +1641,7 @@ def stm_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    indir = _stage_events_ts_files(spark, sf_dir)
+    indir = _stage_event_cols(spark, sf_dir, "stm_tws_ts")
     raw = (
         spark.readStream.schema("user_id long, ts timestamp")
         .option("maxFilesPerTrigger", 1)
@@ -1735,7 +1673,7 @@ def stm_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stm_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RocksDB state store WITH CHANGELOG CHECKPOINTING (r9, VERDICT
-    r8 item 6 — state-store breadth beyond the HDFS-backed default):
+    r8 item 6 — state-store coverage beyond the HDFS-backed default):
     a stateful per-type running aggregate drained in two forced
     micro-batches (2 staged files x maxFilesPerTrigger=1), with
     ``spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.
@@ -2055,3 +1993,323 @@ def stm_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _run_to_memory(deduped, name, "complete")
     return spark.table(name)
+
+
+# ---------------------------------------------------------------------------
+# stm_cdc_stream_apply — CDC merge into a snapshot across micro-batches
+# ---------------------------------------------------------------------------
+
+_CDC_ORACLE = """
+    WITH log AS (
+      SELECT o_orderkey AS k, 1 AS seq, 'I' AS op,
+             o_orderstatus AS status, o_totalprice AS price
+      FROM orders
+      UNION ALL
+      SELECT o_orderkey, 2, 'U', 'U', o_totalprice + 100.0
+      FROM orders WHERE o_orderkey % 3 = 0
+      UNION ALL
+      SELECT o_orderkey, 3, 'D', NULL, NULL
+      FROM orders WHERE o_orderkey % 5 = 0
+    ), last AS (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY seq DESC) AS rn
+      FROM log
+    ), snap AS (
+      SELECT k, status, price FROM last WHERE rn = 1 AND op <> 'D'
+    )
+    SELECT status,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           ROUND(CAST(SUM(CAST(price AS DECIMAL(18,4))) AS DOUBLE), 4)
+             AS sum_price
+    FROM snap GROUP BY status
+"""
+
+
+def _stage_cdc_log(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the deterministic I/U/D log (the snk_cdc_apply
+    derivation) as THREE parquet files, one per seq, so
+    maxFilesPerTrigger=1 drains them as three micro-batches. The
+    merge itself is declared arrival-order-ROBUST (last-writer-wins
+    compares seq numbers, not batch order), so file ordering is a
+    realism choice, not a correctness dependency."""
+    from ..tables import stage_scratch
+
+    def build(indir: str) -> None:
+        orders = load(spark, sf_dir, "orders")
+        ins = orders.select(
+            F.col("o_orderkey").alias("k"),
+            F.lit(1).alias("seq"),
+            F.lit("I").alias("op"),
+            F.col("o_orderstatus").alias("status"),
+            F.col("o_totalprice").alias("price"),
+        )
+        upd = orders.where(F.col("o_orderkey") % 3 == 0).select(
+            F.col("o_orderkey").alias("k"),
+            F.lit(2).alias("seq"),
+            F.lit("U").alias("op"),
+            F.lit("U").alias("status"),
+            (F.col("o_totalprice") + 100.0).alias("price"),
+        )
+        dele = orders.where(F.col("o_orderkey") % 5 == 0).select(
+            F.col("o_orderkey").alias("k"),
+            F.lit(3).alias("seq"),
+            F.lit("D").alias("op"),
+            F.lit(None).cast("string").alias("status"),
+            F.lit(None).cast("double").alias("price"),
+        )
+        import os
+
+        os.makedirs(indir, exist_ok=True)
+        for i, part in enumerate((ins, upd, dele), start=1):
+            part.coalesce(1).write.mode("overwrite").parquet(
+                f"{indir}/seq{i}.parquet"
+            )
+            # flatten: the file source lists files recursively only
+            # with a glob; move the part file up as seq{i}.parquet
+        # rewrite as flat files the stream dir can list
+        flat = [p for p in __import__("glob").glob(f"{indir}/seq*.parquet/part-*.parquet")]
+        for i, p in enumerate(sorted(flat)):
+            shutil.move(p, f"{indir}/cdc_{i}.parquet")
+        for d in __import__("glob").glob(f"{indir}/seq*.parquet"):
+            shutil.rmtree(d, ignore_errors=True)
+
+    return stage_scratch("stm_cdc_log", sf_dir, "orders", build)
+
+
+@query("stm_cdc_stream_apply", oracle=_CDC_ORACLE)
+def stm_cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """STREAMING CDC application — the change feed folded into a
+    materialized snapshot ACROSS micro-batches ([P high]: this is
+    what a Debezium/kafka consumer maintaining a queryable mirror
+    does continuously; the batch twin snk_cdc_apply folds a complete
+    log, this one must keep the snapshot correct after EVERY
+    incremental batch). Each foreachBatch merge unions the incoming
+    batch with the current snapshot, keeps last-writer-wins by SEQ
+    NUMBER per key (arrival-order-robust by construction — a
+    re-ordered or replayed feed folds identically), and retains
+    delete TOMBSTONES in the snapshot so a late lower-seq update can
+    never resurrect a deleted key; the published read filters
+    tombstones out. The snapshot swap is write-new-then-rename
+    (atomic publish; readers never see a half-written merge).
+
+    Oracle = the batch fold of the full log (snk_cdc_apply's) — a
+    lost update, surviving delete, resurrection, or double-applied
+    batch flips the hash. At 100 TB the same foreachBatch body runs
+    MERGE INTO on a lakehouse table; the tombstone and seq
+    disciplines are identical. State per merge is the snapshot
+    itself (the operator IS incremental materialization)."""
+    stage = _stage_cdc_log(spark, sf_dir)
+    base = scratch_dir(
+        "stm_cdc_snap", sf_dir.strip("/").replace("/", "_"), uuid.uuid4().hex[:8]
+    )
+    snap_dir = f"{base}/snap"
+    schema = "k long, seq int, op string, status string, price double"
+
+    def merge(bdf: DataFrame, _bid: int) -> None:
+        sp = bdf.sparkSession
+        import os
+
+        if os.path.exists(snap_dir):
+            cur = sp.read.parquet(snap_dir)
+            allr = cur.unionByName(bdf)
+        else:
+            allr = bdf
+        w = Window.partitionBy("k").orderBy(F.col("seq").desc())
+        merged = (
+            allr.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") == 1)
+            .drop("rn")
+        )
+        tmp = f"{base}/tmp_{_bid}"
+        merged.write.mode("overwrite").parquet(tmp)
+        old = f"{base}/old_{_bid}"
+        if os.path.exists(snap_dir):
+            shutil.move(snap_dir, old)
+        shutil.move(tmp, snap_dir)
+        shutil.rmtree(old, ignore_errors=True)
+
+    ckpt = f"{base}/ckpt"
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+        .writeStream.foreachBatch(merge)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    out = (
+        spark.read.parquet(snap_dir)
+        .where(F.col("op") != "D")
+        .groupBy("status")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.round(
+                F.sum(F.col("price").cast("decimal(18,4)")).cast("double"), 4
+            ).alias("sum_price"),
+        )
+    )
+    # materialize before the scratch snapshot is abandoned to later
+    # runs' cleanup; the frame returned must not depend on run-id dirs
+    pdf = out.toPandas()
+    shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(
+        pdf, schema="status string, n_rows long, sum_price double"
+    )
+
+
+# ---------------------------------------------------------------------------
+# stm_python_stream_source — PySpark 4 Python STREAMING DataSource demo
+# ---------------------------------------------------------------------------
+
+# module-level so the @query oracle f-string below stays valid even
+# on a pyspark<4 fallback import (r8 review finding #2)
+_CS_BATCHES, _CS_PER = 5, 1000
+
+try:  # pyspark >= 4.0
+    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+    class SyntheticCounterStream(DataSource):
+        """Custom STREAMING source via the PySpark 4 Python DataSource
+        API — the streaming half of the V2 surface whose batch half is
+        ``SyntheticFeedDataSource``: a deterministic finite feed of
+        ``_CS_BATCHES`` offset-tracked micro-batches (the sandbox-
+        honest stand-in for a kafka/provider tail). Demonstrates the
+        simple-stream-reader contract: ``initialOffset``/``read(start)
+        -> (rows, nextOffset)``/``readBetweenOffsets`` replay (exactly
+        the offset-log recovery path a restart takes). Rows must be
+        picklable ITERATORS over materialized lists — a generator
+        return dies pickling in planPartitions, a bare list dies on
+        next() in latestOffset (both probed r8); iter(list) satisfies
+        both sides of the wrapper."""
+
+        @classmethod
+        def name(cls) -> str:
+            return "synthetic_counter_stream"
+
+        def schema(self) -> str:
+            return "v BIGINT, b INT"
+
+        def simpleStreamReader(self, schema):  # noqa: ANN001 - pyspark API
+            return _CounterStreamReader()
+
+    class _CounterStreamReader(SimpleDataSourceStreamReader):
+        def initialOffset(self):
+            return {"b": 0}
+
+        def read(self, start):
+            b = int(start["b"])
+            if b >= _CS_BATCHES:
+                return iter([]), {"b": b}
+            return (
+                iter([(b * _CS_PER + i, b) for i in range(_CS_PER)]),
+                {"b": b + 1},
+            )
+
+        def readBetweenOffsets(self, start, end):
+            out = []
+            for b in range(int(start["b"]), int(end["b"])):
+                out.extend((b * _CS_PER + i, b) for i in range(_CS_PER))
+            return iter(out)
+
+    _HAVE_PY_STREAM_SOURCE = True
+except ImportError:  # pragma: no cover - pyspark < 4 fallback
+    _HAVE_PY_STREAM_SOURCE = False
+
+
+@query(
+    "stm_python_stream_source",
+    oracle=f"""
+    SELECT CAST(v // {_CS_PER} AS INT) AS b,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(SUM(v) AS BIGINT) AS sum_v
+    FROM generate_series(0, {_CS_BATCHES * _CS_PER - 1}) t(v)
+    GROUP BY 1
+    """,
+)
+def stm_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drain the custom Python STREAMING source end-to-end: 5
+    offset-tracked micro-batches of 1000 deterministic rows into a
+    memory sink (append mode — stateless pass-through per batch),
+    then aggregate per batch id against the closed-form oracle.
+
+    The Python micro-batch stream does NOT support
+    Trigger.AvailableNow (probed r8: Spark logs the fallback and
+    processes a SINGLE batch), so the drain runs a processingTime=0
+    trigger and polls the sink until all 5x1000 rows landed
+    (deadline-guarded), then stops — the documented pattern for
+    finite custom streams. Offsets advance through the source's own
+    read(start); a restart would replay via readBetweenOffsets, the
+    same code path the oracle-side replay check exercises.
+
+    Scale posture: SURFACE demo of the streaming V2 contract
+    (driver-side prefetch + offset log); production volume streams
+    stay on the JVM file/rate/kafka sources (stm_* family)."""
+    import time
+    import uuid as _uuid
+
+    if not _HAVE_PY_STREAM_SOURCE:  # pragma: no cover
+        raise NotImplementedError(
+            "Python streaming DataSource API requires pyspark >= 4.0"
+        )
+    # The STREAMING source planner runs in a dedicated Python worker
+    # that does NOT receive addPyFile includes (probed r8:
+    # ModuleNotFoundError unpickling the source class under a plain
+    # /tmp driver — the batch source's plan worker does get them), so
+    # the package zip rides sc.environment['PYTHONPATH'] instead —
+    # pyspark keys worker factories by (exec, envVars), the same
+    # route that unblocked the transformWithState driver worker.
+    from .. import session as _session
+
+    _session._ship_package(spark)
+    env = spark.sparkContext.environment
+    cur = env.get("PYTHONPATH", "")
+    if _session._PKG_ZIP and _session._PKG_ZIP not in cur.split(":"):
+        env["PYTHONPATH"] = _session._PKG_ZIP + (":" + cur if cur else "")
+    try:
+        spark.dataSource.register(SyntheticCounterStream)
+    except Exception as exc:
+        # re-registration of the same short name is the benign case; a
+        # REAL registration failure will resurface as q.exception() in
+        # the drain loop below, so record it here instead of masking
+        # (r8 ADVICE #3)
+        import warnings
+
+        warnings.warn(f"python stream source registration: {exc!r}")
+    name = f"stm_pyss_{_uuid.uuid4().hex[:8]}"
+    q = (
+        spark.readStream.format("synthetic_counter_stream")
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    want = _CS_BATCHES * _CS_PER
+    deadline = time.monotonic() + 120
+    try:
+        while spark.table(name).count() < want:
+            # a dead query never fills the sink: surface its real
+            # failure NOW instead of burning the deadline into a
+            # misleading TimeoutError (r8 ADVICE #3)
+            err = q.exception()
+            if err is not None:
+                raise err
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"python stream drain incomplete: "
+                    f"{spark.table(name).count()}/{want} rows"
+                )
+            time.sleep(0.2)
+    finally:
+        q.stop()
+        q.awaitTermination()
+    return (
+        spark.table(name)
+        .groupBy("b")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("v").alias("sum_v"),
+        )
+    )

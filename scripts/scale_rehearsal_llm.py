@@ -262,15 +262,10 @@ def run_lowdensity(spark, mults, runs) -> None:
     from pyspark.sql import DataFrame  # noqa: F401
 
     from atd_dockless_processing_spark.operators.dedup_ann import (
-        ngram_candidate_pairs,
-    )
-    from atd_dockless_processing_spark.operators.pipeline_ext import (
         _CLUSTER_T,
         _ngram_pairs,
         min_label_components,
-    )
-
-    from atd_dockless_processing_spark.operators.dedup_ann import (
+        ngram_candidate_pairs,
         ngram_verified_pairs,
     )
 

@@ -391,7 +391,7 @@ def test_pip_table_cell_cover_property(spark, sf_dir):
     cell — i.e. candidate-join hits == all-pairs hits. Verified by
     comparing the operator against an unblocked cross-join variant
     built from the same staged polygons."""
-    from atd_dockless_processing_spark.operators.pipeline_r5 import (
+    from atd_dockless_processing_spark.operators.geo import (
         _pipt_inside,
         _stage_polygons,
     )
@@ -428,7 +428,7 @@ def test_wav_decode_golden_clip():
     import numpy as np
     import pandas as pd
 
-    from atd_dockless_processing_spark.operators.pipeline_r5 import (
+    from atd_dockless_processing_spark.operators.multimodal import (
         _wav_amps,
         _wav_params,
     )
@@ -467,7 +467,7 @@ def test_hll_registers_merge_by_max(spark, sf_dir):
     and the estimate lands within 3 sigma of the exact count."""
     from pyspark.sql import functions as F
 
-    from atd_dockless_processing_spark.operators.pipeline_r5 import _HLL_RHO
+    from atd_dockless_processing_spark.operators.aggregates import _HLL_RHO
     from atd_dockless_processing_spark.tables import load
 
     orders = load(spark, sf_dir, "orders")
@@ -551,7 +551,7 @@ def test_cms_cells_merge_by_sum_and_never_undercount(spark, sf_dir):
     full sketch's cells) and the CM guarantee est >= true."""
     from pyspark.sql import functions as F
 
-    from atd_dockless_processing_spark.operators.pipeline_r5 import (
+    from atd_dockless_processing_spark.operators.aggregates import (
         _CMS_COL_SPARK,
         _CMS_D,
     )
@@ -777,7 +777,7 @@ def test_ann_hyperplane_adaptive_paths_agree(spark, sf_dir):
     sequential fold (same products, same addition order as the HOF
     fold), so the sign gate and every output row must be IDENTICAL
     to the JVM path on the full driver table."""
-    from atd_dockless_processing_spark.operators import pipeline_ext
+    from atd_dockless_processing_spark.operators import dedup_ann
 
     hof = (
         QUERIES["llm_ann_hyperplane"](spark, sf_dir)
@@ -786,7 +786,7 @@ def test_ann_hyperplane_adaptive_paths_agree(spark, sf_dir):
         .reset_index(drop=True)
     )
     arrow = (
-        pipeline_ext._ann_hyperplane_arrow(spark, sf_dir)
+        dedup_ann._ann_hyperplane_arrow(spark, sf_dir)
         .toPandas()
         .sort_values(["query_id", "rnk"])
         .reset_index(drop=True)
@@ -843,7 +843,7 @@ def test_zorder_layout_files_are_prunable(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from atd_dockless_processing_spark.operators import pipeline_r6 as r6
+    from atd_dockless_processing_spark.sources import sinks
 
     QUERIES["snk_zorder_layout"](spark, sf_dir).collect()  # ensure staged
     from atd_dockless_processing_spark.tables import SCRATCH
@@ -860,10 +860,10 @@ def test_zorder_layout_files_are_prunable(spark, sf_dir):
         hi = {c: max(md.row_group(g).column(cols[c]).statistics.max for g in range(md.num_row_groups)) for c in ("xi", "yi")}
         spans.append((hi["xi"] - lo["xi"], hi["yi"] - lo["yi"]))
         if (
-            hi["xi"] < r6._ZO_X[0]
-            or lo["xi"] > r6._ZO_X[1]
-            or hi["yi"] < r6._ZO_Y[0]
-            or lo["yi"] > r6._ZO_Y[1]
+            hi["xi"] < sinks._ZO_X[0]
+            or lo["xi"] > sinks._ZO_X[1]
+            or hi["yi"] < sinks._ZO_Y[0]
+            or lo["yi"] > sinks._ZO_Y[1]
         ):
             prunable += 1
     # z-range files cover bounded rectangles: both spans well under
@@ -1184,7 +1184,7 @@ def test_temperature_mixture_invariants(spark, sf_dir):
     and the α=0.5 flattening property must hold — every language's
     share sits strictly between uniform (1/k) and proportional
     (n_i/N) on whichever side its size dictates."""
-    from atd_dockless_processing_spark.operators.pipeline_r7 import (
+    from atd_dockless_processing_spark.operators.llm import (
         _MIX_BUDGET,
     )
     from atd_dockless_processing_spark.registry import QUERIES
@@ -1292,16 +1292,16 @@ def test_stream_hll_merges_across_four_batches(spark, sf_dir):
     import glob as _glob
 
     from atd_dockless_processing_spark.streaming.stream_queries import (
-        _stage_events_user_files,
+        _stage_event_cols,
     )
 
-    indir = _stage_events_user_files(spark, sf_dir)
+    indir = _stage_event_cols(spark, sf_dir, "stm_hll_users")
     parts = _glob.glob(f"{indir}/part-*.parquet")
     assert len(parts) == 4, f"expected 4 staged files, got {len(parts)}"
     # end-to-end: the streaming result row must match the batch twin
     # computed with the agg_hll_deterministic machinery over user_id
     got = QUERIES["stm_sketch_hll_merge"](spark, sf_dir).collect()[0]
-    from atd_dockless_processing_spark.operators.pipeline_r5 import (
+    from atd_dockless_processing_spark.operators.aggregates import (
         _HLL_EST,
         _HLL_RHO,
         _HLL_TERM_SPARK,
@@ -1368,7 +1368,7 @@ def test_bloom_prefilter_prunes_and_is_transparent(spark, sf_dir):
     # always-true probe would leave the final result correct but keep
     # every fact row, and only this count catches it (r11 second-
     # review finding #2)
-    from atd_dockless_processing_spark.operators.pipeline_r6b import (
+    from atd_dockless_processing_spark.operators.joins import (
         _bloom_stage,
     )
 
@@ -1409,7 +1409,7 @@ def test_compaction_collapses_file_count_without_shuffle(spark, sf_dir):
     import math
     import os
 
-    from atd_dockless_processing_spark.operators.pipeline_r6b import (
+    from atd_dockless_processing_spark.sources.sinks import (
         _COMPACT_TARGET_BYTES,
         _stage_compacted,
     )
@@ -1515,7 +1515,7 @@ def test_audio_windows_partition_each_clip(spark, sf_dir):
     sum to the closed-form sample count — a decoder that drops or
     misaligns a window fails here even if per-window sums happen to
     collide."""
-    from atd_dockless_processing_spark.operators.pipeline_r5 import _wav_params
+    from atd_dockless_processing_spark.operators.multimodal import _wav_params
     from atd_dockless_processing_spark.registry import QUERIES
 
     pdf = QUERIES["mm_audio_features"](spark, sf_dir).toPandas()
@@ -1911,7 +1911,7 @@ def test_silence_trim_bounds_from_closed_form(spark, sf_dir):
     """First/last loud bounds re-derived in plain python from the
     amp closed form for every clip — pins header offset, endianness,
     and inclusive bounds."""
-    from atd_dockless_processing_spark.operators.pipeline_r5 import _wav_amps, _wav_params
+    from atd_dockless_processing_spark.operators.multimodal import _wav_amps, _wav_params
     from atd_dockless_processing_spark.registry import QUERIES
 
     got = (
@@ -2066,6 +2066,16 @@ def test_scd2_temporal_join_matches_pandas_asof(spark, sf_dir):
         assert int(got.loc[ck, "n_facts"]) == len(g)
         assert int(got.loc[ck, "n_matched"]) == n_matched
         assert int(got.loc[ck, "n_versions_hit"]) == len(hit)
+
+
+def test_token_array_builders_reject_expressions():
+    """The bigram / 2-gram builders take an already-projected token
+    column; an expression would re-run inside the HOF lambda once per
+    element, so it is refused."""
+    from atd_dockless_processing_spark.operators.text import _bigrams_from
+
+    with pytest.raises(ValueError):
+        _bigrams_from("split(text, ' ')")
 
 
 def test_rouge_overlap_bounds_and_self_identity(spark, sf_dir):
@@ -2356,7 +2366,7 @@ def test_mad_adaptive_boundary_agreement(spark):
     the threshold) the approx form's per-type median and MAD land
     within 0.5% of exact, and the 3-MAD outlier counts within 2%
     (counts move with the band edge, so they get the looser bound)."""
-    from atd_dockless_processing_spark.operators.pipeline_r6b import _mad_plan
+    from atd_dockless_processing_spark.operators.events import _mad_plan
     from atd_dockless_processing_spark.tables import load
 
     ev = load(spark, "/root/testdata/sf0.1", "events")
@@ -2410,7 +2420,7 @@ def test_corr_subquery_window_rewrite_equality(spark, sf_dir):
     and must equal it exactly. Also pins that the registered plan is
     window-shaped (one Window, no self-join of orders) and that the
     twin's plan contains no per-row subquery (Catalyst decorrelated)."""
-    from atd_dockless_processing_spark.operators.pipeline_ext import (
+    from atd_dockless_processing_spark.operators.sql import (
         corr_decorrelated_sql_form,
     )
     from atd_dockless_processing_spark.registry import QUERIES
@@ -2535,7 +2545,7 @@ def test_mad_histogram_form_bit_equals_three_pass(spark):
     explicit (value, count) histogram, so any drift in the index
     arithmetic, the interpolation formula, or the weighted re-sort
     for the deviation pass shows up here as an ulp mismatch."""
-    from atd_dockless_processing_spark.operators.pipeline_r6b import (
+    from atd_dockless_processing_spark.operators.events import (
         _mad_hist_plan,
         _mad_plan,
     )
@@ -2746,7 +2756,7 @@ def test_rfm_gather_and_chained_forms_identical(spark, sf_dir):
     == three NTILE(5) windows, at sf0.001 and sf0.1."""
     from pyspark.sql import functions as F
 
-    from atd_dockless_processing_spark.operators.pipeline_r3 import (
+    from atd_dockless_processing_spark.operators.events import (
         _rfm_chained_plan,
         _rfm_score_batches,
     )
@@ -2928,7 +2938,7 @@ def test_python_stream_source_replay_equals_read():
     modes)."""
     import pickle
 
-    from atd_dockless_processing_spark.sources.scans import (
+    from atd_dockless_processing_spark.streaming.stream_queries import (
         _CS_BATCHES,
         _CounterStreamReader,
     )
@@ -2984,7 +2994,7 @@ def test_declarative_pipeline_local_executor(spark, sf_dir, tmp_path):
     import pytest as _pytest
     from pyspark.sql import functions as F
 
-    from atd_dockless_processing_spark.operators.pipeline_r9 import (
+    from atd_dockless_processing_spark.operators.etl import (
         run_pipeline_locally,
     )
 
@@ -3366,14 +3376,14 @@ def test_python_ds_writer_manifest_excludes_orphans(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from atd_dockless_processing_spark import QUERIES
-    from atd_dockless_processing_spark.operators import pipeline_r9b
+    from atd_dockless_processing_spark.sources import sinks
     from atd_dockless_processing_spark.tables import load
 
     first = {
         (r["o_orderpriority"]): (r["n_orders"], r["sum_key"])
         for r in QUERIES["snk_python_datasource_write"](spark, sf_dir).collect()
     }
-    out_dir = pipeline_r9b._LAST_PYDS_DIR  # uuid-scoped per invocation
+    out_dir = sinks._LAST_PYDS_DIR  # uuid-scoped per invocation
     assert out_dir is not None
     with open(os.path.join(out_dir, "_MANIFEST.json")) as fh:
         manifest = json.load(fh)
@@ -3784,7 +3794,7 @@ def test_aes_roundtrip_actually_encrypts_and_is_deterministic(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from atd_dockless_processing_spark import QUERIES
-    from atd_dockless_processing_spark.operators.pipeline_r10 import _AES_KEY
+    from atd_dockless_processing_spark.functions.scalars import _AES_KEY
     from atd_dockless_processing_spark.tables import load
 
     c = load(spark, sf_dir, "customer").select("c_name")
@@ -4697,7 +4707,7 @@ def test_dau_wau_interval_cover_matches_fanout_twin(spark, sf_dir):
     import datetime
 
     from atd_dockless_processing_spark import QUERIES
-    from atd_dockless_processing_spark.operators.pipeline_r3 import (
+    from atd_dockless_processing_spark.operators.events import (
         _dau_wau_fanout_twin,
     )
 

@@ -417,7 +417,7 @@ def test_pk_packed_lineitem_key_matches_composite_twin(
     numbers sit at both range edges (1 and 7), and (k0+5, 7) appears
     twice — a genuine composite dup the packed key must still count
     exactly once. Oracle-hash-equal on the synthesized corpus too."""
-    from atd_dockless_processing_spark.operators.pipeline_r6c import (
+    from atd_dockless_processing_spark.operators.quality import (
         _pk_uniqueness_composite_twin,
     )
 
@@ -480,7 +480,7 @@ def test_od_matrix_int_components_match_stringkey_twin(
     exactly one row with n_trips == 6. Oracle-hash parity on the
     synthesized corpus guards the Spark-vs-DuckDB NULL-concat
     divergence the COALESCE exists for."""
-    from atd_dockless_processing_spark.operators.pipeline_r5 import (
+    from atd_dockless_processing_spark.operators.geo import (
         _od_matrix_stringkey_twin,
     )
 
@@ -561,7 +561,7 @@ def test_gini_hist_form_matches_rank_twin(spark, sf_dir, tmp_path):
     single-row class (n=1 → gini 0, the degenerate tail). Oracle-
     hash parity on the synthesized corpus guards the lift + DECIMAL
     accumulation cross-engine."""
-    from atd_dockless_processing_spark.operators.pipeline_r6e import (
+    from atd_dockless_processing_spark.operators.aggregates import (
         _gini_rank_twin,
     )
 
@@ -614,7 +614,7 @@ def test_rouge_merge_form_matches_quadratic_twin(spark, sf_dir, tmp_path):
     via the nullif guard), and a disjoint pair (ov 0). Oracle-hash
     parity on the synthesized corpus guards the sorted-merge vs
     DuckDB clipped-list semantics."""
-    from atd_dockless_processing_spark.operators.pipeline_r6f import (
+    from atd_dockless_processing_spark.operators.llm import (
         _rouge_quadratic_twin,
     )
 
@@ -683,7 +683,7 @@ def test_corr_cov_units_form_matches_decimal_twin(spark, sf_dir, tmp_path):
     price 0.01 — lift exactness at the small end) so the group keeps
     nonzero variance. Oracle-hash parity on the synthesized corpus
     guards the lift + reconstruction cross-engine."""
-    from atd_dockless_processing_spark.operators.pipeline_r4 import (
+    from atd_dockless_processing_spark.operators.aggregates import (
         _corr_cov_decimal_twin,
     )
 
@@ -728,7 +728,7 @@ def test_corr_cov_dispatches_decimal_twin_past_row_bound(spark, sf_dir, monkeypa
     0 dispatches the twin, whose values equal the long-unit result on
     sf0.01. The default dispatch is the long-unit form, so the pin
     above compares two different plans."""
-    from atd_dockless_processing_spark.operators import pipeline_r4
+    from atd_dockless_processing_spark.operators import aggregates
 
     sf01 = str(Path(sf_dir).with_name("sf0.01"))
 
@@ -737,13 +737,13 @@ def test_corr_cov_dispatches_decimal_twin_past_row_bound(spark, sf_dir, monkeypa
 
     units = QUERIES["agg_corr_cov"](spark, sf01)
     assert is_units(units)
-    monkeypatch.setattr(pipeline_r4, "_CORR_COV_UNITS_MAX_ROWS", 0)
+    monkeypatch.setattr(aggregates, "_CORR_COV_UNITS_MAX_ROWS", 0)
     wide = QUERIES["agg_corr_cov"](spark, sf01)
     assert not is_units(wide)
     got = sorted(map(tuple, wide.collect()))
     assert got == sorted(map(tuple, units.collect())) and len(got) == 3
     monkeypatch.undo()
-    monkeypatch.setattr(pipeline_r4, "parquet_nrows", lambda sf, name: None)
+    monkeypatch.setattr(aggregates, "parquet_nrows", lambda sf, name: None)
     assert not is_units(QUERIES["agg_corr_cov"](spark, sf01))
 
 
@@ -758,14 +758,14 @@ def test_ab_runner_checks_corr_cov_twin(sf_dir):
     r = subprocess.run(
         [sys.executable, "scripts/ab.py", "--sf", sf_dir, "--runs", "1",
          "--check", "agg_corr_cov",
-         "atd_dockless_processing_spark.operators.pipeline_r4:_corr_cov_decimal_twin"],
+         "atd_dockless_processing_spark.operators.aggregates:_corr_cov_decimal_twin"],
         capture_output=True, text=True, cwd=str(repo), timeout=600,
     )
     assert r.returncode == 0, (r.stdout[-2000:], r.stderr[-2000:])
     recs = [json.loads(line) for line in r.stdout.splitlines() if line.startswith("{")]
     assert [rec.get("form") for rec in recs[:2]] == [
         "agg_corr_cov",
-        "atd_dockless_processing_spark.operators.pipeline_r4:_corr_cov_decimal_twin",
+        "atd_dockless_processing_spark.operators.aggregates:_corr_cov_decimal_twin",
     ]
     assert all(rec["rows"] == 3 and rec["median_s"] > 0 for rec in recs[:2])
     assert recs[2]["identical"] is True
@@ -787,7 +787,7 @@ def test_repetition_sorted_form_matches_quadratic_twin(spark, sf_dir, tmp_path):
     NULL/NULL cross-engine before pinning). Oracle-hash parity on the
     synthesized corpus guards the sorted-walk vs DuckDB's quadratic
     list lambdas."""
-    from atd_dockless_processing_spark.operators.pipeline_r2 import (
+    from atd_dockless_processing_spark.operators.text import (
         _repetition_quadratic_twin,
     )
 
