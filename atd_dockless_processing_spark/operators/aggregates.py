@@ -383,87 +383,6 @@ _PCTL_EXACT_MAX_ROWS = 5_000_000
 _PCTL_SKETCH_ACCURACY = 2500
 
 
-_PCTL_QS = (0.5, 0.9, 0.99)
-
-
-def _percentiles_exact_hist(o: DataFrame) -> DataFrame:
-    """Exact p50/p90/p99 per priority via a (priority, value)
-    HISTOGRAM instead of the ``percentile`` TypedImperativeAggregate
-    (r14 optimization round; the evt_outlier_mad precedent — "the
-    3-pass structure WAS reducible" — applied to this key's 1-pass
-    structure, which was off whole-stage codegen).
-
-    Why: ``percentile`` plans as ObjectHashAggregate — each partial
-    builds a per-group OpenHashMap value→count buffer OUTSIDE
-    whole-stage codegen, the exchange ships serialized maps, and the
-    final merge + sort of each group's full value domain runs
-    single-threaded per group (5 tasks here). This form runs the
-    heavy 15M-row pass as a codegen HashAggregate collapsing to the
-    value-domain cells (~150k at any replication of this corpus —
-    prices repeat, keys shift), then derives the EXACT interpolated
-    percentiles from the tiny weighted histogram: cumulative counts
-    give each cell its 0-based rank span [hi-cnt, hi), the cells
-    holding ranks floor(pos)/ceil(pos) are picked out with
-    conditional aggregates, and the interpolation below replicates
-    Spark's ``Percentile.getPercentile`` FORMULA EXACTLY —
-    ``(higher - pos) * vlow + (pos - lower) * vhigh`` with
-    pos = q * (n-1) — so the result is the same IEEE double the
-    TypedImperativeAggregate returns, not merely close (equality with
-    the ``percentile()`` form is pinned in tests at three SFs plus a
-    synthetic single-row/exact-rank edge corpus).
-
-    Measured outcome (r14 ×100 A/B, two epochs): REJECTED — this
-    form read 2.728 s vs the ``percentile()`` plan's 1.557 s, then
-    1.474 vs 1.299 s in a quieter window. On THIS corpus ~150k
-    distinct prices are visible to every partition, so the partial
-    (priority, value) cells shuffled here cost what the partial
-    value→count maps cost there, and the extra exchange + two
-    windows are pure overhead. The helper stays as the measured,
-    equality-pinned alternative (it wins only when the value domain
-    is far smaller than per-partition row count — the
-    evt_outlier_mad regime, ~56k cells/type vs millions of rows);
-    the registered exact plan remains ``_percentiles_plan``."""
-    from pyspark.sql import Window
-
-    cells = (
-        o.where(F.col("o_totalprice").isNotNull())
-        .groupBy("o_orderpriority", "o_totalprice")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w_cum = (
-        Window.partitionBy("o_orderpriority")
-        .orderBy("o_totalprice")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("o_orderpriority")
-    cum = cells.withColumn("hi", F.sum("cnt").over(w_cum)).withColumn(
-        "n", F.sum("cnt").over(w_all)
-    )
-    lo = F.col("hi") - F.col("cnt")
-    v = F.col("o_totalprice")
-    aggs = [F.sum("cnt").alias("n_orders")]
-    for i, q in enumerate(_PCTL_QS):
-        pos = F.lit(q) * (F.col("n") - 1).cast("double")
-        lower, higher = F.floor(pos), F.ceil(pos)
-        aggs.append(
-            F.max(F.when((lo <= lower) & (lower < F.col("hi")), v)).alias(f"vl{i}")
-        )
-        aggs.append(
-            F.max(F.when((lo <= higher) & (higher < F.col("hi")), v)).alias(f"vh{i}")
-        )
-    out = cum.groupBy("o_orderpriority").agg(*aggs)
-    cols = [F.col("o_orderpriority"), F.col("n_orders")]
-    for i, (q, name) in enumerate(zip(_PCTL_QS, ("p50", "p90", "p99"))):
-        pos = F.lit(q) * (F.col("n_orders") - 1).cast("double")
-        lower, higher = F.floor(pos), F.ceil(pos)
-        interp = F.when(lower == higher, F.col(f"vl{i}")).otherwise(
-            (higher.cast("double") - pos) * F.col(f"vl{i}")
-            + (pos - lower.cast("double")) * F.col(f"vh{i}")
-        )
-        cols.append(F.round(interp, 4).alias(name))
-    return out.select(*cols)
-
-
 def _percentiles_plan(o: DataFrame, exact: bool) -> DataFrame:
     """Shared p50/p90/p99-per-priority plan; ``exact`` picks the
     aggregate. ONE array-argument call either way — three separate
@@ -520,20 +439,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     never dispatched from this key: a 100 TB deployment calls
     ``_percentiles_plan(df, exact=False)`` directly. Boundary
     agreement (sketch within 0.5% of exact on the largest local
-    corpus) is asserted in tests.
-
-    r14 optimization round, attempted and REJECTED BY MEASUREMENT:
-    a histogram-exact rewrite (``_percentiles_exact_hist`` — codegen
-    HashAggregate over (priority, value) cells + Percentile-formula
-    interpolation, value-IDENTICAL and equality-pinned in tests)
-    targeted the off-codegen ObjectHashAggregate plan, but measured
-    SLOWER at ×100 in both A/B epochs (2.728 vs 1.557 s, then 1.474
-    vs 1.299 s hot): the partial value→count maps this corpus ships
-    (~150k distinct prices × 32 partitions) cost the same either way,
-    and the histogram form adds an exchange + two windows on top.
-    The ``percentile()`` single-array form therefore STAYS the
-    registered exact plan; the helper remains as the measured
-    alternative for bounded value domains (OPTIMIZATION_r14.md)."""
+    corpus) is asserted in tests."""
     return _percentiles_plan(load(spark, sf_dir, "orders"), exact=True)
 
 
@@ -856,11 +762,12 @@ _HLL_TERM_SPARK = "CAST(shiftleft(CAST(1 AS BIGINT), 61 - m) AS DECIMAL(38,0))"
 _HLL_TERM_DUCK = "CAST((CAST(1 AS BIGINT) << (61 - m)) AS DECIMAL(38,0))"
 
 
-@query(
-    "agg_hll_deterministic",
-    oracle="""
+def _hll_oracle(col: str, table: str) -> str:
+    """DuckDB closed form of the 256-register HLL estimate over
+    ``md5(CAST(col AS VARCHAR))`` of ``table``."""
+    return """
     WITH h AS (
-      SELECT md5(CAST(o_custkey AS VARCHAR)) AS h FROM orders
+      SELECT md5(CAST({col} AS VARCHAR)) AS h FROM {table}
     ), parts AS (
       SELECT CAST('0x' || substr(h, 1, 2) AS BIGINT) AS reg,
              substr(h, 3, 15) AS tail
@@ -881,11 +788,48 @@ _HLL_TERM_DUCK = "CAST((CAST(1 AS BIGINT) << (61 - m)) AS DECIMAL(38,0))"
     )
     SELECT m_regs, v_empty, r_max, s_scaled, {est} AS est_r4 FROM agg
     """.format(
+        col=col,
+        table=table,
         rho=_HLL_RHO.format(t="tail"),
         est=_HLL_EST,
         term=_HLL_TERM_DUCK,
-    ),
-)
+    )
+
+
+def _hll_registers(df: DataFrame, col: str) -> DataFrame:
+    """``(reg, m_raw)`` registers of ``md5(col)``: the first 2 hex chars
+    pick the register, ``_HLL_RHO`` scores the 60-bit tail, and the
+    max per register is map-side combinable."""
+    parts = df.select(
+        F.md5(F.col(col).cast("string")).alias("h")
+    ).select(
+        F.conv(F.substring("h", 1, 2), 16, 10).cast("bigint").alias("reg"),
+        F.substring("h", 3, 15).alias("tail"),
+    )
+    rho = parts.select("reg", F.expr(_HLL_RHO.format(t="tail")).alias("rho"))
+    return rho.groupBy("reg").agg(F.max("rho").alias("m_raw"))
+
+
+def _hll_estimate(regs: DataFrame) -> DataFrame:
+    """The estimate tail over ``(reg, m_raw)`` registers: the 256-row
+    spine fills empty registers with 0, harmonic terms are exact
+    shiftleft bigints summed in DECIMAL(38,0), then one double
+    division (``_HLL_EST``)."""
+    spine = regs.sparkSession.range(256).select(F.col("id").alias("reg"))
+    full = spine.join(regs, "reg", "left").select(
+        F.coalesce("m_raw", F.lit(0)).alias("m")
+    )
+    return full.agg(
+        F.count(F.lit(1)).alias("m_regs"),
+        F.sum(F.when(F.col("m") == 0, 1).otherwise(0)).alias("v_empty"),
+        F.max("m").alias("r_max"),
+        F.sum(F.expr(_HLL_TERM_SPARK)).cast("double").alias("s_scaled"),
+    ).select(
+        "m_regs", "v_empty", "r_max", "s_scaled", F.expr(_HLL_EST).alias("est_r4")
+    )
+
+
+@query("agg_hll_deterministic", oracle=_hll_oracle("o_custkey", "orders"))
 def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct-count sketch that is hash-checkable ACROSS
     ENGINES — the deterministic twin of `agg_approx_distinct` (which
@@ -908,27 +852,7 @@ def agg_hll_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions, shards, or days — the property that lets a cluster
     keep per-file sketches and union them for free. The 256-row spine
     join and final 1-row aggregate are negligible."""
-    orders = load(spark, sf_dir, "orders")
-    parts = orders.select(
-        F.md5(F.col("o_custkey").cast("string")).alias("h")
-    ).select(
-        F.conv(F.substring("h", 1, 2), 16, 10).cast("bigint").alias("reg"),
-        F.substring("h", 3, 15).alias("tail"),
-    )
-    rho = parts.select("reg", F.expr(_HLL_RHO.format(t="tail")).alias("rho"))
-    regs = rho.groupBy("reg").agg(F.max("rho").alias("m_raw"))
-    spine = spark.range(256).select(F.col("id").alias("reg"))
-    full = spine.join(regs, "reg", "left").select(
-        F.coalesce("m_raw", F.lit(0)).alias("m")
-    )
-    return full.agg(
-        F.count(F.lit(1)).alias("m_regs"),
-        F.sum(F.when(F.col("m") == 0, 1).otherwise(0)).alias("v_empty"),
-        F.max("m").alias("r_max"),
-        F.sum(F.expr(_HLL_TERM_SPARK)).cast("double").alias("s_scaled"),
-    ).select(
-        "m_regs", "v_empty", "r_max", "s_scaled", F.expr(_HLL_EST).alias("est_r4")
-    )
+    return _hll_estimate(_hll_registers(load(spark, sf_dir, "orders"), "o_custkey"))
 
 
 # ---------------------------------------------------------------------------

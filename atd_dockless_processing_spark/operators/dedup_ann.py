@@ -458,6 +458,21 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _embedding_matrix(b):
+    """``(vec_id, (n, dim) float64 matrix)`` of one Arrow embeddings
+    batch for the ``mapInArrow`` scorers: the list column's contiguous
+    values buffer is reshaped without per-row boxing."""
+    import numpy as np
+    import pyarrow as pa
+
+    col = b.column(b.schema.get_field_index("embedding"))
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    mat = np.asarray(col.flatten(), dtype=np.float64).reshape(b.num_rows, -1)
+    ids = np.asarray(b.column(b.schema.get_field_index("vec_id")), dtype=np.int64)
+    return ids, mat
+
+
 def ball_cover_stages(v: DataFrame, cos_t: float, dim: int):
     """The ball-cover near-dup machinery, reusable at any threshold
     (the scale rehearsal drives it at a production T=0.9 — see
@@ -959,14 +974,9 @@ def _vector_quantize_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def score(batches):
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            col = b.column(b.schema.get_field_index("embedding"))
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            flat = np.asarray(col.flatten(), dtype=np.float64)
-            mat = flat.reshape(n, -1)
+            ids, mat = _embedding_matrix(b)
             sc = 127.0 / np.max(np.abs(mat), axis=1)
             scaled = mat * sc[:, None]
             qv = np.copysign(np.floor(np.abs(scaled) + 0.5), scaled)
@@ -976,9 +986,6 @@ def _vector_quantize_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
             a4 = np.round(approx, 4)
             e4 = np.round(exact, 4)
             err = np.round(np.abs(approx - exact), 4)
-            ids = np.asarray(
-                b.column(b.schema.get_field_index("vec_id")), dtype=np.int64
-            )
             idx = np.flatnonzero(ids != 0)
             order = np.lexsort((ids[idx], -a4[idx]))[:10]
             sel = idx[order]
@@ -1391,16 +1398,9 @@ def _ann_hyperplane_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def score(batches):
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            col = b.column(b.schema.get_field_index("embedding"))
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            mat = np.asarray(col.flatten(), dtype=np.float64).reshape(n, -1)
-            ids = np.asarray(
-                b.column(b.schema.get_field_index("vec_id")), dtype=np.int64
-            )
+            ids, mat = _embedding_matrix(b)
             # signature dots via ONE BLAS dgemm plus a RIGOROUS
             # error-bound gate (r7, replaces the 64-pass exact d-loop
             # at 3.12×): for ANY summation order the computed dot

@@ -1535,19 +1535,17 @@ def evt_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges over events (median, then MAD — an exact two-pass is
     irreducible for nested medians) with the 5-row med/mad dims
     BROADCAST back; the outlier count rides the second broadcast. At
-    100 TB the production posture: the Greenwald-Khanna sketch swap
-    (``_mad_plan(exact=False)``) was WIRED AND REJECTED BY MEASUREMENT
-    (r7 ×100 A/B, rehearsal harness: sketch 3.43 s = 4.50× vs exact
-    2.8-3.1 s = 3.72× over DuckDB 0.76 s) — events.value medians sit
-    over a per-group distinct set the exact value→count buffer handles
-    cheaper than per-row GK summary updates; unlike agg_percentiles
-    (15M wide-spread totalprices, sketch won 1.94×), here exact IS the
-    faster path and stays the default at every size. The residual
-    ratio is the irreducible 3-pass structure (median → MAD → score,
-    identical on both engines) times Spark's per-pass exchange
-    constant. The sketch form remains available for genuinely
-    unbounded-cardinality deployments and its boundary agreement is
-    pinned in tests (sf0.1, both passes + outlier counts).
+    100 TB the production posture: a Greenwald-Khanna sketch swap of
+    both medians (``percentile_approx`` 2500) was measured and
+    rejected (r7 ×100 A/B, rehearsal harness: sketch 3.43 s = 4.50×
+    vs exact 2.8-3.1 s = 3.72× over DuckDB 0.76 s) — events.value
+    medians sit over a per-group distinct set the exact value→count
+    buffer handles cheaper than per-row GK summary updates; unlike
+    agg_percentiles (15M wide-spread totalprices, sketch won 1.94×),
+    here exact IS the faster path and is the only form at every size.
+    The residual ratio is the irreducible 3-pass structure (median →
+    MAD → score, identical on both engines) times Spark's per-pass
+    exchange constant.
 
     r7 defuse of the 3-pass constant: the registered plan is now
     ``_mad_hist_plan`` — ONE events pass building a per-type
@@ -1559,26 +1557,21 @@ def evt_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests (sf0.1 + sf0.01); ×100 A/B in BASELINE round-7 de-weak. For
     unbounded value domains (continuous doubles) the histogram
     degenerates to row cardinality and the 3-pass ``_mad_plan`` is
-    the right form — a deployment calls ``_mad_plan(ev, exact=True)``
-    directly; since the two forms are pinned bit-identical the choice
-    is a pure performance posture, never a parity one. There is no
+    the right form — a deployment calls ``_mad_plan(ev)`` directly;
+    since the two forms are pinned bit-identical the choice is a pure
+    performance posture, never a parity one. There is no
     cheap automatic gate: distinct-cardinality of the value column is
     not in parquet footers, and a discovery job would cost more than
     the histogram it guards."""
     return _mad_hist_plan(load(spark, sf_dir, "events"))
 
 
-def _mad_plan(ev: DataFrame, exact: bool) -> DataFrame:
-    """Shared MAD-screen plan; ``exact`` picks interpolated
-    ``percentile`` (hash-exact) vs ``percentile_approx`` 2500 (the
-    mergeable sketch both medians swap to at scale)."""
+def _mad_plan(ev: DataFrame) -> DataFrame:
+    """3-pass MAD screen over interpolated ``percentile`` medians
+    (hash-exact): the bit-equality reference for ``_mad_hist_plan``."""
 
     def med_of(col: str) -> F.Column:
-        return F.expr(
-            f"percentile({col}, 0.5d)"
-            if exact
-            else f"percentile_approx({col}, 0.5d, 2500)"
-        )
+        return F.expr(f"percentile({col}, 0.5d)")
 
     med = ev.groupBy("event_type").agg(med_of("value").alias("med"))
     dev = ev.join(F.broadcast(med), "event_type")

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import portable_hash60, portable_hash60_sql
 from ..registry import query
 from ..tables import load
-from .dedup_ann import _as_double, _dot, _norm, first_eq_band
+from .dedup_ann import _as_double, _dot, _embedding_matrix, _norm, first_eq_band
 from .text import _bigrams_from, _token_set
 
 
@@ -242,21 +242,12 @@ def _cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def score(batches):
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            col = b.column(b.schema.get_field_index("embedding"))
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            # contiguous values buffer -> (n, dim) without row boxing
-            flat = np.asarray(col.flatten(), dtype=np.float64)
-            mat = flat.reshape(n, -1)
+            ids, mat = _embedding_matrix(b)
             dots = mat @ q
             norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
             cos = np.round(dots / (norms * qn), 4)
-            ids = np.asarray(
-                b.column(b.schema.get_field_index("vec_id")), dtype=np.int64
-            )
             keep = ids != 0
             idx = np.flatnonzero(keep)
             # batch-local top-10 under the global order (cos desc,
@@ -373,16 +364,9 @@ def _knn_join_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def score(batches):
         for b in batches:
-            n = b.num_rows
-            if n == 0:
+            if b.num_rows == 0:
                 continue
-            col = b.column(b.schema.get_field_index("embedding"))
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            mat = np.asarray(col.flatten(), dtype=np.float64).reshape(n, -1)
-            ids = np.asarray(
-                b.column(b.schema.get_field_index("vec_id")), dtype=np.int64
-            )
+            ids, mat = _embedding_matrix(b)
             nrm = np.sqrt(np.einsum("ij,ij->i", mat, mat))
             cos = np.round((mat @ qmat) / (nrm[:, None] * qn[None, :]), 4)
             oq, on, oc = [], [], []

@@ -673,9 +673,9 @@ def snk_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query(
-    "snk_cdc_apply",
-    oracle="""
+# the batch fold of the I/U/D log; stm_cdc_stream_apply's streaming
+# merge must land on the same snapshot, so both keys declare it
+_CDC_ORACLE = """
     WITH log AS (
       SELECT o_orderkey AS k, 1 AS seq, 'I' AS op,
              o_orderstatus AS status, o_totalprice AS price
@@ -697,8 +697,38 @@ def snk_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(CAST(SUM(CAST(price AS DECIMAL(18,4))) AS DOUBLE), 4)
              AS sum_price
     FROM snap GROUP BY status
-    """,
-)
+"""
+
+
+def _cdc_log_parts(orders: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The deterministic I/U/D change log derived from orders, as its
+    (insert, update, delete) parts: every key INSERTs at seq 1, keys
+    %3 UPDATE at seq 2, keys %5 DELETE at seq 3."""
+    ins = orders.select(
+        F.col("o_orderkey").alias("k"),
+        F.lit(1).alias("seq"),
+        F.lit("I").alias("op"),
+        F.col("o_orderstatus").alias("status"),
+        F.col("o_totalprice").alias("price"),
+    )
+    upd = orders.where(F.col("o_orderkey") % 3 == 0).select(
+        F.col("o_orderkey").alias("k"),
+        F.lit(2).alias("seq"),
+        F.lit("U").alias("op"),
+        F.lit("U").alias("status"),
+        (F.col("o_totalprice") + 100.0).alias("price"),
+    )
+    dele = orders.where(F.col("o_orderkey") % 5 == 0).select(
+        F.col("o_orderkey").alias("k"),
+        F.lit(3).alias("seq"),
+        F.lit("D").alias("op"),
+        F.lit(None).cast("string").alias("status"),
+        F.lit(None).cast("double").alias("price"),
+    )
+    return ins, upd, dele
+
+
+@query("snk_cdc_apply", oracle=_CDC_ORACLE)
 def snk_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC log application — the change-feed half of upsert ([P
     high]: provider pulls arrive as insert/update/delete events; the
@@ -717,34 +747,7 @@ def snk_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-neutral MERGE kernel, and the log:snapshot ratio — not
     table size — governs cost. DECIMAL sum at the boundary (hazard
     rules 1/2)."""
-    orders = load(spark, sf_dir, "orders")
-    ins = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.lit(1).alias("seq"),
-        F.lit("I").alias("op"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("price"),
-    )
-    upd = (
-        orders.where(F.col("o_orderkey") % 3 == 0)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.lit(2).alias("seq"),
-            F.lit("U").alias("op"),
-            F.lit("U").alias("status"),
-            (F.col("o_totalprice") + 100.0).alias("price"),
-        )
-    )
-    dele = (
-        orders.where(F.col("o_orderkey") % 5 == 0)
-        .select(
-            F.col("o_orderkey").alias("k"),
-            F.lit(3).alias("seq"),
-            F.lit("D").alias("op"),
-            F.lit(None).cast("string").alias("status"),
-            F.lit(None).cast("double").alias("price"),
-        )
-    )
+    ins, upd, dele = _cdc_log_parts(load(spark, sf_dir, "orders"))
     w = Window.partitionBy("k").orderBy(F.col("seq").desc())
     snap = (
         ins.unionByName(upd)

@@ -26,9 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-# Small dimension tables that should always be broadcast in joins.
-BROADCAST_DIMS = {"region", "nation", "supplier"}
-
 REPO_ROOT = Path(__file__).resolve().parent.parent
 SCRATCH = REPO_ROOT / ".scratch"
 

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import statistics
 import subprocess
 import sys
@@ -39,18 +38,12 @@ sys.path.insert(0, str(REPO))
 
 
 def _duck(key: str, sf: str, runs: int):
-    import duckdb
+    from selfcheck import duck_con
 
     from atd_dockless_processing_spark import ORACLES
-    from atd_dockless_processing_spark.tables import TABLES
 
-    con = duckdb.connect()
+    con = duck_con(sf)
     con.execute("SET threads TO 4")
-    for t in TABLES:
-        path = f"{sf}/{t}.parquet"
-        if os.path.exists(path):
-            glob = f"{path}/*.parquet" if os.path.isdir(path) else path
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{glob}')")
     sql = ORACLES[key]
     pdf = con.execute(sql).df()  # warm-up
     times = []

@@ -98,7 +98,7 @@ POINTERS = {
     "stm_tws_timers": "TWS event-time-timer sibling of stm_transform_with_state - same state-server constant (see its MEASURED INCLUSIVE x100 row; r10 coarsening A/B does NOT apply here — timers are inherently per-user keys); one bounded RocksDB timer per user, watermark-driven expiry",
     "stm_tws_map_state": "TWS MapState sibling of stm_transform_with_state - same per-(key,batch) state-server protocol constant (see its MEASURED INCLUSIVE x100 row; r10: key-coarsening-reducible for totals-shaped state, 8.8x A/B); state rows = (user,type) pairs, still bounded and incremental",
     "llm_bpe_merge_step": "both agg exchanges collapse to VOCABULARY size map-side (word partial agg before the shuffle, pair agg over the (word,count) summary) - shuffled bytes O(vocab) at any corpus size; plan family of llm_term_topk (0.59x x100) with one extra vocab-sized exchange",
-    "stm_transform_with_state": "DELIBERATE API-SURFACE (udf_scalar_python precedent) — MEASURED INCLUSIVE x100: 137-267 s across epochs (r8 179-267 s, r10 same-session 137.1 s) vs DuckDB 0.55 s batch groupBy — the per-(key, batch) state-server round-trip tax of the TWS protocol; r10 SHRINK A/B (VERDICT r9 item 5, .scratch/r10_tws_ab.log): the constant is key-coarsening-reducible, NOT irreducible — tws_bucketed_totals_form (pmod(user_id,1024) buckets, one pickled dict ValueState row per bucket, 2xbuckets instead of 2xusers round-trips per batch) measures 15.6 s = 8.8x shrink with identical output (equality test-pinned); residual 15 s = per-batch pandas fold + protocol floor; trade-off priced in the twin docstring (bucket blob is opaque to per-user TTL/timers). Registered key keeps the declared per-user API surface; volume shape stays the batch groupBy (trivial) / applyInPandasWithState twin stm_stateful_session (1.17-1.37x)",
+    "stm_transform_with_state": "DELIBERATE API-SURFACE (udf_scalar_python precedent) — MEASURED INCLUSIVE x100: 137-267 s across epochs (r8 179-267 s, r10 same-session 137.1 s) vs DuckDB 0.55 s batch groupBy — the per-(key, batch) state-server round-trip tax of the TWS protocol; r10 SHRINK A/B (VERDICT r9 item 5, .scratch/r10_tws_ab.log): the constant is key-coarsening-reducible, NOT irreducible — the key-coarsened A/B form (pmod(user_id,1024) buckets, one pickled dict ValueState row per bucket, 2xbuckets instead of 2xusers round-trips per batch) measured 15.6 s = 8.8x shrink with identical output; residual 15 s = per-batch pandas fold + protocol floor; trade-off: the bucket blob is opaque to per-user TTL/timers. The A/B is finished and the form was deleted; it is readable at commit 1b1ec88. Registered key keeps the declared per-user API surface; volume shape stays the batch groupBy (trivial) / applyInPandasWithState twin stm_stateful_session (1.17-1.37x)",
     "stm_join_stream_static": "batch twin join_broadcast_dim (floor-regime x10); static side broadcast per micro-batch",
     "stm_join_stream_stream": "stream-stream inner; the LEFT OUTER twin's decomposition (stm_join_stream_left) prices the watermark machinery",
     "stm_late_data_drop": "rows-only by contract (engine-specific watermark-drop semantics)",

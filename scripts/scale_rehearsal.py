@@ -25,9 +25,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-import duckdb  # noqa: E402
-
 from pyspark.sql import functions as F  # noqa: E402
+from selfcheck import duck_con  # noqa: E402
 
 from atd_dockless_processing_spark import ORACLES  # noqa: E402
 from atd_dockless_processing_spark.session import get_spark  # noqa: E402
@@ -311,13 +310,9 @@ def main() -> None:
     spark.conf.set("spark.sql.adaptive.enabled", "true")  # production config
     out = build(spark, mult)
 
-    con = duckdb.connect()
+    con = duck_con(str(out))
     con.execute("SET threads TO 4")  # baseline harness thread count
     for t in list(REPL) + [t for t in STATIC if (out / f"{t}.parquet").exists()]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{out}/{t}.parquet"
-            + ("/*.parquet')" if (out / f"{t}.parquet").is_dir() else "')")
-        )
         spark.read.parquet(str(out / f"{t}.parquet")).createOrReplaceTempView(t)
 
     print(f"| query shape | DuckDB 4t x{mult} | Spark local x{mult} (AQE on) | ratio |")

@@ -19,6 +19,7 @@ from __future__ import annotations
 import datetime as dt
 import decimal
 import math
+import os
 import sys
 import time
 from pathlib import Path
@@ -102,11 +103,15 @@ def norm_pdf(pdf: pd.DataFrame):
 
 
 def duck_con(sf_dir: str):
+    """DuckDB connection with one view per table present in ``sf_dir``;
+    a directory-shaped ``<t>.parquet`` is read through its part-file
+    glob (DuckDB does not expand a bare directory path)."""
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(path):
+            glob = f"{path}/*.parquet" if os.path.isdir(path) else path
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{glob}')")
     return con
 
 

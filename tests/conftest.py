@@ -4,14 +4,14 @@ import os
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "scripts"))
 
-from atd_dockless_processing_spark import TABLES  # noqa: E402
 from atd_dockless_processing_spark.session import get_spark  # noqa: E402
+from selfcheck import duck_con  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -29,10 +29,6 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck_con(SF_DIR)
     yield con
     con.close()

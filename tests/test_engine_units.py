@@ -290,6 +290,88 @@ def test_stage_scratch_reuse_and_rebuild(tmp_path, monkeypatch):
     assert len(builds) == 2
 
 
+def test_late_data_staging_tracks_part_file_rewrites(spark, tmp_path, monkeypatch):
+    """stm_late_data_drop stages its two micro-batch files through
+    stage_scratch, so an in-place rewrite of one part file of a
+    directory-shaped events.parquet re-stages even when the
+    directory's own mtime is unchanged (a dir-level stat marker would
+    keep serving the old rows)."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from atd_dockless_processing_spark import tables
+
+    monkeypatch.setattr(tables, "SCRATCH", tmp_path / "scratch")
+    sf = tmp_path / "sf"
+    src = sf / "events.parquet"
+    src.mkdir(parents=True)
+    schema = pa.schema(
+        [
+            ("event_id", pa.int64()),
+            ("ts", pa.timestamp("us")),
+            ("user_id", pa.int64()),
+            ("event_type", pa.string()),
+            ("value", pa.float64()),
+            ("props", pa.string()),
+        ]
+    )
+
+    def write(n_recent: int, n_late: int) -> None:
+        ts = [datetime.datetime(2024, 1, 11)] * n_recent + [
+            datetime.datetime(2024, 1, 5)
+        ] * n_late
+        n = len(ts)
+        rows = {
+            "event_id": list(range(n)),
+            "ts": ts,
+            "user_id": [1] * n,
+            "event_type": ["view"] * n,
+            "value": [1.0] * n,
+            "props": ["{}"] * n,
+        }
+        pq.write_table(pa.table(rows, schema=schema), src / "part-0.parquet")
+
+    def staged_rows() -> list[int]:
+        base = tables.scratch_dir("stm_late_data", str(sf).strip("/").replace("/", "_"))
+        return [
+            pq.read_metadata(f"{base}/in/f{i}.parquet").num_rows for i in range(2)
+        ]
+
+    write(3, 2)
+    QUERIES["stm_late_data_drop"](spark, str(sf)).collect()
+    assert staged_rows() == [3, 2]
+    st = os.stat(src)
+    write(4, 1)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns))
+    QUERIES["stm_late_data_drop"](spark, str(sf)).collect()
+    assert staged_rows() == [4, 1]
+
+
+def test_duck_con_reads_directory_tables(tmp_path):
+    """selfcheck.duck_con (the one DuckDB view helper of selfcheck,
+    ab.py, scale_rehearsal.py and the ``duck`` fixture) reads a
+    directory-shaped ``<t>.parquet`` through its part-file glob —
+    DuckDB does not expand a bare directory path — and skips tables
+    the corpus does not have."""
+    import pandas as pd
+    from selfcheck import duck_con
+
+    d = tmp_path / "orders.parquet"
+    d.mkdir()
+    pd.DataFrame({"o_orderkey": [1, 2]}).to_parquet(d / "part-0.parquet", index=False)
+    pd.DataFrame({"o_orderkey": [3]}).to_parquet(d / "part-1.parquet", index=False)
+    con = duck_con(str(tmp_path))
+    try:
+        got = con.execute("SELECT SUM(o_orderkey), COUNT(*) FROM orders").fetchone()
+        assert got == (6, 3)
+        assert [r[0] for r in con.execute("SHOW TABLES").fetchall()] == ["orders"]
+    finally:
+        con.close()
+
+
 def test_interval_overlap_join_is_bucket_blocked(spark, sf_dir):
     """join_interval_overlap's candidate stage must be an EQUI-join on
     the week bucket (hash join / broadcast hash join), never a
@@ -2361,27 +2443,6 @@ def test_percentile_adaptive_boundary_agreement(spark):
             assert abs(a - e) / e < 0.005, (k, c, e, a)
 
 
-def test_mad_adaptive_boundary_agreement(spark):
-    """The MAD screen's exact→sketch swap: at sf0.1 (exact side of
-    the threshold) the approx form's per-type median and MAD land
-    within 0.5% of exact, and the 3-MAD outlier counts within 2%
-    (counts move with the band edge, so they get the looser bound)."""
-    from atd_dockless_processing_spark.operators.events import _mad_plan
-    from atd_dockless_processing_spark.tables import load
-
-    ev = load(spark, "/root/testdata/sf0.1", "events")
-    exact = {r["event_type"]: r for r in _mad_plan(ev, exact=True).collect()}
-    approx = {r["event_type"]: r for r in _mad_plan(ev, exact=False).collect()}
-    assert exact.keys() == approx.keys() and exact
-    for k in exact:
-        assert exact[k]["n_events"] == approx[k]["n_events"]
-        for c in ("med", "mad"):
-            e, a = exact[k][c], approx[k][c]
-            assert abs(a - e) / abs(e) < 0.005, (k, c, e, a)
-        e, a = exact[k]["n_outliers"], approx[k]["n_outliers"]
-        assert abs(a - e) <= max(2, 0.02 * exact[k]["n_events"]), (k, e, a)
-
-
 def test_r7_single_exchange_plan_shapes(spark, sf_dir):
     """Pins the r7 single-pass plan shapes: gap islands = ONE parquet
     scan + ONE exchange (the set-fold form); cohort retention = ONE
@@ -2553,7 +2614,7 @@ def test_mad_histogram_form_bit_equals_three_pass(spark):
 
     for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
         ev = load(spark, sf, "events")
-        ref = {r["event_type"]: r for r in _mad_plan(ev, exact=True).collect()}
+        ref = {r["event_type"]: r for r in _mad_plan(ev).collect()}
         got = {r["event_type"]: r for r in _mad_hist_plan(ev).collect()}
         assert ref.keys() == got.keys() and ref
         for k in ref:
@@ -3746,25 +3807,6 @@ def test_tumbling_us_layout_dispatch_and_identical(spark, sf_dir, tmp_path):
             )
 
 
-def test_tws_bucketed_totals_equals_registered(spark, sf_dir):
-    """The coarse-key TWS form (r10 A/B: 8.8x shrink of the per-user
-    state-server constant at x100) must produce the registered
-    per-user key's exact totals — same 2-micro-batch drain, state
-    carried across the batch boundary inside the bucket blob."""
-    from atd_dockless_processing_spark import QUERIES
-    from atd_dockless_processing_spark.streaming.stream_queries import (
-        tws_bucketed_totals_form,
-    )
-
-    reg = sorted(
-        map(tuple, QUERIES["stm_transform_with_state"](spark, sf_dir).collect())
-    )
-    coarse = sorted(
-        map(tuple, tws_bucketed_totals_form(spark, sf_dir, n_buckets=32).collect())
-    )
-    assert reg == coarse and reg
-
-
 def test_group_by_all_equals_explicit_grouping(spark, sf_dir):
     """GROUP BY ALL must resolve to exactly the explicit
     GROUP BY o_orderstatus, YEAR(o_orderdate) — value-identical, and
@@ -4658,41 +4700,6 @@ def test_map_ops_json_fast_twin_value_equality(spark, sf_dir):
         F.sum(F.col("k") % 10).alias("sum_k_mod"),
     )
     assert sorted(map(tuple, twin.collect())) == reg and reg
-
-
-def test_percentiles_hist_form_matches_percentile_agg(spark, sf_dir):
-    """agg_percentiles r14 A/B pin: the histogram-exact alternative
-    (codegen HashAggregate over (priority, value) cells + exact
-    interpolation replicating Percentile.getPercentile's formula) was
-    REJECTED BY MEASUREMENT at x100 (slower than the registered
-    percentile() single-array plan in both epochs — see its
-    docstring), but remains the measured alternative for
-    bounded-value-domain corpora; this pin is the value-identity
-    witness that keeps it swappable: identical rows on the driver
-    corpus AND on a synthetic edge corpus (single-row group,
-    exact-rank positions at n=101, an all-ties group)."""
-    from atd_dockless_processing_spark.operators.aggregates import (
-        _percentiles_exact_hist,
-        _percentiles_plan,
-    )
-    from atd_dockless_processing_spark.tables import load
-
-    o = load(spark, sf_dir, "orders")
-    a = sorted(map(tuple, _percentiles_plan(o, exact=True).collect()))
-    b = sorted(map(tuple, _percentiles_exact_hist(o).collect()))
-    assert a == b and a
-
-    data = (
-        [("A", 1.0)]
-        + [("B", float(i)) for i in range(1, 102)]
-        + [("C", 5.0)] * 7
-    )
-    df = spark.createDataFrame(
-        data, "o_orderpriority string, o_totalprice double"
-    )
-    a = sorted(map(tuple, _percentiles_plan(df, exact=True).collect()))
-    b = sorted(map(tuple, _percentiles_exact_hist(df).collect()))
-    assert a == b and len(a) == 3
 
 
 def test_dau_wau_interval_cover_matches_fanout_twin(spark, sf_dir):

@@ -31,7 +31,6 @@ import shutil
 import sys
 from pathlib import Path
 
-import duckdb
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -39,7 +38,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
 
-from selfcheck import norm_pdf  # noqa: E402
+from selfcheck import duck_con, norm_pdf  # noqa: E402
 
 from atd_dockless_processing_spark import ORACLES, QUERIES  # noqa: E402
 
@@ -56,14 +55,8 @@ def _append_like(src: str, out: Path, extra: pd.DataFrame) -> None:
 
 
 def _oracle(corpus: Path, key: str) -> pd.DataFrame:
-    con = duckdb.connect()
+    con = duck_con(str(corpus))
     try:
-        for p in sorted(corpus.glob("*.parquet")):
-            glob = f"{p}/*.parquet" if p.is_dir() else str(p)
-            con.execute(
-                f"CREATE VIEW {p.name.removesuffix('.parquet')} AS "
-                f"SELECT * FROM read_parquet('{glob}')"
-            )
         return con.execute(ORACLES[key]).df()
     finally:
         con.close()
