@@ -9,7 +9,7 @@ Importing this package registers every operator in
 """
 
 from . import functions, operators, sources, streaming  # noqa: F401
-from .registry import ORACLES, QUERIES  # noqa: F401
+from .registry import LAYOUTS, ORACLES, QUERIES  # noqa: F401
 from .session import get_spark, tune  # noqa: F401
 from .tables import TABLES, load  # noqa: F401
 

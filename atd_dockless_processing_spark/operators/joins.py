@@ -13,9 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pathlib import Path
+
 from ..functions.exact import exact_unit_sum
-from ..registry import query
-from ..tables import load
+from ..registry import query, register_layout
+from ..tables import Layout, load
 
 
 @query(
@@ -34,7 +36,7 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r12 (VERDICT r11 item 2): routes through the layout-aware
     ``custkey_inner_plan`` — when the one-time bucketed-custkey layout
-    (``ensure_custkey_bucketed_layout``) is present for this sf_dir
+    (``_CK_LAYOUT``) is present for this sf_dir
     the join plans EXCHANGE-FREE off the bucketed scans (1.07x DuckDB
     at x100, rows of record in BASELINE.md round-12); without it the
     ad-hoc plan runs unchanged
@@ -301,10 +303,10 @@ def join_multiway_5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r8 (verdict item 4): the registered key now routes through the
     LAYOUT-AWARE ``multiway5_plan`` (the ``bbox_join_plan`` pattern).
-    When the one-time bucketed-orderkey layout built by
-    ``ensure_q5_bucketed_layout`` (``snk_bucketed_join`` machinery —
-    lineitem+orders bucketBy(orderkey)+sortBy as external tables) is
-    present for this sf_dir, the orderkey fact⋈fact join plans
+    When the one-time bucketed-orderkey layout ``_Q5_LAYOUT``
+    (``snk_bucketed_join`` machinery — lineitem+orders
+    bucketBy(orderkey)+sortBy as external tables) is present for
+    this sf_dir, the orderkey fact⋈fact join plans
     EXCHANGE-FREE off the bucketed scans (plan-asserted in tests: no
     Exchange on l_orderkey/o_orderkey below the merge join); without
     the layout (driver sweep at sf0.01, any fresh deployment) the
@@ -325,43 +327,36 @@ def join_multiway_5(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multiway5_plan(spark, sf_dir)
 
 
-_Q5_BUCKETS = 32
+class _BucketedLayout(Layout):
+    """A :class:`~..tables.Layout` of bucketBy(key)+sortBy external
+    tables, shared by the Q5 orderkey layout (r8) and the custkey
+    layout (r12). The base type owns paths, the freshness marker and
+    the ensure guard sequence; this kind adds the bucketed write and
+    the catalog half. The bucket count is part of the table identity
+    (r8 review #4) — it is in every table name, in the marker name,
+    and in the re-issued bucket spec, so a foreign count never
+    re-attaches.
 
-
-class _BucketedLayout:
-    """One-time bucketBy(key)+sortBy external-table layout machinery,
-    shared by the Q5 orderkey layout (r8) and the custkey layout (r12)
-    — ONE body so a guard fix lands in every layout at once (r12
-    review finding #3). Encodes the accumulated guard discipline:
-    bucket count in the table identity (r8 review #4), per-file source
-    freshness marker (r8 review #1 / ADVICE #1), decline on unstatable
-    sources (r9 review #3), decline while a table provider is active
-    (r10 review #4 / second-review #1), and the marker is written with
-    the signature sampled BEFORE the build so a source regenerated
-    mid-build can never be signed by the stale layout.
-
-    r13 (VERDICT r12 item 2): layouts now SURVIVE session boundaries.
-    The bucketed data files + marker always persisted; only the
-    catalog entry was session-scoped, so every fresh (driver-real)
-    session used to fall back to the ad-hoc plans. ``available()``
-    now DDL-re-attaches a disk-valid layout (``_reattach`` — CREATE
-    TABLE over the existing files, no data rewrite), so the one-time
-    build cost is paid once per corpus, not once per session. All
-    pre-existing guards still decline first: provider active, missing
-    files, stale/unreadable marker, unstatable source, and a foreign
-    bucket count never re-attaches (the count is part of the table
-    identity AND of the re-issued bucket spec)."""
+    r13 (VERDICT r12 item 2): layouts SURVIVE session boundaries. The
+    bucketed data files + marker always persisted; only the catalog
+    entry is session-scoped, so ``available()`` DDL-re-attaches a
+    disk-valid layout (``_reattach`` — CREATE TABLE over the existing
+    files, no data rewrite) and the one-time build cost is paid once
+    per corpus, not once per session."""
 
     def __init__(
         self,
         tag: str,
+        label: str,
         prefix: str,
         specs: dict[str, tuple[str, tuple[str, ...]]],
+        buckets: int,
     ):
-        self.tag = tag
+        super().__init__(tag, label, tuple(specs))
         self.prefix = prefix
         # source table -> (bucket/sort key, narrow column set)
         self.specs = specs
+        self.buckets = buckets
         # (table name, expected location) pairs verified against the
         # catalog this session — spares the steady-state dispatch
         # probe its 2 DESCRIBE round-trips. Cleared by every path of
@@ -370,107 +365,45 @@ class _BucketedLayout:
         # tableExists before trusting the memo's location.
         self._loc_verified: set[tuple[str, str]] = set()
 
-    def names(self, sf_dir: str, buckets: int) -> tuple[list[str], str]:
-        import re
+    def names(self, sf_dir: str) -> list[str]:
+        """The catalog table names, one per source."""
+        sftag = self.catalog_tag(sf_dir)
+        return [f"{self.prefix}_{t}_{sftag}_b{self.buckets}" for t in self.specs]
 
-        from ..tables import scratch_dir
+    def marker(self, sf_dir: str):
+        # named after the first table: layouts of different bucket
+        # counts share one base directory
+        return Path(self.base(sf_dir), f".{self.names(sf_dir)[0]}.src_sig")
 
-        # table identifiers: sanitize EVERY non-identifier char, not
-        # just "/" and "." — a corpus path with a hyphen (common) made
-        # ensure()'s saveAsTable throw ParseException (caught by the
-        # r13 ops-script test). Identical output for the historical
-        # dirs (only / and . ever appeared), so existing layouts keep
-        # their names and re-attach untouched.
-        sftag = re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.strip("/"))
-        base = scratch_dir(self.tag, sf_dir.strip("/").replace("/", "_"))
-        return (
-            [f"{self.prefix}_{t}_{sftag}_b{buckets}" for t in self.specs],
-            base,
-        )
-
-    def src_sig(self, sf_dir: str) -> str:
-        """Freshness signature of the layout's sources: a regenerated
-        corpus invalidates the layout, and an unstatable source (nonce
-        signature) never matches, so the probe falls back to ad hoc."""
-        from ..tables import source_signature
-
-        return ";".join(
-            f"{t}:{source_signature(f'{sf_dir}/{t}.parquet')}"
-            for t in self.specs
-        )
-
-    def _marker(self, sf_dir: str, buckets: int):
-        from pathlib import Path
-
-        names, base = self.names(sf_dir, buckets)
-        return Path(base, f".{names[0]}.src_sig")
-
-    def ensure(
-        self, spark: SparkSession, sf_dir: str, buckets: int
-    ) -> list[str]:
-        from .. import tables
-        from ..tables import signature_unavailable
-
-        names, base = self.names(sf_dir, buckets)
-        sig = self.src_sig(sf_dir)
-        if signature_unavailable(sig) or tables.provider_active():
-            return names
-        # available() re-attaches a valid on-disk layout first (DDL
-        # only, no data rewrite) — a fresh session with surviving
-        # bucketed files never pays the build again (r13, VERDICT r12
-        # item 2 / What's-wrong #1).
-        if not self.available(spark, sf_dir, buckets):
-            # disk-valid but unavailable means the only blocker is the
-            # CATALOG: a same-named table attached at another corpus's
-            # location (the sanitized-name collision, r13 ADVICE #1).
-            # Repointing is DDL-only — drop the foreign entries and
-            # re-attach over THIS corpus's existing files instead of
-            # paying a full bucketBy rewrite (r14 review finding #2;
-            # the displaced corpus's next probe simply re-attaches or
-            # declines to ad-hoc, never serves wrong rows).
-            if self._disk_valid(sf_dir, buckets):
-                self._loc_verified.clear()
-                for name in names:
-                    spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-                if self._reattach(spark, sf_dir, buckets) and self.available(
-                    spark, sf_dir, buckets
-                ):
-                    return names
+    def write(self, spark: SparkSession, sf_dir: str) -> None:
+        names, paths = self.names(sf_dir), self.paths(sf_dir)
+        self._loc_verified.clear()
+        # disk-valid but unavailable means the only blocker is the
+        # CATALOG: a same-named table attached at another corpus's
+        # location (the sanitized-name collision, r13 ADVICE #1).
+        # Repointing is DDL-only — drop the foreign entries and
+        # re-attach over THIS corpus's existing files instead of
+        # paying a full bucketBy rewrite (r14 review finding #2; the
+        # displaced corpus's next probe simply re-attaches or declines
+        # to ad-hoc, never serves wrong rows).
+        if self._disk_valid(sf_dir):
+            for name in names:
+                spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+            if self._reattach(spark, sf_dir) and self.available(spark, sf_dir):
+                return
             self._loc_verified.clear()
-            for name, (t, (key, cols)) in zip(names, self.specs.items()):
-                (
-                    load(spark, sf_dir, t)
-                    .select(*cols)
-                    .write.mode("overwrite")
-                    .bucketBy(buckets, key)
-                    .sortBy(key)
-                    .option("path", f"{base}/{name}")
-                    .saveAsTable(name)
-                )
-            self._marker(sf_dir, buckets).write_text(sig)
-        return names
-
-    def _disk_valid(self, sf_dir: str, buckets: int) -> bool:
-        """On-disk layout files present AND the freshness marker
-        matches the current source signature. The marker read is
-        guarded: a layout deleted concurrently (another session's
-        test-finally rmtree) must degrade the probe to False — ad-hoc
-        plan — never raise out of query dispatch (r12 ADVICE #3
-        TOCTOU). An unstatable source yields a nonce signature that
-        matches no marker, so it is implicitly declined here."""
-        from pathlib import Path
-
-        names, base = self.names(sf_dir, buckets)
-        if not all(Path(base, n).exists() for n in names):
-            return False
-        try:
-            return self._marker(sf_dir, buckets).read_text() == self.src_sig(
-                sf_dir
+        for name, path, (t, (key, cols)) in zip(names, paths, self.specs.items()):
+            (
+                load(spark, sf_dir, t)
+                .select(*cols)
+                .write.mode("overwrite")
+                .bucketBy(self.buckets, key)
+                .sortBy(key)
+                .option("path", path)
+                .saveAsTable(name)
             )
-        except OSError:
-            return False
 
-    def _reattach(self, spark: SparkSession, sf_dir: str, buckets: int) -> bool:
+    def _reattach(self, spark: SparkSession, sf_dir: str) -> bool:
         """DDL-only re-attach of a disk-valid layout whose catalog
         entries were lost to a session boundary (bucketed external
         tables live in the session-scoped in-memory catalog; the data
@@ -486,13 +419,15 @@ class _BucketedLayout:
         already checked ``_disk_valid`` and the provider guard."""
         import logging
 
-        names, base = self.names(sf_dir, buckets)
+        names = self.names(sf_dir)
         self._loc_verified.clear()  # this path mutates catalog entries
         try:
-            for name, (key, _cols) in zip(names, self.specs.values()):
+            for name, path, (key, _cols) in zip(
+                names, self.paths(sf_dir), self.specs.values()
+            ):
                 if spark.catalog.tableExists(name):
                     continue
-                sch = spark.read.parquet(f"{base}/{name}").schema
+                sch = spark.read.parquet(path).schema
                 cols_ddl = ", ".join(
                     f"`{f.name}` {f.dataType.simpleString()}"
                     for f in sch.fields
@@ -506,13 +441,11 @@ class _BucketedLayout:
                 # quote without '' would merely throw ParseException.
                 # Build via .option("path") accepts both, so re-attach
                 # must too.
-                loc = (
-                    f"{base}/{name}".replace("\\", "\\\\").replace("'", "''")
-                )
+                loc = path.replace("\\", "\\\\").replace("'", "''")
                 spark.sql(
                     f"CREATE TABLE IF NOT EXISTS `{name}` ({cols_ddl}) "
                     f"USING parquet CLUSTERED BY (`{key}`) "
-                    f"SORTED BY (`{key}`) INTO {buckets} BUCKETS "
+                    f"SORTED BY (`{key}`) INTO {self.buckets} BUCKETS "
                     f"LOCATION '{loc}'"
                 )
             return all(spark.catalog.tableExists(n) for n in names)
@@ -542,7 +475,6 @@ class _BucketedLayout:
         #1). DESCRIBE FORMATTED is driver-side metadata (~30 rows);
         any failure degrades to False → ad-hoc plan, correct rows."""
         import logging
-        from pathlib import Path
         from urllib.parse import unquote, urlparse
 
         if (name, expected) in self._loc_verified:
@@ -576,97 +508,65 @@ class _BucketedLayout:
             self._loc_verified.add((name, expected))
         return ok
 
-    def available(
-        self, spark: SparkSession, sf_dir: str, buckets: int
-    ) -> bool:
-        from .. import tables
-
-        if tables.provider_active():
+    def available(self, spark: SparkSession, sf_dir: str) -> bool:
+        if not super().available(spark, sf_dir):
             return False
-        if not self._disk_valid(sf_dir, buckets):
-            return False
-        names, base = self.names(sf_dir, buckets)
+        names = self.names(sf_dir)
         if not all(spark.catalog.tableExists(n) for n in names):
-            if not self._reattach(spark, sf_dir, buckets):
+            if not self._reattach(spark, sf_dir):
                 return False
         # final identity gate: every table must be attached at THIS
         # layout's location (tableExists by name is not identity —
         # _reattach's IF NOT EXISTS also keeps a same-named table
         # attached elsewhere, which must probe False here)
         return all(
-            self._location_ok(spark, n, f"{base}/{n}") for n in names
+            self._location_ok(spark, n, p)
+            for n, p in zip(names, self.paths(sf_dir))
         )
 
 
-_Q5_LAYOUT = _BucketedLayout(
-    tag="q5_bucketed",
-    prefix="q5b",
-    specs={
-        "lineitem": (
-            "l_orderkey",
-            ("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"),
-        ),
-        "orders": ("o_orderkey", ("o_orderkey", "o_custkey", "o_orderdate")),
-    },
+# One-time bucketed-orderkey layout for the Q5 shape: lineitem and
+# orders (narrow column sets) bucketBy+sortBy(orderkey), so every
+# orderkey join is exchange-free — the 100 TB repeated-join amortizer
+# (pay the layout once, reuse it for every Q3/Q5-shaped query on the
+# same keys; ~18 s at x100).
+_Q5_LAYOUT = register_layout(
+    _BucketedLayout(
+        tag="q5_bucketed",
+        label="q5 bucketed-orderkey",
+        prefix="q5b",
+        specs={
+            "lineitem": (
+                "l_orderkey",
+                ("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"),
+            ),
+            "orders": ("o_orderkey", ("o_orderkey", "o_custkey", "o_orderdate")),
+        },
+        buckets=32,
+    )
 )
 
 
-def _q5_bucket_tables(sf_dir: str, buckets: int) -> tuple[str, str, str]:
-    names, base = _Q5_LAYOUT.names(sf_dir, buckets)
-    return names[0], names[1], base
-
-
-def ensure_q5_bucketed_layout(
-    spark: SparkSession, sf_dir: str, buckets: int = _Q5_BUCKETS
-) -> tuple[str, str]:
-    """One-time bucketed-orderkey layout for the Q5 shape: lineitem
-    and orders (narrow column sets) written bucketBy(buckets,
-    orderkey) + sortBy as external tables, so every subsequent
-    orderkey join is exchange-free (the 100 TB repeated-join
-    amortizer — pay the layout once, reuse it for every Q3/Q5-shaped
-    query on the same keys). Idempotent per (sf_dir, buckets);
-    rebuilt automatically when the source parquet changes (per-file
-    mtime+size marker). An UNSTATABLE source (freshness untrackable)
-    is declined outright — building would re-run both ~18 s-at-×100
-    bucketBy writes on EVERY call (the marker can never match) and
-    the layout still never dispatches; callers keep the ad-hoc plan
-    (r9 review finding #3)."""
-    li_tbl, o_tbl = _Q5_LAYOUT.ensure(spark, sf_dir, buckets)
-    return li_tbl, o_tbl
-
-
-def _q5_layout_available(
-    spark: SparkSession, sf_dir: str, buckets: int = _Q5_BUCKETS
-) -> bool:
-    """Catalog entries present, their external paths still on disk (a
-    wiped .scratch leaves stale metastore rows behind), AND the
-    freshness marker matches the current source parquet signature (a
-    regenerated corpus invalidates the layout). NEVER true while a
-    table provider is active — dispatching to the disk layout would
-    silently shadow the provider's rows (r10 second-review
-    finding #1)."""
-    return _Q5_LAYOUT.available(spark, sf_dir, buckets)
+def _q5_layout_available(spark: SparkSession, sf_dir: str) -> bool:
+    """The Q5 layout's dispatch probe, by the name the benchmark
+    runner's layout report imports."""
+    return _Q5_LAYOUT.available(spark, sf_dir)
 
 
 def multiway5_plan(
-    spark: SparkSession,
-    sf_dir: str,
-    layout: str = "auto",
-    buckets: int = _Q5_BUCKETS,
+    spark: SparkSession, sf_dir: str, layout: str = "auto"
 ) -> DataFrame:
     """Q5 plan dispatch: ``layout`` = 'auto' (bucketed when the
     layout exists, else ad-hoc) | 'adhoc' | 'bucketed' (requires the
     layout). Shared join tail keeps the two forms logically
     identical."""
     if layout == "auto":
-        layout = (
-            "bucketed" if _q5_layout_available(spark, sf_dir, buckets) else "adhoc"
-        )
+        layout = "bucketed" if _Q5_LAYOUT.available(spark, sf_dir) else "adhoc"
     date_filter = (F.col("o_orderdate") >= "1996-01-01") & (
         F.col("o_orderdate") < "1997-01-01"
     )
     if layout == "bucketed":
-        li_tbl, o_tbl, _ = _q5_bucket_tables(sf_dir, buckets)
+        li_tbl, o_tbl = _Q5_LAYOUT.names(sf_dir)
         li = spark.table(li_tbl)
         # merge hint: keep the sort-merge join so the bucketed
         # (pre-partitioned, pre-sorted) scans are consumed directly;
@@ -738,60 +638,28 @@ def multiway5_plan(
 # 12.3 s.
 # ---------------------------------------------------------------------------
 
-_CK_BUCKETS = 32
-
-_CK_LAYOUT = _BucketedLayout(
-    tag="ck_bucketed",
-    prefix="ckb",
-    specs={
-        "orders": (
-            "o_custkey",
-            ("o_custkey", "o_totalprice", "o_orderstatus"),
-        ),
-        "customer": (
-            "c_custkey",
-            ("c_custkey", "c_mktsegment", "c_nationkey"),
-        ),
-    },
+_CK_LAYOUT = register_layout(
+    _BucketedLayout(
+        tag="ck_bucketed",
+        label="custkey bucketed",
+        prefix="ckb",
+        specs={
+            "orders": (
+                "o_custkey",
+                ("o_custkey", "o_totalprice", "o_orderstatus"),
+            ),
+            "customer": (
+                "c_custkey",
+                ("c_custkey", "c_mktsegment", "c_nationkey"),
+            ),
+        },
+        buckets=32,
+    )
 )
 
 
-def _ck_bucket_tables(sf_dir: str, buckets: int) -> tuple[str, str, str]:
-    names, base = _CK_LAYOUT.names(sf_dir, buckets)
-    return names[0], names[1], base
-
-
-def ensure_custkey_bucketed_layout(
-    spark: SparkSession, sf_dir: str, buckets: int = _CK_BUCKETS
-) -> tuple[str, str]:
-    """One-time bucketed-custkey layout: orders and customer (narrow
-    column sets covering the three registered custkey shapes) written
-    bucketBy(buckets, custkey) + sortBy as external tables, so every
-    subsequent orders⋈customer join is exchange-free — the 100 TB
-    repeated-join amortizer, same economics as the Q5 orderkey layout
-    (pay 12.3 s once at x100, every custkey join thereafter runs at
-    DuckDB parity). Idempotent per (sf_dir, buckets); rebuilt when the
-    source parquet changes; DECLINES on an unstatable source and while
-    a table provider is active (the shared _BucketedLayout rules)."""
-    o_tbl, c_tbl = _CK_LAYOUT.ensure(spark, sf_dir, buckets)
-    return o_tbl, c_tbl
-
-
-def _ck_layout_available(
-    spark: SparkSession, sf_dir: str, buckets: int = _CK_BUCKETS
-) -> bool:
-    """Catalog entries present, external paths on disk, freshness
-    marker matching the current source signature; NEVER true while a
-    table provider is active (the _q5_layout_available rules — a
-    provider's rows must not be shadowed by a disk layout)."""
-    return _CK_LAYOUT.available(spark, sf_dir, buckets)
-
-
 def _ck_sides(
-    spark: SparkSession,
-    sf_dir: str,
-    layout: str = "auto",
-    buckets: int = _CK_BUCKETS,
+    spark: SparkSession, sf_dir: str, layout: str = "auto"
 ) -> tuple[DataFrame, DataFrame, bool]:
     """(orders, customer, is_bucketed) for the custkey join plans:
     ``layout`` = 'auto' (bucketed when the layout exists, else ad-hoc)
@@ -800,25 +668,22 @@ def _ck_sides(
     probe side so small-SF stats cannot broadcast away the layout
     (hint scope: nearest join only — the q5-pinned Spark behavior)."""
     if layout == "auto":
-        layout = (
-            "bucketed" if _ck_layout_available(spark, sf_dir, buckets) else "adhoc"
-        )
+        layout = "bucketed" if _CK_LAYOUT.available(spark, sf_dir) else "adhoc"
     if layout == "bucketed":
-        o_tbl, c_tbl, _ = _ck_bucket_tables(sf_dir, buckets)
+        o_tbl, c_tbl = _CK_LAYOUT.names(sf_dir)
         return spark.table(o_tbl), spark.table(c_tbl), True
     return load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer"), False
 
 
 def custkey_inner_plan(
-    spark: SparkSession, sf_dir: str, layout: str = "auto",
-    buckets: int = _CK_BUCKETS,
+    spark: SparkSession, sf_dir: str, layout: str = "auto"
 ) -> DataFrame:
     """join_inner's plan: orders⋈customer + segment aggregate. With
     the layout: exchange-free SMJ off the bucketed scans, then ONE
     5-group agg exchange — 1.07x DuckDB at x100 (BASELINE.md
     round-12); without: Catalyst's shuffled-hash join, 3.59x constant-factor
     race (the r11-measured floor; eager-agg rejected, commit 853ac82)."""
-    o, c, bucketed = _ck_sides(spark, sf_dir, layout, buckets)
+    o, c, bucketed = _ck_sides(spark, sf_dir, layout)
     if bucketed:
         c = c.hint("merge")
     # r13: sum in EXACT integer cents (the floor(x*100+0.5) lift), then
@@ -841,13 +706,12 @@ def custkey_inner_plan(
 
 
 def custkey_anti_plan(
-    spark: SparkSession, sf_dir: str, layout: str = "auto",
-    buckets: int = _CK_BUCKETS,
+    spark: SparkSession, sf_dir: str, layout: str = "auto"
 ) -> DataFrame:
     """join_anti's plan: customer ANTI orders. With the layout the
     whole query is a ZERO-exchange sort-merge anti join off the
     bucketed scans — 1.31x DuckDB at x100 (was 3.35x shuffled)."""
-    o, c, bucketed = _ck_sides(spark, sf_dir, layout, buckets)
+    o, c, bucketed = _ck_sides(spark, sf_dir, layout)
     if bucketed:
         o = o.hint("merge")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
@@ -856,8 +720,7 @@ def custkey_anti_plan(
 
 
 def custkey_cross_plan(
-    spark: SparkSession, sf_dir: str, layout: str = "auto",
-    buckets: int = _CK_BUCKETS,
+    spark: SparkSession, sf_dir: str, layout: str = "auto"
 ) -> DataFrame:
     """join_cross_small's plan: region×status grid left-joined with
     actual counts. r12 rewrite (BOTH forms): aggregate the
@@ -867,7 +730,7 @@ def custkey_cross_plan(
     (value-identical: count partitioned by nationkey sums to the
     region counts). With the layout the spine is the exchange-free
     SMJ: 1.23x DuckDB at x100 (ad-hoc 2.80x, was 3.99x pre-r12)."""
-    o, c, bucketed = _ck_sides(spark, sf_dir, layout, buckets)
+    o, c, bucketed = _ck_sides(spark, sf_dir, layout)
     if bucketed:
         c = c.hint("merge")
     region = load(spark, sf_dir, "region")

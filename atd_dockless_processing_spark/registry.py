@@ -4,7 +4,8 @@ Every operator from SURVEY.md §2 registers itself here via the
 ``@query`` decorator. ``QUERIES`` maps key -> callable(spark, sf_dir)
 -> DataFrame; ``ORACLES`` maps key -> ANSI SQL string for the DuckDB
 oracle (omitted for rows-only keys, per the driver contract in
-``__spark_entry__.py``).
+``__spark_entry__.py``). ``LAYOUTS`` maps tag -> the session-persistent
+physical layouts the keys dispatch to (``register_layout``).
 
 The reference checkout (/root/reference) was empty at survey time
 (SURVEY.md §0), so reference parity is cited per-operator against the
@@ -18,6 +19,7 @@ from typing import Any
 
 QUERIES: dict[str, Callable[..., Any]] = {}
 ORACLES: dict[str, str] = {}
+LAYOUTS: dict[str, Any] = {}
 
 
 def query(key: str, oracle: str | None = None):
@@ -32,3 +34,13 @@ def query(key: str, oracle: str | None = None):
         return fn
 
     return deco
+
+
+def register_layout(layout):
+    """Register a session-persistent :class:`~.tables.Layout` under its
+    tag. ``scripts/build_layouts.py`` builds every entry of ``LAYOUTS``
+    and the layout tripwire tests probe every entry."""
+    if layout.tag in LAYOUTS:
+        raise ValueError(f"duplicate layout tag: {layout.tag}")
+    LAYOUTS[layout.tag] = layout
+    return layout

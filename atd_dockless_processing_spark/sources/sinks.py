@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, scratch_dir
+from ..tables import Layout, load, scratch_dir
 
 
 def _merge_sql(table: str, staging: str, cols: list[str], key_cols: list[str]) -> str:
@@ -47,7 +47,6 @@ def write_jdbc_upsert(
     url: str,
     table: str,
     key_cols: list[str],
-    mode: str = "staging-merge",
     options: dict[str, str] | None = None,
 ) -> None:
     """External-store upsert over JDBC — the shape of the reference's
@@ -252,13 +251,7 @@ def snk_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned DataFrame scans tables that persist until the next
     overwrite).
     """
-    import re as _re
-
-    # sanitize EVERY non-identifier char (not just "/" and ".") — a
-    # hyphenated corpus path made saveAsTable throw ParseException
-    # (the r13 _BucketedLayout.names() fix, applied here too; names
-    # are unchanged for the historical dirs)
-    sftag = _re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.strip("/"))
+    sftag = Layout.catalog_tag(sf_dir)
     base = scratch_dir("snk_bucketed", sf_dir.strip("/").replace("/", "_"))
     o_tbl, c_tbl = f"bkt_orders_{sftag}", f"bkt_customer_{sftag}"
     (

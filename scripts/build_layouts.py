@@ -1,4 +1,5 @@
-"""Pre-build every session-persistent physical layout for a corpus dir.
+"""Pre-build every session-persistent physical layout for a corpus dir
+(every entry of ``registry.LAYOUTS``).
 
 Layouts are one-time amortizers: pay the build once per corpus, and
 every subsequent SESSION re-attaches them for free (bucketed layouts:
@@ -24,18 +25,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from atd_dockless_processing_spark.operators.events import (  # noqa: E402
-    _tumbling_us_available,
-    ensure_tumbling_us_layout,
-)
-from atd_dockless_processing_spark.operators.joins import (  # noqa: E402
-    _CK_BUCKETS,
-    _Q5_BUCKETS,
-    _ck_layout_available,
-    _q5_layout_available,
-    ensure_custkey_bucketed_layout,
-    ensure_q5_bucketed_layout,
-)
+from atd_dockless_processing_spark import LAYOUTS  # noqa: E402
 from atd_dockless_processing_spark.session import get_spark  # noqa: E402
 
 
@@ -45,29 +35,13 @@ def main(argv: list[str]) -> int:
     ok = True
     for sf_dir in sf_dirs:
         print(f"== {sf_dir}")
-        for label, ensure, probe in (
-            (
-                f"q5 bucketed-orderkey (x{_Q5_BUCKETS})",
-                lambda s, d: ensure_q5_bucketed_layout(s, d),
-                lambda s, d: _q5_layout_available(s, d),
-            ),
-            (
-                f"custkey bucketed (x{_CK_BUCKETS})",
-                lambda s, d: ensure_custkey_bucketed_layout(s, d),
-                lambda s, d: _ck_layout_available(s, d),
-            ),
-            (
-                "tumbling µs-staged events",
-                lambda s, d: ensure_tumbling_us_layout(s, d),
-                lambda s, d: _tumbling_us_available(d),
-            ),
-        ):
+        for layout in LAYOUTS.values():
             t0 = time.monotonic()
-            ensure(spark, sf_dir)
-            live = probe(spark, sf_dir)
+            layout.ensure(spark, sf_dir)
+            live = layout.available(spark, sf_dir)
             ok &= live
             print(
-                f"  {label}: {'LIVE' if live else 'DECLINED'} "
+                f"  {layout.label}: {'LIVE' if live else 'DECLINED'} "
                 f"({time.monotonic() - t0:.1f}s)"
             )
     return 0 if ok else 1

@@ -1,8 +1,8 @@
 """Driver-real plan-shape pin (r13, VERDICT r12 item 2 done-condition).
 
 The round's headline claim: a PLAIN SparkSession in a foreign cwd,
-importing only ``__spark_entry__`` and never calling any ``ensure_*``
-builder, plans the layout-dispatched keys on their FAST forms — the
+importing only ``__spark_entry__`` and never calling any layout's
+``ensure``, plans the layout-dispatched keys on their FAST forms — the
 on-disk layouts DDL-re-attach. A subprocess is the only honest way to
 pin this (the pytest session's catalog/conf must not leak in); one
 child JVM checks all five keys.
@@ -61,28 +61,19 @@ print("ALL-PASS" if all(ok for _, ok in checks) else "SOME-FAIL")
 
 
 def test_driver_real_sessions_get_fast_plans():
-    from atd_dockless_processing_spark.operators.events import (
-        _tumbling_us_available,
-    )
-    from atd_dockless_processing_spark.operators.joins import (
-        _CK_BUCKETS,
-        _CK_LAYOUT,
-        _Q5_BUCKETS,
-        _Q5_LAYOUT,
-    )
+    from atd_dockless_processing_spark import LAYOUTS
 
     # gate on FRESHNESS, not bare marker existence: a regenerated
     # corpus (stale markers) is the round-boundary tripwire's alarm,
     # with its actionable message — this test's job is only the plan
     # shape when layouts ARE live, so it skips in both not-built and
     # stale cases rather than duplicating the alarm opaquely
-    if not (
-        _CK_LAYOUT._disk_valid(SF, _CK_BUCKETS)
-        and _Q5_LAYOUT._disk_valid(SF, _Q5_BUCKETS)
-        and _tumbling_us_available(SF)
-    ):
-        pytest.skip("sweep-dir layouts not live (fresh clone or "
-                    "regenerated corpus) — run scripts/build_layouts.py")
+    dead = [lay.label for lay in LAYOUTS.values() if not lay._disk_valid(SF)]
+    if dead:
+        pytest.skip(
+            f"layouts not live for {SF}: {', '.join(dead)} — "
+            "run: python scripts/build_layouts.py"
+        )
     r = subprocess.run(
         [sys.executable, "-c", _CHILD % {"repo": REPO, "sf": SF}],
         capture_output=True,

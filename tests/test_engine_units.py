@@ -18,7 +18,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from atd_dockless_processing_spark import QUERIES  # noqa: E402
+from atd_dockless_processing_spark import LAYOUTS, QUERIES  # noqa: E402
 from atd_dockless_processing_spark.functions.hashing import (  # noqa: E402
     portable_hash60,
     portable_hash60_sql,
@@ -2844,7 +2844,82 @@ def test_rfm_gather_and_chained_forms_identical(spark, sf_dir):
         assert a == b and a, (d, a[:3], b[:3])
 
 
-def test_q5_bucketed_layout_exchange_free_and_identical(spark, sf_dir):
+def _bucketed_copy(layout, buckets):
+    """``layout`` with ``buckets`` buckets under its own scratch tag: a
+    test builds (and removes) this copy, never the 32-bucket layout a
+    host has built for the same corpus."""
+    from atd_dockless_processing_spark.operators.joins import _BucketedLayout
+
+    return _BucketedLayout(
+        f"{layout.tag}_test", layout.label, layout.prefix, layout.specs, buckets
+    )
+
+
+def _drop_layout(spark, layout, sf_dir):
+    import shutil
+
+    from atd_dockless_processing_spark.operators.joins import _BucketedLayout
+
+    if isinstance(layout, _BucketedLayout):
+        for n in layout.names(sf_dir):
+            spark.sql(f"DROP TABLE IF EXISTS `{n}`")
+    shutil.rmtree(layout.base(sf_dir), ignore_errors=True)
+
+
+# the registered key whose 'auto' plan dispatches on each layout
+_LAYOUT_KEYS = {
+    "q5_bucketed": "join_multiway_5",
+    "ck_bucketed": "join_inner",
+    "events_us": "evt_tumbling_hour",
+}
+
+
+@pytest.mark.parametrize("tag", list(LAYOUTS))
+def test_layout_marker_read_race_degrades_to_adhoc(spark, sf_dir, tmp_path, monkeypatch, tag):
+    """A marker deleted between the probe's existence checks and its
+    read (another session's cleanup racing the probe) must make
+    ``available`` False and the key's 'auto' plan the ad hoc form —
+    never raise out of query dispatch. The layout's file sets are
+    manufactured (a ``_SUCCESS`` each, no data) with a matching marker
+    over a symlinked copy of the corpus, so a dispatch to the layout
+    would also fail to plan; reading the marker raises
+    FileNotFoundError while ``exists()`` stays True."""
+    import os
+    import shutil
+
+    lay = LAYOUTS[tag]
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    for f in os.listdir(sf_dir):
+        (corpus / f).symlink_to(Path(sf_dir, f))
+    c = str(corpus)
+    try:
+        for p in lay.paths(c):
+            Path(p).mkdir(parents=True)
+            Path(p, "_SUCCESS").touch()
+        marker = lay.marker(c)
+        marker.write_text(lay.src_sig(c))
+        # only the marker read stands between the probe and the layout
+        assert lay._disk_valid(c)
+
+        read_text = Path.read_text
+
+        def racing_read(self, *args, **kwargs):
+            if self == marker:
+                raise FileNotFoundError(str(self))
+            return read_text(self, *args, **kwargs)
+
+        monkeypatch.setattr(Path, "read_text", racing_read)
+        assert marker.exists()
+        assert not lay.available(spark, c)
+        df = QUERIES[_LAYOUT_KEYS[tag]](spark, c)
+        files = df.inputFiles()
+        assert files and all(c in f for f in files), files
+    finally:
+        shutil.rmtree(lay.base(c), ignore_errors=True)
+
+
+def test_q5_bucketed_layout_exchange_free_and_identical(spark, sf_dir, monkeypatch):
     """The layout-aware Q5 dispatch (r8): once the bucketed-orderkey
     layout exists, 'auto' must pick it, the orderkey fact-fact join
     must consume the bucketed scans with NO Exchange on either side,
@@ -2857,26 +2932,21 @@ def test_q5_bucketed_layout_exchange_free_and_identical(spark, sf_dir):
     dependent (values stay identical by construction, but plan
     assertions must be deterministic)."""
     import re as _re
-    import shutil
     from pathlib import Path
 
-    from atd_dockless_processing_spark.operators.joins import (
-        _Q5_LAYOUT,
-        _q5_layout_available,
-        ensure_q5_bucketed_layout,
-        multiway5_plan,
-    )
+    from atd_dockless_processing_spark.operators import joins
 
-    names, base = _Q5_LAYOUT.names(sf_dir, 4)
-    ensure_q5_bucketed_layout(spark, sf_dir, buckets=4)
+    lay, lay16 = (_bucketed_copy(joins._Q5_LAYOUT, n) for n in (4, 16))
+    monkeypatch.setattr(joins, "_Q5_LAYOUT", lay)
+    lay.ensure(spark, sf_dir)
     try:
-        assert _q5_layout_available(spark, sf_dir, buckets=4)
+        assert lay.available(spark, sf_dir)
         # a DIFFERENT bucket count must not see this layout (identity
         # includes the count), and a fresh marker must be required
-        assert not _q5_layout_available(spark, sf_dir, buckets=16)
+        assert not lay16.available(spark, sf_dir)
 
-        adhoc = sorted(map(tuple, multiway5_plan(spark, sf_dir, "adhoc").collect()))
-        auto = multiway5_plan(spark, sf_dir, buckets=4)  # must dispatch to bucketed
+        adhoc = sorted(map(tuple, joins.multiway5_plan(spark, sf_dir, "adhoc").collect()))
+        auto = joins.multiway5_plan(spark, sf_dir)  # must dispatch to bucketed
         plan = auto._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan[:2000]
         assert not _re.search(r"Exchange hashpartitioning\(l_orderkey", plan), plan[:3000]
@@ -2889,10 +2959,8 @@ def test_q5_bucketed_layout_exchange_free_and_identical(spark, sf_dir):
         got = sorted(map(tuple, auto.collect()))
         assert got == adhoc and got, (got[:3], adhoc[:3])
     finally:
-        for n in names:
-            spark.sql(f"DROP TABLE IF EXISTS {n}")
-        shutil.rmtree(base, ignore_errors=True)
-        assert not Path(base).exists()
+        _drop_layout(spark, lay, sf_dir)
+        assert not Path(lay.base(sf_dir)).exists()
 
 
 def test_ivf_scaled_plan_recall_and_determinism(spark):
@@ -3023,25 +3091,20 @@ def test_q5_layout_invalidated_by_stale_source_marker(spark, sf_dir):
     """A layout whose freshness marker no longer matches the source
     parquet signature must be treated as ABSENT (auto falls back to
     ad-hoc) — the regenerated-corpus staleness guard."""
-    from pathlib import Path
+    from atd_dockless_processing_spark.operators.joins import _Q5_LAYOUT
 
-    from atd_dockless_processing_spark.operators.joins import (
-        _q5_bucket_tables,
-        _q5_layout_available,
-        ensure_q5_bucketed_layout,
-    )
-
-    ensure_q5_bucketed_layout(spark, sf_dir, buckets=4)
-    assert _q5_layout_available(spark, sf_dir, buckets=4)
-    li_tbl, _, base = _q5_bucket_tables(sf_dir, 4)
-    marker = Path(base, f".{li_tbl}.src_sig")
-    good = marker.read_text()
+    lay = _bucketed_copy(_Q5_LAYOUT, 4)
     try:
+        lay.ensure(spark, sf_dir)
+        assert lay.available(spark, sf_dir)
+        marker = lay.marker(sf_dir)
+        good = marker.read_text()
         marker.write_text("stale:0:0;stale:0:0")
-        assert not _q5_layout_available(spark, sf_dir, buckets=4)
-    finally:
+        assert not lay.available(spark, sf_dir)
         marker.write_text(good)
-    assert _q5_layout_available(spark, sf_dir, buckets=4)
+        assert lay.available(spark, sf_dir)
+    finally:
+        _drop_layout(spark, lay, sf_dir)
 
 
 def test_declarative_pipeline_local_executor(spark, sf_dir, tmp_path):
@@ -3739,29 +3802,32 @@ def test_drain_to_target_fails_fast_on_clean_termination(spark):
     _drain_to_target(spark, _DoneQuery(), name, target=3, timeout_s=60.0)
 
 
-def test_tumbling_us_layout_dispatch_and_identical(spark, sf_dir, tmp_path):
+def test_tumbling_us_layout_dispatch_and_identical(spark, sf_dir, tmp_path, monkeypatch):
     """The layout-aware tumbling dispatch (r10, VERDICT r9 item 2):
     once the µs-staged narrow layout exists, 'auto' must pick it (scan
     reads the scratch path, physical ts is TIMESTAMP_MICROS), the
     result must equal the ad-hoc plan row-for-row, and a source
     regeneration must invalidate the layout."""
+    import copy
     import glob
     import os
     import shutil
 
     import pyarrow.parquet as pq
 
-    from atd_dockless_processing_spark.operators.events import (
-        _tumbling_us_available,
-        _tumbling_us_paths,
-        ensure_tumbling_us_layout,
-        tumbling_hour_plan,
-    )
+    from atd_dockless_processing_spark.operators import events
+    from atd_dockless_processing_spark.operators.events import tumbling_hour_plan
 
+    # a copy under its own scratch tag: the layout a host has built for
+    # sf_dir is never touched or removed
+    lay = copy.copy(events._TUMBLING_US_LAYOUT)
+    lay.tag += "_test"
+    monkeypatch.setattr(events, "_TUMBLING_US_LAYOUT", lay)
     tmp_sf = str(tmp_path / "sf")
     try:
-        staged = ensure_tumbling_us_layout(spark, sf_dir)
-        assert _tumbling_us_available(sf_dir)
+        lay.ensure(spark, sf_dir)
+        assert lay.available(spark, sf_dir)
+        (staged,) = lay.paths(sf_dir)
         part = glob.glob(f"{staged}/*.parquet")[0]
         assert str(pq.ParquetFile(part).schema_arrow.field("ts").type) == "timestamp[us, tz=UTC]"
         assert pq.ParquetFile(part).schema_arrow.names == ["ts", "event_type", "value"]
@@ -3787,13 +3853,13 @@ def test_tumbling_us_layout_dispatch_and_identical(spark, sf_dir, tmp_path):
             shutil.copytree(f"{sf_dir}/events.parquet", f"{tmp_sf}/events.parquet")
         else:
             shutil.copy2(f"{sf_dir}/events.parquet", f"{tmp_sf}/events.parquet")
-        ensure_tumbling_us_layout(spark, tmp_sf)
-        assert _tumbling_us_available(tmp_sf)
+        lay.ensure(spark, tmp_sf)
+        assert lay.available(spark, tmp_sf)
         src = f"{tmp_sf}/events.parquet"
         target = os.path.join(src, sorted(os.listdir(src))[0]) if os.path.isdir(src) else src
         st = os.stat(target)
         os.utime(target, ns=(st.st_mtime_ns + 10**9, st.st_mtime_ns + 10**9))
-        assert not _tumbling_us_available(tmp_sf)
+        assert not lay.available(spark, tmp_sf)
         fallback = tumbling_hour_plan(spark, tmp_sf)
         assert "events_us" not in fallback._jdf.queryExecution().executedPlan().toString()
     finally:
@@ -3802,9 +3868,7 @@ def test_tumbling_us_layout_dispatch_and_identical(spark, sf_dir, tmp_path):
         # later evt_tumbling_hour plan in this repo checkout (r10
         # review finding #1)
         for sf in (sf_dir, tmp_sf):
-            shutil.rmtree(
-                os.path.dirname(_tumbling_us_paths(sf)[0]), ignore_errors=True
-            )
+            shutil.rmtree(lay.base(sf), ignore_errors=True)
 
 
 def test_group_by_all_equals_explicit_grouping(spark, sf_dir):
@@ -4118,8 +4182,8 @@ def test_stage_scratch_never_persists_provider_staging(spark, sf_dir):
     derives staging from PROVIDER rows — the helper must neither sign
     that staging with the on-disk source's signature nor reuse an
     existing marker, or provider rows keep being served after the
-    provider is gone (r10 ADVICE #1: the ensure_*-layout guard applied
-    to the shared helper itself)."""
+    provider is gone (r10 ADVICE #1: the ``Layout.ensure`` guard
+    applied to the shared helper itself)."""
     import os
     import shutil
 
@@ -4334,7 +4398,7 @@ def test_bloom_prefilter_survives_key_width_divergence(spark, sf_dir):
     assert narrowed == base and base
 
 
-def test_custkey_bucketed_layout_dispatch_identity_and_staleness(spark, sf_dir):
+def test_custkey_bucketed_layout_dispatch_identity_and_staleness(spark, sf_dir, monkeypatch):
     """r12 bucketed-custkey layout (VERDICT r11 item 2): with the
     layout present the three registered custkey shapes must dispatch
     to exchange-free sort-merge plans off the bucketed scans and
@@ -4342,27 +4406,25 @@ def test_custkey_bucketed_layout_dispatch_identity_and_staleness(spark, sf_dir):
     marker must make the layout invisible (auto falls back to ad-hoc);
     the layout is dropped in finally so no later test inherits it."""
     import re as _re
-    import shutil
-    from pathlib import Path
 
+    from atd_dockless_processing_spark.operators import joins
     from atd_dockless_processing_spark.operators.joins import (
-        _ck_bucket_tables,
-        _ck_layout_available,
         custkey_anti_plan,
         custkey_cross_plan,
         custkey_inner_plan,
-        ensure_custkey_bucketed_layout,
     )
 
-    o_tbl, c_tbl, base = _ck_bucket_tables(sf_dir, 4)
-    ensure_custkey_bucketed_layout(spark, sf_dir, buckets=4)
+    lay, lay16 = (_bucketed_copy(joins._CK_LAYOUT, n) for n in (4, 16))
+    monkeypatch.setattr(joins, "_CK_LAYOUT", lay)
+    o_tbl, c_tbl = lay.names(sf_dir)
+    lay.ensure(spark, sf_dir)
     try:
-        assert _ck_layout_available(spark, sf_dir, buckets=4)
+        assert lay.available(spark, sf_dir)
         # bucket count is part of the identity
-        assert not _ck_layout_available(spark, sf_dir, buckets=16)
+        assert not lay16.available(spark, sf_dir)
 
         # ---- join_anti: ZERO-exchange sort-merge anti ----
-        anti_auto = custkey_anti_plan(spark, sf_dir, buckets=4)
+        anti_auto = custkey_anti_plan(spark, sf_dir)
         plan = anti_auto._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan[:2000]
         assert "Exchange hashpartitioning" not in plan, plan[:3000]
@@ -4372,7 +4434,7 @@ def test_custkey_bucketed_layout_dispatch_identity_and_staleness(spark, sf_dir):
         assert sorted(map(tuple, anti_auto.collect())) == adhoc
 
         # ---- join_inner: custkey join exchange-free, agg exchange only
-        inner_auto = custkey_inner_plan(spark, sf_dir, buckets=4)
+        inner_auto = custkey_inner_plan(spark, sf_dir)
         plan = inner_auto._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan[:2000]
         assert not _re.search(r"Exchange hashpartitioning\(o_custkey", plan)
@@ -4396,7 +4458,7 @@ def test_custkey_bucketed_layout_dispatch_identity_and_staleness(spark, sf_dir):
             assert got[seg]["sum_price"] == want[seg]["sum_price"], seg
 
         # ---- join_cross_small: exact (integer counts) ----
-        cross_auto = custkey_cross_plan(spark, sf_dir, buckets=4)
+        cross_auto = custkey_cross_plan(spark, sf_dir)
         plan = cross_auto._jdf.queryExecution().executedPlan().toString()
         assert not _re.search(r"Exchange hashpartitioning\(o_custkey", plan)
         assert not _re.search(r"Exchange hashpartitioning\(c_custkey", plan)
@@ -4405,14 +4467,14 @@ def test_custkey_bucketed_layout_dispatch_identity_and_staleness(spark, sf_dir):
         )
 
         # ---- staleness: a mismatching marker hides the layout ----
-        marker = Path(base, f".{o_tbl}.src_sig")
+        marker = lay.marker(sf_dir)
         good = marker.read_text()
         try:
             marker.write_text("stale:0:0;stale:0:0")
-            assert not _ck_layout_available(spark, sf_dir, buckets=4)
+            assert not lay.available(spark, sf_dir)
             # auto now plans off the SOURCE parquet, not the layout
             p = (
-                custkey_anti_plan(spark, sf_dir, buckets=4)
+                custkey_anti_plan(spark, sf_dir)
                 ._jdf.queryExecution()
                 .executedPlan()
                 .toString()
@@ -4420,14 +4482,12 @@ def test_custkey_bucketed_layout_dispatch_identity_and_staleness(spark, sf_dir):
             assert o_tbl not in p, p[:2000]
         finally:
             marker.write_text(good)
-        assert _ck_layout_available(spark, sf_dir, buckets=4)
+        assert lay.available(spark, sf_dir)
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {o_tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {c_tbl}")
-        shutil.rmtree(base, ignore_errors=True)
+        _drop_layout(spark, lay, sf_dir)
 
 
-def test_bucketed_layout_reattaches_across_sessions(spark, sf_dir):
+def test_bucketed_layout_reattaches_across_sessions(spark, sf_dir, monkeypatch):
     """r13 (VERDICT r12 item 2): bucketed external tables live in the
     session-scoped in-memory catalog, but the data files + freshness
     marker persist — a fresh session must DDL-re-attach a disk-valid
@@ -4439,20 +4499,17 @@ def test_bucketed_layout_reattaches_across_sessions(spark, sf_dir):
     identical to ad-hoc. Guards re-checked post-re-attach: foreign
     bucket count, stale marker (no catalog resurrection from a stale
     layout), active table provider."""
-    import shutil
-    from pathlib import Path
-
     from atd_dockless_processing_spark import tables
+    from atd_dockless_processing_spark.operators import joins
     from atd_dockless_processing_spark.operators.joins import (
-        _ck_bucket_tables,
-        _ck_layout_available,
         custkey_anti_plan,
         custkey_inner_plan,
-        ensure_custkey_bucketed_layout,
     )
 
-    o_tbl, c_tbl, base = _ck_bucket_tables(sf_dir, 4)
-    ensure_custkey_bucketed_layout(spark, sf_dir, buckets=4)
+    lay, lay16 = (_bucketed_copy(joins._CK_LAYOUT, n) for n in (4, 16))
+    monkeypatch.setattr(joins, "_CK_LAYOUT", lay)
+    o_tbl, c_tbl = lay.names(sf_dir)
+    lay.ensure(spark, sf_dir)
     try:
         adhoc_inner = sorted(
             map(tuple, custkey_inner_plan(spark, sf_dir, "adhoc").collect())
@@ -4464,45 +4521,41 @@ def test_bucketed_layout_reattaches_across_sessions(spark, sf_dir):
         assert not spark.catalog.tableExists(o_tbl)
 
         # a foreign bucket count must NOT re-attach this layout
-        assert not _ck_layout_available(spark, sf_dir, buckets=16)
+        assert not lay16.available(spark, sf_dir)
         assert not spark.catalog.tableExists(o_tbl)
 
         # provider active: probe declines BEFORE any DDL
         tables.set_table_provider(lambda s, d, n: None)
         try:
-            assert not _ck_layout_available(spark, sf_dir, buckets=4)
+            assert not lay.available(spark, sf_dir)
         finally:
             tables.set_table_provider(None)
         assert not spark.catalog.tableExists(o_tbl)
 
         # stale marker: no resurrection from a stale layout
-        marker = Path(base, f".{o_tbl}.src_sig")
+        marker = lay.marker(sf_dir)
         good = marker.read_text()
         try:
             marker.write_text("stale:0:0;stale:0:0")
-            assert not _ck_layout_available(spark, sf_dir, buckets=4)
+            assert not lay.available(spark, sf_dir)
             assert not spark.catalog.tableExists(o_tbl)
         finally:
             marker.write_text(good)
 
         # ---- valid disk layout: DDL-only re-attach ----
-        assert _ck_layout_available(spark, sf_dir, buckets=4)
+        assert lay.available(spark, sf_dir)
         assert spark.catalog.tableExists(o_tbl)
         assert spark.catalog.tableExists(c_tbl)
 
-        anti = custkey_anti_plan(spark, sf_dir, buckets=4)
+        anti = custkey_anti_plan(spark, sf_dir)
         plan = anti._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan[:2000]
         assert "Exchange hashpartitioning" not in plan, plan[:3000]
-        got_inner = sorted(
-            map(tuple, custkey_inner_plan(spark, sf_dir, buckets=4).collect())
-        )
+        got_inner = sorted(map(tuple, custkey_inner_plan(spark, sf_dir).collect()))
         # exact-cents sums: re-attached SMJ == ad-hoc, bit-for-bit
         assert got_inner == adhoc_inner and got_inner
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {o_tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {c_tbl}")
-        shutil.rmtree(base, ignore_errors=True)
+        _drop_layout(spark, lay, sf_dir)
 
 
 def test_bucketed_layout_name_collision_probes_false(spark, sf_dir, tmp_path):
@@ -4517,10 +4570,10 @@ def test_bucketed_layout_name_collision_probes_false(spark, sf_dir, tmp_path):
     scenario), and asserting available(B) is False while available(A)
     stays True."""
     import shutil
-    from pathlib import Path
 
     from atd_dockless_processing_spark.operators.joins import _CK_LAYOUT
 
+    lay = _bucketed_copy(_CK_LAYOUT, 4)
     corpus_a = tmp_path / "c-v2"
     corpus_b = tmp_path / "c.v2"
     for corpus in (corpus_a, corpus_b):
@@ -4528,29 +4581,24 @@ def test_bucketed_layout_name_collision_probes_false(spark, sf_dir, tmp_path):
         for t in ("orders", "customer"):
             shutil.copy(f"{sf_dir}/{t}.parquet", corpus / f"{t}.parquet")
 
-    names_a, base_a = _CK_LAYOUT.names(str(corpus_a), 4)
-    names_b, base_b = _CK_LAYOUT.names(str(corpus_b), 4)
-    assert names_a == names_b and base_a != base_b  # the collision
+    a, b = str(corpus_a), str(corpus_b)
+    assert lay.names(a) == lay.names(b) and lay.base(a) != lay.base(b)  # the collision
 
     try:
-        _CK_LAYOUT.ensure(spark, str(corpus_a), 4)
-        assert _CK_LAYOUT.available(spark, str(corpus_a), 4)
+        lay.ensure(spark, a)
+        assert lay.available(spark, a)
         # manufacture B's disk-valid layout (files + marker) without
         # touching the catalog — what a prior session's build leaves
-        shutil.copytree(base_a, base_b, dirs_exist_ok=True)
-        Path(base_b, f".{names_b[0]}.src_sig").write_text(
-            _CK_LAYOUT.src_sig(str(corpus_b))
-        )
-        assert _CK_LAYOUT._disk_valid(str(corpus_b), 4)
+        shutil.copytree(lay.base(a), lay.base(b), dirs_exist_ok=True)
+        lay.marker(b).write_text(lay.src_sig(b))
+        assert lay._disk_valid(b)
         # the catalog's table points at A — B must decline to dispatch
-        assert not _CK_LAYOUT.available(spark, str(corpus_b), 4)
+        assert not lay.available(spark, b)
         # and A keeps its layout
-        assert _CK_LAYOUT.available(spark, str(corpus_a), 4)
+        assert lay.available(spark, a)
     finally:
-        for n in names_a:
-            spark.sql(f"DROP TABLE IF EXISTS `{n}`")
-        shutil.rmtree(base_a, ignore_errors=True)
-        shutil.rmtree(base_b, ignore_errors=True)
+        _drop_layout(spark, lay, a)
+        shutil.rmtree(lay.base(b), ignore_errors=True)
 
 
 @settings(max_examples=500, deadline=None)
@@ -4626,15 +4674,7 @@ def test_build_layouts_ops_script(spark, sf_dir, tmp_path):
     import sys as _sys
     from pathlib import Path
 
-    from atd_dockless_processing_spark.operators.events import (
-        _tumbling_us_paths,
-    )
-    from atd_dockless_processing_spark.operators.joins import (
-        _CK_BUCKETS,
-        _CK_LAYOUT,
-        _Q5_BUCKETS,
-        _Q5_LAYOUT,
-    )
+    from atd_dockless_processing_spark import LAYOUTS
 
     corpus = tmp_path / "ops_corpus"
     corpus.mkdir()
@@ -4642,11 +4682,6 @@ def test_build_layouts_ops_script(spark, sf_dir, tmp_path):
         shutil.copy(f"{sf_dir}/{t}.parquet", corpus / f"{t}.parquet")
 
     repo = Path(__file__).resolve().parent.parent
-    scratches = [
-        Path(_CK_LAYOUT.names(str(corpus), _CK_BUCKETS)[1]),
-        Path(_Q5_LAYOUT.names(str(corpus), _Q5_BUCKETS)[1]),
-        Path(_tumbling_us_paths(str(corpus))[0]).parent,
-    ]
     try:
         for attempt in ("build", "reverify"):
             r = subprocess.run(
@@ -4655,21 +4690,14 @@ def test_build_layouts_ops_script(spark, sf_dir, tmp_path):
                 timeout=600, check=False,
             )
             assert r.returncode == 0, (attempt, r.stdout[-2000:], r.stderr[-2000:])
-            assert r.stdout.count("LIVE") == 3, (attempt, r.stdout[-2000:])
+            assert r.stdout.count("LIVE") == len(LAYOUTS), (attempt, r.stdout[-2000:])
             assert "DECLINED" not in r.stdout, (attempt, r.stdout[-2000:])
         # mtime-stable data files prove the second run re-verified
         # instead of rebuilding (markers match, ensure() skips)
-        assert _CK_LAYOUT._disk_valid(str(corpus), _CK_BUCKETS)
-        assert _Q5_LAYOUT._disk_valid(str(corpus), _Q5_BUCKETS)
+        assert all(lay._disk_valid(str(corpus)) for lay in LAYOUTS.values())
     finally:
-        names, _ = _CK_LAYOUT.names(str(corpus), _CK_BUCKETS)
-        names2, _ = _Q5_LAYOUT.names(str(corpus), _Q5_BUCKETS)
-        for n in (*names, *names2):
-            # names() sanitizes to identifier chars since r13, so the
-            # backquotes are belt-and-braces only
-            spark.sql(f"DROP TABLE IF EXISTS `{n}`")
-        for d in scratches:
-            shutil.rmtree(d, ignore_errors=True)
+        for lay in LAYOUTS.values():
+            _drop_layout(spark, lay, str(corpus))
 
 
 def test_map_ops_json_fast_twin_value_equality(spark, sf_dir):

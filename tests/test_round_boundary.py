@@ -148,35 +148,17 @@ def test_driver_sweep_layouts_live(spark):
     turns that silent 3x regression into a visible round-boundary
     failure naming the fix. Skips when no layout was ever built
     (fresh clone — ad-hoc is then the expected posture)."""
-    from pathlib import Path
-
-    from atd_dockless_processing_spark.operators.events import (
-        _tumbling_us_available,
-        _tumbling_us_paths,
-    )
-    from atd_dockless_processing_spark.operators.joins import (
-        _CK_BUCKETS,
-        _CK_LAYOUT,
-        _Q5_BUCKETS,
-        _Q5_LAYOUT,
-        _ck_layout_available,
-        _q5_layout_available,
-    )
+    from atd_dockless_processing_spark import LAYOUTS
 
     sf = "/root/testdata/sf0.01"
-    probes = [
-        ("custkey bucketed", _CK_LAYOUT._marker(sf, _CK_BUCKETS),
-         lambda: _ck_layout_available(spark, sf)),
-        ("q5 bucketed-orderkey", _Q5_LAYOUT._marker(sf, _Q5_BUCKETS),
-         lambda: _q5_layout_available(spark, sf)),
-        ("tumbling µs-staged", Path(_tumbling_us_paths(sf)[1]),
-         lambda: _tumbling_us_available(sf)),
-    ]
-    built = [(name, probe) for name, marker, probe in probes
-             if Path(marker).exists()]
+    built = [lay for lay in LAYOUTS.values() if lay.marker(sf).exists()]
     if not built:
-        pytest.skip("no layouts built for the sweep dir (fresh clone)")
-    dead = [name for name, probe in built if not probe()]
+        pytest.skip(
+            f"no layouts built for {sf}: "
+            f"{', '.join(lay.label for lay in LAYOUTS.values())} not live "
+            "— run: python scripts/build_layouts.py"
+        )
+    dead = [lay.label for lay in built if not lay.available(spark, sf)]
     assert not dead, (
         f"layouts {dead} were built for {sf} but no longer probe LIVE "
         f"(source regenerated?) — re-run: python scripts/build_layouts.py"
