@@ -45,8 +45,8 @@ def evt_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     LAYOUT-AWARE ``tumbling_hour_plan`` (the ``multiway5_plan``
     dispatch precedent). When the one-time µs-staged narrow events
     layout ``_TUMBLING_US_LAYOUT`` exists for this sf_dir, the scan
-    reads it directly — the round-6 rehearsal
-    (scripts/rehearsal_tumbling_us.py + BASELINE.md) measured the
+    reads it directly — the round-6 rehearsal (BASELINE.md; its
+    script is readable at commit 0b198ec) measured the
     SAME query at 0.46× DuckDB on that layout at ×100, vs 2.93× on
     an ns-encoded source (the parquet reader's per-value NANOS→µs
     conversion tax, not a plan defect). Without the layout (driver

@@ -40,6 +40,74 @@ BENCH_SET = {
 }
 
 
+# Cache and shuffle partitions of the hot harness (round-6 honest
+# re-sweep with the latency knobs, fresh plan per run: 4 -> 0.94 s,
+# 8 -> 0.89 s, 16 -> worse — task dispatch cancels parallelism past 8
+# at 600k-row inputs, where each stage's work is ~ms-scale; the
+# production analogue is AQE partition coalescing). main() also turns
+# AQE off FOR THE BENCH ONLY: AQE materializes every shuffle as a
+# separate query stage to re-plan, adding 2-3 scheduling rounds per
+# query (8/8 AQE-on 1.20 s vs AQE-off 0.96 s); session.py keeps it on.
+BENCH_PARTS = 8
+# r10: cache the three fact tables HASH-PARTITIONED on the key
+# their dominant bench consumer first exchanges on — the in-memory
+# analogue of bucketing (same one-time-layout economics as the Q5
+# bucketed tables). The cached partitioning flows through the
+# broadcast joins (BHJ output-partitioning expansion maps
+# l_orderkey -> o_orderkey), so q3's agg, window_rank's window and
+# sessionize's window+agg all plan EXCHANGE-FREE; consumers that
+# aggregate on other keys (q1, q5, tumbling, grouping_sets) keep
+# their partial-agg-reduced exchange unchanged — measured A/B:
+# q3 170 -> 115 ms min on the probe session, no regressions.
+CACHE_KEY = {
+    "lineitem": "l_orderkey",
+    "orders": "o_custkey",
+    "events": "user_id",
+    "documents": "text",  # dedup_docs' groupBy(text) combine
+}
+
+
+def table_provider(spark, cache: dict):
+    """The bench's hot-table provider (install it with
+    ``tables.set_table_provider``): each table is loaded once,
+    repartitioned (on its ``CACHE_KEY`` when it has one), cached and
+    counted into ``cache[(sf_dir, name)]``. The sf parquet files have
+    a single row group, so a cold scan is one task; the repartitioned
+    cache lets every post-scan stage use all cores (SURVEY §7 M6
+    allows caching the reused base scans). ``cache`` stays the
+    caller's, so it can unpersist the frames."""
+    import atd_dockless_processing_spark.tables as tables
+
+    n_part = min(BENCH_PARTS, spark.sparkContext.defaultParallelism)
+
+    def provider(s, d, name):
+        key = (d, name)
+        if key not in cache:
+            tables.set_table_provider(None)
+            try:
+                df = tables.load(s, d, name)
+                # exact row count from the parquet footers (no Spark
+                # scan job just to size the cache partitioning); the
+                # sub-8k document/embedding tables cache at <= 4
+                # partitions, so a larger bench SF widens only big ones
+                rows = tables.parquet_nrows(d, name)
+                if rows is None:
+                    raise ValueError(f"no parquet footer row count for {d}/{name}")
+                parts = min(4, n_part) if rows < 8192 else n_part
+                if name in CACHE_KEY:
+                    df = df.repartition(parts, CACHE_KEY[name])
+                else:
+                    df = df.repartition(parts)
+                df = df.cache()
+                df.count()
+                cache[key] = df
+            finally:
+                tables.set_table_provider(provider)
+        return cache[key]
+
+    return provider
+
+
 def _bench_spark():
     """Bench-harness SparkSession: the session.py defaults PLUS
     local-mode latency knobs that must be set at JVM start (round-6
@@ -136,17 +204,15 @@ def _duckdb_pair(sf_dir: str) -> float:
     import statistics
     import time
 
-    import duckdb
+    scripts = str(Path(__file__).resolve().parent / "scripts")
+    if scripts not in sys.path:
+        sys.path.append(scripts)
+    from selfcheck import duck_con
 
     from atd_dockless_processing_spark import ORACLES
-    from atd_dockless_processing_spark.tables import TABLES
 
-    con = duckdb.connect()
+    con = duck_con(sf_dir)
     con.execute("SET threads TO 4")
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        glob = f"{path}/*.parquet" if os.path.isdir(path) else path
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{glob}')")
     total = 0.0
     for key in BENCH_SET.values():
         sql = ORACLES[key]
@@ -166,88 +232,13 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = _bench_spark()
 
-    # Hot harness (BASELINE.md method: hot engine, OS-cached files).
-    # The sf parquet files have a single row group, so a cold scan is
-    # one task; register a table provider serving repartitioned cached
-    # tables so every post-scan stage uses all cores (SURVEY §7 M6
-    # allows caching the reused base scans).
+    # Hot harness (BASELINE.md method: hot engine, OS-cached files):
+    # every table is served from the provider's repartitioned cache.
     import atd_dockless_processing_spark.tables as tables
 
-    # Sub-second-query harness settings (RE-TUNED round 5 under the
-    # honest fresh-plan method — the old 16-partition choice was tuned
-    # against the stage-skipping artifact, which hid all scan/partial
-    # stage scheduling cost):
-    # - shuffle.partitions=4 and 4-partition cached scans: measured
-    #   honest sweep on the 6 slowest queries (median-of-5 after 2
-    #   warm-ups, per config): 16/16 -> 1.27 s, 8/8 -> 0.96 s,
-    #   4/4 -> 0.78-1.00 s, 2/2 -> 0.91 s, 1/1 -> 0.93 s; every
-    #   config <= 4 beats 8 and 16 and differences below 4 are noise.
-    #   At 600k-row inputs each stage's work is ~ms-scale, so task
-    #   count is pure scheduling overhead — the production analogue
-    #   is AQE partition coalescing, which does this sizing at
-    #   runtime.
-    # - AQE off FOR THE BENCH ONLY: AQE materializes every shuffle as
-    #   a separate query stage to re-plan, adding 2-3 scheduling
-    #   rounds per query (re-measured honestly: 8/8 AQE-on 1.20 s vs
-    #   AQE-off 0.96 s). At production scale AQE earns that latency
-    #   back (skew splits, runtime broadcast conversion) and stays on
-    #   in session.py defaults.
-    # 8 shuffle/cache partitions (round-6 honest re-sweep WITH the
-    # latency knobs: 4 -> 0.94 s, 8 -> 0.89 s, 16 -> worse — task
-    # dispatch cancels parallelism past 8 at 600k-row inputs)
-    bench_parts = int(os.environ.get("SPARK_GRAFT_BENCH_PARTS", "8"))
-    spark.conf.set("spark.sql.shuffle.partitions", str(bench_parts))
+    spark.conf.set("spark.sql.shuffle.partitions", str(BENCH_PARTS))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    n_part = min(bench_parts, spark.sparkContext.defaultParallelism)
-    cache: dict[tuple[str, str], object] = {}
-
-    def table_rows(d: str, name: str) -> int:
-        # exact row count from the parquet footer (metadata-only — no
-        # Spark scan job just to size the cache partitioning)
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(f"{d}/{name}.parquet").metadata.num_rows
-
-    # r10: cache the three fact tables HASH-PARTITIONED on the key
-    # their dominant bench consumer first exchanges on — the in-memory
-    # analogue of bucketing (same one-time-layout economics as the Q5
-    # bucketed tables). The cached partitioning flows through the
-    # broadcast joins (BHJ output-partitioning expansion maps
-    # l_orderkey -> o_orderkey), so q3's agg, window_rank's window and
-    # sessionize's window+agg all plan EXCHANGE-FREE; consumers that
-    # aggregate on other keys (q1, q5, tumbling, grouping_sets) keep
-    # their partial-agg-reduced exchange unchanged — measured A/B:
-    # q3 170 -> 115 ms min on the probe session, no regressions.
-    cache_key = {
-        "lineitem": "l_orderkey",
-        "orders": "o_custkey",
-        "events": "user_id",
-        "documents": "text",  # dedup_docs' groupBy(text) combine
-    }
-
-    def provider(s, d, name):
-        key = (d, name)
-        if key not in cache:
-            tables.set_table_provider(None)
-            try:
-                df = tables.load(s, d, name)
-                # all tables cache at 4 partitions after the honest
-                # round-5 re-tune (n_part == 4); the row-count probe
-                # stays so a larger bench SF can widen big tables
-                # without touching the sub-8k document/embedding
-                # tables, which 4 partitions already suit
-                parts = min(4, n_part) if table_rows(d, name) < 8192 else n_part
-                if name in cache_key:
-                    df = df.repartition(parts, cache_key[name])
-                else:
-                    df = df.repartition(parts)
-                df = df.cache()
-                df.count()
-                cache[key] = df
-            finally:
-                tables.set_table_provider(provider)
-        return cache[key]
-
+    provider = table_provider(spark, {})
     tables.set_table_provider(provider)
     for t in tables.TABLES:
         provider(spark, sf_dir, t)
@@ -401,12 +392,13 @@ def main() -> None:
             times.append(time.perf_counter() - t0)
         return round(statistics.median(times), 4)
 
-    def _compute_ms() -> dict[str, float]:
+    def _compute_ms() -> tuple[dict[str, float], str | None]:
         sc = spark.sparkContext
         tracker = sc.statusTracker()
         store = sc._jsc.sc().statusStore()
         dflt = [getattr(store, f"stageData$default${i}")() for i in (2, 3, 4, 5)]
         out: dict[str, float] = {}
+        errors: list[str] = []
         for metric, key in BENCH_SET.items():
             df = build(metric, key)
             before = set(tracker.getJobIdsForGroup(None) or [])
@@ -427,16 +419,18 @@ def main() -> None:
                     data = store.stageData(s, *dflt)
                     if data.size() > 0:
                         run_ms += data.apply(0).executorRunTime()
-                except Exception:
-                    pass
+                except Exception as exc:
+                    errors.append(f"{metric} stage {s}: {exc!r}"[:300])
             out[metric] = round(run_ms, 1)
-        return out
+        return out, "; ".join(errors) or None
 
     zero_work_s = _zero_work_s()
+    # a probe that breaks says so: compute_ms_error is None only when
+    # every stage of every query was read
     try:
-        compute_ms = _compute_ms()
-    except Exception:
-        compute_ms = {}
+        compute_ms, compute_ms_error = _compute_ms()
+    except Exception as exc:
+        compute_ms, compute_ms_error = {}, repr(exc)[:300]
     # retry-reason accounting for the discarded epochs (r14 review
     # finding: lumping ratio-retries into "noisy" misattributed them)
     discarded = epochs.copy()
@@ -489,6 +483,7 @@ def main() -> None:
                 "epochs": epoch_history,
                 "zero_work_query_s": zero_work_s,
                 "compute_ms": compute_ms,
+                "compute_ms_error": compute_ms_error,
                 # clean-bracket epochs re-rolled because their paired
                 # ratio exceeded the 2.0 gate (distinct from host
                 # noise — the r14 retry rule)

@@ -14,7 +14,8 @@ before the clock starts; the figure is the median ``toPandas()`` wall.
 A DuckDB form uses bench.py's oracle setup (4 threads, views over the
 sf_dir parquet) and times ``fetchall()`` the same way.
 
-Prints one JSON line per form. With ``--check`` (exactly two forms),
+Prints one JSON line per form; ``run_forms`` yields the same records
+to other scripts (scale_rehearsal.py times its ×N rows with it). With ``--check`` (exactly two forms),
 both results are normalized as selfcheck.py does (columns by name,
 dtype-sensitive cells, sorted rows), one more JSON line reports
 whether they are value-identical, and the exit status is 1 if not.
@@ -106,6 +107,23 @@ def child(form: str, args) -> None:
     Path(args.out).write_text(json.dumps(rec))
 
 
+def run_forms(forms, sf: str, runs: int, check: bool = False):
+    """Run each form in its own child process, in order, and yield its
+    record (``error`` set when the child failed; ``result`` holds the
+    normalized rows when ``check``)."""
+    with tempfile.TemporaryDirectory() as tmp:
+        for i, form in enumerate(forms):
+            out = Path(tmp, f"{i}.json")
+            cmd = [sys.executable, __file__, "--child", "--out", str(out),
+                   "--sf", sf, "--runs", str(runs), form]
+            cmd += ["--check"] if check else []
+            proc = subprocess.run(cmd)
+            if proc.returncode or not out.exists():
+                yield {"form": form, "sf": sf, "error": f"exit {proc.returncode}"}
+            else:
+                yield json.loads(out.read_text())
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("forms", nargs="+", metavar="FORM")
@@ -122,20 +140,10 @@ def main() -> None:
         ap.error("--check takes exactly two forms")
 
     results, failed = [], False
-    with tempfile.TemporaryDirectory() as tmp:
-        for i, form in enumerate(args.forms):
-            out = Path(tmp, f"{i}.json")
-            cmd = [sys.executable, __file__, "--child", "--out", str(out),
-                   "--sf", args.sf, "--runs", str(args.runs), form]
-            cmd += ["--check"] if args.check else []
-            proc = subprocess.run(cmd)
-            if proc.returncode or not out.exists():
-                rec = {"form": form, "sf": args.sf, "error": f"exit {proc.returncode}"}
-                failed = True
-            else:
-                rec = json.loads(out.read_text())
-            results.append(rec.pop("result", None))
-            print(json.dumps(rec), flush=True)
+    for rec in run_forms(args.forms, args.sf, args.runs, args.check):
+        failed |= "error" in rec
+        results.append(rec.pop("result", None))
+        print(json.dumps(rec), flush=True)
     if args.check and not failed:
         a, b = results
         print(json.dumps({"check": args.forms, "identical": a == b}), flush=True)

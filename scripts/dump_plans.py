@@ -1,6 +1,9 @@
 """Dump ``.explain("formatted")`` for a key set to
 plans/r<N>/<key>_<tag>.txt — the before/after plan evidence a
-registered-plan change ships with.
+registered-plan change ships with — and print each key's PLANS.md
+audit row: shuffle and broadcast exchanges and a top-k node from the
+``executedPlan()`` string; parquet scans, scans with non-empty
+``PushedFilters`` and the widest ``ReadSchema`` from the formatted plan.
 
 Plans are captured under driver-real conditions: session.py
 ``get_spark`` on the sf0.1 corpus.
@@ -13,6 +16,7 @@ from __future__ import annotations
 
 import argparse
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -26,6 +30,22 @@ from bench import BENCH_SET  # noqa: E402
 from scale_rehearsal import BASE_SF  # noqa: E402  (the sf0.1 corpus)
 
 
+def audit_row(key: str, df, formatted: str) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    n_exch = plan.count("Exchange hashpartitioning") + plan.count(
+        "Exchange rangepartitioning"
+    )
+    n_bcast = plan.count("BroadcastExchange")
+    topk = "TakeOrderedAndProject" in plan
+    pushed = [p for p in re.findall(r"PushedFilters: \[([^\]]*)\]", formatted) if p.strip()]
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", formatted)
+    widest = max((len(s.split(",")) for s in schemas), default=0)
+    return (
+        f"| `{key}` | {n_exch} | {n_bcast} | {len(schemas)} | {len(pushed)}"
+        f" | {widest} |{' topk' if topk else ''} |"
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("keys", nargs="*", metavar="KEY")
@@ -35,12 +55,15 @@ def main() -> None:
     out_dir = REPO / "plans" / f"r{args.round}"
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark(f"plans-r{args.round}")
+    print("| key | shuffles | bcast | scans | pushed | max cols read | note |")
+    print("|---|---|---|---|---|---|---|", flush=True)
     for key in args.keys or list(BENCH_SET.values()):
+        df = QUERIES[key](spark, BASE_SF)
         buf = io.StringIO()
         with redirect_stdout(buf):
-            QUERIES[key](spark, BASE_SF).explain("formatted")
+            df.explain("formatted")
         (out_dir / f"{key}_{args.tag}.txt").write_text(buf.getvalue())
-        print(f"wrote {key}_{args.tag}.txt ({len(buf.getvalue())} bytes)", flush=True)
+        print(audit_row(key, df, buf.getvalue()), flush=True)
 
 
 if __name__ == "__main__":

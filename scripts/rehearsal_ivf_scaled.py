@@ -23,8 +23,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-import duckdb  # noqa: E402
 import numpy as np  # noqa: E402
+from selfcheck import duck_con  # noqa: E402
 
 from atd_dockless_processing_spark.operators.dedup_ann import (  # noqa: E402
     _IVF_SEED_MIX,
@@ -74,11 +74,8 @@ def duck_sql(nlist: int) -> str:
 
 def exact_top3(out: str) -> dict[int, set[int]]:
     """Driver-side numpy truth: exact cosine top-3 per query."""
-    con = duckdb.connect()
-    p = Path(out) / "embeddings.parquet"
-    pat = f"{p}/*.parquet" if p.is_dir() else str(p)
-    tbl = con.execute(
-        f"SELECT vec_id, embedding FROM read_parquet('{pat}') ORDER BY vec_id"
+    tbl = duck_con(out).execute(
+        "SELECT vec_id, embedding FROM embeddings ORDER BY vec_id"
     ).fetch_arrow_table()
     ids = tbl["vec_id"].to_numpy()
     mat = np.array(tbl["embedding"].to_pylist(), dtype=np.float64)
@@ -128,11 +125,8 @@ def main() -> None:
         times.append(time.perf_counter() - t0)
     s_t = statistics.median(times)
 
-    con = duckdb.connect()
+    con = duck_con(out)
     con.execute("SET threads TO 4")
-    p = Path(out) / "embeddings.parquet"
-    pat = f"{p}/*.parquet" if p.is_dir() else str(p)
-    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{pat}')")
     sql = duck_sql(nlist)
     con.execute(sql).fetchall()
     dts = []

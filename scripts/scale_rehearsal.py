@@ -1,36 +1,38 @@
 """Scale-trajectory rehearsal (BASELINE.md "Scale trajectory"):
 replicate sf0.1 xN with SHIFTED KEYS (each replica is a self-contained
 key space, so join multiplicities stay realistic instead of
-exploding), then run the two headline shapes SCAN-BASED on both
-engines — Spark with AQE ON (the production config), DuckDB at the
-baseline's 4 threads — and print a markdown row per shape.
+exploding), then time every shape's registered key against its DuckDB
+oracle on the replicated corpus and print a markdown row per shape.
 
 Usage: python scripts/scale_rehearsal.py [--mult 100] [--runs 3]
            [--only key1,key2]  (registry keys; filters both shape sets)
-           [--tables t1,t2]    (replicate/view only these tables)
+           [--tables t1,t2]    (replicate only these tables)
 
-The same SQL text (the registry oracles for agg_groupby_q1 /
-srt_topk_global) runs on both engines over views of the same
-replicated parquet; no caching on either side. Data lands in
-.scratch/scale_x{N}/ and is reused if present.
+Each row is ab.py's ``KEY`` vs ``duck:KEY`` pair (``run_forms``): each
+engine in its own process, Spark hot (AQE off, fresh plan per run,
+plan built before the clock), DuckDB at 4 threads; the cells are the
+two ``median_s`` of ``--runs``. Data lands in .scratch/scale_x{N}/ and
+is reused while each table's source-signature marker matches sf0.1.
 """
 
 from __future__ import annotations
 
-import statistics
+import shutil
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from ab import run_forms  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
-from selfcheck import duck_con  # noqa: E402
 
-from atd_dockless_processing_spark import ORACLES  # noqa: E402
 from atd_dockless_processing_spark.session import get_spark  # noqa: E402
-from atd_dockless_processing_spark.tables import load  # noqa: E402
+from atd_dockless_processing_spark.tables import (  # noqa: E402
+    load,
+    marker_matches,
+    source_signature,
+)
 
 BASE_SF = "/root/testdata/sf0.1"
 SHAPES = {
@@ -41,10 +43,10 @@ SHAPES = {
     # replica is a fresh user cohort with realistic session lengths
     "sessionize window+agg": "evt_sessionize_lag",
 }
-# Shapes whose oracle SQL is DuckDB-specific (list_*/string_split):
-# Spark runs the ENGINE DataFrame path (QUERIES[key]) against the
-# scaled dir while DuckDB runs the oracle — the same engine-vs-oracle
-# comparison bench.py/BASELINE.md makes, at xN data. These are the
+# Shapes whose oracle SQL is DuckDB-specific (list_*/string_split);
+# like SHAPES, each runs its engine DataFrame path (QUERIES[key]) vs
+# its oracle — the same engine-vs-oracle comparison
+# bench.py/BASELINE.md makes, at xN data. These are the
 # four bench queries whose sf0.1 ratio is >=1.5x (round-3 verdict
 # item 6): each must show its at-scale trajectory.
 ENGINE_SHAPES = {
@@ -124,7 +126,7 @@ ENGINE_SHAPES = {
     # constant-size at any N, like mm_audio_silence_trim).
     "rouge overlap (doc pairs)": "llm_rouge_overlap",
     "image embed top-5 (bmp decode)": "mm_image_embed_sim",
-    # r6g batch shapes (stm_cdc_stream_apply is timed inclusively by
+    # r6g batch shapes (stm_cdc_stream_apply is measured inclusively by
     # hand, like the other side-effecting stream keys)
     "paragraph dedup (documents)": "txt_dedup_paragraphs",
     "new vs returning (events)": "evt_new_vs_returning",
@@ -207,7 +209,7 @@ ENGINE_SHAPES = {
 # closed-form oracle legitimately disagree (its bounded-superstep
 # scale posture is measured via gph_bfs_reachability, 1.13x at
 # x100); stm_*/snk_*/src_* execute side effects at plan
-# build and are timed inclusively in their own BASELINE sections.
+# build and are measured inclusively in their own BASELINE sections.
 _COMPLETION_KEYS = [
     "agg_collect_sorted", "agg_cube", "agg_filtered", "agg_global",
     "agg_histogram", "agg_minmax_by", "agg_pivot", "agg_rollup",
@@ -255,43 +257,41 @@ SPANS = {"l_orderkey": 10_000_000, "o_orderkey": 10_000_000,
          "vec_id": 10_000_000}
 
 
-def build(spark, mult: int) -> Path:
+def build(mult: int) -> Path:
+    """Replicate (or copy, for STATIC) each table into scale_x{mult};
+    a table is rebuilt when its marker does not hold the current
+    ``source_signature`` of its sf0.1 source."""
     out = REPO / ".scratch" / f"scale_x{mult}"
-    for t, keys in REPL.items():
-        if (out / f"{t}.parquet" / "_SUCCESS").exists():
-            continue
-        df = load(spark, BASE_SF, t).withColumn(
-            "_rep", F.explode(F.sequence(F.lit(0), F.lit(mult - 1)))
-        )
-        for k in keys:
-            df = df.withColumn(k, F.col(k) + F.col("_rep").cast("long") * SPANS[k])
-        n_files = 32 if t in ("lineitem", "events") else 8
-        (
-            df.drop("_rep")
-            .repartition(n_files)
-            .write.mode("overwrite")
-            .parquet(str(out / f"{t}.parquet"))
-        )
-    import shutil
-
-    for t in STATIC:
+    out.mkdir(parents=True, exist_ok=True)
+    spark = None
+    for t in [*REPL, *STATIC]:
         src, dst = Path(BASE_SF) / f"{t}.parquet", out / f"{t}.parquet"
-        if not dst.exists() and src.exists():
+        marker, sig = out / f"{t}.src_sig", source_signature(str(src))
+        if marker_matches(marker, sig) or (t in STATIC and not src.exists()):
+            continue
+        if t in STATIC:
+            if dst.is_dir():
+                shutil.rmtree(dst)
+            dst.unlink(missing_ok=True)
             (shutil.copytree if src.is_dir() else shutil.copy)(str(src), str(dst))
+        else:
+            spark = spark or get_spark("scale-rehearsal")
+            df = load(spark, BASE_SF, t).withColumn(
+                "_rep", F.explode(F.sequence(F.lit(0), F.lit(mult - 1)))
+            )
+            for k in REPL[t]:
+                df = df.withColumn(k, F.col(k) + F.col("_rep").cast("long") * SPANS[k])
+            n_files = 32 if t in ("lineitem", "events") else 8
+            (
+                df.drop("_rep")
+                .repartition(n_files)
+                .write.mode("overwrite")
+                .parquet(str(dst))
+            )
+        marker.write_text(sig)
+    if spark is not None:
+        spark.stop()
     return out
-
-
-def timed(fn, runs: int) -> float:
-    fn()  # warm-up: JIT / OS page cache on both engines
-    times = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn()
-        elapsed = time.perf_counter() - t0
-        # a fn that sets fn.last reports its own timed section
-        # (build-outside-timer hot runs); fall back to wall time
-        times.append(getattr(fn, "last", elapsed))
-    return statistics.median(times)
 
 
 def main() -> None:
@@ -306,83 +306,18 @@ def main() -> None:
         tkeep = set(sys.argv[sys.argv.index("--tables") + 1].split(","))
         for t in [t for t in REPL if t not in tkeep]:
             del REPL[t]
-    spark = get_spark("scale-rehearsal")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")  # production config
-    out = build(spark, mult)
+    out = str(build(mult))
 
-    con = duck_con(str(out))
-    con.execute("SET threads TO 4")  # baseline harness thread count
-    for t in list(REPL) + [t for t in STATIC if (out / f"{t}.parquet").exists()]:
-        spark.read.parquet(str(out / f"{t}.parquet")).createOrReplaceTempView(t)
-
-    print(f"| query shape | DuckDB 4t x{mult} | Spark local x{mult} (AQE on) | ratio |")
-    print("|---|---|---|---|")
-    for label, key in SHAPES.items():
-        sql = ORACLES[key]
-
-        def duck_run():
-            con.execute(sql).fetchall()
-
-        def spark_run():
-            spark.sql(sql).toPandas()
-
-        d = timed(duck_run, runs)
-        s = timed(spark_run, runs)
-        print(f"| {label} | {d:.3f} s | {s:.3f} s | {s / d:.2f}x |")
-
-    from atd_dockless_processing_spark import QUERIES  # noqa: E402
-
-    # Two methods for the engine shapes (BASELINE.md "per-query floor"
-    # decomposition): default = fresh DataFrame per run TIMED
-    # INCLUSIVELY, charging Spark's per-plan-instance one-time cost
-    # (py4j build + analysis + planning + codegen, ~0.5-0.8 s
-    # regardless of data size) to every run; --hot = fresh DataFrame
-    # per run with the build OUTSIDE the timer + AQE off (round-5
-    # revision: the former plan-built-once method re-collected one
-    # instance, and the DAGScheduler skips shuffle-map stages whose
-    # outputs are still registered — it measured only the post-
-    # shuffle tail; a fresh instance per run forces every stage to
-    # execute while analysis/codegen still amortize via their
-    # source-keyed caches).
-    hot = "--hot" in sys.argv
-    if hot:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        print(
-            "(engine shapes below: HOT method — fresh plan instance per run, "
-            "build outside the timer, AQE OFF — every stage re-executes; the "
-            "header's 'AQE on' does not apply to them)"
-        )
-    for label, key in ENGINE_SHAPES.items():
-        sql = ORACLES[key]
-
-        def duck_run():
-            con.execute(sql).fetchall()
-
-        if hot:
-            QUERIES[key](spark, str(out)).toPandas()  # codegen/JIT warm
-
-            def spark_run():
-                # build OUTSIDE the timed section of timed(): the
-                # closure can't split build from collect, so time the
-                # collect explicitly and append
-                df = QUERIES[key](spark, str(out))
-                df._jdf.queryExecution().executedPlan()
-                t0 = time.perf_counter()
-                df.toPandas()
-                spark_run.last = time.perf_counter() - t0
-        else:
-
-            def spark_run():
-                # fresh DataFrame per run: AQE reuses materialized shuffle
-                # stages on a re-collected DataFrame (BASELINE.md finding 2)
-                QUERIES[key](spark, str(out)).toPandas()
-
-        d = timed(duck_run, runs)
-        s = timed(spark_run, runs)
-        tag = "engine path vs oracle, hot exec" if hot else "engine path vs oracle"
-        # tag folded into the ratio cell so every row keeps the
-        # header's 4 columns (valid markdown either way)
-        print(f"| {label} | {d:.3f} s | {s:.3f} s | {s / d:.2f}x ({tag}) |")
+    print("| label | duck s | spark s | ratio |")
+    print("|---|---|---|---|", flush=True)
+    for label, key in {**SHAPES, **ENGINE_SHAPES}.items():
+        s_rec, d_rec = run_forms([key, f"duck:{key}"], out, runs)
+        if "error" in s_rec or "error" in d_rec:
+            cells = [r.get("error", "ok") for r in (d_rec, s_rec)]
+            print(f"| {label} | {cells[0]} | {cells[1]} | failed |", flush=True)
+            continue
+        d, s = d_rec["median_s"], s_rec["median_s"]
+        print(f"| {label} | {d:.4f} | {s:.4f} | {s / d:.2f}x |", flush=True)
 
 
 if __name__ == "__main__":

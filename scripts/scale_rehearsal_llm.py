@@ -75,7 +75,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from atd_dockless_processing_spark import QUERIES  # noqa: E402
 from atd_dockless_processing_spark.session import get_spark  # noqa: E402
-from atd_dockless_processing_spark.tables import load  # noqa: E402
+from atd_dockless_processing_spark.tables import load, marker_matches  # noqa: E402
 
 BASE_SF = "/root/testdata/sf0.1"
 SHAPES = {
@@ -105,11 +105,7 @@ def build(spark, mult: int) -> str:
     # regenerates (same staleness class as the stream stagings)
     marker = out / "src_mtime"
     src_sig = str(os.stat(f"{BASE_SF}/documents.parquet").st_mtime_ns)
-    fresh = (
-        (dst / "_SUCCESS").exists()
-        and marker.exists()
-        and marker.read_text().strip() == src_sig
-    )
+    fresh = (dst / "_SUCCESS").exists() and marker_matches(marker, src_sig)
     if not fresh:
         # fan the 1-row-group source across many small map tasks BEFORE
         # the xN explode: at x100 a coarse partition holds its whole
@@ -179,11 +175,7 @@ def build_lowdensity(spark, mult: int) -> str:
     # lockstep with any design change below or the marker will
     # silently match a stale corpus
     src_sig = "v3:" + str(os.stat(f"{BASE_SF}/documents.parquet").st_mtime_ns)
-    fresh = (
-        (dst / "_SUCCESS").exists()
-        and marker.exists()
-        and marker.read_text().strip() == src_sig
-    )
+    fresh = (dst / "_SUCCESS").exists() and marker_matches(marker, src_sig)
     if not fresh:
         docs = (
             load(spark, BASE_SF, "documents")

@@ -44,6 +44,8 @@ def test_bench_emits_contract_json():
     # applies — at any other sf it must be None, mirroring pair_drift
     assert doc["pair_noisy"] is None
     assert doc["noisy_epochs_discarded"] == 0
+    # the compute probe either read every query or says what broke
+    assert len(doc["compute_ms"]) == 12 or doc["compute_ms_error"]
 
 
 def test_key_order_matches_registry():
@@ -151,27 +153,15 @@ def test_bench_queries_hit_the_table_cache(spark):
     query over a view of a cached DataFrame silently re-scans the
     source (agg_grouping_sets ran 3.5x slower in the bench until it
     moved to the DataFrame groupingSets API). Asserts the substituted
-    plan shows InMemoryTableScan for each bench key."""
-    from bench import BENCH_SET
+    plan shows InMemoryTableScan for each bench key under the
+    provider bench.py installs."""
+    from bench import BENCH_SET, table_provider
     from atd_dockless_processing_spark import QUERIES
     import atd_dockless_processing_spark.tables as tables
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     cache = {}
-
-    def provider(s, d, name):
-        key = (d, name)
-        if key not in cache:
-            tables.set_table_provider(None)
-            try:
-                df = tables.load(s, d, name).repartition(2).cache()
-                df.count()
-                cache[key] = df
-            finally:
-                tables.set_table_provider(provider)
-        return cache[key]
-
-    tables.set_table_provider(provider)
+    tables.set_table_provider(table_provider(spark, cache))
     try:
         misses = []
         for metric, key in BENCH_SET.items():
@@ -258,3 +248,44 @@ def test_baseline_constant_pinned_to_doc():
         f"bench.py BASELINE_12Q_S={const_s} != BASELINE.md {doc_s} — "
         "update BOTH when the baseline is re-measured"
     )
+
+
+def test_perfbench_copies_match_bench():
+    """perfbench/ is frozen, so it keeps its own copies of bench.py's
+    provider constants, of its ``< 8192`` row rule (perfbench sizes by
+    ``datagen.BASE_ROWS``, bench.py by the footer count) and of the
+    DuckDB view loader. The ``interactive`` numbers speak for bench.py
+    only while the copies agree; pin them. No Spark."""
+    import importlib.util
+
+    import bench
+    from selfcheck import duck_con
+
+    from atd_dockless_processing_spark.tables import TABLES, parquet_nrows
+
+    def load(name):
+        spec = importlib.util.spec_from_file_location(
+            f"perfbench_{name}", REPO / "perfbench" / f"{name}.py"
+        )
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return mod
+
+    run, datagen, gate = (load(n) for n in ("run", "datagen", "gate"))
+    assert run.CACHE_KEY == bench.CACHE_KEY
+    assert run.BENCH_PARTS == bench.BENCH_PARTS
+    sf = "/root/testdata/sf0.1"
+    small = {t: parquet_nrows(sf, t) < 8192 for t in TABLES}
+    assert {t: datagen.BASE_ROWS[t] < 8192 for t in TABLES} == small
+
+    def views(con):
+        try:
+            return set(con.execute(
+                "SELECT view_name, sql FROM duckdb_views() WHERE NOT internal"
+            ).fetchall())
+        finally:
+            con.close()
+
+    frozen = views(gate.duck_connect(sf, TABLES))
+    assert len(frozen) == len(TABLES)
+    assert frozen == views(duck_con(sf))

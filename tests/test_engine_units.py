@@ -351,8 +351,8 @@ def test_late_data_staging_tracks_part_file_rewrites(spark, tmp_path, monkeypatc
 
 
 def test_duck_con_reads_directory_tables(tmp_path):
-    """selfcheck.duck_con (the one DuckDB view helper of selfcheck,
-    ab.py, scale_rehearsal.py and the ``duck`` fixture) reads a
+    """selfcheck.duck_con (the one DuckDB view loader of bench.py,
+    scripts/ and tests/) reads a
     directory-shaped ``<t>.parquet`` through its part-file glob —
     DuckDB does not expand a bare directory path — and skips tables
     the corpus does not have."""

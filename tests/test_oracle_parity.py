@@ -12,7 +12,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
 
-from selfcheck import norm_pdf  # noqa: E402
+from selfcheck import duck_con, norm_pdf  # noqa: E402
 
 from atd_dockless_processing_spark import ORACLES, QUERIES  # noqa: E402
 
@@ -64,7 +64,6 @@ def test_join_anti_nonvacuous_orphans(spark, sf_dir, tmp_path):
     the same pandas canonicalizer the driver uses."""
     import shutil
 
-    import duckdb
     from pyspark.sql import functions as F
 
     from atd_dockless_processing_spark.tables import load
@@ -87,16 +86,8 @@ def test_join_anti_nonvacuous_orphans(spark, sf_dir, tmp_path):
 
     got = QUERIES["join_anti"](spark, str(corpus))
     s_cols, s_rows = norm_pdf(got.toPandas())
-    con = duckdb.connect()
+    con = duck_con(str(corpus))
     try:
-        con.execute(
-            "CREATE VIEW orders AS SELECT * "
-            f"FROM read_parquet('{corpus}/orders.parquet')"
-        )
-        con.execute(
-            "CREATE VIEW customer AS SELECT * "
-            f"FROM read_parquet('{corpus}/customer.parquet/*.parquet')"
-        )
         o_cols, o_rows = norm_pdf(con.execute(ORACLES["join_anti"]).df())
     finally:
         con.close()
