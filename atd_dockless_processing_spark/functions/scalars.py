@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
-from ..tables import load, stage_scratch
+from ..tables import load, read_parquet, stage_scratch
 from .json_fast import with_json_field
 
 
@@ -772,7 +772,7 @@ def fn_geojson_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the scale-correct shape for route ingest: the
     staged table is partitioned on trip_id, parsing is map-side, and
     the per-trip reduce is a combinable single-exchange agg."""
-    routes = spark.read.parquet(_stage_routes(spark, sf_dir))
+    routes = read_parquet(spark, _stage_routes(spark, sf_dir))
     pts = routes.select(
         "trip_id",
         F.posexplode(

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from ..functions.exact import exact_unit_sum
 from ..functions.json_fast import with_json_field
 from ..registry import query, register_layout
-from ..tables import Layout, load
+from ..tables import Layout, load, read_parquet
 
 
 @query(
@@ -107,7 +107,7 @@ def tumbling_hour_plan(
         layout = "staged" if _TUMBLING_US_LAYOUT.available(spark, sf_dir) else "adhoc"
     if layout == "staged":
         (staged,) = _TUMBLING_US_LAYOUT.paths(sf_dir)
-        ev = spark.read.parquet(staged)
+        ev = read_parquet(spark, staged)
     else:
         ev = load(spark, sf_dir, "events")
     return (

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.json_fast import with_json_field
 from ..registry import query
-from ..tables import load, stage_scratch
+from ..tables import load, read_parquet, stage_scratch
 
 
 @query(
@@ -705,7 +705,7 @@ def geo_point_in_polygon_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell hash + 16-edge parity check per candidate, one partial agg —
     the canonical spatial-join-by-grid-blocking design (same family
     as geo_bbox_join / join_interval_overlap bucket blocking)."""
-    polys = spark.read.parquet(_stage_polygons(spark, sf_dir))
+    polys = read_parquet(spark, _stage_polygons(spark, sf_dir))
     g = float(_PIPT_CELL)
     rad = 3.0  # max |offset| in lattice units
 

@@ -17,7 +17,7 @@ from pathlib import Path
 
 from ..functions.exact import exact_unit_sum
 from ..registry import query, register_layout
-from ..tables import Layout, load
+from ..tables import Layout, load, parquet_schema
 
 
 @query(
@@ -427,7 +427,7 @@ class _BucketedLayout(Layout):
             ):
                 if spark.catalog.tableExists(name):
                     continue
-                sch = spark.read.parquet(path).schema
+                sch = parquet_schema(spark, path)
                 cols_ddl = ", ".join(
                     f"`{f.name}` {f.dataType.simpleString()}"
                     for f in sch.fields

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, stage_scratch
+from ..tables import load, read_parquet, stage_scratch
 
 
 def _encode_bmp(text: bytes, width: int, height: int) -> bytes:
@@ -347,7 +347,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    vids = spark.read.parquet(_stage_videos(spark, sf_dir))
+    vids = read_parquet(spark, _stage_videos(spark, sf_dir))
     return vids.mapInPandas(
         sample,
         "doc_id long, frame_idx int, n_frames int, width int, height int, "
@@ -527,7 +527,7 @@ def mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    wavs = spark.read.parquet(_stage_wavs(spark, sf_dir))
+    wavs = read_parquet(spark, _stage_wavs(spark, sf_dir))
     return wavs.mapInPandas(decode, _WAV_SCHEMA)
 
 
@@ -697,7 +697,7 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    wavs = spark.read.parquet(_stage_wavs(spark, sf_dir))
+    wavs = read_parquet(spark, _stage_wavs(spark, sf_dir))
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -873,7 +873,7 @@ def mm_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero shuffle, O(videos) output; at 100 TB it is scan-bound and
     embarrassingly parallel, the decode-adjacent shape every video
     pipeline starts with."""
-    staged = spark.read.parquet(_stage_videos(spark, sf_dir))
+    staged = read_parquet(spark, _stage_videos(spark, sf_dir))
 
     def cuts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -974,7 +974,7 @@ def mm_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: stateless Arrow mapInPandas, zero shuffle,
     O(clips) output — scan-bound and embarrassingly parallel at
     100 TB, identical to the decode/feature siblings."""
-    staged = spark.read.parquet(_stage_wavs(spark, sf_dir))
+    staged = read_parquet(spark, _stage_wavs(spark, sf_dir))
 
     def trim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -28,29 +28,23 @@ from pyspark.sql import types as T
 from ..operators.aggregates import _hll_estimate, _hll_oracle, _hll_registers
 from ..registry import query
 from ..sources.sinks import _CDC_ORACLE, _cdc_log_parts
-from ..tables import events_ts_to_timestamp, load, scratch_dir, stage_scratch
+from ..tables import (
+    events_ts_to_timestamp,
+    load,
+    parquet_schema,
+    read_parquet,
+    scratch_dir,
+    stage_scratch,
+)
 
 # The file stream source requires an explicit schema. events.ts has
 # shipped as both TIMESTAMP(NANOS) (long under nanosAsLong) and
-# TIMESTAMP(MICROS) (NTZ) — so the schema is taken from a batch
-# footer read of the actual file (cheap, cached per staged dir) and
-# the ts dtype is normalized post-read by events_ts_to_timestamp,
-# exactly like the batch loader. A hard-coded schema here cost round
-# 2 three streaming keys when the testdata encoding flipped.
-_RAW_SCHEMA_CACHE: dict = {}  # path -> (mtime_ns, schema)
-
-
-def _events_raw_schema(spark: SparkSession, path: str) -> T.StructType:
-    # one entry per path, overwritten on mtime change: an in-place
-    # rewrite of the source file (same inode, so the hard-linked
-    # staging sees the new bytes immediately) invalidates the cached
-    # schema without accumulating stale entries across regenerations
-    mtime = os.stat(path).st_mtime_ns
-    hit = _RAW_SCHEMA_CACHE.get(path)
-    if hit is None or hit[0] != mtime:
-        hit = (mtime, spark.read.parquet(path).schema)
-        _RAW_SCHEMA_CACHE[path] = hit
-    return hit[1]
+# TIMESTAMP(MICROS) (NTZ) — so the schema is read from the footers of
+# the actual staged file (tables.parquet_schema, cached on the source
+# signature) and the ts dtype is normalized post-read by
+# events_ts_to_timestamp, exactly like the batch loader. A hard-coded
+# schema here cost round 2 three streaming keys when the testdata
+# encoding flipped.
 
 
 class _stream_partitions:
@@ -116,7 +110,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         except OSError:
             shutil.copyfile(src, dst)
             shutil.copystat(src, dst)
-    raw = spark.readStream.schema(_events_raw_schema(spark, dst)).parquet(stage)
+    raw = spark.readStream.schema(parquet_schema(spark, dst)).parquet(stage)
     return events_ts_to_timestamp(raw)
 
 
@@ -866,7 +860,7 @@ def _stage_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
 
     def build(indir: str) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+        raw = read_parquet(spark, f"{sf_dir}/events.parquet")
         ts_type = raw.schema["ts"].dataType
         mx = raw.agg(F.max("ts").alias("m")).first()["m"]
         if isinstance(ts_type, T.LongType):  # legacy nanos
@@ -932,7 +926,7 @@ def stm_join_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     must agree row-for-row — a duplicate or withheld unmatched
     emission flips n_rows/n_unmatched."""
     stage = _stage_events_with_sentinel(spark, sf_dir)
-    raw = spark.readStream.schema(_events_raw_schema(spark, stage)).parquet(stage)
+    raw = spark.readStream.schema(parquet_schema(spark, stage)).parquet(stage)
     ev = events_ts_to_timestamp(raw)
     clicks = (
         ev.where(F.col("event_type") == "click")
@@ -1562,7 +1556,7 @@ def stm_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     indir = stage_scratch("stm_rkcl_events", sf_dir, "events", build)
-    schema = spark.read.parquet(indir).schema
+    schema = parquet_schema(spark, indir)
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1774,7 +1768,7 @@ def stm_tws_value_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one emission per (user, nonempty slice): the drain's completion
     # target, computed from the staged files themselves
     target = sum(
-        spark.read.parquet(f"{indir}/{f}.parquet")
+        read_parquet(spark, f"{indir}/{f}.parquet")
         .select("user_id")
         .distinct()
         .count()

@@ -2,17 +2,29 @@
 
 Tables and schemas are fixed (FIXTURES.md §A); one parquet file per
 table per scale-factor directory (TESTDATA.md). At 100 TB each
-"file" becomes a partitioned parquet dataset — ``spark.read.parquet``
-is unchanged, and filters/projections push down to row groups.
+"file" becomes a parquet dataset — a directory of part files — and
+filters/projections push down to row groups.
+
+Table loads and the package's staged-file reads take their schema
+from one cached footer pass (:func:`footer_schema`, which
+:func:`parquet_nrows` shares): pyarrow reads it from the parquet
+footers and :func:`read_parquet` hands it to ``spark.read.schema``,
+so a load runs no Spark job. Spark's own schema inference runs one
+job per read, even for a single file.
 """
 
 from __future__ import annotations
 
+import json
+import logging
+import os
 import re
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -83,47 +95,269 @@ def events_ts_to_timestamp(df: DataFrame) -> DataFrame:
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver table (``events.ts`` normalized to TimestampType
-    via :func:`events_ts_to_timestamp`, whatever its physical encoding)."""
+    """Load one driver table: the provider's frame when one is
+    installed, else :func:`read_parquet` of ``{sf_dir}/{name}.parquet``
+    (schema from the footers, no Spark job). ``events.ts`` is
+    normalized to TimestampType via :func:`events_ts_to_timestamp`,
+    whatever its physical encoding."""
     if _PROVIDER is not None:
         df = _PROVIDER(spark, sf_dir, name)
         if df is not None:
             return df
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         return events_ts_to_timestamp(df)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+# Dispatch records: one structured record per decision a run should
+# be able to explain, with the path, the decision and the reason.
+DISPATCH = logging.getLogger("atd_dockless_processing_spark.dispatch")
+
+# Spark-written files carry their Spark schema as JSON under this
+# footer key, and Spark's inference takes it over the parquet types.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
+_PLAIN = {
+    "BOOLEAN": T.BooleanType(),
+    "INT32": T.IntegerType(),
+    "INT64": T.LongType(),
+    "FLOAT": T.FloatType(),
+    "DOUBLE": T.DoubleType(),
+}
+_SIGNED_INT = {
+    ("INT32", 8): T.ByteType(),
+    ("INT32", 16): T.ShortType(),
+    ("INT32", 32): T.IntegerType(),
+    ("INT64", 64): T.LongType(),
+}
+
+
+class _Footers(NamedTuple):
+    """One read of a parquet path's footers: the row count summed over
+    every data file (``None`` when a footer will not open), and the
+    schema every data file shares (the parquet schema plus any Spark
+    schema JSON) or the reason there is none."""
+
+    nrows: int | None
+    schema: object = None  # pyarrow.parquet.ParquetSchema
+    spark_json: bytes | None = None
+    reason: str | None = None
+
+
+_FOOTERS: dict[str, tuple[str, _Footers]] = {}
+
+
+def _read_footers(path: str) -> _Footers:
+    """Read every data file's footer under ``path``. Data files are
+    Spark's: names starting with ``_`` or ``.`` are skipped, in the
+    top directory and below it. A URI (``s3a://``, ``file:``) or a glob
+    pattern is left to Spark."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if re.match(r"[A-Za-z][\w+.-]*:", path) or any(c in path for c in "{}[]*?\\"):
+        return _Footers(None, reason="URI or glob path")
+    files, reason = [path], None
+    if os.path.isdir(path):
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            if dirs:
+                reason = "subdirectories (partition discovery)"
+            if any(n.startswith(("_metadata", "_common_metadata")) for n in names):
+                reason = "summary metadata file"
+            files += [
+                os.path.join(root, n)
+                for n in sorted(names)
+                if not n.startswith(("_", "."))
+            ]
+    try:
+        metas = [pq.read_metadata(f) for f in files]
+    except (OSError, pa.ArrowException) as exc:
+        return _Footers(None, reason=f"footer will not open: {exc!r}")
+    nrows = sum(m.num_rows for m in metas)
+    if reason is not None or not metas:
+        return _Footers(nrows, reason=reason or "no data files")
+    first, *rest = metas
+    spark_json = (first.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if any(
+        not m.schema.equals(first.schema)
+        or (m.metadata or {}).get(_SPARK_SCHEMA_KEY) != spark_json
+        for m in rest
+    ):
+        return _Footers(nrows, reason="data files' footers disagree")
+    return _Footers(nrows, first.schema, spark_json)
+
+
+def _footers(path: str) -> _Footers:
+    """:func:`_read_footers`, cached on :func:`source_signature`: an
+    in-place rewrite is read again, an unstatable path every time."""
+    sig = source_signature(path)
+    hit = _FOOTERS.get(path)
+    if hit is None or hit[0] != sig:
+        hit = (sig, _read_footers(path))
+        _FOOTERS[path] = hit
+    return hit[1]
+
+
+def _as_nullable(node):
+    """A Spark schema's JSON with every field, array element and map
+    value nullable, as Spark's file sources make them."""
+    if isinstance(node, list):
+        return [_as_nullable(v) for v in node]
+    if not isinstance(node, dict):
+        return node
+    return {
+        k: True if k in _NULLABLE_KEYS else v if k == "metadata" else _as_nullable(v)
+        for k, v in node.items()
+    }
+
+
+def _leaf_type(col, conf_on) -> T.DataType | None:
+    """The Spark type inference gives one primitive parquet column,
+    from the type actually read; ``None`` for a type not mapped here."""
+    phys = col.physical_type
+    logical = json.loads(col.logical_type.to_json())
+    kind = logical["Type"]
+    if kind == "None":
+        return _PLAIN.get(phys)
+    if kind == "Int" and logical["isSigned"]:
+        return _SIGNED_INT.get((phys, logical["bitWidth"]))
+    if kind == "Date" and phys == "INT32":
+        return T.DateType()
+    if kind == "String" and phys == "BYTE_ARRAY":
+        return T.StringType()
+    if kind == "Decimal":
+        digits = {
+            "INT32": 9,
+            "INT64": 18,
+            "BYTE_ARRAY": 38,
+            "FIXED_LEN_BYTE_ARRAY": min(38, len(str(2 ** (8 * col.length - 1) - 1)) - 1),
+        }
+        if 0 <= col.scale <= col.precision <= digits.get(phys, 0):
+            return T.DecimalType(col.precision, col.scale)
+        return None
+    if kind == "Timestamp" and phys == "INT64":
+        if logical["timeUnit"] in ("milliseconds", "microseconds"):
+            if logical["isAdjustedToUTC"] or not conf_on(
+                "spark.sql.parquet.inferTimestampNTZ.enabled"
+            ):
+                return T.TimestampType()
+            return T.TimestampNTZType()
+        if conf_on("spark.sql.legacy.parquet.nanosAsLong"):
+            return T.LongType()
+    return None
+
+
+def _to_spark(spark: SparkSession, footers: _Footers) -> T.StructType | str:
+    """The schema Spark's inference gives ``footers``, or the reason
+    it cannot be told from them. Spark JSON in the footer wins, as in
+    Spark; otherwise each top-level column must be a mapped primitive
+    or a standard 3-level LIST of one."""
+    if footers.reason is not None:
+        return footers.reason
+    if footers.spark_json is not None:
+        try:
+            return T.StructType.fromJson(_as_nullable(json.loads(footers.spark_json)))
+        except (ValueError, KeyError, TypeError) as exc:
+            return f"Spark schema JSON will not parse: {exc!r}"
+    import pyarrow as pa
+
+    confs: dict[str, bool] = {}
+
+    def conf_on(key: str) -> bool:
+        if key not in confs:
+            confs[key] = str(spark.conf.get(key)).lower() == "true"
+        return confs[key]
+
+    schema = footers.schema
+    fields = []
+    for i, field in enumerate(schema.to_arrow_schema()):
+        col = schema.column(i)
+        is_list = pa.types.is_list(field.type) or pa.types.is_large_list(field.type)
+        if is_list:
+            elem = field.type.value_field.name
+            mid = col.path[len(field.name) + 1 : -len(elem) - 1]
+            shaped = (
+                col.max_repetition_level == 1
+                and col.path == f"{field.name}.{mid}.{elem}"
+                and "." not in mid
+                and mid not in ("array", f"{field.name}_tuple")
+            )
+        else:
+            shaped = col.max_repetition_level == 0 and col.path == field.name
+        if not shaped or pa.types.is_nested(field.type) and not is_list:
+            return f"column {field.name!r}: unmapped shape {field.type}"
+        dtype = _leaf_type(col, conf_on)
+        if dtype is None:
+            return f"column {field.name!r}: unmapped {col.physical_type} {col.logical_type}"
+        if is_list:
+            dtype = T.ArrayType(dtype, True)
+        fields.append(T.StructField(field.name, dtype, True))
+    if not fields:
+        return "no columns"
+    return T.StructType(fields)
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The Spark schema ``spark.read.parquet(path)`` would infer, read
+    from the parquet footers with no Spark job; ``None`` (with one
+    dispatch record) when the footers cannot tell it: a type not
+    mapped here, a URI or glob path, a partitioned or disagreeing
+    directory, or a footer that will not open. The confs inference
+    reads (``inferTimestampNTZ``, ``nanosAsLong``) are read from
+    ``spark`` on every call, so a conf change is honoured."""
+    got = _to_spark(spark, _footers(path))
+    if isinstance(got, str):
+        DISPATCH.info(
+            "parquet schema of %s: inferring read (%s)",
+            path,
+            got,
+            extra={"path": path, "decision": "inferring read", "reason": got},
+        )
+        return None
+    return got
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType:
+    """:func:`footer_schema`, or Spark's inferred schema when the
+    footers cannot tell it."""
+    schema = footer_schema(spark, path)
+    return schema if schema is not None else spark.read.parquet(path).schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` given the :func:`footer_schema`, so
+    the read runs no schema-inference job; the inferring read when the
+    footers cannot tell the schema. The relation is the same either
+    way."""
+    schema = footer_schema(spark, path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def parquet_nrows(sf_dir: str, name: str):
     """Exact row count of ``{sf_dir}/{name}.parquet`` (plain file or
-    directory-of-files) from parquet FOOTERS — metadata-only, no Spark
-    job. Returns ``None`` (with a visible warning) when the path isn't
-    local plain parquet — object-store dirs, test-injected providers —
-    so callers choose their own safe default instead of silently
-    treating the corpus as empty (round-6 ADVICE on
+    directory of part files), summed over the data files' FOOTERS of
+    the same cached pass :func:`footer_schema` reads — metadata-only,
+    no Spark job. Returns ``None`` (with a visible warning) when the
+    path isn't local plain parquet — object-store dirs, test-injected
+    providers — so callers choose their own safe default instead of
+    silently treating the corpus as empty (round-6 ADVICE on
     ``_embeddings_nrows``)."""
-    import os
     import warnings
 
-    import pyarrow.parquet as pq
-
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception as exc:  # non-POSIX path / provider-served table
+    footers = _footers(path)
+    if footers.nrows is None:
         warnings.warn(
-            f"parquet_nrows({path}): footer read failed ({exc!r}); "
+            f"parquet_nrows({path}): footer read failed ({footers.reason}); "
             "caller falls back to its size-unknown path"
         )
-        return None
+    return footers.nrows
 
 
 def scratch_dir(*parts: str) -> str:
@@ -146,8 +380,6 @@ def source_signature(path: str) -> str:
     rebuild (cheap stagings) or decline to install (expensive
     layouts, via ``signature_unavailable``) instead of trusting a
     marker they cannot re-verify."""
-    import os
-
     try:
         if os.path.isdir(path):
             # recursive walk (r9 ADVICE #1): a nested/partitioned source
@@ -231,7 +463,6 @@ def stage_scratch(name: str, sf_dir: str, src_table: str, build_fn) -> str:
     ``_stream_events`` keeps its own inode-based freshness check: it
     hard-links the source rather than deriving from it.)
     """
-    import os
     import shutil
 
     base = scratch_dir(name, sf_dir.strip("/").replace("/", "_"))

@@ -3,7 +3,8 @@ plans/r<N>/<key>_<tag>.txt — the before/after plan evidence a
 registered-plan change ships with — and print each key's PLANS.md
 audit row: shuffle and broadcast exchanges and a top-k node from the
 ``executedPlan()`` string; parquet scans, scans with non-empty
-``PushedFilters`` and the widest ``ReadSchema`` from the formatted plan.
+``PushedFilters`` and the widest ``ReadSchema`` from the formatted plan;
+and the Spark jobs the key's plan build ran (``build_jobs``).
 
 Plans are captured under driver-real conditions: session.py
 ``get_spark`` on the sf0.1 corpus.
@@ -18,6 +19,7 @@ import argparse
 import io
 import re
 import sys
+import uuid
 from contextlib import redirect_stdout
 from pathlib import Path
 
@@ -30,7 +32,21 @@ from bench import BENCH_SET  # noqa: E402
 from scale_rehearsal import BASE_SF  # noqa: E402  (the sf0.1 corpus)
 
 
-def audit_row(key: str, df, formatted: str) -> str:
+def build_jobs(spark, key: str, sf_dir: str):
+    """Build ``key``'s plan; return it and the number of Spark jobs the
+    build ran, counted under a job group of its own through public
+    APIs (``setJobGroup``, ``statusTracker().getJobIdsForGroup``)."""
+    sc = spark.sparkContext
+    group = f"build-{key}-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, f"build {key}")
+    try:
+        df = QUERIES[key](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def audit_row(key: str, df, formatted: str, jobs: int) -> str:
     plan = df._jdf.queryExecution().executedPlan().toString()
     n_exch = plan.count("Exchange hashpartitioning") + plan.count(
         "Exchange rangepartitioning"
@@ -42,7 +58,7 @@ def audit_row(key: str, df, formatted: str) -> str:
     widest = max((len(s.split(",")) for s in schemas), default=0)
     return (
         f"| `{key}` | {n_exch} | {n_bcast} | {len(schemas)} | {len(pushed)}"
-        f" | {widest} |{' topk' if topk else ''} |"
+        f" | {widest} | {jobs} |{' topk' if topk else ''} |"
     )
 
 
@@ -55,15 +71,15 @@ def main() -> None:
     out_dir = REPO / "plans" / f"r{args.round}"
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark(f"plans-r{args.round}")
-    print("| key | shuffles | bcast | scans | pushed | max cols read | note |")
-    print("|---|---|---|---|---|---|---|", flush=True)
+    print("| key | shuffles | bcast | scans | pushed | max cols read | build jobs | note |")
+    print("|---|---|---|---|---|---|---|---|", flush=True)
     for key in args.keys or list(BENCH_SET.values()):
-        df = QUERIES[key](spark, BASE_SF)
+        df, jobs = build_jobs(spark, key, BASE_SF)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
         (out_dir / f"{key}_{args.tag}.txt").write_text(buf.getvalue())
-        print(audit_row(key, df, buf.getvalue()), flush=True)
+        print(audit_row(key, df, buf.getvalue(), jobs), flush=True)
 
 
 if __name__ == "__main__":
