@@ -9,8 +9,6 @@ discipline: every double aggregate is round(x, 4) on both engines
 
 from __future__ import annotations
 
-import uuid as _uuid
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1659,19 +1657,18 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized dim join. For unbounded groups the right form is
     the capped collect (agg_collect_sorted's slice) — the operator's
     documented misuse is listagg over raw fact rows."""
-    view = f"nr_listagg_{_uuid.uuid4().hex[:8]}"
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
-    n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).createOrReplaceTempView(view)
-    out = spark.sql(f"""
+    return spark.sql(
+        """
         SELECT r_name,
                LISTAGG(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations,
                CAST(COUNT(*) AS BIGINT) AS n_nations
-        FROM {view}
+        FROM {nr}
         GROUP BY r_name
-    """)
-    spark.catalog.dropTempView(view)
-    return out
+    """,
+        nr=n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.json_fast import with_json_field
 from ..registry import query
+from ..session import conf_override
 from ..tables import load, scratch_dir
 
 
@@ -241,20 +242,14 @@ def _run_worklist(spark, reg, pending, results, scratch) -> None:
     while pending:
         deferred = []
         for flow in pending:
-            overrides = dict(flow.spark_conf)
-            saved = {k: spark.conf.get(k, None) for k in overrides}
             try:
-                for k, v in overrides.items():
-                    spark.conf.set(k, v)
-                df = flow.func()
+                with conf_override(spark, flow.spark_conf):
+                    df = flow.func()
             except AnalysisException as exc:
                 if "TABLE_OR_VIEW_NOT_FOUND" in str(exc):
                     deferred.append(flow)  # upstream not materialized yet
                     continue
                 raise
-            finally:
-                for k, v in saved.items():
-                    spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
             out = reg.outputs[flow.target]
             if isinstance(out, TemporaryView):
                 df.createOrReplaceTempView(flow.target)

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from ..functions.exact import exact_unit_sum
 from ..functions.json_fast import with_json_field
 from ..registry import query, register_layout
+from ..session import conf_override
 from ..tables import Layout, load, read_parquet
 
 
@@ -65,20 +66,15 @@ def _write_events_us(spark: SparkSession, sf_dir: str, staged: str) -> None:
     TIMESTAMP_MICROS (what a Spark production writer emits — reading
     it costs no per-value NANOS→µs conversion), narrowed to the
     binning columns (ts, event_type, value)."""
-    prev = spark.conf.get("spark.sql.parquet.outputTimestampType", None)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
+    with conf_override(
+        spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+    ):
         (
             load(spark, sf_dir, "events")
             .select("ts", "event_type", "value")
             .write.mode("overwrite")
             .parquet(staged)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.parquet.outputTimestampType")
-        else:
-            spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
 
 
 # One-time production events layout for the time-binning family: pay

@@ -114,16 +114,22 @@ def _bmp_payload(d: DataFrame) -> DataFrame:
     return src.mapInPandas(encode, schema="doc_id long, payload binary")
 
 
-@query(
-    "mm_decode_stub",
-    oracle="""
+# The synthetic BMP's geometry per document, shared by the four image
+# oracles: width, height and the 4-byte-aligned row stride, all from
+# n_chars (the Spark side: _fake_payload's meta and _encode_bmp).
+_BMP_GEOMETRY_CTE = """
     WITH g AS (
       SELECT doc_id, text, n_chars AS L,
              (n_chars % 64) + 1 AS w,
              (n_chars % 48) + 1 AS h,
              ((3 * ((n_chars % 64) + 1) + 3) // 4) * 4 AS stride
       FROM documents
-    ), chars AS (
+    )"""
+
+
+@query(
+    "mm_decode_stub",
+    oracle=f"""{_BMP_GEOMETRY_CTE}, chars AS (
       SELECT doc_id, CAST(i - 1 AS BIGINT) AS p,
              ascii(substr(text, CAST(i AS INTEGER), 1)) AS b
       FROM (SELECT doc_id, text,
@@ -536,14 +542,7 @@ _THUMB = 8  # fixed 8x8 thumbnail
 
 @query(
     "mm_image_resize",
-    oracle=f"""
-    WITH g AS (
-      SELECT doc_id, text, n_chars AS L,
-             (n_chars % 64) + 1 AS w,
-             (n_chars % 48) + 1 AS h,
-             ((3 * ((n_chars % 64) + 1) + 3) // 4) * 4 AS stride
-      FROM documents
-    ), pos AS (
+    oracle=f"""{_BMP_GEOMETRY_CTE}, pos AS (
       SELECT g.doc_id, r.k AS r, c.k AS c,
              (((r.k * g.h) // {_THUMB}) * g.stride
               + ((c.k * g.w) // {_THUMB}) * 3) % g.L AS p
@@ -744,14 +743,7 @@ def mm_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_image_histogram",
-    oracle="""
-    WITH g AS (
-      SELECT doc_id, text, n_chars AS L,
-             (n_chars % 64) + 1 AS w,
-             (n_chars % 48) + 1 AS h,
-             ((3 * ((n_chars % 64) + 1) + 3) // 4) * 4 AS stride
-      FROM documents
-    ), px AS (
+    oracle=f"""{_BMP_GEOMETRY_CTE}, px AS (
       SELECT g.doc_id,
              ascii(substr(g.text,
                           CAST((r.k * g.stride + c.k) % g.L AS INTEGER) + 1,
@@ -1023,14 +1015,7 @@ def mm_audio_silence_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "mm_image_embed_sim",
-    oracle="""
-    WITH g AS (
-      SELECT doc_id, text, n_chars AS L,
-             (n_chars % 64) + 1 AS w,
-             (n_chars % 48) + 1 AS h,
-             ((3 * ((n_chars % 64) + 1) + 3) // 4) * 4 AS stride
-      FROM documents
-    ), px AS (
+    oracle=f"""{_BMP_GEOMETRY_CTE}, px AS (
       SELECT g.doc_id,
              CAST((8 * r.k) // g.h AS INTEGER) AS band,
              ascii(substr(g.text,

@@ -7,8 +7,10 @@ IDENTIFIER(), SQL functions, session variables, lateral column
 aliases and GROUP BY ALL. Each key pins the entry surface; the
 relational work behind it compiles to plan families already measured
 at ×100 (SCALE.md), so the scale posture is inherited from the plan,
-not the syntax. Temp views are uuid-scoped so concurrent and
-repeated runs never collide.
+not the syntax. Input tables reach the text as DataFrame keyword
+arguments (``spark.sql(text, orders=df)``): PySpark registers each
+under a generated view name for the analysis and drops it when the
+call returns, so no key leaves a view behind.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import conf_override
 from ..tables import load
 
 
@@ -59,19 +62,8 @@ def corr_decorrelated_sql_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     through r9): Catalyst decorrelates it into an aggregate + join —
     no per-row subquery execution in the plan. Kept as the test-pinned
     decorrelation demo after the r10 promotion of the window form to
-    the registered plan.
-
-    The temp view is uuid-scoped (like sql_tpch_q6) so a concurrent
-    session's view named 'orders' is never clobbered; spark.sql
-    resolves the view eagerly at analysis, so the immediate drop
-    keeps the returned DataFrame valid."""
-    import uuid as _uuid
-
-    v = f"orders_corr_{_uuid.uuid4().hex[:8]}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(v)
-    out = spark.sql(_CORR_SQL_T.format(orders=v))
-    spark.catalog.dropTempView(v)
-    return out
+    the registered plan."""
+    return spark.sql(_CORR_SQL_T, orders=load(spark, sf_dir, "orders"))
 
 
 @query(
@@ -93,15 +85,10 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns its LAST statement's DataFrame. The oracle folds the
     closed form as a constant — any drift in loop semantics
     (off-by-one, variable shadowing) flips the hash. The scripting
-    conf is runtime-settable; the uuid-scoped view keeps concurrent
-    sessions from clobbering each other (sql_tpch_q6 pattern)."""
-    import uuid as _uuid
-
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    v = f"orders_script_{_uuid.uuid4().hex[:8]}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(v)
-    out = spark.sql(
-        f"""
+    conf is runtime-settable and is set only while the script runs."""
+    with conf_override(spark, {"spark.sql.scripting.enabled": "true"}):
+        return spark.sql(
+            """
         BEGIN
           DECLARE i INT DEFAULT 1;
           DECLARE acc BIGINT DEFAULT 0;
@@ -112,12 +99,11 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT o_orderpriority,
                  CAST(COUNT(*) AS BIGINT) AS n_orders,
                  acc AS cube_sum
-          FROM {v} GROUP BY o_orderpriority;
+          FROM {orders} GROUP BY o_orderpriority;
         END
-        """
-    )
-    spark.catalog.dropTempView(v)
-    return out
+        """,
+            orders=load(spark, sf_dir, "orders"),
+        )
 
 
 def _corr_max_window_form(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,19 +144,12 @@ def sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break). Catalyst decorrelates the ORDER BY + LIMIT lateral
     subquery (DecorrelateInnerQuery) into a partitioned rank — the
     same single-shuffle window shape as win_topk_per_group, with no
-    per-outer-row re-execution; identical SQL runs on both engines.
-    Views are uuid-scoped to avoid clobbering same-named views in a
-    shared session (see sql_correlated_subquery)."""
-    import uuid as _uuid
-
-    tag = _uuid.uuid4().hex[:8]
-    vn, vc = f"nation_lat_{tag}", f"customer_lat_{tag}"
-    load(spark, sf_dir, "nation").createOrReplaceTempView(vn)
-    load(spark, sf_dir, "customer").createOrReplaceTempView(vc)
-    out = spark.sql(_LATERAL_SQL_T.format(nation=vn, customer=vc))
-    spark.catalog.dropTempView(vn)
-    spark.catalog.dropTempView(vc)
-    return out
+    per-outer-row re-execution; identical SQL runs on both engines."""
+    return spark.sql(
+        _LATERAL_SQL_T,
+        nation=load(spark, sf_dir, "nation"),
+        customer=load(spark, sf_dir, "customer"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -221,24 +200,24 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf; on gappy data the recursive side would silently drop
     orphaned subtrees and the check would (correctly) go red."""
     ev = load(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("ev_rcte")
-    ev.select("user_id").distinct().createOrReplaceTempView("users_rcte")
     return spark.sql(
         """
         WITH RECURSIVE d(user_id, depth) AS (
           SELECT CAST(0 AS BIGINT), 0
           UNION ALL
           SELECT u.user_id, d.depth + 1
-          FROM users_rcte u JOIN d ON u.user_id DIV 2 = d.user_id
+          FROM {users} u JOIN d ON u.user_id DIV 2 = d.user_id
           WHERE u.user_id > 0
         )
         SELECT d.depth,
                COUNT(DISTINCT e.user_id) AS n_users,
                COUNT(*) AS n_events,
                ROUND(SUM(e.value), 4) AS sum_value
-        FROM ev_rcte e JOIN d ON e.user_id = d.user_id
+        FROM {ev} e JOIN d ON e.user_id = d.user_id
         GROUP BY d.depth
-        """
+        """,
+        ev=ev,
+        users=ev.select("user_id").distinct(),
     )
 
 
@@ -269,13 +248,10 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame form is pinned in tests), so this key certifies the
     entry surface: stage ordering, `AGGREGATE … GROUP BY` aliasing,
     and that computed aggregate aliases survive to the result schema.
-    View name is uuid-scoped so concurrent runs never collide
-    (sql_tpch_q6 pattern); ROUND(…, 4) for FP-sum parity with the
-    DuckDB oracle as in Q1."""
-    view = f"lineitem_pipe_{_uuid.uuid4().hex[:8]}"
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
-    out = spark.sql(f"""
-        FROM {view}
+    ROUND(…, 4) for FP-sum parity with the DuckDB oracle as in Q1."""
+    return spark.sql(
+        """
+        FROM {lineitem}
         |> WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |> AGGREGATE ROUND(SUM(l_quantity), 4) AS sum_qty,
                      ROUND(SUM(l_extendedprice * (1 - l_discount)), 4)
@@ -284,9 +260,9 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
            GROUP BY l_returnflag, l_linestatus
         |> SELECT l_returnflag, l_linestatus, sum_qty, sum_disc_price,
                   n_items
-    """)
-    spark.catalog.dropTempView(view)
-    return out
+    """,
+        lineitem=load(spark, sf_dir, "lineitem"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -412,27 +388,29 @@ def sql_create_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression; a drift in inlining semantics (argument substitution,
     null handling) flips the hash.
 
-    Function name is uuid-scoped (temporary functions are
-    session-global — the sql_tpch_q6 concurrency discipline applies
-    to the function catalog too). Scale posture: identical to
+    The function name is uuid-scoped, so a concurrent run never
+    redefines it, and it is dropped once the query is analyzed (the
+    body is already inlined). Scale posture: identical to
     agg_groupby_q1's scan+hash-agg family, by construction."""
-    tag = _uuid.uuid4().hex[:8]
-    fname, view = f"disc_price_{tag}", f"li_fn_{tag}"
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
+    fname = f"disc_price_{_uuid.uuid4().hex[:8]}"
     spark.sql(
         f"CREATE OR REPLACE TEMPORARY FUNCTION {fname}(p DOUBLE, d DOUBLE) "
         f"RETURNS DOUBLE RETURN p * (1.0 - d)"
     )
-    out = spark.sql(f"""
-        SELECT l_returnflag,
-               ROUND(SUM({fname}(l_extendedprice, l_discount)), 4)
-                 AS disc_total,
-               CAST(COUNT(*) AS BIGINT) AS n_items
-        FROM {view}
-        GROUP BY l_returnflag
-    """)
-    spark.catalog.dropTempView(view)
-    return out
+    try:
+        return spark.sql(
+            f"""
+            SELECT l_returnflag,
+                   ROUND(SUM({fname}(l_extendedprice, l_discount)), 4)
+                     AS disc_total,
+                   CAST(COUNT(*) AS BIGINT) AS n_items
+            FROM {{lineitem}}
+            GROUP BY l_returnflag
+        """,
+            lineitem=load(spark, sf_dir, "lineitem"),
+        )
+    finally:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {fname}")
 
 
 # ---------------------------------------------------------------------------
@@ -462,26 +440,29 @@ def sql_session_variable(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql_scripting's intra-script variables and sql_exec_immediate's
     per-call parameters. The oracle folds the same bound as a CTE.
 
-    Variable and view names are uuid-scoped (variables are
-    session-global) and the variable is DROPped on exit. Scale
-    posture: two plans from the scan+agg family; the variable is
-    driver-side state, zero executor cost."""
-    tag = _uuid.uuid4().hex[:8]
-    vname, view = f"qty_cut_{tag}", f"li_var_{tag}"
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
+    The variable name is uuid-scoped (variables are session-global)
+    and the variable is DROPped on exit. Scale posture: two plans from
+    the scan+agg family; the variable is driver-side state, zero
+    executor cost."""
+    vname = f"qty_cut_{_uuid.uuid4().hex[:8]}"
+    li = load(spark, sf_dir, "lineitem")
     spark.sql(f"DECLARE OR REPLACE VARIABLE {vname} DOUBLE DEFAULT 0.0")
     try:
         spark.sql(
-            f"SET VAR {vname} = (SELECT FLOOR(AVG(l_quantity)) FROM {view})"
+            f"SET VAR {vname} = (SELECT FLOOR(AVG(l_quantity)) FROM {{li}})",
+            li=li,
         )
-        out = spark.sql(f"""
+        out = spark.sql(
+            f"""
             SELECT l_linestatus,
                    CAST(COUNT(*) AS BIGINT) AS n_above,
                    ROUND(SUM(l_extendedprice), 4) AS price_above
-            FROM {view}
+            FROM {{li}}
             WHERE l_quantity > {vname}
             GROUP BY l_linestatus
-        """)
+        """,
+            li=li,
+        )
         # materialization must happen while the variable exists? No —
         # the bound is substituted at ANALYSIS time into the plan; the
         # DROP below cannot un-resolve an analyzed DataFrame. Pinned in
@@ -489,7 +470,6 @@ def sql_session_variable(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out
     finally:
         spark.sql(f"DROP TEMPORARY VARIABLE IF EXISTS {vname}")
-        spark.catalog.dropTempView(view)
 
 
 # ---------------------------------------------------------------------------
@@ -526,9 +506,8 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: the same expression TREE evaluates on both engines
     (the oracle writes the identical chain), sums round at 4. Plan:
     one scan + one hash agg — agg_groupby_q1's family."""
-    view = f"li_lca_{_uuid.uuid4().hex[:8]}"
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
-    out = spark.sql(f"""
+    return spark.sql(
+        """
         SELECT l_returnflag,
                ROUND(SUM(net), 4) AS net_total,
                ROUND(SUM(gross), 4) AS gross_total,
@@ -537,12 +516,12 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT l_returnflag,
                  l_extendedprice * (1 - l_discount) AS net,
                  net * (1 + l_tax) AS gross
-          FROM {view}
+          FROM {lineitem}
         )
         GROUP BY l_returnflag
-    """)
-    spark.catalog.dropTempView(view)
-    return out
+    """,
+        lineitem=load(spark, sf_dir, "lineitem"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -573,13 +552,8 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     well above the hash compare's exactness (the agg_grouping_flags
     rationale; r10 second-review finding #2). Plan: the same
     single-exchange partial+final hash aggregate as agg_groupby_q1 —
-    pure analyzer surface, measured plan family. Views are
-    uuid-scoped (sql_tpch_q6 pattern)."""
-    v = f"orders_gba_{_uuid.uuid4().hex[:8]}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(v)
-    out = spark.sql(_GBA_SQL_T.format(orders=v))
-    spark.catalog.dropTempView(v)
-    return out
+    pure analyzer surface, measured plan family."""
+    return spark.sql(_GBA_SQL_T, orders=load(spark, sf_dir, "orders"))
 
 
 @query(
@@ -595,20 +569,18 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 THROUGH THE SQL ENTRY POINT: temp view + spark.sql
-    text — demonstrating that the engine's second API surface (SQL)
-    compiles to the identical Catalyst plan as the DataFrame calls
-    (same pushdown, same codegen). View name is uuid-scoped so
-    concurrent/repeated runs never collide."""
-    import uuid as _uuid
-
-    view = f"lineitem_{_uuid.uuid4().hex[:8]}"
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView(view)
-    return spark.sql(f"""
+    """TPC-H Q6 THROUGH THE SQL ENTRY POINT: spark.sql text over the
+    lineitem DataFrame — demonstrating that the engine's second API
+    surface (SQL) compiles to the identical Catalyst plan as the
+    DataFrame calls (same pushdown, same codegen)."""
+    return spark.sql(
+        """
         SELECT ROUND(SUM(l_extendedprice * l_discount), 4) AS revenue,
                CAST(COUNT(*) AS BIGINT) AS n_items
-        FROM {view}
+        FROM {lineitem}
         WHERE l_shipdate >= '1996-01-01' AND l_shipdate < '1997-01-01'
           AND l_discount BETWEEN 0.05 AND 0.07
           AND l_quantity < 24
-    """)
+    """,
+        lineitem=load(spark, sf_dir, "lineitem"),
+    )

@@ -214,24 +214,21 @@ def udtf_python_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform is the JVM posexplode(split(...)) one key above; the
     key pins the @udtf contract (registration, lateral application,
     per-row generator semantics, empty-token parity with the
-    oracle). The uuid-scoped function name and temp view keep
-    re-runs and concurrent sessions from clobbering each other."""
+    oracle). The function name is uuid-scoped, so re-runs and
+    concurrent sessions never clobber each other, and the function is
+    dropped once the query is analyzed."""
     if not _HAVE_PY_UDTF:  # pragma: no cover
         raise NotImplementedError("@udtf requires pyspark >= 3.5")
-    import uuid as _uuid
-
-    tag = _uuid.uuid4().hex[:8]
-    fname, vname = f"tokenize_{tag}", f"docs_{tag}"
+    fname = f"tokenize_{_uuid.uuid4().hex[:8]}"
     spark.udtf.register(fname, _TokenizeUDTF)
-    load(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 20
-    ).createOrReplaceTempView(vname)
-    out = spark.sql(
-        f"SELECT d.doc_id, t.pos, t.token "
-        f"FROM {vname} d, LATERAL {fname}(d.text) t"
-    )
-    spark.catalog.dropTempView(vname)
-    return out
+    try:
+        return spark.sql(
+            f"SELECT d.doc_id, t.pos, t.token "
+            f"FROM {{docs}} d, LATERAL {fname}(d.text) t",
+            docs=load(spark, sf_dir, "documents").where(F.col("doc_id") < 20),
+        )
+    finally:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {fname}")
 
 
 # ---------------------------------------------------------------------------
@@ -357,25 +354,28 @@ def udtf_arrow_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURFACE; the production twin of this exact transform is
     explode(split(p_name, ' ')) (pure JVM, same two-exchange
     top-k plan). Ordered (n DESC, token) with LIMIT 20 keeps the
-    result deterministic under ties; uuid-scoped function and view
-    names keep re-runs from colliding."""
+    result deterministic under ties; the uuid-scoped function name
+    keeps re-runs from colliding, and the function is dropped once
+    the query is analyzed."""
     if not _HAVE_ARROW_UDTF:  # pragma: no cover
         raise NotImplementedError(
             "@udtf(useArrow=True) requires pyspark >= 4.0"
         )
-    tag = _uuid.uuid4().hex[:8]
-    fname, vname = f"part_tokens_{tag}", f"part_{tag}"
+    fname = f"part_tokens_{_uuid.uuid4().hex[:8]}"
     spark.udtf.register(fname, _PartTokenUDTF)
-    load(spark, sf_dir, "part").select("p_name").createOrReplaceTempView(vname)
-    out = spark.sql(f"""
-        SELECT t.token, CAST(COUNT(*) AS BIGINT) AS n
-        FROM {vname} p, LATERAL {fname}(p.p_name) t
-        GROUP BY t.token
-        ORDER BY n DESC, token
-        LIMIT 20
-    """)
-    spark.catalog.dropTempView(vname)
-    return out
+    try:
+        return spark.sql(
+            f"""
+            SELECT t.token, CAST(COUNT(*) AS BIGINT) AS n
+            FROM {{part}} p, LATERAL {fname}(p.p_name) t
+            GROUP BY t.token
+            ORDER BY n DESC, token
+            LIMIT 20
+        """,
+            part=load(spark, sf_dir, "part").select("p_name"),
+        )
+    finally:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {fname}")
 
 
 # ---------------------------------------------------------------------------
@@ -446,16 +446,16 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests."""
     if not _HAVE_ARROW_UDTF:  # pragma: no cover
         raise NotImplementedError("TABLE-argument @udtf requires pyspark >= 3.5")
-    tag = _uuid.uuid4().hex[:8]
-    fname, vname = f"lang_run_stats_{tag}", f"docs_ptf_{tag}"
+    fname = f"lang_run_stats_{_uuid.uuid4().hex[:8]}"
     spark.udtf.register(fname, _LangRunStatsUDTF)
-    load(spark, sf_dir, "documents").select(
-        "lang", "doc_id", "n_chars"
-    ).createOrReplaceTempView(vname)
-    out = spark.sql(f"""
-        SELECT * FROM {fname}(
-          TABLE({vname}) PARTITION BY lang ORDER BY doc_id
+    try:
+        return spark.sql(
+            f"""
+            SELECT * FROM {fname}(
+              TABLE({{docs}}) PARTITION BY lang ORDER BY doc_id
+            )
+        """,
+            docs=load(spark, sf_dir, "documents").select("lang", "doc_id", "n_chars"),
         )
-    """)
-    spark.catalog.dropTempView(vname)
-    return out
+    finally:
+        spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {fname}")

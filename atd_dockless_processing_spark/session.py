@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 import shutil
 import zipfile
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -108,3 +109,22 @@ def tune(spark: SparkSession) -> SparkSession:
     _ship_package(spark)
     env["__atd_tuned__"] = "1"
     return spark
+
+
+@contextmanager
+def conf_override(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the block, then put every key
+    back as it was: a key that was set gets its old value again, a key
+    that was unset is unset again — also when the block raises. The one
+    body for every key that borrows the shared session's confs."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 
 from ..operators.aggregates import _hll_estimate, _hll_oracle, _hll_registers
 from ..registry import query
+from ..session import conf_override
 from ..sources.sinks import _CDC_ORACLE, _cdc_log_parts
 from ..tables import (
     events_ts_to_timestamp,
@@ -47,71 +48,63 @@ from ..tables import (
 # encoding flipped.
 
 
-class _stream_partitions:
-    """Run a streaming query with few state partitions at test scale.
-
-    A stateful micro-batch pays a fixed per-partition cost (state
-    store open/commit + task launch) every batch; with the session's
-    batch setting of 32 that fixed cost dominates sub-second streams
-    at sf<=0.1. The state-partition count is baked into each query's
-    NEW checkpoint at first batch, so narrowing it here only affects
-    these self-contained drains. At 100 TB you'd raise it (state
-    partitioning, like shuffle partitioning, scales with executors) —
-    this is a test-latency knob, not a semantics change: windowed/
-    dedup results are partitioning-invariant.
-    """
-
-    N = "8"
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.N)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+# A stateful micro-batch pays a fixed per-partition cost (state store
+# open/commit + task launch) every batch; with the session's batch
+# setting of 32 that fixed cost dominates sub-second streams at
+# sf<=0.1. The state-partition count is baked into each query's NEW
+# checkpoint at first batch, so narrowing it for a drain only affects
+# that self-contained drain. At 100 TB you'd raise it (state
+# partitioning, like shuffle partitioning, scales with executors) —
+# this is a test-latency knob, not a semantics change: windowed/dedup
+# results are partitioning-invariant.
+_STREAM_PARTITIONS = {"spark.sql.shuffle.partitions": "8"}
+_ROCKSDB = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+}
 
 
-def _run_to_memory(sdf, name: str, output_mode: str) -> None:
-    with _stream_partitions(sdf.sparkSession):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+def _run_to_memory(
+    sdf: DataFrame, prefix: str, mode: str, checkpoint: str | None = None
+) -> DataFrame:
+    """Drain ``sdf`` under availableNow into a memory sink named
+    ``{prefix}_<uuid>`` (so reruns never collide), with the
+    ``_STREAM_PARTITIONS`` override, and return the sink's table."""
+    spark = sdf.sparkSession
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    writer = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+    )
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    with conf_override(spark, _STREAM_PARTITIONS):
+        writer.start().awaitTermination()
+    return spark.table(name)
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table. The file source needs
     a directory, so the single parquet file is staged (hard-linked or
-    copied) into a scratch dir once per scale factor."""
+    copied) into a scratch dir, and re-staged when the source changes."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = scratch_dir("stream_events", sf_dir.strip("/").replace("/", "_"))
-    os.makedirs(stage, exist_ok=True)
-    dst = os.path.join(stage, "events.parquet")
     src = f"{sf_dir}/events.parquet"
-    # re-stage when the source file changed underneath the scratch
-    # copy (testdata regeneration) — a stale staged file silently
-    # serves old data/encoding otherwise
-    s = os.stat(src)
-    if os.path.exists(dst):
-        d = os.stat(dst)
-        fresh = d.st_ino == s.st_ino or (d.st_size, d.st_mtime) == (s.st_size, s.st_mtime)
-        if not fresh:
-            os.remove(dst)
-    if not os.path.exists(dst):
+
+    def build(indir: str) -> None:
+        os.makedirs(indir)
+        dst = os.path.join(indir, "events.parquet")
         try:
             os.link(src, dst)
         except OSError:
             shutil.copyfile(src, dst)
             shutil.copystat(src, dst)
-    raw = spark.readStream.schema(parquet_schema(spark, dst)).parquet(stage)
-    return events_ts_to_timestamp(raw)
+
+    stage = stage_scratch("stream_events", sf_dir, "events", build)
+    schema = parquet_schema(spark, os.path.join(stage, "events.parquet"))
+    return events_ts_to_timestamp(spark.readStream.schema(schema).parquet(stage))
 
 
 @query(
@@ -130,7 +123,6 @@ def stm_tumbling_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
     window agg -> memory sink, availableNow. Same result as the batch
     query — micro-batch is just incremental planning over the same
     logical plan ([P high]: scheduled pulls -> micro-batch)."""
-    name = f"stm_tumbling_{uuid.uuid4().hex[:8]}"
     agg = (
         _stream_events(spark, sf_dir)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -140,8 +132,7 @@ def stm_tumbling_availablenow(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("hour_start"), "event_type", "n_events", "sum_value")
     )
-    _run_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return _run_to_memory(agg, "stm_tumbling", "complete")
 
 
 @query(
@@ -157,7 +148,6 @@ def stm_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     then count per type. Idempotent re-ingest semantics ([P high]:
     overlapping provider re-pulls). The watermark bounds dedup state
     at 100 TB — old keys are evicted after the lateness horizon."""
-    name = f"stm_dedup_{uuid.uuid4().hex[:8]}"
     deduped = (
         _stream_events(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -165,8 +155,7 @@ def stm_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
-    _run_to_memory(deduped, name, "complete")
-    return spark.table(name)
+    return _run_to_memory(deduped, "stm_dedup", "complete")
 
 
 @query(
@@ -231,22 +220,10 @@ def stm_rate_source_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "sum_value",
                 )
             )
-            name = f"stm_rate_{uuid.uuid4().hex[:8]}"
-            with _stream_partitions(spark):
-                q = (
-                    agg.writeStream.format("memory")
-                    .queryName(name)
-                    .outputMode("complete")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+            sink = _run_to_memory(agg, "stm_rate", "complete", ckpt)
         # decouple the returned frame from the about-to-be-removed
         # checkpoint (memory-sink rows live on the driver already)
-        return spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
+        return spark.createDataFrame(sink.collect(), sink.schema)
     finally:
         shutil.rmtree(os.path.dirname(ckpt), ignore_errors=True)
 
@@ -290,16 +267,7 @@ def stm_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg = src.groupBy(
                 F.window("timestamp", "1 minute").alias("w")
             ).agg(F.count(F.lit(1)).alias("n_rows"))
-            with _stream_partitions(spark):
-                q = (
-                    agg.writeStream.format("memory")
-                    .queryName(f"stm_ssr_{uuid.uuid4().hex[:8]}")
-                    .outputMode("complete")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+            _run_to_memory(agg, "stm_ssr", "complete", ckpt)
         state = (
             spark.read.format("statestore")
             .load(ckpt)
@@ -352,7 +320,6 @@ def stm_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     indir = stage_scratch("stm_late_data", sf_dir, "events", build)
     base = os.path.dirname(indir)
 
-    name = f"stm_late_{uuid.uuid4().hex[:8]}"
     ts_schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -376,21 +343,12 @@ def stm_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("hour_start"), "n_events")
     )
     ckpt = f"{base}/ckpt_{uuid.uuid4().hex[:8]}"
-    with _stream_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _run_to_memory(agg, "stm_late", "append", ckpt)
     # fresh checkpoints are required per run (file-source offsets live
     # there; reusing one would skip all input) — so drop it after the
     # drain instead of leaking one dir per invocation
     shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return sink
 
 
 # NB: the oracle's "> 1800" gap rule must stay in lockstep with Spark's
@@ -438,7 +396,6 @@ def stm_stateful_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    name = f"stm_sess_{uuid.uuid4().hex[:8]}"
     ev = _stream_events(spark, sf_dir).select("user_id", "ts", "event_id")
 
     def sessionize(key, pdfs, state: GroupState):
@@ -475,8 +432,7 @@ def stm_stateful_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    _run_to_memory(out, name, "update")
-    return spark.table(name)
+    return _run_to_memory(out, "stm_sess", "update")
 
 
 @query(
@@ -499,7 +455,6 @@ def stm_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     order can flip the 4th decimal), so the value is cast to
     DECIMAL(18,4) inside SUM on BOTH sides — exact, order-free
     addition, same pattern as snk_parquet/src_schema_merge."""
-    name = f"stm_running_{uuid.uuid4().hex[:8]}"
     agg = (
         _stream_events(spark, sf_dir)
         .groupBy("event_type")
@@ -508,8 +463,7 @@ def stm_stateful_running(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4).alias("sum_value"),
         )
     )
-    _run_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return _run_to_memory(agg, "stm_running", "complete")
 
 
 @query(
@@ -530,7 +484,6 @@ def stm_join_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept for the static side, and at 100 TB the dim side is a
     broadcast per micro-batch or a Delta/lake table picked up fresh
     on every trigger)."""
-    name = f"stm_enrich_{uuid.uuid4().hex[:8]}"
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     enriched = (
         _stream_events(spark, sf_dir)
@@ -541,8 +494,7 @@ def stm_join_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4).alias("sum_value"),
         )
     )
-    _run_to_memory(enriched, name, "complete")
-    return spark.table(name)
+    return _run_to_memory(enriched, "stm_enrich", "complete")
 
 
 @query(
@@ -614,7 +566,6 @@ def stm_sliding_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     follows the lateness bound, not the stream length. Complete mode
     + one input snapshot keeps the result equal to the batch twin
     (hash-checkable)."""
-    name = f"stm_sliding_{uuid.uuid4().hex[:8]}"
     agg = (
         _stream_events(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -630,8 +581,7 @@ def stm_sliding_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    _run_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return _run_to_memory(agg, "stm_sliding", "complete")
 
 
 # NB: the oracle's "> 1800" gap rule must stay in lockstep with Spark's
@@ -680,7 +630,6 @@ def stm_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     is omitted because complete-mode merge timing makes end = max ts
     + gap the only engine-defined column — start/count/sum are
     engine-invariant."""
-    name = f"stm_sesswin_{uuid.uuid4().hex[:8]}"
     agg = (
         _stream_events(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -696,8 +645,7 @@ def stm_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    _run_to_memory(agg, name, "complete")
-    return spark.table(name)
+    return _run_to_memory(agg, "stm_sesswin", "complete")
 
 
 @query(
@@ -735,7 +683,6 @@ def stm_join_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the same interval join + aggregate in plain SQL —
     micro-batch join vs batch join must agree exactly (inner join
     output is arrival-order-independent)."""
-    name = f"stm_ssj_{uuid.uuid4().hex[:8]}"
     clicks = (
         _stream_events(spark, sf_dir)
         .where(F.col("event_type") == "click")
@@ -755,10 +702,9 @@ def stm_join_stream_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
         "inner",
     ).select("p_ts", "c_val")
-    _run_to_memory(joined, name, "append")
+    sink = _run_to_memory(joined, "stm_ssj", "append")
     return (
-        spark.table(name)
-        .groupBy(F.to_date("p_ts").alias("day"))
+        sink.groupBy(F.to_date("p_ts").alias("day"))
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
             F.round(F.sum(F.col("c_val").cast("decimal(18,4)")).cast("double"), 4).alias("sum_click_value"),
@@ -831,9 +777,9 @@ def stm_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
     )
-    name = f"stm_hll_{uuid.uuid4().hex[:8]}"
-    _run_to_memory(_hll_registers(raw, "user_id"), name, "complete")
-    return _hll_estimate(spark.table(name))
+    return _hll_estimate(
+        _run_to_memory(_hll_registers(raw, "user_id"), "stm_hll", "complete")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -945,12 +891,10 @@ def stm_join_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts")),
         "left_outer",
     ).select("p_user", "p_ts", "c_val")
-    name = f"stm_lsj_{uuid.uuid4().hex[:8]}"
-    _run_to_memory(joined, name, "append")
+    sink = _run_to_memory(joined, "stm_lsj", "append")
     dec = "decimal(18,4)"
     return (
-        spark.table(name)
-        .where(F.col("p_user") != -1)
+        sink.where(F.col("p_user") != -1)
         .groupBy(F.to_date("p_ts").alias("day"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -1087,45 +1031,18 @@ def _tws_runtime_env(spark: SparkSession) -> None:
             env["PYTHONPATH"] = zip_path + (":" + cur if cur else "")
 
 
-class _rocksdb_provider:
-    """Context manager: RocksDB state-store provider for the block;
-    the prior conf value (or unset state) is restored on exit — one
-    definition of the save/set/restore ritual for every stateful key
-    (r9 review finding #7)."""
-
-    _KEY = "spark.sql.streaming.stateStore.providerClass"
-
-    def __init__(self, spark: SparkSession) -> None:
-        self._spark = spark
-
-    def __enter__(self) -> "_rocksdb_provider":
-        self._prev = self._spark.conf.get(self._KEY, None)
-        self._spark.conf.set(
-            self._KEY,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        return self
-
-    def __exit__(self, *exc) -> bool:
-        if self._prev is None:
-            self._spark.conf.unset(self._KEY)
-        else:
-            self._spark.conf.set(self._KEY, self._prev)
-        return False
-
-
 def _drain_to_target(
     spark: SparkSession, q, name: str, target: int, timeout_s: float = 120.0
 ) -> None:
     """Bounded memory-sink drain for streams availableNow cannot
-    terminate (the ProcessingTime+TTL maintenance-batch spin —
-    see stm_tws_value_ttl): poll until ``target`` rows landed,
-    re-raise the query's own exception immediately (the
-    stm_python_stream_source discipline), stop the query on exit."""
+    terminate — the ProcessingTime+TTL maintenance-batch spin
+    (stm_tws_value_ttl) and the Python stream source, which has no
+    availableNow (stm_python_stream_source): poll until ``target``
+    rows landed, re-raise the query's own exception immediately (a
+    dead query never fills the sink), stop the query on exit."""
     import time as _time
 
-    deadline = _time.time() + timeout_s
+    deadline = _time.monotonic() + timeout_s
     try:
         while spark.table(name).count() < target:
             if q.exception() is not None:
@@ -1148,12 +1065,12 @@ def _drain_to_target(
                 raise RuntimeError(
                     f"drain: stream terminated with {final} of {target} rows"
                 )
-            if _time.time() > deadline:
+            if _time.monotonic() > deadline:
                 raise TimeoutError(
                     f"drain: {spark.table(name).count()} of {target} "
                     f"rows after {timeout_s:.0f} s"
                 )
-            _time.sleep(0.5)
+            _time.sleep(0.2)
     finally:
         q.stop()
 
@@ -1238,19 +1155,17 @@ def stm_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
     )
-    name = f"stm_tws_{uuid.uuid4().hex[:8]}"
-    with _rocksdb_provider(spark):
+    with conf_override(spark, _ROCKSDB):
         out = raw.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=RunningTotals(),
             outputStructType="user_id long, n_events long, sum_value double",
             outputMode="Update",
             timeMode="None",
         )
-        _run_to_memory(out, name, "update")
+        sink = _run_to_memory(out, "stm_tws", "update")
     final = F.max(F.struct("n_events", "sum_value")).alias("m")
     return (
-        spark.table(name)
-        .groupBy("user_id")
+        sink.groupBy("user_id")
         .agg(final)
         .select(
             "user_id",
@@ -1328,18 +1243,16 @@ def stm_tws_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
     )
-    name = f"stm_twsm_{uuid.uuid4().hex[:8]}"
-    with _rocksdb_provider(spark):
+    with conf_override(spark, _ROCKSDB):
         out = raw.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=TypeCounts(),
             outputStructType="user_id long, event_type string, n_events long",
             outputMode="Update",
             timeMode="None",
         )
-        _run_to_memory(out, name, "update")
+        sink = _run_to_memory(out, "stm_twsm", "update")
     return (
-        spark.table(name)
-        .groupBy("user_id", "event_type")
+        sink.groupBy("user_id", "event_type")
         .agg(F.max("n_events").alias("n_events"))
     )
 
@@ -1417,16 +1330,14 @@ def stm_tws_list_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
     )
-    name = f"stm_twsl_{uuid.uuid4().hex[:8]}"
-    with _rocksdb_provider(spark):
+    with conf_override(spark, _ROCKSDB):
         out = raw.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=TopKIds(),
             outputStructType="user_id long, seen_total long, event_id long",
             outputMode="Update",
             timeMode="None",
         )
-        _run_to_memory(out, name, "update")
-    t = spark.table(name)
+        t = _run_to_memory(out, "stm_twsl", "update")
     w = Window.partitionBy("user_id")
     return (
         t.withColumn("max_seen", F.max("seen_total").over(w))
@@ -1500,18 +1411,17 @@ def stm_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(indir)
         .withWatermark("ts", "1 hour")
     )
-    name = f"stm_twst_{uuid.uuid4().hex[:8]}"
-    with _rocksdb_provider(spark):
+    with conf_override(spark, _ROCKSDB):
         out = raw.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=FirstSightTimer(),
             outputStructType="user_id long, fired_at_ms long",
             outputMode="Update",
             timeMode="EventTime",
         )
-        _run_to_memory(out, name, "update")
+        sink = _run_to_memory(out, "stm_twst", "update")
     # exactly-once is part of the contract: a duplicate fire would
     # double a row and flip the hash via the distinct here being absent
-    return spark.table(name).select("user_id", "fired_at_ms")
+    return sink.select("user_id", "fired_at_ms")
 
 
 @query(
@@ -1569,30 +1479,17 @@ def stm_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sum_value"),
     )
     confs = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        ),
+        **_ROCKSDB,
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    name = f"stm_rkcl_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(
         scratch_dir("stm_rkcl_ckpt"), f"run_{uuid.uuid4().hex[:8]}"
     )
     try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        with _stream_partitions(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        batches = int(q.lastProgress["batchId"]) + 1 if q.lastProgress else 0
+        with conf_override(spark, confs):
+            sink = _run_to_memory(agg, "stm_rkcl", "complete", ckpt)
+        # one file per committed micro-batch (plus its .crc twin)
+        batches = sum(p.name.isdigit() for p in _Path(ckpt, "commits").iterdir())
         if batches < 2:
             raise RuntimeError(
                 f"changelog demo needs >=2 micro-batches, got {batches} "
@@ -1608,10 +1505,8 @@ def stm_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"state dir layout: {layout}"
             )
     finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v) if v is not None else spark.conf.unset(k)
         _shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return sink
 
 
 # ---------------------------------------------------------------------------
@@ -1774,7 +1669,7 @@ def stm_tws_value_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
         for f in ("f0", "f1")
     )
-    with _rocksdb_provider(spark):
+    with conf_override(spark, _ROCKSDB):
         out = raw.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=TtlTotals(1),
             outputStructType=(
@@ -1784,7 +1679,7 @@ def stm_tws_value_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="ProcessingTime",
         )
-        with _stream_partitions(spark):
+        with conf_override(spark, _STREAM_PARTITIONS):
             q = (
                 out.writeStream.format("memory")
                 .queryName(name)
@@ -1835,7 +1730,6 @@ def stm_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     behavioral DIFFERENCE vs plain dropDuplicates (replayed record
     with a shifted timestamp IS dropped here, kept there) is pinned
     in tests with a crafted 2-batch replay."""
-    name = f"stm_ddww_{uuid.uuid4().hex[:8]}"
     deduped = (
         _stream_events(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -1843,8 +1737,7 @@ def stm_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
-    _run_to_memory(deduped, name, "complete")
-    return spark.table(name)
+    return _run_to_memory(deduped, "stm_ddww", "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -2049,9 +1942,6 @@ def stm_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: SURFACE demo of the streaming V2 contract
     (driver-side prefetch + offset log); production volume streams
     stay on the JVM file/rate/kafka sources (stm_* family)."""
-    import time
-    import uuid as _uuid
-
     if not _HAVE_PY_STREAM_SOURCE:  # pragma: no cover
         raise NotImplementedError(
             "Python streaming DataSource API requires pyspark >= 4.0"
@@ -2080,7 +1970,7 @@ def stm_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         import warnings
 
         warnings.warn(f"python stream source registration: {exc!r}")
-    name = f"stm_pyss_{_uuid.uuid4().hex[:8]}"
+    name = f"stm_pyss_{uuid.uuid4().hex[:8]}"
     q = (
         spark.readStream.format("synthetic_counter_stream")
         .load()
@@ -2090,25 +1980,7 @@ def stm_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="0 seconds")
         .start()
     )
-    want = _CS_BATCHES * _CS_PER
-    deadline = time.monotonic() + 120
-    try:
-        while spark.table(name).count() < want:
-            # a dead query never fills the sink: surface its real
-            # failure NOW instead of burning the deadline into a
-            # misleading TimeoutError (r8 ADVICE #3)
-            err = q.exception()
-            if err is not None:
-                raise err
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"python stream drain incomplete: "
-                    f"{spark.table(name).count()}/{want} rows"
-                )
-            time.sleep(0.2)
-    finally:
-        q.stop()
-        q.awaitTermination()
+    _drain_to_target(spark, q, name, _CS_BATCHES * _CS_PER)
     return (
         spark.table(name)
         .groupBy("b")

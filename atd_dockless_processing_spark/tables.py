@@ -459,9 +459,7 @@ def stage_scratch(name: str, sf_dir: str, src_table: str, build_fn) -> str:
     so staging degrades to rebuild-per-call instead of raising or
     serving stale rows). Keeping ONE copy of the stat/marker/clear/
     build sequence means a staleness-rule fix lands everywhere at
-    once instead of drifting per operator. (The streaming stager
-    ``_stream_events`` keeps its own inode-based freshness check: it
-    hard-links the source rather than deriving from it.)
+    once instead of drifting per operator.
     """
     import shutil
 

@@ -3547,11 +3547,12 @@ def test_tws_ttl_expiry_vs_survival_control(spark, sf_dir):
     )
 
     from atd_dockless_processing_spark import QUERIES
+    from atd_dockless_processing_spark.session import conf_override
     from atd_dockless_processing_spark.streaming.stream_queries import (
+        _ROCKSDB,
+        _STREAM_PARTITIONS,
         _drain_to_target,
-        _rocksdb_provider,
         _stage_events_parity_files,
-        _stream_partitions,
         _tws_runtime_env,
     )
     from atd_dockless_processing_spark.tables import load
@@ -3604,7 +3605,7 @@ def test_tws_ttl_expiry_vs_survival_control(spark, sf_dir):
         .count()
     )
     name = "tws_ttl_ctrl"
-    with _rocksdb_provider(spark):
+    with conf_override(spark, _ROCKSDB):
         raw = (
             spark.readStream.schema("user_id long, value double")
             .option("maxFilesPerTrigger", 1)
@@ -3616,7 +3617,7 @@ def test_tws_ttl_expiry_vs_survival_control(spark, sf_dir):
             outputMode="Update",
             timeMode="ProcessingTime",
         )
-        with _stream_partitions(spark):
+        with conf_override(spark, _STREAM_PARTITIONS):
             q = (
                 out.writeStream.format("memory")
                 .queryName(name)
