@@ -28,13 +28,19 @@ from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.errors import AnalysisException
+from pyspark.pipelines.flow import Flow
+from pyspark.pipelines.graph_element_registry import (
+    GraphElementRegistry,
+    graph_element_registration_context,
+)
+from pyspark.pipelines.output import MaterializedView, Output, Table, TemporaryView
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.json_fast import with_json_field
 from ..registry import query
 from ..session import conf_override
-from ..tables import load, scratch_dir
+from ..tables import corpus_scratch, load
 
 
 # ---------------------------------------------------------------------------
@@ -147,19 +153,6 @@ def etl_publish_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # other (r9 review finding #5) — serialize per process.
 _PIPELINE_RUN_LOCK = threading.Lock()
 
-try:  # pyspark >= 4.1
-    from pyspark.pipelines.flow import Flow
-    from pyspark.pipelines.graph_element_registry import (
-        GraphElementRegistry,
-        graph_element_registration_context,
-    )
-    from pyspark.pipelines.output import MaterializedView, Output, Table, TemporaryView
-
-    _HAVE_PIPELINES = True
-except ImportError:  # pragma: no cover - older pyspark
-    _HAVE_PIPELINES = False
-    GraphElementRegistry = object  # type: ignore[assignment,misc]
-
 
 @dataclass
 class _LocalGraphRegistry(GraphElementRegistry):
@@ -217,8 +210,6 @@ def run_pipeline_locally(
     returned DataFrames stay valid because spark.table() resolves at
     DataFrame-creation analysis, not at action time (the
     sql_session_variable precedent, pinned in tests)."""
-    if not _HAVE_PIPELINES:  # pragma: no cover
-        raise NotImplementedError("pyspark.pipelines requires pyspark >= 4.1")
     reg = _LocalGraphRegistry()
     with graph_element_registration_context(reg):
         author()
@@ -319,7 +310,7 @@ def etl_declarative_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (revenue DESC, year) tie-break."""
     import pyspark.pipelines as dp
 
-    scratch = scratch_dir("dp_pipeline", sf_dir.strip("/").replace("/", "_"))
+    scratch = corpus_scratch("dp_pipeline", sf_dir)
 
     def author() -> None:
         # gold first: the executor must defer it twice

@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf, udtf
 
 from ..registry import query
 from ..tables import load
@@ -166,26 +167,19 @@ def udtf_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # udtf_python_custom — PySpark 4 user-defined table function (@udtf)
 # ---------------------------------------------------------------------------
 
-try:  # pyspark >= 3.5 (arrow-optimized in 4.x)
-    from pyspark.sql.functions import udtf as _udtf_decorator
+@udtf(returnType="pos INT, token STRING")
+class _TokenizeUDTF:
+    """Custom Python UDTF: one input string -> (pos, token) rows.
+    Python str.split(' ') keeps empty tokens between consecutive
+    separators and yields [''] for the empty string — EXACTLY
+    DuckDB string_split semantics (verified), so the oracle can
+    reproduce positions with a (value, index) list_transform."""
 
-    @_udtf_decorator(returnType="pos INT, token STRING")
-    class _TokenizeUDTF:
-        """Custom Python UDTF: one input string -> (pos, token) rows.
-        Python str.split(' ') keeps empty tokens between consecutive
-        separators and yields [''] for the empty string — EXACTLY
-        DuckDB string_split semantics (verified), so the oracle can
-        reproduce positions with a (value, index) list_transform."""
-
-        def eval(self, text: str):
-            if text is None:
-                return
-            for i, t in enumerate(text.split(" ")):
-                yield (i, t)
-
-    _HAVE_PY_UDTF = True
-except ImportError:  # pragma: no cover - pyspark < 3.5
-    _HAVE_PY_UDTF = False
+    def eval(self, text: str):
+        if text is None:
+            return
+        for i, t in enumerate(text.split(" ")):
+            yield (i, t)
 
 
 @query(
@@ -217,8 +211,6 @@ def udtf_python_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle). The function name is uuid-scoped, so re-runs and
     concurrent sessions never clobber each other, and the function is
     dropped once the query is analyzed."""
-    if not _HAVE_PY_UDTF:  # pragma: no cover
-        raise NotImplementedError("@udtf requires pyspark >= 3.5")
     fname = f"tokenize_{_uuid.uuid4().hex[:8]}"
     spark.udtf.register(fname, _TokenizeUDTF)
     try:
@@ -234,13 +226,6 @@ def udtf_python_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # udf_arrow_native — PySpark 4.1 pyarrow-native vectorized UDF
 # ---------------------------------------------------------------------------
-
-try:  # pyspark >= 4.1
-    from pyspark.sql.functions import arrow_udf as _arrow_udf
-
-    _HAVE_ARROW_UDF = True
-except ImportError:  # pragma: no cover - pyspark < 4.1
-    _HAVE_ARROW_UDF = False
 
 _KNUTH_BUCKET_UDF = None  # built lazily: @arrow_udf needs a live session
 
@@ -268,7 +253,7 @@ def _knuth_bucket_udf():
                 masked, _pa.scalar(7, type=_pa.int64())
             )
 
-        _KNUTH_BUCKET_UDF = _arrow_udf(_knuth_bucket, "long")
+        _KNUTH_BUCKET_UDF = arrow_udf(_knuth_bucket, "long")
     return _KNUTH_BUCKET_UDF
 
 
@@ -298,8 +283,6 @@ def udf_arrow_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernels; the pure-JVM twin of this expression is one `pmod(
     shiftright(...))` projection (the production form, same plan
     family as fn_bitwise)."""
-    if not _HAVE_ARROW_UDF:  # pragma: no cover
-        raise NotImplementedError("@arrow_udf requires pyspark >= 4.1")
     o = load(spark, sf_dir, "orders").select("o_orderkey")
     mixed = o.select(_knuth_bucket_udf()("o_orderkey").alias("mix"))
     return mixed.groupBy((F.col("mix") % 16).alias("bucket")).agg(
@@ -312,23 +295,16 @@ def udf_arrow_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 # udtf_arrow_lateral — Arrow-optimized Python UDTF under LATERAL (4.1)
 # ---------------------------------------------------------------------------
 
-try:  # pyspark >= 3.5 (useArrow kwarg: 4.0+)
-    from pyspark.sql.functions import udtf as _udtf
+@udtf(returnType="token string", useArrow=True)
+class _PartTokenUDTF:
+    """Yield each whitespace token of a part name. Arrow-optimized:
+    eval() rows batch through the Arrow channel instead of pickle
+    (`useArrow=True` — the explicit per-function opt-in, not the
+    session-wide conf)."""
 
-    @_udtf(returnType="token string", useArrow=True)
-    class _PartTokenUDTF:
-        """Yield each whitespace token of a part name. Arrow-optimized:
-        eval() rows batch through the Arrow channel instead of pickle
-        (`useArrow=True` — the explicit per-function opt-in, not the
-        session-wide conf)."""
-
-        def eval(self, name: str):
-            for t in name.split(" "):
-                yield (t,)
-
-    _HAVE_ARROW_UDTF = True
-except (ImportError, TypeError):  # pragma: no cover - pyspark < 4.0
-    _HAVE_ARROW_UDTF = False
+    def eval(self, name: str):
+        for t in name.split(" "):
+            yield (t,)
 
 
 @query(
@@ -357,10 +333,6 @@ def udtf_arrow_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     result deterministic under ties; the uuid-scoped function name
     keeps re-runs from colliding, and the function is dropped once
     the query is analyzed."""
-    if not _HAVE_ARROW_UDTF:  # pragma: no cover
-        raise NotImplementedError(
-            "@udtf(useArrow=True) requires pyspark >= 4.0"
-        )
     fname = f"part_tokens_{_uuid.uuid4().hex[:8]}"
     spark.udtf.register(fname, _PartTokenUDTF)
     try:
@@ -382,35 +354,33 @@ def udtf_arrow_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
 # udtf_table_argument — polymorphic table function: TABLE(...) PARTITION BY
 # ---------------------------------------------------------------------------
 
-if _HAVE_ARROW_UDTF:
+@udtf(returnType="lang string, n_docs bigint, n_up bigint, max_chars bigint")
+class _LangRunStatsUDTF:
+    """Per-partition streaming reduction over an ORDERED TABLE
+    argument: rows of one lang arrive in doc_id order through
+    eval(); terminate() emits one summary row. State is O(1) per
+    partition — the streamed-aggregation contract the TABLE
+    argument surface exists for."""
 
-    @_udtf(returnType="lang string, n_docs bigint, n_up bigint, max_chars bigint")
-    class _LangRunStatsUDTF:
-        """Per-partition streaming reduction over an ORDERED TABLE
-        argument: rows of one lang arrive in doc_id order through
-        eval(); terminate() emits one summary row. State is O(1) per
-        partition — the streamed-aggregation contract the TABLE
-        argument surface exists for."""
+    def __init__(self) -> None:
+        self._lang = None
+        self._n = 0
+        self._n_up = 0
+        self._max = None
+        self._prev = None
 
-        def __init__(self) -> None:
-            self._lang = None
-            self._n = 0
-            self._n_up = 0
-            self._max = None
-            self._prev = None
+    def eval(self, row):
+        self._lang = row["lang"]
+        c = row["n_chars"]
+        self._n += 1
+        if self._prev is not None and c > self._prev:
+            self._n_up += 1
+        self._max = c if self._max is None else max(self._max, c)
+        self._prev = c
 
-        def eval(self, row):
-            self._lang = row["lang"]
-            c = row["n_chars"]
-            self._n += 1
-            if self._prev is not None and c > self._prev:
-                self._n_up += 1
-            self._max = c if self._max is None else max(self._max, c)
-            self._prev = c
-
-        def terminate(self):
-            if self._lang is not None:
-                yield self._lang, self._n, self._n_up, self._max
+    def terminate(self):
+        if self._lang is not None:
+            yield self._lang, self._n, self._n_up, self._max
 
 
 @query(
@@ -444,8 +414,6 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the lag()+count_if window form (win_lag_lead family); the key
     pins the PTF contract, and cross-form equality is pinned in
     tests."""
-    if not _HAVE_ARROW_UDTF:  # pragma: no cover
-        raise NotImplementedError("TABLE-argument @udtf requires pyspark >= 3.5")
     fname = f"lang_run_stats_{_uuid.uuid4().hex[:8]}"
     spark.udtf.register(fname, _LangRunStatsUDTF)
     try:

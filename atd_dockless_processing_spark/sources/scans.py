@@ -10,14 +10,14 @@ the inference pass (a full extra read at 100 TB).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from ..registry import query
-from ..tables import load, scratch_dir, stage_scratch
+from ..tables import corpus_scratch, load, read_parquet, stage_scratch, write_one_parquet
 
 
 @query(
@@ -85,7 +85,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         F.col("l_shipdate").cast("date").alias("ship_date"),
     )
-    path = scratch_dir("src_csv_roundtrip", sf_dir.strip("/").replace("/", "_"))
+    path = corpus_scratch("src_csv_roundtrip", sf_dir)
     subset.write.mode("overwrite").option("header", True).csv(path)
     back = spark.read.schema(_CSV_SCHEMA).option("header", True).csv(path)
     return back.groupBy("l_returnflag").agg(
@@ -121,7 +121,7 @@ def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema, aggregate. Mirrors MDS JSON feed ingest ([P high])."""
     ev = load(spark, sf_dir, "events").where(F.col("event_type").isin("click", "view"))
     subset = ev.select("event_id", "user_id", "event_type", "value")
-    path = scratch_dir("src_json_roundtrip", sf_dir.strip("/").replace("/", "_"))
+    path = corpus_scratch("src_json_roundtrip", sf_dir)
     subset.write.mode("overwrite").json(path)
     back = spark.read.schema(_JSON_SCHEMA).json(path)
     return back.groupBy("event_type").agg(
@@ -159,7 +159,7 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage for ingest interop."""
     li = load(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 25)
     subset = li.select("l_orderkey", "l_linestatus", "l_quantity", "l_extendedprice")
-    path = scratch_dir("src_orc_roundtrip", sf_dir.strip("/").replace("/", "_"))
+    path = corpus_scratch("src_orc_roundtrip", sf_dir)
     subset.write.mode("overwrite").orc(path)
     back = spark.read.schema(_ORC_SCHEMA).orc(path)
     return back.groupBy("l_linestatus").agg(
@@ -195,7 +195,7 @@ def src_text_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
             "evt id=%d type=%s value=%s", "event_id", "event_type", "value"
         ).alias("value")
     )
-    path = scratch_dir("src_text_log", sf_dir.strip("/").replace("/", "_"))
+    path = corpus_scratch("src_text_log", sf_dir)
     lines.write.mode("overwrite").text(path)
     back = spark.read.text(path)
     parsed = back.select(
@@ -212,53 +212,43 @@ def src_text_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # src_python_datasource — PySpark 4 Python DataSource API (V2) demo
 # ---------------------------------------------------------------------------
 
-try:  # pyspark >= 4.0
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceReader,
-        InputPartition,
-    )
+class SyntheticFeedDataSource(DataSource):
+    """Custom batch source via the PySpark 4 Python DataSource
+    API: a deterministic synthetic feed (an offline stand-in
+    for a REST/provider puller — the reference's ingest
+    is scheduled provider-API pulls [P high]). Demonstrates the
+    full V2 surface: name registration, DDL schema declaration,
+    option handling, partition PLANNING on the driver
+    (InputPartition per shard) and per-partition generator reads
+    on the workers — rows enter Spark in parallel, never through
+    a driver collect. The class lives in the shipped package zip
+    (session._ship_package), so workers can unpickle the
+    by-reference cloudpickle pointer under any driver cwd."""
 
-    class SyntheticFeedDataSource(DataSource):
-        """Custom batch source via the PySpark 4 Python DataSource
-        API: a deterministic synthetic feed (the sandbox-honest
-        stand-in for a REST/provider puller — the reference's ingest
-        is scheduled provider-API pulls [P high]). Demonstrates the
-        full V2 surface: name registration, DDL schema declaration,
-        option handling, partition PLANNING on the driver
-        (InputPartition per shard) and per-partition generator reads
-        on the workers — rows enter Spark in parallel, never through
-        a driver collect. The class lives in the shipped package zip
-        (session._ship_package), so workers can unpickle the
-        by-reference cloudpickle pointer under any driver cwd."""
+    @classmethod
+    def name(cls) -> str:
+        return "synthetic_feed"
 
-        @classmethod
-        def name(cls) -> str:
-            return "synthetic_feed"
+    def schema(self) -> str:
+        return "id BIGINT, shard INT"
 
-        def schema(self) -> str:
-            return "id BIGINT, shard INT"
+    def reader(self, schema):  # noqa: ANN001 - pyspark API type
+        return _SyntheticFeedReader(dict(self.options))
 
-        def reader(self, schema):  # noqa: ANN001 - pyspark API type
-            return _SyntheticFeedReader(dict(self.options))
 
-    class _SyntheticFeedReader(DataSourceReader):
-        def __init__(self, opts: dict):
-            self.n_shards = int(opts.get("numshards", 8))
-            self.rows_per = int(opts.get("rowspershard", 25000))
+class _SyntheticFeedReader(DataSourceReader):
+    def __init__(self, opts: dict):
+        self.n_shards = int(opts.get("numshards", 8))
+        self.rows_per = int(opts.get("rowspershard", 25000))
 
-        def partitions(self):
-            return [InputPartition(p) for p in range(self.n_shards)]
+    def partitions(self):
+        return [InputPartition(p) for p in range(self.n_shards)]
 
-        def read(self, partition):
-            p = partition.value
-            base = p * self.rows_per
-            for i in range(base, base + self.rows_per):
-                yield (i, p)
-
-    _HAVE_PY_DATASOURCE = True
-except ImportError:  # pragma: no cover - pyspark < 4 fallback
-    _HAVE_PY_DATASOURCE = False
+    def read(self, partition):
+        p = partition.value
+        base = p * self.rows_per
+        for i in range(base, base + self.rows_per):
+            yield (i, p)
 
 
 @query(
@@ -288,10 +278,6 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     V2 contract: driver-side partition planning, per-partition
     generator reads, schema-declared Arrow handoff, and package-zip
     unpickling of the source class under a foreign-cwd driver."""
-    if not _HAVE_PY_DATASOURCE:  # pragma: no cover
-        raise NotImplementedError(
-            "Python DataSource API requires pyspark >= 4.0"
-        )
     # re-registration of a session-scoped name is a silent overwrite in
     # this API (probed: duplicate register raises nothing), so any
     # exception here is a genuine registration failure and must
@@ -351,7 +337,6 @@ def src_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     read."""
 
     def build(indir: str) -> None:
-        os.makedirs(indir)
         orders = load(spark, sf_dir, "orders")
         v1 = orders.where(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
@@ -360,13 +345,7 @@ def src_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey", "o_totalprice", "o_orderpriority"
         )
         for i, part in enumerate([v1, v2]):
-            tmp = f"{indir}.tmp{i}"
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = next(
-                p for p in os.listdir(tmp) if p.startswith("part-") and p.endswith(".parquet")
-            )
-            shutil.move(os.path.join(tmp, src), os.path.join(indir, f"v{i}.parquet"))
-            shutil.rmtree(tmp, ignore_errors=True)
+            write_one_parquet(part, os.path.join(indir, f"v{i}.parquet"))
 
     indir = stage_scratch("src_schema_merge", sf_dir, "orders", build)
     merged = spark.read.option("mergeSchema", "true").parquet(indir)
@@ -431,7 +410,7 @@ def src_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the check proves repartitioned staging + pruned read is
     lossless."""
     indir = _stage_partitioned_events(spark, sf_dir)
-    part = spark.read.parquet(indir)
+    part = read_parquet(spark, indir)
     # metadata-only: min over the ~30 distinct partition values (the
     # scan for this aggregate reads no data columns)
     d0 = part.select(F.min("event_date").alias("d0")).collect()[0]["d0"]
@@ -604,8 +583,6 @@ def _stage_corrupt_jsonl(spark: SparkSession, sf_dir: str) -> str:
     provider-feed reality every intake pipeline faces. Built
     distributed via the text sink; the staged dir carries only the
     raw lines."""
-    from ..tables import stage_scratch
-
     def build(indir: str) -> None:
         d = load(spark, sf_dir, "documents")
         line = F.when(
@@ -731,7 +708,7 @@ def src_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    path = scratch_dir("src_xml_roundtrip", sf_dir.strip("/").replace("/", "_"))
+    path = corpus_scratch("src_xml_roundtrip", sf_dir)
     (
         subset.write.mode("overwrite")
         .format("xml")
@@ -795,8 +772,6 @@ def src_csv_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
     record boundary cannot be found mid-file) — one task per file,
     so the staging writes many files; at 100 TB the guidance is the
     same (many medium files, or parquet as soon as possible)."""
-    from ..tables import stage_scratch
-
     def build(indir: str) -> None:
         src = load(spark, sf_dir, "documents").select(
             "lang",

@@ -12,9 +12,17 @@ import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
 
 from ..registry import query
-from ..tables import Layout, load, scratch_dir
+from ..tables import (
+    Layout,
+    corpus_scratch,
+    load,
+    read_parquet,
+    scratch_dir,
+    stage_scratch,
+)
 
 
 def _merge_sql(table: str, staging: str, cols: list[str], key_cols: list[str]) -> str:
@@ -129,9 +137,9 @@ def snk_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sum_price"),
         )
     )
-    path = scratch_dir("snk_parquet", sf_dir.strip("/").replace("/", "_"))
+    path = corpus_scratch("snk_parquet", sf_dir)
     agg.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 @query(
@@ -151,14 +159,14 @@ def snk_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     back (partition pruning — at 100 TB this is the difference between
     scanning one month and scanning everything)."""
     orders = load(spark, sf_dir, "orders").where(F.year("o_orderdate") == 1997)
-    path = scratch_dir("snk_partitioned", sf_dir.strip("/").replace("/", "_"))
+    path = corpus_scratch("snk_partitioned", sf_dir)
     (
         orders.withColumn("order_month", F.month("o_orderdate"))
         .write.mode("overwrite")
         .partitionBy("order_month")
         .parquet(path)
     )
-    back = spark.read.parquet(path).where(F.col("order_month") == 3)
+    back = read_parquet(spark, path).where(F.col("order_month") == 3)
     return back.groupBy(F.col("order_month").cast("int").alias("order_month")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.round(F.sum("o_totalprice"), 4).alias("sum_price"),
@@ -252,7 +260,7 @@ def snk_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     overwrite).
     """
     sftag = Layout.catalog_tag(sf_dir)
-    base = scratch_dir("snk_bucketed", sf_dir.strip("/").replace("/", "_"))
+    base = corpus_scratch("snk_bucketed", sf_dir)
     o_tbl, c_tbl = f"bkt_orders_{sftag}", f"bkt_customer_{sftag}"
     (
         load(spark, sf_dir, "orders")
@@ -420,9 +428,8 @@ def snk_jdbc_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
             return False
         return (time.time() - newest) > age_s
 
-    sftag = sf_dir.strip("/").replace("/", "_")
     # glob on a not-yet-created base yields nothing — no mkdir needed
-    base = Path(scratch_dir("snk_jdbc_derby", sftag))
+    base = Path(corpus_scratch("snk_jdbc_derby", sf_dir))
     legacy = base / "db"  # pre-r14 shared dir: never reused, sweep it
     if legacy.is_dir() and _quiesced(legacy):
         shutil.rmtree(legacy, ignore_errors=True)
@@ -438,7 +445,7 @@ def snk_jdbc_derby(spark: SparkSession, sf_dir: str) -> DataFrame:
                 and _quiesced(sib)
             ):
                 shutil.rmtree(sib, ignore_errors=True)
-    db = scratch_dir("snk_jdbc_derby", sftag, f"db-pid{os.getpid()}")
+    db = corpus_scratch("snk_jdbc_derby", sf_dir, f"db-pid{os.getpid()}")
     url = f"jdbc:derby:{db};create=true"
 
     o = load(spark, sf_dir, "orders")
@@ -550,10 +557,8 @@ def snk_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(indir)
         )
 
-    from ..tables import stage_scratch
-
     staged = stage_scratch("snk_zorder", sf_dir, "events", build)
-    t = spark.read.parquet(staged).where(
+    t = read_parquet(spark, staged).where(
         F.col("xi").between(*_ZO_X) & F.col("yi").between(*_ZO_Y)
     )
     return t.agg(
@@ -582,8 +587,6 @@ def _stage_compacted(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import math
     import os
 
-    from ..tables import stage_scratch
-
     def build_small(indir: str) -> None:
         (
             load(spark, sf_dir, "events")
@@ -604,7 +607,7 @@ def _stage_compacted(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         # coalesce, not repartition: compaction must not pay a
         # shuffle — it only glues existing partitions together
         (
-            spark.read.parquet(small)
+            read_parquet(spark, small)
             .coalesce(n_files)
             .write.mode("overwrite")
             .parquet(indir)
@@ -649,7 +652,7 @@ def snk_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxPartitionBytes so post-compaction scans get full-sized
     splits."""
     _small, compacted = _stage_compacted(spark, sf_dir)
-    t = spark.read.parquet(compacted)
+    t = read_parquet(spark, compacted)
     return t.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("event_id").alias("n_ids"),
@@ -749,10 +752,10 @@ def snk_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("rn") == 1) & (F.col("op") != "D"))
         .select("k", "status", "price")
     )
-    path = scratch_dir("snk_cdc_apply", sf_dir.strip("/").replace("/", "_"))
+    path = corpus_scratch("snk_cdc_apply", sf_dir)
     snap.write.mode("overwrite").parquet(path)
     return (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy("status")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -817,12 +820,8 @@ def snk_manifest_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition stands. CLOSED-AS-CONSTANT-FACTOR with the constant
     named: the InternalRow→Parquet per-row writer path vs DuckDB's
     vectorized native writer; executor-parallel at 100 TB."""
-    data_dir = scratch_dir(
-        "snk_manifest_pub", sf_dir.strip("/").replace("/", "_"), "data"
-    )
-    man_dir = scratch_dir(
-        "snk_manifest_pub", sf_dir.strip("/").replace("/", "_"), "manifest"
-    )
+    data_dir = corpus_scratch("snk_manifest_pub", sf_dir, "data")
+    man_dir = corpus_scratch("snk_manifest_pub", sf_dir, "manifest")
     pub = load(spark, sf_dir, "orders").select(
         F.month(F.col("o_orderdate").cast("timestamp")).alias("m"),
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
@@ -833,13 +832,13 @@ def snk_manifest_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("m")
         .parquet(data_dir)
     )
-    back = spark.read.parquet(data_dir)
+    back = read_parquet(spark, data_dir)
     manifest = (
         back.groupBy(F.input_file_name().alias("file"), "m")
         .agg(F.count(F.lit(1)).alias("m_rows"), F.sum("cents").alias("m_cents"))
     )
     manifest.write.mode("overwrite").parquet(man_dir)
-    man = spark.read.parquet(man_dir)
+    man = read_parquet(spark, man_dir)
     man_by_month = man.groupBy("m").agg(
         F.count(F.lit(1)).alias("n_files"),
         F.sum("m_rows").alias("man_rows"),
@@ -868,74 +867,66 @@ def snk_manifest_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 # snk_python_datasource_write — PySpark 4 Python DataSource WRITER
 # ---------------------------------------------------------------------------
 
-try:  # pyspark >= 4.0
-    from pyspark.sql.datasource import (
-        DataSource,
-        DataSourceWriter,
-        WriterCommitMessage,
-    )
+class _JsonlCommit(WriterCommitMessage):
+    """Per-task commit message: the file this task produced and
+    its row count (must be picklable driver<-worker)."""
 
-    class _JsonlCommit(WriterCommitMessage):
-        """Per-task commit message: the file this task produced and
-        its row count (must be picklable driver<-worker)."""
+    def __init__(self, filename: str, n_rows: int) -> None:
+        self.filename = filename
+        self.n_rows = n_rows
 
-        def __init__(self, filename: str, n_rows: int) -> None:
-            self.filename = filename
-            self.n_rows = n_rows
 
-    class JsonlSinkDataSource(DataSource):
-        """Custom BATCH SINK via the PySpark 4 Python DataSource API —
-        the writer half of the V2 surface whose reader half is
-        ``SyntheticFeedDataSource`` (src_python_datasource) and whose
-        streaming-reader half is ``SyntheticCounterStream``
-        (stm_python_stream_source). Each task writes its partition as
-        one JSON-lines file and returns a commit message; the DRIVER
-        commit publishes a manifest naming exactly the committed
-        files — the two-phase all-or-nothing contract (a failed task's
-        orphan file is never manifested)."""
+class JsonlSinkDataSource(DataSource):
+    """Custom BATCH SINK via the PySpark 4 Python DataSource API —
+    the writer half of the V2 surface whose reader half is
+    ``SyntheticFeedDataSource`` (src_python_datasource) and whose
+    streaming-reader half is ``SyntheticCounterStream``
+    (stm_python_stream_source). Each task writes its partition as
+    one JSON-lines file and returns a commit message; the DRIVER
+    commit publishes a manifest naming exactly the committed
+    files — the two-phase all-or-nothing contract (a failed task's
+    orphan file is never manifested)."""
 
-        @classmethod
-        def name(cls) -> str:
-            return "jsonl_sink"
+    @classmethod
+    def name(cls) -> str:
+        return "jsonl_sink"
 
-        def writer(self, schema, overwrite):  # noqa: ANN001 - pyspark API
-            return _JsonlSinkWriter(self.options["path"])
+    def writer(self, schema, overwrite):  # noqa: ANN001 - pyspark API
+        return _JsonlSinkWriter(self.options["path"])
 
-    class _JsonlSinkWriter(DataSourceWriter):
-        def __init__(self, path: str) -> None:
-            self.path = path
 
-        def write(self, iterator):  # noqa: ANN001 - per-task, on workers
-            import json
-            import os
-            import uuid
+class _JsonlSinkWriter(DataSourceWriter):
+    def __init__(self, path: str) -> None:
+        self.path = path
 
-            fname = f"part-{uuid.uuid4().hex}.jsonl"
-            full = os.path.join(self.path, fname)
-            n = 0
-            with open(full, "w") as fh:
-                for row in iterator:
-                    fh.write(json.dumps(row.asDict()) + "\n")
-                    n += 1
-            return _JsonlCommit(fname, n)
+    def write(self, iterator):  # noqa: ANN001 - per-task, on workers
+        import json
+        import os
+        import uuid
 
-        def commit(self, messages):  # noqa: ANN001 - on the driver
-            import json
-            import os
+        fname = f"part-{uuid.uuid4().hex}.jsonl"
+        full = os.path.join(self.path, fname)
+        n = 0
+        with open(full, "w") as fh:
+            for row in iterator:
+                fh.write(json.dumps(row.asDict()) + "\n")
+                n += 1
+        return _JsonlCommit(fname, n)
 
-            manifest = {
-                "files": sorted(m.filename for m in messages if m is not None),
-                "rows": sum(m.n_rows for m in messages if m is not None),
-            }
-            with open(os.path.join(self.path, "_MANIFEST.json"), "w") as fh:
-                json.dump(manifest, fh)
+    def commit(self, messages):  # noqa: ANN001 - on the driver
+        import json
+        import os
 
-        def abort(self, messages):  # noqa: ANN001
-            pass  # no manifest -> nothing published; files are scratch
+        manifest = {
+            "files": sorted(m.filename for m in messages if m is not None),
+            "rows": sum(m.n_rows for m in messages if m is not None),
+        }
+        with open(os.path.join(self.path, "_MANIFEST.json"), "w") as fh:
+            json.dump(manifest, fh)
 
-    _HAVE_PY_DS_WRITER = True
-except ImportError:  # pragma: no cover - pyspark < 4
-    _HAVE_PY_DS_WRITER = False
+    def abort(self, messages):  # noqa: ANN001
+        pass  # no manifest -> nothing published; files are scratch
+
 
 # Most-recent invocation's uuid-scoped sink dir (introspection hook
 # for tests; each run gets a fresh dir — see the key's docstring).
@@ -978,14 +969,8 @@ def snk_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     this run's lazily-evaluated readback still references — and NO
     in-key pruning of older run dirs either, for the same reason
     (.scratch is disposable by contract; the dirs are a few KB)."""
-    if not _HAVE_PY_DS_WRITER:  # pragma: no cover
-        raise NotImplementedError(
-            "Python DataSource writer API requires pyspark >= 4.0"
-        )
     import json
     import os
-
-    from ..tables import scratch_dir
 
     global _LAST_PYDS_DIR
     out_dir = scratch_dir("pyds_sink", f"run_{_uuid.uuid4().hex[:12]}")

@@ -24,18 +24,22 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from ..operators.aggregates import _hll_estimate, _hll_oracle, _hll_registers
 from ..registry import query
 from ..session import conf_override
 from ..sources.sinks import _CDC_ORACLE, _cdc_log_parts
 from ..tables import (
+    corpus_scratch,
     events_ts_to_timestamp,
     load,
     parquet_schema,
     read_parquet,
+    run_scratch,
     scratch_dir,
     stage_scratch,
+    write_one_parquet,
 )
 
 # The file stream source requires an explicit schema. events.ts has
@@ -70,7 +74,8 @@ def _run_to_memory(
 ) -> DataFrame:
     """Drain ``sdf`` under availableNow into a memory sink named
     ``{prefix}_<uuid>`` (so reruns never collide), with the
-    ``_STREAM_PARTITIONS`` override, and return the sink's table."""
+    ``_STREAM_PARTITIONS`` override, and return the sink's table; the
+    sink's temp view is dropped, also when the drain raises."""
     spark = sdf.sparkSession
     name = f"{prefix}_{uuid.uuid4().hex[:8]}"
     writer = (
@@ -81,9 +86,14 @@ def _run_to_memory(
     )
     if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
-    with conf_override(spark, _STREAM_PARTITIONS):
-        writer.start().awaitTermination()
-    return spark.table(name)
+    try:
+        with conf_override(spark, _STREAM_PARTITIONS):
+            writer.start().awaitTermination()
+        return spark.table(name)
+    finally:
+        # the frame spark.table resolved keeps the sink's rows; only
+        # the session's name for them goes
+        spark.catalog.dropTempView(name)
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,6 +168,20 @@ def stm_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(deduped, "stm_dedup", "complete")
 
 
+def _rate_micro_batches(spark: SparkSession) -> DataFrame:
+    """Spark's deterministic ``rate-micro-batch`` source: 2000 rows a
+    batch over 4 partitions, ``value`` the global row index, every row
+    of batch b stamped b minutes after the epoch."""
+    return (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 2000)
+        .option("numPartitions", 4)
+        .option("startTimestamp", 0)
+        .option("advanceMillisPerBatch", 60000)
+        .load()
+    )
+
+
 @query(
     "stm_rate_source_window",
     oracle="""
@@ -190,24 +214,14 @@ def stm_rate_source_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     unix_millis (instant-based — immune to the driver session's local
     timezone, unlike a raw timestamp column from a non-parquet
     source). All-integer outputs; DuckDB's HUGEINT sum is cast back
-    to BIGINT (hazard #1). The per-call uuid checkpoint keeps reruns
+    to BIGINT (hazard #1). The per-run checkpoint keeps reruns
     idempotent (a reused checkpoint would CONTINUE past batch 5);
     it is removed after the final drain."""
-    ckpt = os.path.join(
-        scratch_dir("stm_rate_ckpt", uuid.uuid4().hex[:8]), "ckpt"
-    )
-    try:
+    with run_scratch("stm_rate_ckpt") as ckpt:
         for b in range(5):
-            src = (
-                spark.readStream.format("rate-micro-batch")
-                .option("rowsPerBatch", 2000)
-                .option("numPartitions", 4)
-                .option("startTimestamp", 0)
-                .option("advanceMillisPerBatch", 60000)
-                .load()
-            )
             agg = (
-                src.groupBy(F.window("timestamp", "1 minute").alias("w"))
+                _rate_micro_batches(spark)
+                .groupBy(F.window("timestamp", "1 minute").alias("w"))
                 .agg(
                     F.count(F.lit(1)).alias("n_rows"),
                     F.sum("value").alias("sum_value"),
@@ -224,8 +238,6 @@ def stm_rate_source_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         # decouple the returned frame from the about-to-be-removed
         # checkpoint (memory-sink rows live on the driver already)
         return spark.createDataFrame(sink.collect(), sink.schema)
-    finally:
-        shutil.rmtree(os.path.dirname(ckpt), ignore_errors=True)
 
 
 @query(
@@ -251,20 +263,9 @@ def stm_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     via unix_millis (tz-immune) and the state counts are
     closed-form, so the read is hash-checkable — a dropped batch,
     double-applied batch, or state-schema drift flips it."""
-    ckpt = os.path.join(
-        scratch_dir("stm_ssr_ckpt", uuid.uuid4().hex[:8]), "ckpt"
-    )
-    try:
+    with run_scratch("stm_ssr_ckpt") as ckpt:
         for _ in range(3):
-            src = (
-                spark.readStream.format("rate-micro-batch")
-                .option("rowsPerBatch", 2000)
-                .option("numPartitions", 4)
-                .option("startTimestamp", 0)
-                .option("advanceMillisPerBatch", 60000)
-                .load()
-            )
-            agg = src.groupBy(
+            agg = _rate_micro_batches(spark).groupBy(
                 F.window("timestamp", "1 minute").alias("w")
             ).agg(F.count(F.lit(1)).alias("n_rows"))
             _run_to_memory(agg, "stm_ssr", "complete", ckpt)
@@ -283,8 +284,6 @@ def stm_state_store_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize BEFORE the checkpoint (the reader's backing
         # files) is removed
         return spark.createDataFrame(state.collect(), state.schema)
-    finally:
-        shutil.rmtree(os.path.dirname(ckpt), ignore_errors=True)
 
 
 @query("stm_late_data_drop")  # rows-only: engine-specific watermark semantics
@@ -298,27 +297,18 @@ def stm_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the two files are a pure function of the input snapshot, so
         # stage_scratch reuses them until events.parquet changes
         # instead of paying two coalesce(1) write jobs per run
-        base = os.path.dirname(indir)
-        os.makedirs(indir)
         ev = load(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type", "value", "props",
         )
         recent = ev.where(F.col("ts") >= "2024-01-10")
         late = ev.where(F.col("ts") < "2024-01-08")
         for i, part in enumerate([recent, late]):
-            tmp = f"{base}/tmp{i}"
-            part.coalesce(1).write.mode("overwrite").parquet(tmp)
-            src = next(
-                p for p in os.listdir(tmp) if p.startswith("part-") and p.endswith(".parquet")
-            )
             dst = os.path.join(indir, f"f{i}.parquet")
-            shutil.move(os.path.join(tmp, src), dst)
+            write_one_parquet(part, dst)
             # file source orders batches by modification time: force it
             os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
-            shutil.rmtree(tmp, ignore_errors=True)
 
     indir = stage_scratch("stm_late_data", sf_dir, "events", build)
-    base = os.path.dirname(indir)
 
     ts_schema = T.StructType(
         [
@@ -342,13 +332,10 @@ def stm_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("hour_start"), "n_events")
     )
-    ckpt = f"{base}/ckpt_{uuid.uuid4().hex[:8]}"
-    sink = _run_to_memory(agg, "stm_late", "append", ckpt)
-    # fresh checkpoints are required per run (file-source offsets live
-    # there; reusing one would skip all input) — so drop it after the
-    # drain instead of leaking one dir per invocation
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return sink
+    # a fresh checkpoint per run: file-source offsets live there, and
+    # reusing one would skip all input
+    with run_scratch("stm_late_data") as ckpt:
+        return _run_to_memory(agg, "stm_late", "append", ckpt)
 
 
 # NB: the oracle's "> 1800" gap rule must stay in lockstep with Spark's
@@ -516,27 +503,24 @@ def stm_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     — content is batching-invariant, so the result hash-matches the
     batch oracle."""
     # fixed sink path per sf_dir, cleared up front: foreachBatch
-    # APPENDS per micro-batch, so a stale directory would double-count
-    # — and uuid-per-run names would leak one dir per invocation
-    out = scratch_dir(
-        "stm_foreachbatch", sf_dir.strip("/").replace("/", "_"), "out"
-    )
+    # APPENDS per micro-batch, so a stale directory would double-count;
+    # not a run_scratch directory, since the returned frame reads it lazily
+    out = corpus_scratch("stm_foreachbatch", sf_dir, "out")
     shutil.rmtree(out, ignore_errors=True)
 
     def _write_batch(bdf: DataFrame, _batch_id: int) -> None:
         bdf.select("event_id", "event_type", "value").write.mode("append").parquet(out)
 
-    ckpt = scratch_dir("stm_foreachbatch", f"ckpt_{uuid.uuid4().hex[:8]}")
-    q = (
-        _stream_events(spark, sf_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    back = spark.read.parquet(out)
+    with run_scratch("stm_foreachbatch") as ckpt:
+        (
+            _stream_events(spark, sf_dir)
+            .writeStream.foreachBatch(_write_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    back = read_parquet(spark, out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4).alias("sum_value"),
@@ -802,7 +786,6 @@ def _stage_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
     out. This is the streaming analogue of the batch world's "close
     the books" record, and it is exactly what a production feed's
     heartbeat/punctuation message does at 100 TB."""
-    from ..tables import stage_scratch
 
     def build(indir: str) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -1033,13 +1016,13 @@ def _tws_runtime_env(spark: SparkSession) -> None:
 
 def _drain_to_target(
     spark: SparkSession, q, name: str, target: int, timeout_s: float = 120.0
-) -> None:
-    """Bounded memory-sink drain for streams availableNow cannot
-    terminate — the ProcessingTime+TTL maintenance-batch spin
-    (stm_tws_value_ttl) and the Python stream source, which has no
+) -> DataFrame:
+    """Bounded drain of the memory sink ``name`` for a stream that
+    does not stop by itself — the Python stream source has no
     availableNow (stm_python_stream_source): poll until ``target``
     rows landed, re-raise the query's own exception immediately (a
-    dead query never fills the sink), stop the query on exit."""
+    dead query never fills the sink), and return the sink's table.
+    On exit the query is stopped and the sink's temp view dropped."""
     import time as _time
 
     deadline = _time.monotonic() + timeout_s
@@ -1048,8 +1031,7 @@ def _drain_to_target(
             if q.exception() is not None:
                 raise q.exception()
             if not q.isActive:
-                # clean termination under target (a Spark version where
-                # availableNow does terminate, or an under-emitting
+                # clean termination under target (an under-emitting
                 # batch): fail FAST with the observed count instead of
                 # burning the whole timeout (r9 ADVICE #2); one final
                 # recheck since rows may have landed after the poll —
@@ -1071,8 +1053,10 @@ def _drain_to_target(
                     f"rows after {timeout_s:.0f} s"
                 )
             _time.sleep(0.2)
+        return spark.table(name)
     finally:
         q.stop()
+        spark.catalog.dropTempView(name)
 
 
 @query(
@@ -1451,10 +1435,7 @@ def stm_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked and the changelog mechanics are structurally
     verified in one sweep.
     """
-    import shutil as _shutil
     from pathlib import Path as _Path
-
-    from ..tables import stage_scratch
 
     def build(indir: str) -> None:
         (
@@ -1482,10 +1463,7 @@ def stm_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
         **_ROCKSDB,
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
     }
-    ckpt = os.path.join(
-        scratch_dir("stm_rkcl_ckpt"), f"run_{uuid.uuid4().hex[:8]}"
-    )
-    try:
+    with run_scratch("stm_rkcl_ckpt") as ckpt:
         with conf_override(spark, confs):
             sink = _run_to_memory(agg, "stm_rkcl", "complete", ckpt)
         # one file per committed micro-batch (plus its .crc twin)
@@ -1504,8 +1482,6 @@ def stm_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "changelog checkpointing produced no *.changelog files — "
                 f"state dir layout: {layout}"
             )
-    finally:
-        _shutil.rmtree(ckpt, ignore_errors=True)
     return sink
 
 
@@ -1520,17 +1496,11 @@ def _stage_events_parity_files(spark: SparkSession, sf_dir: str) -> str:
     so a batch's per-user slice totals are oracle-expressible. Two
     separate single-file writes (not partitionBy) keep the listing
     order stable: f0=even, f1=odd."""
-    import shutil as _sh
-    from pathlib import Path as _Path
-
-    from ..tables import stage_scratch
-
     def build(indir: str) -> None:
         ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
         n_src = ev.count()
         n_staged = 0
         for tag, parity in (("f0", 0), ("f1", 1)):
-            tmp = f"{indir}_{tag}_tmp"
             # pmod + null-bucketing: Spark's % keeps the dividend's
             # sign (-3 % 2 == -1) and NULL matches neither parity —
             # either would silently drop rows from BOTH slices and
@@ -1540,18 +1510,7 @@ def _stage_events_parity_files(spark: SparkSession, sf_dir: str) -> str:
                 F.coalesce(F.pmod("event_id", F.lit(2)), F.lit(0)) == parity
             ).select("user_id", "value")
             n_staged += sliced.count()
-            (
-                sliced.coalesce(1)
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-            part = next(
-                p for p in sorted(_Path(tmp).iterdir())
-                if p.name.endswith(".parquet")
-            )
-            _Path(indir).mkdir(parents=True, exist_ok=True)
-            _sh.move(str(part), f"{indir}/{tag}.parquet")
-            _sh.rmtree(tmp, ignore_errors=True)
+            write_one_parquet(sliced, f"{indir}/{tag}.parquet")
         if n_staged != n_src:
             raise RuntimeError(
                 f"parity staging lost rows: {n_staged} staged != {n_src} "
@@ -1591,17 +1550,18 @@ def stm_tws_value_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-hour-TTL control (state survives, identical plan) lives in
     tests beside the cross-key consistency suite.
 
-    Termination quirk (measured, Spark 4.1): under
-    timeMode=ProcessingTime with TTL'd state, ``availableNow`` does
-    NOT terminate after the data batches — the engine keeps
-    scheduling EMPTY maintenance micro-batches (batch 290+ observed
-    for a 2-file source) while TTL'd state exists. Empty batches
-    emit nothing in Update mode, so the sink is complete once every
-    data batch's emissions have landed: the drain polls the memory
-    sink for the precomputed target row count (one row per
-    (user, nonempty slice), from the staged files) and then stops
-    the query — the stm_python_stream_source bounded-drain
-    discipline, q.exception() re-raised inside the loop.
+    Termination (measured, Spark 4.1): under timeMode=ProcessingTime
+    with TTL'd state, ``availableNow`` does NOT terminate after the
+    data batches — the engine keeps scheduling EMPTY no-data
+    micro-batches (batch 290+ observed for a 2-file source) while
+    TTL'd state exists, and stopping the query from outside kills
+    one mid-commit (``CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT`` /
+    aborted-task traces). The drain turns no-data batches off
+    (``spark.sql.streaming.noDataMicroBatches.enabled``), so the
+    query ends by itself after its data batches like every other
+    availableNow drain. Expiry does not depend on those batches:
+    a TTL'd ``get()`` checks the batch timestamp, so batch 2 still
+    reads batch 1's state as expired.
 
     Scale shape: same bounded per-user RocksDB row as
     stm_transform_with_state, plus TTL's secondary index — the
@@ -1659,17 +1619,8 @@ def stm_tws_value_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(indir)
     )
-    name = f"stm_tws_ttl_{uuid.uuid4().hex[:8]}"
-    # one emission per (user, nonempty slice): the drain's completion
-    # target, computed from the staged files themselves
-    target = sum(
-        read_parquet(spark, f"{indir}/{f}.parquet")
-        .select("user_id")
-        .distinct()
-        .count()
-        for f in ("f0", "f1")
-    )
-    with conf_override(spark, _ROCKSDB):
+    confs = {**_ROCKSDB, "spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+    with conf_override(spark, confs):
         out = raw.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=TtlTotals(1),
             outputStructType=(
@@ -1679,18 +1630,9 @@ def stm_tws_value_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="ProcessingTime",
         )
-        with conf_override(spark, _STREAM_PARTITIONS):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain_to_target(spark, q, name, target)
+        sink = _run_to_memory(out, "stm_tws_ttl", "update")
     return (
-        spark.table(name)
-        .groupBy("user_id")
+        sink.groupBy("user_id")
         .agg(
             F.sum("n_events").alias("n_events"),
             F.round(F.sum("sum_value"), 4).alias("sum_value"),
@@ -1755,19 +1697,9 @@ def _stage_cdc_log(spark: SparkSession, sf_dir: str) -> str:
 
     def build(indir: str) -> None:
         ins, upd, dele = _cdc_log_parts(load(spark, sf_dir, "orders"))
-        os.makedirs(indir, exist_ok=True)
-        for i, part in enumerate((ins, upd, dele), start=1):
-            part.coalesce(1).write.mode("overwrite").parquet(
-                f"{indir}/seq{i}.parquet"
-            )
-            # flatten: the file source lists files recursively only
-            # with a glob; move the part file up as seq{i}.parquet
-        # rewrite as flat files the stream dir can list
-        flat = [p for p in __import__("glob").glob(f"{indir}/seq*.parquet/part-*.parquet")]
-        for i, p in enumerate(sorted(flat)):
-            shutil.move(p, f"{indir}/cdc_{i}.parquet")
-        for d in __import__("glob").glob(f"{indir}/seq*.parquet"):
-            shutil.rmtree(d, ignore_errors=True)
+        # flat files: the file source lists subdirectories only with a glob
+        for i, part in enumerate((ins, upd, dele)):
+            write_one_parquet(part, f"{indir}/cdc_{i}.parquet")
 
     return stage_scratch("stm_cdc_log", sf_dir, "orders", build)
 
@@ -1795,123 +1727,110 @@ def stm_cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     disciplines are identical. State per merge is the snapshot
     itself (the operator IS incremental materialization)."""
     stage = _stage_cdc_log(spark, sf_dir)
-    base = scratch_dir(
-        "stm_cdc_snap", sf_dir.strip("/").replace("/", "_"), uuid.uuid4().hex[:8]
-    )
-    snap_dir = f"{base}/snap"
-    schema = "k long, seq int, op string, status string, price double"
+    with run_scratch("stm_cdc_snap") as base:
+        snap_dir = f"{base}/snap"
+        schema = "k long, seq int, op string, status string, price double"
 
-    def merge(bdf: DataFrame, _bid: int) -> None:
-        sp = bdf.sparkSession
-        import os
+        def merge(bdf: DataFrame, _bid: int) -> None:
+            sp = bdf.sparkSession
+            if os.path.exists(snap_dir):
+                cur = read_parquet(sp, snap_dir)
+                allr = cur.unionByName(bdf)
+            else:
+                allr = bdf
+            w = Window.partitionBy("k").orderBy(F.col("seq").desc())
+            merged = (
+                allr.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .drop("rn")
+            )
+            tmp = f"{base}/tmp_{_bid}"
+            merged.write.mode("overwrite").parquet(tmp)
+            old = f"{base}/old_{_bid}"
+            if os.path.exists(snap_dir):
+                shutil.move(snap_dir, old)
+            shutil.move(tmp, snap_dir)
+            shutil.rmtree(old, ignore_errors=True)
 
-        if os.path.exists(snap_dir):
-            cur = sp.read.parquet(snap_dir)
-            allr = cur.unionByName(bdf)
-        else:
-            allr = bdf
-        w = Window.partitionBy("k").orderBy(F.col("seq").desc())
-        merged = (
-            allr.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn")
+        ckpt = f"{base}/ckpt"
+        q = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+            .writeStream.foreachBatch(merge)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        tmp = f"{base}/tmp_{_bid}"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = f"{base}/old_{_bid}"
-        if os.path.exists(snap_dir):
-            shutil.move(snap_dir, old)
-        shutil.move(tmp, snap_dir)
-        shutil.rmtree(old, ignore_errors=True)
-
-    ckpt = f"{base}/ckpt"
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out = (
-        spark.read.parquet(snap_dir)
-        .where(F.col("op") != "D")
-        .groupBy("status")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(
-                F.sum(F.col("price").cast("decimal(18,4)")).cast("double"), 4
-            ).alias("sum_price"),
+        q.awaitTermination()
+        out = (
+            read_parquet(spark, snap_dir)
+            .where(F.col("op") != "D")
+            .groupBy("status")
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.round(
+                    F.sum(F.col("price").cast("decimal(18,4)")).cast("double"), 4
+                ).alias("sum_price"),
+            )
         )
-    )
-    # materialize before the scratch snapshot is abandoned to later
-    # runs' cleanup; the frame returned must not depend on run-id dirs
-    pdf = out.toPandas()
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        pdf, schema="status string, n_rows long, sum_price double"
-    )
+        # materialize: the frame returned must not depend on run-id dirs
+        pdf = out.toPandas()
+        return spark.createDataFrame(
+            pdf, schema="status string, n_rows long, sum_price double"
+        )
 
 
 # ---------------------------------------------------------------------------
 # stm_python_stream_source — PySpark 4 Python STREAMING DataSource demo
 # ---------------------------------------------------------------------------
 
-# module-level so the @query oracle f-string below stays valid even
-# on a pyspark<4 fallback import (r8 review finding #2)
 _CS_BATCHES, _CS_PER = 5, 1000
 
-try:  # pyspark >= 4.0
-    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-    class SyntheticCounterStream(DataSource):
-        """Custom STREAMING source via the PySpark 4 Python DataSource
-        API — the streaming half of the V2 surface whose batch half is
-        ``SyntheticFeedDataSource``: a deterministic finite feed of
-        ``_CS_BATCHES`` offset-tracked micro-batches (the sandbox-
-        honest stand-in for a kafka/provider tail). Demonstrates the
-        simple-stream-reader contract: ``initialOffset``/``read(start)
-        -> (rows, nextOffset)``/``readBetweenOffsets`` replay (exactly
-        the offset-log recovery path a restart takes). Rows must be
-        picklable ITERATORS over materialized lists — a generator
-        return dies pickling in planPartitions, a bare list dies on
-        next() in latestOffset (both probed r8); iter(list) satisfies
-        both sides of the wrapper."""
+class SyntheticCounterStream(DataSource):
+    """Custom STREAMING source via the PySpark 4 Python DataSource
+    API — the streaming half of the V2 surface whose batch half is
+    ``SyntheticFeedDataSource``: a deterministic finite feed of
+    ``_CS_BATCHES`` offset-tracked micro-batches (an offline
+    stand-in for a kafka/provider tail). Demonstrates the
+    simple-stream-reader contract: ``initialOffset``/``read(start)
+    -> (rows, nextOffset)``/``readBetweenOffsets`` replay (exactly
+    the offset-log recovery path a restart takes). Rows must be
+    picklable ITERATORS over materialized lists — a generator
+    return dies pickling in planPartitions, a bare list dies on
+    next() in latestOffset (both measured); iter(list) satisfies
+    both sides of the wrapper."""
 
-        @classmethod
-        def name(cls) -> str:
-            return "synthetic_counter_stream"
+    @classmethod
+    def name(cls) -> str:
+        return "synthetic_counter_stream"
 
-        def schema(self) -> str:
-            return "v BIGINT, b INT"
+    def schema(self) -> str:
+        return "v BIGINT, b INT"
 
-        def simpleStreamReader(self, schema):  # noqa: ANN001 - pyspark API
-            return _CounterStreamReader()
+    def simpleStreamReader(self, schema):  # noqa: ANN001 - pyspark API
+        return _CounterStreamReader()
 
-    class _CounterStreamReader(SimpleDataSourceStreamReader):
-        def initialOffset(self):
-            return {"b": 0}
 
-        def read(self, start):
-            b = int(start["b"])
-            if b >= _CS_BATCHES:
-                return iter([]), {"b": b}
-            return (
-                iter([(b * _CS_PER + i, b) for i in range(_CS_PER)]),
-                {"b": b + 1},
-            )
+class _CounterStreamReader(SimpleDataSourceStreamReader):
+    def initialOffset(self):
+        return {"b": 0}
 
-        def readBetweenOffsets(self, start, end):
-            out = []
-            for b in range(int(start["b"]), int(end["b"])):
-                out.extend((b * _CS_PER + i, b) for i in range(_CS_PER))
-            return iter(out)
+    def read(self, start):
+        b = int(start["b"])
+        if b >= _CS_BATCHES:
+            return iter([]), {"b": b}
+        return (
+            iter([(b * _CS_PER + i, b) for i in range(_CS_PER)]),
+            {"b": b + 1},
+        )
 
-    _HAVE_PY_STREAM_SOURCE = True
-except ImportError:  # pragma: no cover - pyspark < 4 fallback
-    _HAVE_PY_STREAM_SOURCE = False
+    def readBetweenOffsets(self, start, end):
+        out = []
+        for b in range(int(start["b"]), int(end["b"])):
+            out.extend((b * _CS_PER + i, b) for i in range(_CS_PER))
+        return iter(out)
 
 
 @query(
@@ -1942,10 +1861,6 @@ def stm_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture: SURFACE demo of the streaming V2 contract
     (driver-side prefetch + offset log); production volume streams
     stay on the JVM file/rate/kafka sources (stm_* family)."""
-    if not _HAVE_PY_STREAM_SOURCE:  # pragma: no cover
-        raise NotImplementedError(
-            "Python streaming DataSource API requires pyspark >= 4.0"
-        )
     # The STREAMING source planner runs in a dedicated Python worker
     # that does NOT receive addPyFile includes (probed r8:
     # ModuleNotFoundError unpickling the source class under a plain
@@ -1980,9 +1895,8 @@ def stm_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="0 seconds")
         .start()
     )
-    _drain_to_target(spark, q, name, _CS_BATCHES * _CS_PER)
     return (
-        spark.table(name)
+        _drain_to_target(spark, q, name, _CS_BATCHES * _CS_PER)
         .groupBy("b")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

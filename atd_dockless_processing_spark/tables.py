@@ -19,6 +19,9 @@ import json
 import logging
 import os
 import re
+import shutil
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 from typing import NamedTuple
 
@@ -366,6 +369,43 @@ def scratch_dir(*parts: str) -> str:
     return str(p)
 
 
+def corpus_scratch(name: str, sf_dir: str, *parts: str) -> str:
+    """``.scratch/{name}/{sf_dir as one path segment}/{parts}``: the one
+    place a corpus path becomes a scratch directory name, so every key
+    keeps one directory per corpus and per tag."""
+    return scratch_dir(name, sf_dir.strip("/").replace("/", "_"), *parts)
+
+
+@contextmanager
+def run_scratch(name: str):
+    """A fresh ``.scratch/{name}/run_<uuid>`` for one run (a stream
+    checkpoint, a snapshot being folded), removed on exit — after a
+    raise too, so a failed run leaves nothing behind, not even a cached
+    footer."""
+    path = scratch_dir(name, f"run_{uuid.uuid4().hex[:8]}")
+    os.makedirs(path)
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+        for cached in [p for p in _FOOTERS if p == path or p.startswith(path + os.sep)]:
+            del _FOOTERS[cached]
+
+
+def write_one_parquet(df: DataFrame, path: str) -> None:
+    """Write ``df`` as the single parquet file ``path``: a ``coalesce(1)``
+    write into a temp directory beside it, whose one part file is then
+    moved to ``path``; the temp directory is removed even when the
+    write fails."""
+    tmp = f"{path}.tmp"
+    try:
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        (part,) = Path(tmp).glob("part-*.parquet")
+        shutil.move(str(part), path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def source_signature(path: str) -> str:
     """Freshness signature of a source parquet path, shared by every
     staleness marker in the package (stage_scratch, the Q5 bucketed
@@ -461,9 +501,7 @@ def stage_scratch(name: str, sf_dir: str, src_table: str, build_fn) -> str:
     build sequence means a staleness-rule fix lands everywhere at
     once instead of drifting per operator.
     """
-    import shutil
-
-    base = scratch_dir(name, sf_dir.strip("/").replace("/", "_"))
+    base = corpus_scratch(name, sf_dir)
     indir = f"{base}/in"
     marker = f"{base}/src_mtime"
     # While a table provider is installed, build_fn derives the staging
@@ -530,7 +568,7 @@ class Layout:
         return re.sub(r"[^A-Za-z0-9_]", "_", sf_dir.strip("/"))
 
     def base(self, sf_dir: str) -> str:
-        return scratch_dir(self.tag, sf_dir.strip("/").replace("/", "_"))
+        return corpus_scratch(self.tag, sf_dir)
 
     def names(self, sf_dir: str) -> list[str]:
         """One data-file-set name under :meth:`base` per source."""

@@ -335,7 +335,7 @@ def test_late_data_staging_tracks_part_file_rewrites(spark, tmp_path, monkeypatc
         pq.write_table(pa.table(rows, schema=schema), src / "part-0.parquet")
 
     def staged_rows() -> list[int]:
-        base = tables.scratch_dir("stm_late_data", str(sf).strip("/").replace("/", "_"))
+        base = tables.corpus_scratch("stm_late_data", str(sf))
         return [
             pq.read_metadata(f"{base}/in/f{i}.parquet").num_rows for i in range(2)
         ]
@@ -1911,13 +1911,11 @@ def test_manifest_publish_files_verify(spark, sf_dir):
     import pandas as _pd
 
     from atd_dockless_processing_spark.registry import QUERIES
-    from atd_dockless_processing_spark.tables import scratch_dir
+    from atd_dockless_processing_spark.tables import corpus_scratch
 
     got = QUERIES["snk_manifest_publish"](spark, sf_dir).toPandas().iloc[0]
     assert int(got["n_mismatch"]) == 0
-    data_dir = scratch_dir(
-        "snk_manifest_pub", sf_dir.strip("/").replace("/", "_"), "data"
-    )
+    data_dir = corpus_scratch("snk_manifest_pub", sf_dir, "data")
     files = _glob.glob(f"{data_dir}/m=*/part-*.parquet")
     assert len(files) == int(got["n_files"]) == int(got["n_months"])
     o = _pd.read_parquet(f"{sf_dir}/orders.parquet", columns=["o_totalprice"])
@@ -3625,10 +3623,8 @@ def test_tws_ttl_expiry_vs_survival_control(spark, sf_dir):
                 .trigger(availableNow=True)
                 .start()
             )
-            _drain_to_target(spark, q, name, target)
-    carried_users = (
-        spark.table(name).where(F.col("carried")).select("user_id").distinct()
-    )
+            sink = _drain_to_target(spark, q, name, target)
+    carried_users = sink.where(F.col("carried")).select("user_id").distinct()
     # with a 1h TTL every user seen in BOTH slices carries state
     assert carried_users.count() == both and both > 0
 
@@ -3799,8 +3795,11 @@ def test_drain_to_target_fails_fast_on_clean_termination(spark):
     with pytest.raises(RuntimeError, match="terminated with 3 of 100"):
         _drain_to_target(spark, _DoneQuery(), name, target=100, timeout_s=60.0)
     assert time.perf_counter() - t0 < 30.0  # nowhere near the timeout
-    # and a terminated query whose rows DID land is a clean success
-    _drain_to_target(spark, _DoneQuery(), name, target=3, timeout_s=60.0)
+    # and a terminated query whose rows DID land is a clean success;
+    # each drain drops the sink's view on exit, so register it again
+    spark.range(3).toDF("v").createOrReplaceTempView(name)
+    assert _drain_to_target(spark, _DoneQuery(), name, target=3, timeout_s=60.0).count() == 3
+    assert not spark.catalog.tableExists(name)
 
 
 def test_tumbling_us_layout_dispatch_and_identical(spark, sf_dir, tmp_path, monkeypatch):
@@ -4191,7 +4190,7 @@ def test_stage_scratch_never_persists_provider_staging(spark, sf_dir):
     from atd_dockless_processing_spark import tables
 
     name = "unit_stage_scratch_guard"
-    base = tables.scratch_dir(name, sf_dir.strip("/").replace("/", "_"))
+    base = tables.corpus_scratch(name, sf_dir)
     shutil.rmtree(base, ignore_errors=True)
     marker = f"{base}/src_mtime"
     calls: list[str] = []

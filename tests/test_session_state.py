@@ -1,22 +1,30 @@
-"""Keys borrow the one shared SparkSession and give it back as they
-found it: DataFrames reach ``spark.sql`` as keyword arguments, temp
-functions are dropped once the query is analyzed, and confs are set
-through ``session.conf_override``. A result must not depend on what
-ran before it in the same session."""
+"""Keys borrow the one shared SparkSession and the ``.scratch``
+directory and give them back as they found them: DataFrames reach
+``spark.sql`` as keyword arguments, temp functions are dropped once
+the query is analyzed, confs are set through ``session.conf_override``,
+memory sinks drop their view once the result is resolved, and per-run
+directories come from ``tables.run_scratch``, which removes them. A
+result must not depend on what ran before it in the same session."""
 
 from __future__ import annotations
 
-import pytest
+import os
+import re
+from pathlib import Path
 
-from atd_dockless_processing_spark import QUERIES
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql.streaming.query import StreamingQuery
+
+from atd_dockless_processing_spark import QUERIES, tables
 from atd_dockless_processing_spark.session import conf_override
 
-# every key that registers SQL inputs, a temp function or a conf
-# override, plus one memory-sink stream key
-SESSION_KEYS = sorted(k for k in QUERIES if k.startswith(("sql_", "udtf_"))) + [
+# every key that registers SQL inputs, a temp function, a conf
+# override or a memory sink
+SESSION_KEYS = sorted(k for k in QUERIES if k.startswith(("sql_", "udtf_", "stm_"))) + [
     "agg_listagg",
     "etl_declarative_pipeline",
-    "stm_rocksdb_changelog",
 ]
 
 
@@ -28,22 +36,66 @@ def _session_state(spark):
 
 def test_keys_leave_the_session_as_they_found_it(spark, sf_dir):
     """Temp views, temp functions and set confs are equal before and
-    after each key is built and collected; the stream key's one
-    memory-sink table is the only thing it may add."""
+    after each key is built and collected."""
     left = {}
     for key in SESSION_KEYS:
         views, funcs, conf = _session_state(spark)
         QUERIES[key](spark, sf_dir).collect()
         views2, funcs2, conf2 = _session_state(spark)
-        new_views = views ^ views2
-        if key.startswith("stm_"):
-            sinks = {v for v in views2 - views if v.startswith("stm_rkcl_")}
-            assert len(sinks) == 1, (key, sorted(views2 - views))
-            new_views -= sinks
         confs = sorted(k for k in conf.keys() | conf2.keys() if conf.get(k) != conf2.get(k))
-        if new_views or funcs != funcs2 or confs:
-            left[key] = (sorted(new_views), sorted(funcs ^ funcs2), confs)
+        if views != views2 or funcs != funcs2 or confs:
+            left[key] = (sorted(views ^ views2), sorted(funcs ^ funcs2), confs)
     assert not left, left
+
+
+def _run_dirs(tag: str) -> set[Path]:
+    """Directories under ``.scratch/{tag}`` named for one run: an
+    8-hex-digit run id in the name."""
+    root = tables.SCRATCH / tag
+    return {p for p in root.rglob("*") if p.is_dir() and re.search(r"[0-9a-f]{8}", p.name)}
+
+
+@pytest.mark.parametrize(
+    "key, tag",
+    [
+        ("stm_late_data_drop", "stm_late_data"),
+        ("stm_foreachbatch_sink", "stm_foreachbatch"),
+        ("stm_cdc_stream_apply", "stm_cdc_snap"),
+    ],
+)
+def test_a_failed_drain_leaves_no_run_directory(spark, sf_dir, monkeypatch, key, tag):
+    """A drain that raises once its stream has run leaves no per-run
+    directory under the key's tag, and no memory-sink view."""
+    await_termination = StreamingQuery.awaitTermination
+
+    def fail_after_drain(self, timeout=None):
+        await_termination(self, timeout)
+        raise RuntimeError("injected drain failure")
+
+    before, views = _run_dirs(tag), _session_state(spark)[0]
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", fail_after_drain)
+    with pytest.raises(RuntimeError, match="injected drain failure"):
+        QUERIES[key](spark, sf_dir)
+    assert _run_dirs(tag) <= before
+    assert _session_state(spark)[0] == views
+
+
+def test_run_scratch_is_fresh_and_always_removed():
+    """Two uses get two directories, each present inside its block and
+    gone after it, with the footers cached under it, after a clean exit
+    and after a raise."""
+    tag = "unit_run_scratch"
+    with tables.run_scratch(tag) as a, tables.run_scratch(tag) as b:
+        assert a != b and os.path.isdir(a) and os.path.isdir(b)
+        pq.write_table(pa.table({"v": [1]}), f"{a}/part.parquet")
+        assert tables._footers(a).nrows == 1 and a in tables._FOOTERS
+    assert not os.path.exists(a) and not os.path.exists(b)
+    assert a not in tables._FOOTERS
+    with pytest.raises(RuntimeError, match="inside the block"):
+        with tables.run_scratch(tag) as c:
+            assert os.path.isdir(c)
+            raise RuntimeError("inside the block")
+    assert not os.path.exists(c)
 
 
 def test_conf_override_restores_set_and_unset_keys(spark):
