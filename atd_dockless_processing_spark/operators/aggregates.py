@@ -13,7 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load, parquet_nrows
+from ..tables import load, rows_below
 
 
 @query(
@@ -195,6 +195,11 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# agg_grouping_sets takes its planner-Expand form below this many
+# orders rows (a performance gate: the forms are value-identical).
+_GROUPING_SETS_EXPAND_MAX_ROWS = 5_000_000
+
+
 @query(
     "agg_grouping_sets",
     oracle="""
@@ -209,20 +214,20 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS multi-grain aggregate (multi-grain reports,
     [P med]), ADAPTIVE on input size (r7 de-weak; footer-metadata
-    count). A silent size switch is SAFE here — unlike
-    agg_percentiles' exact→sketch swap (env-gated since r8), both
-    forms below are value-identical at any size, so the oracle
-    contract holds on either side:
+    count). A silent size switch is SAFE here: both forms below are
+    value-identical at any size, so the oracle contract holds on
+    either side:
 
-    - at/below ``_PCTL_EXACT_MAX_ROWS`` (driver/bench scale): the
-      planner's ``groupingSets`` Expand — ONE exchange, the fewest
+    - below ``_GROUPING_SETS_EXPAND_MAX_ROWS`` (driver/bench scale):
+      the planner's ``groupingSets`` Expand — ONE exchange, the fewest
       stages, right when the ×3 row replication is cheap;
-    - above it: FROM THE FINEST GRAIN — one combinable exchange at
-      (status, priority) collapses the stream to #distinct-pairs ×
-      partitions map-side, then all three sets re-aggregate via an
-      Expand of the ≤25-row PARTIAL (×100 A/B: full-stream Expand
-      3.19 s, decimal finest-grain 1.47 s, cents union 0.73 s, cents
-      tiny-partial Expand 0.55 s vs DuckDB 0.31 s = 1.77×, was 2.36×).
+    - from it on, or when the count is unknown: FROM THE FINEST
+      GRAIN — one combinable exchange at (status, priority) collapses
+      the stream to #distinct-pairs × partitions map-side, then all
+      three sets re-aggregate via an Expand of the ≤25-row PARTIAL
+      (×100 A/B: full-stream Expand 3.19 s, decimal finest-grain
+      1.47 s, cents union 0.73 s, cents tiny-partial Expand 0.55 s vs
+      DuckDB 0.31 s = 1.77×, was 2.36×).
 
     Both forms produce IDENTICAL values at any size: counts are
     integers and prices become EXACT INTEGER CENTS map-side
@@ -236,12 +241,9 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     defeated cached-table reuse — the analyzer's Expand rewrite
     mutates the child subtree before CacheManager's canonicalized
     match runs; the DataFrame forms here hit the cache.)"""
-    from ..tables import parquet_nrows
-
     o = load(spark, sf_dir, "orders")
     cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-    nrows = parquet_nrows(sf_dir, "orders")
-    if nrows is not None and nrows <= _PCTL_EXACT_MAX_ROWS:
+    if rows_below("agg_grouping_sets", sf_dir, "orders", _GROUPING_SETS_EXPAND_MAX_ROWS):
         return (
             o.groupingSets(
                 [["o_orderstatus"], ["o_orderpriority"], []],
@@ -372,41 +374,6 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PCTL_EXACT_MAX_ROWS = 5_000_000
-
-# Greenwald-Khanna summary accuracy for the opt-in sketch path:
-# rank error ≤ n/_PCTL_SKETCH_ACCURACY. 2500 chosen by ×100 A/B
-# (1.24 s at 10000 vs 1.11 s at 2500 — summary size is the update
-# cost) while keeping the sf0.1 boundary test inside 0.5%.
-_PCTL_SKETCH_ACCURACY = 2500
-
-
-def _percentiles_plan(o: DataFrame, exact: bool) -> DataFrame:
-    """Shared p50/p90/p99-per-priority plan; ``exact`` picks the
-    aggregate. ONE array-argument call either way — three separate
-    ``percentile(c, q)`` calls build three independent
-    TypedImperativeAggregate value→count buffers over the same column
-    (3× the per-row update cost; r7 ×100 A/B: 3.80 s three-call vs
-    1.49 s single-array — 2.55× faster)."""
-    agg = (
-        "percentile(o_totalprice, array(0.5D, 0.9D, 0.99D))"
-        if exact
-        else "percentile_approx(o_totalprice, array(0.5D, 0.9D, 0.99D), "
-        f"{_PCTL_SKETCH_ACCURACY})"
-    )
-    return (
-        o.groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"), F.expr(agg).alias("ps"))
-        .select(
-            "o_orderpriority",
-            "n_orders",
-            F.round(F.col("ps")[0], 4).alias("p50"),
-            F.round(F.col("ps")[1], 4).alias("p90"),
-            F.round(F.col("ps")[2], 4).alias("p99"),
-        )
-    )
-
-
 @query(
     "agg_percentiles",
     oracle="""
@@ -420,25 +387,34 @@ def _percentiles_plan(o: DataFrame, exact: bool) -> DataFrame:
     """,
 )
 def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percentiles (p50/p90/p99) per group. The REGISTERED key is
-    ALWAYS the EXACT linear-interpolated ``percentile`` — it must
-    satisfy its declared ``quantile_cont`` oracle at ANY scale the
-    driver sweeps, so no silent input-size switch is allowed here
-    (r8 contract fix: the former >5M-row auto-sketch would have
-    hash-failed a larger sweep while the registry still declared an
-    exact oracle).
+    """Percentiles (p50/p90/p99) per group. The key is ALWAYS the
+    EXACT linear-interpolated ``percentile`` — it must satisfy its
+    declared ``quantile_cont`` oracle at ANY scale the driver sweeps,
+    so no input-size switch is allowed here (r8 contract fix: the
+    former >5M-row auto-sketch would have hash-failed a larger sweep
+    while the registry still declared an exact oracle). Its cost at
+    scale is the TypedImperativeAggregate's O(group-distinct)
+    value→count map per group; a mergeable sketch bounds that state
+    but breaks exact parity, so it is its own key with its own oracle
+    (``agg_quantile_sketch``), never a switch inside this one.
 
-    The production scale path is ``percentile_approx``
-    (Greenwald-Khanna summary, accuracy ``_PCTL_SKETCH_ACCURACY`` →
-    rank error ≤ n/2500): MERGEABLE bounded state where exact
-    percentile's TypedImperativeAggregate materializes an
-    O(group-distinct) value→count map no 100 TB group should pay.
-    Because the sketch deliberately breaks exact-oracle parity, it is
-    never dispatched from this key: a 100 TB deployment calls
-    ``_percentiles_plan(df, exact=False)`` directly. Boundary
-    agreement (sketch within 0.5% of exact on the largest local
-    corpus) is asserted in tests."""
-    return _percentiles_plan(load(spark, sf_dir, "orders"), exact=True)
+    ONE array-argument call — three separate ``percentile(c, q)``
+    calls build three independent value→count buffers over the same
+    column (3× the per-row update cost; r7 ×100 A/B: 3.80 s
+    three-call vs 1.49 s single-array — 2.55× faster)."""
+    ps = F.expr("percentile(o_totalprice, array(0.5D, 0.9D, 0.99D))")
+    return (
+        load(spark, sf_dir, "orders")
+        .groupBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("n_orders"), ps.alias("ps"))
+        .select(
+            "o_orderpriority",
+            "n_orders",
+            F.round(F.col("ps")[0], 4).alias("p50"),
+            F.round(F.col("ps")[1], 4).alias("p90"),
+            F.round(F.col("ps")[2], 4).alias("p99"),
+        )
+    )
 
 
 @query(
@@ -614,8 +590,7 @@ def agg_corr_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.61×). The decimal power-sum form stays as
     ``_corr_cov_decimal_twin``, equality-pinned (driver corpus +
     synthesized edge corpus)."""
-    nrows = parquet_nrows(sf_dir, "lineitem")
-    if nrows is None or nrows >= _CORR_COV_UNITS_MAX_ROWS:
+    if not rows_below("agg_corr_cov", sf_dir, "lineitem", _CORR_COV_UNITS_MAX_ROWS):
         return _corr_cov_decimal_twin(spark, sf_dir)
     li = load(spark, sf_dir, "lineitem")
     ux = F.floor(F.col("l_quantity") * 10000 + F.lit(0.5)).cast("long")

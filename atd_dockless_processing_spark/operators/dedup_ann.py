@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash60, portable_hash60_sql
 from ..registry import query
-from ..tables import load
+from ..tables import load, rows_below
 
 def first_eq_band(eq_at, n_bands: int):
     """First band index j in [0, n_bands) where ``eq_at(j)`` holds,
@@ -897,9 +897,9 @@ def llm_vector_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     order contains the global top-10). round() half-away-from-zero
     agrees between Spark, DuckDB, and the numpy copysign/floor
     form."""
-    from .llm import _COSINE_ARROW_MIN_ROWS, _embeddings_nrows
+    from .llm import _COSINE_ARROW_MIN_ROWS
 
-    if _embeddings_nrows(sf_dir) >= _COSINE_ARROW_MIN_ROWS:
+    if not rows_below("llm_vector_quantize", sf_dir, "embeddings", _COSINE_ARROW_MIN_ROWS):
         return _vector_quantize_arrow(spark, sf_dir)
     v = load(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("ve")
@@ -1320,9 +1320,9 @@ def llm_ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact fold for EVERY row — 64 vectorized passes, 3.12× at
     ×100). Gated candidates rerank with the exact fold; only
     batch-local top-3 per query cross back."""
-    from .llm import _COSINE_ARROW_MIN_ROWS, _embeddings_nrows
+    from .llm import _COSINE_ARROW_MIN_ROWS
 
-    if _embeddings_nrows(sf_dir) >= _COSINE_ARROW_MIN_ROWS:
+    if not rows_below("llm_ann_hyperplane", sf_dir, "embeddings", _COSINE_ARROW_MIN_ROWS):
         return _ann_hyperplane_arrow(spark, sf_dir)
     v = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("ve")

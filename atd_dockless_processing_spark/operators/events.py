@@ -21,7 +21,7 @@ from ..functions.exact import exact_unit_sum
 from ..functions.json_fast import with_json_field
 from ..registry import query, register_layout
 from ..session import conf_override
-from ..tables import Layout, load, read_parquet
+from ..tables import Layout, load, read_parquet, rows_below
 
 
 @query(
@@ -92,16 +92,11 @@ def _tumbling_us_available(sf_dir: str) -> bool:
     return _TUMBLING_US_LAYOUT.available(None, sf_dir)
 
 
-def tumbling_hour_plan(
-    spark: SparkSession, sf_dir: str, layout: str = "auto"
-) -> DataFrame:
-    """Tumbling-hour plan dispatch: ``layout`` = 'auto' (µs-staged
-    scan when the layout exists, else ad-hoc) | 'adhoc' | 'staged'
-    (requires the layout). Shared window-agg tail keeps the forms
-    logically identical."""
-    if layout == "auto":
-        layout = "staged" if _TUMBLING_US_LAYOUT.available(spark, sf_dir) else "adhoc"
-    if layout == "staged":
+def tumbling_hour_plan(spark: SparkSession, sf_dir: str, adhoc: bool = False) -> DataFrame:
+    """Tumbling-hour plan dispatch: the µs-staged scan when the layout
+    is live and ``adhoc`` is not set, else ad hoc. Shared window-agg
+    tail keeps the forms logically identical."""
+    if _TUMBLING_US_LAYOUT.serves("evt_tumbling_hour", spark, sf_dir, adhoc):
         (staged,) = _TUMBLING_US_LAYOUT.paths(sf_dir)
         ev = read_parquet(spark, staged)
     else:
@@ -854,22 +849,19 @@ def evt_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests at sf0.01 + sf0.1 and asserted at ×100 in the A/B), so the
     size gate below is a pure PERFORMANCE gate, never a parity one
     (the agg_grouping_sets precedent, not the agg_percentiles
-    hazard): above ``_RFM_GATHER_MAX_EVENTS`` the single-partition
+    hazard): from ``_RFM_GATHER_MAX_EVENTS`` on the single-partition
     gather would bottleneck one worker, so the plan falls back to
     the chained-window form; at 100M+ users the measured crossover
     is the unpivot/range-partition form (win_ntile_pct machinery) —
     r7 ×100 A/B kept it REJECTED at this scale (1.54 s: explode ×3
     + re-group outweigh parallelizing 150k-row sorts)."""
-    from ..tables import parquet_nrows
-
     ev = load(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     per_user = ev.groupBy("user_id").agg(
         F.max("ts").alias("last_seen"),
         F.count(F.lit(1)).alias("frequency"),
         F.sum("value").alias("monetary"),
     )
-    nrows = parquet_nrows(sf_dir, "events")
-    if nrows is not None and nrows <= _RFM_GATHER_MAX_EVENTS:
+    if rows_below("evt_rfm_segments", sf_dir, "events", _RFM_GATHER_MAX_EVENTS):
         seg = per_user.repartition(1).mapInPandas(
             _rfm_score_batches, "segment string, n_users long, segment_value double"
         )
@@ -877,10 +869,10 @@ def evt_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rfm_chained_plan(per_user)
 
 
-# Above this events-row-count the user dimension is no longer a
-# safe single-partition gather (one Arrow worker holds every user);
-# the chained-window form takes over. Pure performance gate — the
-# forms are pinned value-identical.
+# From this events-row-count on, or when the count is unknown, the
+# user dimension is no longer a safe single-partition gather (one
+# Arrow worker holds every user); the chained-window form takes over.
+# Pure performance gate — the forms are pinned value-identical.
 _RFM_GATHER_MAX_EVENTS = 50_000_000
 
 

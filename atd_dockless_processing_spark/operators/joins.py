@@ -17,7 +17,7 @@ from pathlib import Path
 
 from ..functions.exact import exact_unit_sum
 from ..registry import query, register_layout
-from ..tables import Layout, load, parquet_schema
+from ..tables import DISPATCH, Layout, load, parquet_schema
 
 
 @query(
@@ -344,6 +344,8 @@ class _BucketedLayout(Layout):
     files, no data rewrite) and the one-time build cost is paid once
     per corpus, not once per session."""
 
+    form = "bucketed"
+
     def __init__(
         self,
         tag: str,
@@ -417,8 +419,6 @@ class _BucketedLayout(Layout):
         bucketing proof. Any failure degrades to False (ad-hoc plan)
         rather than raising out of a dispatch probe. Caller has
         already checked ``_disk_valid`` and the provider guard."""
-        import logging
-
         names = self.names(sf_dir)
         self._loc_verified.clear()  # this path mutates catalog entries
         try:
@@ -454,7 +454,7 @@ class _BucketedLayout(Layout):
             # failing re-attach (syntax rejected by a Spark upgrade,
             # unreadable location) is a 3x+ silent perf regression if
             # indistinguishable from 'layout not built'
-            logging.getLogger(__name__).warning(
+            DISPATCH.warning(
                 "bucketed-layout re-attach failed for %s at %s — "
                 "falling back to the ad-hoc plan",
                 self.tag,
@@ -474,7 +474,6 @@ class _BucketedLayout(Layout):
         points at A's location, silently serving A's rows (r13 ADVICE
         #1). DESCRIBE FORMATTED is driver-side metadata (~30 rows);
         any failure degrades to False → ad-hoc plan, correct rows."""
-        import logging
         from urllib.parse import unquote, urlparse
 
         if (name, expected) in self._loc_verified:
@@ -491,7 +490,7 @@ class _BucketedLayout(Layout):
             # (same rationale as _reattach's degrade path — a DESCRIBE
             # output-shape change in a Spark upgrade would otherwise
             # read as 'layout not built' and cost 3x silently)
-            logging.getLogger(__name__).warning(
+            DISPATCH.warning(
                 "could not determine catalog location of %s (expected %s)"
                 " — declining the bucketed layout for %s",
                 name,
@@ -553,19 +552,14 @@ def _q5_layout_available(spark: SparkSession, sf_dir: str) -> bool:
     return _Q5_LAYOUT.available(spark, sf_dir)
 
 
-def multiway5_plan(
-    spark: SparkSession, sf_dir: str, layout: str = "auto"
-) -> DataFrame:
-    """Q5 plan dispatch: ``layout`` = 'auto' (bucketed when the
-    layout exists, else ad-hoc) | 'adhoc' | 'bucketed' (requires the
-    layout). Shared join tail keeps the two forms logically
-    identical."""
-    if layout == "auto":
-        layout = "bucketed" if _Q5_LAYOUT.available(spark, sf_dir) else "adhoc"
+def multiway5_plan(spark: SparkSession, sf_dir: str, adhoc: bool = False) -> DataFrame:
+    """Q5 plan dispatch: bucketed when the layout is live and ``adhoc``
+    is not set, else ad hoc. Shared join tail keeps the two forms
+    logically identical."""
     date_filter = (F.col("o_orderdate") >= "1996-01-01") & (
         F.col("o_orderdate") < "1997-01-01"
     )
-    if layout == "bucketed":
+    if _Q5_LAYOUT.serves("join_multiway_5", spark, sf_dir, adhoc):
         li_tbl, o_tbl = _Q5_LAYOUT.names(sf_dir)
         li = spark.table(li_tbl)
         # merge hint: keep the sort-merge join so the bucketed
@@ -659,31 +653,27 @@ _CK_LAYOUT = register_layout(
 
 
 def _ck_sides(
-    spark: SparkSession, sf_dir: str, layout: str = "auto"
+    spark: SparkSession, sf_dir: str, key: str, adhoc: bool
 ) -> tuple[DataFrame, DataFrame, bool]:
-    """(orders, customer, is_bucketed) for the custkey join plans:
-    ``layout`` = 'auto' (bucketed when the layout exists, else ad-hoc)
-    | 'adhoc' | 'bucketed' (requires the layout). The bucketed frames
-    are the narrow external tables; callers add the merge hint on the
-    probe side so small-SF stats cannot broadcast away the layout
-    (hint scope: nearest join only — the q5-pinned Spark behavior)."""
-    if layout == "auto":
-        layout = "bucketed" if _CK_LAYOUT.available(spark, sf_dir) else "adhoc"
-    if layout == "bucketed":
+    """(orders, customer, is_bucketed) for ``key``'s custkey join plan:
+    bucketed when the layout is live and ``adhoc`` is not set, else ad
+    hoc. The bucketed frames are the narrow external tables; callers
+    add the merge hint on the probe side so small-SF stats cannot
+    broadcast away the layout (hint scope: nearest join only — the
+    q5-pinned Spark behavior)."""
+    if _CK_LAYOUT.serves(key, spark, sf_dir, adhoc):
         o_tbl, c_tbl = _CK_LAYOUT.names(sf_dir)
         return spark.table(o_tbl), spark.table(c_tbl), True
     return load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer"), False
 
 
-def custkey_inner_plan(
-    spark: SparkSession, sf_dir: str, layout: str = "auto"
-) -> DataFrame:
+def custkey_inner_plan(spark: SparkSession, sf_dir: str, adhoc: bool = False) -> DataFrame:
     """join_inner's plan: orders⋈customer + segment aggregate. With
     the layout: exchange-free SMJ off the bucketed scans, then ONE
     5-group agg exchange — 1.07x DuckDB at x100 (BASELINE.md
     round-12); without: Catalyst's shuffled-hash join, 3.59x constant-factor
     race (the r11-measured floor; eager-agg rejected, commit 853ac82)."""
-    o, c, bucketed = _ck_sides(spark, sf_dir, layout)
+    o, c, bucketed = _ck_sides(spark, sf_dir, "join_inner", adhoc)
     if bucketed:
         c = c.hint("merge")
     # r13: sum in EXACT integer cents (the floor(x*100+0.5) lift), then
@@ -705,13 +695,11 @@ def custkey_inner_plan(
     )
 
 
-def custkey_anti_plan(
-    spark: SparkSession, sf_dir: str, layout: str = "auto"
-) -> DataFrame:
+def custkey_anti_plan(spark: SparkSession, sf_dir: str, adhoc: bool = False) -> DataFrame:
     """join_anti's plan: customer ANTI orders. With the layout the
     whole query is a ZERO-exchange sort-merge anti join off the
     bucketed scans — 1.31x DuckDB at x100 (was 3.35x shuffled)."""
-    o, c, bucketed = _ck_sides(spark, sf_dir, layout)
+    o, c, bucketed = _ck_sides(spark, sf_dir, "join_anti", adhoc)
     if bucketed:
         o = o.hint("merge")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
@@ -719,9 +707,7 @@ def custkey_anti_plan(
     )
 
 
-def custkey_cross_plan(
-    spark: SparkSession, sf_dir: str, layout: str = "auto"
-) -> DataFrame:
+def custkey_cross_plan(spark: SparkSession, sf_dir: str, adhoc: bool = False) -> DataFrame:
     """join_cross_small's plan: region×status grid left-joined with
     actual counts. r12 rewrite (BOTH forms): aggregate the
     orders⋈customer spine to (c_nationkey, o_orderstatus) — ≤75
@@ -730,7 +716,7 @@ def custkey_cross_plan(
     (value-identical: count partitioned by nationkey sums to the
     region counts). With the layout the spine is the exchange-free
     SMJ: 1.23x DuckDB at x100 (ad-hoc 2.80x, was 3.99x pre-r12)."""
-    o, c, bucketed = _ck_sides(spark, sf_dir, layout)
+    o, c, bucketed = _ck_sides(spark, sf_dir, "join_cross_small", adhoc)
     if bucketed:
         c = c.hint("merge")
     region = load(spark, sf_dir, "region")

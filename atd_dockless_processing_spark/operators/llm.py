@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash60, portable_hash60_sql
 from ..registry import query
-from ..tables import load
+from ..tables import load, rows_below
 from .dedup_ann import _as_double, _dot, _embedding_matrix, _norm, first_eq_band
 from .text import _bigrams_from, _token_set
 
@@ -173,7 +173,8 @@ def llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     - below ``_COSINE_ARROW_MIN_ROWS`` (bench/driver scale): the
       zip_with/aggregate HOF — best JVM-side strategy, no Python in
       the plan, wins when per-batch Arrow transfer would dominate;
-    - at/above it (the ×100 / production regime): ``mapInArrow``
+    - from it on, or when the count is unknown (the ×100 /
+      production regime): ``mapInArrow``
       numpy scoring — the embedding column's Arrow list buffer is
       reshaped (-1, dim) WITHOUT per-row boxing, one float64 BLAS
       matrix-vector product scores the whole batch, and only each
@@ -185,7 +186,7 @@ def llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no job). Both paths produce identical rounded scores (asserted
     cross-path in tests); at 100 TB the same scoring runs after an
     LSH/IVF candidate prune (llm_ann_*)."""
-    if _embeddings_nrows(sf_dir) >= _COSINE_ARROW_MIN_ROWS:
+    if not rows_below("llm_cosine_topk", sf_dir, "embeddings", _COSINE_ARROW_MIN_ROWS):
         return _cosine_topk_arrow(spark, sf_dir)
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("v")
@@ -205,19 +206,9 @@ def llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(10)
 
 
+# The cosine family (llm_cosine_topk, llm_knn_join, llm_vector_quantize,
+# llm_ann_hyperplane) takes its HOF form below this embeddings-row-count.
 _COSINE_ARROW_MIN_ROWS = 100_000
-
-
-def _embeddings_nrows(sf_dir: str) -> int:
-    """Exact embeddings row count via :func:`tables.parquet_nrows`
-    (footer metadata, file or dir). 0 — i.e. route to the HOF path,
-    correct for any small/unknown corpus — when the path isn't local
-    plain parquet; the helper WARNS on that fallback so a production
-    object-store corpus never lands on the slow path silently
-    (round-6 ADVICE)."""
-    from ..tables import parquet_nrows
-
-    return parquet_nrows(sf_dir, "embeddings") or 0
 
 
 def _cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,7 +299,7 @@ def llm_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3 per query (<=60 rows/batch), so the per-query rank window
     sorts a metadata-sized stream instead of 20 corpus-size
     partitions."""
-    if _embeddings_nrows(sf_dir) >= _COSINE_ARROW_MIN_ROWS:
+    if not rows_below("llm_knn_join", sf_dir, "embeddings", _COSINE_ARROW_MIN_ROWS):
         return _knn_join_arrow(spark, sf_dir)
     emb = (
         load(spark, sf_dir, "embeddings")

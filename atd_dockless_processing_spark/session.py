@@ -24,6 +24,23 @@ from pyspark.sql import SparkSession
 
 _PKG_ZIP: str | None = None
 
+# Runtime confs: get_spark builds with them, tune() sets them.
+_RUNTIME_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.shuffle.partitions": "32",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # Allow shuffled-hash-join where the per-partition build side
+    # fits memory (Catalyst still requires canBuildLocalHashMap;
+    # AQE re-plans if runtime sizes disagree). Measured on the
+    # x100 rehearsal: Q3-shape 3-way join 5.9s (sort-merge) ->
+    # 2.9s (hash) — the sorts, not the shuffles, were the cost.
+    # Hinted merge joins (bucketed tables) are unaffected.
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
 
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable in Spark's Python WORKER processes.
@@ -59,19 +76,7 @@ def get_spark(app_name: str = "atd-dockless-spark", master: str | None = None) -
     spark = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Allow shuffled-hash-join where the per-partition build side
-        # fits memory (Catalyst still requires canBuildLocalHashMap;
-        # AQE re-plans if runtime sizes disagree). Measured on the
-        # x100 rehearsal: Q3-shape 3-way join 5.9s (sort-merge) ->
-        # 2.9s (hash) — the sorts, not the shuffles, were the cost.
-        # Hinted merge joins (bucketed tables) are unaffected.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(map=_RUNTIME_CONFS)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # Default 1g (Spark's own default). The xN rehearsal raises it
         # via env: map-only shapes (fn_/flt_/prj_) produce table-sized
@@ -97,13 +102,9 @@ def tune(spark: SparkSession) -> SparkSession:
     env = spark.sparkContext.environment
     if env.get("__atd_tuned__"):
         return spark
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
+        for k, v in _RUNTIME_CONFS.items():
+            spark.conf.set(k, v)
     except Exception:
         pass
     _ship_package(spark)

@@ -115,8 +115,16 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # Dispatch records: one structured record per decision a run should
-# be able to explain, with the path, the decision and the reason.
+# be able to explain, with the key or path, the decision and the reason.
 DISPATCH = logging.getLogger("atd_dockless_processing_spark.dispatch")
+
+
+def _decided(key: str, decision: str, reason: str) -> None:
+    """The one dispatch record of a physical form ``key`` chose while
+    its plan was built."""
+    extra = {"key": key, "decision": decision, "reason": reason}
+    DISPATCH.info("%s: %s (%s)", key, decision, reason, extra=extra)
+
 
 # Spark-written files carry their Spark schema as JSON under this
 # footer key, and Spark's inference takes it over the parquet types.
@@ -342,25 +350,30 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def parquet_nrows(sf_dir: str, name: str):
+def parquet_nrows(sf_dir: str, name: str) -> int | None:
     """Exact row count of ``{sf_dir}/{name}.parquet`` (plain file or
     directory of part files), summed over the data files' FOOTERS of
     the same cached pass :func:`footer_schema` reads — metadata-only,
-    no Spark job. Returns ``None`` (with a visible warning) when the
-    path isn't local plain parquet — object-store dirs, test-injected
-    providers — so callers choose their own safe default instead of
-    silently treating the corpus as empty (round-6 ADVICE on
-    ``_embeddings_nrows``)."""
-    import warnings
+    no Spark job. ``None`` when the footers cannot tell it (a URI, a
+    footer that will not open), so a caller never treats an unknown
+    corpus as empty."""
+    return _footers(f"{sf_dir}/{name}.parquet").nrows
 
-    path = f"{sf_dir}/{name}.parquet"
-    footers = _footers(path)
-    if footers.nrows is None:
-        warnings.warn(
-            f"parquet_nrows({path}): footer read failed ({footers.reason}); "
-            "caller falls back to its size-unknown path"
-        )
-    return footers.nrows
+
+def rows_below(key: str, sf_dir: str, table: str, bound: int) -> bool:
+    """True only when the footers of ``{sf_dir}/{table}.parquet`` count
+    fewer than ``bound`` rows, so ``key`` may take its small-input
+    form. An unknown count is False: the key takes the form that holds
+    at any size. The one row-count gate of the package; it writes one
+    dispatch record naming the table, the count (or the footers'
+    reason for having none) and the bound."""
+    footers = _footers(f"{sf_dir}/{table}.parquet")
+    nrows = footers.nrows
+    below = nrows is not None and nrows < bound
+    count = f"unknown ({footers.reason})" if nrows is None else nrows
+    decision = "small-input form" if below else "any-size form"
+    _decided(key, decision, f"{table} rows: {count}, bound {bound}")
+    return below
 
 
 def scratch_dir(*parts: str) -> str:
@@ -413,7 +426,7 @@ def source_signature(path: str) -> str:
     file's (name, mtime_ns, size) — an in-place rewrite of one part
     file does not bump the directory's own mtime/size, so a dir-level
     stat would silently serve stale staged data (r8 ADVICE #1, r9
-    review finding #1; mirrors ``parquet_nrows``'s isdir branch). An
+    review finding #1; mirrors ``_read_footers``'s isdir branch). An
     unstatable path (moved testdata, provider-served sf_dir) yields a
     NONCE signature — never equal to any stored marker, even one
     written while the source was equally unstatable — so callers
@@ -550,7 +563,10 @@ class Layout:
 
     ``writer(spark, sf_dir, *paths)`` writes the data files, one path
     per source table; layouts that also keep catalog state subclass
-    and override :meth:`write` and :meth:`available`."""
+    and override :meth:`write` and :meth:`available`. A key asks
+    :meth:`serves`, whose record names the layout's ``form``."""
+
+    form = "staged"
 
     def __init__(self, tag: str, label: str, sources: tuple[str, ...], writer=None):
         self.tag = tag
@@ -606,6 +622,20 @@ class Layout:
         layout would silently shadow its rows (r10 second-review
         finding #1)."""
         return not provider_active() and self._disk_valid(sf_dir)
+
+    def serves(self, key: str, spark: SparkSession, sf_dir: str, adhoc: bool = False) -> bool:
+        """True when ``key`` takes this layout's form: it is
+        :meth:`available` and the caller did not ask for the ad hoc
+        form. Writes one dispatch record: the form, and why."""
+        use = not adhoc and self.available(spark, sf_dir)
+        why = (
+            "ad hoc form requested" if adhoc
+            else "layout live" if use
+            else "a table provider serves the tables" if provider_active()
+            else "layout not built, stale or not attached"
+        )
+        _decided(key, self.form if use else "adhoc", f"{self.tag} at {sf_dir}: {why}")
+        return use
 
     def write(self, spark: SparkSession, sf_dir: str) -> None:
         self._writer(spark, sf_dir, *self.paths(sf_dir))

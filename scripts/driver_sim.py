@@ -22,7 +22,9 @@ Usage (run via a clean subprocess so no house session leaks in):
         # clean round boundary. The synthetic file is removed after.
 
 Checks per key: count() AND a limited toPandas() — the two pruning
-extremes. Exits non-zero on any failure.
+extremes. Under each key's line it prints the dispatch records its two
+builds wrote (``tables.DISPATCH``: the physical form chosen, and why).
+Exits non-zero on any failure.
 """
 
 from __future__ import annotations
@@ -42,7 +44,13 @@ spec = importlib.util.spec_from_file_location(
 )
 m = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(m)
+import logging.handlers
 from pyspark.sql import SparkSession
+from atd_dockless_processing_spark.tables import DISPATCH
+
+records = logging.handlers.BufferingHandler(1 << 20)
+DISPATCH.addHandler(records)
+DISPATCH.setLevel(logging.INFO)
 
 spark = SparkSession.builder.master("local[8]").getOrCreate()
 qs = m.queries()
@@ -62,6 +70,9 @@ for k in keys:
     except Exception as e:  # noqa: BLE001 - report and continue
         fails += 1
         print("ERR", k, type(e).__name__, str(e)[:200], flush=True)
+    for r in records.buffer:
+        print("   ", r.getMessage(), flush=True)
+    records.flush()
 print("FAILS", fails, flush=True)
 sys.exit(1 if fails else 0)
 """

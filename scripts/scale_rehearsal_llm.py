@@ -75,7 +75,11 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from atd_dockless_processing_spark import QUERIES  # noqa: E402
 from atd_dockless_processing_spark.session import get_spark  # noqa: E402
-from atd_dockless_processing_spark.tables import load, marker_matches  # noqa: E402
+from atd_dockless_processing_spark.tables import (  # noqa: E402
+    load,
+    marker_matches,
+    source_signature,
+)
 
 BASE_SF = "/root/testdata/sf0.1"
 SHAPES = {
@@ -97,14 +101,12 @@ SHAPES = {
 
 
 def build(spark, mult: int) -> str:
-    import os
-
     out = REPO / ".scratch" / f"scale_llm_x{mult}"
     dst = out / "documents.parquet"
     # source-freshness marker: rebuild replicas when the base corpus
     # regenerates (same staleness class as the stream stagings)
     marker = out / "src_mtime"
-    src_sig = str(os.stat(f"{BASE_SF}/documents.parquet").st_mtime_ns)
+    src_sig = source_signature(f"{BASE_SF}/documents.parquet")
     fresh = (dst / "_SUCCESS").exists() and marker_matches(marker, src_sig)
     if not fresh:
         # fan the 1-row-group source across many small map tasks BEFORE
@@ -165,8 +167,6 @@ def build_lowdensity(spark, mult: int) -> str:
     range. True pairs ≈ docs/1000, linear in the multiplier; banded
     candidates ≈ E[J_random]·n²/2 per block — the quantity whose
     'verify is linear in candidates' claim this rehearsal measures."""
-    import os
-
     out = REPO / ".scratch" / f"scale_llm_lowdens_x{mult}"
     dst = out / "documents.parquet"
     marker = out / "src_mtime"
@@ -174,7 +174,7 @@ def build_lowdensity(spark, mult: int) -> str:
     # high-entropy texts, '=' padding stripped); BUMP THE PREFIX in
     # lockstep with any design change below or the marker will
     # silently match a stale corpus
-    src_sig = "v3:" + str(os.stat(f"{BASE_SF}/documents.parquet").st_mtime_ns)
+    src_sig = "v3:" + source_signature(f"{BASE_SF}/documents.parquet")
     fresh = (dst / "_SUCCESS").exists() and marker_matches(marker, src_sig)
     if not fresh:
         docs = (

@@ -880,12 +880,15 @@ def test_ann_hyperplane_adaptive_paths_agree(spark, sf_dir):
 def test_cosine_threshold_routes_by_rowcount(sf_dir):
     """The adaptive switch reads parquet footers only (no Spark job):
     driver sf dirs are below the threshold (HOF path), and a missing/
-    non-parquet path degrades to 0 (HOF path — safe default)."""
+    non-parquet path has no count and takes the Arrow path, which
+    holds at any size."""
+    from atd_dockless_processing_spark import tables
     from atd_dockless_processing_spark.operators import llm
 
-    n = llm._embeddings_nrows(sf_dir)
-    assert 0 < n < llm._COSINE_ARROW_MIN_ROWS
-    assert llm._embeddings_nrows("/nonexistent") == 0
+    bound = llm._COSINE_ARROW_MIN_ROWS
+    assert 0 < tables.parquet_nrows(sf_dir, "embeddings") < bound
+    assert tables.rows_below("llm_cosine_topk", sf_dir, "embeddings", bound)
+    assert not tables.rows_below("llm_cosine_topk", "/nonexistent", "embeddings", bound)
 
 
 def test_quantile_sketch_within_bucket_width(spark, sf_dir, duck):
@@ -2410,37 +2413,6 @@ def test_bbox_adaptive_paths_agree(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan[:2000]
 
 
-def test_percentile_adaptive_boundary_agreement(spark):
-    """The opt-in sketch path must be value-safe where a deployment
-    would flip it on: on the LARGEST local corpus (sf0.1 orders,
-    1.5M rows) the Greenwald-Khanna path's p50/p90/p99 per group land
-    within 0.5% of the exact linear-interpolated values. Tolerance
-    derivation: accuracy ``_PCTL_SKETCH_ACCURACY`` → rank error ≤
-    n/accuracy = 0.04% of rows; 0.5% VALUE tolerance covers the value
-    spread across that rank band on this distribution."""
-    from atd_dockless_processing_spark.operators.aggregates import (
-        _PCTL_SKETCH_ACCURACY,
-        _percentiles_plan,
-    )
-    from atd_dockless_processing_spark.tables import load
-
-    assert _PCTL_SKETCH_ACCURACY == 2500  # tolerance derived from this
-
-    o = load(spark, "/root/testdata/sf0.1", "orders")
-    exact = {
-        r["o_orderpriority"]: r for r in _percentiles_plan(o, exact=True).collect()
-    }
-    approx = {
-        r["o_orderpriority"]: r for r in _percentiles_plan(o, exact=False).collect()
-    }
-    assert exact.keys() == approx.keys() and exact
-    for k in exact:
-        assert exact[k]["n_orders"] == approx[k]["n_orders"]
-        for c in ("p50", "p90", "p99"):
-            e, a = exact[k][c], approx[k][c]
-            assert abs(a - e) / e < 0.005, (k, c, e, a)
-
-
 def test_r7_single_exchange_plan_shapes(spark, sf_dir):
     """Pins the r7 single-pass plan shapes: gap islands = ONE parquet
     scan + ONE exchange (the set-fold form); cohort retention = ONE
@@ -2687,7 +2659,7 @@ def test_grouping_sets_adaptive_forms_equal(spark, sf_dir):
     import unittest.mock as mock
 
     with mock.patch.object(
-        agg_mod, "_PCTL_EXACT_MAX_ROWS", -1
+        agg_mod, "_GROUPING_SETS_EXPAND_MAX_ROWS", -1
     ):  # force the finest-grain branch
         big = sorted(
             map(tuple, agg_mod.agg_grouping_sets(spark, sf_dir).collect()),
@@ -2812,31 +2784,13 @@ def test_rfm_gather_and_chained_forms_identical(spark, sf_dir):
     """The r8 Arrow-gather NTILE scorer must be value-identical to
     the chained-window form it replaced (the size gate between them
     is performance-only): exact closed-form ntile + lexsort tiebreak
-    == three NTILE(5) windows, at sf0.001 and sf0.1."""
-    from pyspark.sql import functions as F
-
-    from atd_dockless_processing_spark.operators.events import (
-        _rfm_chained_plan,
-        _rfm_score_batches,
-    )
-    from atd_dockless_processing_spark.tables import load
-
+    == three NTILE(5) windows, at sf0.001 and sf0.1. The key takes the
+    chained form under a ``file:`` URI, whose footers give no count."""
     for d in (sf_dir, "/root/testdata/sf0.1"):
-        ev = load(spark, d, "events").where(F.col("event_type") == "purchase")
-        per_user = ev.groupBy("user_id").agg(
-            F.max("ts").alias("last_seen"),
-            F.count(F.lit(1)).alias("frequency"),
-            F.sum("value").alias("monetary"),
-        )
-        gather = (
-            per_user.repartition(1)
-            .mapInPandas(
-                _rfm_score_batches,
-                "segment string, n_users long, segment_value double",
-            )
-            .withColumn("segment_value", F.round("segment_value", 4))
-        )
-        chained = _rfm_chained_plan(per_user)
+        gather = QUERIES["evt_rfm_segments"](spark, d)
+        chained = QUERIES["evt_rfm_segments"](spark, f"file://{d}")
+        assert "MapInPandas" in gather._jdf.queryExecution().optimizedPlan().toString()
+        assert "Window" in chained._jdf.queryExecution().optimizedPlan().toString()
         a = sorted(map(tuple, gather.collect()))
         b = sorted(map(tuple, chained.collect()))
         assert a == b and a, (d, a[:3], b[:3])
@@ -2864,7 +2818,7 @@ def _drop_layout(spark, layout, sf_dir):
     shutil.rmtree(layout.base(sf_dir), ignore_errors=True)
 
 
-# the registered key whose 'auto' plan dispatches on each layout
+# the registered key whose default plan dispatches on each layout
 _LAYOUT_KEYS = {
     "q5_bucketed": "join_multiway_5",
     "ck_bucketed": "join_inner",
@@ -2876,7 +2830,7 @@ _LAYOUT_KEYS = {
 def test_layout_marker_read_race_degrades_to_adhoc(spark, sf_dir, tmp_path, monkeypatch, tag):
     """A marker deleted between the probe's existence checks and its
     read (another session's cleanup racing the probe) must make
-    ``available`` False and the key's 'auto' plan the ad hoc form —
+    ``available`` False and the key's default plan the ad hoc form —
     never raise out of query dispatch. The layout's file sets are
     manufactured (a ``_SUCCESS`` each, no data) with a matching marker
     over a symlinked copy of the corpus, so a dispatch to the layout
@@ -2919,14 +2873,14 @@ def test_layout_marker_read_race_degrades_to_adhoc(spark, sf_dir, tmp_path, monk
 
 def test_q5_bucketed_layout_exchange_free_and_identical(spark, sf_dir, monkeypatch):
     """The layout-aware Q5 dispatch (r8): once the bucketed-orderkey
-    layout exists, 'auto' must pick it, the orderkey fact-fact join
+    layout exists, the default must pick it, the orderkey fact-fact join
     must consume the bucketed scans with NO Exchange on either side,
     and the result must equal the ad-hoc plan row-for-row.
 
     r13: cleanup added (the CK tests' try/finally discipline) — a
     leaked layout was inert while availability was catalog-scoped,
     but with DDL re-attach it would silently flip every later
-    sf0.001 'auto' plan to bucketed-4, making suite plans order-
+    sf0.001 default plan to bucketed-4, making suite plans order-
     dependent (values stay identical by construction, but plan
     assertions must be deterministic)."""
     import re as _re
@@ -2943,7 +2897,7 @@ def test_q5_bucketed_layout_exchange_free_and_identical(spark, sf_dir, monkeypat
         # includes the count), and a fresh marker must be required
         assert not lay16.available(spark, sf_dir)
 
-        adhoc = sorted(map(tuple, joins.multiway5_plan(spark, sf_dir, "adhoc").collect()))
+        adhoc = sorted(map(tuple, joins.multiway5_plan(spark, sf_dir, adhoc=True).collect()))
         auto = joins.multiway5_plan(spark, sf_dir)  # must dispatch to bucketed
         plan = auto._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan, plan[:2000]
@@ -3804,7 +3758,7 @@ def test_drain_to_target_fails_fast_on_clean_termination(spark):
 
 def test_tumbling_us_layout_dispatch_and_identical(spark, sf_dir, tmp_path, monkeypatch):
     """The layout-aware tumbling dispatch (r10, VERDICT r9 item 2):
-    once the µs-staged narrow layout exists, 'auto' must pick it (scan
+    once the µs-staged narrow layout exists, the default must pick it (scan
     reads the scratch path, physical ts is TIMESTAMP_MICROS), the
     result must equal the ad-hoc plan row-for-row, and a source
     regeneration must invalidate the layout."""
@@ -3832,7 +3786,7 @@ def test_tumbling_us_layout_dispatch_and_identical(spark, sf_dir, tmp_path, monk
         assert str(pq.ParquetFile(part).schema_arrow.field("ts").type) == "timestamp[us, tz=UTC]"
         assert pq.ParquetFile(part).schema_arrow.names == ["ts", "event_type", "value"]
 
-        adhoc = sorted(map(tuple, tumbling_hour_plan(spark, sf_dir, "adhoc").collect()))
+        adhoc = sorted(map(tuple, tumbling_hour_plan(spark, sf_dir, adhoc=True).collect()))
         auto = tumbling_hour_plan(spark, sf_dir)  # must dispatch to staged
         plan = auto._jdf.queryExecution().executedPlan().toString()
         assert "events_us" in plan, plan[:2000]
@@ -3847,7 +3801,7 @@ def test_tumbling_us_layout_dispatch_and_identical(spark, sf_dir, tmp_path, monk
 
         # freshness: against a THROWAWAY copy of the source (testdata
         # is read-only), build a layout, then bump the copy's mtime —
-        # the layout must stop dispatching, 'auto' falls back to ad-hoc
+        # the layout must stop dispatching, the default falls back to ad hoc
         os.makedirs(tmp_sf)
         if os.path.isdir(f"{sf_dir}/events.parquet"):
             shutil.copytree(f"{sf_dir}/events.parquet", f"{tmp_sf}/events.parquet")
@@ -4429,7 +4383,7 @@ def test_custkey_bucketed_layout_dispatch_identity_and_staleness(spark, sf_dir, 
         assert "SortMergeJoin" in plan, plan[:2000]
         assert "Exchange hashpartitioning" not in plan, plan[:3000]
         adhoc = sorted(
-            map(tuple, custkey_anti_plan(spark, sf_dir, "adhoc").collect())
+            map(tuple, custkey_anti_plan(spark, sf_dir, adhoc=True).collect())
         )
         assert sorted(map(tuple, anti_auto.collect())) == adhoc
 
@@ -4445,7 +4399,7 @@ def test_custkey_bucketed_layout_dispatch_identity_and_staleness(spark, sf_dir, 
         }
         want = {
             r["c_mktsegment"]: r
-            for r in custkey_inner_plan(spark, sf_dir, "adhoc").collect()
+            for r in custkey_inner_plan(spark, sf_dir, adhoc=True).collect()
         }
         assert set(got) == set(want) and got
         for seg in want:
@@ -4463,7 +4417,7 @@ def test_custkey_bucketed_layout_dispatch_identity_and_staleness(spark, sf_dir, 
         assert not _re.search(r"Exchange hashpartitioning\(o_custkey", plan)
         assert not _re.search(r"Exchange hashpartitioning\(c_custkey", plan)
         assert sorted(map(tuple, cross_auto.collect())) == sorted(
-            map(tuple, custkey_cross_plan(spark, sf_dir, "adhoc").collect())
+            map(tuple, custkey_cross_plan(spark, sf_dir, adhoc=True).collect())
         )
 
         # ---- staleness: a mismatching marker hides the layout ----
@@ -4512,7 +4466,7 @@ def test_bucketed_layout_reattaches_across_sessions(spark, sf_dir, monkeypatch):
     lay.ensure(spark, sf_dir)
     try:
         adhoc_inner = sorted(
-            map(tuple, custkey_inner_plan(spark, sf_dir, "adhoc").collect())
+            map(tuple, custkey_inner_plan(spark, sf_dir, adhoc=True).collect())
         )
 
         # ---- the session boundary: catalog entries vanish ----
@@ -4667,7 +4621,7 @@ def test_build_layouts_ops_script(spark, sf_dir, tmp_path):
     must come up LIVE, exit code 0, and a second run must be a cheap
     idempotent re-verify (no rebuild: the bucketed data files keep
     their mtimes). Cleans up its scratch layout dirs in finally (a
-    leaked layout re-attaches and flips later 'auto' plans — the r13
+    leaked layout re-attaches and flips later default plans — the r13
     lesson)."""
     import shutil
     import subprocess

@@ -4,7 +4,11 @@ building a plan runs no schema-inference Spark job. Pins: the footer
 schema equals Spark's inferred one for every driver table and for one
 small file per dispatch row; what the reader cannot map falls back to
 the inferring read with one dispatch record; an in-place rewrite is
-re-read; and the bench and batch-etl keys build with 0 jobs."""
+re-read; and the bench and batch-etl keys build with 0 jobs. The same
+footers give the row count of ``tables.rows_below``, the one row-count
+gate: every key that chooses a physical form while its plan is built
+writes exactly one dispatch record, and an unknown count takes the
+form that holds at any size."""
 
 from __future__ import annotations
 
@@ -19,7 +23,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from atd_dockless_processing_spark import tables
+from atd_dockless_processing_spark import QUERIES, tables
 
 REPO = Path(__file__).resolve().parent.parent
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
@@ -155,10 +159,11 @@ def test_footer_schema_directories(spark, tmp_path):
     assert tables.footer_schema(spark, "s3a://bucket/t.parquet") is None
 
 
-def test_parquet_nrows_counts_spark_data_files(tmp_path):
+def test_parquet_nrows_counts_spark_data_files(tmp_path, caplog):
     """parquet_nrows sums every data file's footer and skips names
     starting with ``_`` or ``.``, as Spark does; a missing path is
-    ``None`` with a warning."""
+    ``None``, and the row-count gate on it is False with one dispatch
+    record that gives the footers' reason."""
     d = tmp_path / "t.parquet"
     d.mkdir()
     pq.write_table(pa.table({"x": [1, 2]}), str(d / "part-0.parquet"))
@@ -166,8 +171,14 @@ def test_parquet_nrows_counts_spark_data_files(tmp_path):
     (d / "_SUCCESS").write_text("")
     (d / ".part-0.parquet.crc").write_text("not parquet")
     assert tables.parquet_nrows(str(tmp_path), "t") == 5
-    with pytest.warns(UserWarning, match="footer read failed"):
-        assert tables.parquet_nrows(str(tmp_path), "missing") is None
+    assert tables.parquet_nrows(str(tmp_path), "missing") is None
+    with caplog.at_level(logging.INFO, logger=tables.DISPATCH.name):
+        assert not tables.rows_below("k", str(tmp_path), "missing", 10)
+    records = [r for r in caplog.records if r.name == tables.DISPATCH.name]
+    assert [(r.key, r.decision) for r in records] == [("k", "any-size form")]
+    assert "footer will not open" in records[0].reason
+    assert tables.rows_below("k", str(tmp_path), "t", 6)
+    assert not tables.rows_below("k", str(tmp_path), "t", 5)
 
 
 def test_load_rereads_a_rewritten_file(spark, tmp_path):
@@ -205,3 +216,43 @@ def test_bench_and_batch_keys_build_without_jobs(spark, sf_dir):
     assert len(keys) == 15
     jobs = {key: build_jobs(spark, key, sf_dir)[1] for key in keys}
     assert jobs == dict.fromkeys(keys, 0)
+
+
+# gate key -> "this optimized plan is the key's small-input form"
+_SMALL_FORM = {
+    "agg_grouping_sets": lambda p: "Expand" in p,
+    "agg_corr_cov": lambda p: "4294967296" in p,
+    "evt_rfm_segments": lambda p: "MapInPandas" in p,
+    "llm_cosine_topk": lambda p: "MapInArrow" not in p,
+    "llm_knn_join": lambda p: "MapInArrow" not in p,
+    "llm_vector_quantize": lambda p: "MapInArrow" not in p,
+    "llm_ann_hyperplane": lambda p: "MapInArrow" not in p,
+}
+_LAYOUT_KEYS = (
+    "join_inner", "join_anti", "join_cross_small", "join_multiway_5", "evt_tumbling_hour"
+)
+
+
+@pytest.mark.parametrize("key", [*_SMALL_FORM, *_LAYOUT_KEYS])
+def test_plan_build_writes_one_decision_record(spark, sf_dir, caplog, key):
+    """One record (footer-schema fallbacks, which name a path, aside)
+    per build, with ``key``, ``decision`` and ``reason``; the gate keys
+    take their small-input form on the driver corpus and their any-size
+    form under a ``file:`` URI, whose footers give no row count."""
+
+    def build(d):
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger=tables.DISPATCH.name):
+            plan = QUERIES[key](spark, d)._jdf.queryExecution().optimizedPlan().toString()
+        recs = [r for r in caplog.records if r.name == tables.DISPATCH.name]
+        return plan, [r for r in recs if not hasattr(r, "path")]
+
+    plan, records = build(sf_dir)
+    assert [r.key for r in records] == [key] and records[0].reason
+    if key in _LAYOUT_KEYS:
+        assert records[0].decision in ("bucketed", "staged", "adhoc")
+        return
+    assert records[0].decision == "small-input form" and _SMALL_FORM[key](plan), plan
+    plan, records = build(f"file://{sf_dir}")
+    assert [(r.key, r.decision) for r in records] == [(key, "any-size form")]
+    assert "unknown" in records[0].reason and not _SMALL_FORM[key](plan), plan

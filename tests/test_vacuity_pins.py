@@ -717,10 +717,11 @@ def test_corr_cov_units_form_matches_decimal_twin(spark, sf_dir, tmp_path):
 def test_corr_cov_dispatches_decimal_twin_past_row_bound(spark, sf_dir, monkeypatch):
     """agg_corr_cov picks its form from the lineitem footer count: the
     long-unit form below ``_CORR_COV_UNITS_MAX_ROWS``, the decimal twin
-    at or past it and when the count is unknown. Forcing the bound to
-    0 dispatches the twin, whose values equal the long-unit result on
-    sf0.01. The default dispatch is the long-unit form, so the pin
-    above compares two different plans."""
+    at or past it and when the count is unknown (a ``file:`` URI, whose
+    footers are left to Spark). Forcing the bound to 0 dispatches the
+    twin, whose values equal the long-unit result on sf0.01. The
+    default dispatch is the long-unit form, so the pin above compares
+    two different plans."""
     from atd_dockless_processing_spark.operators import aggregates
 
     sf01 = str(Path(sf_dir).with_name("sf0.01"))
@@ -736,8 +737,7 @@ def test_corr_cov_dispatches_decimal_twin_past_row_bound(spark, sf_dir, monkeypa
     got = sorted(map(tuple, wide.collect()))
     assert got == sorted(map(tuple, units.collect())) and len(got) == 3
     monkeypatch.undo()
-    monkeypatch.setattr(aggregates, "parquet_nrows", lambda sf, name: None)
-    assert not is_units(QUERIES["agg_corr_cov"](spark, sf01))
+    assert not is_units(QUERIES["agg_corr_cov"](spark, f"file://{sf01}"))
 
 
 def test_ab_runner_checks_corr_cov_twin(sf_dir):
