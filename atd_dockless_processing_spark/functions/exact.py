@@ -23,7 +23,9 @@ Past it, lift into decimal(38,0) before summing.
 
 Used by the layout-dispatched keys (join_inner, join_multiway_5,
 evt_tumbling_hour), where the bucketed/staged physical plan IS live
-during hash-gated driver sweeps since the r13 DDL re-attach.
+during hash-gated driver sweeps since the r13 DDL re-attach;
+join_multiway_5 and evt_tumbling_hour build from one SQL text, which
+spells the same lift as ``floor(x * unit + 0.5D)`` and ``/ unitD``.
 
 Scope note: this helper is the single-aggregate form of the
 discipline. The PAIRS-FIRST/groupingSets keys (aggregates.py —

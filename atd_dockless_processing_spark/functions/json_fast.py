@@ -28,7 +28,7 @@ column, not the regex.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["with_json_field"]
@@ -76,6 +76,11 @@ _NUM = r"(?:-?0\.\d+|(?:0|-?[1-9]\d*)(?:\.\d+)?)(?:[eE][+-]?\d+)?"
 _STR = r"(?:0|-?[1-9]\d{0,17})"
 
 
+def _sql_literal(text: str) -> str:
+    # a Spark SQL string literal whose value is exactly ``text``
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def with_json_field(
     df: DataFrame,
     out: str,
@@ -88,16 +93,15 @@ def with_json_field(
     anchored-regex fast path with exact per-row Jackson fallback.
 
     Two projection tiers: the regex token is staged so the guard and
-    the cast reference ONE evaluation (no-CSE hazard)."""
+    the cast reference ONE evaluation (no-CSE hazard). Each tier's
+    expression goes to the JVM as one SQL string."""
     token = (
         _INT if dtype in ("int", "bigint") else _STR if dtype == "string" else _NUM
     )
-    staged = df.withColumn(
-        "__jx_tok", F.regexp_extract(F.col(json_col), _flat_pattern(key, token), 1)
-    )
-    tok = F.col("__jx_tok")
-    slow: Column = F.get_json_object(F.col(json_col), f"$.{key}")
-    value = F.when(tok != "", tok).otherwise(slow)
+    pattern = _sql_literal(_flat_pattern(key, token))
+    staged = df.withColumn("__jx_tok", F.expr(f"regexp_extract({json_col}, {pattern}, 1)"))
+    path = _sql_literal(f"$.{key}")
+    value = f"CASE WHEN __jx_tok != '' THEN __jx_tok ELSE get_json_object({json_col}, {path}) END"
     if dtype != "string":
-        value = value.cast(dtype)
-    return staged.withColumn(out, value).drop("__jx_tok")
+        value = f"CAST({value} AS {dtype})"
+    return staged.withColumn(out, F.expr(value)).drop("__jx_tok")

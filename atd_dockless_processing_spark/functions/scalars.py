@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
+from ..session import sql_over
 from ..tables import load, read_parquet, stage_scratch
 from .json_fast import with_json_field
 
@@ -316,15 +317,14 @@ def fn_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .json_fast import with_json_field
 
     ev = with_json_field(load(spark, sf_dir, "events"), "k", "props", "k", "int")
-    return (
-        ev.select("event_type", "k")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.avg("k"), 4).alias("avg_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
+    return sql_over(spark, _JSON_EXTRACT_SQL, events=ev)
+
+
+_JSON_EXTRACT_SQL = """
+SELECT event_type, count(1) AS n_events, round(avg(k), 4) AS avg_k, max(k) AS max_k
+FROM (SELECT event_type, k FROM {events})
+GROUP BY event_type
+"""
 
 
 @query(

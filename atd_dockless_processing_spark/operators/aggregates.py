@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import sql_over
 from ..tables import load, rows_below
 
 
@@ -58,19 +59,25 @@ def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_groupby_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary (per-group rollup, [P high]:
-    per-geography/per-day reporting)."""
-    li = load(spark, sf_dir, "lineitem").where(F.col("l_shipdate") <= "1998-09-02")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-        F.round(F.sum("l_extendedprice"), 4).alias("sum_base_price"),
-        F.round(F.sum(disc_price), 4).alias("sum_disc_price"),
-        F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 4).alias("sum_charge"),
-        F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-        F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-        F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
+    per-geography/per-day reporting). One SQL text: the plan is
+    analysed once, in a handful of py4j calls."""
+    return sql_over(spark, _Q1_SQL, lineitem=load(spark, sf_dir, "lineitem"))
+
+
+_Q1_SQL = """
+SELECT l_returnflag, l_linestatus,
+       round(sum(l_quantity), 4) AS sum_qty,
+       round(sum(l_extendedprice), 4) AS sum_base_price,
+       round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
+       round(sum(l_extendedprice * (1 - l_discount) * (l_tax + 1)), 4) AS sum_charge,
+       round(avg(l_quantity), 4) AS avg_qty,
+       round(avg(l_extendedprice), 4) AS avg_price,
+       round(avg(l_discount), 4) AS avg_disc,
+       count(1) AS count_order
+FROM {lineitem}
+WHERE l_shipdate <= '1998-09-02'
+GROUP BY l_returnflag, l_linestatus
+"""
 
 
 @query(
@@ -98,20 +105,22 @@ def agg_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (identical results; DuckDB 1.07 s → 1.06×). Generic/non-integral
     keys keep ``countDistinct``; the unbounded-domain sketch path is
     ``agg_approx_distinct`` (HLL)."""
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderpriority",
-        F.expr("o_custkey div 64").alias("w"),
-        F.expr("shiftleft(cast(1 as bigint), cast(o_custkey % 64 as int))").alias(
-            "m"
-        ),
-    )
-    words = o.groupBy("o_orderpriority", "w").agg(
-        F.bit_or("m").alias("mask"), F.count(F.lit(1)).alias("c")
-    )
-    return words.groupBy("o_orderpriority").agg(
-        F.sum(F.bit_count("mask")).cast("long").alias("n_custs"),
-        F.sum("c").alias("n_orders"),
-    )
+    return sql_over(spark, _DISTINCT_BITMAP_SQL, orders=load(spark, sf_dir, "orders"))
+
+
+_DISTINCT_BITMAP_SQL = """
+SELECT o_orderpriority, CAST(sum(bit_count(mask)) AS BIGINT) AS n_custs, sum(c) AS n_orders
+FROM (
+  SELECT o_orderpriority, w, bit_or(m) AS mask, count(1) AS c
+  FROM (
+    SELECT o_orderpriority, o_custkey div 64 AS w,
+           shiftleft(cast(1 as bigint), cast(o_custkey % 64 as int)) AS m
+    FROM {orders}
+  )
+  GROUP BY o_orderpriority, w
+)
+GROUP BY o_orderpriority
+"""
 
 
 @query("agg_approx_distinct")  # rows-only: HLL sketches differ across engines
@@ -200,6 +209,14 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GROUPING_SETS_EXPAND_MAX_ROWS = 5_000_000
 
 
+_GROUPING_SETS_SQL = """
+SELECT o_orderstatus, o_orderpriority, count(1) AS n_orders,
+       round(sum(CAST(floor(o_totalprice * 100 + 0.5D) AS BIGINT)) / 100D, 4) AS sum_price
+FROM {orders}
+GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+"""
+
+
 @query(
     "agg_grouping_sets",
     oracle="""
@@ -219,8 +236,9 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     either side:
 
     - below ``_GROUPING_SETS_EXPAND_MAX_ROWS`` (driver/bench scale):
-      the planner's ``groupingSets`` Expand — ONE exchange, the fewest
-      stages, right when the ×3 row replication is cheap;
+      the planner's GROUPING SETS Expand — ONE exchange, the fewest
+      stages, right when the ×3 row replication is cheap; one SQL text,
+      the plan the ``groupingSets`` API builds;
     - from it on, or when the count is unknown: FROM THE FINEST
       GRAIN — one combinable exchange at (status, priority) collapses
       the stream to #distinct-pairs × partitions map-side, then all
@@ -237,24 +255,16 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical integer tree and divides by 100.0 once at the output.
     Cross-form equality is pinned in tests.
 
-    (History: the former SQL-view GROUPING SETS formulation also
-    defeated cached-table reuse — the analyzer's Expand rewrite
-    mutates the child subtree before CacheManager's canonicalized
-    match runs; the DataFrame forms here hit the cache.)"""
+    (History: a former SQL-view GROUPING SETS formulation defeated
+    cached-table reuse — the analyzer's Expand rewrite mutated the
+    child subtree before CacheManager's canonicalized match ran. The
+    ``sql_over`` text hits the cache: its plan is byte-identical to the
+    ``groupingSets`` API form's, and
+    ``test_bench_queries_hit_the_table_cache`` pins every leaf scan.)"""
     o = load(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
     if rows_below("agg_grouping_sets", sf_dir, "orders", _GROUPING_SETS_EXPAND_MAX_ROWS):
-        return (
-            o.groupingSets(
-                [["o_orderstatus"], ["o_orderpriority"], []],
-                "o_orderstatus",
-                "o_orderpriority",
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.round(F.sum(cents) / 100.0, 4).alias("sum_price"),
-            )
-        )
+        return sql_over(spark, _GROUPING_SETS_SQL, orders=o)
+    cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
     fine = (
         o.groupBy("o_orderstatus", "o_orderpriority")
         .agg(
@@ -1634,7 +1644,8 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented misuse is listagg over raw fact rows."""
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
-    return spark.sql(
+    return sql_over(
+        spark,
         """
         SELECT r_name,
                LISTAGG(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations,

@@ -17,10 +17,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.exact import exact_unit_sum
 from ..functions.json_fast import with_json_field
 from ..registry import query, register_layout
-from ..session import conf_override
+from ..session import conf_override, sql_over
 from ..tables import Layout, load, read_parquet, rows_below
 
 
@@ -101,27 +100,25 @@ def tumbling_hour_plan(spark: SparkSession, sf_dir: str, adhoc: bool = False) ->
         ev = read_parquet(spark, staged)
     else:
         ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        # r13: sum in EXACT integer cents (events.value is 2-decimal
-        # money; the floor(x*100+0.5) lift recovers the exact cent
-        # value from the double in BOTH engines), so the rounded sum
-        # is bit-identical regardless of scan partitioning — required
-        # because the µs-staged layout is now pre-built at the
-        # driver-sweep sf_dir and live during hash-gated runs (r12
-        # ADVICE #1 discipline, same as join_inner/multiway5; 2^63
-        # wrap bound and guard-band argument in functions/exact.py).
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            exact_unit_sum(F.col("value"), 100, "sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("hour_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return sql_over(spark, _TUMBLING_HOUR_SQL, events=ev)
+
+
+# r13: sum in EXACT integer cents (events.value is 2-decimal money; the
+# floor(x*100+0.5) lift recovers the exact cent value from the double
+# in BOTH engines), so the rounded sum is bit-identical regardless of
+# scan partitioning — required because the µs-staged layout is
+# pre-built at the driver-sweep sf_dir and live during hash-gated runs
+# (r12 ADVICE #1 discipline, same as join_inner/multiway5; 2^63 wrap
+# bound and guard-band argument in functions/exact.py).
+_TUMBLING_HOUR_SQL = """
+SELECT w.start AS hour_start, event_type, n_events, sum_value
+FROM (
+  SELECT window(ts, '1 hour') AS w, event_type, count(1) AS n_events,
+         round(sum(floor(value * 100 + 0.5D)) / 100D, 4) AS sum_value
+  FROM {events}
+  GROUP BY w, event_type
+)
+"""
 
 
 @query(
@@ -225,16 +222,21 @@ def evt_sessionize_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization via lag + 30-min gap flag (pure window form, no
     session_window) -> sessions per user ([P med]: trip
     reconstruction)."""
-    ev = load(spark, sf_dir, "events").select("user_id", F.col("ts").cast("timestamp").alias("ts"))
-    w = Window.partitionBy("user_id").orderBy("ts")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts")).over(w).cast("long")
-    flagged = ev.withColumn(
-        "new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    )
-    return flagged.groupBy("user_id").agg(
-        F.sum("new_sess").alias("n_sessions"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
+    return sql_over(spark, _SESSIONIZE_SQL, events=load(spark, sf_dir, "events"))
+
+
+_SESSIONIZE_SQL = """
+SELECT user_id, sum(new_sess) AS n_sessions, count(1) AS n_events
+FROM (
+  SELECT user_id, ts,
+         CASE WHEN CAST(ts AS BIGINT) - CAST(lag(ts) OVER w AS BIGINT) IS NULL
+                OR CAST(ts AS BIGINT) - CAST(lag(ts) OVER w AS BIGINT) > 1800
+              THEN 1 ELSE 0 END AS new_sess
+  FROM (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM {events})
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
+)
+GROUP BY user_id
+"""
 
 
 @query(

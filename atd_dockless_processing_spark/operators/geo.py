@@ -229,12 +229,17 @@ def _pip_sql(poly) -> str:
 
 
 def _pip_col(poly, x, y):
-    """Same PNPOLY parity test as a Spark Column expression."""
+    """Same PNPOLY parity test as a Spark Column expression. A
+    horizontal edge (``y1 == y2``) is skipped: its crossing clause
+    ``(y1 > y) != (y2 > y)`` is false for every point, so the edge
+    never changes the parity."""
     total = F.lit(0)
     n = len(poly)
     for i in range(n):
         x1, y1 = poly[i]
         x2, y2 = poly[(i + 1) % n]
+        if y1 == y2:
+            continue
         crosses = ((F.lit(y1) > y) != (F.lit(y2) > y)) & (
             x
             < (F.lit(x2) - F.lit(x1)) * (y - F.lit(y1)) / (F.lit(y2) - F.lit(y1))
@@ -283,8 +288,9 @@ def geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex table and F.aggregate over it instead), so the point table
     is never shuffled before the final combinable agg: a pure map at
     100 TB, same as geo_grid_bin/geo_hex_bin. Horizontal edges give
-    IEEE inf/nan in the slope term on both engines; the crossing
-    conjunction's first clause is then false, so parity is exact."""
+    IEEE inf/nan in the slope term in the oracle; the crossing
+    conjunction's first clause is then false, so parity is exact, and
+    the Spark plan leaves those edges out (``_pip_col``)."""
     ev = load(spark, sf_dir, "events")
     # Stage (x, y) in their own Project: the ~45 per-row references
     # the unrolled edge tests make would otherwise each re-evaluate

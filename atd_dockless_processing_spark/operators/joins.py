@@ -17,6 +17,7 @@ from pathlib import Path
 
 from ..functions.exact import exact_unit_sum
 from ..registry import query, register_layout
+from ..session import sql_over
 from ..tables import DISPATCH, Layout, load, parquet_schema
 
 
@@ -556,9 +557,6 @@ def multiway5_plan(spark: SparkSession, sf_dir: str, adhoc: bool = False) -> Dat
     """Q5 plan dispatch: bucketed when the layout is live and ``adhoc``
     is not set, else ad hoc. Shared join tail keeps the two forms
     logically identical."""
-    date_filter = (F.col("o_orderdate") >= "1996-01-01") & (
-        F.col("o_orderdate") < "1997-01-01"
-    )
     if _Q5_LAYOUT.serves("join_multiway_5", spark, sf_dir, adhoc):
         li_tbl, o_tbl = _Q5_LAYOUT.names(sf_dir)
         li = spark.table(li_tbl)
@@ -572,49 +570,51 @@ def multiway5_plan(spark: SparkSession, sf_dir: str, adhoc: bool = False) -> Dat
         # attaches a hint to the NEAREST join above the hinted subtree
         # only, so this biases just li⋈orders; the later
         # orders⋈customer join keeps Catalyst's broadcast choice.
-        orders = spark.table(o_tbl).where(date_filter).hint("merge")
+        orders = spark.table(o_tbl).where(_Q5_DATES).hint("merge")
     else:
         li = load(spark, sf_dir, "lineitem")
-        orders = load(spark, sf_dir, "orders").where(date_filter)
-    customer = load(spark, sf_dir, "customer")
-    supplier = load(spark, sf_dir, "supplier")
-    nation = load(spark, sf_dir, "nation")
-    region = load(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    # Stream the big fact (lineitem) so it never materializes a hash
-    # relation; orders/customer/supplier join by Catalyst's choice
-    # (auto-broadcast at small SF, shuffle join when stats outgrow the
-    # threshold — customer and supplier are SF-proportional, so a hint
-    # would OOM a 100 TB build side). Only the truly fixed-size dims
-    # (nation 25 rows, region 5 rows) are hinted.
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(customer, customer.c_custkey == orders.o_custkey)
-        .join(
-            supplier,
-            (li.l_suppkey == supplier.s_suppkey)
-            & (customer.c_nationkey == supplier.s_nationkey),
-        )
-        .join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        # r13: revenue summed in EXACT 1e-4 units — extendedprice and
-        # discount are 2-decimal, so the product is exactly 4-decimal;
-        # floor(x*10000+0.5) on the identical IEEE product recovers the
-        # same bigint in Spark and DuckDB, making the rounded sum
-        # bit-identical regardless of join order/physical plan (the
-        # bucketed layout re-attaches in fresh sessions from r13 on, so
-        # the SMJ form runs during hash-gated sweeps — r12 ADVICE #1;
-        # 2^63 wrap bound ~4.6e17 e4-units/group at the 100 TB
-        # posture, 20x headroom — functions/exact.py).
-        .agg(
-            exact_unit_sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount")),
-                10000,
-                "revenue",
-            ),
-            F.count(F.lit(1)).alias("n_items"),
-        )
+        orders = load(spark, sf_dir, "orders").where(_Q5_DATES)
+    return sql_over(
+        spark,
+        _Q5_SQL,
+        lineitem=li,
+        orders=orders,
+        customer=load(spark, sf_dir, "customer"),
+        supplier=load(spark, sf_dir, "supplier"),
+        nation=load(spark, sf_dir, "nation"),
+        region=load(spark, sf_dir, "region"),
     )
+
+
+_Q5_DATES = "o_orderdate >= '1996-01-01' AND o_orderdate < '1997-01-01'"
+
+# Stream the big fact (lineitem) so it never materializes a hash
+# relation; orders/customer/supplier join by Catalyst's choice
+# (auto-broadcast at small SF, shuffle join when stats outgrow the
+# threshold — customer and supplier are SF-proportional, so a hint
+# would OOM a 100 TB build side). Only the truly fixed-size dims
+# (nation 25 rows, region 5 rows) are hinted.
+# r13: revenue summed in EXACT 1e-4 units — extendedprice and discount
+# are 2-decimal, so the product is exactly 4-decimal; floor(x*10000+0.5)
+# on the identical IEEE product recovers the same bigint in Spark and
+# DuckDB, making the rounded sum bit-identical regardless of join
+# order/physical plan (the bucketed layout re-attaches in fresh
+# sessions from r13 on, so the SMJ form runs during hash-gated sweeps
+# — r12 ADVICE #1; 2^63 wrap bound ~4.6e17 e4-units/group at the
+# 100 TB posture, 20x headroom — functions/exact.py spells the rule).
+_Q5_SQL = """
+SELECT /*+ BROADCAST(n), BROADCAST(r) */ n_name,
+       round(sum(floor(l_extendedprice * (1 - l_discount) * 10000 + 0.5D)) / 10000D, 4)
+         AS revenue,
+       count(1) AS n_items
+FROM {lineitem}
+JOIN {orders} ON l_orderkey = o_orderkey
+JOIN {customer} ON c_custkey = o_custkey
+JOIN {supplier} ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+JOIN {nation} n ON s_nationkey = n_nationkey
+JOIN (SELECT * FROM {region} WHERE r_name = 'ASIA') r ON n_regionkey = r_regionkey
+GROUP BY n_name
+"""
 
 
 # ---------------------------------------------------------------------------

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash60, portable_hash60_sql
 from ..registry import query
+from ..session import sql_over
 from ..tables import load, rows_below
 from .dedup_ann import _as_double, _dot, _embedding_matrix, _norm, first_eq_band
 from .text import _bigrams_from, _token_set
@@ -51,9 +52,14 @@ def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     and skips the per-partition sort — the right shape at 100 TB,
     where you'd additionally pre-hash: group on xxhash64(text) and
     compare full text only within colliding hashes."""
-    d = load(spark, sf_dir, "documents")
-    survivors = d.groupBy("text").agg(F.min_by("lang", "doc_id").alias("lang"))
-    return survivors.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
+    return sql_over(spark, _DEDUP_EXACT_SQL, documents=load(spark, sf_dir, "documents"))
+
+
+_DEDUP_EXACT_SQL = """
+SELECT lang, count(1) AS n_docs
+FROM (SELECT text, min_by(lang, doc_id) AS lang FROM {documents} GROUP BY text)
+GROUP BY lang
+"""
 
 
 @query(
@@ -70,12 +76,16 @@ def llm_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language doc count / avg token count / avg chars (ext:
     text-quality scoring input)."""
-    d = load(spark, sf_dir, "documents")
-    return d.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.avg(F.size(F.split("text", " "))), 4).alias("avg_tokens"),
-        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-    )
+    return sql_over(spark, _TOKEN_STATS_SQL, documents=load(spark, sf_dir, "documents"))
+
+
+_TOKEN_STATS_SQL = """
+SELECT lang, count(1) AS n_docs,
+       round(avg(size(split(text, ' '))), 4) AS avg_tokens,
+       round(avg(n_chars), 4) AS avg_chars
+FROM {documents}
+GROUP BY lang
+"""
 
 
 @query(
@@ -188,22 +198,28 @@ def llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH/IVF candidate prune (llm_ann_*)."""
     if not rows_below("llm_cosine_topk", sf_dir, "embeddings", _COSINE_ARROW_MIN_ROWS):
         return _cosine_topk_arrow(spark, sf_dir)
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    )
-    qv = emb.where(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    scored = (
-        emb.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            "label",
-            F.round(_dot(F.col("v"), F.col("qv")) / (_norm(F.col("v")) * _norm(F.col("qv"))), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(10)
+    return sql_over(spark, _COSINE_TOPK_SQL, embeddings=load(spark, sf_dir, "embeddings"))
+
+
+# The HOF scoring of dedup_ann._as_double/_dot/_norm, spelled in SQL:
+# ``0D`` is the double zero the folds start from (``0.0`` is a decimal
+# in Spark SQL), and the lambda variables are named as PySpark names
+# its own (x_N, y_N).
+_COSINE_TOPK_SQL = """
+WITH emb AS (
+  SELECT vec_id, label, transform(embedding, x_0 -> CAST(x_0 AS DOUBLE)) AS v
+  FROM {embeddings}
+), q AS (
+  SELECT v AS qv FROM emb WHERE vec_id = 0
+)
+SELECT /*+ BROADCAST(q) */ vec_id, label,
+       round(aggregate(zip_with(v, qv, (x_1, y_1) -> x_1 * y_1), 0D, (x_2, y_2) -> x_2 + y_2)
+             / (sqrt(aggregate(v, 0D, (x_3, y_3) -> x_3 + y_3 * y_3))
+                * sqrt(aggregate(qv, 0D, (x_4, y_4) -> x_4 + y_4 * y_4))), 4) AS cos_sim
+FROM (SELECT * FROM emb WHERE vec_id != 0) CROSS JOIN q
+ORDER BY cos_sim DESC, vec_id
+LIMIT 10
+"""
 
 
 # The cosine family (llm_cosine_topk, llm_knn_join, llm_vector_quantize,

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import sql_over
 from ..tables import load
 
 
@@ -67,29 +68,39 @@ def srt_multi_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def srt_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: filter + 3-way join + group + global top-10
-    (TakeOrderedAndProject). The flagship query (SURVEY §7 M0)."""
-    customer = load(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    orders = load(spark, sf_dir, "orders").where(F.col("o_orderdate") < "1998-03-15")
-    li = load(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > "1998-03-15")
-    # Stream lineitem (largest fact) and leave BOTH join strategies to
-    # Catalyst: at small SF the filtered orders and customer sides sit
-    # under the broadcast threshold (verified BroadcastHashJoin in the
-    # plan); at 100 TB customer is SF-proportional (~15B rows) so
-    # stats/AQE push both to shuffled hash joins — no hint means the
-    # right plan at every scale.
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(customer, customer.c_custkey == orders.o_custkey)
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias(
-                "revenue"
-            )
-        )
-        .select("o_orderkey", "revenue", F.col("o_orderdate").cast("date").alias("order_date"))
-        .orderBy(F.col("revenue").desc(), "o_orderkey")
-        .limit(10)
+    (TakeOrderedAndProject). The flagship query (SURVEY §7 M0). One
+    SQL text: the plan is analysed once, in a handful of py4j calls.
+
+    Lineitem (the largest fact) streams and BOTH join strategies are
+    Catalyst's: at small SF the filtered orders and customer sides sit
+    under the broadcast threshold (verified BroadcastHashJoin in the
+    plan); at 100 TB customer is SF-proportional (~15B rows) so
+    stats/AQE push both to shuffled hash joins — no hint means the
+    right plan at every scale."""
+    return sql_over(
+        spark,
+        _Q3_SQL,
+        lineitem=load(spark, sf_dir, "lineitem"),
+        orders=load(spark, sf_dir, "orders"),
+        customer=load(spark, sf_dir, "customer"),
     )
+
+
+_Q3_SQL = """
+SELECT o_orderkey, revenue, CAST(o_orderdate AS DATE) AS order_date
+FROM (
+  SELECT o_orderkey, o_orderdate,
+         round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
+  FROM (SELECT * FROM {lineitem} WHERE l_shipdate > '1998-03-15')
+  JOIN (SELECT * FROM {orders} WHERE o_orderdate < '1998-03-15')
+    ON l_orderkey = o_orderkey
+  JOIN (SELECT * FROM {customer} WHERE c_mktsegment = 'BUILDING')
+    ON c_custkey = o_custkey
+  GROUP BY o_orderkey, o_orderdate
+)
+ORDER BY revenue DESC, o_orderkey
+LIMIT 10
+"""
 
 
 @query(

@@ -8,9 +8,9 @@ aliases and GROUP BY ALL. Each key pins the entry surface; the
 relational work behind it compiles to plan families already measured
 at ×100 (SCALE.md), so the scale posture is inherited from the plan,
 not the syntax. Input tables reach the text as DataFrame keyword
-arguments (``spark.sql(text, orders=df)``): PySpark registers each
-under a generated view name for the analysis and drops it when the
-call returns, so no key leaves a view behind.
+arguments of ``session.sql_over`` (``sql_over(spark, text, orders=df)``):
+each is a temp view under a generated name for the analysis only,
+dropped when the call returns, so no key leaves a view behind.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import conf_override
+from ..session import conf_override, sql_over, temp_views
 from ..tables import load
 
 
@@ -63,7 +63,7 @@ def corr_decorrelated_sql_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     no per-row subquery execution in the plan. Kept as the test-pinned
     decorrelation demo after the r10 promotion of the window form to
     the registered plan."""
-    return spark.sql(_CORR_SQL_T, orders=load(spark, sf_dir, "orders"))
+    return sql_over(spark, _CORR_SQL_T, orders=load(spark, sf_dir, "orders"))
 
 
 @query(
@@ -87,7 +87,8 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     (off-by-one, variable shadowing) flips the hash. The scripting
     conf is runtime-settable and is set only while the script runs."""
     with conf_override(spark, {"spark.sql.scripting.enabled": "true"}):
-        return spark.sql(
+        return sql_over(
+            spark,
             """
         BEGIN
           DECLARE i INT DEFAULT 1;
@@ -145,7 +146,8 @@ def sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery (DecorrelateInnerQuery) into a partitioned rank — the
     same single-shuffle window shape as win_topk_per_group, with no
     per-outer-row re-execution; identical SQL runs on both engines."""
-    return spark.sql(
+    return sql_over(
+        spark,
         _LATERAL_SQL_T,
         nation=load(spark, sf_dir, "nation"),
         customer=load(spark, sf_dir, "customer"),
@@ -200,7 +202,8 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf; on gappy data the recursive side would silently drop
     orphaned subtrees and the check would (correctly) go red."""
     ev = load(spark, sf_dir, "events")
-    return spark.sql(
+    return sql_over(
+        spark,
         """
         WITH RECURSIVE d(user_id, depth) AS (
           SELECT CAST(0 AS BIGINT), 0
@@ -249,7 +252,8 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry surface: stage ordering, `AGGREGATE … GROUP BY` aliasing,
     and that computed aggregate aliases survive to the result schema.
     ROUND(…, 4) for FP-sum parity with the DuckDB oracle as in Q1."""
-    return spark.sql(
+    return sql_over(
+        spark,
         """
         FROM {lineitem}
         |> WHERE l_shipdate <= TIMESTAMP '1998-09-02'
@@ -296,21 +300,18 @@ def sql_exec_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders (TPC-H Q4's shape minus the EXISTS) — one pushed range
     filter, one hash aggregate; scale posture inherited from that
     plan family."""
-    view = f"orders_exec_{_uuid.uuid4().hex[:8]}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
-    inner = (
-        f"SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders, "
-        f"ROUND(SUM(o_totalprice), 4) AS total_price "
-        f"FROM {view} WHERE o_orderdate >= ? AND o_orderdate < ? "
-        f"GROUP BY o_orderpriority"
-    )
-    out = spark.sql(
-        "EXECUTE IMMEDIATE :stmt USING TIMESTAMP '1996-01-01', "
-        "TIMESTAMP '1996-04-01'",
-        args={"stmt": inner},
-    )
-    spark.catalog.dropTempView(view)
-    return out
+    with temp_views(spark, orders=load(spark, sf_dir, "orders")) as views:
+        inner = (
+            f"SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_orders, "
+            f"ROUND(SUM(o_totalprice), 4) AS total_price "
+            f"FROM {views['orders']} WHERE o_orderdate >= ? AND o_orderdate < ? "
+            f"GROUP BY o_orderpriority"
+        )
+        return spark.sql(
+            "EXECUTE IMMEDIATE :stmt USING TIMESTAMP '1996-01-01', "
+            "TIMESTAMP '1996-04-01'",
+            args={"stmt": inner},
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -343,20 +344,17 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     posture inherited from that family (binding is driver-side
     only). Parameter LIVENESS (a different column parameter changes
     the grouping) is pinned in tests."""
-    view = f"orders_ident_{_uuid.uuid4().hex[:8]}"
-    load(spark, sf_dir, "orders").createOrReplaceTempView(view)
-    out = spark.sql(
-        """
-        SELECT IDENTIFIER(:col) AS group_key,
-               CAST(COUNT(*) AS BIGINT) AS n_rows,
-               ROUND(AVG(o_totalprice), 4) AS avg_price
-        FROM IDENTIFIER(:tbl)
-        GROUP BY IDENTIFIER(:col)
-        """,
-        args={"tbl": view, "col": "o_orderpriority"},
-    )
-    spark.catalog.dropTempView(view)
-    return out
+    with temp_views(spark, orders=load(spark, sf_dir, "orders")) as views:
+        return spark.sql(
+            """
+            SELECT IDENTIFIER(:col) AS group_key,
+                   CAST(COUNT(*) AS BIGINT) AS n_rows,
+                   ROUND(AVG(o_totalprice), 4) AS avg_price
+            FROM IDENTIFIER(:tbl)
+            GROUP BY IDENTIFIER(:col)
+            """,
+            args={"tbl": views["orders"], "col": "o_orderpriority"},
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -398,7 +396,8 @@ def sql_create_function(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"RETURNS DOUBLE RETURN p * (1.0 - d)"
     )
     try:
-        return spark.sql(
+        return sql_over(
+            spark,
             f"""
             SELECT l_returnflag,
                    ROUND(SUM({fname}(l_extendedprice, l_discount)), 4)
@@ -448,11 +447,13 @@ def sql_session_variable(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     spark.sql(f"DECLARE OR REPLACE VARIABLE {vname} DOUBLE DEFAULT 0.0")
     try:
-        spark.sql(
+        sql_over(
+            spark,
             f"SET VAR {vname} = (SELECT FLOOR(AVG(l_quantity)) FROM {{li}})",
             li=li,
         )
-        out = spark.sql(
+        out = sql_over(
+            spark,
             f"""
             SELECT l_linestatus,
                    CAST(COUNT(*) AS BIGINT) AS n_above,
@@ -506,7 +507,8 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: the same expression TREE evaluates on both engines
     (the oracle writes the identical chain), sums round at 4. Plan:
     one scan + one hash agg — agg_groupby_q1's family."""
-    return spark.sql(
+    return sql_over(
+        spark,
         """
         SELECT l_returnflag,
                ROUND(SUM(net), 4) AS net_total,
@@ -553,7 +555,7 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     rationale; r10 second-review finding #2). Plan: the same
     single-exchange partial+final hash aggregate as agg_groupby_q1 —
     pure analyzer surface, measured plan family."""
-    return spark.sql(_GBA_SQL_T, orders=load(spark, sf_dir, "orders"))
+    return sql_over(spark, _GBA_SQL_T, orders=load(spark, sf_dir, "orders"))
 
 
 @query(
@@ -573,7 +575,8 @@ def sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem DataFrame — demonstrating that the engine's second API
     surface (SQL) compiles to the identical Catalyst plan as the
     DataFrame calls (same pushdown, same codegen)."""
-    return spark.sql(
+    return sql_over(
+        spark,
         """
         SELECT ROUND(SUM(l_extendedprice * l_discount), 4) AS revenue,
                CAST(COUNT(*) AS BIGINT) AS n_items

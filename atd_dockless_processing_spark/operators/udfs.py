@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf, udtf
 
 from ..registry import query
+from ..session import sql_over
 from ..tables import load
 
 
@@ -214,7 +215,8 @@ def udtf_python_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
     fname = f"tokenize_{_uuid.uuid4().hex[:8]}"
     spark.udtf.register(fname, _TokenizeUDTF)
     try:
-        return spark.sql(
+        return sql_over(
+            spark,
             f"SELECT d.doc_id, t.pos, t.token "
             f"FROM {{docs}} d, LATERAL {fname}(d.text) t",
             docs=load(spark, sf_dir, "documents").where(F.col("doc_id") < 20),
@@ -336,7 +338,8 @@ def udtf_arrow_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     fname = f"part_tokens_{_uuid.uuid4().hex[:8]}"
     spark.udtf.register(fname, _PartTokenUDTF)
     try:
-        return spark.sql(
+        return sql_over(
+            spark,
             f"""
             SELECT t.token, CAST(COUNT(*) AS BIGINT) AS n
             FROM {{part}} p, LATERAL {fname}(p.p_name) t
@@ -417,7 +420,8 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
     fname = f"lang_run_stats_{_uuid.uuid4().hex[:8]}"
     spark.udtf.register(fname, _LangRunStatsUDTF)
     try:
-        return spark.sql(
+        return sql_over(
+            spark,
             f"""
             SELECT * FROM {fname}(
               TABLE({{docs}}) PARTITION BY lang ORDER BY doc_id

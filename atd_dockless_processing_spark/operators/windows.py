@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import sql_over
 from ..tables import load
 
 
@@ -31,15 +32,18 @@ from ..tables import load
 )
 def win_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders by price per customer via row_number (core)."""
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        load(spark, sf_dir, "orders")
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-    )
+    return sql_over(spark, _TOPK_PER_CUSTOMER_SQL, orders=load(spark, sf_dir, "orders"))
+
+
+_TOPK_PER_CUSTOMER_SQL = """
+SELECT o_custkey, o_orderkey, o_totalprice, rn
+FROM (
+  SELECT o_custkey, o_orderkey, o_totalprice,
+         row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
+  FROM {orders}
+)
+WHERE rn <= 3
+"""
 
 
 @query(

@@ -30,9 +30,12 @@ from pathlib import Path
 # current green evidence — the key re-tiers to the needy band until a
 # round-≥N CORRECTNESS row lands (then the entry is dead weight and is
 # dropped). Honest alternative to editing driver-owned CORRECTNESS
-# files. Empty: every entry through r15 has since earned a green row
-# on its new plan.
-EVIDENCE_INVALIDATED: dict[str, int] = {}
+# files. Every entry through r15 has since earned a green row on its
+# new plan.
+EVIDENCE_INVALIDATED: dict[str, int] = {
+    # r16: the point-in-polygon parity test skips horizontal edges
+    "geo_point_in_polygon": 16,
+}
 
 
 def latest_evidence(repo: Path) -> dict[str, tuple[int, dict]]:

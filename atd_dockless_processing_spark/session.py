@@ -16,11 +16,12 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 import zipfile
 from contextlib import contextmanager
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _PKG_ZIP: str | None = None
 
@@ -129,3 +130,33 @@ def conf_override(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+@contextmanager
+def temp_views(spark: SparkSession, **frames: DataFrame):
+    """Register each frame as a temp view under a generated name for
+    the block and yield ``{keyword: view name}``; the views are dropped
+    on exit, also when the block raises. A view is dropped from the
+    session catalog only: ``Catalog.dropTempView`` (what PySpark's
+    ``spark.sql(text, **frames)`` calls) also uncaches the view's plan,
+    which for a frame a table provider cached is the hot table itself,
+    so the next query would re-read its source."""
+    names = {k: f"_{k}_{uuid.uuid4().hex}" for k in frames}
+    try:
+        for k, df in frames.items():
+            df.createOrReplaceTempView(names[k])
+        yield names
+    finally:
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names.values():
+            catalog.dropTempView(name)
+
+
+def sql_over(spark: SparkSession, text: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql(text)`` with each frame bound to ``{name}`` in
+    ``text`` (``str.format``, so a literal brace is doubled) through
+    :func:`temp_views`: the whole plan is analysed once, in a few py4j
+    calls, and a provider's cached frame stays cached. The one way a
+    key passes DataFrames to SQL text."""
+    with temp_views(spark, **frames) as names:
+        return spark.sql(text.format(**names))

@@ -4,7 +4,8 @@ registered-plan change ships with — and print each key's PLANS.md
 audit row: shuffle and broadcast exchanges and a top-k node from the
 ``executedPlan()`` string; parquet scans, scans with non-empty
 ``PushedFilters`` and the widest ``ReadSchema`` from the formatted plan;
-and the Spark jobs the key's plan build ran (``build_jobs``).
+and the Spark jobs and py4j round trips the key's plan build made
+(``build_jobs``).
 
 Plans are captured under driver-real conditions: session.py
 ``get_spark`` on the sf0.1 corpus.
@@ -19,9 +20,12 @@ import argparse
 import io
 import re
 import sys
+import threading
 import uuid
 from contextlib import redirect_stdout
 from pathlib import Path
+
+from py4j.clientserver import ClientServerConnection
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
@@ -33,20 +37,31 @@ from scale_rehearsal import BASE_SF  # noqa: E402  (the sf0.1 corpus)
 
 
 def build_jobs(spark, key: str, sf_dir: str):
-    """Build ``key``'s plan; return it and the number of Spark jobs the
+    """Build ``key``'s plan; return it, the number of Spark jobs the
     build ran, counted under a job group of its own through public
-    APIs (``setJobGroup``, ``statusTracker().getJobIdsForGroup``)."""
+    APIs (``setJobGroup``, ``statusTracker().getJobIdsForGroup``), and
+    the number of py4j round trips the build made on this thread (the
+    released proxies py4j's finalizer thread sends are not counted)."""
     sc = spark.sparkContext
     group = f"build-{key}-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, f"build {key}")
+    send = ClientServerConnection.send_command
+    me, calls = threading.get_ident(), [0]
+
+    def counted(self, command):
+        calls[0] += threading.get_ident() == me
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
     try:
         df = QUERIES[key](spark, sf_dir)
     finally:
+        ClientServerConnection.send_command = send
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+    return df, len(sc.statusTracker().getJobIdsForGroup(group)), calls[0]
 
 
-def audit_row(key: str, df, formatted: str, jobs: int) -> str:
+def audit_row(key: str, df, formatted: str, jobs: int, py4j: int) -> str:
     plan = df._jdf.queryExecution().executedPlan().toString()
     n_exch = plan.count("Exchange hashpartitioning") + plan.count(
         "Exchange rangepartitioning"
@@ -58,7 +73,7 @@ def audit_row(key: str, df, formatted: str, jobs: int) -> str:
     widest = max((len(s.split(",")) for s in schemas), default=0)
     return (
         f"| `{key}` | {n_exch} | {n_bcast} | {len(schemas)} | {len(pushed)}"
-        f" | {widest} | {jobs} |{' topk' if topk else ''} |"
+        f" | {widest} | {jobs} | {py4j} |{' topk' if topk else ''} |"
     )
 
 
@@ -71,15 +86,18 @@ def main() -> None:
     out_dir = REPO / "plans" / f"r{args.round}"
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark(f"plans-r{args.round}")
-    print("| key | shuffles | bcast | scans | pushed | max cols read | build jobs | note |")
-    print("|---|---|---|---|---|---|---|---|", flush=True)
+    print(
+        "| key | shuffles | bcast | scans | pushed | max cols read | build jobs"
+        " | build py4j | note |"
+    )
+    print("|---|---|---|---|---|---|---|---|---|", flush=True)
     for key in args.keys or list(BENCH_SET.values()):
-        df, jobs = build_jobs(spark, key, BASE_SF)
+        df, jobs, py4j = build_jobs(spark, key, BASE_SF)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
         (out_dir / f"{key}_{args.tag}.txt").write_text(buf.getvalue())
-        print(audit_row(key, df, buf.getvalue(), jobs), flush=True)
+        print(audit_row(key, df, buf.getvalue(), jobs, py4j), flush=True)
 
 
 if __name__ == "__main__":

@@ -146,15 +146,17 @@ def test_green_tier_rotates_oldest_evidence_first():
 
 
 def test_bench_queries_hit_the_table_cache(spark):
-    """Every bench query must read the provider's cached table, not
-    re-scan parquet. Regression guard for the round-5 find: the SQL
-    GROUPING SETS rewrite re-aliases its child subtree during
-    analysis, so CacheManager's canonicalized match fails and a
-    query over a view of a cached DataFrame silently re-scans the
-    source (agg_grouping_sets ran 3.5x slower in the bench until it
-    moved to the DataFrame groupingSets API). Asserts the substituted
-    plan shows InMemoryTableScan for each bench key under the
-    provider bench.py installs."""
+    """Every bench query must read the provider's cached tables, not
+    re-scan parquet: each leaf of each bench key's physical plan (before
+    AQE wraps it) is an ``InMemoryTableScan`` (a multi-table key that misses the cache on
+    one table fails), and building the keys leaves every provider
+    table cached. Regression guard for two finds: a round-5 SQL-view
+    GROUPING SETS formulation whose analysis re-aliased its child
+    subtree, so CacheManager's canonicalized match failed and the
+    query silently re-scanned the source (agg_grouping_sets ran 3.5x
+    slower in the bench); and PySpark's ``spark.sql(text, **frames)``,
+    whose ``Catalog.dropTempView`` uncaches the provider table a view
+    was made of (``session.sql_over`` drops its views without that)."""
     from bench import BENCH_SET, table_provider
     from atd_dockless_processing_spark import QUERIES
     import atd_dockless_processing_spark.tables as tables
@@ -163,17 +165,20 @@ def test_bench_queries_hit_the_table_cache(spark):
     cache = {}
     tables.set_table_provider(table_provider(spark, cache))
     try:
-        misses = []
+        misses = {}
         for metric, key in BENCH_SET.items():
-            plan = (
+            leaves = (
                 QUERIES[key](spark, sf_dir)
                 ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
+                .sparkPlan()
+                .collectLeaves()
             )
-            if "InMemoryTableScan" not in plan:
-                misses.append(metric)
+            names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+            if not names or any(n != "InMemoryTableScan" for n in names):
+                misses[metric] = names
         assert not misses, f"bench queries bypassing the table cache: {misses}"
+        uncached = sorted(n for (_, n), df in cache.items() if not df.storageLevel.useMemory)
+        assert not uncached, f"provider tables uncached by a bench key: {uncached}"
     finally:
         tables.set_table_provider(None)
         for df in cache.values():

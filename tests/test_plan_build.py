@@ -1,0 +1,99 @@
+"""Plan-build cost and the plan forms it depends on.
+
+The bench keys build their plans from one SQL text each
+(``session.sql_over``), so a build is one analysis and a handful of
+py4j round trips; the budget test pins that. The horizontal-edge
+pin keeps the pre-r16 point-in-polygon form, which the registered
+key replaced, for its equality check and for ``scripts/ab.py``
+(form ``tests.test_plan_build:geo_point_in_polygon_flat_edges``)."""
+
+from __future__ import annotations
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from atd_dockless_processing_spark import QUERIES, tables
+from atd_dockless_processing_spark.operators import geo
+from bench import BENCH_SET, table_provider
+
+# py4j round trips one bench key's plan build may take over the
+# bench's table provider
+PY4J_BUDGET = 40
+
+
+def test_bench_keys_build_within_py4j_budget(spark, sf_dir):
+    """Each bench key's plan build, over ``bench.table_provider`` with
+    the tables already cached, makes at most ``PY4J_BUDGET`` py4j
+    round trips, counted as ``scripts/dump_plans.py`` counts its
+    ``build py4j`` column."""
+    from dump_plans import build_jobs
+
+    cache = {}
+    tables.set_table_provider(table_provider(spark, cache))
+    try:
+        calls = {}
+        for key in BENCH_SET.values():
+            QUERIES[key](spark, sf_dir)  # caches the key's tables
+            calls[key] = build_jobs(spark, key, sf_dir)[2]
+        over = {k: n for k, n in calls.items() if n > PY4J_BUDGET}
+        assert not over, f"bench keys over {PY4J_BUDGET} py4j calls per build: {over}"
+    finally:
+        tables.set_table_provider(None)
+        for df in cache.values():
+            df.unpersist()
+
+
+def _pip_col_with_flat_edges(poly, x, y):
+    """``geo._pip_col`` before r16: a crossing term for every edge,
+    the horizontal ones included."""
+    total = F.lit(0)
+    n = len(poly)
+    for i in range(n):
+        x1, y1 = poly[i]
+        x2, y2 = poly[(i + 1) % n]
+        crosses = ((F.lit(y1) > y) != (F.lit(y2) > y)) & (
+            x
+            < (F.lit(x2) - F.lit(x1)) * (y - F.lit(y1)) / (F.lit(y2) - F.lit(y1))
+            + F.lit(x1)
+        )
+        total = total + F.when(crosses, 1).otherwise(0)
+    return total % 2 == 1
+
+
+def geo_point_in_polygon_flat_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``geo_point_in_polygon`` as registered before r16."""
+    with_flat_edges = geo._pip_col
+    geo._pip_col = _pip_col_with_flat_edges
+    try:
+        return QUERIES["geo_point_in_polygon"](spark, sf_dir)
+    finally:
+        geo._pip_col = with_flat_edges
+
+
+def test_pip_skips_flat_edges_and_matches_old_form(spark, sf_dir, tmp_path):
+    """The point-in-polygon key leaves the 3 horizontal edges of the
+    L-shaped zone out of its plan (9 edge terms to 6) and returns the
+    rows of the form that kept them, on the driver corpus and on one
+    whose points lie at every edge's y value (``user_id`` 0..39)."""
+
+    def edge_terms(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count("CASE WHEN")
+
+    new = QUERIES["geo_point_in_polygon"](spark, sf_dir)
+    old = geo_point_in_polygon_flat_edges(spark, sf_dir)
+    assert (edge_terms(old), edge_terms(new)) == (9 + 1, 6 + 1)  # + the zone CASE
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    pq.write_table(
+        events.set_column(
+            events.schema.get_field_index("user_id"),
+            "user_id",
+            pa.array(np.arange(events.num_rows) % 40, events.schema.field("user_id").type),
+        ),
+        tmp_path / "events.parquet",
+    )
+    for d in (sf_dir, str(tmp_path)):
+        rows = sorted(map(tuple, QUERIES["geo_point_in_polygon"](spark, d).collect()))
+        assert rows and rows == sorted(map(tuple, geo_point_in_polygon_flat_edges(spark, d).collect()))

@@ -1,6 +1,6 @@
 """Keys borrow the one shared SparkSession and the ``.scratch``
 directory and give them back as they found them: DataFrames reach
-``spark.sql`` as keyword arguments, temp functions are dropped once
+SQL text as keyword arguments of ``session.sql_over``, temp functions are dropped once
 the query is analyzed, confs are set through ``session.conf_override``,
 memory sinks drop their view once the result is resolved, and per-run
 directories come from ``tables.run_scratch``, which removes them. A
@@ -19,13 +19,15 @@ from pyspark.sql.streaming.query import StreamingQuery
 
 from atd_dockless_processing_spark import QUERIES, tables
 from atd_dockless_processing_spark.session import conf_override
+from bench import BENCH_SET
 
 # every key that registers SQL inputs, a temp function, a conf
 # override or a memory sink
-SESSION_KEYS = sorted(k for k in QUERIES if k.startswith(("sql_", "udtf_", "stm_"))) + [
-    "agg_listagg",
-    "etl_declarative_pipeline",
-]
+SESSION_KEYS = (
+    sorted(k for k in QUERIES if k.startswith(("sql_", "udtf_", "stm_")))
+    + ["agg_listagg", "etl_declarative_pipeline"]
+    + sorted(BENCH_SET.values())
+)
 
 
 def _session_state(spark):
@@ -46,6 +48,32 @@ def test_keys_leave_the_session_as_they_found_it(spark, sf_dir):
         if views != views2 or funcs != funcs2 or confs:
             left[key] = (sorted(views ^ views2), sorted(funcs ^ funcs2), confs)
     assert not left, left
+
+
+def test_sql_keys_keep_provider_tables_cached(spark, sf_dir):
+    """A key that hands frames to SQL text leaves a table provider's
+    cached tables cached: its temp views are dropped without
+    ``Catalog.dropTempView``, which would uncache the provider table a
+    view was made of."""
+    from bench import table_provider
+
+    keys = sorted(k for k in QUERIES if k.startswith("sql_")) + ["agg_listagg"]
+    cache = {}
+    tables.set_table_provider(table_provider(spark, cache))
+    try:
+        uncached = {}
+        for key in keys:
+            QUERIES[key](spark, sf_dir).collect()
+            lost = sorted(n for (_, n), df in cache.items() if not df.storageLevel.useMemory)
+            if lost:
+                uncached[key] = lost
+                for k in [k for k in cache if k[1] in lost]:
+                    cache.pop(k).unpersist()
+        assert not uncached, uncached
+    finally:
+        tables.set_table_provider(None)
+        for df in cache.values():
+            df.unpersist()
 
 
 def _run_dirs(tag: str) -> set[Path]:
