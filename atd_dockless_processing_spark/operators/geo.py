@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.json_fast import with_json_field
 from ..registry import query
-from ..tables import load, read_parquet, stage_scratch
+from ..tables import decided, load, read_parquet, stage_scratch
 
 
 @query(
@@ -77,14 +77,19 @@ _BBOX_GRID_MIN_ZONES = 64
 
 
 def bbox_join_plan(
-    spark: SparkSession, ev: DataFrame, zone_rows: list, strategy: str | None = None
+    spark: SparkSession,
+    key: str,
+    ev: DataFrame,
+    zone_rows: list,
+    strategy: str | None = None,
 ) -> DataFrame:
     """Adaptive point-in-rectangle join over `ev(x double, y int)`.
 
     `zone_rows` is the (zone, xlo, xhi, ylo, yhi) dim — driver-side
     literals here, a collected broadcast-small dim in production; the
     strategy switch and grid sizing read ONLY this list, never the
-    point table.
+    point table. The choice (or the caller's ``strategy``) is written
+    as ``key``'s one dispatch record.
 
     * theta (``len < _BBOX_GRID_MIN_ZONES``): broadcast nested-loop —
       every point row tests every zone. Optimal for a when-chain-sized
@@ -103,8 +108,12 @@ def bbox_join_plan(
     zones = spark.createDataFrame(
         zone_rows, "zone string, xlo double, xhi double, ylo int, yhi int"
     )
+    reason = f"{len(zone_rows)} zones, grid from _BBOX_GRID_MIN_ZONES = {_BBOX_GRID_MIN_ZONES}"
     if strategy is None:
         strategy = "grid" if len(zone_rows) >= _BBOX_GRID_MIN_ZONES else "theta"
+    else:
+        reason = f"{strategy} requested; {reason}"
+    decided(key, strategy, reason)
     if strategy == "theta":
         cond = (
             (ev.x >= zones.xlo)
@@ -184,7 +193,7 @@ def geo_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = with_json_field(load(spark, sf_dir, "events"), "y", "props", "k", "int").select(
         F.col("value").alias("x"), "y"
     )
-    return bbox_join_plan(spark, ev, _ZONES)
+    return bbox_join_plan(spark, "geo_bbox_join", ev, _ZONES)
 
 
 # ---------------------------------------------------------------------------

@@ -8,8 +8,6 @@ the idempotent-upsert semantics without a mutable store.
 
 from __future__ import annotations
 
-import uuid as _uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
@@ -20,6 +18,7 @@ from ..tables import (
     corpus_scratch,
     load,
     read_parquet,
+    run_scratch,
     scratch_dir,
     stage_scratch,
 )
@@ -928,11 +927,6 @@ class _JsonlSinkWriter(DataSourceWriter):
         pass  # no manifest -> nothing published; files are scratch
 
 
-# Most-recent invocation's uuid-scoped sink dir (introspection hook
-# for tests; each run gets a fresh dir — see the key's docstring).
-_LAST_PYDS_DIR: str | None = None
-
-
 @query(
     "snk_python_datasource_write",
     oracle="""
@@ -963,19 +957,12 @@ def snk_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     a cluster deployment points the same writer at an object store.
     Integer-only measures (count / key sum, DuckDB HUGEINT hazard).
 
-    The output dir is uuid-scoped per invocation (stm_rocksdb_
-    changelog's run_{uuid} discipline, r9 review finding #2): a fixed
-    shared path would let a concurrent run's cleanup delete files
-    this run's lazily-evaluated readback still references — and NO
-    in-key pruning of older run dirs either, for the same reason
-    (.scratch is disposable by contract; the dirs are a few KB)."""
+    The sink writes into a ``run_scratch`` directory of its own, which
+    is removed when the key returns, so the aggregate of at most 5
+    rows is read back and materialised first."""
     import json
     import os
 
-    global _LAST_PYDS_DIR
-    out_dir = scratch_dir("pyds_sink", f"run_{_uuid.uuid4().hex[:12]}")
-    os.makedirs(out_dir, exist_ok=True)
-    _LAST_PYDS_DIR = out_dir
     # re-registration of a session-scoped name is a silent overwrite in
     # this API (probed: no error on duplicate register), so a raise here
     # is a REAL failure that must surface — not be swallowed as
@@ -986,16 +973,22 @@ def snk_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey") % 100 == 0)
         .select("o_orderkey", "o_orderpriority")
     )
-    src.write.format("jsonl_sink").option("path", out_dir).mode(
-        "append"
-    ).save()
-    with open(os.path.join(out_dir, "_MANIFEST.json")) as fh:
-        manifest = json.load(fh)
-    files = [os.path.join(out_dir, f) for f in manifest["files"]]
-    back = spark.read.schema("o_orderkey long, o_orderpriority string").json(
-        files
-    )
-    return back.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum("o_orderkey").alias("sum_key"),
+    with run_scratch("pyds_sink") as out_dir:
+        src.write.format("jsonl_sink").option("path", out_dir).mode(
+            "append"
+        ).save()
+        with open(os.path.join(out_dir, "_MANIFEST.json")) as fh:
+            manifest = json.load(fh)
+        files = [os.path.join(out_dir, f) for f in manifest["files"]]
+        back = spark.read.schema("o_orderkey long, o_orderpriority string").json(
+            files
+        )
+        out = back.groupBy("o_orderpriority").agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum("o_orderkey").alias("sum_key"),
+        )
+        # materialize: the frame returned must not depend on run-id dirs
+        pdf = out.toPandas()
+    return spark.createDataFrame(
+        pdf, schema="o_orderpriority string, n_orders long, sum_key long"
     )

@@ -13,6 +13,10 @@ deterministic batch sequence, so windowed/dedup results equal their
 batch twins and are hash-checkable (SURVEY §7 hard-part #3). The
 late-data demo forces multi-batch processing with
 maxFilesPerTrigger=1 and is declared rows-only.
+
+Every file stream reads its staged parquet through ``_stream_files``
+(schema from the footers; one micro-batch per file, or one for all),
+and every transformWithState key runs through ``_tws_drain``.
 """
 
 from __future__ import annotations
@@ -21,10 +25,15 @@ import os
 import shutil
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.streaming.stateful_processor import (
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 
 from ..operators.aggregates import _hll_estimate, _hll_oracle, _hll_registers
 from ..registry import query
@@ -44,12 +53,12 @@ from ..tables import (
 
 # The file stream source requires an explicit schema. events.ts has
 # shipped as both TIMESTAMP(NANOS) (long under nanosAsLong) and
-# TIMESTAMP(MICROS) (NTZ) — so the schema is read from the footers of
-# the actual staged file (tables.parquet_schema, cached on the source
-# signature) and the ts dtype is normalized post-read by
-# events_ts_to_timestamp, exactly like the batch loader. A hard-coded
-# schema here cost round 2 three streaming keys when the testdata
-# encoding flipped.
+# TIMESTAMP(MICROS) (NTZ) — so every file stream takes its schema from
+# the footers of the files actually staged (tables.parquet_schema, in
+# _stream_files), and the events streams normalize the ts dtype
+# post-read by events_ts_to_timestamp, exactly like the batch loader.
+# A hard-coded schema here cost round 2 three streaming keys when the
+# testdata encoding flipped.
 
 
 # A stateful micro-batch pays a fixed per-partition cost (state store
@@ -96,6 +105,17 @@ def _run_to_memory(
         spark.catalog.dropTempView(name)
 
 
+def _stream_files(spark: SparkSession, indir: str, per_file: bool) -> DataFrame:
+    """File-source stream over the parquet files staged in ``indir``,
+    with the schema their footers give. ``per_file`` makes each file
+    its own micro-batch (``maxFilesPerTrigger=1``), so stream state
+    must carry across batches; otherwise one batch takes every file."""
+    reader = spark.readStream.schema(parquet_schema(spark, indir))
+    if per_file:
+        reader = reader.option("maxFilesPerTrigger", 1)
+    return reader.parquet(indir)
+
+
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table. The file source needs
     a directory, so the single parquet file is staged (hard-linked or
@@ -113,8 +133,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.copystat(src, dst)
 
     stage = stage_scratch("stream_events", sf_dir, "events", build)
-    schema = parquet_schema(spark, os.path.join(stage, "events.parquet"))
-    return events_ts_to_timestamp(spark.readStream.schema(schema).parquet(stage))
+    return events_ts_to_timestamp(_stream_files(spark, stage, per_file=False))
 
 
 @query(
@@ -309,25 +328,9 @@ def stm_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.utime(dst, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
 
     indir = stage_scratch("stm_late_data", sf_dir, "events", build)
-
-    ts_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(ts_schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", False)
-        .parquet(indir)
-    )
     agg = (
-        stream.withWatermark("ts", "10 minutes")
+        _stream_files(spark, indir, per_file=True)
+        .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("hour_start"), "n_events")
@@ -380,7 +383,6 @@ def stm_stateful_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF sorts each group by (ts, event_id), so the emitted session
     stats equal the batch lag-based sessionization SQL. State is
     still exercised (written, then read back on the final emit)."""
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     ev = _stream_events(spark, sf_dir).select("user_id", "ts", "event_id")
@@ -706,6 +708,7 @@ _EVENT_COL_STAGES = {
     "stm_tws_types": (("user_id", "event_type"), 2),
     "stm_tws_ids": (("user_id", "event_id"), 2),
     "stm_tws_ts": (("user_id", "ts"), 2),
+    "stm_rkcl_events": (("event_type", "value"), 2),
 }
 
 
@@ -756,11 +759,7 @@ def stm_sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB/day the same query runs unchanged with a real
     checkpoint and a kafka source."""
     indir = _stage_event_cols(spark, sf_dir, "stm_hll_users")
-    raw = (
-        spark.readStream.schema("user_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
+    raw = _stream_files(spark, indir, per_file=True)
     return _hll_estimate(
         _run_to_memory(_hll_registers(raw, "user_id"), "stm_hll", "complete")
     )
@@ -854,9 +853,10 @@ def stm_join_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival-order-independent once fully flushed, so the engines
     must agree row-for-row — a duplicate or withheld unmatched
     emission flips n_rows/n_unmatched."""
+    # the stage arrives as one batch: split into several, the watermark
+    # could drop real rows as late
     stage = _stage_events_with_sentinel(spark, sf_dir)
-    raw = spark.readStream.schema(parquet_schema(spark, stage)).parquet(stage)
-    ev = events_ts_to_timestamp(raw)
+    ev = events_ts_to_timestamp(_stream_files(spark, stage, per_file=False))
     clicks = (
         ev.where(F.col("event_type") == "click")
         .select("user_id", F.col("ts").alias("c_ts"), F.col("value").alias("c_val"))
@@ -1014,6 +1014,35 @@ def _tws_runtime_env(spark: SparkSession) -> None:
             env["PYTHONPATH"] = zip_path + (":" + cur if cur else "")
 
 
+def _tws_drain(
+    stream: DataFrame,
+    processor: StatefulProcessor,
+    output_type: str,
+    time_mode: str,
+    prefix: str,
+    confs: dict[str, str] | None = None,
+) -> DataFrame:
+    """Run ``processor`` over ``stream`` grouped by ``user_id`` through
+    ``transformWithStateInPandas`` (Update mode, ``time_mode``) on the
+    RocksDB state store, plus any ``confs`` the key names, and drain
+    the result to a memory sink (``_run_to_memory``, update mode).
+
+    ``_tws_runtime_env`` runs first, before the stateful plan is
+    built: the Python function the plan carries takes
+    ``sc.environment`` as it is at that moment, so the TWS driver
+    worker it spawns finds the staged protobuf runtime."""
+    spark = stream.sparkSession
+    _tws_runtime_env(spark)
+    with conf_override(spark, {**_ROCKSDB, **(confs or {})}):
+        out = stream.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=processor,
+            outputStructType=output_type,
+            outputMode="Update",
+            timeMode=time_mode,
+        )
+        return _run_to_memory(out, prefix, "update")
+
+
 def _drain_to_target(
     spark: SparkSession, q, name: str, target: int, timeout_s: float = 120.0
 ) -> DataFrame:
@@ -1074,12 +1103,8 @@ def stm_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``applyInPandasWithState`` (`stm_stateful_session`), unblocked in
     r8 by staging the container's own pure-Python protobuf runtime
     (see ``_ensure_protobuf_runtime``; the runner's state-server
-    protocol needs StateMessage_pb2). The zip reaches the TWS driver
-    worker via ``sc.environment['PYTHONPATH']`` — pyspark keys its
-    Python-worker factories by (exec, envVars), so mutating the
-    environment BEFORE building the plan spawns a correctly-pathed
-    worker even on an already-running plain driver session (the
-    driver-sweep condition; probed from /tmp).
+    protocol needs StateMessage_pb2; ``_tws_drain`` routes it to the
+    TWS driver worker).
 
     Determinism/hash-check: events staged as 2 files, drained with
     ``maxFilesPerTrigger=1`` under availableNow — TWO micro-batches,
@@ -1097,13 +1122,6 @@ def stm_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (long, double) row per user in RocksDB — bounded, incremental,
     24/7-capable; the same query runs unchanged against a kafka
     source with a real checkpoint at production scale."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _tws_runtime_env(spark)
 
     class RunningTotals(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1134,19 +1152,13 @@ def stm_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     indir = _stage_event_cols(spark, sf_dir, "stm_tws_events")
-    raw = (
-        spark.readStream.schema("user_id long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
+    sink = _tws_drain(
+        _stream_files(spark, indir, per_file=True),
+        RunningTotals(),
+        "user_id long, n_events long, sum_value double",
+        "None",
+        "stm_tws",
     )
-    with conf_override(spark, _ROCKSDB):
-        out = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType="user_id long, n_events long, sum_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_to_memory(out, "stm_tws", "update")
     final = F.max(F.struct("n_events", "sum_value")).alias("m")
     return (
         sink.groupBy("user_id")
@@ -1184,13 +1196,6 @@ def stm_tws_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     arbitrary-dimension generalization a built-in windowed agg can't
     express when the map keys are dynamic; per-batch work is
     map-side pandas folding."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _tws_runtime_env(spark)
 
     class TypeCounts(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1222,19 +1227,13 @@ def stm_tws_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     indir = _stage_event_cols(spark, sf_dir, "stm_tws_types")
-    raw = (
-        spark.readStream.schema("user_id long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
+    sink = _tws_drain(
+        _stream_files(spark, indir, per_file=True),
+        TypeCounts(),
+        "user_id long, event_type string, n_events long",
+        "None",
+        "stm_twsm",
     )
-    with conf_override(spark, _ROCKSDB):
-        out = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=TypeCounts(),
-            outputStructType="user_id long, event_type string, n_events long",
-            outputMode="Update",
-            timeMode="None",
-        )
-        sink = _run_to_memory(out, "stm_twsm", "update")
     return (
         sink.groupBy("user_id", "event_type")
         .agg(F.max("n_events").alias("n_events"))
@@ -1272,13 +1271,6 @@ def stm_tws_list_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     when batch 2 merged (a lost list leaves batch-2-only ids).
     Integer ids, rank ties impossible (event_id unique per user at
     generation)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _tws_runtime_env(spark)
 
     class TopKIds(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1309,19 +1301,13 @@ def stm_tws_list_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     indir = _stage_event_cols(spark, sf_dir, "stm_tws_ids")
-    raw = (
-        spark.readStream.schema("user_id long, event_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
+    t = _tws_drain(
+        _stream_files(spark, indir, per_file=True),
+        TopKIds(),
+        "user_id long, seen_total long, event_id long",
+        "None",
+        "stm_twsl",
     )
-    with conf_override(spark, _ROCKSDB):
-        out = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=TopKIds(),
-            outputStructType="user_id long, seen_total long, event_id long",
-            outputMode="Update",
-            timeMode="None",
-        )
-        t = _run_to_memory(out, "stm_twsl", "update")
     w = Window.partitionBy("user_id")
     return (
         t.withColumn("max_seen", F.max("seen_total").over(w))
@@ -1356,13 +1342,6 @@ def stm_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     column family, bounded), watermark-driven expiry scans — the
     session-timeout / TTL-callback machinery a 24/7 deployment uses
     for inactivity logic."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _tws_runtime_env(spark)
 
     class FirstSightTimer(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1389,20 +1368,13 @@ def stm_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     indir = _stage_event_cols(spark, sf_dir, "stm_tws_ts")
-    raw = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-        .withWatermark("ts", "1 hour")
+    sink = _tws_drain(
+        _stream_files(spark, indir, per_file=True).withWatermark("ts", "1 hour"),
+        FirstSightTimer(),
+        "user_id long, fired_at_ms long",
+        "EventTime",
+        "stm_twst",
     )
-    with conf_override(spark, _ROCKSDB):
-        out = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=FirstSightTimer(),
-            outputStructType="user_id long, fired_at_ms long",
-            outputMode="Update",
-            timeMode="EventTime",
-        )
-        sink = _run_to_memory(out, "stm_twst", "update")
     # exactly-once is part of the contract: a duplicate fire would
     # double a row and flip the hash via the distinct here being absent
     return sink.select("user_id", "fired_at_ms")
@@ -1437,22 +1409,8 @@ def stm_rocksdb_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pathlib import Path as _Path
 
-    def build(indir: str) -> None:
-        (
-            load(spark, sf_dir, "events")
-            .select("event_type", "value")
-            .repartition(2)
-            .write.mode("overwrite")
-            .parquet(indir)
-        )
-
-    indir = stage_scratch("stm_rkcl_events", sf_dir, "events", build)
-    schema = parquet_schema(spark, indir)
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
-    )
+    indir = _stage_event_cols(spark, sf_dir, "stm_rkcl_events")
+    raw = _stream_files(spark, indir, per_file=True)
     agg = raw.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(
@@ -1567,13 +1525,6 @@ def stm_tws_value_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     stm_transform_with_state, plus TTL's secondary index — the
     production knob that keeps 24/7 session state from growing
     without bound (abandoned keys expire instead of accumulating)."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _tws_runtime_env(spark)
 
     class TtlTotals(StatefulProcessor):
         def __init__(self, ttl_ms: int) -> None:
@@ -1614,23 +1565,14 @@ def stm_tws_value_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     indir = _stage_events_parity_files(spark, sf_dir)
-    raw = (
-        spark.readStream.schema("user_id long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(indir)
+    sink = _tws_drain(
+        _stream_files(spark, indir, per_file=True),
+        TtlTotals(1),
+        "user_id long, n_events long, sum_value double, state_carried boolean",
+        "ProcessingTime",
+        "stm_tws_ttl",
+        {"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
     )
-    confs = {**_ROCKSDB, "spark.sql.streaming.noDataMicroBatches.enabled": "false"}
-    with conf_override(spark, confs):
-        out = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=TtlTotals(1),
-            outputStructType=(
-                "user_id long, n_events long, sum_value double, "
-                "state_carried boolean"
-            ),
-            outputMode="Update",
-            timeMode="ProcessingTime",
-        )
-        sink = _run_to_memory(out, "stm_tws_ttl", "update")
     return (
         sink.groupBy("user_id")
         .agg(
@@ -1729,7 +1671,6 @@ def stm_cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = _stage_cdc_log(spark, sf_dir)
     with run_scratch("stm_cdc_snap") as base:
         snap_dir = f"{base}/snap"
-        schema = "k long, seq int, op string, status string, price double"
 
         def merge(bdf: DataFrame, _bid: int) -> None:
             sp = bdf.sparkSession
@@ -1754,9 +1695,7 @@ def stm_cdc_stream_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         ckpt = f"{base}/ckpt"
         q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+            _stream_files(spark, stage, per_file=True)
             .writeStream.foreachBatch(merge)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)

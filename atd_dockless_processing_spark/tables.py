@@ -119,7 +119,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 DISPATCH = logging.getLogger("atd_dockless_processing_spark.dispatch")
 
 
-def _decided(key: str, decision: str, reason: str) -> None:
+def decided(key: str, decision: str, reason: str) -> None:
     """The one dispatch record of a physical form ``key`` chose while
     its plan was built."""
     extra = {"key": key, "decision": decision, "reason": reason}
@@ -193,13 +193,25 @@ def _read_footers(path: str) -> _Footers:
         return _Footers(nrows, reason=reason or "no data files")
     first, *rest = metas
     spark_json = (first.metadata or {}).get(_SPARK_SCHEMA_KEY)
-    if any(
-        not m.schema.equals(first.schema)
-        or (m.metadata or {}).get(_SPARK_SCHEMA_KEY) != spark_json
-        for m in rest
-    ):
+    told = _schema_told(first)
+    if any(_schema_told(m) != told for m in rest):
         return _Footers(nrows, reason="data files' footers disagree")
     return _Footers(nrows, first.schema, spark_json)
+
+
+def _schema_told(meta):
+    """What one data file's footer tells of the Spark schema: its Spark
+    schema JSON (which Spark takes over the parquet types) with every
+    field nullable, as a file source makes them, else its parquet
+    schema. Spark-written files that differ only in nullability (a
+    literal column in one, a nullable one in another) tell one schema."""
+    spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_json is None:
+        return meta.schema
+    try:
+        return _as_nullable(json.loads(spark_json))
+    except ValueError:
+        return spark_json
 
 
 def _footers(path: str) -> _Footers:
@@ -372,7 +384,7 @@ def rows_below(key: str, sf_dir: str, table: str, bound: int) -> bool:
     below = nrows is not None and nrows < bound
     count = f"unknown ({footers.reason})" if nrows is None else nrows
     decision = "small-input form" if below else "any-size form"
-    _decided(key, decision, f"{table} rows: {count}, bound {bound}")
+    decided(key, decision, f"{table} rows: {count}, bound {bound}")
     return below
 
 
@@ -634,7 +646,7 @@ class Layout:
             else "a table provider serves the tables" if provider_active()
             else "layout not built, stale or not attached"
         )
-        _decided(key, self.form if use else "adhoc", f"{self.tag} at {sf_dir}: {why}")
+        decided(key, self.form if use else "adhoc", f"{self.tag} at {sf_dir}: {why}")
         return use
 
     def write(self, spark: SparkSession, sf_dir: str) -> None:

@@ -11,6 +11,10 @@ divergences were found across rounds by being laxer than the driver
 Spark SUM(long)→int64 on `fn_url_parse`): a numpy int64 0 and a
 float64 0.0 must NOT normalize equal here, ever.
 
+Under each key's PASS/FAIL line it prints the dispatch records the
+key's build wrote (``tables.DISPATCH``: the physical form chosen, and
+why), as ``driver_sim.py`` does.
+
 Usage: python scripts/selfcheck.py [key ...] [--sf=DIR]
 """
 
@@ -18,6 +22,8 @@ from __future__ import annotations
 
 import datetime as dt
 import decimal
+import logging
+import logging.handlers
 import math
 import os
 import sys
@@ -33,6 +39,7 @@ import pandas as pd  # noqa: E402
 
 from atd_dockless_processing_spark import ORACLES, QUERIES, TABLES  # noqa: E402
 from atd_dockless_processing_spark.session import get_spark  # noqa: E402
+from atd_dockless_processing_spark.tables import DISPATCH  # noqa: E402
 
 
 def _norm_val(v):
@@ -140,6 +147,35 @@ TRIAGE_HINTS = {
 }
 
 
+def check_key(spark, con, sf_dir: str, key: str) -> tuple[str, str]:
+    """Run ``key`` on Spark and its oracle on DuckDB; return the outcome
+    (``pass``, ``fail`` or ``rows-only``) and the key's report line."""
+    t0 = time.time()
+    try:
+        s_pdf = QUERIES[key](spark, sf_dir).toPandas()
+    except Exception as e:  # noqa: BLE001
+        return "fail", f"FAIL {key}: spark error: {type(e).__name__}: {str(e)[:300]}"
+    if key not in ORACLES:
+        return "rows-only", f"ok   {key}: rows-only ({len(s_pdf)} rows, {time.time()-t0:.1f}s)"
+    try:
+        o_pdf = con.execute(ORACLES[key]).df()
+    except Exception as e:  # noqa: BLE001
+        return "fail", f"FAIL {key}: oracle error: {type(e).__name__}: {str(e)[:300]}"
+    sc, sr = norm_pdf(s_pdf)
+    oc, orr = norm_pdf(o_pdf)
+    hint = f" [{TRIAGE_HINTS[key]}]" if key in TRIAGE_HINTS else ""
+    if sc != oc:
+        return "fail", f"FAIL {key}: columns {sc} != {oc}"
+    if len(sr) != len(orr):
+        return "fail", (
+            f"FAIL {key}: rowcount {len(sr)} != {len(orr)};"
+            f" {diff_preview(sr, orr)}{hint}"
+        )
+    if sr != orr:
+        return "fail", f"FAIL {key}: values differ; {diff_preview(sr, orr)}{hint}"
+    return "pass", f"PASS {key} ({len(sr)} rows, {time.time()-t0:.1f}s)"
+
+
 def main():
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = "/root/testdata/sf0.01"
@@ -148,55 +184,27 @@ def main():
             sf_dir = a.split("=", 1)[1]
     keys = args or sorted(QUERIES)
     spark = get_spark("selfcheck")
+    records = logging.handlers.BufferingHandler(1 << 20)
+    DISPATCH.addHandler(records)
+    DISPATCH.setLevel(logging.INFO)
     con = duck_con(sf_dir)
-    n_pass = n_fail = n_rows_only = 0
+    n = dict.fromkeys(("pass", "fail", "rows-only"), 0)
     t_all = time.time()
     for key in keys:
         if key not in QUERIES:
             print(f"?? {key}: unknown key")
             continue
-        t0 = time.time()
-        try:
-            df = QUERIES[key](spark, sf_dir)
-            s_pdf = df.toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {key}: spark error: {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
-            continue
-        if key not in ORACLES:
-            print(f"ok   {key}: rows-only ({len(s_pdf)} rows, {time.time()-t0:.1f}s)")
-            n_rows_only += 1
-            continue
-        try:
-            o_pdf = con.execute(ORACLES[key]).df()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {key}: oracle error: {type(e).__name__}: {str(e)[:300]}")
-            n_fail += 1
-            continue
-        sc, sr = norm_pdf(s_pdf)
-        oc, orr = norm_pdf(o_pdf)
-        if sc != oc:
-            print(f"FAIL {key}: columns {sc} != {oc}")
-            n_fail += 1
-        elif len(sr) != len(orr):
-            hint = f" [{TRIAGE_HINTS[key]}]" if key in TRIAGE_HINTS else ""
-            print(
-                f"FAIL {key}: rowcount {len(sr)} != {len(orr)};"
-                f" {diff_preview(sr, orr)}{hint}"
-            )
-            n_fail += 1
-        elif sr != orr:
-            hint = f" [{TRIAGE_HINTS[key]}]" if key in TRIAGE_HINTS else ""
-            print(f"FAIL {key}: values differ; {diff_preview(sr, orr)}{hint}")
-            n_fail += 1
-        else:
-            print(f"PASS {key} ({len(sr)} rows, {time.time()-t0:.1f}s)")
-            n_pass += 1
+        outcome, line = check_key(spark, con, sf_dir, key)
+        n[outcome] += 1
+        print(line)
+        for r in records.buffer:
+            print("   ", r.getMessage())
+        records.flush()
     print(
-        f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only"
+        f"\n{n['pass']} pass, {n['fail']} fail, {n['rows-only']} rows-only"
         f" / {len(keys)} keys in {time.time()-t_all:.0f}s"
     )
-    sys.exit(1 if n_fail else 0)
+    sys.exit(1 if n["fail"] else 0)
 
 
 if __name__ == "__main__":

@@ -1368,6 +1368,41 @@ def test_rate_source_exactly_once_across_restarts(spark):
         assert rows[b] == (2000, 2000 * lo + (1999 * 2000) // 2), (b, rows[b])
 
 
+# multi-batch stream key -> its staged file count
+_STREAM_FILES = {
+    "stm_sketch_hll_merge": 4,
+    "stm_transform_with_state": 2,
+    "stm_tws_map_state": 2,
+    "stm_tws_list_state": 2,
+    "stm_tws_timers": 2,
+    "stm_tws_value_ttl": 2,
+    "stm_rocksdb_changelog": 2,
+    "stm_late_data_drop": 2,
+    "stm_cdc_stream_apply": 3,
+}
+
+
+@pytest.mark.parametrize("key", sorted(_STREAM_FILES))
+def test_multi_batch_stream_keys_keep_their_batch_count(spark, sf_dir, monkeypatch, key):
+    """Each staged file of a multi-batch stream key is its own
+    micro-batch: the queries the key starts report one progress entry
+    with input rows per staged file. The hash gate cannot see this: a
+    single-batch drain returns the same rows for most of these keys."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    started = []
+    start = DataStreamWriter.start
+
+    def recorded(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recorded)
+    QUERIES[key](spark, sf_dir).collect()
+    batches = [p for q in started for p in q.recentProgress if p.numInputRows > 0]
+    assert len(batches) == _STREAM_FILES[key], [p.numInputRows for p in batches]
+
+
 def test_stream_hll_merges_across_four_batches(spark, sf_dir):
     """stm_sketch_hll_merge's premise: the staged dir must hold FOUR
     parquet part files (maxFilesPerTrigger=1 => four micro-batches,
@@ -2401,15 +2436,15 @@ def test_bbox_adaptive_paths_agree(spark, sf_dir):
     )
     theta = {
         r["zone"]: r["n_points"]
-        for r in bbox_join_plan(spark, ev, zones, strategy="theta").collect()
+        for r in bbox_join_plan(spark, "bbox_theta", ev, zones, strategy="theta").collect()
     }
     grid = {
         r["zone"]: r["n_points"]
-        for r in bbox_join_plan(spark, ev, zones, strategy="grid").collect()
+        for r in bbox_join_plan(spark, "bbox_grid", ev, zones, strategy="grid").collect()
     }
     assert theta == grid and theta, (len(theta), len(grid))
     # and the adaptive default picks grid at this zone count
-    plan = bbox_join_plan(spark, ev, zones)._jdf.queryExecution().executedPlan().toString()
+    plan = bbox_join_plan(spark, "bbox_auto", ev, zones)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan[:2000]
 
 
@@ -3441,11 +3476,13 @@ def test_session_variable_bound_survives_drop(spark, sf_dir):
     assert sum(r["n_above"] for r in rows) == expected and expected > 0
 
 
-def test_python_ds_writer_manifest_excludes_orphans(spark, sf_dir):
+def test_python_ds_writer_manifest_excludes_orphans(spark, sf_dir, monkeypatch, tmp_path):
     """snk_python_datasource_write's two-phase-commit claim: the
     readback consumes ONLY manifested files — an orphan .jsonl
-    planted beside them (a simulated failed-task leftover) does not
-    change the result; manifest row total equals the source count."""
+    planted beside them once the commit has run (a simulated
+    failed-task leftover, planted while the run directory is alive)
+    does not change the result; manifest row total equals the source
+    count."""
     import json
     import os
 
@@ -3455,31 +3492,41 @@ def test_python_ds_writer_manifest_excludes_orphans(spark, sf_dir):
     from atd_dockless_processing_spark.sources import sinks
     from atd_dockless_processing_spark.tables import load
 
-    first = {
-        (r["o_orderpriority"]): (r["n_orders"], r["sum_key"])
-        for r in QUERIES["snk_python_datasource_write"](spark, sf_dir).collect()
-    }
-    out_dir = sinks._LAST_PYDS_DIR  # uuid-scoped per invocation
-    assert out_dir is not None
-    with open(os.path.join(out_dir, "_MANIFEST.json")) as fh:
-        manifest = json.load(fh)
+    def rows():
+        return {
+            r["o_orderpriority"]: (r["n_orders"], r["sum_key"])
+            for r in QUERIES["snk_python_datasource_write"](spark, sf_dir).collect()
+        }
+
+    first = rows()
+    seen = str(tmp_path / "seen.json")
+
+    class OrphaningWriter(sinks._JsonlSinkWriter):
+        def commit(self, messages):  # noqa: ANN001 - on the driver
+            sinks._JsonlSinkWriter.commit(self, messages)
+            with open(os.path.join(self.path, "part-orphan.jsonl"), "w") as fh:
+                fh.write('{"o_orderkey": 999999999, "o_orderpriority": "X-ORPHAN"}\n')
+            with open(os.path.join(self.path, "_MANIFEST.json")) as fh:
+                manifest = json.load(fh)
+            with open(seen, "w") as fh:
+                json.dump({"manifest": manifest, "files": sorted(os.listdir(self.path))}, fh)
+
+    class OrphaningSink(sinks.JsonlSinkDataSource):
+        def writer(self, schema, overwrite):  # noqa: ANN001 - pyspark API
+            return OrphaningWriter(self.options["path"])
+
+    monkeypatch.setattr(sinks, "JsonlSinkDataSource", OrphaningSink)
+    again = rows()
+    with open(seen) as fh:
+        run = json.load(fh)
+    assert "part-orphan.jsonl" in run["files"]
+    assert "part-orphan.jsonl" not in run["manifest"]["files"]
     src_n = (
         load(spark, sf_dir, "orders")
         .where(F.col("o_orderkey") % 100 == 0)
         .count()
     )
-    assert manifest["rows"] == src_n == sum(n for n, _ in first.values())
-    # plant an orphan the commit never saw
-    with open(os.path.join(out_dir, "part-orphan.jsonl"), "w") as fh:
-        fh.write('{"o_orderkey": 999999999, "o_orderpriority": "X-ORPHAN"}\n')
-    files = [os.path.join(out_dir, f) for f in manifest["files"]]
-    back = (
-        spark.read.schema("o_orderkey long, o_orderpriority string")
-        .json(files)
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("o_orderkey").alias("s"))
-    )
-    again = {r["o_orderpriority"]: (r["n"], r["s"]) for r in back.collect()}
+    assert run["manifest"]["rows"] == src_n == sum(n for n, _ in first.values())
     assert "X-ORPHAN" not in again and again == first
 
 
@@ -3499,13 +3546,10 @@ def test_tws_ttl_expiry_vs_survival_control(spark, sf_dir):
     )
 
     from atd_dockless_processing_spark import QUERIES
-    from atd_dockless_processing_spark.session import conf_override
     from atd_dockless_processing_spark.streaming.stream_queries import (
-        _ROCKSDB,
-        _STREAM_PARTITIONS,
-        _drain_to_target,
         _stage_events_parity_files,
-        _tws_runtime_env,
+        _stream_files,
+        _tws_drain,
     )
     from atd_dockless_processing_spark.tables import load
 
@@ -3514,8 +3558,6 @@ def test_tws_ttl_expiry_vs_survival_control(spark, sf_dir):
     ev = load(spark, sf_dir, "events")
     assert sum(r["n_events"] for r in reg) == ev.count()
     assert not any(r["state_carried"] for r in reg)
-
-    _tws_runtime_env(spark)
 
     class LongTtl(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -3540,13 +3582,6 @@ def test_tws_ttl_expiry_vs_survival_control(spark, sf_dir):
             pass
 
     indir = _stage_events_parity_files(spark, sf_dir)
-    target = sum(
-        spark.read.parquet(f"{indir}/{f}.parquet")
-        .select("user_id")
-        .distinct()
-        .count()
-        for f in ("f0", "f1")
-    )
     both = (
         spark.read.parquet(f"{indir}/f0.parquet")
         .select("user_id")
@@ -3556,28 +3591,14 @@ def test_tws_ttl_expiry_vs_survival_control(spark, sf_dir):
         )
         .count()
     )
-    name = "tws_ttl_ctrl"
-    with conf_override(spark, _ROCKSDB):
-        raw = (
-            spark.readStream.schema("user_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(indir)
-        )
-        out = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=LongTtl(),
-            outputStructType="user_id long, n long, carried boolean",
-            outputMode="Update",
-            timeMode="ProcessingTime",
-        )
-        with conf_override(spark, _STREAM_PARTITIONS):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            sink = _drain_to_target(spark, q, name, target)
+    sink = _tws_drain(
+        _stream_files(spark, indir, per_file=True),
+        LongTtl(),
+        "user_id long, n long, carried boolean",
+        "ProcessingTime",
+        "tws_ttl_ctrl",
+        {"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
+    )
     carried_users = sink.where(F.col("carried")).select("user_id").distinct()
     # with a 1h TTL every user seen in BOTH slices carries state
     assert carried_users.count() == both and both > 0
@@ -3630,9 +3651,12 @@ def test_ddww_dedups_regenerated_timestamp_replay(spark, tmp_path):
     inside the delay) is dropped by dropDuplicatesWithinWatermark
     but kept by the watermark-evictable plain form
     dropDuplicates([id, ts]) — the at-least-once-sink replay case."""
-    import uuid as _uuid
-
     from pyspark.sql import functions as F
+
+    from atd_dockless_processing_spark.streaming.stream_queries import (
+        _run_to_memory,
+        _stream_files,
+    )
 
     base = "2024-01-01 10:00:00"
     shift = "2024-01-01 10:05:00"
@@ -3647,23 +3671,9 @@ def test_ddww_dedups_regenerated_timestamp_replay(spark, tmp_path):
         )
 
     def drain(dedup_fn):
-        name = f"ddww_test_{_uuid.uuid4().hex[:8]}"
-        raw = (
-            spark.readStream.schema("event_id long, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(indir)
-            .withWatermark("ts", "1 hour")
-        )
+        raw = _stream_files(spark, indir, per_file=True).withWatermark("ts", "1 hour")
         out = dedup_fn(raw).groupBy().agg(F.count(F.lit(1)).alias("n"))
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(name).collect()[0]["n"]
+        return _run_to_memory(out, "ddww_test", "complete").collect()[0]["n"]
 
     kept_within = drain(lambda df: df.dropDuplicatesWithinWatermark(["event_id"]))
     kept_plain = drain(lambda df: df.dropDuplicates(["event_id", "ts"]))

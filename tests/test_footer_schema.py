@@ -123,11 +123,11 @@ def test_footer_schema_dispatch_rows(spark, tmp_path, caplog, case):
 
 def test_footer_schema_directories(spark, tmp_path):
     """A Spark-written directory (the Spark schema JSON in its footers,
-    an INT96 timestamp, ``_SUCCESS`` and ``.crc`` files) maps; a
-    partitioned directory and one whose part files disagree fall
-    back, as does a footer that will not open (raising the inferring
-    read's error class); a non-local path falls back before any Spark
-    call."""
+    an INT96 timestamp, ``_SUCCESS`` and ``.crc`` files) maps, also
+    when its part files differ only in nullability; a partitioned
+    directory and one whose part files disagree fall back, as does a
+    footer that will not open (raising the inferring read's error
+    class); a non-local path falls back before any Spark call."""
     sw = str(tmp_path / "spark_written")
     spark.sql(
         "SELECT id, timestamp'2024-01-02 03:04:05' AS ts,"
@@ -135,6 +135,12 @@ def test_footer_schema_directories(spark, tmp_path):
         " FROM range(3)"
     ).repartition(2).write.parquet(sw)
     assert tables.footer_schema(spark, sw) == spark.read.parquet(sw).schema
+    nulls = str(tmp_path / "nullability")
+    for s in ("'U'", "CAST(NULL AS STRING)"):
+        spark.sql(f"SELECT id, {s} AS s FROM range(2)").coalesce(1).write.mode(
+            "append"
+        ).parquet(nulls)
+    assert tables.footer_schema(spark, nulls) == spark.read.parquet(nulls).schema
 
     part = tmp_path / "partitioned"
     for k in (1, 2):
@@ -231,9 +237,15 @@ _SMALL_FORM = {
 _LAYOUT_KEYS = (
     "join_inner", "join_anti", "join_cross_small", "join_multiway_5", "evt_tumbling_hour"
 )
+# key -> the decisions its record may hold, for keys that choose by
+# something other than a row count
+_DECISIONS = {
+    **dict.fromkeys(_LAYOUT_KEYS, ("bucketed", "staged", "adhoc")),
+    "geo_bbox_join": ("theta",),
+}
 
 
-@pytest.mark.parametrize("key", [*_SMALL_FORM, *_LAYOUT_KEYS])
+@pytest.mark.parametrize("key", [*_SMALL_FORM, *_DECISIONS])
 def test_plan_build_writes_one_decision_record(spark, sf_dir, caplog, key):
     """One record (footer-schema fallbacks, which name a path, aside)
     per build, with ``key``, ``decision`` and ``reason``; the gate keys
@@ -249,8 +261,8 @@ def test_plan_build_writes_one_decision_record(spark, sf_dir, caplog, key):
 
     plan, records = build(sf_dir)
     assert [r.key for r in records] == [key] and records[0].reason
-    if key in _LAYOUT_KEYS:
-        assert records[0].decision in ("bucketed", "staged", "adhoc")
+    if key in _DECISIONS:
+        assert records[0].decision in _DECISIONS[key]
         return
     assert records[0].decision == "small-input form" and _SMALL_FORM[key](plan), plan
     plan, records = build(f"file://{sf_dir}")

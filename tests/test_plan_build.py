@@ -5,9 +5,17 @@ The bench keys build their plans from one SQL text each
 py4j round trips; the budget test pins that. The horizontal-edge
 pin keeps the pre-r16 point-in-polygon form, which the registered
 key replaced, for its equality check and for ``scripts/ab.py``
-(form ``tests.test_plan_build:geo_point_in_polygon_flat_edges``)."""
+(form ``tests.test_plan_build:geo_point_in_polygon_flat_edges``); the
+Python-sink pin keeps the pre-r16 lazy read-back of
+``snk_python_datasource_write`` the same way
+(``tests.test_plan_build:snk_python_datasource_write_lazy``)."""
 
 from __future__ import annotations
+
+import json
+import os
+import shutil
+import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -17,6 +25,7 @@ from pyspark.sql import functions as F
 
 from atd_dockless_processing_spark import QUERIES, tables
 from atd_dockless_processing_spark.operators import geo
+from atd_dockless_processing_spark.sources.sinks import JsonlSinkDataSource
 from bench import BENCH_SET, table_provider
 
 # py4j round trips one bench key's plan build may take over the
@@ -97,3 +106,48 @@ def test_pip_skips_flat_edges_and_matches_old_form(spark, sf_dir, tmp_path):
     for d in (sf_dir, str(tmp_path)):
         rows = sorted(map(tuple, QUERIES["geo_point_in_polygon"](spark, d).collect()))
         assert rows and rows == sorted(map(tuple, geo_point_in_polygon_flat_edges(spark, d).collect()))
+
+
+def snk_python_datasource_write_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``snk_python_datasource_write`` as registered before r16: the
+    aggregate is returned lazily over the manifested sink files, so
+    its ``.scratch/pyds_sink/run_<uuid>`` directory stays behind."""
+    out_dir = tables.scratch_dir("pyds_sink", f"run_{uuid.uuid4().hex[:12]}")
+    os.makedirs(out_dir, exist_ok=True)
+    spark.dataSource.register(JsonlSinkDataSource)
+    src = (
+        tables.load(spark, sf_dir, "orders")
+        .where(F.col("o_orderkey") % 100 == 0)
+        .select("o_orderkey", "o_orderpriority")
+    )
+    src.write.format("jsonl_sink").option("path", out_dir).mode("append").save()
+    with open(os.path.join(out_dir, "_MANIFEST.json")) as fh:
+        manifest = json.load(fh)
+    files = [os.path.join(out_dir, f) for f in manifest["files"]]
+    back = spark.read.schema("o_orderkey long, o_orderpriority string").json(files)
+    return back.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum("o_orderkey").alias("sum_key"),
+    )
+
+
+def test_python_sink_returns_the_lazy_forms_rows(spark, sf_dir):
+    """The Python-sink key returns a materialised frame (no JSON scan
+    in its plan) with the rows and column types of the lazy pre-r16
+    form; only the old form leaves a run directory behind."""
+    runs = tables.SCRATCH / "pyds_sink"
+    before = set(runs.glob("run_*"))
+    old = snk_python_datasource_write_lazy(spark, sf_dir)
+    try:
+        want = sorted(map(tuple, old.collect()))
+    finally:
+        for d in set(runs.glob("run_*")) - before:
+            shutil.rmtree(d)
+    new = QUERIES["snk_python_datasource_write"](spark, sf_dir)
+    assert "json" in old._jdf.queryExecution().executedPlan().toString().lower()
+    assert "json" not in new._jdf.queryExecution().executedPlan().toString().lower()
+    assert [(f.name, f.dataType) for f in new.schema] == [
+        (f.name, f.dataType) for f in old.schema
+    ]
+    assert want and sorted(map(tuple, new.collect())) == want
+    assert set(runs.glob("run_*")) <= before

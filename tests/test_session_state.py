@@ -108,6 +108,15 @@ def test_a_failed_drain_leaves_no_run_directory(spark, sf_dir, monkeypatch, key,
     assert _session_state(spark)[0] == views
 
 
+def test_python_sink_leaves_no_run_directory(spark, sf_dir):
+    """The Python-sink key returns rows that outlive its sink
+    directory: two runs leave no per-run directory under its tag."""
+    before = _run_dirs("pyds_sink")
+    for _ in range(2):
+        assert QUERIES["snk_python_datasource_write"](spark, sf_dir).collect()
+    assert _run_dirs("pyds_sink") <= before
+
+
 def test_run_scratch_is_fresh_and_always_removed():
     """Two uses get two directories, each present inside its block and
     gone after it, with the footers cached under it, after a clean exit
