@@ -127,8 +127,12 @@ def _bench_spark():
       dictionary/RLE decode of the hot cached tables.
     These are HARNESS knobs (documented here, not in session.py):
     they optimize the latency floor of a 32-core local box, while the
-    production session keeps compression + locality + AQE on."""
+    production session keeps compression + locality + AQE on. The
+    codegen cache size is not a harness knob: it is session.py's
+    ``_JVM_START_CONFS``, applied here as in ``get_spark``."""
     from pyspark.sql import SparkSession
+
+    from atd_dockless_processing_spark.session import _JVM_START_CONFS, _ship_package
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     b = (
@@ -147,6 +151,7 @@ def _bench_spark():
         .config("spark.broadcast.compress", "false")
         .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         .config("spark.sql.inMemoryColumnarStorage.batchSize", "65536")
+        .config(map=_JVM_START_CONFS)
     )
     if os.path.isdir("/dev/shm"):
         # per-PID scratch dir so concurrent bench invocations cannot
@@ -167,8 +172,6 @@ def _bench_spark():
         b = b.config("spark.local.dir", shm)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    from atd_dockless_processing_spark.session import _ship_package
-
     _ship_package(spark)
     return spark
 
@@ -266,7 +269,9 @@ def main() -> None:
     # FRESH DataFrame instance (new shuffle ids => every stage runs)
     # OUTSIDE the timer: what still amortizes — and legitimately so —
     # is the table cache above, Catalyst analysis + codegen compile
-    # (source-keyed cache shared across instances), and JVM JIT; the
+    # (source-keyed cache shared across instances, which amortises
+    # compilation only while the session's cache holds the rotating
+    # working set: session._JVM_START_CONFS sizes it), and JVM JIT; the
     # analogue of DuckDB's parse on a warm buffer pool. py4j plan
     # construction (~tens of ms) is excluded from the timer and
     # reported as plan_build_s for the first instance of each query.

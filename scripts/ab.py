@@ -14,6 +14,12 @@ before the clock starts; the figure is the median ``toPandas()`` wall.
 A DuckDB form uses bench.py's oracle setup (4 threads, views over the
 sf_dir parquet) and times ``fetchall()`` the same way.
 
+A key whose work runs while its plan is built (a stream drain, a sink
+write) leaves only the fetch of a finished result to that clock, so
+each record also carries ``build_median_s`` (the plan build: the
+registry call plus ``executedPlan()``; 0 for DuckDB, which has none)
+and ``whole_median_s`` (build plus fetch, per run).
+
 Prints one JSON line per form; ``run_forms`` yields the same records
 to other scripts (scale_rehearsal.py times its ×N rows with it). With ``--check`` (exactly two forms),
 both results are normalized as selfcheck.py does (columns by name,
@@ -51,7 +57,7 @@ def _duck(key: str, sf: str, runs: int):
     for _ in range(runs):
         t0 = time.perf_counter()
         con.execute(sql).fetchall()
-        times.append(time.perf_counter() - t0)
+        times.append((0.0, time.perf_counter() - t0))
     return pdf, times, 4
 
 
@@ -77,16 +83,18 @@ def _spark(form: str, sf: str, runs: int):
     pdf = build().toPandas()  # warm-up: analysis, codegen, JIT
     times = []
     for _ in range(runs):
-        df = build()
         t0 = time.perf_counter()
+        df = build()
+        t1 = time.perf_counter()
         df.toPandas()
-        times.append(time.perf_counter() - t0)
+        times.append((t1 - t0, time.perf_counter() - t1))
     return pdf, times, spark.sparkContext.defaultParallelism
 
 
 def child(form: str, args) -> None:
     """Run one form and write its record (and, for --check, its
-    normalized result) to ``args.out``."""
+    normalized result) to ``args.out``. The runners return one
+    ``(build_s, fetch_s)`` pair per run."""
     if form.startswith("duck:"):
         pdf, times, cpus = _duck(form[5:], args.sf, args.runs)
     else:
@@ -96,8 +104,10 @@ def child(form: str, args) -> None:
         "sf": args.sf,
         "cpus": cpus,
         "rows": len(pdf),
-        "runs_s": [round(t, 4) for t in times],
-        "median_s": round(statistics.median(times), 4),
+        "runs_s": [round(f, 4) for _, f in times],
+        "median_s": round(statistics.median(f for _, f in times), 4),
+        "build_median_s": round(statistics.median(b for b, _ in times), 4),
+        "whole_median_s": round(statistics.median(b + f for b, f in times), 4),
     }
     if args.check:
         from selfcheck import norm_pdf

@@ -185,6 +185,48 @@ def test_bench_queries_hit_the_table_cache(spark):
             df.unpersist()
 
 
+def test_bench_rotation_compiles_each_class_once(spark, sf_dir):
+    """A session serving the 12 bench keys in rotation compiles each
+    generated class once: the second rotation compiles none. Spark's
+    codegen cache (default 100 entries) is smaller than the rotation's
+    working set (about 170 classes with the table-cache fill), so with the
+    default every query recompiles all of its classes;
+    ``session._JVM_START_CONFS`` sizes the cache for the whole
+    inventory. The rotation runs with the bench's settings (AQE off,
+    ``BENCH_PARTS`` shuffle partitions): under AQE the join a stage
+    gets can depend on which stage finished first, so a key may need a
+    few rotations to meet each of its plan variants once."""
+    from bench import BENCH_PARTS, BENCH_SET, table_provider
+    from atd_dockless_processing_spark import QUERIES
+    from atd_dockless_processing_spark.session import _JVM_START_CONFS, conf_override
+    import atd_dockless_processing_spark.tables as tables
+
+    conf = "spark.sql.codegen.cache.maxEntries"
+    assert spark.sparkContext.getConf().get(conf) == _JVM_START_CONFS[conf]
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    cache = {}
+    bench_confs = {"spark.sql.adaptive.enabled": "false",
+                   "spark.sql.shuffle.partitions": str(BENCH_PARTS)}
+    tables.set_table_provider(table_provider(spark, cache))
+    try:
+        per_round = []
+        with conf_override(spark, bench_confs):
+            for _ in range(2):
+                per_key = {}
+                for key in BENCH_SET.values():
+                    n = compiles.getCount()
+                    QUERIES[key](spark, sf_dir).toPandas()
+                    per_key[key] = compiles.getCount() - n
+                per_round.append(per_key)
+        assert compiles.getCount() > 0, "the compile counter reads nothing"
+        recompiled = {k: n for k, n in per_round[1].items() if n}
+        assert not recompiled, f"classes compiled again in the second rotation: {recompiled}"
+    finally:
+        tables.set_table_provider(None)
+        for df in cache.values():
+            df.unpersist()
+
+
 def test_bench_no_per_query_regression_between_rounds():
     """Bench drift tripwire (r7 verdict item 8): compare the two
     latest recorded BENCH_r*.json files per query and fail on a

@@ -8,9 +8,11 @@ result must not depend on what ran before it in the same session."""
 
 from __future__ import annotations
 
+import logging
 import os
 import re
 from pathlib import Path
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -18,7 +20,7 @@ import pytest
 from pyspark.sql.streaming.query import StreamingQuery
 
 from atd_dockless_processing_spark import QUERIES, tables
-from atd_dockless_processing_spark.session import conf_override
+from atd_dockless_processing_spark.session import _RUNTIME_CONFS, conf_override, tune
 from bench import BENCH_SET
 
 # every key that registers SQL inputs, a temp function, a conf
@@ -150,3 +152,28 @@ def test_conf_override_restores_set_and_unset_keys(spark):
         with conf_override(spark, override):
             raise RuntimeError("inside the block")
     assert spark.conf.getAll == before
+
+
+def test_tune_sets_every_conf_the_session_accepts(caplog):
+    """A conf the session refuses (a static conf raises on
+    ``spark.conf.set``) is logged at WARNING and every other conf is
+    still set."""
+    refused = next(iter(_RUNTIME_CONFS))
+
+    class Conf:
+        def __init__(self):
+            self.values = {}
+
+        def set(self, key, value):
+            if key == refused:
+                raise RuntimeError(f"Cannot modify the value of a static config: {key}")
+            self.values[key] = value
+
+    env = {"__atd_pkg_shipped__": "1"}  # skip addPyFile on the stub
+    stub = SimpleNamespace(conf=Conf(), sparkContext=SimpleNamespace(environment=env))
+    with caplog.at_level(logging.WARNING, logger="atd_dockless_processing_spark.session"):
+        assert tune(stub) is stub
+    assert stub.conf.values == {k: v for k, v in _RUNTIME_CONFS.items() if k != refused}
+    assert [r.levelno for r in caplog.records] == [logging.WARNING]
+    assert refused in caplog.records[0].getMessage()
+    assert env["__atd_tuned__"] == "1"

@@ -40,7 +40,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
 
 from selfcheck import duck_con, norm_pdf  # noqa: E402
 
-from atd_dockless_processing_spark import ORACLES, QUERIES  # noqa: E402
+from atd_dockless_processing_spark import ORACLES, QUERIES, tables  # noqa: E402
 
 
 def _append_like(src: str, out: Path, extra: pd.DataFrame) -> None:
@@ -273,14 +273,22 @@ def test_streaming_dedup_drops_synthesized_duplicates(
     the vacuity is present TODAY, not just under regeneration. Append
     re-ingested copies of existing events (same event_id, same ts —
     inside any watermark) and require the deduped counts to match the
-    COUNT(DISTINCT) oracle, i.e. strictly fewer than the raw rows."""
+    COUNT(DISTINCT) oracle, i.e. strictly fewer than the raw rows.
+    The keys stage the corpus's events under ``.scratch`` once per
+    corpus path, and a ``tmp_path`` corpus is never seen again, so the
+    staged copy is removed on exit."""
     corpus = tmp_path / f"sdup_{key[-9:]}"
     corpus.mkdir()
     ev = pd.read_parquet(f"{sf_dir}/events.parquet")
     dups = ev.head(25).copy()  # same event_id/ts: an idempotent re-pull
     _append_like(f"{sf_dir}/events.parquet", corpus / "events.parquet", dups)
 
-    rows = _compare(spark, corpus, key)
+    staged = Path(tables.corpus_scratch("stream_events", str(corpus)))
+    try:
+        rows = _compare(spark, corpus, key)
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
+    assert not staged.exists()
     n_unique = sum(int(r[1].split(":")[1]) for r in rows)
     assert n_unique == len(ev), "dedup must drop the re-ingested copies"
 
@@ -761,6 +769,9 @@ def test_ab_runner_checks_corr_cov_twin(sf_dir):
         "atd_dockless_processing_spark.operators.aggregates:_corr_cov_decimal_twin",
     ]
     assert all(rec["rows"] == 3 and rec["median_s"] > 0 for rec in recs[:2])
+    # one run: the whole call is its plan build plus its fetch
+    assert all(rec["whole_median_s"] >= rec["median_s"] and rec["build_median_s"] > 0
+               for rec in recs[:2])
     assert recs[2]["identical"] is True
 
 
