@@ -26,3 +26,9 @@ def portable_hash60(col: Column | str) -> Column:
 def portable_hash60_sql(expr: str) -> str:
     """The same hash as a DuckDB SQL expression over ``expr``."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
+
+
+def portable_hash60_spark_sql(expr: str) -> str:
+    """The same hash as a Spark SQL expression over ``expr``; it plans
+    as :func:`portable_hash60` does."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"

@@ -3,8 +3,10 @@ the training-data-pipeline extensions beyond MinHash (which lives in
 ``llm.py``): SimHash, character-n-gram Jaccard, embedding-cosine
 near-dup, IVF-bucketed and random-hyperplane ANN, and the keys built
 on near-dup pairs (connected-component clusters, keep list, URL
-canonicalization, cluster-blocked semantic dedup). The array-vector
-helpers ``_dot``/``_norm``/``_as_double`` are defined here once.
+canonicalization, cluster-blocked semantic dedup). Vector math is
+written here once, as Spark SQL text builders (``_as_double``,
+``_dot``, ``_norm``, ``_cos``, ``_sq_dist``, ``_mean_vector``): each
+HOF-form key, and ``llm``'s, builds its plan from one SQL text.
 
 Scale design (the 100 TB story for each):
 - SimHash: per-doc 32-bit signature is a pure map (one pass, no
@@ -25,12 +27,14 @@ Scale design (the 100 TB story for each):
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import portable_hash60, portable_hash60_sql
+from ..functions.hashing import portable_hash60_spark_sql, portable_hash60_sql
 from ..registry import query
+from ..session import sql_over, temp_views
 from ..tables import load, rows_below
 
 def first_eq_band(eq_at, n_bands: int):
@@ -53,6 +57,15 @@ def first_eq_band(eq_at, n_bands: int):
     return expr
 
 
+def first_eq_band_sql(eq_at, n_bands: int) -> str:
+    """:func:`first_eq_band` as Spark SQL text; ``eq_at(j)`` returns
+    the band-``j`` condition as text."""
+    expr = "-1"
+    for j in reversed(range(n_bands)):
+        expr = f"CASE WHEN {eq_at(j)} THEN {j} ELSE {expr} END"
+    return expr
+
+
 # ---------------------------------------------------------------------------
 # SimHash near-dup
 # ---------------------------------------------------------------------------
@@ -62,20 +75,14 @@ _SIMHASH_BANDS = 4  # 4 bands x 8 bits: recall 1.0 for hamming <= 3
 _HAMMING_T = 3
 
 
-def _bit_set(i: int):
-    # single-param closure: a 2-arg lambda would be read by F.filter
-    # as an (element, index) lambda, turning i into a Column
-    return lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1
-
-
-def _simhash32(hs):
-    """32-bit SimHash of an array<long> of token hashes: bit i is set
-    iff the majority of token hashes have bit i set."""
-    n = F.size(hs)
-    fp = F.lit(0).cast("long")
+def _simhash32_spark_sql(hs: str) -> str:
+    """32-bit SimHash of an array<long> of token hashes ``hs`` as Spark
+    SQL text: bit i is set iff the majority of token hashes have bit i
+    set."""
+    fp = "CAST(0 AS BIGINT)"
     for i in range(_SIMHASH_BITS):
-        ones = F.size(F.filter(hs, _bit_set(i)))
-        fp = fp + F.when(ones * 2 > n, F.lit(1 << i)).otherwise(F.lit(0))
+        ones = f"size(filter({hs}, x_6 -> (shiftright(x_6, {i}) & 1) = 1))"
+        fp += f" + CASE WHEN {ones} * 2 > size({hs}) THEN {1 << i} ELSE 0 END"
     return fp
 
 
@@ -118,57 +125,48 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(xor) verify on candidates only. The whole pipeline is
     JVM-side expressions — no Python UDF.
     """
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.transform(F.split("text", " "), lambda t: portable_hash60(t)).alias("hs"),
-    )
-    fp = d.select("doc_id", _simhash32(F.col("hs")).alias("f"))
-    band_bits = _SIMHASH_BITS // _SIMHASH_BANDS
-    mask = (1 << band_bits) - 1
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright("f", b * band_bits).bitwiseAND(F.lit(mask)).alias("bval"),
-            )
-            for b in range(_SIMHASH_BANDS)
-        ]
-    )
-    banded = fp.select("doc_id", "f", F.explode(bands).alias("bk")).select(
-        "doc_id", "f", F.col("bk.band").alias("band"), F.col("bk.bval").alias("bval")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    # canonical-band emission (see llm_dedup_near_minhash): copies of
-    # a pair land in different (band, bval) shuffle partitions, so a
-    # pair dedup cannot partial-combine map-side — emit each pair
-    # only from the FIRST band on which the fingerprints agree (both
-    # fingerprints are already in the row; zero extra width).
-    fa, fb = F.col("a.f"), F.col("b.f")
-    first_band = first_eq_band(
-        lambda j: F.shiftright(fa, j * band_bits).bitwiseAND(F.lit(mask))
-        == F.shiftright(fb, j * band_bits).bitwiseAND(F.lit(mask)),
-        _SIMHASH_BANDS,
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(F.col("a.band") == first_band)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.f").alias("fa"),
-            F.col("b.f").alias("fb"),
-        )
-    )
-    ham = F.bit_count(F.col("fa").bitwiseXOR(F.col("fb")))
-    return (
-        cand.where(ham <= _HAMMING_T)
-        .select("doc_a", "doc_b", ham.cast("int").alias("hamming"))
-    )
+    return sql_over(spark, _SIMHASH_SQL, documents=load(spark, sf_dir, "documents"))
+
+
+_SIMHASH_BAND_BITS = _SIMHASH_BITS // _SIMHASH_BANDS
+_SIMHASH_BAND_MASK = (1 << _SIMHASH_BAND_BITS) - 1
+
+
+def _simhash_band(f: str, b: int) -> str:
+    return f"(shiftright({f}, {b * _SIMHASH_BAND_BITS}) & {_SIMHASH_BAND_MASK})"
+
+
+_SIMHASH_BAND_STRUCTS = ", ".join(
+    f"struct({b} AS band, {_simhash_band('f', b)} AS bval)" for b in range(_SIMHASH_BANDS)
+)
+# Canonical-band emission (see llm_dedup_near_minhash): copies of a
+# pair land in different (band, bval) shuffle partitions, so a pair
+# dedup cannot partial-combine map-side; each pair is emitted only
+# from the FIRST band on which the fingerprints agree (both
+# fingerprints are already in the row; zero extra width).
+_SIMHASH_FIRST_BAND = first_eq_band_sql(
+    lambda j: f"{_simhash_band('a.f', j)} = {_simhash_band('b.f', j)}", _SIMHASH_BANDS
+)
+_SIMHASH_SQL = f"""
+WITH d AS (
+  SELECT doc_id, transform(split(text, ' '), x_5 -> {portable_hash60_spark_sql("x_5")}) AS hs
+  FROM {{documents}}
+), fp AS (
+  SELECT doc_id, {_simhash32_spark_sql("hs")} AS f FROM d
+), banded AS (
+  SELECT doc_id, f, bk.band AS band, bk.bval AS bval
+  FROM (
+    SELECT doc_id, f, explode(array({_SIMHASH_BAND_STRUCTS})) AS bk FROM fp
+  )
+), cand AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.f AS fa, b.f AS fb
+  FROM banded a JOIN banded b
+    ON a.band = b.band AND a.bval = b.bval AND a.doc_id < b.doc_id
+  WHERE a.band = {_SIMHASH_FIRST_BAND}
+)
+SELECT doc_a, doc_b, CAST(bit_count(fa ^ fb) AS INT) AS hamming
+FROM cand WHERE bit_count(fa ^ fb) <= {_HAMMING_T}
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -436,7 +434,29 @@ _COS_T = 0.45
 _EMB_DIM = 64  # fixed by the data model (FIXTURES.md; oracle uses range(1,65))
 
 
-def _dot(a, b):
+# Vector math over array<double> columns as Spark SQL text, the one
+# spelling every HOF-form key composes. Lambda variables are named
+# x_N/y_N/z_N as PySpark names its own; a builder used inside another
+# lambda's body gets names that lambda does not use. ``0D`` is the
+# double zero the folds start from (``0.0`` is a decimal in Spark SQL).
+# A CTE that stages a column in an inner tier (``ve``, then its norm)
+# aliases that tier with the CTE's own name: Catalyst's CollapseProject
+# counts a column's uses per qualifier, so under two qualifiers a
+# staged HOF column is inlined and evaluated twice.
+
+
+def _as_double(arr: str) -> str:
+    """``arr`` cast element-wise to array<double>."""
+    return f"transform({arr}, x_0 -> CAST(x_0 AS DOUBLE))"
+
+
+def _zip_sum(a: str, b: str, term: str) -> str:
+    """Sum over the element pairs (``x_1`` of ``a``, ``y_1`` of ``b``)
+    of ``term``, folded in element order from 0."""
+    return f"aggregate(zip_with({a}, {b}, (x_1, y_1) -> {term}), 0D, (x_2, y_2) -> x_2 + y_2)"
+
+
+def _dot(a: str, b: str) -> str:
     """Dot product via zip_with + aggregate HOFs — measured the best
     JVM-side strategy (BASELINE.md round-5 A/B at x1 and x100):
     an unrolled 64-term scalar chain generates one huge codegen
@@ -447,15 +467,28 @@ def _dot(a, b):
     100 TB similarity search runs the IVF/LSH keys (llm_ann_ivf,
     llm_ann_hyperplane), where this dot evaluates only the pruned
     candidate set."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
+    return _zip_sum(a, b, "x_1 * y_1")
 
 
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, v: s + v * v))
+def _norm(a: str) -> str:
+    return f"sqrt(aggregate({a}, 0D, (x_3, y_3) -> x_3 + y_3 * y_3))"
 
 
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
+def _cos(a: str, b: str) -> str:
+    return f"{_dot(a, b)} / ({_norm(a)} * {_norm(b)})"
+
+
+def _sq_dist(x: str, c: str) -> str:
+    """Squared L2 distance as |x|^2 + |c|^2 - 2 x.c (one dot per pair
+    once the two self-dots are staged)."""
+    return f"{_dot(x, x)} + {_dot(c, c)} - {_dot(x, c)} * 2"
+
+
+def _mean_vector(vec: str, dim: int = _EMB_DIM) -> str:
+    """Aggregate: the per-dimension ``avg`` of ``vec`` reassembled into
+    an array — ONE map-side-combinable shuffle carrying (key, ``dim``
+    partials), vs posexplode's ``dim``x row explosion + 2 shuffles."""
+    return "array(" + ", ".join(f"avg({vec}[{i}])" for i in range(dim)) + ")"
 
 
 def _embedding_matrix(b):
@@ -484,71 +517,51 @@ def ball_cover_stages(v: DataFrame, cos_t: float, dim: int):
     exact cosine verify (for pruning-factor measurement), and the
     verified qualifying pairs.
     """
-    import math
+    spark = v.sparkSession
+    with temp_views(spark, v=v) as names:
+        return tuple(
+            spark.sql(_ball_cover_sql(cos_t, dim, stage).format(**names))
+            for stage in ("probes", "candidates", "pairs")
+        )
 
-    # Norms per VECTOR (n rows), not per PAIR; unit-normalized copy
-    # vh drives the geometric gate, raw ve drives the exact cosine
-    # (identical expression to the oracle for FP-rounding parity).
-    v = v.select(
-        "vec_id", "label", "ve", _norm(F.col("ve")).alias("nrm")
-    ).select(
-        "vec_id", "label", "ve", "nrm",
-        F.transform("ve", lambda x: x / F.col("nrm")).alias("vh"),
-    )
+
+def _ball_cover_sql(cos_t: float, dim: int, stage: str) -> str:
+    """The ball-cover stages over ``{v}`` as one SQL text selecting
+    ``stage``. Norms are per VECTOR (n rows), not per PAIR; the
+    unit-normalized copy vh drives the geometric gate, raw ve drives
+    the exact cosine (identical expression to the oracle for
+    FP-rounding parity). ``cells`` has nlist rows (cell, cvec,
+    radius); the probe cross join is n x nlist, linear not quadratic,
+    and the candidate join is an equi-join on cell id."""
     radius_gate = math.sqrt(2.0 - 2.0 * cos_t)  # R on the unit sphere
-
-    cent = (
-        v.groupBy("label")
-        .agg(*[F.avg(F.col("vh")[i]).alias(f"c{i}") for i in range(dim)])
-        .select(
-            F.col("label").alias("cell"),
-            F.array(*[F.col(f"c{i}") for i in range(dim)]).alias("cvec"),
-        )
-    )
-
-    def _d_to(cvec_col):
-        return F.sqrt(
-            F.aggregate(
-                F.zip_with(F.col("vh"), cvec_col, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            )
-        )
-
-    rad = (
-        v.join(F.broadcast(cent), v.label == cent.cell)
-        .select("cell", _d_to(F.col("cvec")).alias("d"))
-        .groupBy("cell")
-        .agg(F.max("d").alias("radius"))
-    )
-    cells = cent.join(rad, "cell")  # nlist rows: (cell, cvec, radius)
-
-    probes = (
-        v.crossJoin(F.broadcast(cells))  # n x nlist, linear not quadratic
-        .where(_d_to(F.col("cvec")) <= F.lit(radius_gate) + F.col("radius") + F.lit(1e-6))
-        .select(
-            F.col("vec_id").alias("a_id"),
-            F.col("ve").alias("a_ve"),
-            F.col("nrm").alias("a_nrm"),
-            "cell",
-        )
-    )
-    members = v.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("ve").alias("b_ve"),
-        F.col("nrm").alias("b_nrm"),
-        F.col("label").alias("cell"),
-    )
-    cos = _dot(F.col("a_ve"), F.col("b_ve")) / (F.col("a_nrm") * F.col("b_nrm"))
-    candidates = probes.join(members, ["cell"]).where(  # equi-join on cell id
-        F.col("a_id") < F.col("b_id")
-    )
-    pairs = candidates.where(cos >= cos_t).select(
-        F.col("a_id").alias("vec_a"),
-        F.col("b_id").alias("vec_b"),
-        F.round(cos, 4).alias("cos_sim"),
-    )
-    return probes, candidates, pairs
+    d_to_cell = f"sqrt({_zip_sum('vh', 'cvec', '(x_1 - y_1) * (x_1 - y_1)')})"
+    cos = f"{_dot('a_ve', 'b_ve')} / (a_nrm * b_nrm)"
+    return f"""
+WITH vn AS (
+  SELECT vec_id, label, ve, nrm, transform(ve, x_4 -> x_4 / nrm) AS vh
+  FROM (SELECT vec_id, label, ve, {_norm("ve")} AS nrm FROM {{v}} AS vn) AS vn
+), cent AS (
+  SELECT label AS cell, {_mean_vector("vh", dim)} AS cvec FROM vn GROUP BY label
+), rad AS (
+  SELECT cell, max(d) AS radius
+  FROM (SELECT /*+ BROADCAST(cent) */ cell, {d_to_cell} AS d FROM vn JOIN cent ON label = cell)
+  GROUP BY cell
+), cells AS (
+  SELECT * FROM cent JOIN rad USING (cell)
+), probes AS (
+  SELECT /*+ BROADCAST(cells) */ vec_id AS a_id, ve AS a_ve, nrm AS a_nrm, cell
+  FROM vn CROSS JOIN cells
+  WHERE {d_to_cell} <= {radius_gate!r}D + radius + 1.0E-6D
+), members AS (
+  SELECT vec_id AS b_id, ve AS b_ve, nrm AS b_nrm, label AS cell FROM vn
+), candidates AS (
+  SELECT * FROM probes JOIN members USING (cell) WHERE a_id < b_id
+), pairs AS (
+  SELECT a_id AS vec_a, b_id AS vec_b, round({cos}, 4) AS cos_sim
+  FROM candidates WHERE {cos} >= {cos_t!r}D
+)
+SELECT * FROM {stage}
+"""
 
 
 @query(
@@ -596,8 +609,8 @@ def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     join —
     recall 1.0 means identical output. Machinery shared via
     :func:`ball_cover_stages`."""
-    v = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("ve")
+    v = load(spark, sf_dir, "embeddings").selectExpr(
+        "vec_id", "label", f"{_as_double('embedding')} AS ve"
     )
     _, _, pairs = ball_cover_stages(v, _COS_T, _EMB_DIM)
     return pairs
@@ -656,50 +669,36 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell id), so the probe is partition pruning; centroids and probe
     assignments are broadcast. Brute-force baseline for recall
     comparison is ``llm_cosine_topk``/``llm_knn_join``."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("ve")
-    )
-    # Centroid = 64 per-dimension avg aggregates reassembled into an
-    # array: ONE map-side-combinable shuffle carrying (label, 64
-    # partials) — vs posexplode's 64x row explosion + 2 shuffles.
-    # (The oracle's range(1,65) unnest computes the same values.)
-    dim = _EMB_DIM
-    cent = (
-        emb.groupBy("label")
-        .agg(*[F.avg(F.col("ve")[i]).alias(f"c{i}") for i in range(dim)])
-        .select(
-            F.col("label").alias("clabel"),
-            F.array(*[F.col(f"c{i}") for i in range(dim)]).alias("cvec"),
-        )
-    )
-    q = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("ve").alias("qv")
-    )
-    cq_cos = _dot(F.col("qv"), F.col("cvec")) / (_norm(F.col("qv")) * _norm(F.col("cvec")))
-    w_assign = Window.partitionBy("query_id").orderBy(F.desc("ccos"), "clabel")
-    probe = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("ccos", cq_cos)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .where(F.col("rn") == 1)
-        .select("query_id", "qv", "clabel")
-    )
-    cos = _dot(F.col("ve"), F.col("qv")) / (_norm(F.col("ve")) * _norm(F.col("qv")))
-    cands = emb.join(
-        F.broadcast(probe),
-        (emb.label == probe.clabel) & (emb.vec_id != probe.query_id),
-    ).select(
-        "query_id",
-        F.col("clabel").cast("int").alias("probe_label"),
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cos, 4).alias("cos_sim"),
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        cands.withColumn("rnk", F.row_number().over(w_rank))
-        .where(F.col("rnk") <= 3)
-        .select("query_id", "probe_label", "neighbor_id", "cos_sim", "rnk")
-    )
+    return sql_over(spark, _ANN_IVF_SQL, embeddings=load(spark, sf_dir, "embeddings"))
+
+
+# The oracle's range(1,65) unnest computes the same centroid values.
+_ANN_IVF_SQL = f"""
+WITH emb AS (
+  SELECT vec_id, label, {_as_double("embedding")} AS ve FROM {{embeddings}}
+), cent AS (
+  SELECT label AS clabel, {_mean_vector("ve")} AS cvec FROM emb GROUP BY label
+), q AS (
+  SELECT vec_id AS query_id, ve AS qv FROM emb WHERE vec_id % 100 = 0
+), probe AS (
+  SELECT query_id, qv, clabel
+  FROM (
+    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY ccos DESC, clabel) AS rn
+    FROM (SELECT /*+ BROADCAST(cent) */ *, {_cos("qv", "cvec")} AS ccos FROM q CROSS JOIN cent)
+  )
+  WHERE rn = 1
+), cands AS (
+  SELECT /*+ BROADCAST(probe) */ query_id, CAST(clabel AS INT) AS probe_label,
+         vec_id AS neighbor_id, round({_cos("ve", "qv")}, 4) AS cos_sim
+  FROM emb JOIN probe ON label = clabel AND vec_id != query_id
+)
+SELECT query_id, probe_label, neighbor_id, cos_sim, rnk
+FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rnk
+  FROM cands
+)
+WHERE rnk <= 3
+"""
 
 
 _IVF_SEED_MIX = 2654435761  # Knuth multiplicative hash constant
@@ -741,7 +740,7 @@ def ivf_scaled_plan(
     import numpy as np
 
     emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("ve")
+        "vec_id", F.expr(_as_double("embedding")).alias("ve")
     )
     h = F.pmod(F.col("vec_id") * F.lit(_IVF_SEED_MIX), F.lit(2**31))
     seed_rows = (
@@ -901,49 +900,37 @@ def llm_vector_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if not rows_below("llm_vector_quantize", sf_dir, "embeddings", _COSINE_ARROW_MIN_ROWS):
         return _vector_quantize_arrow(spark, sf_dir)
-    v = load(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("ve")
+    return sql_over(
+        spark, _VECTOR_QUANTIZE_SQL, embeddings=load(spark, sf_dir, "embeddings")
     )
-    # staged projections: every reused non-cheap Column gets its own
-    # tier so each HOF evaluates exactly once per row
-    scaled = v.select(
-        "vec_id",
-        "ve",
-        (F.lit(127.0) / F.array_max(F.transform("ve", lambda x: F.abs(x)))).alias("sc"),
-        _norm(F.col("ve")).alias("nrm"),
-    )
-    quant = scaled.select(
-        "vec_id",
-        "ve",
-        "sc",
-        "nrm",
-        F.transform("ve", lambda x: F.round(x * F.col("sc"), 0)).alias("qv"),
-    )
-    q0 = quant.where(F.col("vec_id") == 0).select(
-        F.col("qv").alias("q_q"), F.col("sc").alias("sc_q"), F.col("ve").alias("ve_q"),
-        F.col("nrm").alias("nrm_q"),
-    )
-    a = quant.where(F.col("vec_id") != 0).crossJoin(F.broadcast(q0))
-    dots = a.select(
-        "vec_id",
-        "sc",
-        "sc_q",
-        (F.col("nrm") * F.col("nrm_q")).alias("denom"),
-        _dot(F.col("qv"), F.col("q_q")).alias("dq"),
-        _dot(F.col("ve"), F.col("ve_q")).alias("de"),
-    )
-    raw = dots.select(
-        "vec_id",
-        (F.col("dq") / (F.col("sc") * F.col("sc_q")) / F.col("denom")).alias("approx"),
-        (F.col("de") / F.col("denom")).alias("exact"),
-    )
-    scored = raw.select(
-        "vec_id",
-        F.round(F.col("approx"), 4).alias("approx_cos"),
-        F.round(F.col("exact"), 4).alias("exact_cos"),
-        F.round(F.abs(F.col("approx") - F.col("exact")), 4).alias("quant_err"),
-    )
-    return scored.orderBy(F.col("approx_cos").desc(), "vec_id").limit(10)
+
+
+# Staged projections: every reused non-cheap column gets its own tier
+# so each HOF evaluates exactly once per row.
+_VECTOR_QUANTIZE_SQL = f"""
+WITH quant AS (
+  SELECT vec_id, ve, sc, nrm, transform(ve, x_4 -> round(x_4 * sc, 0)) AS qv
+  FROM (
+    SELECT vec_id, ve, 127.0D / array_max(transform(ve, x_4 -> abs(x_4))) AS sc,
+           {_norm("ve")} AS nrm
+    FROM (SELECT vec_id, {_as_double("embedding")} AS ve FROM {{embeddings}}) AS quant
+  ) AS quant
+), q0 AS (
+  SELECT qv AS q_q, sc AS sc_q, ve AS ve_q, nrm AS nrm_q FROM quant WHERE vec_id = 0
+), raw AS (
+  SELECT vec_id, dq / (sc * sc_q) / denom AS approx, de / denom AS exact
+  FROM (
+    SELECT /*+ BROADCAST(q0) */ vec_id, sc, sc_q, nrm * nrm_q AS denom,
+           {_dot("qv", "q_q")} AS dq, {_dot("ve", "ve_q")} AS de
+    FROM (SELECT * FROM quant WHERE vec_id != 0) CROSS JOIN q0
+  )
+)
+SELECT vec_id, round(approx, 4) AS approx_cos, round(exact, 4) AS exact_cos,
+       round(abs(approx - exact), 4) AS quant_err
+FROM raw
+ORDER BY approx_cos DESC, vec_id
+LIMIT 10
+"""
 
 
 def _vector_quantize_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1057,46 +1044,36 @@ def llm_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     always fit in a broadcast. Distance uses
     |x|^2 + |c|^2 - 2 x.c so the per-pair work is one dot product."""
 
-    def assign(vecs: DataFrame, cent: DataFrame) -> DataFrame:
-        d2 = (
-            _dot(F.col("ve"), F.col("ve"))
-            + _dot(F.col("cvec"), F.col("cvec"))
-            - 2 * _dot(F.col("ve"), F.col("cvec"))
-        )
-        w = Window.partitionBy("vec_id").orderBy("d2", "cid")
-        return (
-            vecs.crossJoin(F.broadcast(cent))
-            .withColumn("d2", d2)
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("vec_id", "ve", "cid", "d2")
-        )
+    return sql_over(spark, _KMEANS_STEP_SQL, embeddings=load(spark, sf_dir, "embeddings"))
 
-    def update(assigned: DataFrame) -> DataFrame:
-        return (
-            assigned.groupBy("cid")
-            .agg(*[F.avg(F.col("ve")[i]).alias(f"c{i}") for i in range(_EMB_DIM)])
-            .select("cid", F.array(*[F.col(f"c{i}") for i in range(_EMB_DIM)]).alias("cvec"))
-        )
 
-    v = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("ve")
-    )
-    c0 = (
-        v.groupBy(F.col("label").alias("cid"))
-        .agg(*[F.avg(F.col("ve")[i]).alias(f"c{i}") for i in range(_EMB_DIM)])
-        .select("cid", F.array(*[F.col(f"c{i}") for i in range(_EMB_DIM)]).alias("cvec"))
-    )
-    asg1 = assign(v, c0)
-    c1 = update(asg1)
-    asg2 = assign(asg1.select("vec_id", "ve"), c1)
-    return (
-        asg2.groupBy(F.col("cid").cast("int").alias("cluster_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.round(F.avg("d2"), 4).alias("avg_sq_dist"),
-        )
-    )
+def _kmeans_assign_sql(vecs: str, cent: str) -> str:
+    """Assign step: each vector of ``vecs`` to its nearest centroid of
+    ``cent`` (broadcast), as (vec_id, ve, cid, d2)."""
+    return f"""
+  SELECT vec_id, ve, cid, d2
+  FROM (
+    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+    FROM (SELECT /*+ BROADCAST({cent}) */ *, {_sq_dist("ve", "cvec")} AS d2
+          FROM {vecs} CROSS JOIN {cent})
+  )
+  WHERE rn = 1"""
+
+
+_KMEANS_STEP_SQL = f"""
+WITH v AS (
+  SELECT vec_id, label, {_as_double("embedding")} AS ve FROM {{embeddings}}
+), c0 AS (
+  SELECT label AS cid, {_mean_vector("ve")} AS cvec FROM v GROUP BY label
+), asg1 AS ({_kmeans_assign_sql("v", "c0")}
+), c1 AS (
+  SELECT cid, {_mean_vector("ve")} AS cvec FROM asg1 GROUP BY cid
+), asg2 AS ({_kmeans_assign_sql("(SELECT vec_id, ve FROM asg1)", "c1")}
+)
+SELECT CAST(cid AS INT) AS cluster_id, count(1) AS n_vecs, round(avg(d2), 4) AS avg_sq_dist
+FROM asg2
+GROUP BY CAST(cid AS INT)
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -1246,12 +1223,12 @@ def _rademacher(i: int, j: int) -> float:
 _PLANES = [[_rademacher(i, j) for j in range(_EMB_DIM)] for i in range(_N_PLANES)]
 
 
-def _sig_expr():
-    """16-bit signature column: bit i = (v . plane_i >= 0)."""
-    sig = F.lit(0).cast("long")
+def _sig_spark_sql(ve: str) -> str:
+    """16-bit signature as Spark SQL text: bit i = (ve . plane_i >= 0)."""
+    sig = "CAST(0 AS BIGINT)"
     for i, plane in enumerate(_PLANES):
-        lit_arr = F.array(*[F.lit(v) for v in plane])
-        sig = sig + F.when(_dot(F.col("ve"), lit_arr) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
+        arr = "array(" + ", ".join(f"{v}D" for v in plane) + ")"
+        sig += f" + CASE WHEN {_dot(ve, arr)} >= 0 THEN {1 << i} ELSE 0 END"
     return sig
 
 
@@ -1324,32 +1301,29 @@ def llm_ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if not rows_below("llm_ann_hyperplane", sf_dir, "embeddings", _COSINE_ARROW_MIN_ROWS):
         return _ann_hyperplane_arrow(spark, sf_dir)
-    v = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("ve")
+    return sql_over(
+        spark, _ANN_HYPERPLANE_SQL, embeddings=load(spark, sf_dir, "embeddings")
     )
-    s = v.select("vec_id", "ve", _sig_expr().alias("sig"))
-    q = s.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("ve").alias("qv"),
-        F.col("sig").alias("qsig"),
-    )
-    cand = s.join(
-        F.broadcast(q),
-        (F.col("vec_id") != F.col("query_id"))
-        & (F.expr(f"bit_count(sig ^ qsig) <= {_HAM_T}")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(
-            _dot(F.col("ve"), F.col("qv")) / (_norm(F.col("ve")) * _norm(F.col("qv"))), 4
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id", F.col("rnk").cast("long").alias("rnk"), "cos_sim")
-    )
+
+
+_ANN_HYPERPLANE_SQL = f"""
+WITH s AS (
+  SELECT vec_id, ve, {_sig_spark_sql("ve")} AS sig
+  FROM (SELECT vec_id, {_as_double("embedding")} AS ve FROM {{embeddings}}) AS s
+), q AS (
+  SELECT vec_id AS query_id, ve AS qv, sig AS qsig FROM s WHERE vec_id < {_N_QUERIES}
+), cand AS (
+  SELECT /*+ BROADCAST(q) */ query_id, vec_id AS neighbor_id,
+         round({_cos("ve", "qv")}, 4) AS cos_sim
+  FROM s JOIN q ON vec_id != query_id AND bit_count(sig ^ qsig) <= {_HAM_T}
+)
+SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, cos_sim
+FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rnk
+  FROM cand
+)
+WHERE rnk <= 3
+"""
 
 
 def _fold_dot(mat, vec):
@@ -1702,65 +1676,35 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no extra exchange). Reports per-cluster corpus/removed/kept
     counts; cosine/d2 values come from identical IEEE expression
     trees on both engines so the threshold compare cannot diverge."""
-    v = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("ve")
-    )
-    c0 = (
-        v.groupBy(F.col("label").alias("cid"))
-        .agg(*[F.avg(F.col("ve")[i]).alias(f"c{i}") for i in range(_EMB_DIM)])
-        .select("cid", F.array(*[F.col(f"c{i}") for i in range(_EMB_DIM)]).alias("cvec"))
-    )
-    # all k centroids as ONE broadcast row; argmin by (d2, cid) struct
-    # ordering == the oracle's ROW_NUMBER(ORDER BY d2, cid)
-    cents = c0.agg(F.collect_list(F.struct("cid", "cvec")).alias("cents"))
+    return sql_over(spark, _SEMDEDUP_SQL, embeddings=load(spark, sf_dir, "embeddings"))
 
-    def d2_of(c):
-        return (
-            _dot(F.col("ve"), F.col("ve"))
-            + _dot(c["cvec"], c["cvec"])
-            - 2 * _dot(F.col("ve"), c["cvec"])
-        )
 
-    nearest = F.array_min(
-        F.transform(
-            "cents", lambda c: F.struct(d2_of(c).alias("d2"), c["cid"].alias("cid"))
-        )
-    )["cid"]
-    asg = v.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "ve", nearest.alias("cid")
-    )
-    a = asg.alias("a")
-    b = asg.alias("b")
-    cos = _dot(F.col("a.ve"), F.col("b.ve")) / (
-        F.sqrt(_dot(F.col("a.ve"), F.col("a.ve")))
-        * F.sqrt(_dot(F.col("b.ve"), F.col("b.ve")))
-    )
-    # count REMOVED vectors per cluster directly from the pair stream:
-    # count_distinct(b.vec_id) per cid rides the join's cid
-    # partitioning — no standalone distinct exchange, no re-join
-    # against the corpus (b is removed iff ANY lower-id a matches)
-    flagged = (
-        a.join(
-            b,
-            (F.col("a.cid") == F.col("b.cid"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .where(cos >= _SEM_T)
-        .groupBy(F.col("a.cid").alias("cid"))
-        .agg(F.count_distinct(F.col("b.vec_id")).alias("n_removed"))
-    )
-    return (
-        asg.groupBy(F.col("cid").cast("int").alias("cluster_id"))
-        .agg(F.count(F.lit(1)).alias("n_vecs"))
-        .join(
-            flagged.select(F.col("cid").cast("int").alias("cluster_id"), "n_removed"),
-            "cluster_id",
-            "left",
-        )
-        .select(
-            "cluster_id",
-            "n_vecs",
-            F.coalesce("n_removed", F.lit(0)).alias("n_removed"),
-            (F.col("n_vecs") - F.coalesce("n_removed", F.lit(0))).alias("n_kept"),
-        )
-    )
+# All k centroids ride ONE broadcast row; the argmin by (d2, cid)
+# struct ordering == the oracle's ROW_NUMBER(ORDER BY d2, cid). The
+# removed vectors are counted per cluster straight from the pair
+# stream: count(DISTINCT b.vec_id) per cid rides the join's cid
+# partitioning — no standalone distinct exchange, no re-join against
+# the corpus (b is removed iff ANY lower-id a matches).
+_SEMDEDUP_SQL = f"""
+WITH v AS (
+  SELECT vec_id, label, {_as_double("embedding")} AS ve FROM {{embeddings}}
+), cents AS (
+  SELECT collect_list(struct(cid, cvec)) AS cents
+  FROM (SELECT label AS cid, {_mean_vector("ve")} AS cvec FROM v GROUP BY label)
+), asg AS (
+  SELECT /*+ BROADCAST(cents) */ vec_id, ve,
+         array_min(transform(cents, z_7 -> struct({_sq_dist("ve", "z_7.cvec")} AS d2,
+                                                  z_7.cid AS cid))).cid AS cid
+  FROM v CROSS JOIN cents
+), flagged AS (
+  SELECT a.cid AS cid, count(DISTINCT b.vec_id) AS n_removed
+  FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
+  WHERE {_dot("a.ve", "b.ve")}
+        / (sqrt({_dot("a.ve", "a.ve")}) * sqrt({_dot("b.ve", "b.ve")})) >= {_SEM_T}D
+  GROUP BY a.cid
+)
+SELECT cluster_id, n_vecs, coalesce(n_removed, 0) AS n_removed,
+       n_vecs - coalesce(n_removed, 0) AS n_kept
+FROM (SELECT CAST(cid AS INT) AS cluster_id, count(1) AS n_vecs FROM asg GROUP BY CAST(cid AS INT))
+LEFT JOIN (SELECT CAST(cid AS INT) AS cluster_id, n_removed FROM flagged) USING (cluster_id)
+"""

@@ -25,7 +25,7 @@ from ..functions.hashing import portable_hash60, portable_hash60_sql
 from ..registry import query
 from ..session import sql_over
 from ..tables import load, rows_below
-from .dedup_ann import _as_double, _dot, _embedding_matrix, _norm, first_eq_band
+from .dedup_ann import _as_double, _cos, _dot, _embedding_matrix, _norm, first_eq_band
 from .text import _bigrams_from, _token_set
 
 
@@ -201,21 +201,14 @@ def llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sql_over(spark, _COSINE_TOPK_SQL, embeddings=load(spark, sf_dir, "embeddings"))
 
 
-# The HOF scoring of dedup_ann._as_double/_dot/_norm, spelled in SQL:
-# ``0D`` is the double zero the folds start from (``0.0`` is a decimal
-# in Spark SQL), and the lambda variables are named as PySpark names
-# its own (x_N, y_N).
-_COSINE_TOPK_SQL = """
+_COSINE_TOPK_SQL = f"""
 WITH emb AS (
-  SELECT vec_id, label, transform(embedding, x_0 -> CAST(x_0 AS DOUBLE)) AS v
-  FROM {embeddings}
+  SELECT vec_id, label, {_as_double("embedding")} AS v
+  FROM {{embeddings}}
 ), q AS (
   SELECT v AS qv FROM emb WHERE vec_id = 0
 )
-SELECT /*+ BROADCAST(q) */ vec_id, label,
-       round(aggregate(zip_with(v, qv, (x_1, y_1) -> x_1 * y_1), 0D, (x_2, y_2) -> x_2 + y_2)
-             / (sqrt(aggregate(v, 0D, (x_3, y_3) -> x_3 + y_3 * y_3))
-                * sqrt(aggregate(qv, 0D, (x_4, y_4) -> x_4 + y_4 * y_4))), 4) AS cos_sim
+SELECT /*+ BROADCAST(q) */ vec_id, label, round({_cos("v", "qv")}, 4) AS cos_sim
 FROM (SELECT * FROM emb WHERE vec_id != 0) CROSS JOIN q
 ORDER BY cos_sim DESC, vec_id
 LIMIT 10
@@ -317,29 +310,28 @@ def llm_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions."""
     if not rows_below("llm_knn_join", sf_dir, "embeddings", _COSINE_ARROW_MIN_ROWS):
         return _knn_join_arrow(spark, sf_dir)
-    emb = (
-        load(spark, sf_dir, "embeddings")
-        .select("vec_id", _as_double("embedding").alias("ve"))
-        .select("vec_id", "ve", _norm(F.col("ve")).alias("nrm"))
-    )
-    q = emb.where((F.col("vec_id") % 25 == 0) & (F.col("vec_id") < 500)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("ve").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    pairs = emb.join(F.broadcast(q), emb.vec_id != q.query_id).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(_dot(F.col("ve"), F.col("qv")) / (F.col("nrm") * F.col("qnrm")), 4).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "neighbor_id")
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id", "cos_sim", "rnk")
-    )
+    return sql_over(spark, _KNN_JOIN_SQL, embeddings=load(spark, sf_dir, "embeddings"))
+
+
+_KNN_JOIN_SQL = f"""
+WITH emb AS (
+  SELECT vec_id, ve, {_norm("ve")} AS nrm
+  FROM (SELECT vec_id, {_as_double("embedding")} AS ve FROM {{embeddings}}) AS emb
+), q AS (
+  SELECT vec_id AS query_id, ve AS qv, nrm AS qnrm
+  FROM emb WHERE vec_id % 25 = 0 AND vec_id < 500
+)
+SELECT query_id, neighbor_id, cos_sim, rnk
+FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rnk
+  FROM (
+    SELECT /*+ BROADCAST(q) */ query_id, vec_id AS neighbor_id,
+           round({_dot("ve", "qv")} / (nrm * qnrm), 4) AS cos_sim
+    FROM emb JOIN q ON vec_id != query_id
+  )
+)
+WHERE rnk <= 3
+"""
 
 
 def _knn_join_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,17 +447,17 @@ def llm_vector_norm_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuous 0=0 hash pass (round-2 verdict). The band edges sit far
     from the data so FP summation-order differences between engines
     cannot flip a row across the boundary."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "label", _norm(_as_double("embedding")).alias("nrm")
+    return sql_over(
+        spark, _VECTOR_NORM_FILTER_SQL, embeddings=load(spark, sf_dir, "embeddings")
     )
-    return (
-        emb.where((F.col("nrm") >= 0.5) & (F.col("nrm") < 1.5))
-        .groupBy("label")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.round(F.avg("nrm"), 4).alias("avg_norm"),
-        )
-    )
+
+
+_VECTOR_NORM_FILTER_SQL = f"""
+SELECT label, count(1) AS n_vecs, round(avg(nrm), 4) AS avg_norm
+FROM (SELECT label, {_norm(_as_double("embedding"))} AS nrm FROM {{embeddings}})
+WHERE nrm >= 0.5D AND nrm < 1.5D
+GROUP BY label
+"""
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from atd_dockless_processing_spark import LAYOUTS, QUERIES  # noqa: E402
 from atd_dockless_processing_spark.functions.hashing import (  # noqa: E402
     portable_hash60,
+    portable_hash60_spark_sql,
     portable_hash60_sql,
 )
 from atd_dockless_processing_spark.operators.dedup_ann import (  # noqa: E402
@@ -31,19 +32,25 @@ from atd_dockless_processing_spark.operators.dedup_ann import (  # noqa: E402
 
 
 def test_portable_hash_matches_duckdb(spark):
-    """The md5-derived 60-bit hash must agree bit-for-bit between
-    Spark and DuckDB — every simhash/fingerprint oracle depends on it."""
+    """The md5-derived 60-bit hash must agree bit-for-bit between its
+    three spellings — the Spark Column, the Spark SQL text and the
+    DuckDB SQL text; every simhash/fingerprint oracle depends on it."""
     samples = ["", "a", "hello world", "größe", "naïve", "日本語テキスト",
                "x" * 1000, "tab\tand\nnewline", "'quote'", '"double"']
     df = spark.createDataFrame([(s,) for s in samples], ["t"])
-    got = {r["t"]: r["h"] for r in df.select("t", portable_hash60("t").alias("h")).collect()}
+    rows = df.select(
+        "t",
+        portable_hash60("t").alias("h"),
+        F.expr(portable_hash60_spark_sql("t")).alias("h_sql"),
+    ).collect()
     con = duckdb.connect()
-    for s in samples:
+    for r in rows:
         want = con.execute(
-            f"SELECT {portable_hash60_sql('?')}", [s]
+            f"SELECT {portable_hash60_sql('?')}", [r["t"]]
         ).fetchone()[0]
-        assert got[s] == want, f"hash mismatch for {s!r}"
-        assert 0 <= got[s] < 2**60
+        assert r["h"] == r["h_sql"] == want, f"hash mismatch for {r['t']!r}"
+        assert 0 <= want < 2**60
+    assert len(rows) == len(samples)
 
 
 @settings(max_examples=200, deadline=None)

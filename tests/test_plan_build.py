@@ -1,11 +1,13 @@
 """Plan-build cost and the plan forms it depends on.
 
-The bench keys build their plans from one SQL text each
-(``session.sql_over``), so a build is one analysis and a handful of
-py4j round trips; the budget test pins that. The horizontal-edge
-pin keeps the pre-r16 point-in-polygon form, which the registered
-key replaced, for its equality check and for ``scripts/ab.py``
-(form ``tests.test_plan_build:geo_point_in_polygon_flat_edges``); the
+The bench keys and the vector keys (embedding and signature math
+written once as the SQL builders of ``operators/dedup_ann.py``) build
+their plans from one SQL text each (``session.sql_over``), so a build
+is one analysis and a handful of py4j round trips; the budget test
+pins that. The horizontal-edge pin keeps the pre-r16 point-in-polygon
+form, which the registered key replaced, for its equality check and
+for ``scripts/ab.py`` (form
+``tests.test_plan_build:geo_point_in_polygon_flat_edges``); the
 Python-sink pin keeps the pre-r16 lazy read-back of
 ``snk_python_datasource_write`` the same way
 (``tests.test_plan_build:snk_python_datasource_write_lazy``)."""
@@ -28,27 +30,41 @@ from atd_dockless_processing_spark.operators import geo
 from atd_dockless_processing_spark.sources.sinks import JsonlSinkDataSource
 from bench import BENCH_SET, table_provider
 
-# py4j round trips one bench key's plan build may take over the
-# bench's table provider
+# py4j round trips one key's plan build may take over the bench's
+# table provider
 PY4J_BUDGET = 40
 
+# Keys whose vector math is written as SQL text (each built with
+# 236-7,911 py4j calls when it was spelled as Column loops)
+VECTOR_KEYS = (
+    "llm_kmeans_step",
+    "llm_semdedup",
+    "llm_ann_ivf",
+    "llm_dedup_embedding",
+    "llm_dedup_simhash",
+    "llm_ann_hyperplane",
+    "llm_vector_quantize",
+    "llm_knn_join",
+    "llm_vector_norm_filter",
+)
 
-def test_bench_keys_build_within_py4j_budget(spark, sf_dir):
-    """Each bench key's plan build, over ``bench.table_provider`` with
-    the tables already cached, makes at most ``PY4J_BUDGET`` py4j
-    round trips, counted as ``scripts/dump_plans.py`` counts its
-    ``build py4j`` column."""
+
+def test_bench_and_vector_keys_build_within_py4j_budget(spark, sf_dir):
+    """Each bench key's and vector key's plan build, over
+    ``bench.table_provider`` with the tables already cached, makes at
+    most ``PY4J_BUDGET`` py4j round trips, counted as
+    ``scripts/dump_plans.py`` counts its ``build py4j`` column."""
     from dump_plans import build_jobs
 
     cache = {}
     tables.set_table_provider(table_provider(spark, cache))
     try:
         calls = {}
-        for key in BENCH_SET.values():
+        for key in (*BENCH_SET.values(), *VECTOR_KEYS):
             QUERIES[key](spark, sf_dir)  # caches the key's tables
             calls[key] = build_jobs(spark, key, sf_dir)[2]
         over = {k: n for k, n in calls.items() if n > PY4J_BUDGET}
-        assert not over, f"bench keys over {PY4J_BUDGET} py4j calls per build: {over}"
+        assert not over, f"keys over {PY4J_BUDGET} py4j calls per build: {over}"
     finally:
         tables.set_table_provider(None)
         for df in cache.values():
