@@ -1,12 +1,18 @@
 """Near-duplicate detection + approximate-nearest-neighbor search —
-the training-data-pipeline extensions beyond MinHash (which lives in
-``llm.py``): SimHash, character-n-gram Jaccard, embedding-cosine
-near-dup, IVF-bucketed and random-hyperplane ANN, and the keys built
-on near-dup pairs (connected-component clusters, keep list, URL
-canonicalization, cluster-blocked semantic dedup). Vector math is
-written here once, as Spark SQL text builders (``_as_double``,
-``_dot``, ``_norm``, ``_cos``, ``_sq_dist``, ``_mean_vector``): each
-HOF-form key, and ``llm``'s, builds its plan from one SQL text.
+the training-data-pipeline extensions beyond the token MinHash key
+(``llm.llm_dedup_near_minhash``): SimHash, character-n-gram Jaccard,
+embedding-cosine near-dup, IVF-bucketed and random-hyperplane ANN,
+and the keys built on near-dup pairs (connected-component clusters,
+keep list, URL canonicalization, cluster-blocked semantic dedup).
+
+Two families of math are written here once, as Spark SQL text
+builders, and each key of either family, here and in ``llm``, builds
+its plan from one SQL text:
+- MinHash-LSH banding: ``_minhash_sig`` (the 16 salted minhashes),
+  ``_first_agreeing_band`` (canonical-band emission, through
+  ``first_eq_band_sql``), ``_size_ratio_ok`` and ``_jaccard``.
+- vector math: ``_as_double``, ``_dot``, ``_norm``, ``_cos``,
+  ``_sq_dist``, ``_mean_vector``.
 
 Scale design (the 100 TB story for each):
 - SimHash: per-doc 32-bit signature is a pure map (one pass, no
@@ -15,9 +21,9 @@ Scale design (the 100 TB story for each):
   so the verify step (cheap ``bit_count(xor)``) only sees bucketed
   pairs. Cost: sum of bucket sizes squared, never O(n^2) corpus-wide.
 - n-gram Jaccard: exact verify here is blocked per ``lang`` (the
-  natural shard key); at 100 TB the candidate prune is MinHash-LSH
-  over the n-gram sets (same banding machinery as llm.py), with this
-  operator as the verify tail.
+  natural shard key); large blocks prune candidates by MinHash-LSH
+  over the n-gram sets (the banding builders above, shared with the
+  token key), with the exact Jaccard as the verify tail.
 - embedding near-dup / IVF ANN: the corpus side is partitioned by
   coarse-quantizer cell (here: label-derived centroids), so a probe
   touches one partition's posting list instead of the corpus — the
@@ -37,33 +43,66 @@ from ..registry import query
 from ..session import sql_over, temp_views
 from ..tables import load, rows_below
 
-def first_eq_band(eq_at, n_bands: int):
-    """First band index j in [0, n_bands) where ``eq_at(j)`` holds,
-    else -1 — as a short-circuiting scalar ``CASE WHEN`` chain.
+def first_eq_band_sql(eq_at, n_bands: int) -> str:
+    """First band index j in [0, n_bands) where ``eq_at(j)`` (the
+    band-``j`` condition as Spark SQL text) holds, else -1 — as a
+    short-circuiting scalar ``CASE WHEN`` chain.
 
     Canonical-band emission filters the LSH bucket join's output on
-    ``a.band == first matching band``. Building that via
-    ``array_position(zip_with(a.sig, b.sig, eq), True)`` allocates
+    ``a.band = first matching band``. Building that via
+    ``array_position(zip_with(a.sig, b.sig, eq), true)`` allocates
     two ArrayData per CANDIDATE row (pre-filter, ~16x the pair
     count), which measured 2.8x slower than the whole r3 pipeline at
-    the x10 rehearsal. A nested when-chain stays in whole-stage
+    the x10 rehearsal. A nested CASE chain stays in whole-stage
     codegen with zero allocation and stops at the first true
     comparison — expected cost ~2 scalar compares per row instead of
     2 array builds + a 16-element scan.
     """
-    expr = F.lit(-1)
-    for j in reversed(range(n_bands)):
-        expr = F.when(eq_at(j), F.lit(j)).otherwise(expr)
-    return expr
-
-
-def first_eq_band_sql(eq_at, n_bands: int) -> str:
-    """:func:`first_eq_band` as Spark SQL text; ``eq_at(j)`` returns
-    the band-``j`` condition as text."""
     expr = "-1"
     for j in reversed(range(n_bands)):
         expr = f"CASE WHEN {eq_at(j)} THEN {j} ELSE {expr} END"
     return expr
+
+
+# MinHash-LSH banding as Spark SQL text, the one spelling the token
+# (``llm.llm_dedup_near_minhash``) and char-n-gram (``llm_dedup_ngram``
+# and the cluster keys) near-dup plans compose: signature, canonical
+# first band, size-ratio prune and exact-Jaccard verify.
+
+_MINHASH_K = 16  # minhashes per set (xxhash64, fixed salts 0..15)
+
+
+def _minhash_sig(col: str) -> str:
+    """The ``_MINHASH_K`` minhashes of the string array ``col``: per
+    fixed salt, the least ``xxhash64`` over the elements
+    (deterministic, no random seeds)."""
+    salts = ", ".join(map(str, range(_MINHASH_K)))
+    return f"transform(array({salts}), x_7 -> array_min(transform({col}, y_7 -> xxhash64(y_7, x_7))))"
+
+
+def _first_agreeing_band(a: str, b: str, rows_per_band: int) -> str:
+    """First band on which signatures ``a`` and ``b`` agree in every
+    component, else -1. Emitting a bucket-joined pair only from this
+    band emits it once (no pair-dedup exchange), and drops pairs that
+    met only through a band-key hash collision."""
+    r = rows_per_band
+    return first_eq_band_sql(
+        lambda j: " AND ".join(f"{a}[{j * r + k}] = {b}[{j * r + k}]" for k in range(r)),
+        _MINHASH_K // r,
+    )
+
+
+def _size_ratio_ok(na: str, nb: str, t: float) -> str:
+    """Set sizes ``na``, ``nb`` can reach Jaccard ``t``: J >= t implies
+    min/max >= t."""
+    return f"CAST(least({na}, {nb}) AS DOUBLE) >= greatest({na}, {nb}) * {t!r}D"
+
+
+def _jaccard(a: str, b: str, na: str, nb: str) -> str:
+    """Exact Jaccard |a∩b| / (|a|+|b|−|a∩b|) of the distinct arrays
+    ``a``, ``b`` of sizes ``na``, ``nb``."""
+    inter = f"CAST(size(array_intersect({a}, {b})) AS DOUBLE)"
+    return f"{inter} / (CAST({na} + {nb} AS DOUBLE) - {inter})"
 
 
 # ---------------------------------------------------------------------------
@@ -175,18 +214,8 @@ FROM cand WHERE bit_count(fa ^ fb) <= {_HAMMING_T}
 
 _NGRAM_N = 3
 _NGRAM_T = 0.8
-_NGRAM_MH_K = 16  # total gram minhashes (xxhash64, fixed salts 0..15)
-# r13 (VERDICT r12 item 4): the REGISTERED band shape is now the
-# production 8 bands x 2 rows — the 16x1 shape's per-block candidate
-# floor is b*E[J_random]*n^2/2 (a quadratic term measured at 142 s by
-# x10 on the low-density rehearsal corpus, extrapolated ~9.4e8
-# candidates at x100), while 8x2 squares the random-collision rate
-# (~8*E[J]^2), measured sublinear-in-docs through x100 (31.6 s,
-# BASELINE.md "Low-density dedup rehearsal"). Recall on the fixed
-# salts is DETERMINISTIC per corpus and oracle-checked: 8x2 is
-# verified-pair EXACT vs the all-pairs oracle on both sweep corpora
-# at both consumer thresholds (0.80/0.70); the 16x1 twin stays
-# test-pinned (test_ngram_candidate_plan_cross_form_equality).
+# The registered band shape is 8 bands x 2 rows (r13); why, and the
+# recall of the pinned 16x1 twin: ``_ngram_sql``.
 _NGRAM_MH_R = 2
 _NGRAM_BLOCK_T = 64  # blocks larger than this take the banded path
 
@@ -224,14 +253,10 @@ def llm_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     - blocks with > 64 docs (the default at scale — at 100 TB
       every real block is on this path): MinHash-LSH banding over the
-      gram sets, K=16 deterministic minhashes (xxhash64, salt=i),
-      regrouped 8 bands x 2 rows (the PRODUCTION shape, registered
-      default since r13 — sublinear-in-docs measured through x100;
-      the 16x1 shape's b·E[J]·n²/2 random-collision floor is
-      quadratic, and recall of 8x2 on the fixed salts is
-      deterministic + oracle-exact on the sweep corpora, miss bound
-      (1-J²)^8 ~ 2.8e-4 at exactly J=0.8); bucket self-join carries
-      only (doc_id, n_g, band, bsig); pair dedup; gram arrays
+      gram sets, K=16 deterministic minhashes regrouped 8 bands x 2
+      rows (the PRODUCTION shape; see ``_ngram_sql``); bucket
+      self-join carries only (doc_id, lang, n_g, sig, band, bsig);
+      canonical-band emission instead of a pair dedup; gram arrays
       re-attached to surviving candidates.
     - blocks with <= 64 docs: slim within-lang self-join
       (brute force) — cheaper than banding when the whole block fits
@@ -247,60 +272,56 @@ def llm_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     (>=100 docs) on the banded default, so both paths stay covered by
     the correctness gate.
 
-    r9: the hybrid candidate plan is extracted as
-    ``ngram_candidate_pairs`` and SHARED with the downstream cluster
-    resolution keys (``llm_dedup_clusters``/``llm_dedup_keep_list``
-    via ``_ngram_pairs``), which previously ran the
-    brute-force self-join at every block size."""
-    d, pairs = ngram_candidate_pairs(spark, sf_dir, _NGRAM_T)
-    return ngram_verified_pairs(d, pairs, _NGRAM_T).select(
-        "doc_a", "doc_b", F.round("ngram_jaccard", 4).alias("ngram_jaccard")
+    The key, the candidate plan (``ngram_candidate_pairs``), the
+    verify tail (``ngram_verified_pairs``) and the cluster keys' pair
+    plan (``_ngram_pairs``) are all spelled by ``_ngram_sql`` and
+    ``_ngram_verify_sql``."""
+    return sql_over(
+        spark,
+        _ngram_sql(
+            _NGRAM_T,
+            "SELECT doc_a, doc_b, round(ngram_jaccard, 4) AS ngram_jaccard"
+            f" FROM ({_ngram_verify_sql('pairs', 'd', _NGRAM_T)})",
+        ),
+        documents=load(spark, sf_dir, "documents"),
     )
 
 
-def ngram_verified_pairs(d: DataFrame, pairs: DataFrame, threshold: float) -> DataFrame:
-    """Exact-Jaccard VERIFY tail over candidate pairs — the second
-    half of the shared plan whose first half is
-    ``ngram_candidate_pairs`` (one definition for the registered
-    keys, the cluster keys, and the rehearsal harness — r9 review
-    finding #6: the join posture and union arithmetic must not drift
-    between what ships and what gets measured). Re-attaches each
-    side's gram set by doc_id (auto-broadcast at test SF, shuffle at
-    scale) and keeps pairs with |A∩B| / (|A|+|B|−|A∩B|) >= threshold;
-    returns (doc_a, doc_b, ngram_jaccard[double, unrounded])."""
-    cand = pairs.join(
-        d.select(F.col("doc_id").alias("doc_a"), F.col("grams").alias("grams_a")),
-        "doc_a",
-    ).join(
-        d.select(F.col("doc_id").alias("doc_b"), F.col("grams").alias("grams_b")),
-        "doc_b",
-    )
-    inter = F.size(F.array_intersect("grams_a", "grams_b")).cast("double")
-    union = (F.col("na") + F.col("nb")).cast("double") - inter
-    jac = inter / union
-    return cand.where(jac >= threshold).select(
-        "doc_a", "doc_b", jac.alias("ngram_jaccard")
-    )
+def _ngram_verify_sql(pairs: str, d: str, threshold: float) -> str:
+    """Exact-Jaccard VERIFY tail over the candidate pairs ``pairs``
+    (doc_a, doc_b, na, nb) and the gram table ``d`` (doc_id, grams):
+    re-attaches each side's gram set by doc_id (auto-broadcast at test
+    SF, shuffle at scale — unhinted, a broadcast hint would ship the
+    corpus everywhere) and keeps pairs with Jaccard >= ``threshold``;
+    selects (doc_a, doc_b, ngram_jaccard[double, unrounded])."""
+    jac = _jaccard("grams_a", "grams_b", "na", "nb")
+    return f"""
+SELECT doc_a, doc_b, {jac} AS ngram_jaccard
+FROM {pairs}
+JOIN (SELECT doc_id AS doc_a, grams AS grams_a FROM {d}) USING (doc_a)
+JOIN (SELECT doc_id AS doc_b, grams AS grams_b FROM {d}) USING (doc_b)
+WHERE {jac} >= {threshold!r}D"""
 
 
-def ngram_candidate_pairs(
-    spark: SparkSession,
-    sf_dir: str,
+def _ngram_sql(
     threshold: float,
+    out: str,
     block_t: int = _NGRAM_BLOCK_T,
     rows_per_band: int = _NGRAM_MH_R,
-):
-    """Shared hybrid near-dup CANDIDATE plan over char-3-gram sets
-    (the llm_dedup_ngram machinery, threshold-parameterized for the
-    cluster keys' 0.70). Returns ``(d, pairs)``:
+) -> str:
+    """The hybrid near-dup CANDIDATE plan over char-3-gram sets as CTEs
+    over ``{documents}``, followed by the statement ``out``, which
+    reads them:
 
-    - ``d``: (doc_id, lang, grams) — for the caller's verify tail;
+    - ``d``: (doc_id, lang, grams);
     - ``pairs``: (doc_a, doc_b, na, nb) candidates, size-ratio
       prefiltered; blocks with <= ``block_t`` docs via within-lang
       brute-force self-join (slim rows), larger blocks via MinHash
       banding (registered default: the production 8x2 shape, r13)
       with canonical-band emission (one emission per pair, no dedup
-      exchange).
+      exchange). A band's bucket key is the xxhash64 of its
+      ``rows_per_band`` minhashes; the canonical-band gate compares
+      the components, which also screens out bucket-key collisions.
 
     Recall discipline: the banded path's per-true-pair miss bound over
     the FIXED xxhash64 salts is (1-J)^16 at ``rows_per_band=1``
@@ -325,105 +346,76 @@ def ngram_candidate_pairs(
     100 TB corpus the next rungs on the same ladder are r=3+ bands
     and lang/length blocking, which only shrink the same E[J]^r
     floor. Both shapes measured x1/x10/x100 in BASELINE.md."""
-    grams = F.array_distinct(
-        F.expr(
-            f"transform(sequence(1, greatest(length(text) - {_NGRAM_N - 1}, 1)),"
-            f" i -> substring(text, i, {_NGRAM_N}))"
-        )
-    )
-    d = load(spark, sf_dir, "documents").select("doc_id", "lang", grams.alias("grams"))
-    sizes = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_lang"))
-    slim = d.select("doc_id", "lang", F.size("grams").alias("n_g")).join(
-        F.broadcast(sizes), "lang"
-    )
-    size_ratio_ok = (
-        F.least(F.col("a.n_g"), F.col("b.n_g")).cast("double")
-        >= threshold * F.greatest(F.col("a.n_g"), F.col("b.n_g"))
-    )
-
-    # --- small blocks: within-lang brute force over slim rows
-    small = slim.where(F.col("n_lang") <= block_t)
-    a, b = small.alias("a"), small.alias("b")
-    small_pairs = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-        & size_ratio_ok,
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.n_g").alias("na"),
-        F.col("b.n_g").alias("nb"),
-    )
-
-    # --- large blocks: MinHash banding over gram sets (16 minhashes
-    # total: 8x2 registered shape since r13, 16x1 with rows_per_band=1)
     r = rows_per_band
-    n_bands = _NGRAM_MH_K // r
-    big = d.join(F.broadcast(sizes.where(F.col("n_lang") > block_t)), "lang")
-    sig = F.transform(
-        F.array(*[F.lit(i) for i in range(_NGRAM_MH_K)]),
-        lambda i: F.array_min(F.transform(F.col("grams"), lambda g: F.xxhash64(g, i))),
+    ratio_ok = _size_ratio_ok("a.n_g", "b.n_g", threshold)
+    band_keys = (
+        f"transform(array({', '.join(map(str, range(_MINHASH_K // r)))}),"
+        f" x_8 -> xxhash64({', '.join(f'sig[x_8 * {r} + {k}]' for k in range(r))}))"
     )
-    # band signature: the band's single minhash at r=1, the xxhash of
-    # the band's r-tuple otherwise (bucket key only — band equality in
-    # the canonical-emission gate below compares the COMPONENTS)
-    bands = F.transform(
-        F.array(*[F.lit(j) for j in range(n_bands)]),
-        lambda j: (
-            F.col("sig")[j]
-            if r == 1
-            else F.xxhash64(*[F.col("sig")[j * r + k] for k in range(r)])
-        ),
+    # The band rows are posexploded from one band-key array (the
+    # token key explodes an array of structs instead): both are
+    # registered plans, so one generator for both would be a plan
+    # change.
+    return f"""
+WITH d AS (
+  SELECT doc_id, lang, array_distinct(transform(sequence(1, greatest(length(text) - {_NGRAM_N - 1}, 1)), i -> substring(text, i, {_NGRAM_N}))) AS grams
+  FROM {{documents}}
+), sizes AS (
+  SELECT lang, count(1) AS n_lang FROM d GROUP BY lang
+), slim AS (
+  SELECT /*+ BROADCAST(sizes) */ *
+  FROM (SELECT doc_id, lang, size(grams) AS n_g FROM d) JOIN sizes USING (lang)
+), small AS (
+  SELECT * FROM slim WHERE n_lang <= {block_t}
+), banded AS (
+  SELECT doc_id, lang, n_g, sig, posexplode({band_keys}) AS (band, bsig)
+  FROM (
+    SELECT doc_id, lang, size(grams) AS n_g, {_minhash_sig("grams")} AS sig
+    FROM (
+      SELECT /*+ BROADCAST(s) */ *
+      FROM d JOIN (SELECT * FROM sizes WHERE n_lang > {block_t}) AS s USING (lang)
     )
-    banded = (
-        big.select(
-            "doc_id", "lang", F.size("grams").alias("n_g"), sig.alias("sig")
-        )
-        .select(
-            "doc_id",
-            "lang",
-            "n_g",
-            "sig",
-            F.posexplode(bands).alias("band", "bsig"),
-        )
-    )
-    ba, bb = banded.alias("a"), banded.alias("b")
-    # canonical-band emission (see llm_dedup_near_minhash): the first
-    # band where every minhash COMPONENT agrees is exact — one
-    # emission per pair, no pair-dedup exchange. The 16-long array
-    # adds ~128 B to the banded row (not the multi-KB gram arrays the
-    # slim-row rule bans). At r>1 the exploded bsig is a hash of the
-    # band tuple, so the component equality below also screens out
-    # xxhash bucket collisions.
-    def _band_eq(j):
-        eq = F.col("a.sig")[j * r] == F.col("b.sig")[j * r]
-        for k in range(1, r):
-            eq = eq & (F.col("a.sig")[j * r + k] == F.col("b.sig")[j * r + k])
-        return eq
+  )
+), pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n_g AS na, b.n_g AS nb
+  FROM small a JOIN small b ON a.lang = b.lang AND a.doc_id < b.doc_id AND {ratio_ok}
+  UNION ALL
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n_g AS na, b.n_g AS nb
+  FROM banded a JOIN banded b
+    ON a.lang = b.lang AND a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id
+      AND {ratio_ok}
+  WHERE a.band = {_first_agreeing_band("a.sig", "b.sig", r)}
+)
+{out}"""
 
-    first_true_band = first_eq_band(_band_eq, n_bands)
-    big_pairs = (
-        ba.join(
-            bb,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & size_ratio_ok,
-        )
-        .where(F.col("a.band") == first_true_band)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_g").alias("na"),
-            F.col("b.n_g").alias("nb"),
-        )
+
+def ngram_verified_pairs(d: DataFrame, pairs: DataFrame, threshold: float) -> DataFrame:
+    """``_ngram_verify_sql`` over the frames ``d`` and ``pairs`` of
+    ``ngram_candidate_pairs``: (doc_a, doc_b, ngram_jaccard)."""
+    return sql_over(
+        d.sparkSession, _ngram_verify_sql("{pairs}", "{d}", threshold), pairs=pairs, d=d
     )
-    # The gram re-attach joins downstream are UNHINTED: d is the full
-    # corpus (auto-broadcast at test SF, shuffled hash join on doc_id
-    # at 100 TB — a broadcast hint would ship the corpus everywhere).
-    return d, small_pairs.unionByName(big_pairs)
+
+
+def ngram_candidate_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    threshold: float,
+    block_t: int = _NGRAM_BLOCK_T,
+    rows_per_band: int = _NGRAM_MH_R,
+):
+    """``(d, pairs)`` of ``_ngram_sql`` as frames, for a verify tail of
+    the caller's (``ngram_verified_pairs``, the rehearsal's candidate
+    counts)."""
+    docs = load(spark, sf_dir, "documents")
+    return tuple(
+        sql_over(
+            spark,
+            _ngram_sql(threshold, f"SELECT * FROM {cte}", block_t, rows_per_band),
+            documents=docs,
+        )
+        for cte in ("d", "pairs")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1101,28 +1093,20 @@ _PAIR_SQL = f"""
 
 
 def _ngram_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float,
-    rows_per_band: int | None = None,
+    spark: SparkSession, sf_dir: str, threshold: float, rows_per_band: int = _NGRAM_MH_R
 ) -> DataFrame:
-    """Char-3-gram Jaccard >= threshold near-dup pairs, lang-blocked.
-
-    r9: candidates now come from the SHARED hybrid plan
-    (``dedup_ann.ngram_candidate_pairs`` — small blocks brute-force,
-    large blocks MinHash banding with canonical-band emission; the
-    registered band shape is the production 8x2 since r13, see the
-    shared plan's docstring).
-    Through r8 this ran the brute-force slim self-join at EVERY block
-    size, which is quadratic per lang block — fine on the sweep
-    corpora, a scale-killer at 100k-doc blocks (the r9 low-density
-    rehearsal measures both forms; equality pinned in
-    tests/test_engine_units.py). Gram arrays re-attach by an unhinted
-    doc_id join — auto-broadcast at test SF, shuffle at scale."""
-
-    d, pairs = ngram_candidate_pairs(
-        spark, sf_dir, threshold,
-        rows_per_band=_NGRAM_MH_R if rows_per_band is None else rows_per_band,
+    """Char-3-gram Jaccard >= threshold near-dup pairs (doc_a, doc_b),
+    lang-blocked: ``llm_dedup_ngram``'s hybrid banded plan
+    (``_ngram_sql``) at the caller's threshold."""
+    return sql_over(
+        spark,
+        _ngram_sql(
+            threshold,
+            f"SELECT doc_a, doc_b FROM ({_ngram_verify_sql('pairs', 'd', threshold)})",
+            rows_per_band=rows_per_band,
+        ),
+        documents=load(spark, sf_dir, "documents"),
     )
-    return ngram_verified_pairs(d, pairs, threshold).select("doc_a", "doc_b")
 
 
 def min_label_components(pairs: DataFrame) -> DataFrame:
@@ -1480,9 +1464,9 @@ def llm_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     no extra argmin pass) plus every singleton, and report per-lang
     survivor counts and kept characters.
 
-    Plan shape: the pair plan is llm_dedup_ngram's slim self-join;
-    components via min_label_components (bounded label propagation);
-    the keep decision is a LEFT ANTI-shaped join of the corpus
+    Plan shape: the pair plan is llm_dedup_ngram's hybrid banded plan
+    at 0.7 (``_ngram_pairs``); components via min_label_components
+    (bounded label propagation); the keep decision is a LEFT ANTI-shaped join of the corpus
     against the dropped set (clustered docs whose id != label) —
     corpus passes once. The oracle resolves the same fixpoint with a
     recursive CTE. At 100 TB the dropped set is the small side

@@ -9,6 +9,8 @@ Scale design notes (the point of these at 100 TB):
   buckets -> exact-Jaccard verify on candidates only. The self-join
   is on bucket keys, so cost is sum of bucket sizes squared, not
   O(n^2) over the corpus. Deterministic: no random seeds anywhere.
+  The signature, first-agreeing-band, size-ratio and Jaccard SQL
+  builders are ``dedup_ann``'s, shared with the char-n-gram keys.
 - ANN/cosine: brute-force top-k against a broadcast query vector
   (baseline); kNN-join prunes via LSH/IVF in a real deployment — the
   candidate-pair pattern is identical to MinHash banding.
@@ -25,8 +27,19 @@ from ..functions.hashing import portable_hash60, portable_hash60_sql
 from ..registry import query
 from ..session import sql_over
 from ..tables import load, rows_below
-from .dedup_ann import _as_double, _cos, _dot, _embedding_matrix, _norm, first_eq_band
-from .text import _bigrams_from, _token_set
+from .dedup_ann import (
+    _MINHASH_K,
+    _as_double,
+    _cos,
+    _dot,
+    _embedding_matrix,
+    _first_agreeing_band,
+    _jaccard,
+    _minhash_sig,
+    _norm,
+    _size_ratio_ok,
+)
+from .text import _bigrams_from
 
 
 @query(
@@ -465,9 +478,6 @@ GROUP BY label
 # ---------------------------------------------------------------------------
 
 _JACCARD_T = 0.8
-_MINHASH_K = 16  # 16 bands x 1 row: recall ~1 at the gate threshold
-_BANDS = 16
-_ROWS_PER_BAND = 1
 
 
 @query(
@@ -504,109 +514,100 @@ def llm_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-of-bucket-sizes^2, and the exact check runs only on bucketed
     candidates.
     """
-    pairs, d = _minhash_candidates(spark, sf_dir)
-    return _minhash_verify(pairs, d)
+    return sql_over(
+        spark,
+        _minhash_sql(_minhash_verify_sql("pairs", "d")),
+        documents=load(spark, sf_dir, "documents"),
+    )
+
+
+# Each band's bucket key is the xxhash64 of its one minhash. The band
+# rows are exploded from an array of (band, bsig) structs (the n-gram
+# key posexplodes a band-key array instead): both are registered
+# plans, so one generator for both would be a plan change.
+_MINHASH_BAND_STRUCTS = ", ".join(
+    f"struct({b} AS band, xxhash64(sig[{b}]) AS bsig)" for b in range(_MINHASH_K)
+)
+
+
+def _minhash_sql(out: str) -> str:
+    """Stages 1-4 of llm_dedup_near_minhash as CTEs over
+    ``{documents}``, followed by the statement ``out``, which reads
+    them: ``d`` (doc_id, toks) the distinct tokens, and ``pairs``
+    (doc_a, doc_b) the candidates of the bucket self-join, exactly one
+    row per pair.
+
+    SLIM banding: only (doc_id, n_t, sig, band, bsig) crosses the
+    quadratic bucket join; token arrays re-attach after pair emission
+    (wide rows through the band join were measured unusable on this
+    dense-similarity corpus — buckets hold a large corpus fraction, so
+    the join output is ~all-pairs-sized).
+
+    CANONICAL-BAND emission replaces pair dedup: the up-to-16 copies
+    of a pair land in DIFFERENT (band, bsig) shuffle partitions, so a
+    dropDuplicates has no map-side partial effect (at the x100
+    rehearsal its exchange alone exceeded 80 GB of spill disk). Each
+    side carries its 16-long signature (128 B) instead, and a pair is
+    emitted only from its first agreeing band."""
+    return f"""
+WITH d AS (
+  SELECT doc_id, array_distinct(split(text, ' ')) AS toks FROM {{documents}}
+), banded AS (
+  SELECT doc_id, n_t, sig, bk.band AS band, bk.bsig AS bsig
+  FROM (
+    SELECT doc_id, n_t, sig, explode(array({_MINHASH_BAND_STRUCTS})) AS bk
+    FROM (SELECT doc_id, size(toks) AS n_t, {_minhash_sig("toks")} AS sig FROM d)
+  )
+), pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM banded a JOIN banded b
+    ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id
+      AND {_size_ratio_ok("a.n_t", "b.n_t", _JACCARD_T)}
+  WHERE a.band = {_first_agreeing_band("a.sig", "b.sig", 1)}
+)
+{out}"""
+
+
+def _minhash_verify_sql(pairs: str, d: str, broadcast_b: bool = False) -> str:
+    """Exact-Jaccard verify of the candidate pairs ``pairs`` against
+    the token table ``d``: re-attach token arrays by doc_id, keep pairs
+    with J >= T. Token re-attach UNHINTED by default: d is corpus-sized
+    (auto-broadcast at test SF, shuffled hash join on doc_id at 100 TB
+    over many executors' disks). ``broadcast_b=True`` is the SINGLE-BOX
+    ×100 shape (--sink rehearsal): the doc_b attach becomes a broadcast
+    hash join, so the wide (pair + toks_a) intermediate STREAMS from
+    the doc_a join through verify to the sink without ever entering an
+    exchange — the one box's ~80 GB shuffle disk sees only the slim
+    pair rows, never the ~KB-wide token-attached rows (which at ~300M
+    true pairs exceed any single disk by design)."""
+    hint = "/*+ BROADCAST(db) */ " if broadcast_b else ""
+    jac = _jaccard("toks_a", "toks_b", "size(toks_a)", "size(toks_b)")
+    return f"""
+SELECT doc_a, doc_b, round(jaccard_raw, 4) AS jaccard
+FROM (
+  SELECT {hint}*, {jac} AS jaccard_raw
+  FROM {pairs}
+  JOIN (SELECT doc_id AS doc_a, toks AS toks_a FROM {d}) USING (doc_a)
+  JOIN (SELECT doc_id AS doc_b, toks AS toks_b FROM {d}) AS db USING (doc_b)
+)
+WHERE jaccard_raw >= {_JACCARD_T!r}D"""
 
 
 def _minhash_candidates(spark: SparkSession, sf_dir: str):
-    """Stages 1-4 of llm_dedup_near_minhash: tokens -> signatures ->
-    banding -> bucket self-join with canonical-band emission. Returns
-    (candidate pairs (doc_a, doc_b) — slim, exactly one row per
-    candidate pair — and the (doc_id, toks) token table). Exposed so
-    the ×100 rehearsal (scripts/scale_rehearsal_llm.py --sink) can
-    compose the verify stage with a distributed parquet sink."""
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", _token_set("text").alias("toks")
+    """``(pairs, d)`` of ``_minhash_sql`` as frames, so the ×100
+    rehearsal (scripts/scale_rehearsal_llm.py --sink) can compose the
+    verify stage with a distributed parquet sink."""
+    docs = load(spark, sf_dir, "documents")
+    return tuple(
+        sql_over(spark, _minhash_sql(f"SELECT * FROM {cte}"), documents=docs)
+        for cte in ("pairs", "d")
     )
-    # K minhash values: for each salt i, min over tokens of xxhash64(token, i)
-    salts = F.array(*[F.lit(i) for i in range(_MINHASH_K)])
-    sig = F.transform(
-        salts,
-        lambda i: F.array_min(
-            F.transform(F.col("toks"), lambda t: F.xxhash64(t, i))
-        ),
-    )
-    sigs = d.select("doc_id", F.size("toks").alias("n_t"), sig.alias("sig"))
-    # band key: hash the r minhashes of each band together.
-    # SLIM banding: only (doc_id, n_toks, band, bsig) crosses the
-    # quadratic bucket join; token arrays re-attach by broadcast after
-    # pair dedup (wide rows through the band join were measured
-    # unusable on this dense-similarity corpus — buckets hold a large
-    # corpus fraction, so the join output is ~all-pairs-sized).
-    band_cols = []
-    for b in range(_BANDS):
-        parts = [F.col("sig")[b * _ROWS_PER_BAND + r] for r in range(_ROWS_PER_BAND)]
-        band_cols.append(F.struct(F.lit(b).alias("band"), F.xxhash64(*parts).alias("bsig")))
-    banded = sigs.select(
-        "doc_id", "n_t", "sig", F.explode(F.array(*band_cols)).alias("bk")
-    ).select(
-        "doc_id", "n_t", "sig",
-        F.col("bk.band").alias("band"), F.col("bk.bsig").alias("bsig"),
-    )
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    # CANONICAL-BAND emission replaces pair dedup: a qualifying pair
-    # matches in up to _BANDS bands, and those copies land in
-    # DIFFERENT (band, bsig) shuffle partitions — so the former
-    # dropDuplicates had no map-side partial effect and shuffled the
-    # full x16-redundant candidate stream (measured at the x100
-    # rehearsal: the pre-dedup exchange alone exceeded 80 GB of
-    # spill disk). Instead each side carries its K-long signature
-    # array (128 B — NOT the multi-KB token arrays the slim-row rule
-    # bans) and a pair is emitted only from the FIRST band whose
-    # signatures truly agree: exactly one copy per pair, no dedup
-    # exchange at all. A bucket reached only via xxhash64 collision
-    # has no truly-agreeing band and is dropped (it was a false
-    # positive the exact-Jaccard verify would discard anyway).
-    first_true_band = first_eq_band(
-        lambda j: F.col("a.sig")[j] == F.col("b.sig")[j], _MINHASH_K
-    )
-    assert _ROWS_PER_BAND == 1  # band index == signature index
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            # size-ratio prune: J >= T implies min/max set size >= T
-            & (
-                F.least(F.col("a.n_t"), F.col("b.n_t")).cast("double")
-                >= _JACCARD_T * F.greatest(F.col("a.n_t"), F.col("b.n_t"))
-            ),
-        )
-        .where(F.col("a.band") == first_true_band)
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    )
-    return pairs, d
 
 
 def _minhash_verify(pairs, d, broadcast_b: bool = False):
-    """Exact-Jaccard verify of candidate pairs: re-attach token
-    arrays by doc_id, keep pairs with J >= T. Token re-attach
-    UNHINTED by default: d is corpus-sized (auto-broadcast at test
-    SF, shuffled hash join on doc_id at 100 TB over many executors'
-    disks). ``broadcast_b=True`` is the SINGLE-BOX ×100 shape
-    (--sink rehearsal): the doc_b attach becomes a broadcast hash
-    join, so the wide (pair + toks_a) intermediate STREAMS from the
-    doc_a join through verify to the sink without ever entering an
-    exchange — the one box's ~80 GB shuffle disk sees only the slim
-    pair rows, never the ~KB-wide token-attached rows (which at
-    ~300M true pairs exceed any single disk by design)."""
-    db = d.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
-    if broadcast_b:
-        db = F.broadcast(db)
-    cand = pairs.join(
-        d.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a")),
-        "doc_a",
-    ).join(db, "doc_b")
-    inter = F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
-    union = (F.size("toks_a") + F.size("toks_b")).cast("double") - inter
-    jac = inter / union
-    return (
-        cand.withColumn("jaccard_raw", jac)
-        .where(F.col("jaccard_raw") >= _JACCARD_T)
-        .select("doc_a", "doc_b", F.round("jaccard_raw", 4).alias("jaccard"))
+    """``_minhash_verify_sql`` over the frames of ``_minhash_candidates``."""
+    return sql_over(
+        d.sparkSession, _minhash_verify_sql("{pairs}", "{d}", broadcast_b), pairs=pairs, d=d
     )
 
 

@@ -34,10 +34,6 @@ def _require_column_name(tok_col: str) -> None:
         raise ValueError(f"tok_col must name a projected column, got {tok_col!r}")
 
 
-def _token_set(col):
-    return F.array_distinct(F.split(col, " "))
-
-
 def _bigrams_from(tok_col: str):
     """Map-side bigram array from an ALREADY-PROJECTED token array
     column (r15 split hoist — see llm_rouge_overlap docstring), empty

@@ -8,9 +8,14 @@ and the Spark jobs and py4j round trips the key's plan build made
 (``build_jobs``).
 
 Plans are captured under driver-real conditions: session.py
-``get_spark`` on the sf0.1 corpus.
+``get_spark`` on the sf0.1 corpus (``--sf`` names another).
 
-Usage: python scripts/dump_plans.py --round N --tag T [key ...]
+``--census PATH`` builds every registered key without executing it and
+writes ``{key: {py4j, build_jobs, build_ms}}`` to PATH as JSON, the
+build-cost census of the whole inventory.
+
+Usage: python scripts/dump_plans.py --round N --tag T [--sf DIR] [key ...]
+       python scripts/dump_plans.py --census PATH [--sf DIR]
   default key set: the 12 bench keys (bench.BENCH_SET)
 """
 
@@ -18,9 +23,11 @@ from __future__ import annotations
 
 import argparse
 import io
+import json
 import re
 import sys
 import threading
+import time
 import uuid
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -77,12 +84,31 @@ def audit_row(key: str, df, formatted: str, jobs: int, py4j: int) -> str:
     )
 
 
+def census(spark, sf_dir: str) -> dict:
+    """Every registered key's build cost, in registry order."""
+    out = {}
+    for key in QUERIES:
+        t0 = time.perf_counter()
+        _, jobs, py4j = build_jobs(spark, key, sf_dir)
+        ms = round((time.perf_counter() - t0) * 1000, 1)
+        out[key] = {"py4j": py4j, "build_jobs": jobs, "build_ms": ms}
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("keys", nargs="*", metavar="KEY")
-    ap.add_argument("--round", type=int, required=True)
-    ap.add_argument("--tag", required=True)
+    ap.add_argument("--round", type=int)
+    ap.add_argument("--tag")
+    ap.add_argument("--census", metavar="PATH")
+    ap.add_argument("--sf", default=BASE_SF, metavar="DIR")
     args = ap.parse_args()
+    if args.census:
+        spark = get_spark("plans-census")
+        Path(args.census).write_text(json.dumps(census(spark, args.sf), indent=1) + "\n")
+        return
+    if args.round is None or args.tag is None:
+        ap.error("--round and --tag are required unless --census is given")
     out_dir = REPO / "plans" / f"r{args.round}"
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark(f"plans-r{args.round}")
@@ -92,7 +118,7 @@ def main() -> None:
     )
     print("|---|---|---|---|---|---|---|---|---|", flush=True)
     for key in args.keys or list(BENCH_SET.values()):
-        df, jobs, py4j = build_jobs(spark, key, BASE_SF)
+        df, jobs, py4j = build_jobs(spark, key, args.sf)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")

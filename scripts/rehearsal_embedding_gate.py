@@ -43,10 +43,13 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 import numpy as np  # noqa: E402
-
 from pyspark.sql import functions as F  # noqa: E402
 
 from atd_dockless_processing_spark.operators.dedup_ann import (  # noqa: E402
+    _as_double,
+    _cos,
+    _mean_vector,
+    _norm,
     ball_cover_stages,
 )
 from atd_dockless_processing_spark.session import get_spark  # noqa: E402
@@ -100,10 +103,8 @@ def main() -> None:
     spark = get_spark("emb-gate")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
-    v = spark.read.parquet(path).select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("ve"),
+    v = spark.read.parquet(path).selectExpr(
+        "vec_id", "label", f"{_as_double('embedding')} AS ve"
     )
     probes, candidates, pairs = ball_cover_stages(v, COS_T, DIM)
 
@@ -115,23 +116,13 @@ def main() -> None:
     all_pairs = n * (n - 1) // 2
 
     # exact truth: cluster-blocked brute force ...
-    a = v.select(
-        F.col("vec_id").alias("a_id"), F.col("label").alias("cell"), F.col("ve").alias("a_ve")
-    )
-    b = v.select(
-        F.col("vec_id").alias("b_id"), F.col("label").alias("cell"), F.col("ve").alias("b_ve")
-    )
-    dot = F.aggregate(
-        F.zip_with("a_ve", "b_ve", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda s, x: s + x)
-    )
+    a = v.selectExpr("vec_id AS a_id", "label AS cell", "ve AS a_ve")
+    b = v.selectExpr("vec_id AS b_id", "label AS cell", "ve AS b_ve")
     t0 = time.perf_counter()
     n_truth = (
         a.join(b, "cell")
-        .where(F.col("a_id") < F.col("b_id"))
-        .where(dot / (nrm(F.col("a_ve")) * nrm(F.col("b_ve"))) >= COS_T)
+        .where("a_id < b_id")
+        .where(f"{_cos('a_ve', 'b_ve')} >= {COS_T!r}D")
         .count()
     )
     t_truth = time.perf_counter() - t0
@@ -140,15 +131,11 @@ def main() -> None:
     # Materialize the norm as a column first so the per-element divide
     # doesn't re-evaluate the O(dim) norm aggregate dim times per row
     # (the same cheap form ball_cover_stages uses).
-    vh = v.withColumn("nrm", nrm(F.col("ve"))).select(
-        "label", F.transform("ve", lambda x: x / F.col("nrm")).alias("vh")
+    vh = v.selectExpr("label", "ve", f"{_norm('ve')} AS nrm").selectExpr(
+        "label", "transform(ve, x_4 -> x_4 / nrm) AS vh"
     )
-    cent_rows = (
-        vh.groupBy("label")
-        .agg(*[F.avg(F.col("vh")[i]).alias(f"c{i}") for i in range(DIM)])
-        .collect()
-    )
-    cents = {r["label"]: np.array([r[f"c{i}"] for i in range(DIM)]) for r in cent_rows}
+    cent_rows = vh.groupBy("label").agg(F.expr(_mean_vector("vh", DIM)).alias("c"))
+    cents = {r["label"]: np.array(r["c"]) for r in cent_rows.collect()}
     rad_rows = vh.groupBy("label").agg(F.collect_list("vh").alias("vs")).collect()
     radii = {}
     for r in rad_rows:

@@ -681,8 +681,8 @@ def test_cms_cells_merge_by_sum_and_never_undercount(spark, sf_dir):
 
 
 def test_first_eq_band_matches_array_position_semantics(spark):
-    """first_eq_band (the short-circuiting when-chain that canonical-band
-    emission filters on) must agree with the reference formulation
+    """first_eq_band_sql (the short-circuiting CASE chain that
+    canonical-band emission filters on) must agree with the reference formulation
     array_position(zip_with(a, b, =), true) - 1 on every input,
     including no-match (-1) and null elements (a null comparison is
     not a match)."""
@@ -700,10 +700,10 @@ def test_first_eq_band_matches_array_position_semantics(spark):
     rows.append(([None] + [1] * 7, [1] * 8)) # null element skipped
     df = spark.createDataFrame(rows, "a: array<int>, b: array<int>")
 
-    from atd_dockless_processing_spark.operators.dedup_ann import first_eq_band
+    from atd_dockless_processing_spark.operators.dedup_ann import first_eq_band_sql
 
     got = df.select(
-        first_eq_band(lambda j: F.col("a")[j] == F.col("b")[j], 8).alias("g"),
+        F.expr(first_eq_band_sql(lambda j: f"a[{j}] = b[{j}]", 8)).alias("g"),
         (
             F.array_position(
                 F.zip_with(F.col("a"), F.col("b"), lambda x, y: x == y),

@@ -1,10 +1,11 @@
 """Plan-build cost and the plan forms it depends on.
 
-The bench keys and the vector keys (embedding and signature math
-written once as the SQL builders of ``operators/dedup_ann.py``) build
-their plans from one SQL text each (``session.sql_over``), so a build
-is one analysis and a handful of py4j round trips; the budget test
-pins that. The horizontal-edge pin keeps the pre-r16 point-in-polygon
+The bench keys, the vector keys (embedding and signature math written
+once as the SQL builders of ``operators/dedup_ann.py``) and the
+MinHash keys (signature, first agreeing band, size-ratio prune and
+Jaccard verify, written once there too) build their plans from one
+SQL text each (``session.sql_over``), so a build is one analysis and a
+handful of py4j round trips; the budget test pins that. The horizontal-edge pin keeps the pre-r16 point-in-polygon
 form, which the registered key replaced, for its equality check and
 for ``scripts/ab.py`` (form
 ``tests.test_plan_build:geo_point_in_polygon_flat_edges``); the
@@ -34,9 +35,9 @@ from bench import BENCH_SET, table_provider
 # table provider
 PY4J_BUDGET = 40
 
-# Keys whose vector math is written as SQL text (each built with
-# 236-7,911 py4j calls when it was spelled as Column loops)
-VECTOR_KEYS = (
+# Keys whose vector or MinHash-LSH math is written as SQL text (each
+# built with 236-7,911 py4j calls when it was spelled as Column loops)
+SQL_BUILDER_KEYS = (
     "llm_kmeans_step",
     "llm_semdedup",
     "llm_ann_ivf",
@@ -46,11 +47,13 @@ VECTOR_KEYS = (
     "llm_vector_quantize",
     "llm_knn_join",
     "llm_vector_norm_filter",
+    "llm_dedup_near_minhash",
+    "llm_dedup_ngram",
 )
 
 
-def test_bench_and_vector_keys_build_within_py4j_budget(spark, sf_dir):
-    """Each bench key's and vector key's plan build, over
+def test_bench_and_sql_builder_keys_build_within_py4j_budget(spark, sf_dir):
+    """Each bench key's and SQL-builder key's plan build, over
     ``bench.table_provider`` with the tables already cached, makes at
     most ``PY4J_BUDGET`` py4j round trips, counted as
     ``scripts/dump_plans.py`` counts its ``build py4j`` column."""
@@ -60,7 +63,7 @@ def test_bench_and_vector_keys_build_within_py4j_budget(spark, sf_dir):
     tables.set_table_provider(table_provider(spark, cache))
     try:
         calls = {}
-        for key in (*BENCH_SET.values(), *VECTOR_KEYS):
+        for key in (*BENCH_SET.values(), *SQL_BUILDER_KEYS):
             QUERIES[key](spark, sf_dir)  # caches the key's tables
             calls[key] = build_jobs(spark, key, sf_dir)[2]
         over = {k: n for k, n in calls.items() if n > PY4J_BUDGET}
