@@ -9,7 +9,7 @@ discipline: every double aggregate is round(x, 4) on both engines
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
@@ -602,50 +602,7 @@ def agg_corr_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesized edge corpus)."""
     if not rows_below("agg_corr_cov", sf_dir, "lineitem", _CORR_COV_UNITS_MAX_ROWS):
         return _corr_cov_decimal_twin(spark, sf_dir)
-    li = load(spark, sf_dir, "lineitem")
-    ux = F.floor(F.col("l_quantity") * 10000 + F.lit(0.5)).cast("long")
-    uy = F.floor(F.col("l_extendedprice") * 10000 + F.lit(0.5)).cast("long")
-    t = li.select(F.col("l_returnflag"), ux.alias("ux"), uy.alias("uy")).select(
-        "l_returnflag",
-        "ux",
-        "uy",
-        (F.col("ux") * F.col("ux")).alias("pxx"),
-        (F.col("uy") * F.col("uy")).alias("pyy"),
-        (F.col("ux") * F.col("uy")).alias("pxy"),
-    )
-    m = F.lit(4294967295)
-    sums = t.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("ux").alias("sux"),
-        F.sum("uy").alias("suy"),
-        F.sum(F.expr("pxx div 4294967296")).alias("hxx"),
-        F.sum(F.col("pxx").bitwiseAND(m)).alias("lxx"),
-        F.sum(F.expr("pyy div 4294967296")).alias("hyy"),
-        F.sum(F.col("pyy").bitwiseAND(m)).alias("lyy"),
-        F.sum(F.expr("pxy div 4294967296")).alias("hxy"),
-        F.sum(F.col("pxy").bitwiseAND(m)).alias("lxy"),
-    )
-    two32 = F.expr("CAST(4294967296 AS DECIMAL(10,0))")
-    cent8 = F.expr("CAST(0.00000001 AS DECIMAL(8,8))")  # units² → value
-    cent4 = F.expr("CAST(0.0001 AS DECIMAL(4,4))")  # units → value
-
-    def rec8(h: str, l: str) -> Column:
-        # decimal(17,0)·(10,0) → (28,0); + (18,0) → (29,0); ·(8,8) →
-        # (38,8): all exact, precision never exceeds 38.
-        s = F.col(h).cast("decimal(17,0)") * two32 + F.col(l).cast("decimal(18,0)")
-        return (s * cent8).cast("double")
-
-    return _corr_tail(
-        sums,
-        # r15 (ADVICE): widened from (14,0)/(17,0) so the Σlo cast —
-        # not these — is the binding bound; ×cent4 keeps precision
-        # ≤ 38 ((15,0)→(20,4), (18,0)→(23,4)).
-        sx=(F.col("sux").cast("decimal(15,0)") * cent4).cast("double"),
-        sy=(F.col("suy").cast("decimal(18,0)") * cent4).cast("double"),
-        sxx=rec8("hxx", "lxx"),
-        syy=rec8("hyy", "lyy"),
-        sxy=rec8("hxy", "lxy"),
-    )
+    return sql_over(spark, _CORR_COV_UNITS_SQL, lineitem=load(spark, sf_dir, "lineitem"))
 
 
 def _corr_cov_decimal_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -655,57 +612,79 @@ def _corr_cov_decimal_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     3.873/4.163 s vs units 0.890/0.810 s). Both forms
     feed the same exact sum VALUES — Σux/1e4 as decimal — into the
     shared ``_corr_tail``, so every output bit matches."""
-    li = load(spark, sf_dir, "lineitem")
-    x = F.col("l_quantity").cast("decimal(18,4)")
-    y = F.col("l_extendedprice").cast("decimal(18,4)")
-    sums = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-        F.sum(x * y).alias("sxy"),
-    )
-    return _corr_tail(
-        sums,
-        sx=F.col("sx").cast("double"),
-        sy=F.col("sy").cast("double"),
-        sxx=F.col("sxx").cast("double"),
-        syy=F.col("syy").cast("double"),
-        sxy=F.col("sxy").cast("double"),
+    return sql_over(spark, _CORR_COV_DECIMAL_SQL, lineitem=load(spark, sf_dir, "lineitem"))
+
+
+def _corr_tail(sums: str, sx: str, sy: str, sxx: str, syy: str, sxy: str) -> str:
+    """Shared output tail over the per-flag ``sums`` text: the
+    exact→double power sums feed one IEEE expression + ROUND,
+    identical across both forms and the DuckDB oracle. A 1-row group
+    yields NULL ``covar_samp`` on BOTH engines through the nullif
+    guard on (n-1): Spark's non-ANSI x/0 is NULL but DuckDB's IEEE
+    double division gives ±inf/NaN (same divergence class fixed in
+    evt_time_weighted_avg). ``sums`` is a CTE, not a derived table:
+    that keeps nullif's common (n-1) in its own Project over the
+    Aggregate, where the registered plan has it; CollapseProject folds
+    it into a derived table's Aggregate."""
+    nd = "CAST(n AS DOUBLE)"
+    cov_num = f"({sxy} - {sx} * {sy} / {nd})"
+    return f"""
+WITH sums AS ({sums})
+SELECT l_returnflag, n AS n_rows,
+       round(({nd} * {sxy} - {sx} * {sy})
+             / (sqrt({nd} * {sxx} - {sx} * {sx}) * sqrt({nd} * {syy} - {sy} * {sy})), 6)
+         AS corr_qty_price,
+       round({cov_num} / {nd}, 4) AS covar_pop,
+       round({cov_num} / nullif(CAST(n - 1 AS DOUBLE), 0.0D), 4) AS covar_samp
+FROM sums
+"""
+
+
+def _rec8(h: str, lo: str) -> str:
+    # decimal(17,0)·(10,0) → (28,0); + (18,0) → (29,0); ·(8,8) →
+    # (38,8): all exact, precision never exceeds 38.
+    return (
+        f"CAST((CAST({h} AS DECIMAL(17,0)) * CAST(4294967296 AS DECIMAL(10,0))"
+        f" + CAST({lo} AS DECIMAL(18,0))) * CAST(0.00000001 AS DECIMAL(8,8)) AS DOUBLE)"
     )
 
 
-def _corr_tail(
-    sums: DataFrame,
-    sx: Column,
-    sy: Column,
-    sxx: Column,
-    syy: Column,
-    sxy: Column,
-) -> DataFrame:
-    """Shared output tail: the exact→double power sums feed one IEEE
-    expression + ROUND, identical across both forms and the DuckDB
-    oracle."""
-    nd = F.col("n").cast("double")
-    cov_num = sxy - sx * sy / nd
-    return sums.select(
-        "l_returnflag",
-        F.col("n").alias("n_rows"),
-        F.round(
-            (nd * sxy - sx * sy)
-            / (F.sqrt(nd * sxx - sx * sx) * F.sqrt(nd * syy - sy * sy)),
-            6,
-        ).alias("corr_qty_price"),
-        F.round(cov_num / nd, 4).alias("covar_pop"),
-        # nullif guard on (n-1): a 1-row group must yield NULL on BOTH
-        # engines — Spark's non-ANSI x/0 is NULL but DuckDB's IEEE
-        # double division gives ±inf/NaN (same divergence class fixed
-        # in evt_time_weighted_avg)
-        F.round(
-            cov_num / F.nullif((F.col("n") - F.lit(1)).cast("double"), F.lit(0.0)), 4
-        ).alias("covar_samp"),
+_CORR_COV_UNITS_SQL = _corr_tail(
+    """
+  SELECT l_returnflag, count(1) AS n, sum(ux) AS sux, sum(uy) AS suy,
+         sum(pxx div 4294967296) AS hxx, sum(pxx & 4294967295) AS lxx,
+         sum(pyy div 4294967296) AS hyy, sum(pyy & 4294967295) AS lyy,
+         sum(pxy div 4294967296) AS hxy, sum(pxy & 4294967295) AS lxy
+  FROM (
+    SELECT l_returnflag, ux, uy, ux * ux AS pxx, uy * uy AS pyy, ux * uy AS pxy
+    FROM (
+      SELECT l_returnflag,
+             CAST(floor(l_quantity * 10000 + 0.5D) AS BIGINT) AS ux,
+             CAST(floor(l_extendedprice * 10000 + 0.5D) AS BIGINT) AS uy
+      FROM {lineitem}
     )
+  )
+  GROUP BY l_returnflag""",
+    # r15 (ADVICE): widened from (14,0)/(17,0) so the Σlo cast — not
+    # these — is the binding bound; ×0.0001 keeps precision ≤ 38
+    # ((15,0)→(20,4), (18,0)→(23,4)).
+    sx="CAST(CAST(sux AS DECIMAL(15,0)) * CAST(0.0001 AS DECIMAL(4,4)) AS DOUBLE)",
+    sy="CAST(CAST(suy AS DECIMAL(18,0)) * CAST(0.0001 AS DECIMAL(4,4)) AS DOUBLE)",
+    sxx=_rec8("hxx", "lxx"),
+    syy=_rec8("hyy", "lyy"),
+    sxy=_rec8("hxy", "lxy"),
+)
+
+_CORR_COV_DECIMAL_SQL = _corr_tail(
+    """
+  SELECT l_returnflag, count(1) AS n, sum({x}) AS sx, sum({y}) AS sy,
+         sum({x} * {x}) AS sxx, sum({y} * {y}) AS syy, sum({x} * {y}) AS sxy
+  FROM {{lineitem}}
+  GROUP BY l_returnflag""".format(
+        x="CAST(l_quantity AS DECIMAL(18,4))", y="CAST(l_extendedprice AS DECIMAL(18,4))"
+    ),
+    *(f"CAST({c} AS DOUBLE)" for c in ("sx", "sy", "sxx", "syy", "sxy")),
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1058,6 +1037,11 @@ _BLM_POS_SQL = (
     "CAST('0x' || substr(md5(CAST({key} AS VARCHAR) || ':' || CAST({i} AS VARCHAR)), 1, 15)"
     f" AS BIGINT) % {_BLM_M}"
 )
+# the same position in Spark's spelling of the hex prefix (conv)
+_BLM_POS_SPARK = (
+    "CAST(conv(substring(md5(concat(CAST({key} AS STRING), ':{i}')), 1, 15), 16, 10)"
+    f" AS BIGINT) % {_BLM_M}"
+)
 
 
 @query(
@@ -1111,94 +1095,49 @@ def agg_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches K·n_probes = 24 rows. The 100 TB use is the classic
     pre-join/existence filter: ship the ≤32 KB bitmap, not the key
     set."""
-    orders = load(spark, sf_dir, "orders")
+    return sql_over(spark, _BLOOM_SQL, orders=load(spark, sf_dir, "orders"))
 
-    def pos(key_col, i):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(key_col.cast("string"), F.lit(f":{i}"))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long")
-            % _BLM_M
-        )
 
-    keys = orders.select(F.col("o_custkey").alias("k")).distinct()
-    bits = (
-        keys.select(
-            F.explode(F.array(*[pos(F.col("k"), i) for i in range(_BLM_K)])).alias(
-                "pos"
-            )
-        )
-        .distinct()
+def _blm_bits(key: str) -> str:
+    """The ``_BLM_K`` bit positions of ``key``, exploded."""
+    pos = (_BLM_POS_SPARK.format(key=key, i=i) for i in range(_BLM_K))
+    return f"explode(array({', '.join(pos)}))"
+
+
+# (label, probe key over the orders key bounds mn/mx, in the set)
+_BLM_PROBES = [
+    ("present_min", "mn", 1),
+    ("present_max", "mx", 1),
+    ("absent_below", "mn - 1", 0),
+    ("absent_above", "mx + 1", 0),
+    ("absent_neg7", "CAST(-7 AS BIGINT)", 0),
+    ("absent_neg13", "CAST(-13 AS BIGINT)", 0),
+]
+_BLOOM_SQL = f"""
+WITH bits AS (
+  SELECT DISTINCT pos
+  FROM (SELECT {_blm_bits("k")} AS pos FROM (SELECT DISTINCT o_custkey AS k FROM {{orders}}))
+), hits AS (
+  SELECT /*+ BROADCAST(b) */ probe_label, probe_key, actual, count(b.pos) AS n_hit
+  FROM (
+    SELECT probe_label, probe_key, actual, {_blm_bits("probe_key")} AS pos
+    FROM (
+      SELECT p.probe_label, p.probe_key, p.actual
+      FROM (
+        SELECT explode(array({", ".join(
+            f"struct('{label}' AS probe_label, {key} AS probe_key, {actual} AS actual)"
+            for label, key, actual in _BLM_PROBES
+        )})) AS p
+        FROM (SELECT min(o_custkey) AS mn, max(o_custkey) AS mx FROM {{orders}})
+      )
     )
-    bounds = orders.agg(
-        F.min("o_custkey").alias("mn"), F.max("o_custkey").alias("mx")
-    )
-    probes = bounds.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("present_min").alias("probe_label"),
-                    F.col("mn").alias("probe_key"),
-                    F.lit(1).alias("actual"),
-                ),
-                F.struct(
-                    F.lit("present_max").alias("probe_label"),
-                    F.col("mx").alias("probe_key"),
-                    F.lit(1).alias("actual"),
-                ),
-                F.struct(
-                    F.lit("absent_below").alias("probe_label"),
-                    (F.col("mn") - 1).alias("probe_key"),
-                    F.lit(0).alias("actual"),
-                ),
-                F.struct(
-                    F.lit("absent_above").alias("probe_label"),
-                    (F.col("mx") + 1).alias("probe_key"),
-                    F.lit(0).alias("actual"),
-                ),
-                F.struct(
-                    F.lit("absent_neg7").alias("probe_label"),
-                    F.lit(-7).cast("long").alias("probe_key"),
-                    F.lit(0).alias("actual"),
-                ),
-                F.struct(
-                    F.lit("absent_neg13").alias("probe_label"),
-                    F.lit(-13).cast("long").alias("probe_key"),
-                    F.lit(0).alias("actual"),
-                ),
-            )
-        ).alias("p")
-    ).select("p.probe_label", "p.probe_key", "p.actual")
-    probe_bits = probes.select(
-        "probe_label",
-        "probe_key",
-        "actual",
-        F.explode(
-            F.array(*[pos(F.col("probe_key"), i) for i in range(_BLM_K)])
-        ).alias("pos"),
-    )
-    # broadcast the RIGHT side of the left join (a left-side hint is
-    # ignored for outer joins): the bit set is ≤m slim rows
-    hits = (
-        probe_bits.join(F.broadcast(bits), "pos", "left")
-        .groupBy("probe_label", "probe_key", "actual")
-        .agg(F.count(bits["pos"]).alias("n_hit"))
-    )
-    n_bits = bits.agg(F.count(F.lit(1)).alias("n_set_bits"))
-    return (
-        hits.crossJoin(F.broadcast(n_bits))
-        .select(
-            "probe_label",
-            "probe_key",
-            F.col("actual").cast("int").alias("actual"),
-            F.when(F.col("n_hit") == _BLM_K, 1).otherwise(0).cast("int").alias("claimed"),
-            "n_set_bits",
-        )
-    )
+  ) LEFT JOIN bits b USING (pos)
+  GROUP BY probe_label, probe_key, actual
+)
+SELECT /*+ BROADCAST(n) */ probe_label, probe_key, CAST(actual AS INT) AS actual,
+       CAST(CASE WHEN n_hit = {_BLM_K} THEN 1 ELSE 0 END AS INT) AS claimed, n_set_bits
+FROM hits CROSS JOIN (SELECT count(1) AS n_set_bits FROM bits) n
+"""
 
 
 # ---------------------------------------------------------------------------

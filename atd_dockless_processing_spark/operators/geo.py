@@ -11,11 +11,12 @@ shuffle of the point table before aggregation).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.json_fast import with_json_field
 from ..registry import query
+from ..session import sql_over
 from ..tables import decided, load, read_parquet, stage_scratch
 
 
@@ -216,63 +217,61 @@ _PIP_POLYGONS = [
 ]
 
 
-def _pip_sql(poly) -> str:
-    """PNPOLY crossing-parity test as DuckDB SQL over (x, y) columns.
+def _crossing(x1: str, y1: str, x2: str, y2: str, x: str = "x", y: str = "y") -> str:
+    """PNPOLY crossing term of edge (x1, y1)-(x2, y2) for the point
+    (x, y): 1 when a ray cast from the point crosses the edge, else 0.
+    The one spelling of the crossing test: DuckDB and Spark SQL read it
+    alike, over literal vertices and over vertex-array fields."""
+    return (
+        f"(CASE WHEN (({y1} > {y}) <> ({y2} > {y})) AND "
+        f"{x} < ({x2} - {x1}) * ({y} - {y1}) / ({y2} - {y1}) + {x1} "
+        f"THEN 1 ELSE 0 END)"
+    )
+
+
+def _pip_sql(poly, flat_edges: bool = True) -> str:
+    """PNPOLY crossing-parity test of the literal polygon ``poly`` over
+    (x, y) columns.
 
     `e0` suffixes force DOUBLE literals (a bare decimal is DECIMAL in
     DuckDB, whose division-by-zero on horizontal edges would error;
     IEEE doubles give inf/nan, which the crossing conjunction then
-    discards identically on both engines)."""
+    discards identically on both engines). A horizontal edge
+    (``y1 == y2``) never changes the parity, since its first clause is
+    false for every point: the oracle keeps it, and the Spark key
+    (``flat_edges=False``) leaves it out and sums from the 0 its
+    registered plan was built with."""
     n = len(poly)
     terms = []
     for i in range(n):
         x1, y1 = poly[i]
         x2, y2 = poly[(i + 1) % n]
-        lx1, ly1, lx2, ly2 = (f"({v!r}e0)" for v in (x1, y1, x2, y2))
-        terms.append(
-            f"(CASE WHEN (({ly1} > y) <> ({ly2} > y)) AND "
-            f"x < ({lx2} - {lx1}) * (y - {ly1}) / ({ly2} - {ly1}) + {lx1} "
-            f"THEN 1 ELSE 0 END)"
-        )
-    return "((" + " + ".join(terms) + ") % 2 = 1)"
+        if flat_edges or y1 != y2:
+            terms.append(_crossing(*(f"({v!r}e0)" for v in (x1, y1, x2, y2))))
+    return "((" + ("" if flat_edges else "0 + ") + " + ".join(terms) + ") % 2 = 1)"
 
 
-def _pip_col(poly, x, y):
-    """Same PNPOLY parity test as a Spark Column expression. A
-    horizontal edge (``y1 == y2``) is skipped: its crossing clause
-    ``(y1 > y) != (y2 > y)`` is false for every point, so the edge
-    never changes the parity."""
-    total = F.lit(0)
-    n = len(poly)
-    for i in range(n):
-        x1, y1 = poly[i]
-        x2, y2 = poly[(i + 1) % n]
-        if y1 == y2:
-            continue
-        crosses = ((F.lit(y1) > y) != (F.lit(y2) > y)) & (
-            x
-            < (F.lit(x2) - F.lit(x1)) * (y - F.lit(y1)) / (F.lit(y2) - F.lit(y1))
-            + F.lit(x1)
-        )
-        total = total + F.when(crosses, 1).otherwise(0)
-    return total % 2 == 1
+def _pip_zone_sql(flat_edges: bool = True) -> str:
+    """The zone of (x, y): the first polygon of ``_PIP_POLYGONS`` that
+    holds it, else 'outside'."""
+    whens = (f"WHEN {_pip_sql(poly, flat_edges)} THEN '{name}'" for name, poly in _PIP_POLYGONS)
+    return f"CASE {' '.join(whens)} ELSE 'outside' END"
 
 
-_PIP_ZONE_SQL = (
-    "CASE WHEN "
-    + _pip_sql(_PIP_POLYGONS[0][1])
-    + f" THEN '{_PIP_POLYGONS[0][0]}' WHEN "
-    + _pip_sql(_PIP_POLYGONS[1][1])
-    + f" THEN '{_PIP_POLYGONS[1][0]}' ELSE 'outside' END"
-)
+_PIP_ZONE_SQL = _pip_zone_sql()
+
+# The synthesized point of an events row, read alike by DuckDB (both
+# point-in-polygon oracles) and Spark SQL (both keys).
+_PIP_PX = "(-97.95e0) + (abs(value) % 40.0e0) / 100.0e0"
+_PIP_PY = "30.10e0 + (user_id % 40) / 100.0e0"
 
 
 @query(
     "geo_point_in_polygon",
     oracle=f"""
     WITH pts AS (
-      SELECT (-97.95e0) + (abs(value) % 40.0e0) / 100.0e0 AS x,
-             30.10e0 + (user_id % 40) / 100.0e0 AS y,
+      SELECT {_PIP_PX} AS x,
+             {_PIP_PY} AS y,
              value
       FROM events
     )
@@ -294,33 +293,34 @@ def geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the polygon set is compiled INTO the expression (the
     per-edge crossing tests unroll into one codegen stage — for a
     real district table of a few hundred polygons you'd broadcast the
-    vertex table and F.aggregate over it instead), so the point table
+    vertex table and aggregate over it instead), so the point table
     is never shuffled before the final combinable agg: a pure map at
     100 TB, same as geo_grid_bin/geo_hex_bin. Horizontal edges give
     IEEE inf/nan in the slope term in the oracle; the crossing
     conjunction's first clause is then false, so parity is exact, and
-    the Spark plan leaves those edges out (``_pip_col``)."""
-    ev = load(spark, sf_dir, "events")
-    # Stage (x, y) in their own Project: the ~45 per-row references
-    # the unrolled edge tests make would otherwise each re-evaluate
-    # the full coordinate derivation (Catalyst CSE gap — the
-    # geo_hex_bin finding; ×100 A/B: 1.08 s -> 0.375 s).
-    x = F.lit(-97.95) + (F.abs(F.col("value")) % F.lit(40.0)) / F.lit(100.0)
-    y = F.lit(30.10) + (F.col("user_id") % 40) / F.lit(100.0)
-    pts = ev.select(x.alias("x"), y.alias("y"), "value")
-    zone = (
-        F.when(_pip_col(_PIP_POLYGONS[0][1], F.col("x"), F.col("y")), _PIP_POLYGONS[0][0])
-        .when(_pip_col(_PIP_POLYGONS[1][1], F.col("x"), F.col("y")), _PIP_POLYGONS[1][0])
-        .otherwise("outside")
-    )
-    return (
-        pts.select(zone.alias("zone"), "value")
-        .groupBy("zone")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-    )
+    the Spark plan leaves those edges out (``_pip_sql(poly, False)``).
+
+    (x, y) are staged in their own Project: the ~45 per-row references
+    the unrolled edge tests make would otherwise each re-evaluate the
+    full coordinate derivation (Catalyst CSE gap — the geo_hex_bin
+    finding; ×100 A/B: 1.08 s -> 0.375 s)."""
+    return sql_over(spark, _PIP_KEY_SQL, events=load(spark, sf_dir, "events"))
+
+
+def _pip_key_sql(zone: str) -> str:
+    """Points and value summed per ``zone`` (a text over x, y) of
+    ``{events}``' synthesized points."""
+    return f"""
+SELECT zone, count(1) AS n_points, round(sum(value), 4) AS sum_value
+FROM (
+  SELECT {zone} AS zone, value
+  FROM (SELECT {_PIP_PX} AS x, {_PIP_PY} AS y, value FROM {{events}})
+)
+GROUP BY zone
+"""
+
+
+_PIP_KEY_SQL = _pip_key_sql(_pip_zone_sql(flat_edges=False))
 
 
 _HEX_SIZE = 40.0
@@ -388,47 +388,44 @@ def geo_hex_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH engines is stronger parity: exact agreement by
     construction (hazard rule 6), not an assumption that two
     engines' round() tie behavior matches."""
-    ev = with_json_field(load(spark, sf_dir, "events"), "_yj", "props", "k", "int")
+    return sql_over(spark, _HEX_BIN_SQL, events=_hex_points(spark, sf_dir))
 
-    def rnd(v):
-        return F.when(v >= 0, F.floor(v + 0.5)).otherwise(-F.floor(0.5 - v))
 
-    x = F.col("value")
-    y = F.col("_yj")  # staged once: q and r both reference it
-    axial = ev.select(
-        x.alias("x"),
-        ((F.sqrt(F.lit(3.0)) / 3.0 * x - F.lit(1.0) / 3.0 * y) / _HEX_SIZE).alias("q"),
-        ((F.lit(2.0) / 3.0 * y) / _HEX_SIZE).alias("r"),
+def _hex_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events with props.k staged once as ``_yj`` (q and r both read it)."""
+    return with_json_field(load(spark, sf_dir, "events"), "_yj", "props", "k", "int")
+
+
+def _rnd(v: str) -> str:
+    """Half-away rounding of ``v`` as the floor tree the oracle shares."""
+    return f"CASE WHEN {v} >= 0 THEN floor({v} + 0.5D) ELSE -floor(0.5D - {v}) END"
+
+
+# geo_hex_bin's per-cell summary over {events} (``_hex_points``): one
+# Project per tier, axial q/r -> cube rounding -> residuals -> cell
+_HEX_BIN_SQL = f"""
+SELECT hex_q, hex_r, count(1) AS n_points, round(sum(x), 4) AS sum_value
+FROM (
+  SELECT x,
+         CAST(CASE WHEN dq > dr AND dq > ds THEN -rr - rs ELSE rq END AS INT) AS hex_q,
+         CAST(CASE WHEN dr > dq AND dr >= ds AND NOT (dq > dr AND dq > ds)
+                   THEN -rq - rs ELSE rr END AS INT) AS hex_r
+  FROM (
+    SELECT x, rq, rr, rs, abs(rq - q) AS dq, abs(rr - r) AS dr, abs(rs - s) AS ds
+    FROM (
+      SELECT x, q, r, -q - r AS s, {_rnd("q")} AS rq, {_rnd("r")} AS rr,
+             {_rnd("(-q - r)")} AS rs
+      FROM (
+        SELECT value AS x,
+               (sqrt(3.0D) / 3.0D * value - 1.0D / 3.0D * _yj) / {_HEX_SIZE}D AS q,
+               (2.0D / 3.0D * _yj) / {_HEX_SIZE}D AS r
+        FROM {{events}}
+      )
     )
-    cube = axial.select(
-        "x", "q", "r",
-        (-F.col("q") - F.col("r")).alias("s"),
-        rnd(F.col("q")).alias("rq"),
-        rnd(F.col("r")).alias("rr"),
-        rnd(-F.col("q") - F.col("r")).alias("rs"),
-    )
-    resid = cube.select(
-        "x", "rq", "rr", "rs",
-        F.abs(F.col("rq") - F.col("q")).alias("dq"),
-        F.abs(F.col("rr") - F.col("r")).alias("dr"),
-        F.abs(F.col("rs") - F.col("s")).alias("ds"),
-    )
-    dq, dr, ds = F.col("dq"), F.col("dr"), F.col("ds")
-    rq, rr, rs = F.col("rq"), F.col("rr"), F.col("rs")
-    hq = F.when((dq > dr) & (dq > ds), -rr - rs).otherwise(rq)
-    hr = F.when(
-        (dr > dq) & (dr >= ds) & ~((dq > dr) & (dq > ds)), -rq - rs
-    ).otherwise(rr)
-    return (
-        resid.select(
-            "x", hq.cast("int").alias("hex_q"), hr.cast("int").alias("hex_r")
-        )
-        .groupBy("hex_q", "hex_r")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.round(F.sum("x"), 4).alias("sum_value"),
-        )
-    )
+  )
+)
+GROUP BY hex_q, hex_r
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -494,28 +491,21 @@ def geo_nearest_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     would swap in the IVF/LSH pre-prune (llm_ann_ivf) before the
     exact argmin.
     """
-    ev = with_json_field(
-        load(spark, sf_dir, "events"), "y", "props", "k", "int"
-    ).select(F.col("value").alias("x"), "y", "value")
-    cands = F.array(
-        *[
-            F.struct(
-                (
-                    (F.col("x") - F.lit(hx)) * (F.col("x") - F.lit(hx))
-                    + (F.col("y") - F.lit(hy)) * (F.col("y") - F.lit(hy))
-                ).alias("dist"),
-                F.lit(hid).alias("hub_id"),
-            )
-            for hid, hx, hy in _HUBS
-        ]
-    )
-    snapped = ev.select(
-        F.array_min(cands).getField("hub_id").alias("hub_id"), "value"
-    )
-    return snapped.groupBy("hub_id").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-    )
+    ev = with_json_field(load(spark, sf_dir, "events"), "y", "props", "k", "int")
+    return sql_over(spark, _NEAREST_HUB_SQL, events=ev)
+
+
+_NEAREST_HUB_SQL = f"""
+SELECT hub_id, count(1) AS n_points, round(sum(value), 4) AS sum_value
+FROM (
+  SELECT array_min(array({", ".join(
+      f"struct((x - {hx}D) * (x - {hx}D) + (y - {hy}D) * (y - {hy}D) AS dist, {h} AS hub_id)"
+      for h, hx, hy in _HUBS
+  )})).hub_id AS hub_id, value
+  FROM (SELECT value AS x, y, value FROM {{events}})
+)
+GROUP BY hub_id
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -633,22 +623,17 @@ def _stage_polygons(spark: SparkSession, sf_dir: str) -> str:
     return stage_scratch("geo_pip_table", sf_dir, "events", build)
 
 
-def _pipt_inside(verts: Column, px: Column, py: Column) -> Column:
-    """Exact PNPOLY crossing-parity test of (px, py) against the
-    8-vertex polygon ``verts`` — one F.aggregate over the edge list,
-    pure codegen HOF (no explode, no Python)."""
+def _pip_verts_sql(verts: str, x: str, y: str) -> str:
+    """Exact PNPOLY crossing-parity test of (x, y) against the 8-vertex
+    polygon array ``verts``: one ``aggregate`` over the edge list, the
+    ``_crossing`` term as its body — pure codegen HOF (no explode, no
+    Python). The lambda folds the crossing count ``x_0`` over the edge
+    index ``y_0``."""
     nv = len(_PIPT_OFF)
-
-    def crossings(acc: Column, k: Column) -> Column:
-        v1 = F.element_at(verts, k + 1)
-        v2 = F.element_at(verts, ((k + 1) % nv) + 1)
-        crosses = ((v1["y"] > py) != (v2["y"] > py)) & (
-            px < (v2["x"] - v1["x"]) * (py - v1["y"]) / (v2["y"] - v1["y"]) + v1["x"]
-        )
-        return acc + F.when(crosses, 1).otherwise(0)
-
-    total = F.aggregate(F.sequence(F.lit(0), F.lit(nv - 1)), F.lit(0), crossings)
-    return total % 2 == 1
+    v1 = f"element_at({verts}, y_0 + 1)"
+    v2 = f"element_at({verts}, ((y_0 + 1) % {nv}) + 1)"
+    term = _crossing(f"{v1}.x", f"{v1}.y", f"{v2}.x", f"{v2}.y", x, y)
+    return f"(aggregate(sequence(0, {nv - 1}), 0, (x_0, y_0) -> x_0 + {term}) % 2 = 1)"
 
 
 @query(
@@ -656,8 +641,8 @@ def _pipt_inside(verts: Column, px: Column, py: Column) -> Column:
     oracle=f"""
     WITH pts AS (
       SELECT event_id,
-             (-97.95e0) + (abs(value) % 40.0e0) / 100.0e0 AS px,
-             30.10e0 + (user_id % 40) / 100.0e0 AS py,
+             {_PIP_PX} AS px,
+             {_PIP_PY} AS py,
              value
       FROM events
     ), off(k, dx, dy) AS (
@@ -709,8 +694,8 @@ def geo_point_in_polygon_table(spark: SparkSession, sf_dir: str) -> DataFrame:
        NO CartesianProduct, and the 100 TB point table is never
        shuffled (plan-asserted in test_engine_units.py).
     2. EXACT VERIFY: PNPOLY crossing parity over the candidate's
-       vertex array via one F.aggregate HOF — pure codegen, no
-       explode, no Python. Bit-identical to the oracle's edge-table
+       vertex array via one aggregate HOF (``_pip_verts_sql``) — pure
+       codegen, no explode, no Python. Bit-identical to the oracle's edge-table
        formulation because every arithmetic step is the same IEEE
        expression on both engines.
     3. One combinable agg shuffle on zone_id; exact DECIMAL(18,4)
@@ -721,52 +706,34 @@ def geo_point_in_polygon_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the canonical spatial-join-by-grid-blocking design (same family
     as geo_bbox_join / join_interval_overlap bucket blocking)."""
     polys = read_parquet(spark, _stage_polygons(spark, sf_dir))
-    g = float(_PIPT_CELL)
-    rad = 3.0  # max |offset| in lattice units
+    return sql_over(spark, _PIPT_SQL, polys=polys, events=load(spark, sf_dir, "events"))
 
-    # polygon -> covering grid cells (bbox cover; slim (cell, zone) rows)
-    cells = polys.select(
-        "zone_id",
-        "verts",
-        F.explode(
-            F.sequence(
-                F.floor((F.col("cx") - rad * F.col("s")) / g).cast("int"),
-                F.floor((F.col("cx") + rad * F.col("s")) / g).cast("int"),
-            )
-        ).alias("cell_x"),
-        F.col("cy"),
-        F.col("s"),
-    ).select(
-        "zone_id",
-        "verts",
-        "cell_x",
-        F.explode(
-            F.sequence(
-                F.floor((F.col("cy") - rad * F.col("s")) / g).cast("int"),
-                F.floor((F.col("cy") + rad * F.col("s")) / g).cast("int"),
-            )
-        ).alias("cell_y"),
+
+def _pipt_cells(c: str) -> str:
+    """The grid cells a star centred on ``c`` covers along that axis
+    (3 = the largest |offset| in lattice units)."""
+    return (
+        f"explode(sequence(CAST(floor(({c} - s * 3.0D) / {_PIPT_CELL}D) AS INT), "
+        f"CAST(floor(({c} + s * 3.0D) / {_PIPT_CELL}D) AS INT)))"
     )
 
-    ev = load(spark, sf_dir, "events")
-    px = F.lit(-97.95) + (F.abs(F.col("value")) % F.lit(40.0)) / F.lit(100.0)
-    py = F.lit(30.10) + (F.col("user_id") % 40) / F.lit(100.0)
-    pts = ev.select(
-        px.alias("px"),
-        py.alias("py"),
-        F.col("value"),
-        F.floor(px / g).cast("int").alias("cell_x"),
-        F.floor(py / g).cast("int").alias("cell_y"),
-    )
 
-    cand = pts.join(F.broadcast(cells), ["cell_x", "cell_y"])
-    inside = cand.where(_pipt_inside(F.col("verts"), F.col("px"), F.col("py")))
-    return inside.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double"), 4
-        ).alias("sum_value"),
-    )
+_PIPT_SQL = f"""
+SELECT /*+ BROADCAST(c) */ zone_id, count(1) AS n_points,
+       round(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE), 4) AS sum_value
+FROM (
+  SELECT {_PIP_PX} AS px, {_PIP_PY} AS py, value,
+         CAST(floor(({_PIP_PX}) / {_PIPT_CELL}D) AS INT) AS cell_x,
+         CAST(floor(({_PIP_PY}) / {_PIPT_CELL}D) AS INT) AS cell_y
+  FROM {{events}}
+) p
+JOIN (
+  SELECT zone_id, verts, cell_x, {_pipt_cells("cy")} AS cell_y
+  FROM (SELECT zone_id, verts, {_pipt_cells("cx")} AS cell_x, cy, s FROM {{polys}})
+) c USING (cell_x, cell_y)
+WHERE {_pip_verts_sql("verts", "px", "py")}
+GROUP BY zone_id
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -974,37 +941,29 @@ def geo_hex_ring_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse without caching; the ×100 rehearsal measured the 2-pass
     join form at 2× scan cost) is not needed. At 100 TB: one events
     exchange + one summary-sized exchange, no join."""
-    cells = geo_hex_bin(spark, sf_dir).select("hex_q", "hex_r", "n_points")
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dq).alias("dq"), F.lit(dr).alias("dr"))
-            for dq, dr in [(0, 0), (1, 0), (-1, 0), (0, 1), (0, -1), (1, -1), (-1, 1)]
-        ]
+    return sql_over(spark, _HEX_RING_SQL, events=_hex_points(spark, sf_dir))
+
+
+_HEX_RING = [(0, 0), (1, 0), (-1, 0), (0, 1), (0, -1), (1, -1), (-1, 1)]
+_HEX_RING_SQL = f"""
+SELECT tq AS hex_q, tr AS hex_r, n_points_c AS n_points, hood_n, n_hood_cells,
+       (1000 * hood_n) div n_hood_cells AS density_milli
+FROM (
+  SELECT tq, tr, sum(n_points) AS hood_n, count(1) AS n_hood_cells,
+         sum(CASE WHEN is_center THEN n_points END) AS n_points_c
+  FROM (
+    SELECT hex_q + o.dq AS tq, hex_r + o.dr AS tr, n_points,
+           o.dq = 0 AND o.dr = 0 AS is_center
+    FROM (
+      SELECT explode(array({", ".join(f"struct({q} AS dq, {r} AS dr)" for q, r in _HEX_RING)}))
+               AS o, hex_q, hex_r, n_points
+      FROM (SELECT hex_q, hex_r, n_points FROM ({_HEX_BIN_SQL}))
     )
-    contrib = cells.select(
-        F.explode(offsets).alias("o"), "hex_q", "hex_r", "n_points"
-    ).select(
-        (F.col("hex_q") + F.col("o.dq")).alias("tq"),
-        (F.col("hex_r") + F.col("o.dr")).alias("tr"),
-        "n_points",
-        ((F.col("o.dq") == 0) & (F.col("o.dr") == 0)).alias("is_center"),
-    )
-    ring = contrib.groupBy("tq", "tr").agg(
-        F.sum("n_points").alias("hood_n"),
-        F.count(F.lit(1)).alias("n_hood_cells"),
-        F.sum(F.when(F.col("is_center"), F.col("n_points"))).alias("n_points_c"),
-    )
-    return (
-        ring.where(F.col("n_points_c").isNotNull())
-        .select(
-            F.col("tq").alias("hex_q"),
-            F.col("tr").alias("hex_r"),
-            F.col("n_points_c").alias("n_points"),
-            "hood_n",
-            "n_hood_cells",
-            F.expr("(1000 * hood_n) div n_hood_cells").alias("density_milli"),
-        )
-    )
+  )
+  GROUP BY tq, tr
+)
+WHERE n_points_c IS NOT NULL
+"""
 
 
 # ---------------------------------------------------------------------------

@@ -1121,21 +1121,6 @@ def llm_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf uses the +1-inside-the-log BM25+ variant (always positive, no
     negative-idf edge for terms in >half the corpus — this synthetic
     corpus has exactly that property).""".format(k=_BM25_TOPK)
-    # stage the split once (Catalyst does not CSE non-cheap exprs:
-    # an inline size(split(..)) would re-split every row — the
-    # round-6 staged-Projection rule)
-    docs = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", "toks", F.size("toks").alias("dl"))
-    )
-    # per-term tf columns, map-side (query is a literal). NB: the
-    # lambda must be single-arg — a two-arg lambda is interpreted by
-    # F.filter as the (element, index) form.
-    def _tf(term):
-        return F.size(F.filter("toks", lambda t: t == F.lit(term)))
-
-    tf_cols = [_tf(term).alias(f"f_{i}") for i, term in enumerate(_BM25_QUERY)]
     # MATERIALIZE the narrow tf projection (5 int columns — no toks,
     # no text): both consumers (the df/stats agg and the scoring
     # projection) would otherwise re-execute the text scan + split +
@@ -1145,42 +1130,54 @@ def llm_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpersist after the query returns). At 100 TB this is the
     # classic narrow-intermediate materialization: ints-only, ~2% of
     # the text payload, spill-safe.
-    tfd = docs.select("doc_id", "dl", *tf_cols).localCheckpoint(eager=False)
-    # per-term document frequencies + corpus stats: ONE tiny agg row,
-    # broadcast back (see docstring — merging stats here saves a
-    # whole corpus pass)
-    df_row = tfd.agg(
-        *[
-            F.count_if(F.col(f"f_{i}") > 0).alias(f"df_{i}")
-            for i in range(len(_BM25_QUERY))
-        ],
-        F.count(F.lit(1)).alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-    )
-    joined = tfd.crossJoin(F.broadcast(df_row))
-    score = None
-    for i in range(len(_BM25_QUERY)):
-        f, dfi = F.col(f"f_{i}"), F.col(f"df_{i}")
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - dfi + F.lit(0.5)) / (dfi + F.lit(0.5))
-        )
-        term_score = (
-            idf
-            * (f * (_BM25_K1 + 1))
-            / (
-                f
-                + _BM25_K1
-                * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-            )
-        )
-        score = term_score if score is None else score + term_score
+    docs = load(spark, sf_dir, "documents")
+    tfd = sql_over(spark, _BM25_TF_SQL, documents=docs).localCheckpoint(eager=False)
+    return sql_over(spark, _BM25_SCORE_SQL, tfd=tfd)
+
+
+# per-term tf columns, map-side (the query is a literal), over the
+# split staged once (Catalyst does not CSE non-cheap exprs: an inline
+# size(split(..)) would re-split every row — the round-6
+# staged-Projection rule)
+_BM25_TF_SQL = f"""
+SELECT doc_id, dl,
+       {", ".join(
+           f"size(filter(toks, x_{i} -> x_{i} = '{t}')) AS f_{i}" for i, t in enumerate(_BM25_QUERY)
+       )}
+FROM (
+  SELECT doc_id, toks, size(toks) AS dl
+  FROM (SELECT doc_id, split(text, ' ') AS toks FROM {{documents}})
+)
+"""
+
+
+def _bm25_term(i: int) -> str:
+    """Term ``i``'s BM25 contribution over the tf row and the corpus stats."""
+    idf = f"ln(1.0D + (n_docs - df_{i} + 0.5D) / (df_{i} + 0.5D))"
     return (
-        joined.select("doc_id", score.alias("score"))
-        .orderBy(F.col("score").desc(), "doc_id")
-        .limit(_BM25_TOPK)
-        .select("doc_id", F.round("score", 4).alias("bm25"))
+        f"{idf} * (f_{i} * {_BM25_K1 + 1}D)"
+        f" / (f_{i} + (dl * {_BM25_B}D / avgdl + {1 - _BM25_B}D) * {_BM25_K1}D)"
     )
+
+
+# per-term document frequencies + corpus stats: ONE tiny agg row,
+# broadcast back (see llm_bm25_topk — merging stats here saves a whole
+# corpus pass)
+_BM25_SCORE_SQL = f"""
+SELECT doc_id, round(score, 4) AS bm25
+FROM (
+  SELECT /*+ BROADCAST(s) */ doc_id,
+         {" + ".join(f"({_bm25_term(i)})" for i in range(len(_BM25_QUERY)))} AS score
+  FROM {{tfd}}
+  CROSS JOIN (
+    SELECT {"".join(f"count_if(f_{i} > 0) AS df_{i}, " for i in range(len(_BM25_QUERY)))}
+           count(1) AS n_docs, avg(dl) AS avgdl
+    FROM {{tfd}}
+  ) s
+  ORDER BY score DESC, doc_id
+  LIMIT {_BM25_TOPK}
+)
+"""
 
 
 # ---------------------------------------------------------------------------

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.json_fast import with_json_field
 from ..registry import query
+from ..session import sql_over
 from ..tables import load
 
 
@@ -135,24 +136,18 @@ def dq_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the distinct-hash shuffle — and measured 7.2 s vs 2.1 s for
     this form (the oracle's naive per-column UNION ALL is the same
     plan family, 5 pruned scans)."""
-    o = load(spark, sf_dir, "orders")
-    branches = []
-    for c in _PROFILE_COLS:
-        g = o.groupBy(F.col(c).alias("v")).agg(F.count(F.lit(1)).alias("cnt"))
-        branches.append(
-            g.agg(
-                F.lit(c).alias("col_name"),
-                F.sum("cnt").alias("n_rows"),
-                F.coalesce(
-                    F.sum(F.when(F.col("v").isNull(), F.col("cnt"))), F.lit(0)
-                ).alias("n_null"),
-                F.count_if(F.col("v").isNotNull()).alias("n_distinct"),
-            )
-        )
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
+    return sql_over(spark, _PROFILE_SQL, orders=load(spark, sf_dir, "orders"))
+
+
+_PROFILE_SQL = " UNION ALL ".join(
+    f"""
+    SELECT '{c}' AS col_name, sum(cnt) AS n_rows,
+           coalesce(sum(CASE WHEN v IS NULL THEN cnt END), 0) AS n_null,
+           count_if(v IS NOT NULL) AS n_distinct
+    FROM (SELECT {c} AS v, count(1) AS cnt FROM {{orders}} GROUP BY {c})
+    """
+    for c in _PROFILE_COLS
+)
 
 
 # ---------------------------------------------------------------------------
@@ -432,32 +427,24 @@ def _pk_uniqueness_composite_twin(
 def _pk_audit(
     spark: SparkSession, sf_dir: str, pack_lineitem: bool
 ) -> DataFrame:
-    out = None
-    for tbl, keys in _PK_TABLES:
-        t = load(spark, sf_dir, tbl)
+    def group_keys(tbl: str, keys: list[str]) -> str:
         if pack_lineitem and tbl == "lineitem":
-            g = t.groupBy(
-                (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias(
-                    "packed_key"
-                )
-            )
-        else:
-            g = t.groupBy(*keys)
-        m = g.agg(F.count(F.lit(1)).alias("m"))
-        row = m.agg(
-            F.sum("m").alias("n_rows"),
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum(F.when(F.col("m") > 1, 1).otherwise(0)).alias("n_dup_keys"),
-            F.max("m").alias("max_mult"),
-        ).select(
-            F.lit(tbl).alias("tbl"),
-            "n_rows",
-            "n_keys",
-            "n_dup_keys",
-            "max_mult",
+            return "l_orderkey * 8 + l_linenumber"
+        return ", ".join(keys)
+
+    text = " UNION ALL ".join(
+        f"""
+        SELECT '{tbl}' AS tbl, n_rows, n_keys, n_dup_keys, max_mult
+        FROM (
+          SELECT sum(m) AS n_rows, count(1) AS n_keys,
+                 sum(CASE WHEN m > 1 THEN 1 ELSE 0 END) AS n_dup_keys, max(m) AS max_mult
+          FROM (SELECT count(1) AS m FROM {{{tbl}}} GROUP BY {group_keys(tbl, keys)})
         )
-        out = row if out is None else out.unionAll(row)
-    return out
+        """
+        for tbl, keys in _PK_TABLES
+    )
+    frames = {tbl: load(spark, sf_dir, tbl) for tbl, _ in _PK_TABLES}
+    return sql_over(spark, text, **frames)
 
 
 # ---------------------------------------------------------------------------
@@ -562,28 +549,23 @@ def dq_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent parallel subtrees under one union. No FK key column
     beyond the join key is read (column pruning to 1-2 columns per
     scan)."""
-    out = None
-    for label, ct, ck, pt, pk in _FK_EDGES:
-        child = load(spark, sf_dir, ct).select(F.col(ck).alias("k"))
-        parent = load(spark, sf_dir, pt).select(F.col(pk).alias("k")).distinct()
-        orphans = child.join(parent, "k", "left_anti")
-        row = (
-            child.agg(F.count(F.lit(1)).alias("n_child"))
-            .crossJoin(
-                orphans.agg(
-                    F.count(F.lit(1)).alias("n_orphan_rows"),
-                    F.count_distinct("k").alias("n_orphan_keys"),
-                )
-            )
-            .select(
-                F.lit(label).alias("fk"),
-                "n_child",
-                "n_orphan_rows",
-                "n_orphan_keys",
-            )
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
+    tbls = dict.fromkeys(t for _, ct, _, pt, _ in _FK_EDGES for t in (ct, pt))
+    frames = {t: load(spark, sf_dir, t) for t in tbls}
+    return sql_over(spark, _FK_SQL, **frames)
+
+
+_FK_SQL = " UNION ALL ".join(
+    f"""
+    SELECT '{label}' AS fk, n_child, n_orphan_rows, n_orphan_keys
+    FROM (SELECT count(1) AS n_child FROM {{{ct}}})
+    CROSS JOIN (
+      SELECT count(1) AS n_orphan_rows, count(DISTINCT k) AS n_orphan_keys
+      FROM (SELECT {ck} AS k FROM {{{ct}}})
+      LEFT ANTI JOIN (SELECT DISTINCT {pk} AS k FROM {{{pt}}}) USING (k)
+    )
+    """
+    for label, ct, ck, pt, pk in _FK_EDGES
+)
 
 
 # ---------------------------------------------------------------------------
@@ -641,31 +623,26 @@ def dq_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key count summary; five independent parallel subtrees under
     a union. At 100 TB this runs on the key columns only (1-column
     scans) or rides a sample."""
-    out = None
-    for label, tbl, col in _SKEW_COLS:
-        counts = (
-            load(spark, sf_dir, tbl)
-            .groupBy(F.col(col))
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        ranked = counts.select(
-            "c", F.row_number().over(Window.orderBy(F.col("c").desc())).alias("rk")
-        )
-        row = ranked.agg(
-            F.sum("c").alias("n_rows"),
-            F.count(F.lit(1)).alias("n_keys"),
-            F.max("c").alias("max_mult"),
-            F.sum(F.when(F.col("rk") <= 10, F.col("c")).otherwise(0)).alias("top10"),
-        ).select(
-            F.lit(label).alias("key_col"),
-            "n_rows",
-            "n_keys",
-            "max_mult",
-            F.expr("(1000000 * top10) div n_rows").alias("top10_share_ppm"),
-            F.expr("(1000 * max_mult * n_keys) div n_rows").alias("skew_milli"),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
+    frames = {t: load(spark, sf_dir, t) for t in dict.fromkeys(t for _, t, _ in _SKEW_COLS)}
+    return sql_over(spark, _SKEW_SQL, **frames)
+
+
+_SKEW_SQL = " UNION ALL ".join(
+    f"""
+    SELECT '{label}' AS key_col, n_rows, n_keys, max_mult,
+           (1000000 * top10) div n_rows AS top10_share_ppm,
+           (1000 * max_mult * n_keys) div n_rows AS skew_milli
+    FROM (
+      SELECT sum(c) AS n_rows, count(1) AS n_keys, max(c) AS max_mult,
+             sum(CASE WHEN rk <= 10 THEN c ELSE 0 END) AS top10
+      FROM (
+        SELECT c, row_number() OVER (ORDER BY c DESC) AS rk
+        FROM (SELECT count(1) AS c FROM {{{tbl}}} GROUP BY {col})
+      )
+    )
+    """
+    for label, tbl, col in _SKEW_COLS
+)
 
 
 # ---------------------------------------------------------------------------

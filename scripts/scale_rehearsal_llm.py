@@ -249,10 +249,6 @@ def run_lowdensity(spark, mults, runs) -> None:
     collision floor reaches ~1e9 candidates at x100 on this corpus —
     priced by extrapolation in BASELINE.md; the r=2 shape is the
     config that scale runs)."""
-    import time as _time
-
-    from pyspark.sql import DataFrame  # noqa: F401
-
     from atd_dockless_processing_spark.operators.dedup_ann import (
         _CLUSTER_T,
         _ngram_pairs,
@@ -261,15 +257,9 @@ def run_lowdensity(spark, mults, runs) -> None:
         ngram_verified_pairs,
     )
 
-    def verify_tail(d, pairs, threshold):
-        # the SHARED production verify tail — the rehearsal must
-        # measure the plan that ships, not a local copy of it
-        return ngram_verified_pairs(d, pairs, threshold).select("doc_a", "doc_b")
-
     def key_plans(sf_dir, r):
-        ngram = lambda: verify_tail(  # noqa: E731
-            *ngram_candidate_pairs(spark, sf_dir, 0.8, rows_per_band=r), 0.8
-        ).count()
+        # the registered text, so the rehearsal measures the plan that ships
+        ngram = lambda: _ngram_pairs(spark, sf_dir, 0.8, rows_per_band=r).count()  # noqa: E731
 
         def clusters():
             pairs = _ngram_pairs(spark, sf_dir, _CLUSTER_T, rows_per_band=r)
@@ -295,7 +285,7 @@ def run_lowdensity(spark, mults, runs) -> None:
                 continue
             d, pairs = ngram_candidate_pairs(spark, sf_dir, 0.8, rows_per_band=r)
             n_cand = pairs.count()
-            n_ver = verify_tail(d, pairs, 0.8).count()
+            n_ver = ngram_verified_pairs(d, pairs, 0.8).count()
             cells = []
             for name, fn in key_plans(sf_dir, r).items():
                 cells.append(f"{timed(fn, runs):.2f} s")

@@ -481,21 +481,25 @@ def test_pip_table_cell_cover_property(spark, sf_dir):
     comparing the operator against an unblocked cross-join variant
     built from the same staged polygons."""
     from atd_dockless_processing_spark.operators.geo import (
-        _pipt_inside,
+        _PIP_PX,
+        _PIP_PY,
+        _pip_verts_sql,
         _stage_polygons,
     )
+    from atd_dockless_processing_spark.session import sql_over
     from atd_dockless_processing_spark.tables import load
 
-    polys = spark.read.parquet(_stage_polygons(spark, sf_dir))
-    ev = load(spark, sf_dir, "events")
-    px = F.lit(-97.95) + (F.abs(F.col("value")) % F.lit(40.0)) / F.lit(100.0)
-    py = F.lit(30.10) + (F.col("user_id") % 40) / F.lit(100.0)
-    pts = ev.select(px.alias("px"), py.alias("py"))
-    brute = (
-        pts.crossJoin(polys.select("zone_id", "verts"))
-        .where(_pipt_inside(F.col("verts"), F.col("px"), F.col("py")))
-        .groupBy("zone_id")
-        .count()
+    brute = sql_over(
+        spark,
+        f"""
+        SELECT zone_id, count(1) AS count
+        FROM (SELECT {_PIP_PX} AS px, {_PIP_PY} AS py FROM {{events}})
+        CROSS JOIN (SELECT zone_id, verts FROM {{polys}})
+        WHERE {_pip_verts_sql("verts", "px", "py")}
+        GROUP BY zone_id
+        """,
+        events=load(spark, sf_dir, "events"),
+        polys=spark.read.parquet(_stage_polygons(spark, sf_dir)),
     )
     fast = (
         QUERIES["geo_point_in_polygon_table"](spark, sf_dir)

@@ -1,13 +1,17 @@
 """Plan-build cost and the plan forms it depends on.
 
-The bench keys, the vector keys (embedding and signature math written
-once as the SQL builders of ``operators/dedup_ann.py``) and the
-MinHash keys (signature, first agreeing band, size-ratio prune and
-Jaccard verify, written once there too) build their plans from one
-SQL text each (``session.sql_over``), so a build is one analysis and a
-handful of py4j round trips; the budget test pins that. The horizontal-edge pin keeps the pre-r16 point-in-polygon
-form, which the registered key replaced, for its equality check and
-for ``scripts/ab.py`` (form
+The bench keys and the keys once built from Python ``Column`` loops
+build their plans from one SQL text each (``session.sql_over``; two
+for ``llm_bm25_topk``, one on each side of its ``localCheckpoint``), so
+a build is one analysis and a handful of py4j round trips; the budget
+test pins that. Those keys are the vector keys and the MinHash keys
+(their math written once as the SQL builders of
+``operators/dedup_ann.py``), the point-in-polygon, hex and hub keys
+(the crossing test written once in ``operators/geo.py``), the data
+quality audits, and four aggregate and fold keys. The horizontal-edge
+pin builds the pre-r16 point-in-polygon form, which kept every edge,
+from the same crossing builder, for its equality check and for
+``scripts/ab.py`` (form
 ``tests.test_plan_build:geo_point_in_polygon_flat_edges``); the
 Python-sink pin keeps the pre-r16 lazy read-back of
 ``snk_python_datasource_write`` the same way
@@ -28,6 +32,7 @@ from pyspark.sql import functions as F
 
 from atd_dockless_processing_spark import QUERIES, tables
 from atd_dockless_processing_spark.operators import geo
+from atd_dockless_processing_spark.session import sql_over
 from atd_dockless_processing_spark.sources.sinks import JsonlSinkDataSource
 from bench import BENCH_SET, table_provider
 
@@ -35,8 +40,8 @@ from bench import BENCH_SET, table_provider
 # table provider
 PY4J_BUDGET = 40
 
-# Keys whose vector or MinHash-LSH math is written as SQL text (each
-# built with 236-7,911 py4j calls when it was spelled as Column loops)
+# Keys written as SQL text that were spelled as Column loops (each
+# built with 236-7,911 py4j calls then)
 SQL_BUILDER_KEYS = (
     "llm_kmeans_step",
     "llm_semdedup",
@@ -49,6 +54,18 @@ SQL_BUILDER_KEYS = (
     "llm_vector_norm_filter",
     "llm_dedup_near_minhash",
     "llm_dedup_ngram",
+    "geo_point_in_polygon",
+    "geo_hex_bin",
+    "geo_hex_ring_smooth",
+    "geo_nearest_hub",
+    "dq_skew_report",
+    "dq_fk_orphans",
+    "dq_pk_uniqueness",
+    "dq_profile_table",
+    "agg_corr_cov",
+    "agg_bloom_membership",
+    "evt_gap_islands",
+    "llm_bm25_topk",
 )
 
 
@@ -74,31 +91,12 @@ def test_bench_and_sql_builder_keys_build_within_py4j_budget(spark, sf_dir):
             df.unpersist()
 
 
-def _pip_col_with_flat_edges(poly, x, y):
-    """``geo._pip_col`` before r16: a crossing term for every edge,
-    the horizontal ones included."""
-    total = F.lit(0)
-    n = len(poly)
-    for i in range(n):
-        x1, y1 = poly[i]
-        x2, y2 = poly[(i + 1) % n]
-        crosses = ((F.lit(y1) > y) != (F.lit(y2) > y)) & (
-            x
-            < (F.lit(x2) - F.lit(x1)) * (y - F.lit(y1)) / (F.lit(y2) - F.lit(y1))
-            + F.lit(x1)
-        )
-        total = total + F.when(crosses, 1).otherwise(0)
-    return total % 2 == 1
-
-
 def geo_point_in_polygon_flat_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``geo_point_in_polygon`` as registered before r16."""
-    with_flat_edges = geo._pip_col
-    geo._pip_col = _pip_col_with_flat_edges
-    try:
-        return QUERIES["geo_point_in_polygon"](spark, sf_dir)
-    finally:
-        geo._pip_col = with_flat_edges
+    """``geo_point_in_polygon`` as registered before r16: a crossing
+    term for every edge, the horizontal ones included."""
+    return sql_over(
+        spark, geo._pip_key_sql(geo._pip_zone_sql()), events=tables.load(spark, sf_dir, "events")
+    )
 
 
 def test_pip_skips_flat_edges_and_matches_old_form(spark, sf_dir, tmp_path):
